@@ -12,7 +12,6 @@ Usage:  python scripts/function_sweep.py [--quick N]
 
 from __future__ import annotations
 
-import os
 import sys
 from pathlib import Path
 
@@ -411,7 +410,6 @@ abs acos ai_analyze_sentiment ai_classify ai_extract ai_fix_grammar ai_gen ai_ma
 
 
 def main() -> None:
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     from trino_spark.dialect.engine import TrinoEngine
     from trino_spark.session import get_spark
 

@@ -15,6 +15,16 @@ Scale notes (100 TB design intent):
   dynamic filtering does.
 - Arrow enabled: every Python-side operator (pandas UDFs) moves columnar
   batches, never rows.
+- Parallelism and heap come from the host: `local[N]` with N the CPUs this
+  process may run on, and a driver heap of half the machine's memory (an
+  unspillable heap larger than RAM meets the OOM killer before Spark
+  spills). `SPARK_GRAFT_CPUS` and `SPARK_GRAFT_DRIVER_MEM` override them.
+- JVM launch options: the driver JVM runs one C1 and one C2 JIT compiler
+  thread (`_DRIVER_JAVA_OPTIONS`). A fresh server otherwise spends half of
+  its CPU C2-compiling Spark's own framework code; see
+  PERF.md, "Where a fresh server's CPU goes (4 cores)". The heap is set
+  through `spark.driver.memory`, never `-Xmx` in the Java options, which
+  Spark rejects.
 """
 
 from __future__ import annotations
@@ -23,9 +33,28 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Pre-AQE shuffle parallelism: match local cores for tests; a real cluster
-# raises this (or relies on AQE coalescing from a high initial count).
-_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# Local parallelism, also the pre-AQE shuffle parallelism: the CPUs this
+# process may run on. A real cluster raises the shuffle count (or relies on
+# AQE coalescing from a high initial count).
+_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+# -XX:CICompilerCount=2 is the tiered minimum: one C1 and one C2 compiler
+# thread (the JVM's default on 4 cores is one C1 and two C2). On TPC-H at
+# sf0.01 through the HTTP server, 4 cores, a fresh server spent half of its
+# JVM CPU in C2 threads, nearly all of it compiling Spark's framework code
+# (Janino, object streams, ANTLR, class loading, ASM), about 1 % on
+# generated query code. With one C2 thread fewer framework methods are
+# compiled while the server is fresh: -23 % CPU per statement. Methods that
+# stay hot are still C2-compiled, so warm sf0.1 and sf10 TPC-H times hold;
+# C1 only (-XX:TieredStopAtLevel=1) makes warm sf10 queries 2-3.5x slower.
+_DRIVER_JAVA_OPTIONS = "-XX:CICompilerCount=2"
+
+
+def _default_driver_memory() -> str:
+    """Half of the machine's memory in whole GB, at least 1g."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{max(1, kb // 2 // (1 << 20))}g"
 
 
 def get_spark(
@@ -40,11 +69,10 @@ def get_spark(
     Trino's permissive double arithmetic on the testdata) and
     performance-second (AQE, CBO, bloom-filter runtime join reduction).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", _DEFAULT_CPUS)
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
+        .master(master or f"local[{_CPUS}]")
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or _CPUS))
         .config("spark.sql.session.timeZone", "UTC")
         # ANSI mode off: testdata uses doubles (not decimals); Trino's
         # double arithmetic is non-ANSI-strict too.
@@ -82,7 +110,11 @@ def get_spark(
         # single map() constructor now silently dedup rather than error.
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
+        .config("spark.driver.extraJavaOptions", _DRIVER_JAVA_OPTIONS)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
