@@ -523,6 +523,11 @@ class TestSpatialPartitioning:
         # renames calls to the __*_sampled registrations.
         import pytest as _pytest
 
+        from trino_spark.functions.registry import register_functions
+
+        # raw spark.sql bypasses the dialect, which registers bundle
+        # functions on first reference
+        register_functions(["spatial_partitioning_n", "st_point"], spark)
         with _pytest.raises(Exception, match="TrinoEngine|pre-samples"):
             spark.sql(
                 "SELECT spatial_partitioning_n(g, 8) FROM"
@@ -537,7 +542,9 @@ class TestSpatialPartitioning:
         from pyspark.sql import functions as F
 
         from trino_spark.functions.geosql import spatial_partitioning_bounded
+        from trino_spark.functions.registry import register_functions
 
+        register_functions(["st_point"], spark)  # selectExpr bypasses the dialect
         pts = (
             spark.read.parquet(f"{sf_dir}/nation.parquet")
             .selectExpr(

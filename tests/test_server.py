@@ -161,6 +161,40 @@ def test_kill_query_cancels_running_statement(server):
         sc.cancelAllJobs()  # never leave the cartesian burning the session
 
 
+def test_kill_query_reaches_a_shuffle_stage_submitted_after_the_kill(server):
+    """Adaptive execution submits a shuffle stage as a map-stage job, which
+    a future-jobs cancel does not check. A kill that lands before that
+    submission must still cancel the stage, not let it run to completion."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    eng = server.engine
+    sc = eng.spark.sparkContext
+    qid = "kill_before_shuffle_stage"
+    running = eng.__dict__.setdefault("_running_queries", {})
+    slow = F.udf(lambda x: time.sleep(10) or x, "long")
+    df = eng.spark.range(0, 4, 1, 2).select(slow("id").alias("k")).groupBy("k").count()
+    running[qid] = "killed before its shuffle stage is submitted"
+    try:
+        eng.sql(f"CALL system.runtime.kill_query('{qid}', 'test kill')").collect()
+        sc.setJobGroup(qid, "killed before its shuffle stage", interruptOnCancel=True)
+        with pytest.raises(Exception, match="cancel"):
+            df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        running.pop(qid, None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)
+    statuses = []
+    for i in range(jobs.size()):
+        job = jobs.apply(i)
+        if job.jobGroup().isDefined() and job.jobGroup().get() == qid:
+            statuses.append(str(job.status()))
+    assert statuses and "SUCCEEDED" not in statuses, statuses
+
+
 def test_kill_query_unknown_id_errors(server):
     with pytest.raises(RuntimeError, match="not found or not running"):
         fetch_all(server.url(), "CALL system.runtime.kill_query('nope123')")

@@ -9,15 +9,21 @@ DataFrame API and `spark.sql` resolve them.
 
 Spark-first: reading stays in `spark.read.*` (DataSource V2 — vectorized
 parquet reader, predicate pushdown, partition pruning). We never materialize
-or cache eagerly; registration is lazy plan construction only.
+or cache eagerly; registration is lazy plan construction only. A parquet
+table's schema comes from its footer, read on the driver (`read_parquet`),
+the way Trino's coordinator answers schema questions from connector
+metadata: registering a table schedules no Spark job.
 """
 
 from __future__ import annotations
 
+import json
 import os
 from dataclasses import dataclass, field
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # The ten driver-generated tables (TESTDATA.md / FIXTURES.md).
 TPCH_TABLES = (
@@ -127,8 +133,7 @@ def register_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> Catalo
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """One-table loader used by query builders (no view side effects).
 
-    Cached per (session, sf_dir, name): the parquet footer/schema read
-    costs ~75 ms per table via py4j, and every TrinoEngine construction
+    Cached per (session, sf_dir, name): every TrinoEngine construction
     re-registers all 10 testdata views — reusing the immutable DataFrame
     (plans are never mutated; testdata is read-only) turns the
     per-engine catalog setup from ~0.8 s into ~10 catalog calls. The
@@ -169,4 +174,72 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _read_parquet_nanos_safe(spark: SparkSession, path: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)` without Spark's schema-inference job.
+
+    Without mergeSchema, Spark infers a parquet relation's schema from one
+    footer, but reads it in a one-task Spark job
+    (SchemaMergeUtils.mergeSchemasInParallel). This reads the same footer
+    on the driver, through ParquetFileFormat.readParquetFootersInParallel
+    and readSchema, which convert it with the session's inference settings
+    (nanosAsLong, inferTimestampNTZ, binaryAsString, int96AsTimestamp), and
+    hands the result to the reader as its schema. Partition columns still
+    come from discovery: a schema of data columns only gets the discovered
+    ones appended. Where the footer to read cannot be told locally,
+    Spark's own inference runs."""
+    first = _first_data_file(path)
+    if first is None or spark.conf.get("spark.sql.parquet.mergeSchema", "false") == "true":
+        return spark.read.parquet(path)
+    jvm, jspark = spark._jvm, spark._jsparkSession
+    state = jspark.sessionState()
+    hadoop_conf = state.newHadoopConf()
+    hpath = jvm.org.apache.hadoop.fs.Path(first)
+    status = jvm.java.util.Collections.singletonList(
+        hpath.getFileSystem(hadoop_conf).getFileStatus(hpath)
+    )
+    parquet = getattr(
+        getattr(jvm.org.apache.spark.sql.execution.datasources.parquet, "ParquetFileFormat$"),
+        "MODULE$",
+    )
+    footers = parquet.readParquetFootersInParallel(
+        hadoop_conf,
+        jvm.org.apache.spark.api.python.PythonUtils.toSeq(status),
+        state.conf().ignoreCorruptFiles(),
+    )
+    schema = parquet.readSchema(footers, jspark)
+    if not schema.isDefined():
+        return spark.read.parquet(path)
+    return spark.read.schema(StructType.fromJson(json.loads(schema.get().json()))).parquet(path)
+
+
+def _first_data_file(path: str) -> str | None:
+    """The file non-merging inference reads (ParquetUtils.inferSchema): the
+    first data file under `path` in path order, skipping the names
+    InMemoryFileIndex hides. None for a non-local or glob path, a
+    directory with parquet summary files, or one with no data file."""
+    parsed = urlparse(path)
+    if parsed.scheme not in ("", "file") or any(c in path for c in "*?[{"):
+        return None
+    local = parsed.path if parsed.scheme else path
+    if os.path.isfile(local):
+        return os.path.abspath(local)
+    files = []
+    for root, dirs, names in os.walk(local):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        for name in names:
+            if name.startswith(("_metadata", "_common_metadata")):
+                return None
+            if not _hidden(name):
+                files.append(os.path.join(root, name))
+    return os.path.abspath(min(files)) if files else None
+
+
+def _hidden(name: str) -> bool:
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )

@@ -27,10 +27,38 @@ AccessDeniedException before execution).
 from __future__ import annotations
 
 import re
+import threading
+import time
 
 from pyspark.sql import DataFrame
 
 _PRIVS = ("SELECT", "INSERT", "UPDATE", "DELETE")
+
+# How often a killed query's job group is cancelled again while the query
+# is still registered as running.
+KILL_RECANCEL_S = 0.1
+
+
+def _cancel_until_deregistered(engine, sc, qid: str) -> None:
+    """Keep cancelling a killed query's job group until it deregisters.
+
+    A future-jobs cancel is checked only when a job is submitted through
+    runJob; adaptive execution submits each shuffle stage as a map-stage
+    job, which that check skips. A kill that lands after a query's
+    broadcasts finish but before its shuffle stage is submitted would leave
+    that stage running to completion. Cancelling the group again until the
+    server deregisters the query reaches such a job within one interval.
+    """
+
+    def loop() -> None:
+        while qid in getattr(engine, "_running_queries", {}):
+            try:
+                sc.cancelJobGroup(qid)
+            except Exception:
+                return  # the context is stopping
+            time.sleep(KILL_RECANCEL_S)
+
+    threading.Thread(target=loop, name=f"kill-{qid}", daemon=True).start()
 
 
 class AccessDenied(PermissionError):
@@ -729,6 +757,7 @@ def try_execute_call(engine, sql: str) -> "DataFrame | None":
                 sc._jsc.sc().cancelJobGroupAndFutureJobs(qid)
             except Exception:
                 sc.cancelJobGroup(qid)
+        _cancel_until_deregistered(engine, sc, qid)
         return spark.createDataFrame([(qid, msg)], "query_id: string, message: string")
     if name == "drop_column_mask":
         st = _state(engine)

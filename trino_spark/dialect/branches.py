@@ -32,6 +32,7 @@ import shutil
 
 from pyspark.sql import DataFrame
 
+from trino_spark.catalog import read_parquet
 from trino_spark.dialect.dml import (
     _commit,
     _link_tree,
@@ -133,7 +134,7 @@ def try_execute(engine, stripped: str) -> DataFrame | None:
         # against the partition-last physical layout (same class of bug
         # the DML fuzzer caught on main tables).
         logical = getattr(engine, "_dml_logical_cols", None) or {}
-        fork = spark.read.parquet(dst)
+        fork = read_parquet(spark, dst)
         lcols = logical.get(table)
         if lcols:
             logical[internal] = list(lcols)
@@ -166,7 +167,7 @@ def try_execute(engine, stripped: str) -> DataFrame | None:
         table = _norm(m.group("table"))
         src, tgt = m.group("src").lower(), m.group("tgt").lower()
         tgt_path = _resolve_source(engine, table, tgt)
-        content = spark.read.parquet(tgt_path)
+        content = read_parquet(spark, tgt_path)
         dest = table if src == "main" else _internal(table, src)
         if src != "main" and src not in _registry(table):
             raise ValueError(f"Branch '{src}' does not exist")

@@ -31,6 +31,8 @@ import re
 
 from pyspark.sql import DataFrame
 
+from trino_spark.dialect.dml import rows_result
+
 _CREATE_RX = re.compile(
     r"CREATE\s+CATALOG\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<name>\"[^\"]+\"|\w+)\s+"
     r"USING\s+(?P<conn>\w+)"
@@ -301,7 +303,7 @@ def try_execute_dml(engine, stripped: str) -> DataFrame | None:
             spark.catalog.dropTempView(view)
         elif "IF EXISTS" not in stripped.upper():
             raise ValueError(f"table not found: {cat}.{schema}.{table}")
-        return spark.createDataFrame([(0,)], "rows: bigint")
+        return rows_result(spark, 0)
     if up0 in ("DELETE", "TRUNCATE"):
         # memory connector supports whole-table delete only (the
         # reference's MemoryMetadata has no row-level delete either).
@@ -312,7 +314,7 @@ def try_execute_dml(engine, stripped: str) -> DataFrame | None:
         if conn == "memory":
             empty = spark.createDataFrame([], tables[(schema, table)])
             empty.createOrReplaceTempView(view)
-        return spark.createDataFrame([(0,)], "rows: bigint")
+        return rows_result(spark, 0)
     # INSERT INTO / CTAS: evaluate the source query through the engine so
     # dialect SQL, routines, and security rewrites all apply.
     rest = stripped[m.end():].lstrip()
@@ -324,7 +326,7 @@ def try_execute_dml(engine, stripped: str) -> DataFrame | None:
     if conn == "blackhole":
         n = src.count()  # swallow: count is the only thing retained
         tables[(schema, table)] = src.schema
-        return spark.createDataFrame([(n,)], "rows: bigint")
+        return rows_result(spark, n)
     if up0 == "INSERT" and (schema, table) in tables:
         # Positional alignment to the table layout (the reference's
         # INSERT column rule), like dml._insert does for managed tables.
@@ -348,7 +350,7 @@ def try_execute_dml(engine, stripped: str) -> DataFrame | None:
     spark.createDataFrame(all_rows, src.schema).createOrReplaceTempView(view)
     tables[(schema, table)] = src.schema
     mount["views"].add(view)
-    return spark.createDataFrame([(len(new_rows),)], "rows: bigint")
+    return rows_result(spark, len(new_rows))
 
 
 def _file_catalog_dml(engine, mount, stripped: str, m: re.Match) -> DataFrame:
@@ -411,7 +413,7 @@ def _file_catalog_dml(engine, mount, stripped: str, m: re.Match) -> DataFrame:
         elif "IF EXISTS" not in stripped.upper():
             raise ValueError(f"table not found: {cat}.{schema}.{table}")
         _invalidate()
-        return spark.createDataFrame([(0,)], "rows: bigint")
+        return rows_result(spark, 0)
     if up0 in ("DELETE", "TRUNCATE"):
         if re.search(r"\bWHERE\b", stripped, re.IGNORECASE):
             raise ValueError(
@@ -433,13 +435,13 @@ def _file_catalog_dml(engine, mount, stripped: str, m: re.Match) -> DataFrame:
             with open(os.path.join(pdir, "_ts_schema.json"), "w") as fh:
                 _json.dump(tgt_schema.jsonValue(), fh)
         _invalidate()
-        return spark.createDataFrame([(0,)], "rows: bigint")
+        return rows_result(spark, 0)
     rest = stripped[m.end():].lstrip()
     if up0 == "CREATE":
         rest = re.sub(r"^AS\s+", "", rest, flags=re.IGNORECASE)
         if os.path.isdir(pdir):
             if "IF NOT EXISTS" in stripped.upper():
-                return spark.createDataFrame([(0,)], "rows: bigint")
+                return rows_result(spark, 0)
             raise ValueError(f"table already exists: {cat}.{schema}.{table}")
     elif not os.path.isdir(pdir):
         raise ValueError(f"table not found: {cat}.{schema}.{table}")
@@ -465,7 +467,7 @@ def _file_catalog_dml(engine, mount, stripped: str, m: re.Match) -> DataFrame:
     _writer(src).mode("append" if up0 == "INSERT" else "overwrite").save(pdir)
     _invalidate()
     n = int(obs.get["n"])
-    return spark.createDataFrame([(n,)], "rows: bigint")
+    return rows_result(spark, n)
 
 
 def _schema_sf(schema: str) -> float:

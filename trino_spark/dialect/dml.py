@@ -54,6 +54,7 @@ import uuid
 
 from pyspark.sql import DataFrame, Observation, functions as F
 
+from trino_spark.catalog import read_parquet
 from trino_spark.operators.merge import merge_into
 
 #: retained historical versions per table (current version excluded);
@@ -318,13 +319,24 @@ def _commit(
     return _written_rows(path)
 
 
+def rows_result(spark, n: int) -> DataFrame:
+    """The one-row `rows: bigint` result of a write (TableFinishOperator's
+    row count), as a driver-local relation. Built from an Arrow table it
+    plans as a LocalRelation, so collecting it runs no Spark job; built
+    from a Python list it would plan a Scan ExistingRDD, whose collect is
+    a job through the Python workers."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table({"rows": pa.array([n], pa.int64())}))
+
+
 def _ensure_dir(d: str) -> str:
     os.makedirs(d, exist_ok=True)
     return d
 
 
 def _read(engine, name: str) -> DataFrame:
-    df = engine.spark.read.parquet(_require_managed(engine, name))
+    df = read_parquet(engine.spark, _require_managed(engine, name))
     # Restore the declared column order (partitioned layouts read the
     # partition columns last).
     logical = getattr(engine, "_dml_logical_cols", {}).get(name)
@@ -359,7 +371,7 @@ def _ctas(engine, sql: str) -> DataFrame:
     if_not_exists = re.search(r"IF\s+NOT\s+EXISTS", sql[: m.start(3)], re.IGNORECASE)
     if name in _managed(engine):
         if if_not_exists:
-            return engine.spark.createDataFrame([(0,)], "rows: bigint")
+            return rows_result(engine.spark, 0)
         raise ValueError(f"table already exists: {name}")
     # A fresh table must not inherit a stale layout from a same-named
     # predecessor (layouts are popped at DROP, but be defensive).
@@ -368,7 +380,7 @@ def _ctas(engine, sql: str) -> DataFrame:
     partition_by = _parse_with_props(m.group(2))
     df = engine.sql(m.group(3))
     n = _commit(engine, name, df, partition_by=partition_by, operation="ctas")
-    return engine.spark.createDataFrame([(n,)], "rows: bigint")
+    return rows_result(engine.spark, n)
 
 
 def _parse_with_props(with_txt: str | None) -> list[str] | None:
@@ -413,14 +425,14 @@ def _drop(engine, sql: str) -> DataFrame:
         engine.spark.sql(f"DROP TABLE {name}")
     elif idx == 2:
         raise ValueError(f"table not found: {name}")
-    return engine.spark.createDataFrame([(0,)], "rows: bigint")
+    return rows_result(engine.spark, 0)
 
 
 def _truncate(engine, sql: str) -> DataFrame:
     name = _norm_name(sql.split()[2])
     df = _read(engine, name)
     _commit(engine, name, df.limit(0), operation="truncate")
-    return engine.spark.createDataFrame([(0,)], "rows: bigint")
+    return rows_result(engine.spark, 0)
 
 
 def _insert(engine, sql: str) -> DataFrame:
@@ -443,7 +455,9 @@ def _insert(engine, sql: str) -> DataFrame:
         for f_ in current.schema.fields:
             if f_.name not in cols:
                 dflt = defaults.get((name, f_.name))
-                filler = F.expr(dflt) if dflt is not None else F.lit(None)
+                filler = (
+                    F.expr(_translate_fragment(engine, dflt)) if dflt is not None else F.lit(None)
+                )
                 incoming = incoming.withColumn(f_.name, filler.cast(f_.dataType))
     else:
         # No column list: positional match against the table layout.
@@ -462,7 +476,7 @@ def _insert(engine, sql: str) -> DataFrame:
     # existing data). Inserted count from footer metadata (before/after).
     before = _written_rows(_require_managed(engine, name))
     total = _commit(engine, name, aligned, append_base=True, operation="insert")
-    return engine.spark.createDataFrame([(total - before,)], "rows: bigint")
+    return rows_result(engine.spark, total - before)
 
 
 def _affected_partitions(engine, name: str, df: DataFrame, pred):
@@ -542,7 +556,7 @@ def _delete(engine, sql: str) -> DataFrame:
         # Unconditional DELETE == TRUNCATE shape; count from footers.
         before = _written_rows(_require_managed(engine, name))
         _commit(engine, name, df.limit(0), operation="delete")
-        return engine.spark.createDataFrame([(before,)], "rows: bigint")
+        return rows_result(engine.spark, before)
     # DELETE removes rows where pred is TRUE; NULL predicate keeps.
     where = m.group(2) if m.group(2) is not None else "true"
     pred = F.coalesce(
@@ -560,7 +574,7 @@ def _delete(engine, sql: str) -> DataFrame:
     if scoped is not None:
         cond, untouched = scoped
         if cond is None:  # predicate matched nothing: no new version
-            return engine.spark.createDataFrame([(0,)], "rows: bigint")
+            return rows_result(engine.spark, 0)
         # Rewrite only the affected partitions (partition-pruned scan);
         # untouched partitions are hardlinked into the new version.
         after = _commit(
@@ -569,7 +583,7 @@ def _delete(engine, sql: str) -> DataFrame:
         )
     else:
         after = _commit(engine, name, df.filter(~pred), operation="delete")
-    return engine.spark.createDataFrame([(before - after,)], "rows: bigint")
+    return rows_result(engine.spark, before - after)
 
 
 def _update(engine, sql: str) -> DataFrame:
@@ -633,13 +647,13 @@ def _update(engine, sql: str) -> DataFrame:
     if scoped is not None:
         cond, untouched = scoped
         if cond is None:
-            return engine.spark.createDataFrame([(0,)], "rows: bigint")
+            return rows_result(engine.spark, 0)
         out = _project(df.filter(cond).observe(obs, n_expr))
         _commit(engine, name, out, preserve_rel_dirs=untouched, operation="update")
     else:
         out = _project(df.observe(obs, n_expr))
         _commit(engine, name, out, operation="update")
-    return engine.spark.createDataFrame([(int(obs.get["n"] or 0),)], "rows: bigint")
+    return rows_result(engine.spark, int(obs.get["n"] or 0))
 
 
 def _split_top_level(text: str, sep: str) -> list[str]:
@@ -808,9 +822,7 @@ def _merge(engine, sql: str) -> DataFrame:
         out = out.unionByName(hidden)
     _commit(engine, tgt_name, out, operation="merge")
     m_ = obs.get
-    return engine.spark.createDataFrame(
-        [(int((m_["touched"] or 0) + (m_["inserted"] or 0)),)], "rows: bigint"
-    )
+    return rows_result(engine.spark, int((m_["touched"] or 0) + (m_["inserted"] or 0)))
 
 
 # ---------------------------------------------------------------- time travel
@@ -992,7 +1004,7 @@ def resolve_time_travel(engine, sql: str) -> str:
                 )
             version = max(e["version"] for e in older)
         view = f"{name}__v{version}"
-        snap = engine.spark.read.parquet(_version_dir(engine, name, version))
+        snap = read_parquet(engine.spark, _version_dir(engine, name, version))
         # Restore THAT version's declared column order (recorded in its
         # log entry; fall back to the live map for pre-recording logs).
         entry = next((e for e in log if e["version"] == version), {})
@@ -1079,7 +1091,7 @@ def txn_rollback(engine) -> None:
                 )
         _write_log(name, [e for e in log if e["version"] <= pin])
         _managed(engine)[name] = path
-        rolled = engine.spark.read.parquet(path)
+        rolled = read_parquet(engine.spark, path)
         # The pinned version's recorded column order wins: an in-transaction
         # ALTER updated the live logical map, and the rollback must rewind
         # that bookkeeping along with the data.
@@ -1188,7 +1200,7 @@ def try_execute_ddl(engine, sql: str) -> DataFrame | None:
         if os.path.isdir(os.path.join(mv_dir, name)):
             shutil.rmtree(os.path.join(mv_dir, new), ignore_errors=True)
             os.rename(os.path.join(mv_dir, name), os.path.join(mv_dir, new))
-            engine.spark.read.parquet(os.path.join(mv_dir, new)).createOrReplaceTempView(new)
+            read_parquet(engine.spark, os.path.join(mv_dir, new)).createOrReplaceTempView(new)
         engine.spark.catalog.dropTempView(name)
         return engine.spark.createDataFrame([(new,)], "materialized_view: string")
     if up[:2] in (["CREATE", "SCHEMA"], ["DROP", "SCHEMA"], ["ALTER", "SCHEMA"]) or up[:3] == [
@@ -1304,7 +1316,7 @@ def _create_empty_table(engine, sql: str) -> DataFrame:
     name = _norm_name(m.group(1))
     if name in _managed(engine):
         if re.search(r"IF\s+NOT\s+EXISTS", sql, re.IGNORECASE):
-            return engine.spark.createDataFrame([(0,)], "rows: bigint")
+            return rows_result(engine.spark, 0)
         raise ValueError(f"table already exists: {name}")
     cols = []
     for piece in _split_top_level(m.group(2), ","):
@@ -1314,7 +1326,7 @@ def _create_empty_table(engine, sql: str) -> DataFrame:
         cols.append(f"{_norm_name(parts[0])} {_trino_type_to_spark(parts[1])}")
     empty = engine.spark.createDataFrame([], ", ".join(cols))
     _commit(engine, name, empty)
-    return engine.spark.createDataFrame([(0,)], "rows: bigint")
+    return rows_result(engine.spark, 0)
 
 
 def _trino_type_to_spark(t: str) -> str:
@@ -1355,7 +1367,7 @@ def _alter_table(engine, sql: str) -> DataFrame:
             (pm.group(1).lower(), pm.group(2))
             for pm in re.finditer(r"([\w.]+)\s*=\s*'([^']*)'", action)
         )
-        return engine.spark.createDataFrame([(0,)], "rows: bigint")
+        return rows_result(engine.spark, 0)
     dm = re.match(
         r"ALTER\s+COLUMN\s+(\w+)\s+(SET\s+DEFAULT\s+(.+)|DROP\s+DEFAULT|DROP\s+NOT\s+NULL)\s*$",
         action,
@@ -1375,7 +1387,7 @@ def _alter_table(engine, sql: str) -> DataFrame:
             defaults[(name, col)] = dm.group(3).strip()
         elif verb.startswith("DROP DEFAULT"):
             defaults.pop((name, col), None)
-        return engine.spark.createDataFrame([(0,)], "rows: bigint")
+        return rows_result(engine.spark, 0)
     df = _read(engine, name)
     if au.startswith("ALTER COLUMN") and "SET DATA TYPE" in au:
         # #setColumnType (SetColumnTypeTask.java; Iceberg type evolution):
@@ -1390,13 +1402,13 @@ def _alter_table(engine, sql: str) -> DataFrame:
             *[F.col(c).cast(typ).alias(c) if c == col else F.col(c) for c in df.columns]
         )
         _commit(engine, name, out)
-        return engine.spark.createDataFrame([(0,)], "rows: bigint")
+        return rows_result(engine.spark, 0)
     if au.startswith("ADD COLUMN"):
         am = re.match(r"ADD\s+COLUMN\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s+(.+)$", action, re.IGNORECASE)
         col, typ = _norm_name(am.group(1)), _trino_type_to_spark(am.group(2))
         if col in df.columns:
             if re.search(r"IF\s+NOT\s+EXISTS", action, re.IGNORECASE):
-                return engine.spark.createDataFrame([(0,)], "rows: bigint")
+                return rows_result(engine.spark, 0)
             raise ValueError(f"column already exists: {col}")
         out = df.withColumn(col, F.lit(None).cast(typ))
     elif au.startswith("DROP COLUMN"):
@@ -1440,17 +1452,17 @@ def _alter_table(engine, sql: str) -> DataFrame:
         if name in logical:
             logical[new] = logical.pop(name)
         engine.spark.catalog.dropTempView(name)
-        renamed = engine.spark.read.parquet(newpath)
+        renamed = read_parquet(engine.spark, newpath)
         lcols = logical.get(new)
         if lcols and lcols != renamed.columns and set(lcols) == set(renamed.columns):
             renamed = renamed.select(*lcols)
         renamed.createOrReplaceTempView(new)
         refresh_infoschema(engine, changed=new, dropped=name)
-        return engine.spark.createDataFrame([(0,)], "rows: bigint")
+        return rows_result(engine.spark, 0)
     else:
         raise ValueError(f"unsupported ALTER TABLE action: {action[:60]}")
     _commit(engine, name, out)
-    return engine.spark.createDataFrame([(0,)], "rows: bigint")
+    return rows_result(engine.spark, 0)
 
 
 def _file_count(path: str) -> int:

@@ -13,9 +13,10 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from trino_spark.catalog import ALL_TABLES, Catalog
+from trino_spark.catalog import ALL_TABLES, Catalog, read_parquet
 from trino_spark.dialect import routines as _routines_mod
 from trino_spark.dialect.rewrites import translate
+from trino_spark.functions import registry as _registry
 from trino_spark.infoschema import register_information_schema, rewrite_show
 
 __all__ = ["TrinoEngine", "translate"]
@@ -76,34 +77,9 @@ class TrinoEngine:
                 for name in ALL_TABLES
             }
             register_information_schema(spark, schemas)
-        # Function/PTF registration is session-global and idempotent —
-        # ~190 spark.udf.register calls cost ~1.3 s of py4j round-trips,
-        # so do it once per SparkSession, not once per engine (the
-        # reference registers SystemFunctionBundle once at server boot,
-        # not per query).
-        if not getattr(spark, "_ts_fns_registered", False):
-            from trino_spark.dialect import ptf as _ptf
-
-            _ptf.register_builtin_table_functions(spark)
-            # Python-bodied scalar residue (normalize/word_stem/base32/
-            # hmac/CDFs) so those names resolve from SQL text — the
-            # SystemFunctionBundle registration analog.
-            from trino_spark.functions.registry import (
-                register_sql_functions,
-                register_sql_functions_r4,
-                register_sql_functions_r5,
-            )
-
-            register_sql_functions(spark)
-            register_sql_functions_r4(spark)
-            register_sql_functions_r5(spark)
-            from trino_spark.functions.sqlagg import register_sql_aggregates
-
-            register_sql_aggregates(spark)
-            from trino_spark.functions.geosql import register_geo_functions
-
-            register_geo_functions(spark)
-            spark._ts_fns_registered = True
+        # Functions and PTFs are not registered here: translate() registers
+        # each bundle function on the session the first time a statement
+        # calls it (functions/registry.py, the SystemFunctionBundle analog).
 
     def sql(self, trino_sql: str) -> DataFrame:
         """Dispatch a Trino-dialect statement; top-level calls are recorded
@@ -114,6 +90,7 @@ class TrinoEngine:
 
         depth = getattr(self._tls, "depth", 0)
         self._tls.depth = depth + 1
+        bound = _registry.bind_session(self.spark)
         if depth == 0:
             with self._cte_lock:
                 self._cte_active += 1
@@ -146,6 +123,7 @@ class TrinoEngine:
             raise
         finally:
             self._tls.depth = depth
+            _registry.bind_session(bound)
             if depth == 0:
                 with self._cte_lock:
                     self._cte_active -= 1
@@ -561,6 +539,8 @@ class TrinoEngine:
                 # macro expansion is needed (or possible) for these.
                 self.python_routines[routine.name] = routine
                 self.spark.udf.register(routine.name.lower(), routine.fn, routine.returns)
+                # a routine keeps its name against the function bundle
+                _registry.settled(self.spark).add(routine.name.lower())
             else:
                 self.routines[routine.name] = routine
             return self.spark.createDataFrame([(routine.name.lower(),)], "function: string")
@@ -685,12 +665,14 @@ class TrinoEngine:
             return self.spark.createDataFrame(rows or [], "name: string, value: string")
         if up[:2] == ["SHOW", "FUNCTIONS"]:
             # SHOW FUNCTIONS (ShowQueriesRewrite.java): the engine's
-            # function inventory — dialect-mapped Trino names plus every
-            # user-registered routine. Spark-native passthrough names
-            # (shared spellings like abs/concat/sum) are not enumerated.
+            # function inventory — dialect-mapped Trino names, the whole
+            # function bundle (registered on this session yet or not),
+            # other session UDFs, and every user-registered routine.
+            # Spark-native passthrough names (shared spellings like
+            # abs/concat/sum) are not enumerated.
             from trino_spark.dialect import rewrites as _rw
 
-            udfs = sorted(
+            session_udfs = {
                 f.name
                 for f in self.spark.catalog.listFunctions()
                 # Spark marks builtins isTemporary too; they resolve to
@@ -698,13 +680,15 @@ class TrinoEngine:
                 # UDFs carry an UDFRegistration/UserDefined class or none.
                 if f.isTemporary
                 and "." not in f.name
-                # dialect-internal registrations (e.g. the bounded
-                # __spatial_partitioning_sampled twins) are not part of
-                # the user-facing inventory
-                and not f.name.startswith("__")
                 and not (f.className or "").startswith(
                     ("org.apache.spark.sql.catalyst.", "org.apache.spark.sql.execution.")
                 )
+            }
+            # dialect-internal registrations (e.g. the bounded
+            # __spatial_partitioning_sampled twins) are not part of the
+            # user-facing inventory
+            udfs = sorted(
+                n for n in session_udfs | set(_registry.bundle()) if not n.startswith("__")
             )
             rows = (
                 [(n, "scalar", "dialect-rename") for n in sorted(_rw._RENAME)]
@@ -1024,7 +1008,7 @@ class TrinoEngine:
         path = os.path.join(repo, "spark-warehouse", "mv", name)
         df = self.sql(self.materialized_views[name])
         df.write.mode("overwrite").parquet(path)
-        stored = self.spark.read.parquet(path)
+        stored = read_parquet(self.spark, path)
         stored.createOrReplaceTempView(name)
         getattr(self, "_stats_cache", {}).pop(name, None)  # new data, stale stats
         self._mv_meta[name] = {

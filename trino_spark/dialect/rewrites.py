@@ -22,6 +22,7 @@ from trino_spark.dialect.tokenizer import (
     tokenize,
 )
 from trino_spark.functions.datetimes import mysql_to_java
+from trino_spark.functions.registry import register_functions
 
 
 class TrinoSqlError(ValueError):
@@ -2199,8 +2200,22 @@ def _groups_frame_once(toks: list[Tok]) -> "list[Tok] | None":
     return None
 
 
+def _called_names(toks: list[Tok]) -> set[str]:
+    """Every word followed by `(`: the functions (and PTFs) a statement
+    calls, plus harmless keywords such as IN or VALUES."""
+    names, prev = set(), None
+    for t in toks:
+        if t.kind == "WS":
+            continue
+        if prev is not None and prev.kind == "WORD" and t.is_sym("("):
+            names.add(prev.text)
+        prev = t
+    return names
+
+
 def translate(sql: str) -> str:
-    """Trino-dialect SQL → Spark-SQL text."""
+    """Trino-dialect SQL → Spark-SQL text. Registers the bundle functions
+    the output calls on the current session (functions/registry.py)."""
     # Standalone VALUES statement (grammar SqlBase.g4 query -> VALUES):
     # Spark only accepts VALUES as a FROM-clause relation.
     if re.match(r"\s*VALUES\b", sql, re.IGNORECASE):
@@ -2231,4 +2246,7 @@ def translate(sql: str) -> str:
     result = render(toks)
     if ties:
         result = _rewrite_ties(result)
+    # passes splice rendered fragments in as single tokens, so the calls
+    # are read off the final text
+    register_functions(_called_names(tokenize(result)))
     return result

@@ -44,6 +44,7 @@ import math
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import StringType
 
 from trino_spark.functions import geomkernel as K
 
@@ -395,6 +396,9 @@ _TILE_T = "struct<x:int,y:int,zoom:int>"
 
 
 def register_geo_functions(spark: SparkSession) -> None:
+    """Register the geospatial surface (run against the bundle recorder,
+    see registry.bundle; pandas UDFs take DataType return types so that
+    building the table needs no session)."""
     reg = spark.udf.register
 
     # constructors / codecs
@@ -742,7 +746,7 @@ def register_geo_functions(spark: SparkSession) -> None:
         else K.to_wkt(K.polygonize(_parse(w) for w in arr if w is not None)),
         "string",
     )
-    @pandas_udf("string")
+    @pandas_udf(StringType())
     def spatial_partitioning(w: pd.Series) -> str:
         # Reached only through the dialect (rewrites.py renames calls to
         # the __*_sampled registrations): the global form is pre-sampled
@@ -759,7 +763,7 @@ def register_geo_functions(spark: SparkSession) -> None:
                 centers.append(((min(xs) + max(xs)) / 2, (min(ys) + max(ys)) / 2))
         return _kdb_build(centers, 100)
 
-    @pandas_udf("string")
+    @pandas_udf(StringType())
     def spatial_partitioning_n(w: pd.Series, n: pd.Series) -> str:
         centers = []
         for wkt in w.dropna().head(10000):
@@ -779,11 +783,11 @@ def register_geo_functions(spark: SparkSession) -> None:
         "spatial_partitioning_bounded(df, geom_col, n)."
     )
 
-    @pandas_udf("string")
+    @pandas_udf(StringType())
     def _sp_raw(w: pd.Series) -> str:
         raise ValueError(_SP_RAW_MSG)
 
-    @pandas_udf("string")
+    @pandas_udf(StringType())
     def _sp_raw_n(w: pd.Series, n: pd.Series) -> str:
         raise ValueError(_SP_RAW_MSG)
 
@@ -1016,7 +1020,7 @@ def register_geo_functions(spark: SparkSession) -> None:
     reg("geometry_to_bing_tiles", _geometry_to_bing_tiles, f"array<{_TILE_T}>")
 
     # aggregates (Arrow GROUPED_AGG)
-    @pandas_udf("string")
+    @pandas_udf(StringType())
     def convex_hull_agg(w: pd.Series) -> str:
         pts = [p for wkt in w.dropna() for p in K._points_of(_parse(wkt))]
         h = K.convex_hull(pts)
@@ -1028,12 +1032,12 @@ def register_geo_functions(spark: SparkSession) -> None:
             return K.to_wkt(("LINESTRING", h))
         return K.to_wkt(("POLYGON", [h + [h[0]]]))
 
-    @pandas_udf("string")
+    @pandas_udf(StringType())
     def geometry_collect_agg(w: pd.Series) -> str:
         geoms = [_parse(wkt) for wkt in w.dropna()]
         return K.to_wkt(("GEOMETRYCOLLECTION", geoms)) if geoms else None
 
-    @pandas_udf("string")
+    @pandas_udf(StringType())
     def geometry_union_agg(w: pd.Series) -> str:
         geoms = [_parse(wkt) for wkt in w.dropna()]
         return K.to_wkt(_geometry_union_list(geoms)) if geoms else None
@@ -1080,10 +1084,13 @@ def spatial_partitioning_bounded(df, geom_col: str, n: int = 100, sample: int = 
     LIMIT k compiles to TakeOrderedAndProject: per-partition top-k then a
     bounded merge, so only <= `sample` geometries ever move) feeding the
     single-group pandas aggregate. Returns a 1-row DataFrame with column
-    `tree` (the KDB tree JSON). Requires the engine function surface to
-    be registered (any TrinoEngine construction does it)."""
+    `tree` (the KDB tree JSON). Registers the aggregate it calls on the
+    frame's session."""
     from pyspark.sql import functions as F
 
+    from trino_spark.functions.registry import register_functions
+
+    register_functions(["__spatial_partitioning_n_sampled"], df.sparkSession)
     sampled = (
         df.select(F.col(geom_col).alias("__g"))
         .where(F.col("__g").isNotNull())

@@ -25,9 +25,12 @@ from __future__ import annotations
 import base64
 import hashlib
 import hmac as _hmac
+import functools
 import math
 import re
+import threading
 import unicodedata
+from collections.abc import Iterable
 
 from pyspark.sql import SparkSession
 
@@ -225,8 +228,9 @@ def _inverse_normal_cdf(mean, sd, p):
 
 
 def register_sql_functions(spark: SparkSession) -> None:
-    """Idempotently register the Python-bodied scalar residue so Trino SQL
-    text referencing them resolves through `engine.sql`."""
+    """Register the Python-bodied scalar residue so Trino SQL text
+    referencing them resolves through `engine.sql`. The engine runs this
+    against the bundle recorder, not a session (see `bundle`)."""
     from trino_spark.functions.stem import porter_stem
 
     reg = spark.udf.register
@@ -770,3 +774,100 @@ def register_sql_functions_r5(spark: SparkSession) -> None:
     reg("timetz_second", lambda s: _timetz_field(s, "second"), "bigint")
     reg("timetz_millisecond", lambda s: _timetz_field(s, "millisecond"), "bigint")
     reg("timetz_offset_minutes", lambda s: _timetz_field(s, "offset"), "bigint")
+
+
+# ---------------------------------------------------------------- bundle
+#
+# Every name the engine adds to Spark's function namespace, mapped to how
+# it is registered: the SystemFunctionBundle analog. The table is built
+# once per process by running the register_* functions (these, and their
+# peers in sqlagg, geosql and dialect/ptf) against a recorder, so building
+# it makes no py4j call. A session gets a name registered the first time
+# a translated statement calls it (rewrites.translate scans its output),
+# so constructing an engine registers nothing and a statement pays only
+# for the functions it calls. Names that shadow a Spark built-in (to_char,
+# st_srid, theta_sketch_agg, ...) are registered the same way, before the
+# statement that calls them is analyzed.
+
+
+class _Recorder:
+    """Stands in for `spark.udf` / `spark.udtf` while the table is built."""
+
+    def __init__(self, table: dict, kind: str):
+        self._table, self._kind = table, kind
+
+    def register(self, name: str, f, returnType=None) -> None:
+        self._table[name] = (self._kind, f, returnType)
+
+
+@functools.cache
+def bundle() -> dict[str, tuple]:
+    """name -> (kind, function, return type): "udf" entries go to
+    `spark.udf.register`, "udtf" entries to `spark.udtf.register`."""
+    from types import SimpleNamespace
+
+    from trino_spark.dialect.ptf import register_builtin_table_functions
+    from trino_spark.functions.geosql import register_geo_functions
+    from trino_spark.functions.sqlagg import register_sql_aggregates
+
+    table: dict[str, tuple] = {}
+    recorder = SimpleNamespace(udf=_Recorder(table, "udf"), udtf=_Recorder(table, "udtf"))
+    for register in (
+        register_builtin_table_functions,
+        register_sql_functions,
+        register_sql_functions_r4,
+        register_sql_functions_r5,
+        register_sql_aggregates,
+        register_geo_functions,
+    ):
+        register(recorder)
+    return table
+
+
+_LOCK = threading.Lock()
+# translate() takes only the statement text, so the session it registers
+# on reaches it through this per-thread binding.
+_BOUND = threading.local()
+
+
+def bind_session(spark: SparkSession | None) -> SparkSession | None:
+    """Make `spark` the session this thread's translated statements
+    register functions on; returns the previous binding. TrinoEngine.sql
+    binds its own session for the length of each statement."""
+    previous = getattr(_BOUND, "spark", None)
+    _BOUND.spark = spark
+    return previous
+
+
+def settled(spark: SparkSession) -> set[str]:
+    """Names whose entry on `spark` is final: the bundle functions
+    registered so far, and user routines that shadow a bundle name."""
+    return spark.__dict__.setdefault("_ts_functions", set())
+
+
+def register_functions(names: Iterable[str], spark: SparkSession | None = None) -> None:
+    """Register the bundle functions among `names` on `spark`, each at most
+    once per session; other names are ignored. `spark` defaults to the
+    session bound to this thread, else the process's session.
+
+    Callers that put bundle names into Spark SQL without going through
+    `engine.sql` (F.expr, selectExpr, raw spark.sql) call this first."""
+    spark = spark or getattr(_BOUND, "spark", None) or SparkSession._instantiatedSession
+    if spark is None:
+        return
+    table = bundle()
+    done = settled(spark)
+    todo = [n for n in {n.lower() for n in names} if n in table and n not in done]
+    if not todo:
+        return
+    with _LOCK:
+        for name in todo:
+            if name in done:
+                continue
+            kind, f, return_type = table[name]
+            register = spark.udtf.register if kind == "udtf" else spark.udf.register
+            if return_type is None:
+                register(name, f)
+            else:
+                register(name, f, return_type)
+            done.add(name)

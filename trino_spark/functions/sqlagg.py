@@ -31,6 +31,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import BinaryType, DoubleType, LongType, MapType, StringType
 
 from trino_spark.functions.registry import murmur3_x64_128
 
@@ -255,22 +256,25 @@ def _regress(feats, model):
 
 
 def register_sql_aggregates(spark: SparkSession) -> None:
-    """Idempotently register the GROUPED_AGG + companion scalar surface."""
+    """Register the GROUPED_AGG + companion scalar surface (run against the
+    bundle recorder, see registry.bundle). Return types are DataType
+    objects, not DDL strings: pandas_udf parses a string in the JVM, and
+    the bundle table is built without a session."""
     reg = spark.udf.register
 
-    @pandas_udf("binary")
+    @pandas_udf(BinaryType())
     def qdigest_agg(v: pd.Series) -> bytes:
         return _qdigest_from_values(v.dropna().to_numpy(dtype=float))
 
-    @pandas_udf("binary")
+    @pandas_udf(BinaryType())
     def tdigest_agg(v: pd.Series) -> bytes:
         return _tdigest_from_values(v.dropna().to_numpy(dtype=float))
 
-    @pandas_udf("binary")
+    @pandas_udf(BinaryType())
     def make_set_digest(v: pd.Series) -> bytes:
         return _setdigest_from_values(v.dropna().tolist())
 
-    @pandas_udf("binary")
+    @pandas_udf(BinaryType())
     def merge_set_digest(d: pd.Series) -> bytes:
         hashes: set[int] = set()
         for item in d.dropna():
@@ -280,7 +284,7 @@ def register_sql_aggregates(spark: SparkSession) -> None:
     # Trino overloads merge() on the sketch type; the dialect's merge()
     # name stays bound to HLL (hll_union_agg). Digest columns merge via
     # these typed spellings (documented deviation in FUNCTIONS.md).
-    @pandas_udf("binary")
+    @pandas_udf(BinaryType())
     def merge_tdigest(d: pd.Series) -> bytes:
         import numpy as _np
 
@@ -299,7 +303,7 @@ def register_sql_aggregates(spark: SparkSession) -> None:
         m, w = compress(_np.array(means)[order], _np.array(weights)[order], delta=200.0)
         return _TD + json.dumps([list(map(float, m)), list(map(float, w))]).encode()
 
-    @pandas_udf("binary")
+    @pandas_udf(BinaryType())
     def merge_qdigest(d: pd.Series) -> bytes:
         buckets: dict[int, int] = {}
         for item in d.dropna():
@@ -312,13 +316,13 @@ def register_sql_aggregates(spark: SparkSession) -> None:
             return None
         return _QD + json.dumps(sorted(buckets.items())).encode()
 
-    @pandas_udf("binary")
+    @pandas_udf(BinaryType())
     def theta_sketch_union(b: pd.Series) -> bytes:
         from trino_spark.functions import thetasketch as _theta
 
         return _theta.union(bytes(x) for x in b.dropna())
 
-    @pandas_udf("binary")
+    @pandas_udf(BinaryType())
     def theta_sketch_union_k(b: pd.Series, k: pd.Series, seed: pd.Series) -> bytes:
         from trino_spark.functions import thetasketch as _theta
 
@@ -328,7 +332,7 @@ def register_sql_aggregates(spark: SparkSession) -> None:
             seed=int(seed.iloc[0]),
         )
 
-    @pandas_udf("binary")
+    @pandas_udf(BinaryType())
     def theta_sketch_agg(v: pd.Series) -> bytes:
         # engine extension: the reference reads sketches built upstream;
         # this builds one (library-layout) so pipelines can also produce
@@ -336,12 +340,12 @@ def register_sql_aggregates(spark: SparkSession) -> None:
 
         return _theta.build(v.dropna().tolist())
 
-    @pandas_udf("map<string,bigint>")
+    @pandas_udf(MapType(StringType(), LongType()))
     def approx_most_frequent(b: pd.Series, v: pd.Series, cap: pd.Series) -> dict:
         counts = v.dropna().astype(str).value_counts()
         return {k: int(n) for k, n in counts.head(int(b.iloc[0])).items()}
 
-    @pandas_udf("map<string,bigint>")
+    @pandas_udf(MapType(StringType(), LongType()))
     def merge_approx_most_frequent(b: pd.Series, m: pd.Series) -> dict:
         # merge phase of the dialect's two-phase split: partials keep
         # `capacity` entries (the accuracy knob, SpaceSaving-style), the
@@ -353,12 +357,12 @@ def register_sql_aggregates(spark: SparkSession) -> None:
         top = sorted(total.items(), key=lambda kv: (-kv[1], kv[0]))[: int(b.iloc[0])]
         return dict(top)
 
-    @pandas_udf("map<double,double>")
+    @pandas_udf(MapType(DoubleType(), DoubleType()))
     def numeric_histogram(b: pd.Series, v: pd.Series) -> dict:
         vals = v.dropna().to_numpy(dtype=float)
         return _numeric_histogram(int(b.iloc[0]), vals, np.ones(len(vals)))
 
-    @pandas_udf("map<double,double>")
+    @pandas_udf(MapType(DoubleType(), DoubleType()))
     def merge_numeric_histogram(b: pd.Series, m: pd.Series) -> dict:
         # Ben-Haim/Tom-Tov partials merge by pooling weighted bins and
         # recompressing — the same combine the reference's
@@ -371,7 +375,7 @@ def register_sql_aggregates(spark: SparkSession) -> None:
                 ws.append(float(w))
         return _numeric_histogram(int(b.iloc[0]), np.array(xs), np.array(ws))
 
-    @pandas_udf("string")
+    @pandas_udf(StringType())
     def learn_classifier(label: pd.Series, feats: pd.Series) -> str:
         mask = label.notna() & feats.notna()
         return _train(
@@ -380,7 +384,7 @@ def register_sql_aggregates(spark: SparkSession) -> None:
             "classifier",
         )
 
-    @pandas_udf("string")
+    @pandas_udf(StringType())
     def learn_regressor(label: pd.Series, feats: pd.Series) -> str:
         mask = label.notna() & feats.notna()
         return _train(
@@ -389,7 +393,7 @@ def register_sql_aggregates(spark: SparkSession) -> None:
             "regressor",
         )
 
-    @pandas_udf("string")
+    @pandas_udf(StringType())
     def learn_libsvm_classifier(label: pd.Series, feats: pd.Series, params: pd.Series) -> str:
         mask = label.notna() & feats.notna()
         return _train(
@@ -398,7 +402,7 @@ def register_sql_aggregates(spark: SparkSession) -> None:
             "classifier",
         )
 
-    @pandas_udf("string")
+    @pandas_udf(StringType())
     def learn_libsvm_regressor(label: pd.Series, feats: pd.Series, params: pd.Series) -> str:
         mask = label.notna() & feats.notna()
         return _train(
