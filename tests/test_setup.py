@@ -11,6 +11,8 @@ from collections import Counter
 from types import SimpleNamespace
 
 import pytest
+from pyspark.sql import Row
+from pyspark.sql.types import StructType
 
 from trino_spark.catalog import ALL_TABLES, Catalog, read_parquet
 from trino_spark.dialect.engine import TrinoEngine
@@ -147,3 +149,29 @@ def test_concurrent_first_references_register_each_name_once():
         sys.setswitchinterval(interval)
     assert not any(t.is_alive() for t in threads)
     assert calls == {n: 1 for n in names}
+
+
+def test_information_schema_read_after_insert_runs_no_job(fresh):
+    fresh.sql("DROP TABLE IF EXISTS setup_info")
+    fresh.sql("CREATE TABLE setup_info (k bigint, name varchar)")
+    try:
+        fresh.sql("INSERT INTO setup_info VALUES (1, 'a')").collect()
+        session = fresh.spark
+        before = _jobs(session)
+        df = fresh.sql(
+            "SELECT * FROM information_schema.columns WHERE table_name = 'setup_info'"
+        )
+        rows = df.collect()
+        assert _jobs(session) == before
+        assert df.schema == StructType.fromDDL(
+            "table_catalog string, table_schema string, table_name string,"
+            " column_name string, ordinal_position int, data_type string"
+        )
+        assert rows == [
+            Row("spark", "default", "setup_info", "k", 1, "bigint"),
+            Row("spark", "default", "setup_info", "name", 2, "string"),
+        ]
+    finally:
+        fresh.sql("DROP TABLE IF EXISTS setup_info")
+    # the last table dropped: both views refresh with zero rows
+    assert fresh.sql("SELECT * FROM information_schema.tables").collect() == []

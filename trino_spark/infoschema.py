@@ -10,17 +10,33 @@ SHOW → SELECT rewrite used by TrinoEngine.sql.
 
 from __future__ import annotations
 
-from pyspark.sql import Row, SparkSession
+import pyarrow as pa
+from pyspark.sql import SparkSession
+
+
+# Explicit schemas: an engine whose last table is dropped refreshes with
+# zero rows, from which no schema can be inferred.
+_TABLES = pa.schema(
+    [(n, pa.string()) for n in ("table_catalog", "table_schema", "table_name", "table_type")]
+)
+_COLUMNS = pa.schema(
+    [(n, pa.string()) for n in ("table_catalog", "table_schema", "table_name", "column_name")]
+    + [("ordinal_position", pa.int32()), ("data_type", pa.string())]
+)
 
 
 def register_information_schema(spark: SparkSession, tables: dict[str, list[tuple[str, str]]]) -> None:
-    """tables: name -> [(column_name, data_type)]."""
+    """tables: name -> [(column_name, data_type)].
+
+    Both views are built from Arrow tables, so they plan as LocalRelations
+    and reading them runs no Spark job (from Python lists they would plan a
+    Scan ExistingRDD, a job through the Python workers)."""
     trows = [
-        Row(table_catalog="spark", table_schema="default", table_name=t, table_type="BASE TABLE")
+        dict(table_catalog="spark", table_schema="default", table_name=t, table_type="BASE TABLE")
         for t in sorted(tables)
     ]
     crows = [
-        Row(
+        dict(
             table_catalog="spark",
             table_schema="default",
             table_name=t,
@@ -31,19 +47,10 @@ def register_information_schema(spark: SparkSession, tables: dict[str, list[tupl
         for t, cols in sorted(tables.items())
         for i, (c, dt) in enumerate(cols)
     ]
-    # explicit schemas: an engine whose LAST table is dropped refreshes
-    # with zero rows, and schema inference cannot run on an empty list
-    tschema = (
-        "table_catalog string, table_schema string, table_name string, table_type string"
-    )
-    cschema = (
-        "table_catalog string, table_schema string, table_name string,"
-        " column_name string, ordinal_position int, data_type string"
-    )
-    spark.createDataFrame(trows, tschema).createOrReplaceTempView(
+    spark.createDataFrame(pa.Table.from_pylist(trows, _TABLES)).createOrReplaceTempView(
         "information_schema_tables"
     )
-    spark.createDataFrame(crows, cschema).createOrReplaceTempView(
+    spark.createDataFrame(pa.Table.from_pylist(crows, _COLUMNS)).createOrReplaceTempView(
         "information_schema_columns"
     )
 
