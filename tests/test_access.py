@@ -105,6 +105,20 @@ class TestCallProcedures:
         assert flushed >= 1
         again = engine.sql("CALL system.flush_query_log()").collect()[0].flushed
         assert again <= 1
+        # a live record survives a flush, so it can still be killed
+        live = engine.queries.open("SELECT 'still running'", "trino")
+        engine.queries.start(live)
+        try:
+            engine.sql("CALL system.flush_query_log()").collect()
+            states = engine.sql(
+                "SELECT state FROM system.runtime.queries"
+                f" WHERE query_id = '{live.query_id}'"
+            ).collect()
+            assert [r.state for r in states] == ["RUNNING"]
+            killed = engine.sql(f"CALL system.runtime.kill_query('{live.query_id}')").collect()
+            assert killed[0].query_id == live.query_id and live.killed
+        finally:
+            engine.queries.close(live, "killed")
 
     def test_unknown_procedure(self, engine):
         with pytest.raises(ValueError, match="procedure not found"):

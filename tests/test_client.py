@@ -261,6 +261,25 @@ def test_http_statements_emit_events(server, conn):
         server.engine.remove_event_listener(rec)
 
 
+def test_client_user_reaches_runtime_queries_and_events(server):
+    """X-Trino-User names the query's user everywhere, not only its
+    resource group."""
+    rec = _Recorder()
+    server.engine.add_event_listener(rec)
+    try:
+        with dbapi.connect(server.url(), user="alice") as c:
+            c.execute("SELECT 1 AS alice_probe").fetchall()
+            rows = c.execute(
+                "SELECT user FROM system.runtime.queries"
+                " WHERE query = 'SELECT 1 AS alice_probe'"
+            ).fetchall()
+    finally:
+        server.engine.remove_event_listener(rec)
+    assert rows == [["alice"]]
+    for events in (rec.created, rec.completed):
+        assert {e["user"] for e in events if "alice_probe" in e["query"]} == {"alice"}
+
+
 def test_use_statement_updates_client_catalog_schema(server):
     with dbapi.connect(server.url()) as c:
         c.execute("USE default").fetchall()

@@ -108,48 +108,57 @@ def test_row_filter_through_http(server):
 
 def test_kill_query_cancels_running_statement(server):
     """system.runtime.kill_query (KillQueryProcedure.java:62): a second
-    session cancels the first's running jobs via its query id."""
+    session finds the first's running statement in system.runtime.queries
+    and cancels it by that query id, which is also the id of the victim's
+    HTTP response and its Spark job group."""
+    import json
     import threading
     import time
+    import urllib.request
 
+    victim_sql = (
+        "SELECT count(*) AS c FROM lineitem a, lineitem b, lineitem c "
+        "WHERE a.l_orderkey + b.l_orderkey + c.l_orderkey < 0"
+    )
     result = {}
 
     def victim():
-        try:
-            fetch_all(
-                server.url(),
-                "SELECT count(*) AS c FROM lineitem a, lineitem b, lineitem c "
-                "WHERE a.l_orderkey + b.l_orderkey + c.l_orderkey < 0",
-            )
+        req = urllib.request.Request(
+            f"{server.url()}/v1/statement", data=victim_sql.encode(), method="POST"
+        )
+        resp = json.loads(urllib.request.urlopen(req).read())
+        result["id"] = resp["id"]
+        if "error" in resp:
+            result["state"] = f"failed: {resp['error']['message']}"
+        else:
             result["state"] = "finished"
-        except RuntimeError as exc:
-            result["state"] = f"failed: {exc}"
 
     th = threading.Thread(target=victim, daemon=True)
     th.start()
     sc = server.engine.spark.sparkContext
     try:
-        # wait until the server registers the query — registration alone is
-        # enough now: kill_query records the qid in the engine's killed-set
-        # (checked around the server's collect) and cancels future jobs, so
-        # a kill landing while the victim is still planning terminates it
-        # too. (The old wait-for-ANY-active-job condition was flaky under a
-        # full-suite run: another test's job could satisfy it early.)
-        # Match the VICTIM's registration specifically (any stray entry
-        # from another test must not be killed instead), and allow a
-        # generous window — a full-suite JVM under load can take >20 s
-        # to dispatch the POST (observed flake, round 5).
+        # The probe's own text does not start with the victim's, and a
+        # reading statement never lists itself, so only the victim
+        # matches. Allow a generous window: a full-suite JVM under load
+        # can take >20 s to dispatch the POST.
+        probe = (
+            "SELECT query_id FROM system.runtime.queries WHERE state = 'RUNNING'"
+            " AND query LIKE 'SELECT count(*) AS c FROM lineitem a,%'"
+        )
         qid = None
         for _ in range(600):
-            running = dict(getattr(server.engine, "_running_queries", {}))
-            for k, sql_text in running.items():
-                if "b.l_orderkey + c.l_orderkey" in sql_text:
-                    qid = k
-                    break
+            _, rows = fetch_all(server.url(), probe)
+            qid = rows[0][0] if rows else None
             if qid or result.get("state"):
                 break
             time.sleep(0.1)
         assert qid, f"victim query never started running (victim state: {result})"
+        # the query id is the victim's Spark job group
+        for _ in range(600):
+            if sc.statusTracker().getJobIdsForGroup(qid) or result.get("state"):
+                break
+            time.sleep(0.1)
+        assert sc.statusTracker().getJobIdsForGroup(qid), result
         _, rows = fetch_all(
             server.url(), f"CALL system.runtime.kill_query('{qid}', 'test kill')"
         )
@@ -157,6 +166,7 @@ def test_kill_query_cancels_running_statement(server):
         th.join(timeout=120)
         assert not th.is_alive()
         assert result["state"].startswith("failed"), result
+        assert result["id"] == qid
     finally:
         sc.cancelAllJobs()  # never leave the cartesian burning the session
 
@@ -171,11 +181,11 @@ def test_kill_query_reaches_a_shuffle_stage_submitted_after_the_kill(server):
 
     eng = server.engine
     sc = eng.spark.sparkContext
-    qid = "kill_before_shuffle_stage"
-    running = eng.__dict__.setdefault("_running_queries", {})
     slow = F.udf(lambda x: time.sleep(10) or x, "long")
     df = eng.spark.range(0, 4, 1, 2).select(slow("id").alias("k")).groupBy("k").count()
-    running[qid] = "killed before its shuffle stage is submitted"
+    rec = eng.queries.open("killed before its shuffle stage is submitted", "trino")
+    eng.queries.start(rec)
+    qid = rec.query_id
     try:
         eng.sql(f"CALL system.runtime.kill_query('{qid}', 'test kill')").collect()
         sc.setJobGroup(qid, "killed before its shuffle stage", interruptOnCancel=True)
@@ -183,7 +193,7 @@ def test_kill_query_reaches_a_shuffle_stage_submitted_after_the_kill(server):
             df.collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-        running.pop(qid, None)
+        eng.queries.close(rec, "killed")
     jsc = sc._jsc.sc()
     jsc.listenerBus().waitUntilEmpty()
     jobs = jsc.statusStore().jobsList(None)
@@ -398,6 +408,41 @@ def test_stats_carry_elapsed_and_rows(server):
     assert page["stats"]["elapsedTimeMillis"] > 0
 
 
+def test_one_elapsed_covers_execution(server):
+    """The protocol stats, system.runtime.queries and the completion event
+    report one elapsed, and it spans execution, not only engine.sql."""
+    import json
+    import time
+    import urllib.request
+
+    eng = server.engine
+    eng.spark.udf.register("sleep_then_echo", lambda x: time.sleep(1.1) or x, "long")
+    completed = []
+
+    def listener(kind, ev):
+        if kind == "query_completed":
+            completed.append(ev)
+
+    eng.add_event_listener(listener)
+    try:
+        req = urllib.request.Request(
+            f"{server.url()}/v1/statement", data=b"SELECT sleep_then_echo(7) AS x", method="POST"
+        )
+        resp = json.loads(urllib.request.urlopen(req).read())
+        page = json.loads(urllib.request.urlopen(resp["nextUri"]).read())
+    finally:
+        eng.remove_event_listener(listener)
+    assert page["data"] == [[7]]
+    elapsed = page["stats"]["elapsedTimeMillis"]
+    _, rows = fetch_all(
+        server.url(),
+        f"SELECT elapsed_ms FROM system.runtime.queries WHERE query_id = '{resp['id']}'",
+    )
+    wall = [ev["wall_ms"] for ev in completed if ev["query_id"] == resp["id"]]
+    assert rows == [[elapsed]] and wall == [elapsed]
+    assert elapsed >= 1000
+
+
 def test_version_scalar(server):
     from trino_spark import __version__
     from trino_spark.server import fetch_all
@@ -407,3 +452,41 @@ def test_version_scalar(server):
     # inside a string literal it is untouched
     cols, rows = fetch_all(server.url(), "SELECT 'version()' AS v")
     assert rows == [["version()"]]
+
+
+def test_query_registry_concurrent_open_close():
+    """Records opened and closed from more threads than cores: every event
+    is emitted once, no record is lost, and the history stays capped."""
+    import sys
+    import threading
+
+    from trino_spark.dialect.engine import QueryRegistry
+
+    events = []
+    reg = QueryRegistry(lambda kind, ev: events.append((kind, ev["query_id"])))
+    lost = []
+
+    def work():
+        for i in range(50):
+            rec = reg.open(f"SELECT {i}", "u")
+            reg.start(rec)
+            if reg.get(rec.query_id) is not rec:
+                lost.append(rec.query_id)
+            reg.close(rec, None)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads) and not lost
+    created = {q for k, q in events if k == "query_created"}
+    completed = {q for k, q in events if k == "query_completed"}
+    assert len(events) == 2 * 16 * 50 and created == completed
+    assert reg.table().num_rows == QueryRegistry.HISTORY
+    assert reg.flush() == QueryRegistry.HISTORY and reg.table().num_rows == 0

@@ -175,3 +175,16 @@ def test_information_schema_read_after_insert_runs_no_job(fresh):
         fresh.sql("DROP TABLE IF EXISTS setup_info")
     # the last table dropped: both views refresh with zero rows
     assert fresh.sql("SELECT * FROM information_schema.tables").collect() == []
+
+
+def test_runtime_queries_read_runs_no_job(fresh):
+    fresh.sql("SELECT 1 AS x").collect()
+    before = _jobs(fresh.spark)
+    df = fresh.sql("SELECT * FROM system.runtime.queries")
+    rows = df.collect()
+    assert _jobs(fresh.spark) == before
+    assert df.schema == StructType.fromDDL(
+        "query_id string, state string, user string, query string, elapsed_ms double,"
+        " created timestamp, started timestamp, `end` timestamp"
+    )
+    assert [(r.state, r.query) for r in rows] == [("FINISHED", "SELECT 1 AS x")]

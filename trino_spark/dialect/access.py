@@ -34,31 +34,31 @@ from pyspark.sql import DataFrame
 
 _PRIVS = ("SELECT", "INSERT", "UPDATE", "DELETE")
 
-# How often a killed query's job group is cancelled again while the query
-# is still registered as running.
+# How often a killed query's job group is cancelled again while its
+# query record is still live.
 KILL_RECANCEL_S = 0.1
 
 
-def _cancel_until_deregistered(engine, sc, qid: str) -> None:
-    """Keep cancelling a killed query's job group until it deregisters.
+def _cancel_until_closed(sc, rec) -> None:
+    """Keep cancelling a killed query's job group until its record closes.
 
     A future-jobs cancel is checked only when a job is submitted through
     runJob; adaptive execution submits each shuffle stage as a map-stage
     job, which that check skips. A kill that lands after a query's
     broadcasts finish but before its shuffle stage is submitted would leave
     that stage running to completion. Cancelling the group again until the
-    server deregisters the query reaches such a job within one interval.
+    server closes the query's record reaches such a job within one interval.
     """
 
     def loop() -> None:
-        while qid in getattr(engine, "_running_queries", {}):
+        while rec.end is None:
             try:
-                sc.cancelJobGroup(qid)
+                sc.cancelJobGroup(rec.query_id)
             except Exception:
                 return  # the context is stopping
             time.sleep(KILL_RECANCEL_S)
 
-    threading.Thread(target=loop, name=f"kill-{qid}", daemon=True).start()
+    threading.Thread(target=loop, name=f"kill-{rec.query_id}", daemon=True).start()
 
 
 class AccessDenied(PermissionError):
@@ -704,9 +704,7 @@ def try_execute_call(engine, sql: str) -> "DataFrame | None":
         faker.gen(spark, schema, n, seed=seed).createOrReplaceTempView(view)
         return spark.createDataFrame([(view, n)], "table: string, rows: bigint")
     if name == "flush_query_log":
-        n = len(getattr(engine, "_query_log", []) or [])
-        engine._query_log = []
-        return spark.createDataFrame([(n,)], "flushed: bigint")
+        return spark.createDataFrame([(engine.queries.flush(),)], "flushed: bigint")
     if name == "add_row_filter":
         add_row_filter(engine, str(_lit(args[0])), str(_lit(args[1])), str(_lit(args[2])))
         return spark.createDataFrame(
@@ -731,18 +729,15 @@ def try_execute_call(engine, sql: str) -> "DataFrame | None":
         # victim's collect fails and the protocol surfaces FAILED.
         qid = str(_lit(args[0]))
         msg = str(_lit(args[1])) if len(args) > 1 else "killed by operator"
-        running = getattr(engine, "_running_queries", {})
-        if qid not in running:
+        rec = engine.queries.get(qid)
+        if rec is None or rec.end is not None:
             raise ValueError(f"query not found or not running: {qid}")
         # cancelJobGroup only reaches jobs ACTIVE at this instant — a victim
-        # still planning (or between jobs) would survive it. Record the kill
-        # in a set the server consults around its collect, and cancel future
-        # jobs too where the Spark version supports it, so a kill issued at
-        # any point after submission terminates the query.
-        killed = getattr(engine, "_killed_queries", None)
-        if killed is None:
-            killed = engine._killed_queries = set()
-        killed.add(qid)
+        # still planning (or between jobs) would survive it. Mark the
+        # record, which the server checks around its collect, and cancel
+        # future jobs too where the Spark version supports it, so a kill
+        # issued at any point after submission terminates the query.
+        rec.killed = True
         sc = engine.spark.sparkContext
         cancel_future = getattr(sc, "cancelJobGroupAndFutureJobs", None)
         if callable(cancel_future):
@@ -757,7 +752,7 @@ def try_execute_call(engine, sql: str) -> "DataFrame | None":
                 sc._jsc.sc().cancelJobGroupAndFutureJobs(qid)
             except Exception:
                 sc.cancelJobGroup(qid)
-        _cancel_until_deregistered(engine, sc, qid)
+        _cancel_until_closed(sc, rec)
         return spark.createDataFrame([(qid, msg)], "query_id: string, message: string")
     if name == "drop_column_mask":
         st = _state(engine)

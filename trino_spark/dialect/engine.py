@@ -9,8 +9,13 @@ Tungsten execute. See SURVEY.md §3.1.
 
 from __future__ import annotations
 
+import dataclasses
+import datetime
 import re
+import threading
+import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from trino_spark.catalog import ALL_TABLES, Catalog, read_parquet
@@ -19,15 +24,112 @@ from trino_spark.dialect.rewrites import translate
 from trino_spark.functions import registry as _registry
 from trino_spark.infoschema import register_information_schema, rewrite_show
 
-__all__ = ["TrinoEngine", "translate"]
+__all__ = ["QueryRecord", "QueryRegistry", "TrinoEngine", "translate"]
+
+_QUERIES = pa.schema(
+    [(n, pa.string()) for n in ("query_id", "state", "user", "query")]
+    + [("elapsed_ms", pa.float64())]
+    + [(n, pa.timestamp("us", tz="UTC")) for n in ("created", "started", "end")]
+)
+
+
+def _now() -> datetime.datetime:
+    return datetime.datetime.now(datetime.timezone.utc)
+
+
+@dataclasses.dataclass(eq=False)
+class QueryRecord:
+    """One top-level statement (the reference's QueryInfo, kept by
+    QueryStateMachine). system.runtime.queries, the query events, the
+    protocol stats block and kill_query all read this one object; `end`
+    is None while it is live."""
+
+    query: str
+    user: str
+    query_id: str = dataclasses.field(default_factory=lambda: uuid.uuid4().hex[:16])
+    state: str = "QUEUED"
+    created: datetime.datetime = dataclasses.field(default_factory=_now)
+    started: datetime.datetime | None = None
+    end: datetime.datetime | None = None
+    error: str | None = None
+    killed: bool = False  # set by kill_query, checked by the server
+
+    @property
+    def elapsed_ms(self) -> float:
+        return round(((self.end or _now()) - self.created).total_seconds() * 1000, 3)
+
+
+class QueryRegistry:
+    """Every live query record plus the last HISTORY finished ones, under
+    one lock (the reference's QueryTracker). open/start/close move a record
+    QUEUED -> RUNNING -> FINISHED | FAILED and emit the query events; a
+    record bound to a thread is that thread's top-level statement."""
+
+    HISTORY = 200
+
+    def __init__(self, emit):
+        self._emit = emit
+        self._lock = threading.Lock()
+        self._records: dict[str, QueryRecord] = {}
+        self._bound = threading.local()
+
+    def open(self, sql: str, user: str) -> QueryRecord:
+        rec = QueryRecord(sql.strip()[:1000], user)
+        with self._lock:
+            self._records[rec.query_id] = rec
+        event = {"query_id": rec.query_id, "query": rec.query, "user": user}
+        self._emit("query_created", {**event, "create_time": rec.created.timestamp()})
+        return rec
+
+    def start(self, rec: QueryRecord) -> None:
+        with self._lock:
+            rec.started, rec.state = _now(), "RUNNING"
+
+    def close(self, rec: QueryRecord, error: str | None) -> None:
+        with self._lock:
+            rec.end, rec.error = _now(), error
+            rec.state = "FINISHED" if error is None else "FAILED"
+            self._drop(keep=self.HISTORY)
+        event = {k: getattr(rec, k) for k in ("query_id", "query", "user", "state", "error")}
+        self._emit("query_completed", {**event, "wall_ms": rec.elapsed_ms})
+
+    def _drop(self, keep: int) -> int:
+        """Drop all but the `keep` latest-opened finished records (lock held)."""
+        done = [q for q, r in self._records.items() if r.end is not None]
+        n = max(len(done) - keep, 0)
+        for q in done[:n]:
+            del self._records[q]
+        return n
+
+    def flush(self) -> int:
+        """Drop the finished records; live ones stay, so they can be killed."""
+        with self._lock:
+            return self._drop(keep=0)
+
+    def get(self, query_id: str) -> QueryRecord | None:
+        with self._lock:
+            return self._records.get(query_id)
+
+    def bind(self, rec: QueryRecord | None) -> None:
+        self._bound.rec = rec
+
+    def bound(self) -> QueryRecord | None:
+        return getattr(self._bound, "rec", None)
+
+    def table(self) -> pa.Table:
+        """The system.runtime.queries rows, except the reading statement's
+        own record, which is still being built."""
+        me = self.bound()
+        with self._lock:  # start() and close() update records under it
+            recs = [r for r in self._records.values() if r is not me]
+            rows = [{**vars(r), "elapsed_ms": r.elapsed_ms} for r in recs]
+        return pa.Table.from_pylist(rows, _QUERIES)
 
 
 class TrinoEngine:
     """Trino-dialect SQL in, DataFrame out."""
 
     def __init__(self, spark: SparkSession, sf_dir: str | None = None):
-        import threading
-
         self.spark = spark
         self.catalog = Catalog(spark)
         # Per-thread statement depth: the HTTP server dispatches concurrent
@@ -35,6 +137,11 @@ class TrinoEngine:
         # would corrupt the "is this a top-level statement?" decisions
         # (query events, CTE-cache retirement) across threads.
         self._tls = threading.local()
+        # EventListener SPI listeners (emit_event), and the query records
+        # behind system.runtime.queries, the query events, the protocol
+        # stats and kill_query.
+        self._event_listeners: list = []
+        self.queries = QueryRegistry(self.emit_event)
         # Guards the reused-CTE cache (dialect/cte.py): retire() must not
         # drop another in-flight statement's views between its SQL rewrite
         # and Catalyst analysis. RLock + in-flight top-level count.
@@ -82,48 +189,33 @@ class TrinoEngine:
         # calls it (functions/registry.py, the SystemFunctionBundle analog).
 
     def sql(self, trino_sql: str) -> DataFrame:
-        """Dispatch a Trino-dialect statement; top-level calls are recorded
-        in the query log served as system.runtime.queries
-        (core/.../connector/system/QuerySystemTable.java role)."""
-        import time
-        import uuid as _uuid
-
+        """Dispatch a Trino-dialect statement. A top-level call runs under
+        the query record bound to its thread (the HTTP server binds one per
+        request), else under one it opens and closes itself. Such a record
+        ends when this returns, before the lazy DataFrame executes, so its
+        elapsed covers dispatch, planning and any eager (DML) work only."""
         depth = getattr(self._tls, "depth", 0)
         self._tls.depth = depth + 1
         bound = _registry.bind_session(self.spark)
+        rec = error = None
         if depth == 0:
             with self._cte_lock:
                 self._cte_active += 1
-        t0 = time.perf_counter()
-        qid = _uuid.uuid4().hex[:16]
-        if depth == 0:
-            self.emit_event(
-                "query_created",
-                {
-                    "query_id": qid,
-                    "query": trino_sql.strip()[:1000],
-                    "user": getattr(self, "session_user", "trino"),
-                    "create_time": time.time(),
-                },
-            )
+            if self.queries.bound() is None:
+                rec = self.queries.open(trino_sql, getattr(self, "session_user", "trino"))
+                self.queries.start(rec)
+                self.queries.bind(rec)
         try:
-            out = self._sql_inner(trino_sql)
-            if depth == 0:
-                dt = time.perf_counter() - t0
-                self._log_query(qid, trino_sql, "FINISHED", dt)
-                self._emit_completed(qid, trino_sql, "FINISHED", dt, None)
-            return out
+            return self._sql_inner(trino_sql)
         except Exception as exc:
-            if depth == 0:
-                dt = time.perf_counter() - t0
-                self._log_query(qid, trino_sql, "FAILED", dt)
-                self._emit_completed(
-                    qid, trino_sql, "FAILED", dt, str(exc).split("\n")[0][:500]
-                )
+            error = str(exc).split("\n")[0][:500]
             raise
         finally:
             self._tls.depth = depth
             _registry.bind_session(bound)
+            if rec is not None:
+                self.queries.bind(None)
+                self.queries.close(rec, error)
             if depth == 0:
                 with self._cte_lock:
                     self._cte_active -= 1
@@ -135,18 +227,14 @@ class TrinoEngine:
     # `query_completed` methods (either optional) or a plain callable
     # receiving (kind, event).
     def add_event_listener(self, listener) -> None:
-        if not hasattr(self, "_event_listeners"):
-            self._event_listeners: list = []
         self._event_listeners.append(listener)
 
     def remove_event_listener(self, listener) -> None:
-        try:
-            getattr(self, "_event_listeners", []).remove(listener)
-        except ValueError:
-            pass
+        if listener in self._event_listeners:
+            self._event_listeners.remove(listener)
 
     def emit_event(self, kind: str, event: dict) -> None:
-        for ls in getattr(self, "_event_listeners", []):
+        for ls in list(self._event_listeners):
             try:
                 fn = getattr(ls, kind, None)
                 if fn is not None:
@@ -155,43 +243,6 @@ class TrinoEngine:
                     ls(kind, dict(event))
             except Exception:
                 pass  # never let a listener break the query path
-
-    def _emit_completed(
-        self, qid: str, sql: str, state: str, elapsed_s: float, error: str | None
-    ) -> None:
-        self.emit_event(
-            "query_completed",
-            {
-                "query_id": qid,
-                "query": sql.strip()[:1000],
-                "user": getattr(self, "session_user", "trino"),
-                "state": state,
-                "wall_ms": round(elapsed_s * 1000, 3),
-                "error": error,
-            },
-        )
-
-    def _log_query(self, qid: str, sql: str, state: str, elapsed_s: float) -> None:
-        import datetime as _dt
-
-        log = getattr(self, "_query_log", None)
-        if log is None:
-            log = self._query_log = []
-        end = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
-        created = end - _dt.timedelta(seconds=elapsed_s)
-        log.append(
-            (
-                qid,
-                state,
-                getattr(self, "session_user", "trino"),
-                sql.strip()[:1000],
-                round(elapsed_s * 1000, 3),
-                created,
-                created,  # started: dispatch is immediate in this engine
-                end,
-            )
-        )
-        del log[:-200]  # bounded, like the reference's history window
 
     @staticmethod
     def _sub_outside_literals(sql: str, target: str, repl: str) -> str:
@@ -462,15 +513,12 @@ class TrinoEngine:
                 trino_sql, "system.jdbc.types", "_system_jdbc_types"
             )
         if "system.runtime.queries" in trino_sql:
-            # system.runtime.queries (QuerySystemTable.java): planning-time
-            # dispatch state per recorded query.
-            rows = list(getattr(self, "_query_log", []))
-            self.spark.createDataFrame(
-                rows or [],
-                "query_id: string, state: string, user: string, query: string,"
-                " elapsed_ms: double, created: timestamp, started: timestamp,"
-                " `end`: timestamp",
-            ).createOrReplaceTempView("_system_runtime_queries")
+            # system.runtime.queries (QuerySystemTable.java): one row per
+            # query record, live ones included; Arrow-built, so reading it
+            # runs no Spark job.
+            self.spark.createDataFrame(self.queries.table()).createOrReplaceTempView(
+                "_system_runtime_queries"
+            )
             trino_sql = self._sub_outside_literals(
                 trino_sql, "system.runtime.queries", "_system_runtime_queries"
             )

@@ -255,18 +255,6 @@ def _g2(fn):
     return run
 
 
-def _gw(fn):
-    """Kernel fn returning a geometry -> WKT."""
-
-    def run(*args):
-        if any(a is None for a in args):
-            return None
-        out = fn(*args)
-        return None if out is None else K.to_wkt(out)
-
-    return run
-
-
 # ------------------------------------------------------------ bing tiles
 
 

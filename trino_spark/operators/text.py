@@ -44,25 +44,6 @@ def bpe_ish_token_count(text: Column | str) -> Column:
     )
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Append standard quality-score features (Gopher/C4-style filters):
-    length, token stats, punctuation/digit/space ratios, mean word length."""
-    c = F.col(text_col)
-    n_tok = token_count(c)
-    n_chars = F.length(c)
-    return (
-        df.withColumn("n_chars_m", n_chars.cast("long"))
-        .withColumn("n_tokens", n_tok)
-        .withColumn(
-            "mean_word_len",
-            F.when(n_tok > 0, (F.length(F.regexp_replace(c, r"\s+", "")) / n_tok)).otherwise(F.lit(0.0)),
-        )
-        .withColumn("punct_ratio", (F.length(c) - F.length(F.regexp_replace(c, r"[^\w\s]", ""))) / F.greatest(n_chars, F.lit(1)))
-        .withColumn("digit_ratio", (F.length(c) - F.length(F.regexp_replace(c, r"[0-9]", ""))) / F.greatest(n_chars, F.lit(1)))
-        .withColumn("space_ratio", (F.length(c) - F.length(F.regexp_replace(c, r"\s", ""))) / F.greatest(n_chars, F.lit(1)))
-    )
-
-
 def quality_score(text: Column | str) -> Column:
     """Scalar [0,1] quality score combining the feature family — monotone in
     'looks like prose'. Deterministic, documented weights."""
@@ -84,18 +65,6 @@ def lang_scores(text: Column | str) -> Column:
         hits = F.size(F.filter(toks, lambda x: F.array_contains(marker_arr, x)))
         entries.append(F.struct(F.lit(lang).alias("key"), (hits / n).alias("value")))
     return F.map_from_entries(F.array(*entries))
-
-
-def detect_lang(text: Column | str) -> Column:
-    """argmax over lang_scores with 'und' fallback when all-zero."""
-    m = lang_scores(text)
-    entries = F.map_entries(m)
-    best = F.aggregate(
-        entries,
-        F.struct(F.lit("und").alias("key"), F.lit(0.0).alias("value")),
-        lambda acc, e: F.when(e["value"] > acc["value"], e).otherwise(acc),
-    )
-    return best["key"]
 
 
 def fingerprint(text: Column | str) -> Column:

@@ -33,7 +33,6 @@ from __future__ import annotations
 import json
 import re
 import threading
-import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import types as T
@@ -80,13 +79,14 @@ def _json_cell(v):
 class _QueryState:
     def __init__(
         self,
-        qid: str,
+        record,
         columns: list[dict],
         rows: list[list],
         spooled: bool = False,
         encoding: str = "json",
     ):
-        self.qid = qid
+        self.record = record  # the engine's QueryRecord for this statement
+        self.qid = record.query_id
         self.columns = columns
         self.rows = rows
         self.offset = 0
@@ -94,7 +94,6 @@ class _QueryState:
         self.spooled = spooled
         self.encoding = encoding  # negotiated spooled-segment encoding
         self.segments: list[dict] = []  # spooled-mode segment descriptors
-        self.elapsed_ms: float = 0.0  # execution wall time (stats surface)
         self.total_rows: int = len(rows)
 
     def stats(self, state: str) -> dict:
@@ -102,9 +101,24 @@ class _QueryState:
         processed rows — the fields interactive clients render)."""
         return {
             "state": state,
-            "elapsedTimeMillis": round(self.elapsed_ms, 3),
+            "elapsedTimeMillis": self.record.elapsed_ms,
             "processedRows": self.total_rows,
         }
+
+
+class _Refused(RuntimeError):
+    """An admission refusal; `error_name` is its protocol errorName."""
+
+    def __init__(self, message: str, error_name: str):
+        super().__init__(message)
+        self.error_name = error_name
+
+
+def _error(exc: Exception) -> dict:
+    return {
+        "message": str(exc).split("\n")[0][:500],
+        "errorName": getattr(exc, "error_name", type(exc).__name__),
+    }
 
 
 class ResourceGroup:
@@ -520,34 +534,14 @@ class TrinoHttpServer:
         user: str = "trino",
         prepared: dict[str, str] | None = None,
     ) -> dict:
-        qid = uuid.uuid4().hex[:16]
-
-        def _fail(msg: str, errname: str) -> dict:
-            st = _QueryState(qid, [], [])
-            st.error = {"message": msg, "errorName": errname}
-            with self._lock:
-                self._queries[qid] = st
-            return {"id": qid, "stats": {"state": "FAILED"}, "error": st.error}
-
-        # Admission control: route to the user's resource group and take a
-        # slot (blocks while the group is at hardConcurrencyLimit; rejects
-        # when its wait queue is full — QUERY_QUEUE_FULL). A selector that
-        # resolves to no configured group (and no 'global' default) REJECTS
-        # the query — the reference likewise fails a query matching no
-        # resource-group selector rather than silently skipping admission.
-        gname = self._group_selector(user)
-        group = self.resource_groups.get(gname) or self.resource_groups.get("global")
-        if group is None and self.resource_groups:
-            return _fail(
-                f"Query did not match any resource group (selector -> {gname!r})",
-                "QUERY_REJECTED",
-            )
-        if group is not None:
-            try:
-                group.acquire()
-            except RuntimeError as exc:
-                return _fail(str(exc), "QUERY_QUEUE_FULL")
-
+        # One query record per statement (engine.QueryRegistry): its id is
+        # the response id, the Spark job group and the kill_query target;
+        # it is bound to this thread so engine.sql reuses it, and it closes
+        # in the finally below on every exit path.
+        queries = self.engine.queries
+        rec = queries.open(sql, user)
+        qid = rec.query_id
+        st = _QueryState(rec, [], [])
         # Statement-level session effects (SET/RESET SESSION) answer via
         # response headers and must NOT leak into the shared engine — the
         # protocol is stateless-server: the CLIENT carries the property
@@ -555,29 +549,48 @@ class TrinoHttpServer:
         # reverts the engine-global mutation the statement performs.
         stmt_hdrs = self._session_response_headers(sql)
         sc = self.engine.spark.sparkContext
-        running = getattr(self.engine, "_running_queries", None)
-        if running is None:
-            running = self.engine._running_queries = {}
         saved: dict[str, str | None] = {}
         saved_prep: dict[str, str | None] = {}
-        st: _QueryState | None = None
+        group = None
         # Requests carrying per-request state (session properties, prepared
         # statements, or a SET/RESET SESSION statement) serialize among
         # themselves: the overlay save/apply/restore mutates shared engine
         # and Spark-conf state, and two concurrent overlays would restore
         # each other's values (header-less requests stay fully concurrent).
-        needs_mutex = bool(session or prepared or stmt_hdrs)
-        if needs_mutex:
-            self._state_mutex.acquire()
+        needs_mutex = False
         try:
-            running[qid] = sql.strip()[:200]
+            # Admission control: route to the user's resource group and
+            # take a slot (blocks while the group is at
+            # hardConcurrencyLimit; rejects when its wait queue is full —
+            # QUERY_QUEUE_FULL). A selector that resolves to no configured
+            # group (and no 'global' default) REJECTS the query — the
+            # reference likewise fails a query matching no resource-group
+            # selector rather than silently skipping admission.
+            gname = self._group_selector(user)
+            group = self.resource_groups.get(gname) or self.resource_groups.get("global")
+            if group is None and self.resource_groups:
+                raise _Refused(
+                    f"Query did not match any resource group (selector -> {gname!r})",
+                    "QUERY_REJECTED",
+                )
+            if group is not None:
+                try:
+                    group.acquire()
+                except RuntimeError as exc:
+                    group = None  # no slot taken, none to release
+                    raise _Refused(str(exc), "QUERY_QUEUE_FULL") from None
+            queries.start(rec)
+            needs_mutex = bool(session or prepared or stmt_hdrs)
+            if needs_mutex:
+                self._state_mutex.acquire()
             sc.setJobGroup(qid, sql.strip()[:80], interruptOnCancel=True)
+            queries.bind(rec)
 
             def _check_killed() -> None:
-                # kill_query records qids here so a kill that landed while
+                # kill_query marks the record, so a kill that landed while
                 # the query was still planning (no active Spark job to
                 # cancel) still terminates it at the next checkpoint.
-                if qid in getattr(self.engine, "_killed_queries", ()):
+                if rec.killed:
                     raise RuntimeError("Query killed by operator via kill_query")
 
             # Per-request session properties from X-Trino-Session: applied
@@ -601,47 +614,25 @@ class TrinoHttpServer:
             for k, v in (prepared or {}).items():
                 saved_prep[k] = self.engine.prepared.get(k)
                 self.engine.prepared[k] = v
-            import time as _time
-
-            t0 = _time.perf_counter()
-            try:
-                _check_killed()
-                df = self.engine.sql(sql)
-                _check_killed()
-                columns = [
-                    {"name": f.name, "type": _trino_type(f.dataType)} for f in df.schema
-                ]
-                rows = [[_json_cell(v) for v in row] for row in df.collect()]
-                _check_killed()
-                st = _QueryState(qid, columns, rows, spooled=spooled, encoding=encoding)
-                if spooled:
-                    self._spool(st)
-            except Exception as exc:  # surface as a Trino-style error payload
-                st = _QueryState(qid, [], [])
-                st.error = {
-                    "message": str(exc).split("\n")[0][:500],
-                    "errorName": type(exc).__name__,
-                }
-            st.elapsed_ms = (_time.perf_counter() - t0) * 1000.0
+            _check_killed()
+            df = self.engine.sql(sql)
+            _check_killed()
+            columns = [{"name": f.name, "type": _trino_type(f.dataType)} for f in df.schema]
+            rows = [[_json_cell(v) for v in row] for row in df.collect()]
+            _check_killed()
+            st = _QueryState(rec, columns, rows, spooled=spooled, encoding=encoding)
+            if spooled:
+                self._spool(st)
         except Exception as exc:
-            # setup failures (e.g. a session property Spark refuses to set)
-            # — the inner try already converts QUERY errors; this converts
-            # OVERLAY errors so the handler never crashes and the finally
-            # below still restores state and releases the admission slot.
-            st = _QueryState(qid, [], [])
-            st.error = {
-                "message": str(exc).split("\n")[0][:500],
-                "errorName": type(exc).__name__,
-            }
+            # Admission refusals, query errors and OVERLAY errors (e.g. a
+            # session property Spark refuses to set) all become a
+            # Trino-style error payload; the handler never crashes and the
+            # finally below still restores state and releases the slot.
+            st = _QueryState(rec, [], [])
+            st.error = _error(exc)
         finally:
-            # Every exit path (success, query error, OVERLAY error) must
-            # deregister the query and reset the job group — an entry left
-            # in `running` would show as permanently-running to
-            # system.runtime.queries and kill_query.
-            running.pop(qid, None)
-            killed = getattr(self.engine, "_killed_queries", None)
-            if killed is not None:
-                killed.discard(qid)
+            queries.bind(None)
+            queries.close(rec, None if st.error is None else st.error["message"])
             try:
                 sc.setLocalProperty("spark.jobGroup.id", None)
             except Exception:
