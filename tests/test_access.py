@@ -28,6 +28,19 @@ def test_grant_enforcement(engine):
         engine.sql("SELECT count(*) AS c FROM region").collect()
     with pytest.raises(AccessDenied, match="lacks SELECT"):
         engine.sql("SELECT count(*) AS c FROM nation n JOIN region r ON r.r_regionkey = n.n_regionkey").collect()
+    # comma-listed and parenthesised relations are read too
+    for sql in (
+        "SELECT count(*) AS c FROM nation, region",
+        "SELECT count(*) AS c FROM nation n, region r WHERE r.r_regionkey = n.n_regionkey",
+        "SELECT count(*) AS c FROM (region)",
+        "SELECT count(*) AS c FROM nation n LEFT JOIN (region) r ON r.r_regionkey = n.n_regionkey",
+        # FROM-first subqueries and TABLE read the table as well
+        "SELECT count(*) AS c FROM nation WHERE n_regionkey IN (FROM region SELECT r_regionkey)",
+        "SELECT count(*) AS c FROM nation WHERE EXISTS (FROM region SELECT 1)",
+        "TABLE region",
+    ):
+        with pytest.raises(AccessDenied, match="lacks SELECT on region"):
+            engine.sql(sql).collect()
     engine.sql("SET ROLE NONE")
     assert engine.sql("SELECT count(*) AS c FROM region").collect()[0].c == 5
 
@@ -227,6 +240,16 @@ class TestRowFiltersAndMasks:
         ).collect()
         assert len(rows) == 5 and {r.n_name for r in rows} == {"REDACTED"}
 
+    def test_filter_applies_to_from_first_subquery_and_table(self, eng):
+        eng.sql("GRANT SELECT ON region TO ROLE filtered")
+        eng.sql("CALL system.add_row_filter('filtered', 'region', 'r_regionkey = 0')")
+        eng.sql("SET ROLE filtered")
+        sql = "SELECT count(*) AS c FROM nation WHERE n_regionkey IN (FROM region SELECT r_regionkey)"
+        assert eng.sql(sql).collect()[0].c == 5
+        assert len(eng.sql("TABLE region").collect()) == 1
+        eng.sql("SET ROLE NONE")
+        assert eng.sql(sql).collect()[0].c == 25
+
     def test_role_cannot_define_rules(self, eng):
         eng.sql("SET ROLE filtered")
         with pytest.raises(AccessDenied, match="owner session"):
@@ -424,6 +447,13 @@ class TestDmlTargetSecurity:
         assert "(NULL)" in out and "s.secret" not in out
         out = mask_fragment(masks, "k IN (SELECT o.secret FROM other o)", target="t")
         assert "o.secret" in out  # different relation: untouched, not denied
+        # an alias bound later in a comma-listed FROM
+        out = mask_fragment(masks, "k IN (SELECT s.secret FROM other o, t s)", target="t")
+        assert "(NULL)" in out and "s.secret" not in out
+        out = mask_fragment(masks, "k IN (SELECT o.secret FROM other o, t s)", target="t")
+        assert "o.secret" in out
+        with pytest.raises(AccessDenied, match="qualifier"):
+            mask_fragment(masks, "k IN (SELECT z.secret FROM (SELECT * FROM t) z)", target="t")
 
 
 class TestTableRefRewriteScope:

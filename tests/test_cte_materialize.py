@@ -138,3 +138,20 @@ def test_concurrent_statements_do_not_drop_each_others_views(engine):
     # a later solo statement still retires the accumulated caches
     engine.sql(sql).collect()
     assert len(engine._cte_cached) == 1
+
+
+def test_materialize_decision_reads_depth0_set_operations():
+    from trino_spark.dialect.tokenizer import tokenize
+
+    def worth(body):
+        return cte_mod._worth_materializing(tokenize(body), 2)
+
+    assert worth("SELECT k FROM a INTERSECT SELECT k FROM b")
+    assert worth("(SELECT k FROM a) INTERSECT (SELECT k FROM b)")
+    assert worth("SELECT avg(v) AS av FROM a")
+    assert not worth("SELECT k, avg(v) FROM a GROUP BY k")
+    assert not worth("SELECT avg(v) FROM a UNION ALL SELECT avg(v) FROM b")
+    # a nested INTERSECT under a GROUP BY body stays inline
+    assert not worth(
+        "SELECT k, count(*) FROM a WHERE k IN (SELECT k FROM b INTERSECT SELECT k FROM c) GROUP BY k"
+    )

@@ -420,6 +420,25 @@ class TestMvFreshness:
         eng.sql("DROP MATERIALIZED VIEW mv_u")
         assert eng.sql("SHOW MATERIALIZED VIEWS").count() == 0
 
+    def test_comma_joined_sources_both_tracked(self, spark, sf_dir, tmp_path):
+        from trino_spark.catalog import TableSource
+        from trino_spark.dialect.engine import TrinoEngine
+
+        eng = TrinoEngine(spark, sf_dir)
+        dirs = {}
+        for name in ("fresh_a", "fresh_b"):
+            dirs[name] = str(tmp_path / name)
+            spark.range(4).selectExpr("id AS k").write.parquet(dirs[name])
+            eng.catalog.register(TableSource(name=name, path=dirs[name]))
+        eng.sql("CREATE MATERIALIZED VIEW mv_c AS SELECT count(*) AS c FROM fresh_a, fresh_b")
+        assert eng.sql("SHOW MATERIALIZED VIEWS").collect()[0].freshness == "FRESH"
+
+        # mutate the SECOND comma-listed source -> STALE
+        spark.range(2).selectExpr("id AS k").write.mode("overwrite").parquet(dirs["fresh_b"])
+        eng.catalog.register(TableSource(name="fresh_b", path=dirs["fresh_b"]))
+        assert eng.sql("SHOW MATERIALIZED VIEWS").collect()[0].freshness == "STALE"
+        eng.sql("DROP MATERIALIZED VIEW mv_c")
+
 
 class TestPythonUdtfPtf:
     def test_builtin_split_to_rows(self, spark, sf_dir):
@@ -915,3 +934,128 @@ def test_groups_window_frame(spark):
         " CURRENT ROW) FROM t GROUP BY k"
     )
     assert "__gr_src" not in out
+
+
+class TestStructureIndex:
+    """tokenizer.structure: query blocks, WITH definitions and relation
+    references read once from a token list."""
+
+    @staticmethod
+    def _read(sql):
+        from trino_spark.dialect.tokenizer import structure, tokenize
+
+        toks = tokenize(sql)
+        return toks, structure(toks)
+
+    @staticmethod
+    def _word(toks, word, nth=0):
+        return [i for i, t in enumerate(toks) if t.text == word][nth]
+
+    def test_nested_subquery_blocks(self):
+        toks, st = self._read(
+            "SELECT a, count(*) FROM (SELECT b AS a FROM t WHERE c IN "
+            "(SELECT d FROM u)) x GROUP BY a HAVING count(*) > 1 ORDER BY a"
+        )
+        outer, mid, inner = st.blocks
+        assert outer.close == len(toks)
+        assert toks[outer.from_].text == "FROM" and outer.from_ < mid.select
+        assert (toks[outer.group].text, toks[outer.having].text) == ("GROUP", "HAVING")
+        assert toks[outer.end].text == "ORDER" and outer.tail_end == len(toks)
+        assert mid.group == inner.group == -1
+        assert toks[mid.close].text == ")" and mid.close > inner.close
+        assert toks[mid.end].text == ")" and mid.end == mid.close
+        assert st.block_of(self._word(toks, "d")) is inner
+        assert st.block_of(self._word(toks, "c")) is mid
+        assert st.block_of(self._word(toks, "x")) is outer
+        assert not outer.distinct and self._read("SELECT DISTINCT a FROM t")[1].blocks[0].distinct
+
+    def test_union_sibling_outside_tail(self):
+        toks, st = self._read(
+            "SELECT upper(k) FROM t GROUP BY upper(k) UNION ALL "
+            "SELECT upper(k) FROM u GROUP BY upper(k) ORDER BY 1"
+        )
+        first, second = st.blocks
+        union = self._word(toks, "UNION")
+        assert first.end == first.tail_end == union
+        assert toks[second.end].text == "ORDER" and second.tail_end == len(toks)
+        toks, st = self._read("(SELECT k FROM t ORDER BY k LIMIT 3) EXCEPT SELECT k FROM u")
+        first, second = st.blocks
+        assert toks[first.end].text == "ORDER" and toks[first.tail_end].text == ")"
+        assert st.block_of(self._word(toks, "u")) is second
+
+    def test_with_bodies_and_shadowing(self):
+        toks, st = self._read(
+            "WITH nation AS (SELECT * FROM nation), r (n) AS (SELECT n_name FROM nation) "
+            "SELECT * FROM nation, tpch.sf1.nation, r"
+        )
+        assert [w.name for w in st.withs] == ["nation", "r"]
+        body = st.withs[0].body
+        assert toks[body[0]].text == "SELECT" and toks[body[1]].text == ")"
+        # the CTE's own body still reads the real table; later uses are the CTE
+        assert [(r.name, r.shadowed) for r in st.relations] == [
+            ("nation", False), ("nation", True), ("nation", True),
+            ("nation", False),  # qualified: always the table
+            ("r", True),
+        ]
+        # a WITH inside a subquery is out of scope after its group closes
+        _, st = self._read(
+            "SELECT * FROM (WITH region AS (SELECT 1 AS x) SELECT * FROM region) q, region"
+        )
+        assert [(r.name, r.shadowed) for r in st.relations] == [("region", True), ("region", False)]
+        # WITH TIES / WITH ORDINALITY are not WITH clauses
+        assert self._read("SELECT * FROM t ORDER BY k FETCH FIRST 1 ROWS WITH TIES")[1].withs == []
+
+    def test_relation_positions(self):
+        _, st = self._read(
+            "SELECT * FROM a JOIN b USING (k) CROSS JOIN UNNEST(b.arr) AS u(x), "
+            "LATERAL (SELECT * FROM c) l, d WHERE extract(year FROM e) = 1 "
+            "AND a.x IS DISTINCT FROM f"
+        )
+        assert [(r.name, r.kw) for r in st.relations] == [
+            ("a", "FROM"), ("b", "JOIN"), ("c", "FROM"), ("d", "FROM"),
+        ]
+        # a FROM list goes on after a join condition or a sample clause
+        _, st = self._read("SELECT * FROM a JOIN b ON a.k = b.k, c TABLESAMPLE BERNOULLI (10), d")
+        assert [r.name for r in st.relations] == ["a", "b", "c", "d"]
+        _, st = self._read(
+            "SELECT * FROM nation n, region r, (supplier) s LEFT JOIN (customer) AS c ON 1 = 1"
+        )
+        assert [(r.name, r.alias) for r in st.relations] == [
+            ("nation", "n"), ("region", "r"), ("supplier", "s"), ("customer", "c"),
+        ]
+        _, st = self._read("MERGE INTO t USING src s ON t.k = s.k WHEN MATCHED THEN UPDATE SET v = 1")
+        assert [(r.name, r.kw, r.read) for r in st.relations] == [
+            ("t", "INTO", False), ("src", "USING", True),
+        ]
+        _, st = self._read("SELECT * FROM TABLE(split_rows(TABLE(nation)))")
+        assert [(r.name, r.read) for r in st.relations] == [("nation", True)]
+        # FROM-first queries are read at any depth, their select lists are not
+        _, st = self._read(
+            "SELECT * FROM a WHERE k IN (FROM b SELECT k, v) "
+            "AND EXISTS (WITH w AS (SELECT 1) FROM c SELECT 1, c.x)"
+        )
+        assert [(r.name, r.read) for r in st.relations] == [("a", True), ("b", True), ("c", True)]
+        # TABLE t reads t; a DDL statement's TABLE names its target
+        for sql, read in (
+            ("TABLE t", True),
+            ("CREATE TABLE IF NOT EXISTS t (a int)", False),
+            ("TRUNCATE TABLE t", False),
+            ("COMMENT ON TABLE t IS 'x'", False),
+        ):
+            rel, = self._read(sql)[1].relations
+            assert (rel.name, rel.alias, rel.read) == ("t", None, read), sql
+
+    def test_qualified_and_quoted_names(self):
+        toks, st = self._read('SELECT * FROM cat.sch.orders o JOIN "Line Items" AS "LI" ON o.k = "LI".k')
+        o, li = st.relations
+        assert (o.name, o.alias, o.shadowed) == ("orders", "o", False)
+        assert "".join(t.text for t in toks[o.start : o.end]) == "cat.sch.orders"
+        assert (li.name, li.alias) == ("line items", "li")
+
+    def test_keywords_in_literals_and_comments(self):
+        _, st = self._read(
+            "SELECT 'x FROM region' AS s /* JOIN nation */ FROM orders -- FROM lineitem\n"
+            "WHERE c = 'JOIN supplier' AND d <> 'SELECT 1 UNION SELECT 2'"
+        )
+        assert [r.name for r in st.relations] == ["orders"]
+        assert len(st.blocks) == 1 and st.blocks[0].tail_end == st.blocks[0].close

@@ -32,6 +32,8 @@ import time
 
 from pyspark.sql import DataFrame
 
+from trino_spark.dialect.tokenizer import Tok, render, structure, tokenize
+
 _PRIVS = ("SELECT", "INSERT", "UPDATE", "DELETE")
 
 # How often a killed query's job group is cancelled again while its
@@ -273,10 +275,6 @@ def _grant_revoke(engine, s: str, revoke: bool) -> DataFrame:
     return engine.spark.createDataFrame([(role, table)], "role: string, table_name: string")
 
 
-_REL_RX = re.compile(r"\b(?:FROM|JOIN)\s+([A-Za-z_][\w.]*)", re.IGNORECASE)
-_KEYWORD_RELS = {"unnest", "json_table", "lateral", "values", "table"}
-
-
 def enforce(engine, sql: str) -> None:
     """Raise AccessDenied when the active role lacks a needed privilege.
     Owner sessions (no SET ROLE) bypass — the allow-all default.
@@ -286,8 +284,10 @@ def enforce(engine, sql: str) -> None:
     INSERT/DELETE/UPDATE → their own privilege on the target; MERGE →
     UPDATE+INSERT+DELETE on the target and SELECT on a named USING table;
     TRUNCATE → DELETE; ALTER/DROP/CREATE TABLE [AS] → ownership, proxied
-    as ALL four privileges on the name; every referenced relation →
-    SELECT."""
+    as ALL four privileges on the name; every relation the statement
+    reads (FROM lists at any depth, joins, parenthesised relations,
+    `TABLE t`) → SELECT. A DML/DDL statement's target is its first
+    relation reference (tokenizer.structure)."""
     st = _state(engine)
     role = st["current"]
     if role is None:
@@ -296,45 +296,31 @@ def enforce(engine, sql: str) -> None:
     grants = set().union(*(st["roles"].get(r, set()) for r in eff))
     s = sql.strip()
     up = s.upper().split()
-    toks = s.split()
+    refs = structure(tokenize(s)).relations
+    tgt = refs[0].name if refs else ""
     needed: list[tuple[str, str]] = []
     skip_select: set[str] = set()
-
-    def _name(raw: str) -> str:
-        return raw.strip('"').split(".")[-1].lower().strip("()")
-
     if up[:2] == ["INSERT", "INTO"]:
-        needed.append(("INSERT", toks[2]))
+        needed.append(("INSERT", tgt))
     elif up[:2] == ["DELETE", "FROM"]:
-        needed.append(("DELETE", toks[2]))
-        skip_select.add(_name(toks[2]))
+        needed.append(("DELETE", tgt))
+        skip_select.add(tgt)
     elif up[:1] == ["UPDATE"]:
-        needed.append(("UPDATE", toks[1]))
+        needed.append(("UPDATE", tgt))
     elif up[:2] == ["MERGE", "INTO"]:
-        tgt = toks[2]
         needed += [("UPDATE", tgt), ("INSERT", tgt), ("DELETE", tgt)]
-        skip_select.add(_name(tgt))
-        um = re.search(r"\bUSING\s+([A-Za-z_][\w.]*)", s, re.IGNORECASE)
-        if um:
-            needed.append(("SELECT", um.group(1)))
+        skip_select.add(tgt)
     elif up[:2] == ["TRUNCATE", "TABLE"]:
-        needed.append(("DELETE", toks[2]))
-    elif up[:2] in (["ALTER", "TABLE"], ["DROP", "TABLE"]) or (
-        up[:2] == ["CREATE", "TABLE"]
-    ):
-        idx = 2
-        if up[2:5] == ["IF", "NOT", "EXISTS"] or up[2:4] == ["IF", "EXISTS"]:
-            idx = 5 if up[3] == "NOT" else 4
-        tgt = toks[idx] if len(toks) > idx else ""
+        needed.append(("DELETE", tgt))
+    elif up[:2] in (["ALTER", "TABLE"], ["DROP", "TABLE"], ["CREATE", "TABLE"]):
         # Ownership proxy: the role must hold every privilege on the name.
         # A CTAS target does not exist yet, so the not-a-relation skip
         # below must not exempt it.
         for p in _PRIVS:
-            needed.append((p, f"!{tgt}" if up[:2] == ["CREATE", "TABLE"] else tgt))
-        skip_select.add(_name(tgt))
-    for m in _REL_RX.finditer(s):
-        name = m.group(1).split(".")[-1].lower()
-        if name in _KEYWORD_RELS or name.startswith("__"):
+            needed.append((p, f"!{tgt}" if up[0] == "CREATE" else tgt))
+    for ref in refs:
+        name = ref.name
+        if not ref.read or ref.shadowed or name.startswith("__"):
             continue
         # Time-travel / metadata temp views substituted BEFORE enforcement
         # (dml.resolve_time_travel turns `t FOR VERSION AS OF 1` into
@@ -353,7 +339,7 @@ def enforce(engine, sql: str) -> None:
         needed.append(("SELECT", name))
     for priv, tbl in needed:
         must_check = tbl.startswith("!")
-        tbl = _name(tbl.lstrip("!"))
+        tbl = tbl.lstrip("!")
         if not tbl:
             continue
         if (
@@ -460,104 +446,19 @@ def apply_security(engine, sql: str) -> str:
     return rewrite_table_refs(sql, secured)
 
 
-_REL_TRIGGERS = {"FROM", "JOIN", "INTO", "UPDATE", "TABLE", "USING"}
-_REL_CLAUSE_END = {
-    "WHERE", "GROUP", "ORDER", "HAVING", "LIMIT", "OFFSET", "WINDOW",
-    "UNION", "INTERSECT", "EXCEPT", "ON", "SET", "WHEN", "FETCH",
-    "QUALIFY", "SELECT", "LATERAL", "UNNEST", "TABLESAMPLE",
-}
-
-
 def rewrite_table_refs(sql: str, mapping: dict[str, str]) -> str:
     """Replace table names with secured-view names ONLY in relation
-    positions — after FROM / JOIN / INTO / UPDATE / TABLE / USING and after
-    a comma inside an open FROM list — so columns, AS-aliases, and CTE
+    positions (tokenizer.structure), so columns, AS-aliases, and CTE
     names that happen to share a secured table's name keep their own
-    bindings (a bare word-boundary regex rewrote those too). CTE names
-    declared in the statement shadow same-named tables, as in the
-    reference's analyzer."""
-    from trino_spark.dialect.tokenizer import tokenize
-
+    bindings. A WITH name shadows a same-named table where it is in
+    scope, as in the reference's analyzer; inside its own body a
+    non-recursive CTE's name still binds the real table, which therefore
+    stays secured."""
     toks = tokenize(sql)
-    sig = [(i, t) for i, t in enumerate(toks) if t.kind != "WS"]
-
-    # CTE / inline-view names: `ident AS (` — these shadow secured tables,
-    # but only AFTER their defining body closes (inside its own body a
-    # non-recursive CTE's name still binds to the real table, which must
-    # therefore still be secured). Map name -> token index of the body's
-    # closing paren.
-    shadowed: dict[str, int] = {}
-    for k in range(len(sig) - 2):
-        a, b, c = sig[k][1], sig[k + 1][1], sig[k + 2][1]
-        if a.kind in ("WORD", "QIDENT") and b.is_word("AS") and c.is_sym("("):
-            open_idx = sig[k + 2][0]
-            d = 0
-            close_idx = len(toks) - 1
-            for j in range(open_idx, len(toks)):
-                if toks[j].is_sym("("):
-                    d += 1
-                elif toks[j].is_sym(")"):
-                    d -= 1
-                    if d == 0:
-                        close_idx = j
-                        break
-            shadowed[a.text.strip('"').lower()] = close_idx
-
-    out: list[str] = []
-    depth = 0
-    expecting = False
-    expect_kw = ""  # which keyword armed `expecting`
-    from_depths: set[int] = set()
-    i = 0
-    while i < len(toks):
-        t = toks[i]
-        if t.kind == "SYM":
-            if t.text == "(":
-                # `USING (a, b)` is a join column list, never a relation;
-                # `FROM (`/`JOIN (` opens a derived table or join tree —
-                # stay armed so `FROM (t1 JOIN t2 …)` still secures t1.
-                if expecting and expect_kw == "USING":
-                    expecting = False
-                depth += 1
-            elif t.text == ")":
-                from_depths.discard(depth)
-                depth -= 1
-            elif t.text == ",":
-                if depth in from_depths:
-                    expecting, expect_kw = True, "FROM"
-        elif t.kind in ("WORD", "QIDENT"):
-            up = t.text.upper() if t.kind == "WORD" else ""
-            if up in _REL_TRIGGERS:
-                expecting, expect_kw = True, up
-                if up == "FROM":
-                    from_depths.add(depth)
-            elif up in _REL_CLAUSE_END:
-                if up != "SELECT":  # SELECT after FROM( starts a subquery
-                    from_depths.discard(depth)
-                expecting = False
-            elif expecting:
-                # Identifier chain word(.word)* — map on its LAST part so
-                # qualified refs (schema.tbl) collapse to the secured view.
-                j = i
-                last = t
-                while (
-                    j + 2 < len(toks)
-                    and toks[j + 1].is_sym(".")
-                    and toks[j + 2].kind in ("WORD", "QIDENT")
-                ):
-                    j += 2
-                    last = toks[j]
-                key = last.text.strip('"').lower()
-                qualified = j > i
-                expecting = False
-                in_shadow = key in shadowed and i > shadowed[key]
-                if key in mapping and (qualified or not in_shadow):
-                    out.append(mapping[key])
-                    i = j + 1
-                    continue
-        out.append(t.text)
-        i += 1
-    return "".join(out)
+    for ref in reversed(structure(toks).relations):
+        if ref.name in mapping and not ref.shadowed:
+            toks[ref.start : ref.end] = [Tok("WORD", mapping[ref.name])]
+    return render(toks)
 
 
 def dml_target_security(engine, table: str) -> tuple[str | None, dict[str, str]]:
@@ -598,30 +499,15 @@ def mask_fragment(masks: dict[str, str], fragment: str, target: str | None = Non
     if not masks:
         return fragment
     tnames = {target.split(".")[-1].lower()} if target else set()
-    # aliases the fragment binds to ANY relation: FROM/JOIN
-    # [schema.]<name> [AS] <alias>, in bare, qualified (`sch.t s`) and
-    # quoted (`"t" s`) spellings. Aliases of the protected table join
-    # `tnames` (their columns are masked); aliases provably bound to a
-    # DIFFERENT relation are recorded so `o.secret` over `FROM other o`
-    # is NOT denied — only an alias we cannot bind at all fails closed.
-    _KW = {"where", "group", "order", "having", "limit", "join", "inner",
-           "left", "right", "full", "cross", "on", "as", "union", "select",
-           "using", "lateral", "natural", "intersect", "except"}
+    # aliases the fragment binds to ANY relation. Aliases of the
+    # protected table join `tnames` (their columns are masked); aliases
+    # provably bound to a DIFFERENT relation are recorded so `o.secret`
+    # over `FROM other o` is NOT denied — only an alias we cannot bind at
+    # all fails closed.
     other_aliases: set[str] = set()
-    for m in re.finditer(
-        r"\b(?:from|join)\s+((?:[\w$]+|\"[^\"]+\")"
-        r"(?:\s*\.\s*(?:[\w$]+|\"[^\"]+\"))*)\s+(?:as\s+)?(\w+)",
-        fragment,
-        re.IGNORECASE,
-    ):
-        rel = m.group(1).split(".")[-1].strip().strip('"').lower()
-        alias = m.group(2).lower()
-        if alias in _KW:
-            continue
-        if rel in tnames:
-            tnames.add(alias)
-        else:
-            other_aliases.add(alias)
+    for ref in structure(tokenize(fragment)).relations:
+        if ref.alias is not None:
+            (tnames if ref.name in tnames else other_aliases).add(ref.alias)
     # an alias bound to BOTH (self-join spelling ambiguity) masks
     other_aliases -= tnames
 

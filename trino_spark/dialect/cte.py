@@ -35,7 +35,7 @@ from __future__ import annotations
 
 import uuid
 
-from trino_spark.dialect.tokenizer import Tok, tokenize
+from trino_spark.dialect.tokenizer import Tok, next_code, structure, tokenize
 
 # Functions whose per-call results differ between executions: a body
 # containing any of these must not be evaluated once-and-reused unless
@@ -53,66 +53,14 @@ _NONDETERMINISTIC = {
 
 
 def _parse_with(toks: list[Tok]):
-    """Parse a leading top-level WITH list. Returns (ctes, main_start)
-    where ctes = [(name, name_idx, body_start, body_end)] token-index
-    spans of each body's interior, or None if not a plain WITH query.
-    """
-    i, n = 0, len(toks)
-
-    def skip_ws(j: int) -> int:
-        while j < n and toks[j].kind == "WS":
-            j += 1
-        return j
-
-    i = skip_ws(i)
-    if i >= n or not toks[i].is_word("WITH"):
-        return None
-    i = skip_ws(i + 1)
-    if i < n and toks[i].is_word("RECURSIVE"):
-        return None  # handled by the recursion rewriter, never here
-    ctes = []
-    while True:
-        i = skip_ws(i)
-        if i >= n or toks[i].kind not in ("WORD", "QIDENT"):
-            return None
-        name_idx = i
-        name = toks[i].text.strip('"')
-        i = skip_ws(i + 1)
-        if i < n and toks[i].is_sym("("):  # optional column alias list
-            depth = 0
-            while i < n:
-                if toks[i].is_sym("("):
-                    depth += 1
-                elif toks[i].is_sym(")"):
-                    depth -= 1
-                    if depth == 0:
-                        break
-                i += 1
-            i = skip_ws(i + 1)
-        if i >= n or not toks[i].is_word("AS"):
-            return None
-        i = skip_ws(i + 1)
-        if i >= n or not toks[i].is_sym("("):
-            return None
-        body_start = i + 1
-        depth = 0
-        while i < n:
-            if toks[i].is_sym("("):
-                depth += 1
-            elif toks[i].is_sym(")"):
-                depth -= 1
-                if depth == 0:
-                    break
-            i += 1
-        if i >= n:
-            return None
-        body_end = i  # exclusive: toks[body_start:body_end] is the interior
-        ctes.append((name, name_idx, body_start, body_end))
-        i = skip_ws(i + 1)
-        if i < n and toks[i].is_sym(","):
-            i += 1
-            continue
-        return ctes, i
+    """The leading top-level WITH list: (defs, main_start) with defs the
+    clause's tokenizer.WithDef entries, or None if the statement is not a
+    plain (non-RECURSIVE) WITH query."""
+    first = next_code(toks, 0)
+    defs = [d for d in structure(toks).withs if d.clause == first]
+    if not defs or defs[0].recursive:
+        return None  # RECURSIVE is handled by the recursion rewriter
+    return defs, next_code(toks, defs[-1].body[1] + 1)
 
 
 def _text(toks: list[Tok], a: int, b: int) -> str:
@@ -140,45 +88,32 @@ def _worth_materializing(body_toks: list[Tok], refs: int) -> bool:
     the same adaptive call in its CTE-materialization strategy."""
     if refs < 2:
         return False
-    has_from = False
-    has_intersect = False
-    depth0_agg = False
-    depth0_group = False
-    depth0_union = False
-    depth = 0
-    for i, t in enumerate(body_toks):
-        if t.is_sym("("):
-            depth += 1
-        elif t.is_sym(")"):
-            depth -= 1
-        elif t.kind == "WORD":
-            u = t.text.upper()
-            if u in _NONDETERMINISTIC:
-                return False
-            if u == "FROM":
-                has_from = True
-            elif u == "INTERSECT" and depth == 0:
-                # depth-0 only: a GROUP-BY body with a nested INTERSECT
-                # subquery must stay inline (reference-site predicates
-                # prune through the inlined plan).
-                has_intersect = True
-            elif depth == 0:
-                if u in _AGG_WORDS:
-                    # only a call: next non-WS token must be '('
-                    for t2 in body_toks[i + 1 :]:
-                        if t2.kind == "WS":
-                            continue
-                        if t2.is_sym("("):
-                            depth0_agg = True
-                        break
-                elif u == "GROUP":
-                    depth0_group = True
-                elif u in ("UNION", "EXCEPT"):
-                    depth0_union = True
-    if not has_from:
+    if any(t.kind == "WORD" and t.text.upper() in _NONDETERMINISTIC for t in body_toks):
         return False
-    global_agg = depth0_agg and not depth0_group and not depth0_union
-    return global_agg or has_intersect
+    st = structure(body_toks)
+    if not any(b.from_ >= 0 for b in st.blocks):
+        return False
+    set_ops = {
+        t.text.upper()
+        for i, t in enumerate(body_toks)
+        if st.depth[i] == 0 and t.is_word("UNION", "INTERSECT", "EXCEPT")
+    }
+    # a depth-0 INTERSECT only, between plain or parenthesised operands: a
+    # GROUP-BY body with a nested INTERSECT subquery stays inline
+    # (reference-site predicates prune through the inlined plan).
+    if "INTERSECT" in set_ops:
+        return True
+    top = [b for b in st.blocks if st.depth[b.select] == 0]
+    if len(top) != 1 or top[0].group >= 0 or set_ops:
+        return False
+    # a global aggregate: an aggregate call in the block's select list
+    b = top[0]
+    return any(
+        st.depth[i] == 0
+        and body_toks[i].is_word(*_AGG_WORDS)
+        and body_toks[next_code(body_toks, i + 1)].is_sym("(")
+        for i in range(b.select + 1, b.from_)
+    )
 
 
 def retire(engine) -> None:
@@ -237,7 +172,8 @@ def materialize_reused(engine, spark_sql: str):
     n = len(toks)
     final_bodies: dict[int, str] = {}
     materialized: list[tuple[str, str]] = []  # (name, view) in order
-    for ci, (name, name_idx, b0, b1) in enumerate(ctes):
+    for ci, d in enumerate(ctes):
+        name, (b0, b1) = d.name, d.body
         refs = 0
         for t in toks[b1 + 1 : n]:
             if (t.kind == "WORD" and t.text.upper() == name.upper()) or (
@@ -249,10 +185,9 @@ def materialize_reused(engine, spark_sql: str):
             continue
         body_sql = _text(toks, b0, b1)
         prior = []
-        for cj in range(ci):
-            pname, _, pb0, pb1 = ctes[cj]
-            pbody = final_bodies.get(cj, _text(toks, pb0, pb1))
-            prior.append(f"{pname} AS ({pbody})")
+        for cj, p in enumerate(ctes[:ci]):
+            pbody = final_bodies.get(cj, _text(toks, *p.body))
+            prior.append(f"{p.name} AS ({pbody})")
         exec_sql = (f"WITH {', '.join(prior)} " if prior else "") + body_sql
         try:
             df = engine.spark.sql(exec_sql)
@@ -276,11 +211,12 @@ def materialize_reused(engine, spark_sql: str):
     if not materialized:
         return spark_sql
     parts = ["WITH "]
-    for ci, (name, name_idx, b0, b1) in enumerate(ctes):
+    for ci, d in enumerate(ctes):
+        b0, b1 = d.body
         if ci:
             parts.append(", ")
         # preserve any column alias list between name and AS
-        parts.append(_text(toks, name_idx, b0 - 1).rstrip())
+        parts.append(_text(toks, d.name_idx, b0 - 1).rstrip())
         parts.append("(" if parts[-1].endswith("AS") else " (")
         parts.append(final_bodies.get(ci, _text(toks, b0, b1)))
         parts.append(")")

@@ -1067,16 +1067,19 @@ class TrinoEngine:
 
     def _mv_source_fingerprints(self, defn: str) -> dict[str, str | None]:
         """table -> fingerprint for every relation the defining SQL
-        references (FROM/JOIN identifier scan). None = a source whose
-        snapshot we cannot observe (jdbc, temp views) -> freshness
-        UNKNOWN rather than a false FRESH."""
+        reads (tokenizer.structure). None = a source whose snapshot we
+        cannot observe (jdbc, temp views) -> freshness UNKNOWN rather
+        than a false FRESH."""
         import os
-        import re
+
+        from trino_spark.dialect.tokenizer import structure, tokenize
 
         repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
         out: dict[str, str | None] = {}
-        for m in re.finditer(r"\b(?:FROM|JOIN)\s+([A-Za-z_][\w.]*)", defn, re.IGNORECASE):
-            name = m.group(1).split(".")[-1].lower()
+        for ref in structure(tokenize(defn)).relations:
+            if not ref.read or ref.shadowed:
+                continue
+            name = ref.name
             src = self.catalog._sources.get(name)
             if src is not None and src.format != "jdbc" and src.path:
                 out[name] = self._fs_fingerprint(src.path)

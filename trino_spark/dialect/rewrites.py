@@ -19,6 +19,7 @@ from trino_spark.dialect.tokenizer import (
     prev_code,
     render,
     split_args,
+    structure,
     tokenize,
 )
 from trino_spark.functions.datetimes import mysql_to_java
@@ -1656,14 +1657,24 @@ def _rewrite_spatial_sample(toks: list[Tok]) -> list[Tok]:
     bottom-k-by-uniform-hash sample IS a uniform reservoir sample.
     Applies only to blocks with a FROM, no GROUP BY/HAVING, and no other
     aggregate in the select list; anything else keeps the direct form."""
+    return _rewrite_each(toks, _spatial_sample_once)
+
+
+def _rewrite_each(
+    toks: list[Tok],
+    once: Callable[[list[Tok], int], "tuple[list[Tok], bool] | None"],
+) -> list[Tok]:
+    """Drive a pass that rewrites one call per step: `once(toks, skip)`
+    rewrites the first candidate after `skip` ones it left alone and
+    returns (toks, left_alone), or None when no candidate remains.
+    Statements hold at most a handful of such calls."""
     skip = 0
-    for _ in range(16):  # statements hold at most a handful of calls
-        res = _spatial_sample_once(toks, skip)
+    for _ in range(16):
+        res = once(toks, skip)
         if res is None:
             return toks
-        toks, aborted = res
-        if aborted:
-            skip += 1
+        toks, left_alone = res
+        skip += left_alone
     return toks
 
 
@@ -1695,50 +1706,10 @@ def _spatial_sample_once(
         return None
     f, op, cl, first = chosen
 
-    # enclosing SELECT: walk backward, clamped depth
-    depth = 0
-    sel = -1
-    for i in range(f - 1, -1, -1):
-        t = toks[i]
-        if t.is_sym(")"):
-            depth += 1
-        elif t.is_sym("("):
-            depth = max(0, depth - 1)
-        elif depth == 0 and t.is_word("SELECT"):
-            sel = i
-            break
-    if sel < 0:
+    blk = structure(toks).block_of(f)
+    if blk is None or blk.from_ < 0 or blk.group >= 0 or blk.having >= 0:
         return toks, True
-
-    # forward walk from the SELECT: locate FROM and the block boundary
-    depth = 0
-    from_idx = -1
-    boundary = n
-    blocked = False
-    for i in range(sel + 1, n):
-        t = toks[i]
-        if t.is_sym("("):
-            depth += 1
-        elif t.is_sym(")"):
-            if depth == 0:
-                boundary = i
-                break
-            depth -= 1
-        elif depth == 0:
-            if t.is_word("FROM") and from_idx < 0:
-                from_idx = i
-            elif t.is_word("GROUP", "HAVING") and from_idx >= 0:
-                blocked = True
-                boundary = i
-                break
-            elif t.is_word(
-                "ORDER", "LIMIT", "UNION", "INTERSECT", "EXCEPT",
-                "WINDOW", "FETCH", "OFFSET",
-            ) and from_idx >= 0:
-                boundary = i
-                break
-    if blocked or from_idx < 0:
-        return toks, True
+    sel, from_idx, boundary = blk.select, blk.from_, blk.end
     # any call that is not ours / a known scalar -> leave the block
     if not _select_list_calls_ok(toks, sel, from_idx, set(_SPATIAL_AGG_NAMES)):
         return toks, True
@@ -1854,96 +1825,36 @@ def _rewrite_sketch_twophase(toks: list[Tok]) -> list[Tok]:
     grouping sets, ordinal group keys, window OVER uses, or other
     aggregates keep the direct form (pandas GROUPED_AGG cannot mix with
     plain aggregates in one SELECT anyway)."""
-    skip = 0
-    for _ in range(16):
-        res = _sketch_twophase_once(toks, skip)
-        if res is None:
-            return toks
-        toks, aborted = res
-        if aborted:
-            skip += 1
-    return toks
+    return _rewrite_each(toks, _sketch_twophase_once)
 
 
 def _sketch_twophase_once(
     toks: list[Tok], skip: int
 ) -> "tuple[list[Tok], bool] | None":
     n = len(toks)
-
-    def _block_of(f: int):
-        """(sel, from_idx, group_idx, boundary, blocked) for the SELECT
-        block enclosing token f."""
-        depth = 0
-        sel = -1
-        for i in range(f - 1, -1, -1):
-            t = toks[i]
-            if t.is_sym(")"):
-                depth += 1
-            elif t.is_sym("("):
-                depth = max(0, depth - 1)
-            elif depth == 0 and t.is_word("SELECT"):
-                sel = i
-                break
-        if sel < 0:
-            return None
-        depth = 0
-        from_idx = group_idx = -1
-        boundary = n
-        blocked = False
-        for i in range(sel + 1, n):
-            t = toks[i]
-            if t.is_sym("("):
-                depth += 1
-            elif t.is_sym(")"):
-                if depth == 0:
-                    boundary = i
-                    break
-                depth -= 1
-            elif depth == 0:
-                if t.is_word("DISTINCT") and from_idx < 0:
-                    blocked = True
-                elif t.is_word("FROM") and from_idx < 0:
-                    from_idx = i
-                elif from_idx >= 0 and t.is_word("GROUP") and group_idx < 0:
-                    group_idx = i
-                elif from_idx >= 0 and t.is_word("HAVING"):
-                    blocked = True
-                    boundary = i
-                    break
-                elif from_idx >= 0 and t.is_word(
-                    "ORDER", "LIMIT", "UNION", "INTERSECT", "EXCEPT",
-                    "WINDOW", "FETCH", "OFFSET",
-                ):
-                    boundary = i
-                    break
-        return sel, from_idx, group_idx, boundary, blocked
-
+    st = None
     seen = 0
-    chosen = None
     for f in range(n):
         if not toks[f].is_word(*_SKETCH_AGGS):
             continue
         op = next_code(toks, f + 1)
         if op >= n or not toks[op].is_sym("("):
             continue
-        blk = _block_of(f)
-        if blk is not None and not blk[4]:
-            sel, from_idx, group_idx, boundary, _ = blk
-            if group_idx >= 0 and "__sk_salt" in render(
-                toks[group_idx:boundary]
-            ):
-                continue  # the inner partial of an already-done rewrite
+        st = st or structure(toks)
+        blk = st.block_of(f)
+        if blk is not None and blk.group >= 0 and "__sk_salt" in render(
+            toks[blk.group : blk.end]
+        ):
+            continue  # the inner partial of an already-done rewrite
         if seen < skip:
             seen += 1
             continue
-        chosen = (f, blk)
         break
-    if chosen is None:
+    else:
         return None
-    f, blk = chosen
-    if blk is None or blk[4] or blk[1] < 0:
+    if blk is None or blk.from_ < 0 or blk.distinct or blk.having >= 0:
         return toks, True
-    sel, from_idx, group_idx, boundary, _ = blk
+    sel, from_idx, group_idx, boundary = blk.select, blk.from_, blk.group, blk.end
 
     # any call that is not a sketch agg / known scalar -> leave the block
     if not _select_list_calls_ok(toks, sel, from_idx, set(_SKETCH_AGGS)):
@@ -1955,24 +1866,10 @@ def _sketch_twophase_once(
         by = next_code(toks, group_idx + 1)
         if by >= n or not toks[by].is_word("BY"):
             return toks, True
-        gtext = render(toks[by + 1 : boundary])
-        if re.search(r"\b(ROLLUP|CUBE|GROUPING)\b", gtext, re.IGNORECASE):
+        if any(t.is_word("ROLLUP", "CUBE", "GROUPING") for t in toks[by + 1 : boundary]):
             return toks, True
-        depth = 0
-        start = ""
-        parts: list[str] = []
-        for ch in gtext:
-            if ch in "([":
-                depth += 1
-            elif ch in ")]":
-                depth -= 1
-            if ch == "," and depth == 0:
-                parts.append(start)
-                start = ""
-            else:
-                start += ch
-        parts.append(start)
-        gkeys = [p.strip() for p in parts if p.strip()]
+        gkeys = [render(toks[a:b]).strip() for a, b in split_args(toks, by, boundary)]
+        gkeys = [g for g in gkeys if g]
         if any(re.fullmatch(r"\d+", g) for g in gkeys):
             return toks, True  # ordinal keys
 
@@ -2031,26 +1928,9 @@ def _sketch_twophase_once(
             sel_list = _bound_sub(sel_list, g, galias[g])
 
     # the block's own ORDER BY / LIMIT tail may reference group keys the
-    # outer query no longer exposes under their original spelling. The
-    # tail STOPS at a depth-0 set operation: a UNION/INTERSECT/EXCEPT
-    # sibling branch is a different scope whose identical-looking group
-    # keys must NOT be rewritten to this block's synthetic aliases.
-    block_end = boundary
-    depth = 0
-    for i in range(boundary, n):
-        t = toks[i]
-        if t.is_sym("("):
-            depth += 1
-        elif t.is_sym(")"):
-            if depth == 0:
-                block_end = i
-                break
-            depth -= 1
-        elif depth == 0 and t.is_word("UNION", "INTERSECT", "EXCEPT"):
-            block_end = i
-            break
-    else:
-        block_end = n
+    # outer query no longer exposes under their original spelling (a
+    # set-operation sibling is a different scope, outside the tail)
+    block_end = blk.tail_end
     tail = render(toks[boundary:block_end])
     for g in sorted(gkeys, key=len, reverse=True):
         if galias[g] != g:
@@ -2099,16 +1979,14 @@ def _rewrite_groups_frame(toks: list[Tok]) -> list[Tok]:
     Same enclosing-block machinery as the spatial/sketch passes; blocks
     with GROUP BY keep the direct form (the wrap would change the rows
     the rank sees)."""
-    for _ in range(8):
-        res = _groups_frame_once(toks)
-        if res is None:
-            return toks
-        toks = res
-    return toks
+    return _rewrite_each(toks, _groups_frame_once)
 
 
-def _groups_frame_once(toks: list[Tok]) -> "list[Tok] | None":
+def _groups_frame_once(
+    toks: list[Tok], skip: int
+) -> "tuple[list[Tok], bool] | None":
     n = len(toks)
+    seen = 0
     # find an OVER ( ... GROUPS BETWEEN ... ) spec
     for f in range(n):
         if not toks[f].is_word("OVER"):
@@ -2121,6 +1999,9 @@ def _groups_frame_once(toks: list[Tok]) -> "list[Tok] | None":
         fm = _GROUPS_FRAME_RX.search(spec)
         if not fm:
             continue
+        if seen < skip:
+            seen += 1
+            continue
         pm = re.search(
             r"\bPARTITION\s+BY\s+(.*?)(?=\bORDER\s+BY\b|\bGROUPS\b|$)",
             spec,
@@ -2130,51 +2011,18 @@ def _groups_frame_once(toks: list[Tok]) -> "list[Tok] | None":
             r"\bORDER\s+BY\s+(.*?)(?=\bGROUPS\b|$)", spec, re.IGNORECASE | re.DOTALL
         )
         if not om:
-            return None  # GROUPS without ORDER BY: invalid, leave to Spark
+            return toks, True  # GROUPS without ORDER BY: invalid, leave to Spark
         part_txt = pm.group(1).strip() if pm else ""
         order_txt = om.group(1).strip().rstrip(",")
         if re.search(r"\bDESC\b", order_txt, re.IGNORECASE):
-            return None  # rank direction flip not supported — leave as-is
+            return toks, True  # rank direction flip not supported — leave as-is
 
-        # enclosing SELECT block (same walk as the sibling passes)
-        depth = 0
-        sel = -1
-        for i in range(f - 1, -1, -1):
-            t = toks[i]
-            if t.is_sym(")"):
-                depth += 1
-            elif t.is_sym("("):
-                depth = max(0, depth - 1)
-            elif depth == 0 and t.is_word("SELECT"):
-                sel = i
-                break
-        if sel < 0:
-            return None
-        depth = 0
-        from_idx = -1
-        boundary = n
-        for i in range(sel + 1, n):
-            t = toks[i]
-            if t.is_sym("("):
-                depth += 1
-            elif t.is_sym(")"):
-                if depth == 0:
-                    boundary = i
-                    break
-                depth -= 1
-            elif depth == 0:
-                if t.is_word("FROM") and from_idx < 0:
-                    from_idx = i
-                elif t.is_word("GROUP", "HAVING") and from_idx >= 0:
-                    return None  # aggregated block: wrap would be wrong
-                elif from_idx >= 0 and t.is_word(
-                    "ORDER", "LIMIT", "UNION", "INTERSECT", "EXCEPT",
-                    "WINDOW", "FETCH", "OFFSET",
-                ):
-                    boundary = i
-                    break
-        if from_idx < 0 or not (sel < f < from_idx):
-            return None  # the GROUPS window must sit in this select list
+        blk = structure(toks).block_of(f)
+        if blk is None or blk.group >= 0 or blk.having >= 0:
+            return toks, True  # aggregated block: wrap would be wrong
+        from_idx, boundary = blk.from_, blk.end
+        if from_idx < 0 or not (blk.select < f < from_idx):
+            return toks, True  # the GROUPS window must sit in this select list
 
         tag = render(toks).count("__gr_src")
         rk = f"__gr{tag}"
@@ -2196,7 +2044,7 @@ def _groups_frame_once(toks: list[Tok]) -> "list[Tok] | None":
             + list(toks[cl + 1 : from_idx + 1])
             + tokenize(new_from)
             + list(toks[boundary:])
-        )
+        ), False
     return None
 
 

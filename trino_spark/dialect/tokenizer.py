@@ -143,3 +143,261 @@ def split_args(toks: list[Tok], open_i: int, close_i: int) -> list[tuple[int, in
             start = j + 1
     spans.append((start, close_i))
     return spans
+
+
+# ------------------------------------------------------------- structure
+#
+# One structural read of a token list: its query blocks, its WITH
+# definitions and the names in relation positions. The rewrite passes,
+# the CTE materializer, access control and MV freshness all read this one
+# index instead of walking parentheses or matching FROM/JOIN themselves.
+
+_SET_OPS = frozenset({"UNION", "INTERSECT", "EXCEPT"})
+_TAIL = frozenset({"ORDER", "LIMIT", "WINDOW", "FETCH", "OFFSET"}) | _SET_OPS
+# keywords whose following name is a relation
+_REL_KW = frozenset({"FROM", "JOIN", "INTO", "UPDATE", "TABLE", "USING"})
+# clauses that close a FROM list at their depth
+_LIST_END = frozenset(
+    {"WHERE", "GROUP", "HAVING", "SET", "QUALIFY"} | _TAIL
+)
+# words after which no relation name follows, without closing the list
+_NOT_REL = frozenset(
+    {"SELECT", "ON", "WHEN", "LATERAL", "UNNEST", "TABLESAMPLE", "VALUES", "WITH"}
+)
+_NOT_ALIAS = _REL_KW | _LIST_END | _NOT_REL | frozenset(
+    """AS INNER LEFT RIGHT FULL CROSS NATURAL OUTER FOR MATCH_RECOGNIZE
+    DEFAULT LIKE IS""".split()
+)
+# calls whose parentheses use FROM between arguments: EXTRACT(x FROM y)
+_FROM_ARG_CALLS = frozenset({"EXTRACT", "TRIM", "SUBSTRING", "OVERLAY", "POSITION"})
+# words before TABLE that make the next name a statement's target, not a
+# read: CREATE/ALTER/DROP/TRUNCATE TABLE t, COMMENT ON TABLE t, ...
+_TABLE_TARGET = frozenset(
+    """CREATE REPLACE EXTERNAL TEMPORARY ALTER DROP TRUNCATE ON IN INTO
+    OVERWRITE DESCRIBE DESC ANALYZE REFRESH CACHE UNCACHE REPAIR""".split()
+)
+
+
+@dataclass
+class Block:
+    """One SELECT block, as token indices (-1: clause absent).
+
+    `close` is the ')' closing the group that holds the SELECT
+    (len(toks) at top level). `end` is where the block's clauses end: its
+    first ORDER/LIMIT/WINDOW/FETCH/OFFSET after FROM or its first set
+    operation, else `close`. `tail_end` is where its own ORDER/LIMIT tail
+    ends: that set operation, else `close`; a set-operation sibling is
+    never part of the tail."""
+
+    select: int
+    close: int
+    distinct: bool = False  # SELECT DISTINCT
+    from_: int = -1
+    group: int = -1
+    having: int = -1
+    end: int = -1
+    tail_end: int = -1
+
+
+@dataclass
+class WithDef:
+    """`name [(columns)] AS (body)` in a WITH clause;
+    toks[body[0]:body[1]] is the body's interior."""
+
+    name: str  # unquoted, case kept
+    name_idx: int
+    body: tuple[int, int]
+    clause: int  # index of the WITH keyword
+    recursive: bool
+
+
+@dataclass
+class RelRef:
+    """A name in a relation position; toks[start:end] is its name chain."""
+
+    start: int
+    end: int
+    name: str  # last part of the chain, unquoted, lower case
+    alias: str | None  # unquoted, lower case
+    kw: str  # the FROM/JOIN/INTO/UPDATE/TABLE/USING that placed it
+    shadowed: bool  # an unqualified name an in-scope WITH definition binds
+    # read by the statement: a FROM or JOIN relation, MERGE's USING source,
+    # or `TABLE t` as a query or table argument; not a write target or a
+    # DDL name (INTO t, UPDATE t, CREATE/ALTER/DROP/TRUNCATE TABLE t, ...)
+    read: bool
+
+
+@dataclass
+class Structure:
+    blocks: list[Block]  # in SELECT order
+    withs: list[WithDef]
+    relations: list[RelRef]
+    depth: list[int]  # paren depth of each token
+
+    def block_of(self, i: int) -> Block | None:
+        """The block token i belongs to: the nearest SELECT before i that
+        no parenthesised group closed before i holds."""
+        for b in reversed(self.blocks):
+            if b.select < i < b.close:
+                return b
+        return None
+
+
+def structure(toks: list[Tok]) -> Structure:
+    """Read the blocks, WITH definitions and relation references of
+    `toks` in one index. Unbalanced parentheses do not raise: an unclosed
+    group runs to the end of the list."""
+    n = len(toks)
+    depth = [0] * n
+    match: dict[int, int] = {}  # '(' -> its ')'
+    opener: dict[int, int] = {}  # SELECT/WITH -> '(' of its group (-1: none)
+    stack: list[int] = []
+    for i, t in enumerate(toks):
+        if t.is_sym("("):
+            depth[i] = len(stack)
+            stack.append(i)
+            continue
+        if t.is_sym(")") and stack:
+            match[stack.pop()] = i
+        depth[i] = len(stack)
+        if t.is_word("SELECT", "WITH"):
+            opener[i] = stack[-1] if stack else -1
+
+    def at(i: int) -> Tok:
+        return toks[i] if i < n else Tok("WS", "")
+
+    def close_of(i: int) -> int:
+        return match.get(opener[i], n)
+
+    def distinct_from(i: int) -> bool:  # `a IS [NOT] DISTINCT FROM b`
+        p = prev_code(toks, i - 1)
+        return p >= 0 and toks[p].is_word("DISTINCT")
+
+    blocks = []
+    for s in opener:
+        if not toks[s].is_word("SELECT"):
+            continue
+        k = next_code(toks, s + 1)
+        b = Block(s, close_of(s), at(k).is_word("DISTINCT"))
+        i = s + 1
+        while i < b.close and b.tail_end < 0:
+            t = toks[i]
+            u = t.text.upper() if t.kind == "WORD" else ""
+            if t.is_sym("("):
+                i = match.get(i, b.close)
+            elif u in _SET_OPS:
+                b.end = i if b.end < 0 else b.end
+                b.tail_end = i
+            elif b.from_ < 0:
+                if u == "FROM" and not distinct_from(i):
+                    b.from_ = i
+            elif b.end < 0:
+                if u in _TAIL:
+                    b.end = i
+                elif u == "GROUP" and b.group < 0:
+                    b.group = i
+                elif u == "HAVING" and b.having < 0:
+                    b.having = i
+            i += 1
+        b.end = b.close if b.end < 0 else b.end
+        b.tail_end = b.close if b.tail_end < 0 else b.tail_end
+        blocks.append(b)
+
+    withs: list[WithDef] = []
+    scopes: list[tuple[WithDef, int, int]] = []  # (def, binds from, to)
+    for w in opener:
+        if not toks[w].is_word("WITH"):
+            continue
+        j = next_code(toks, w + 1)
+        recursive = at(j).is_word("RECURSIVE")
+        j = next_code(toks, j + 1) if recursive else j
+        defs = []
+        while at(j).kind in ("WORD", "QIDENT"):
+            k = next_code(toks, j + 1)
+            if at(k).is_sym("("):  # column alias list
+                k = next_code(toks, match.get(k, n) + 1)
+            if not at(k).is_word("AS"):
+                break
+            k = next_code(toks, k + 1)
+            if k not in match:  # the body's '('
+                break
+            defs.append(WithDef(toks[j].text.strip('"'), j, (k + 1, match[k]), w, recursive))
+            k = next_code(toks, match[k] + 1)
+            if at(k).is_sym(","):
+                j = next_code(toks, k + 1)
+                continue
+            withs += defs  # the clause parsed to its end
+            scopes += [(d, d.name_idx if recursive else d.body[1], close_of(w)) for d in defs]
+            break
+
+    def shadowed(name: str, i: int) -> bool:
+        return any(d.name.lower() == name and a < i < z for d, a, z in scopes)
+
+    relations: list[RelRef] = []
+    kw = None  # the keyword that opened a relation position, if one is open
+    reads = False  # that position reads its relation
+    via_paren = False  # the position was carried into a '('
+    lists: set[int] = set()  # depths with an open FROM list
+    arg_from = [False]  # per open group: a call's FROM-separated arguments
+    i = 0
+    while i < n:
+        t = toks[i]
+        u = t.text.upper() if t.kind == "WORD" else ""
+        if t.is_sym("("):
+            # `USING (a, b)` is a join column list; `FROM (` opens a
+            # derived table or a parenthesised join tree
+            kw = None if kw == "USING" else kw
+            via_paren = kw is not None
+            p = prev_code(toks, i - 1)
+            arg_from.append(p >= 0 and toks[p].is_word(*_FROM_ARG_CALLS))
+        elif t.is_sym(")"):
+            lists.discard(len(arg_from) - 1)
+            if len(arg_from) > 1:
+                arg_from.pop()
+        elif t.is_sym(",") and len(arg_from) - 1 in lists:
+            kw, reads, via_paren = "FROM", True, False
+        elif u == "SELECT":
+            # ends a FROM-first query's list: `(FROM t SELECT a, b)`
+            lists.discard(len(arg_from) - 1)
+            kw = None
+        elif u == "FROM":
+            # every FROM clause at any depth, FROM-first queries included;
+            # not EXTRACT(x FROM y) or IS DISTINCT FROM
+            if not arg_from[-1] and not distinct_from(i):
+                kw, reads, via_paren = "FROM", True, False
+                lists.add(len(arg_from) - 1)
+        elif u in _REL_KW:
+            p = prev_code(toks, i - 1)
+            kw, via_paren = u, False
+            reads = u in ("JOIN", "USING") or (
+                u == "TABLE" and not (p >= 0 and toks[p].is_word(*_TABLE_TARGET))
+            )
+        elif u in _LIST_END:
+            lists.discard(len(arg_from) - 1)
+            kw = None
+        elif u in _NOT_REL:
+            kw = None
+        elif kw is not None and t.kind in ("WORD", "QIDENT") and u not in ("IF", "NOT", "EXISTS"):
+            j = i  # the name chain a.b.c ends at j
+            while j + 2 < n and toks[j + 1].is_sym(".") and toks[j + 2].kind in ("WORD", "QIDENT"):
+                j += 2
+            k = next_code(toks, j + 1)
+            # `name(` through a paren or after FROM/JOIN is a call
+            # (TABLE(f(...)), json_table(...)); after INTO or TABLE it is
+            # a column list
+            if not (at(k).is_sym("(") and (via_paren or kw in ("FROM", "JOIN"))):
+                if via_paren and at(k).is_sym(")") and toks[prev_code(toks, i - 1)].is_sym("("):
+                    k = next_code(toks, k + 1)  # `(name) alias`
+                if at(k).is_word("AS"):
+                    k = next_code(toks, k + 1)
+                a = at(k)
+                alias = a.kind == "QIDENT" or (a.kind == "WORD" and a.text.upper() not in _NOT_ALIAS)
+                name = toks[j].text.strip('"').lower()
+                relations.append(
+                    RelRef(i, j + 1, name, a.text.strip('"').lower() if alias else None, kw,
+                           j == i and shadowed(name, i), reads)
+                )
+            kw = None
+            i = j
+        i += 1
+    return Structure(blocks, withs, relations, depth)
