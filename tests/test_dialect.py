@@ -1059,3 +1059,41 @@ class TestStructureIndex:
         )
         assert [r.name for r in st.relations] == ["orders"]
         assert len(st.blocks) == 1 and st.blocks[0].tail_end == st.blocks[0].close
+
+
+class TestSystemTableReferences:
+    """information_schema and system tables resolve as relation
+    references: any case, quoted parts, never text in a literal, a comment
+    or a quoted alias."""
+
+    @pytest.fixture
+    def fresh(self, spark):
+        return TrinoEngine(spark.newSession())
+
+    @staticmethod
+    def _views(eng):
+        return {t.name for t in eng.spark.catalog.listTables()}
+
+    def test_quoted_alias_keeps_its_name(self, fresh):
+        assert fresh.sql('SELECT 1 AS "system.runtime.tasks"').columns == ["system.runtime.tasks"]
+        df = fresh.sql("SELECT 'a' AS \"information_schema.tables\"")
+        assert df.columns == ["information_schema.tables"]
+
+    def test_literal_or_comment_builds_nothing(self, fresh):
+        before = self._views(fresh)
+        assert fresh.sql("SELECT 'system.runtime.nodes' AS s").collect()[0].s == (
+            "system.runtime.nodes"
+        )
+        assert fresh.sql("SELECT 1 AS x -- system.jdbc.types").collect()[0].x == 1
+        assert self._views(fresh) == before
+
+    @pytest.mark.parametrize(
+        "name, rows",
+        [
+            ("SYSTEM.RUNTIME.NODES", 1),
+            ('"system"."runtime"."nodes"', 1),
+            ("System.Jdbc.Types", 19),
+        ],
+    )
+    def test_names_resolve_in_any_case_and_quoted(self, fresh, name, rows):
+        assert len(fresh.sql(f"SELECT * FROM {name}").collect()) == rows

@@ -188,3 +188,146 @@ def test_runtime_queries_read_runs_no_job(fresh):
         " created timestamp, started timestamp, `end` timestamp"
     )
     assert [(r.state, r.query) for r in rows] == [("FINISHED", "SELECT 1 AS x")]
+
+
+def test_engine_set_up_like_the_server_has_information_schema(spark, sf_dir):
+    # the server and perfbench build the engine bare, then register tables
+    eng = TrinoEngine(spark.newSession())
+    eng.catalog.register_parquet_dir(sf_dir, ALL_TABLES)
+    assert [r.table_name for r in eng.sql("SHOW TABLES").collect()] == sorted(ALL_TABLES)
+    described = eng.sql("DESCRIBE nation").collect()
+    assert [r.column_name for r in described] == ["n_nationkey", "n_name", "n_regionkey"]
+    rows = eng.sql("SELECT table_name FROM information_schema.tables").collect()
+    assert sorted(r.table_name for r in rows) == sorted(ALL_TABLES)
+
+
+@pytest.fixture(scope="module")
+def metadata_engine(spark, sf_dir):
+    """An engine on its own session with the testdata tables and one
+    managed table."""
+    eng = TrinoEngine(spark.newSession())
+    eng.catalog.register_parquet_dir(sf_dir, ALL_TABLES)
+    eng.sql("DROP TABLE IF EXISTS setup_meta")
+    eng.sql("CREATE TABLE setup_meta AS SELECT 1 AS x").collect()
+    yield eng
+    eng.sql("DROP TABLE IF EXISTS setup_meta")
+
+
+_PROPERTIES = (
+    "catalog_name string, property_name string, type string, default_value string,"
+    " description string"
+)
+_COLUMNS = (
+    "table_catalog string, table_schema string, table_name string, column_name string,"
+    " ordinal_position int, data_type string"
+)
+
+
+# (statement run first, statement collected, its result schema)
+_METADATA = [
+    (None, "SHOW SESSION", "name string, value string"),
+    (None, "SHOW CATALOGS", "catalog string"),
+    (None, "USE default", "schema string"),
+    (None, "SET SESSION query_max_run_time = '2h'", "name string, value string"),
+    (None, "PREPARE setup_p FROM SELECT 1", "prepared string"),
+    ("PREPARE setup_d FROM SELECT 1", "DEALLOCATE PREPARE setup_d", "prepared string"),
+    (None, "CREATE ROLE setup_r", "role string"),
+    ("CREATE ROLE setup_g", "GRANT SELECT ON nation TO ROLE setup_g",
+     "role string, table_name string"),
+    (None, 'SELECT * FROM "setup_meta$snapshots"',
+     "version bigint, committed_at string, operation string, is_current boolean,"
+     " expired boolean"),
+    (None, "SELECT * FROM information_schema.schemata",
+     "catalog_name string, schema_name string"),
+    (None, "SELECT * FROM information_schema.tables",
+     "table_catalog string, table_schema string, table_name string, table_type string"),
+    (None, "SELECT * FROM information_schema.columns", _COLUMNS),
+    (None, "SELECT * FROM information_schema_columns", _COLUMNS),
+    (None, "SELECT * FROM information_schema.views",
+     "table_name string, view_definition string, view_type string"),
+    (None, "SELECT * FROM system.runtime.nodes",
+     "node_id string, http_uri string, node_version string, coordinator boolean,"
+     " state string"),
+    (None, "SELECT * FROM system.runtime.tasks",
+     "node_id string, task_id string, state string, splits int, running_splits int,"
+     " completed_splits int, failed_splits int"),
+    (None, "SELECT * FROM system.runtime.queries",
+     "query_id string, state string, user string, query string, elapsed_ms double,"
+     " created timestamp, started timestamp, `end` timestamp"),
+    (None, "SELECT * FROM system.metadata.catalogs",
+     "catalog_name string, connector_name string"),
+    (None, "SELECT * FROM system.metadata.table_properties", _PROPERTIES),
+    (None, "SELECT * FROM system.metadata.schema_properties", _PROPERTIES),
+    (None, "SELECT * FROM system.metadata.column_properties", _PROPERTIES),
+    (None, "SELECT * FROM system.metadata.analyze_properties", _PROPERTIES),
+    (None, "SELECT * FROM system.metadata.materialized_view_properties", _PROPERTIES),
+    (None, "SELECT * FROM system.metadata.materialized_views",
+     "name string, definition string, freshness string"),
+    (None, "SELECT * FROM system.metadata.table_comments", "table_name string, comment string"),
+    (None, "SELECT * FROM system.jdbc.tables",
+     "table_cat string, table_schem string, table_name string, table_type string"),
+    (None, "SELECT * FROM system.jdbc.schemas", "table_schem string, table_catalog string"),
+    (None, "SELECT * FROM system.jdbc.columns",
+     "table_cat string, table_schem string, table_name string, column_name string,"
+     " type_name string, ordinal_position int"),
+    (None, "SELECT * FROM system.jdbc.table_types", "table_type string"),
+    (None, "SELECT * FROM system.jdbc.catalogs", "table_cat string"),
+    (None, "SELECT * FROM system.jdbc.types", "type_name string, data_type int"),
+]
+
+
+@pytest.mark.parametrize("setup, stmt, ddl", _METADATA, ids=[c[1] for c in _METADATA])
+def test_metadata_statement_runs_no_job(metadata_engine, setup, stmt, ddl):
+    eng = metadata_engine
+    if setup:
+        eng.sql(setup).collect()
+    before = _jobs(eng.spark)
+    df = eng.sql(stmt)
+    df.collect()
+    assert _jobs(eng.spark) == before
+    assert [(f.name, f.dataType) for f in df.schema] == [
+        (f.name, f.dataType) for f in StructType.fromDDL(ddl)
+    ]
+
+
+def test_system_table_join_reads_only_driver_rows(metadata_engine):
+    # Catalyst folds only a projection, filter or limit over a driver-local
+    # relation: a join of two still runs a broadcast and a collect job, but
+    # both scan the rows the driver built, not a Python-sourced RDD
+    df = metadata_engine.sql(
+        "SELECT n.node_id, c.catalog_name"
+        " FROM system.runtime.nodes n CROSS JOIN system.metadata.catalogs c"
+    )
+    assert [r.catalog_name for r in df.collect()] == ["spark"]
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+
+def test_dialect_results_are_built_by_the_helper():
+    """Every driver-built result under trino_spark/dialect/ and in
+    infoschema.py goes through dml.rows_result, whose Arrow table plans as
+    a LocalRelation: `createDataFrame(list)` would start Python workers."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "trino_spark"
+    # the helper itself; and connector table data (a memory table's rows,
+    # a blackhole or emptied file table's zero rows), which may hold any
+    # column type (nested, intervals) and is not a result
+    allowed = {("dialect/dml.py", "rows_result"), ("dialect/catalogs.py", "_pages")}
+    calls = []  # (file, innermost enclosing function, line)
+
+    def visit(node, rel: str, fn: str | None) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, rel, child.name)
+                continue
+            if isinstance(child, ast.Attribute) and child.attr == "createDataFrame":
+                calls.append((rel, fn, child.lineno))
+            visit(child, rel, fn)
+
+    for path in [*sorted((root / "dialect").glob("*.py")), root / "infoschema.py"]:
+        visit(ast.parse(path.read_text()), path.relative_to(root).as_posix(), None)
+    outside = [c for c in calls if c[:2] not in allowed]
+    assert not outside, outside
+    assert {c[:2] for c in calls} == allowed

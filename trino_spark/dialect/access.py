@@ -32,6 +32,8 @@ import time
 
 from pyspark.sql import DataFrame
 
+from trino_spark import infoschema
+from trino_spark.dialect.dml import rows_result
 from trino_spark.dialect.tokenizer import Tok, render, structure, tokenize
 
 _PRIVS = ("SELECT", "INSERT", "UPDATE", "DELETE")
@@ -110,7 +112,7 @@ def try_execute(engine, sql: str) -> DataFrame | None:
         if name in st["roles"]:
             raise ValueError(f"role already exists: {name}")
         st["roles"][name] = set()
-        return spark.createDataFrame([(name,)], "role: string")
+        return rows_result(spark, [(name,)], "role: string")
     if up[:2] == ["DROP", "ROLE"]:
         name = s.split()[2].strip('"').lower()
         if name not in st["roles"]:
@@ -118,7 +120,7 @@ def try_execute(engine, sql: str) -> DataFrame | None:
         del st["roles"][name]
         if st["current"] == name:
             st["current"] = None
-        return spark.createDataFrame([(name,)], "role: string")
+        return rows_result(spark, [(name,)], "role: string")
     if up[:2] == ["SET", "ROLE"]:
         name = s.split()[2].strip('"').lower()
         if name == "none":
@@ -127,12 +129,12 @@ def try_execute(engine, sql: str) -> DataFrame | None:
             if name not in st["roles"]:
                 raise ValueError(f"role not found: {name}")
             st["current"] = name
-        return spark.createDataFrame([(name,)], "role: string")
+        return rows_result(spark, [(name,)], "role: string")
     if up[:3] == ["SHOW", "CURRENT", "ROLES"]:
         # ShowRolesTask with CURRENT: the enabled roles of this session —
         # the SET ROLE plus everything transitively granted to it
         rows = sorted((r,) for r in _effective_roles(st, st["current"])) if st["current"] else []
-        return spark.createDataFrame(rows or [], "role: string")
+        return rows_result(spark, rows, "role: string")
     if up[:3] == ["SHOW", "ROLE", "GRANTS"]:
         # ShowRoleGrants: roles granted NON-recursively to the session
         # identity (docs sql/show-role-grants.md)
@@ -140,10 +142,10 @@ def try_execute(engine, sql: str) -> DataFrame | None:
         rows = sorted(
             (g,) for g, grantee in st.get("role_grants", set()) if grantee == cur
         ) if cur else []
-        return spark.createDataFrame(rows or [], "role: string")
+        return rows_result(spark, rows, "role: string")
     if up[:2] == ["SHOW", "ROLES"]:
         rows = [(r,) for r in sorted(st["roles"])]
-        return spark.createDataFrame(rows or [], "role: string")
+        return rows_result(spark, rows, "role: string")
     if up[:2] == ["SHOW", "GRANTS"]:
         m = re.match(r"SHOW\s+GRANTS\s+ON\s+(?:TABLE\s+)?([\w.\"]+)", s, re.IGNORECASE)
         table = m.group(1).strip('"').split(".")[-1].lower() if m else None
@@ -153,7 +155,7 @@ def try_execute(engine, sql: str) -> DataFrame | None:
             for priv, tbl in sorted(grants)
             if table is None or tbl == table
         ]
-        return spark.createDataFrame(rows or [], "grantee: string, privilege: string, table_name: string")
+        return rows_result(spark, rows, "grantee: string, privilege: string, table_name: string")
     if up[:1] == ["GRANT"]:
         # role-to-role grant (docs sql/grant-roles.md; GrantRolesTask):
         # GRANT r1 [, r2 ...] TO ROLE r [WITH ADMIN OPTION]
@@ -178,7 +180,9 @@ def try_execute(engine, sql: str) -> DataFrame | None:
                     raise ValueError(f"circular role grant: {r} -> {grantee}")
                 st.setdefault("role_grants", set()).add((r, grantee))
                 granted.append(r)
-            return spark.createDataFrame([(g, grantee) for g in granted], "role: string, grantee: string")
+            return rows_result(
+                spark, [(g, grantee) for g in granted], "role: string, grantee: string"
+            )
         return _grant_revoke(engine, s, revoke=False)
     if up[:1] == ["REVOKE"]:
         rr = re.match(
@@ -194,7 +198,7 @@ def try_execute(engine, sql: str) -> DataFrame | None:
             for r in rr.group(1).split(","):
                 r = r.strip().strip('"').lower()
                 st.setdefault("role_grants", set()).discard((r, grantee))
-            return spark.createDataFrame([(grantee,)], "grantee: string")
+            return rows_result(spark, [(grantee,)], "grantee: string")
         return _grant_revoke(engine, s, revoke=True)
     if up[:1] == ["DENY"]:
         # DENY privilege ON t TO role (grammar #deny; DenyTask.java):
@@ -215,7 +219,7 @@ def try_execute(engine, sql: str) -> DataFrame | None:
         if role not in st["roles"]:
             raise ValueError(f"role not found: {role}")
         st.setdefault("denies", {}).setdefault(role, set()).update((p, table) for p in privs)
-        return spark.createDataFrame([(role, table)], "role: string, table_name: string")
+        return rows_result(spark, [(role, table)], "role: string, table_name: string")
     if up[:3] == ["COMMENT", "ON", "TABLE"]:
         m = re.match(r"COMMENT\s+ON\s+TABLE\s+([\w.\"]+)\s+IS\s+(?:'((?:[^']|'')*)'|(NULL))", s, re.IGNORECASE)
         if not m:
@@ -225,7 +229,7 @@ def try_execute(engine, sql: str) -> DataFrame | None:
             st["table_comments"].pop(tbl, None)
         else:
             st["table_comments"][tbl] = m.group(2).replace("''", "'")
-        return spark.createDataFrame([(tbl,)], "table: string")
+        return rows_result(spark, [(tbl,)], "table: string")
     if up[:3] == ["COMMENT", "ON", "COLUMN"]:
         m = re.match(
             r"COMMENT\s+ON\s+COLUMN\s+([\w.\"]+)\.(\w+)\s+IS\s+(?:'((?:[^']|'')*)'|(NULL))", s, re.IGNORECASE
@@ -238,13 +242,7 @@ def try_execute(engine, sql: str) -> DataFrame | None:
             st["column_comments"].pop(key, None)
         else:
             st["column_comments"][key] = m.group(3).replace("''", "'")
-        return spark.createDataFrame([(f"{key[0]}.{key[1]}",)], "column: string")
-    if "system.metadata.table_comments" in s:
-        rows = [(t_, c) for t_, c in sorted(st["table_comments"].items())]
-        spark.createDataFrame(rows or [], "table_name: string, comment: string").createOrReplaceTempView(
-            "_system_metadata_table_comments"
-        )
-        return engine.sql(s.replace("system.metadata.table_comments", "_system_metadata_table_comments"))
+        return rows_result(spark, [(f"{key[0]}.{key[1]}",)], "column: string")
     return None
 
 
@@ -272,7 +270,7 @@ def _grant_revoke(engine, s: str, revoke: bool) -> DataFrame:
             st["roles"][role].discard((p, table))
         else:
             st["roles"][role].add((p, table))
-    return engine.spark.createDataFrame([(role, table)], "role: string, table_name: string")
+    return rows_result(engine.spark, [(role, table)], "role: string, table_name: string")
 
 
 def enforce(engine, sql: str) -> None:
@@ -330,7 +328,7 @@ def enforce(engine, sql: str) -> None:
         tt = re.match(r"(.+?)__(?:v\d+|snapshots)$", name)
         if tt and tt.group(1) in getattr(engine, "dml_tables", {}):
             name = tt.group(1)
-        if name.startswith(("information_schema", "_system", "system")):
+        if name in infoschema.VIEWS:
             # information_schema / system tables stay readable under any
             # role (the reference's access control does the same).
             continue
@@ -581,33 +579,34 @@ def try_execute_call(engine, sql: str) -> "DataFrame | None":
         sf = float(_lit(args[0])) if args else 1.0
         prefix = _lit(args[1]) if len(args) > 1 else "tpchgen_"
         tpchgen.register_tpch_catalog(spark, sf, prefix=str(prefix))
-        return spark.createDataFrame([(f"{prefix}*", sf)], "tables: string, sf: double")
+        return rows_result(spark, [(f"{prefix}*", sf)], "tables: string, sf: double")
     if name == "register_faker":
         from trino_spark.sources import faker
 
         view, schema, n = str(_lit(args[0])), str(_lit(args[1])), int(_lit(args[2]))
         seed = int(_lit(args[3])) if len(args) > 3 else 0
         faker.gen(spark, schema, n, seed=seed).createOrReplaceTempView(view)
-        return spark.createDataFrame([(view, n)], "table: string, rows: bigint")
+        return rows_result(spark, [(view, n)], "table: string, rows: bigint")
     if name == "flush_query_log":
-        return spark.createDataFrame([(engine.queries.flush(),)], "flushed: bigint")
+        return rows_result(spark, [(engine.queries.flush(),)], "flushed: bigint")
     if name == "add_row_filter":
         add_row_filter(engine, str(_lit(args[0])), str(_lit(args[1])), str(_lit(args[2])))
-        return spark.createDataFrame(
-            [(str(_lit(args[0])), str(_lit(args[1])))], "role: string, table_name: string"
+        return rows_result(
+            spark, [(str(_lit(args[0])), str(_lit(args[1])))], "role: string, table_name: string"
         )
     if name == "add_column_mask":
         add_column_mask(
             engine, str(_lit(args[0])), str(_lit(args[1])), str(_lit(args[2])), str(_lit(args[3]))
         )
-        return spark.createDataFrame(
+        return rows_result(
+            spark,
             [(str(_lit(args[0])), str(_lit(args[1])), str(_lit(args[2])))],
             "role: string, table_name: string, column_name: string",
         )
     if name == "drop_row_filter":
         st = _state(engine)
         st["row_filters"].pop((str(_lit(args[0])).lower(), str(_lit(args[1])).lower()), None)
-        return spark.createDataFrame([(str(_lit(args[1])),)], "table_name: string")
+        return rows_result(spark, [(str(_lit(args[1])),)], "table_name: string")
     if name == "kill_query":
         # system.runtime.kill_query(query_id, message) — reference:
         # main/connector/system/KillQueryProcedure.java:62. Cancels the
@@ -639,13 +638,13 @@ def try_execute_call(engine, sql: str) -> "DataFrame | None":
             except Exception:
                 sc.cancelJobGroup(qid)
         _cancel_until_closed(sc, rec)
-        return spark.createDataFrame([(qid, msg)], "query_id: string, message: string")
+        return rows_result(spark, [(qid, msg)], "query_id: string, message: string")
     if name == "drop_column_mask":
         st = _state(engine)
         masks = st["column_masks"].get((str(_lit(args[0])).lower(), str(_lit(args[1])).lower()))
         if masks:
             masks.pop(str(_lit(args[2])).lower(), None)
-        return spark.createDataFrame([(str(_lit(args[1])),)], "table_name: string")
+        return rows_result(spark, [(str(_lit(args[1])),)], "table_name: string")
     raise ValueError(f"procedure not found: {name}")
 
 

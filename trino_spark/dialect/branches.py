@@ -41,6 +41,7 @@ from trino_spark.dialect.dml import (
     _snap_root,
     _warehouse_dir,
     refresh_infoschema,
+    rows_result,
 )
 
 _CREATE_RX = re.compile(
@@ -115,7 +116,7 @@ def try_execute(engine, stripped: str) -> DataFrame | None:
         replace = re.match(r"CREATE\s+OR\s+REPLACE", stripped, re.IGNORECASE)
         if branch in reg:
             if m.group("ine"):
-                return spark.createDataFrame([(branch,)], "branch: string")
+                return rows_result(spark, [(branch,)], "branch: string")
             if not replace:
                 raise ValueError(f"branch already exists: {branch}")
             _drop_fork(engine, table, branch)
@@ -145,7 +146,7 @@ def try_execute(engine, stripped: str) -> DataFrame | None:
         base_version = max((e["version"] for e in _read_log(table)), default=0)
         reg[branch] = {"created_from_version": base_version}
         _write_registry(table, reg)
-        return spark.createDataFrame([(branch,)], "branch: string")
+        return rows_result(spark, [(branch,)], "branch: string")
     if up[:2] == ["DROP", "BRANCH"]:
         m = _DROP_RX.match(stripped)
         if not m:
@@ -154,12 +155,12 @@ def try_execute(engine, stripped: str) -> DataFrame | None:
         reg = _registry(table)
         if branch not in reg:
             if m.group("ie"):
-                return spark.createDataFrame([(branch,)], "branch: string")
+                return rows_result(spark, [(branch,)], "branch: string")
             raise ValueError(f"Branch '{branch}' does not exist")
         _drop_fork(engine, table, branch)
         reg.pop(branch)
         _write_registry(table, reg)
-        return spark.createDataFrame([(branch,)], "branch: string")
+        return rows_result(spark, [(branch,)], "branch: string")
     if up[:2] == ["ALTER", "BRANCH"]:
         m = _FF_RX.match(stripped)
         if not m:
@@ -180,7 +181,9 @@ def try_execute(engine, stripped: str) -> DataFrame | None:
         if lcols and lcols != content.columns and set(lcols) == set(content.columns):
             content = content.select(*lcols)
         n = _commit(engine, dest, content, operation=f"fast_forward_from_{tgt}")
-        return spark.createDataFrame([(src, tgt, n)], "branch: string, from_branch: string, rows: bigint")
+        return rows_result(
+            spark, [(src, tgt, n)], "branch: string, from_branch: string, rows: bigint"
+        )
     if up[:2] == ["SHOW", "BRANCHES"]:
         m = _SHOW_RX.match(stripped)
         if not m:
@@ -192,8 +195,8 @@ def try_execute(engine, stripped: str) -> DataFrame | None:
         for b, meta in sorted(_registry(table).items()):
             head = max((e["version"] for e in _read_log(_internal(table, b))), default=0)
             rows.append((b, head, meta.get("created_from_version")))
-        return spark.createDataFrame(
-            rows, "branch: string, current_version: bigint, created_from_version: bigint"
+        return rows_result(
+            spark, rows, "branch: string, current_version: bigint, created_from_version: bigint"
         )
     return None
 

@@ -160,7 +160,15 @@ def _require_owner(engine, what: str) -> None:
 
 
 def _row(engine, name: str) -> DataFrame:
-    return engine.spark.createDataFrame([(name,)], "catalog: string")
+    return rows_result(engine.spark, [(name,)], "catalog: string")
+
+
+def _pages(spark, rows, schema) -> DataFrame:
+    """A connector table's data: a memory table's rows, or the zero rows of
+    a blackhole table or an emptied file table. Table data of any column
+    type (nested, intervals), not a result, so built from Spark rows
+    rather than by rows_result."""
+    return spark.createDataFrame(rows, schema)
 
 
 def resolve(engine, sql: str) -> str:
@@ -250,7 +258,7 @@ def _view_for(engine, m: re.Match) -> str | None:
         tables = mount.setdefault("tables", {})
         if (schema, table) not in tables:
             raise ValueError(f"table not found: {cat}.{schema}.{table}")
-        spark.createDataFrame([], tables[(schema, table)]).createOrReplaceTempView(view)
+        _pages(spark, [], tables[(schema, table)]).createOrReplaceTempView(view)
     elif conn == "faker":
         # plugin/trino-faker FakerMetadata: deterministic synthetic rows.
         # Catalog properties fix the row schema/count; the table name
@@ -312,7 +320,7 @@ def try_execute_dml(engine, stripped: str) -> DataFrame | None:
         if (schema, table) not in tables:
             raise ValueError(f"table not found: {cat}.{schema}.{table}")
         if conn == "memory":
-            empty = spark.createDataFrame([], tables[(schema, table)])
+            empty = _pages(spark, [], tables[(schema, table)])
             empty.createOrReplaceTempView(view)
         return rows_result(spark, 0)
     # INSERT INTO / CTAS: evaluate the source query through the engine so
@@ -347,7 +355,7 @@ def try_execute_dml(engine, stripped: str) -> DataFrame | None:
         all_rows = spark.table(view).collect() + new_rows
     else:
         all_rows = new_rows
-    spark.createDataFrame(all_rows, src.schema).createOrReplaceTempView(view)
+    _pages(spark, all_rows, src.schema).createOrReplaceTempView(view)
     tables[(schema, table)] = src.schema
     mount["views"].add(view)
     return rows_result(spark, len(new_rows))
@@ -425,7 +433,7 @@ def _file_catalog_dml(engine, mount, stripped: str, m: re.Match) -> DataFrame:
         # capture the schema, then write a source-independent empty frame
         # (overwriting a path the plan still reads from is undefined)
         tgt_schema = _read(pdir).schema
-        empty = spark.createDataFrame([], tgt_schema)
+        empty = _pages(spark, [], tgt_schema)
         _writer(empty).mode("overwrite").save(pdir)
         if fmt in ("csv", "json"):
             # zero-row csv/json cannot be schema-inferred on re-read —
@@ -482,16 +490,3 @@ def _schema_sf(schema: str) -> float:
         except ValueError:
             pass
     raise ValueError(f"tpch connector schema must be tiny or sfN, got: {schema}")
-
-
-def show_catalogs(engine, stripped: str) -> DataFrame:
-    """SHOW CATALOGS [LIKE pattern] (ShowQueriesRewrite.java): the session
-    catalog plus every dynamic mount."""
-    names = sorted(["spark", *getattr(engine, "catalogs", {})])
-    m = re.search(r"LIKE\s+'([^']*)'", stripped, re.IGNORECASE)
-    if m:
-        rx = re.compile(
-            "^" + re.escape(m.group(1)).replace("%", ".*").replace("_", ".") + "$"
-        )
-        names = [n for n in names if rx.match(n)]
-    return engine.spark.createDataFrame([(n,) for n in names] or [], "catalog: string")

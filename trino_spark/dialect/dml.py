@@ -62,6 +62,8 @@ from trino_spark.operators.merge import merge_into
 SNAPSHOT_RETENTION = 8
 
 _IDENT = r'[A-Za-z_][\w$]*|"[^"]+"'
+# the result of ALTER TABLE ... EXECUTE optimize
+_OPTIMIZED = "rows: bigint, files_before: int, files_after: int"
 
 
 def _norm_name(name: str) -> str:
@@ -319,15 +321,28 @@ def _commit(
     return _written_rows(path)
 
 
-def rows_result(spark, n: int) -> DataFrame:
-    """The one-row `rows: bigint` result of a write (TableFinishOperator's
-    row count), as a driver-local relation. Built from an Arrow table it
-    plans as a LocalRelation, so collecting it runs no Spark job; built
-    from a Python list it would plan a Scan ExistingRDD, whose collect is
-    a job through the Python workers."""
+def rows_result(spark, rows, ddl: str = "rows: bigint") -> DataFrame:
+    """A result the driver builds itself: `rows` (tuples, or an Arrow table
+    with the same column names) under the Spark DDL schema `ddl`, or, given
+    an int, the one-row `rows: bigint` count of a write
+    (TableFinishOperator's row count). Built from an Arrow table it plans
+    as a LocalRelation, so collecting it runs no Spark job; built from a
+    Python list it would plan a Scan ExistingRDD, whose collect is a job
+    through the Python workers."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
 
-    return spark.createDataFrame(pa.table({"rows": pa.array([n], pa.int64())}))
+    if isinstance(rows, int):
+        rows = [(rows,)]
+    schema = _parse_datatype_string(ddl)
+    if not isinstance(rows, pa.Table):
+        arrow = to_arrow_schema(schema)
+        cols = list(zip(*rows)) if rows else [()] * len(arrow)
+        rows = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+        )
+    return spark.createDataFrame(rows, schema)
 
 
 def _ensure_dir(d: str) -> str:
@@ -911,8 +926,9 @@ def resolve_metadata_tables(engine, sql: str) -> str:
         kind = m.group(2).lower()
         if kind == "files":
             view = f"{name}__files"
-            engine.spark.createDataFrame(
-                _file_rows(_require_managed(engine, name)) or [],
+            rows_result(
+                engine.spark,
+                _file_rows(_require_managed(engine, name)),
                 "file_path: string, file_format: string, partition: string, "
                 "record_count: bigint, file_size_in_bytes: bigint",
             ).createOrReplaceTempView(view)
@@ -925,8 +941,9 @@ def resolve_metadata_tables(engine, sql: str) -> str:
                 c[1] += 1
                 c[2] += nbytes
             view = f"{name}__partitions"
-            engine.spark.createDataFrame(
-                [(p, c[0], c[1], c[2]) for p, c in sorted(agg.items(), key=lambda kv: str(kv[0]))] or [],
+            rows_result(
+                engine.spark,
+                [(p, c[0], c[1], c[2]) for p, c in sorted(agg.items(), key=lambda kv: str(kv[0]))],
                 "partition: string, record_count: bigint, file_count: bigint, "
                 "total_size: bigint",
             ).createOrReplaceTempView(view)
@@ -944,16 +961,16 @@ def resolve_metadata_tables(engine, sql: str) -> str:
                 for b in sorted(_br._registry(name))
             ]
             view = f"{name}__refs"
-            engine.spark.createDataFrame(
-                rows, "name: string, type: string, version: bigint"
+            rows_result(
+                engine.spark, rows, "name: string, type: string, version: bigint"
             ).createOrReplaceTempView(view)
             return view
         if kind == "properties":
             # Iceberg PropertiesTable analog: SET PROPERTIES key/values.
             props = getattr(engine, "_table_properties", {}).get(name, {})
             view = f"{name}__properties"
-            engine.spark.createDataFrame(
-                sorted(props.items()) or [], "key: string, value: string"
+            rows_result(
+                engine.spark, sorted(props.items()), "key: string, value: string"
             ).createOrReplaceTempView(view)
             return view
         log = _read_log(name)
@@ -969,8 +986,9 @@ def resolve_metadata_tables(engine, sql: str) -> str:
             for e in log
         ]
         view = f"{name}__snapshots"
-        engine.spark.createDataFrame(
-            rows or [],
+        rows_result(
+            engine.spark,
+            rows,
             "version: bigint, committed_at: string, operation: string, "
             "is_current: boolean, expired: boolean",
         ).createOrReplaceTempView(view)
@@ -1143,14 +1161,14 @@ def try_execute_ddl(engine, sql: str) -> DataFrame | None:
             raise ValueError(f"view not found: {name}")
         if existed is not None:
             engine.spark.catalog.dropTempView(name)
-        return engine.spark.createDataFrame([(name,)], "view: string")
+        return rows_result(engine.spark, [(name,)], "view: string")
     if up[:3] == ["SHOW", "CREATE", "VIEW"]:
         name = _norm_name(stripped.split()[3])
         views = getattr(engine, "views", {})
         if name not in views:
             raise ValueError(f"view not found: {name}")
-        return engine.spark.createDataFrame(
-            [(f"CREATE VIEW {name} AS\n{views[name]}",)], "create_view: string"
+        return rows_result(
+            engine.spark, [(f"CREATE VIEW {name} AS\n{views[name]}",)], "create_view: string"
         )
     if up[:2] == ["CREATE", "TABLE"] and " AS " not in f" {stripped.upper()} ":
         return _create_empty_table(engine, stripped)
@@ -1171,13 +1189,13 @@ def try_execute_ddl(engine, sql: str) -> DataFrame | None:
             raise ValueError(f"view not found: {name}")
         if m.group(3):  # REFRESH: re-resolve the definition against sources
             engine.sql(views[name]).createOrReplaceTempView(name)
-            return engine.spark.createDataFrame([(name,)], "view: string")
+            return rows_result(engine.spark, [(name,)], "view: string")
         new = _norm_name(m.group(2))
         views[new] = views.pop(name)
         engine.spark.catalog.dropTempView(name)
         engine.sql(views[new]).createOrReplaceTempView(new)
         refresh_infoschema(engine, changed=new, dropped=name)
-        return engine.spark.createDataFrame([(new,)], "view: string")
+        return rows_result(engine.spark, [(new,)], "view: string")
     if up[:3] == ["ALTER", "MATERIALIZED", "VIEW"]:
         # #renameMaterializedView: the stored data moves with the name.
         m = re.match(
@@ -1190,7 +1208,7 @@ def try_execute_ddl(engine, sql: str) -> DataFrame | None:
         name, new = _norm_name(m.group(1)), _norm_name(m.group(2))
         if name not in engine.materialized_views:
             if re.search(r"IF\s+EXISTS", stripped, re.IGNORECASE):
-                return engine.spark.createDataFrame([(name,)], "materialized_view: string")
+                return rows_result(engine.spark, [(name,)], "materialized_view: string")
             raise ValueError(f"materialized view not found: {name}")
         engine.materialized_views[new] = engine.materialized_views.pop(name)
         engine._mv_meta[new] = engine._mv_meta.pop(name, {})
@@ -1202,7 +1220,7 @@ def try_execute_ddl(engine, sql: str) -> DataFrame | None:
             os.rename(os.path.join(mv_dir, name), os.path.join(mv_dir, new))
             read_parquet(engine.spark, os.path.join(mv_dir, new)).createOrReplaceTempView(new)
         engine.spark.catalog.dropTempView(name)
-        return engine.spark.createDataFrame([(new,)], "materialized_view: string")
+        return rows_result(engine.spark, [(new,)], "materialized_view: string")
     if up[:2] in (["CREATE", "SCHEMA"], ["DROP", "SCHEMA"], ["ALTER", "SCHEMA"]) or up[:3] == [
         "SHOW", "CREATE", "SCHEMA",
     ]:
@@ -1232,9 +1250,7 @@ def _schema_ddl(engine, stripped: str, up: list[str]) -> DataFrame:
         if reg[name]:
             kv = ",\n   ".join(f"{k} = '{v}'" for k, v in sorted(reg[name].items()))
             props = f"\nWITH (\n   {kv}\n)"
-        return spark.createDataFrame(
-            [(f"CREATE SCHEMA {name}{props}",)], "create_schema: string"
-        )
+        return rows_result(spark, [(f"CREATE SCHEMA {name}{props}",)], "create_schema: string")
     if up[:2] == ["CREATE", "SCHEMA"]:
         m = re.match(
             r"CREATE\s+SCHEMA\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<name>[\w.\"]+)"
@@ -1247,13 +1263,13 @@ def _schema_ddl(engine, stripped: str, up: list[str]) -> DataFrame:
         name = _norm_name(m.group("name"))
         if name in reg:
             if m.group("ine"):
-                return spark.createDataFrame([(name,)], "schema: string")
+                return rows_result(spark, [(name,)], "schema: string")
             raise ValueError(f"schema already exists: {name}")
         reg[name] = {
             pm.group(1).lower(): pm.group(2)
             for pm in re.finditer(r"([\w.]+)\s*=\s*'([^']*)'", m.group("props") or "")
         }
-        return spark.createDataFrame([(name,)], "schema: string")
+        return rows_result(spark, [(name,)], "schema: string")
     if up[:2] == ["DROP", "SCHEMA"]:
         m = re.match(
             r"DROP\s+SCHEMA\s+(?P<ie>IF\s+EXISTS\s+)?(?P<name>[\w.\"]+)(?:\s+(?:CASCADE|RESTRICT))?\s*$",
@@ -1267,10 +1283,10 @@ def _schema_ddl(engine, stripped: str, up: list[str]) -> DataFrame:
             raise ValueError("cannot drop the default schema")
         if name not in reg:
             if m.group("ie"):
-                return spark.createDataFrame([(name,)], "schema: string")
+                return rows_result(spark, [(name,)], "schema: string")
             raise ValueError(f"schema not found: {name}")
         reg.pop(name)
-        return spark.createDataFrame([(name,)], "schema: string")
+        return rows_result(spark, [(name,)], "schema: string")
     # ALTER SCHEMA s RENAME TO s2
     m = re.match(
         r"ALTER\s+SCHEMA\s+([\w.\"]+)\s+RENAME\s+TO\s+([\w\"]+)\s*$", stripped, re.IGNORECASE
@@ -1281,7 +1297,7 @@ def _schema_ddl(engine, stripped: str, up: list[str]) -> DataFrame:
     if name not in reg:
         raise ValueError(f"schema not found: {name}")
     reg[new] = reg.pop(name)
-    return spark.createDataFrame([(new,)], "schema: string")
+    return rows_result(spark, [(new,)], "schema: string")
 
 
 def _create_view(engine, sql: str) -> DataFrame:
@@ -1302,7 +1318,7 @@ def _create_view(engine, sql: str) -> DataFrame:
     engine.sql(defn).createOrReplaceTempView(name)
     engine.views[name] = defn
     refresh_infoschema(engine, changed=name)
-    return engine.spark.createDataFrame([(name,)], "view: string")
+    return rows_result(engine.spark, [(name,)], "view: string")
 
 
 def _create_empty_table(engine, sql: str) -> DataFrame:
@@ -1324,7 +1340,7 @@ def _create_empty_table(engine, sql: str) -> DataFrame:
         if len(parts) != 2:
             raise ValueError(f"cannot parse column definition: {piece}")
         cols.append(f"{_norm_name(parts[0])} {_trino_type_to_spark(parts[1])}")
-    empty = engine.spark.createDataFrame([], ", ".join(cols))
+    empty = rows_result(engine.spark, [], ", ".join(cols))
     _commit(engine, name, empty)
     return rows_result(engine.spark, 0)
 
@@ -1526,19 +1542,13 @@ def _table_execute(engine, name: str, action: str) -> DataFrame:
             if scoped is not None:
                 cond, untouched = scoped
                 if cond is None:  # predicate matched nothing: no-op commit
-                    return spark.createDataFrame(
-                        [(0, before, before)],
-                        "rows: bigint, files_before: int, files_after: int",
-                    )
+                    return rows_result(spark, [(0, before, before)], _OPTIMIZED)
                 compacted = df.filter(cond).repartition(*[F.col(c) for c in part_cols])
                 n = _commit(
                     engine, name, compacted,
                     preserve_rel_dirs=untouched, operation="optimize",
                 )
-                return spark.createDataFrame(
-                    [(n, before, _file_count(path))],
-                    "rows: bigint, files_before: int, files_after: int",
-                )
+                return rows_result(spark, [(n, before, _file_count(path))], _OPTIMIZED)
             # unpartitioned (or flat): WHERE cannot scope — full rewrite
         if part_cols:
             compacted = df.repartition(*[F.col(c) for c in part_cols])
@@ -1552,10 +1562,7 @@ def _table_execute(engine, name: str, action: str) -> DataFrame:
             target = max(1, -(-size // threshold))  # ceil
             compacted = df.repartition(int(target))
         n = _commit(engine, name, compacted, operation="optimize")
-        return spark.createDataFrame(
-            [(n, before, _file_count(path))],
-            "rows: bigint, files_before: int, files_after: int",
-        )
+        return rows_result(spark, [(n, before, _file_count(path))], _OPTIMIZED)
     if proc == "expire_snapshots":
         horizon = _parse_duration_s(args.get("retention_threshold", "7d"))
         cutoff = _dt.datetime.now(_dt.timezone.utc).timestamp() - horizon
@@ -1573,10 +1580,10 @@ def _table_execute(engine, name: str, action: str) -> DataFrame:
                 e["expired"] = True
                 expired += 1
         _write_log(name, log)
-        return spark.createDataFrame([(expired,)], "expired_snapshots: bigint")
+        return rows_result(spark, [(expired,)], "expired_snapshots: bigint")
     if proc == "drop_extended_stats":
         getattr(engine, "_stats_cache", {}).pop(name, None)
-        return spark.createDataFrame([(name,)], "table: string")
+        return rows_result(spark, [(name,)], "table: string")
     if proc == "remove_orphan_files":
         parent, base = os.path.dirname(path), os.path.basename(path)
         removed = 0
@@ -1585,47 +1592,15 @@ def _table_execute(engine, name: str, action: str) -> DataFrame:
                 if d.startswith((f"{base}.staging-", f"{base}.old-")):
                     shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
                     removed += 1
-        return spark.createDataFrame([(removed,)], "removed_dirs: bigint")
+        return rows_result(spark, [(removed,)], "removed_dirs: bigint")
     raise ValueError(f"unknown table procedure: {proc}")
 
 
 def refresh_infoschema(engine, changed: str | None = None, dropped: str | None = None) -> None:
-    """Re-register information_schema views to include engine-created
-    tables and views (the reference's information_schema reflects DDL
-    immediately — InformationSchemaMetadata.java).
-
-    Incremental: the per-table schema dict is cached on the engine and
-    only the changed/dropped entry is recomputed — a DML statement must
-    not pay a full catalog schema scan per commit."""
-    from trino_spark.infoschema import register_information_schema
-
-    # mutations invalidate ANALYZE-collected statistics for the table
-    stats = getattr(engine, "_stats_cache", None)
-    if stats is not None:
-        if changed is not None:
-            stats.pop(changed, None)
-        if dropped is not None:
-            stats.pop(dropped, None)
-    cache = getattr(engine, "_infoschema_cache", None)
-    if cache is None or (changed is None and dropped is None):
-        cache = {}
-        for name in list(engine.catalog._sources) + list(_managed(engine)) + list(
-            getattr(engine, "views", {})
-        ) + list(engine.materialized_views):
-            try:
-                cache[name] = [
-                    (f.name, f.dataType.simpleString()) for f in engine.spark.table(name).schema
-                ]
-            except Exception:
-                continue
-        engine._infoschema_cache = cache
-    if dropped is not None:
-        cache.pop(dropped, None)
-    if changed is not None:
-        try:
-            cache[changed] = [
-                (f.name, f.dataType.simpleString()) for f in engine.spark.table(changed).schema
-            ]
-        except Exception:
-            cache.pop(changed, None)
-    register_information_schema(engine.spark, cache)
+    """The metadata side of a commit. information_schema needs nothing: it
+    is built from the live catalog when a statement reads it
+    (infoschema.resolve). A mutation invalidates the ANALYZE-collected
+    statistics of the table it touched."""
+    stats = getattr(engine, "_stats_cache", {})
+    for name in (changed, dropped):
+        stats.pop(name, None)

@@ -18,11 +18,12 @@ import uuid
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
+from trino_spark import infoschema
 from trino_spark.catalog import ALL_TABLES, Catalog, read_parquet
 from trino_spark.dialect import routines as _routines_mod
+from trino_spark.dialect.dml import rows_result
 from trino_spark.dialect.rewrites import translate
 from trino_spark.functions import registry as _registry
-from trino_spark.infoschema import register_information_schema, rewrite_show
 
 __all__ = ["QueryRecord", "QueryRegistry", "TrinoEngine", "translate"]
 
@@ -170,20 +171,7 @@ class TrinoEngine:
         # source-table fingerprints captured at refresh time.
         self._mv_meta: dict[str, dict] = {}
         if sf_dir:
-            from trino_spark.catalog import load as _load
-
             self.catalog.register_parquet_dir(sf_dir, ALL_TABLES)
-            # schema via the session-cached loader (catalog.load): the
-            # StructType is memoized on the cached DataFrame, so repeat
-            # engine constructions skip 10 py4j schema round-trips
-            schemas = {
-                name: [
-                    (f.name, f.dataType.simpleString())
-                    for f in _load(spark, sf_dir, name).schema
-                ]
-                for name in ALL_TABLES
-            }
-            register_information_schema(spark, schemas)
         # Functions and PTFs are not registered here: translate() registers
         # each bundle function on the session the first time a statement
         # calls it (functions/registry.py, the SystemFunctionBundle analog).
@@ -243,14 +231,6 @@ class TrinoEngine:
                     ls(kind, dict(event))
             except Exception:
                 pass  # never let a listener break the query path
-
-    @staticmethod
-    def _sub_outside_literals(sql: str, target: str, repl: str) -> str:
-        """Replace `target` only OUTSIDE single-quoted string literals —
-        a raw str.replace would corrupt e.g. SELECT 'system.runtime.nodes'."""
-        from trino_spark.dialect.access import map_outside_literals
-
-        return map_outside_literals(sql, lambda p: p.replace(target, repl))
 
     @staticmethod
     def _first_keyword(sql: str) -> str:
@@ -361,168 +341,6 @@ class TrinoEngine:
             from trino_spark.dialect import dml as _dml
 
             trino_sql = _dml.resolve_metadata_tables(self, trino_sql)
-        if "system.runtime.nodes" in trino_sql:
-            # system.runtime.nodes (NodesSystemTable.java): one coordinator
-            # row in local mode; on a real cluster this would enumerate
-            # executors.
-            sc = self.spark.sparkContext
-            self.spark.createDataFrame(
-                [(sc.applicationId, sc.master, sc.version, True, "active")],
-                "node_id: string, http_uri: string, node_version: string, coordinator: boolean, state: string",
-            ).createOrReplaceTempView("_system_runtime_nodes")
-            trino_sql = self._sub_outside_literals(
-                trino_sql, "system.runtime.nodes", "_system_runtime_nodes"
-            )
-        for _dotted in ("information_schema.tables", "information_schema.columns"):
-            if _dotted in trino_sql:
-                # The catalog loader registers these as flat views
-                # (infoschema.py register_information_schema); dotted SQL
-                # references resolve here (InformationSchemaPageSource).
-                trino_sql = self._sub_outside_literals(
-                    trino_sql, _dotted, _dotted.replace(".", "_")
-                )
-        if "information_schema.views" in trino_sql:
-            # information_schema.views: the engine's logical views + MVs
-            # (InformationSchemaPageSource.java VIEWS table).
-            rows = [(n, d, "VIEW") for n, d in sorted(getattr(self, "views", {}).items())] + [
-                (n, d, "MATERIALIZED VIEW") for n, d in sorted(self.materialized_views.items())
-            ]
-            self.spark.createDataFrame(
-                rows or [], "table_name: string, view_definition: string, view_type: string"
-            ).createOrReplaceTempView("_information_schema_views")
-            trino_sql = self._sub_outside_literals(
-                trino_sql, "information_schema.views", "_information_schema_views"
-            )
-        if "system.runtime.tasks" in trino_sql:
-            # TaskSystemTable.java: live execution tasks. Local mode maps
-            # Spark's active stages — one row per (stage, running tasks).
-            sc = self.spark.sparkContext
-            st = sc.statusTracker()
-            rows = []
-            for sid in st.getActiveStageIds():
-                info = st.getStageInfo(sid)
-                if info:
-                    rows.append(
-                        (
-                            sc.applicationId,
-                            f"stage-{sid}",
-                            "RUNNING",
-                            int(info.numTasks),
-                            int(info.numActiveTasks),
-                            int(info.numCompletedTasks),
-                            int(info.numFailedTasks),
-                        )
-                    )
-            self.spark.createDataFrame(
-                rows or [],
-                "node_id: string, task_id: string, state: string, splits: int,"
-                " running_splits: int, completed_splits: int, failed_splits: int",
-            ).createOrReplaceTempView("_system_runtime_tasks")
-            trino_sql = self._sub_outside_literals(
-                trino_sql, "system.runtime.tasks", "_system_runtime_tasks"
-            )
-        for _prop_tbl, _props in (
-            ("table_properties", [("format", "varchar", "PARQUET", "File format"),
-                                  ("location", "varchar", "", "Storage location"),
-                                  ("partitioned_by", "array(varchar)", "[]", "Partition columns"),
-                                  ("bucketed_by", "array(varchar)", "[]", "Bucketing columns"),
-                                  ("bucket_count", "integer", "0", "Number of buckets")]),
-            ("schema_properties", [("location", "varchar", "", "Storage location")]),
-            ("column_properties", []),
-            ("analyze_properties", [("columns", "array(varchar)", "[]", "Columns to analyze")]),
-            ("materialized_view_properties", [("storage_schema", "varchar", "", "Storage schema")]),
-        ):
-            key = f"system.metadata.{_prop_tbl}"
-            if key in trino_sql:
-                # {Schema,Table,Column,Analyze,MaterializedView}Properties
-                # SystemTable.java: the property names each catalog accepts
-                rows = [("spark", n, t, d, desc) for n, t, d, desc in _props]
-                self.spark.createDataFrame(
-                    rows or [],
-                    "catalog_name: string, property_name: string, type: string,"
-                    " default_value: string, description: string",
-                ).createOrReplaceTempView(f"_system_metadata_{_prop_tbl}")
-                trino_sql = self._sub_outside_literals(
-                    trino_sql, key, f"_system_metadata_{_prop_tbl}"
-                )
-        if "system.metadata.catalogs" in trino_sql:
-            # CatalogSystemTable.java: the session catalog + dynamic mounts
-            rows = [("spark", "spark")] + [
-                (name, mount["connector"])
-                for name, mount in sorted(getattr(self, "catalogs", {}).items())
-            ]
-            self.spark.createDataFrame(
-                rows, "catalog_name: string, connector_name: string"
-            ).createOrReplaceTempView("_system_metadata_catalogs")
-            trino_sql = self._sub_outside_literals(
-                trino_sql, "system.metadata.catalogs", "_system_metadata_catalogs"
-            )
-        if "system.metadata.materialized_views" in trino_sql:
-            # MaterializedViewSystemTable.java: name/definition/freshness
-            rows = [
-                (
-                    n,
-                    self.materialized_views[n],
-                    self._mv_freshness(n),
-                )
-                for n in sorted(self.materialized_views)
-            ]
-            self.spark.createDataFrame(
-                rows or [], "name: string, definition: string, freshness: string"
-            ).createOrReplaceTempView("_system_metadata_mvs")
-            trino_sql = self._sub_outside_literals(
-                trino_sql, "system.metadata.materialized_views", "_system_metadata_mvs"
-            )
-        for _jt, _src in (
-            ("system.jdbc.tables",
-             "SELECT 'spark' AS table_cat, table_schema AS table_schem,"
-             " table_name, 'TABLE' AS table_type FROM information_schema_tables"),
-            ("system.jdbc.schemas",
-             "SELECT DISTINCT table_schema AS table_schem, 'spark' AS table_catalog"
-             " FROM information_schema_tables"),
-            ("system.jdbc.columns",
-             "SELECT 'spark' AS table_cat, table_schema AS table_schem,"
-             " table_name, column_name, data_type AS type_name,"
-             " ordinal_position FROM information_schema_columns"),
-            ("system.jdbc.table_types",
-             "SELECT explode(array('TABLE', 'VIEW')) AS table_type"),
-            ("system.jdbc.catalogs", "SELECT 'spark' AS table_cat"),
-        ):
-            if _jt in trino_sql:
-                # the system.jdbc schema (JdbcSystemTables serving JDBC
-                # driver DatabaseMetaData): projected off information_schema
-                view = "_" + _jt.replace(".", "_")
-                self.spark.sql(_src).createOrReplaceTempView(view)
-                trino_sql = self._sub_outside_literals(trino_sql, _jt, view)
-        if "system.jdbc.types" in trino_sql:
-            # JdbcTypesSystemTable (system.jdbc schema serving JDBC driver
-            # metadata): type_name + java.sql.Types DATA_TYPE codes
-            rows = [
-                ("boolean", 16), ("tinyint", -6), ("smallint", 5),
-                ("integer", 4), ("bigint", -5), ("real", 7),
-                ("double", 8), ("decimal", 3), ("varchar", 12),
-                ("char", 1), ("varbinary", -3), ("date", 91),
-                ("time", 92), ("timestamp", 93),
-                ("timestamp with time zone", 2014), ("array", 2003),
-                ("map", 2000), ("row", 2002), ("json", 2000),
-            ]
-            self.spark.createDataFrame(
-                rows, "type_name: string, data_type: int"
-            ).createOrReplaceTempView("_system_jdbc_types")
-            trino_sql = self._sub_outside_literals(
-                trino_sql, "system.jdbc.types", "_system_jdbc_types"
-            )
-        if "system.runtime.queries" in trino_sql:
-            # system.runtime.queries (QuerySystemTable.java): one row per
-            # query record, live ones included; Arrow-built, so reading it
-            # runs no Spark job.
-            self.spark.createDataFrame(self.queries.table()).createOrReplaceTempView(
-                "_system_runtime_queries"
-            )
-            trino_sql = self._sub_outside_literals(
-                trino_sql, "system.runtime.queries", "_system_runtime_queries"
-            )
-
         wf = re.match(
             r"\s*WITH\s+(FUNCTION\s+.*?)\s+(SELECT|VALUES)\b(.*)$",
             trino_sql,
@@ -548,11 +366,11 @@ class TrinoEngine:
         if prep is not None:
             name, body = prep
             self.prepared[name] = body
-            return self.spark.createDataFrame([(name.lower(),)], "prepared: string")
+            return rows_result(self.spark, [(name.lower(),)], "prepared: string")
         dealloc = _prep.parse_deallocate(trino_sql)
         if dealloc is not None:
             self.prepared.pop(dealloc, None)
-            return self.spark.createDataFrame([(dealloc.lower(),)], "prepared: string")
+            return rows_result(self.spark, [(dealloc.lower(),)], "prepared: string")
         imm = _prep.parse_execute_immediate(trino_sql)
         if imm is not None:
             stmt, args = imm
@@ -570,12 +388,12 @@ class TrinoEngine:
             src = getattr(self, "_function_sources", {}).get(fname.upper())
             if src is None:
                 raise ValueError(f"function not found: {fname}")
-            return self.spark.createDataFrame([(src,)], "create_function: string")
+            return rows_result(self.spark, [(src,)], "create_function: string")
         if up0[:2] == ["SET", "PATH"]:
             # #setPath (SetPathTask.java): recorded; the engine's single
             # function namespace makes it a session attribute only.
             self.sql_path = trino_sql.split(None, 2)[2].strip().rstrip(";")
-            return self.spark.createDataFrame([(self.sql_path,)], "path: string")
+            return rows_result(self.spark, [(self.sql_path,)], "path: string")
         routine = _routines_mod.parse_create_function(trino_sql)
         if routine is not None:
             if not hasattr(self, "_function_sources"):
@@ -591,13 +409,16 @@ class TrinoEngine:
                 _registry.settled(self.spark).add(routine.name.lower())
             else:
                 self.routines[routine.name] = routine
-            return self.spark.createDataFrame([(routine.name.lower(),)], "function: string")
+            return rows_result(self.spark, [(routine.name.lower(),)], "function: string")
         dropped = _routines_mod.parse_drop_function(trino_sql)
         if dropped is not None:
             self.routines.pop(dropped, None)
             self.python_routines.pop(dropped, None)
             getattr(self, "_function_sources", {}).pop(dropped.upper(), None)
-            return self.spark.createDataFrame([(dropped.lower(),)], "function: string")
+            return rows_result(self.spark, [(dropped.lower(),)], "function: string")
+        # information_schema and system tables (infoschema.TABLES): built
+        # now from the live engine, for the relations this statement reads
+        trino_sql = infoschema.resolve(self, trino_sql)
         stripped = trino_sql.strip().rstrip(";")
         up = stripped.upper().split()
         # Access control + comments (AccessControl SPI / CommentTask.java):
@@ -673,13 +494,13 @@ class TrinoEngine:
                 raise ValueError(f"CREATE MATERIALIZED VIEW {name}: missing AS <query>")
             self.materialized_views[name] = defn.strip()
             self._mv_refresh(name)
-            return self.spark.createDataFrame([(name,)], "materialized_view: string")
+            return rows_result(self.spark, [(name,)], "materialized_view: string")
         if up[:3] == ["REFRESH", "MATERIALIZED", "VIEW"]:
             name = stripped.split()[3].strip('"').split(".")[-1].lower()
             if name not in self.materialized_views:
                 raise ValueError(f"materialized view not found: {name}")
             n = self._mv_refresh(name)
-            return self.spark.createDataFrame([(name, n)], "materialized_view: string, rows: bigint")
+            return rows_result(self.spark, [(name, n)], "materialized_view: string, rows: bigint")
         if up[:3] == ["DROP", "MATERIALIZED", "VIEW"]:
             parts = stripped.split()
             idx = 5 if len(parts) > 5 and parts[3].upper() == "IF" else 3
@@ -687,17 +508,7 @@ class TrinoEngine:
             self.materialized_views.pop(name, None)
             self._mv_meta.pop(name, None)
             self.spark.catalog.dropTempView(name)
-            return self.spark.createDataFrame([(name,)], "materialized_view: string")
-        if up[:2] == ["SHOW", "SCHEMAS"] and getattr(self, "schemas", None):
-            # CREATE SCHEMA-registered schemas union the table namespace
-            # (#showSchemas; the flat namespace maps to 'default').
-            rows = sorted(set(self.schemas) | {"default"})
-            return self.spark.createDataFrame([(s,) for s in rows], "schema_name: string")
-        if up[:2] == ["SHOW", "CATALOGS"]:
-            # Session catalog + dynamic mounts (ShowQueriesRewrite.java).
-            from trino_spark.dialect import catalogs as _cats
-
-            return _cats.show_catalogs(self, stripped)
+            return rows_result(self.spark, [(name,)], "materialized_view: string")
         if up[:2] in (["CREATE", "CATALOG"], ["DROP", "CATALOG"]):
             # Dynamic catalogs (grammar SqlBase.g4 #createCatalog /
             # #dropCatalog; CreateCatalogTask.java via CatalogFactory).
@@ -710,7 +521,7 @@ class TrinoEngine:
             # SET SESSION properties recorded on this engine
             # (SystemSessionProperties.java surface).
             rows = sorted(self.session_properties.items())
-            return self.spark.createDataFrame(rows or [], "name: string, value: string")
+            return rows_result(self.spark, rows, "name: string, value: string")
         if up[:2] == ["SHOW", "FUNCTIONS"]:
             # SHOW FUNCTIONS (ShowQueriesRewrite.java): the engine's
             # function inventory — dialect-mapped Trino names, the whole
@@ -745,8 +556,8 @@ class TrinoEngine:
                 + [(n.lower(), "routine", "sql") for n in sorted(self.routines)]
                 + [(n.lower(), "routine", "python") for n in sorted(self.python_routines)]
             )
-            return self.spark.createDataFrame(
-                rows, "function_name: string, kind: string, source: string"
+            return rows_result(
+                self.spark, rows, "function_name: string, kind: string, source: string"
             )
         if up[:3] == ["SHOW", "MATERIALIZED", "VIEWS"]:
             # Freshness surface of system.metadata.materialized_views
@@ -757,8 +568,8 @@ class TrinoEngine:
                 (n, self._mv_freshness(n), self._mv_meta[n]["last_fresh_time"])
                 for n in sorted(self.materialized_views)
             ]
-            return self.spark.createDataFrame(
-                rows or [], "name: string, freshness: string, last_fresh_time: string"
+            return rows_result(
+                self.spark, rows, "name: string, freshness: string, last_fresh_time: string"
             )
         if up[:1] == ["EXPLAIN"]:
             # EXPLAIN [ANALYZE] [(TYPE ...)] <stmt> (ExplainRewrite.java):
@@ -814,7 +625,7 @@ class TrinoEngine:
                     text = _json.dumps({"inputTableColumnInfos": rels})
                 else:
                     text = qe.executedPlan().toJSON()
-                return self.spark.createDataFrame([(text,)], "query_plan: string")
+                return rows_result(self.spark, [(text,)], "query_plan: string")
             if up[1:2] == ["ANALYZE"]:
                 text = self.explain_analyze(rest.split(None, 1)[1])
             elif mode == "validate":
@@ -831,12 +642,7 @@ class TrinoEngine:
                 text = "\n".join(rels) if rels else plan
             else:
                 text = self.explain(rest, mode=mode)
-            return self.spark.createDataFrame([(text,)], "query_plan: string")
-        if up[:1] == ["DESCRIBE"] and len(up) == 2:
-            # DESCRIBE <table> == SHOW COLUMNS FROM <table> (the reference
-            # rewrites it the same way, ShowQueriesRewrite.java).
-            shown = rewrite_show(f"SHOW COLUMNS FROM {stripped.split()[1]}")
-            return self.spark.sql(shown)
+            return rows_result(self.spark, [(text,)], "query_plan: string")
         if up[:3] == ["SET", "TIME", "ZONE"]:
             # SET TIME ZONE (grammar SqlBase.g4; SetTimeZoneTask.java):
             # maps onto Spark's session timezone, which drives timestamp
@@ -845,13 +651,13 @@ class TrinoEngine:
             arg = stripped.split(None, 3)[3].strip()
             zone = "UTC" if arg.upper() == "LOCAL" else arg.strip("'")
             self.spark.conf.set("spark.sql.session.timeZone", zone)
-            return self.spark.createDataFrame([(zone,)], "time_zone: string")
+            return rows_result(self.spark, [(zone,)], "time_zone: string")
         if up[:1] == ["USE"] and len(up) == 2:
             # USE catalog.schema (UseTask.java): single-catalog engine —
             # record the default schema; unqualified names already resolve
             # against the session catalog.
             self._current_schema = stripped.split()[1].strip('"')
-            return self.spark.createDataFrame([(self._current_schema,)], "schema: string")
+            return rows_result(self.spark, [(self._current_schema,)], "schema: string")
         if up[:3] == ["SET", "SESSION", "AUTHORIZATION"]:
             # #setSessionAuthorization (SetSessionAuthorizationTask.java):
             # switch the session identity; CURRENT_USER reflects it.
@@ -868,10 +674,10 @@ class TrinoEngine:
                 )
             user = stripped.split(None, 3)[3].strip().strip("'\"")
             self.session_user = user
-            return self.spark.createDataFrame([(user,)], "user: string")
+            return rows_result(self.spark, [(user,)], "user: string")
         if up[:3] == ["RESET", "SESSION", "AUTHORIZATION"]:
             self.session_user = "trino"
-            return self.spark.createDataFrame([("trino",)], "user: string")
+            return rows_result(self.spark, [("trino",)], "user: string")
         if up[:2] == ["SET", "SESSION"]:
             # SET SESSION k = v (SystemSessionProperties.java surface):
             # recorded per-engine; spark.* keys pass through to the conf.
@@ -880,13 +686,13 @@ class TrinoEngine:
             self.session_properties[key] = val
             if key.startswith("spark."):
                 self.spark.conf.set(key, val)
-            return self.spark.createDataFrame([(key, val)], "name: string, value: string")
+            return rows_result(self.spark, [(key, val)], "name: string, value: string")
         if up[:2] == ["RESET", "SESSION"]:
             key = stripped.split()[2]
             self.session_properties.pop(key, None)
             if key.startswith("spark."):
                 self.spark.conf.unset(key)
-            return self.spark.createDataFrame([(key,)], "name: string")
+            return rows_result(self.spark, [(key,)], "name: string")
         if up[:2] == ["START", "TRANSACTION"]:
             # Transaction statements (StartTransactionTask.java): DML is
             # copy-on-write, so the transaction pins per-table snapshots
@@ -895,7 +701,7 @@ class TrinoEngine:
             from trino_spark.dialect import dml as _dml
 
             _dml.txn_begin(self)
-            return self.spark.createDataFrame([("STARTED",)], "transaction: string")
+            return rows_result(self.spark, [("STARTED",)], "transaction: string")
         if up[:1] in (["COMMIT"], ["ROLLBACK"]):
             from trino_spark.dialect import dml as _dml
 
@@ -903,7 +709,7 @@ class TrinoEngine:
                 _dml.txn_commit(self)
             else:
                 _dml.txn_rollback(self)
-            return self.spark.createDataFrame([(up[0],)], "transaction: string")
+            return rows_result(self.spark, [(up[0],)], "transaction: string")
         if up[:3] == ["SHOW", "CREATE", "TABLE"]:
             # SHOW CREATE TABLE (ShowQueriesRewrite.java): rendered DDL.
             name = stripped.split()[3].strip('"').split(".")[-1].lower()
@@ -925,16 +731,14 @@ class TrinoEngine:
             else:
                 with_props = ""
             ddl = f"CREATE TABLE {name} (\n   {cols}\n){with_props}"
-            return self.spark.createDataFrame([(ddl,)], "create_table: string")
+            return rows_result(self.spark, [(ddl,)], "create_table: string")
         if up[:3] == ["SHOW", "CREATE", "MATERIALIZED"]:
             name = stripped.split()[4].strip('"').split(".")[-1].lower()
             if name not in self.materialized_views:
                 raise ValueError(f"materialized view not found: {name}")
             ddl = f"CREATE MATERIALIZED VIEW {name} AS\n{self.materialized_views[name]}"
-            return self.spark.createDataFrame([(ddl,)], "create_materialized_view: string")
+            return rows_result(self.spark, [(ddl,)], "create_materialized_view: string")
         if up[:3] == ["SHOW", "STATS", "FOR"]:
-            from trino_spark.infoschema import show_stats
-
             target = stripped.split(None, 3)[3].strip()
             if target.startswith("("):
                 # #showStatsForQuery (ShowStatsRewrite.java handles both
@@ -944,8 +748,8 @@ class TrinoEngine:
 
                 view = f"_show_stats_q_{_os.getpid()}"
                 self.sql(inner).createOrReplaceTempView(view)
-                return show_stats(self.spark, view)
-            return show_stats(
+                return infoschema.show_stats(self.spark, view)
+            return infoschema.show_stats(
                 self.spark,
                 target.strip('"'),
                 cache=getattr(self, "_stats_cache", None),
@@ -955,17 +759,15 @@ class TrinoEngine:
             # connector collectStatistics): run the one-pass stats
             # aggregation now and persist it on the engine — subsequent
             # SHOW STATS serve the collected statistics without a scan.
-            from trino_spark.infoschema import show_stats
-
             cache = getattr(self, "_stats_cache", None)
             if cache is None:
                 cache = self._stats_cache = {}
             tbl = stripped.split()[1].strip('"').split(".")[-1].lower()
             cache.pop(tbl, None)
-            n = show_stats(self.spark, tbl, cache=cache, populate=True).where(
+            n = infoschema.show_stats(self.spark, tbl, cache=cache, populate=True).where(
                 "column_name IS NULL"
             ).collect()[0].row_count
-            return self.spark.createDataFrame([(tbl, int(n or 0))], "table_name: string, rows: bigint")
+            return rows_result(self.spark, [(tbl, int(n or 0))], "table_name: string, rows: bigint")
         if up[:2] == ["DESCRIBE", "OUTPUT"] and len(up) == 3:
             name = up[2]
             if name not in self.prepared:
@@ -976,7 +778,8 @@ class TrinoEngine:
             n = sum(1 for t in toks if t.is_sym("?"))
             bound = _p.bind(self.prepared[name], ["NULL"] * n)
             schema = self.spark.sql(translate(bound)).schema
-            return self.spark.createDataFrame(
+            return rows_result(
+                self.spark,
                 [(f.name, f.dataType.simpleString()) for f in schema],
                 "column_name string, type string",
             )
@@ -987,12 +790,15 @@ class TrinoEngine:
             from trino_spark.dialect import prepared as _p
 
             n = sum(1 for t in _p.tokenize(self.prepared[name]) if t.is_sym("?"))
-            return self.spark.createDataFrame(
-                [(i, "unknown") for i in range(n)], "position int, type string"
+            return rows_result(
+                self.spark, [(i, "unknown") for i in range(n)], "position int, type string"
             )
-        shown = rewrite_show(trino_sql)
+        shown = infoschema.rewrite_show(trino_sql)
         if shown is not None:
-            return self.spark.sql(shown)
+            # SHOW TABLES/COLUMNS/... and DESCRIBE t: a SELECT over
+            # information_schema, dispatched like any other statement
+            # (ShowQueriesRewrite.java)
+            return self.sql(shown)
         import re as _re
 
         if _re.search(r"\bJSON_TABLE\s*\(", stripped, _re.IGNORECASE):

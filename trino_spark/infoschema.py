@@ -1,77 +1,267 @@
-"""information_schema views + SHOW statement support.
+"""information_schema, the system connector's tables, and SHOW support.
 
-The reference rewrites SHOW TABLES/COLUMNS/SCHEMAS into SELECTs over
-information_schema before planning (core/trino-main/.../sql/rewrite/
-ShowQueriesRewrite.java; the schema itself is served by
-main/connector/informationschema/InformationSchemaMetadata.java). Same
-approach here: two temp views built from the engine catalog, plus a
-SHOW → SELECT rewrite used by TrinoEngine.sql.
+The reference answers metadata on the coordinator: information_schema
+(main/connector/informationschema/InformationSchemaMetadata.java) and
+the system connector (main/connector/system/) are relations the analyzer
+resolves like any other table, and SHOW statements become SELECTs over
+them before planning (core/trino-main/.../sql/rewrite/
+ShowQueriesRewrite.java). Same here: TABLES maps each dotted name to a
+schema and a row builder, `resolve` points every relation reference to
+one at a temp view built from the live engine when a statement names it,
+and `rewrite_show` turns SHOW into SELECTs over those names.
 """
 
 from __future__ import annotations
 
-import pyarrow as pa
+import re
+from typing import Callable, NamedTuple
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
-
-# Explicit schemas: an engine whose last table is dropped refreshes with
-# zero rows, from which no schema can be inferred.
-_TABLES = pa.schema(
-    [(n, pa.string()) for n in ("table_catalog", "table_schema", "table_name", "table_type")]
-)
-_COLUMNS = pa.schema(
-    [(n, pa.string()) for n in ("table_catalog", "table_schema", "table_name", "column_name")]
-    + [("ordinal_position", pa.int32()), ("data_type", pa.string())]
-)
+from trino_spark.dialect.dml import rows_result
+from trino_spark.dialect.tokenizer import Tok, render, structure, tokenize
 
 
-def register_information_schema(spark: SparkSession, tables: dict[str, list[tuple[str, str]]]) -> None:
-    """tables: name -> [(column_name, data_type)].
+class SystemTable(NamedTuple):
+    ddl: str  # Spark DDL schema of the rows
+    rows: Callable  # engine -> its rows for rows_result, in listing order
 
-    Both views are built from Arrow tables, so they plan as LocalRelations
-    and reading them runs no Spark job (from Python lists they would plan a
-    Scan ExistingRDD, a job through the Python workers)."""
-    trows = [
-        dict(table_catalog="spark", table_schema="default", table_name=t, table_type="BASE TABLE")
-        for t in sorted(tables)
+
+def _schemata(engine) -> list[tuple]:
+    # CREATE SCHEMA registers names only: the table namespace is flat
+    return [("spark", s) for s in sorted(set(getattr(engine, "schemas", ())) | {"default"})]
+
+
+def _tables(engine) -> list[tuple]:
+    names = (
+        set(engine.catalog._sources)
+        | set(getattr(engine, "dml_tables", ()))
+        | set(getattr(engine, "views", ()))
+        | set(engine.materialized_views)
+    )
+    return [("spark", "default", t, "BASE TABLE") for t in sorted(names)]
+
+
+def _columns(engine) -> list[tuple]:
+    out = []
+    for _cat, schema, table, _type in _tables(engine):
+        try:
+            fields = engine.spark.table(table).schema.fields
+        except AnalysisException:
+            continue  # a name whose view is gone
+        out += [
+            ("spark", schema, table, f.name, i + 1, f.dataType.simpleString())
+            for i, f in enumerate(fields)
+        ]
+    return out
+
+
+def _views(engine) -> list[tuple]:
+    # the engine's logical views + MVs (InformationSchemaPageSource VIEWS)
+    return [(n, d, "VIEW") for n, d in sorted(getattr(engine, "views", {}).items())] + [
+        (n, d, "MATERIALIZED VIEW") for n, d in sorted(engine.materialized_views.items())
     ]
-    crows = [
-        dict(
-            table_catalog="spark",
-            table_schema="default",
-            table_name=t,
-            column_name=c,
-            ordinal_position=i + 1,
-            data_type=dt,
+
+
+def _nodes(engine) -> list[tuple]:
+    # NodesSystemTable.java: one coordinator row in local mode; on a real
+    # cluster this would enumerate executors
+    sc = engine.spark.sparkContext
+    return [(sc.applicationId, sc.master, sc.version, True, "active")]
+
+
+def _tasks(engine) -> list[tuple]:
+    # TaskSystemTable.java: live execution tasks, one row per active
+    # Spark stage
+    sc = engine.spark.sparkContext
+    st = sc.statusTracker()
+    infos = [(sid, st.getStageInfo(sid)) for sid in st.getActiveStageIds()]
+    return [
+        (sc.applicationId, f"stage-{sid}", "RUNNING", i.numTasks, i.numActiveTasks,
+         i.numCompletedTasks, i.numFailedTasks)
+        for sid, i in infos
+        if i
+    ]
+
+
+def _catalogs(engine) -> list[tuple]:
+    # CatalogSystemTable.java: the session catalog + dynamic mounts
+    mounts = getattr(engine, "catalogs", {})
+    return sorted([("spark", "spark")] + [(n, m["connector"]) for n, m in mounts.items()])
+
+
+def _table_comments(engine) -> list[tuple]:
+    from trino_spark.dialect.access import _state
+
+    return sorted(_state(engine)["table_comments"].items())
+
+
+# {Schema,Table,Column,Analyze,MaterializedView}PropertiesSystemTable.java:
+# the property names the catalog accepts
+_PROPERTIES = {
+    "table_properties": [
+        ("format", "varchar", "PARQUET", "File format"),
+        ("location", "varchar", "", "Storage location"),
+        ("partitioned_by", "array(varchar)", "[]", "Partition columns"),
+        ("bucketed_by", "array(varchar)", "[]", "Bucketing columns"),
+        ("bucket_count", "integer", "0", "Number of buckets"),
+    ],
+    "schema_properties": [("location", "varchar", "", "Storage location")],
+    "column_properties": [],
+    "analyze_properties": [("columns", "array(varchar)", "[]", "Columns to analyze")],
+    "materialized_view_properties": [("storage_schema", "varchar", "", "Storage schema")],
+}
+
+# JdbcTypesSystemTable: type_name + java.sql.Types DATA_TYPE codes
+_JDBC_TYPES = [
+    ("boolean", 16), ("tinyint", -6), ("smallint", 5), ("integer", 4), ("bigint", -5),
+    ("real", 7), ("double", 8), ("decimal", 3), ("varchar", 12), ("char", 1),
+    ("varbinary", -3), ("date", 91), ("time", 92), ("timestamp", 93),
+    ("timestamp with time zone", 2014), ("array", 2003), ("map", 2000), ("row", 2002),
+    ("json", 2000),
+]
+
+TABLES: dict[str, SystemTable] = {
+    "information_schema.schemata": SystemTable(
+        "catalog_name string, schema_name string", _schemata
+    ),
+    "information_schema.tables": SystemTable(
+        "table_catalog string, table_schema string, table_name string, table_type string",
+        _tables,
+    ),
+    "information_schema.columns": SystemTable(
+        "table_catalog string, table_schema string, table_name string,"
+        " column_name string, ordinal_position int, data_type string",
+        _columns,
+    ),
+    "information_schema.views": SystemTable(
+        "table_name string, view_definition string, view_type string", _views
+    ),
+    "system.runtime.nodes": SystemTable(
+        "node_id string, http_uri string, node_version string, coordinator boolean,"
+        " state string",
+        _nodes,
+    ),
+    "system.runtime.tasks": SystemTable(
+        "node_id string, task_id string, state string, splits int, running_splits int,"
+        " completed_splits int, failed_splits int",
+        _tasks,
+    ),
+    # QuerySystemTable.java: one row per query record, live ones included
+    "system.runtime.queries": SystemTable(
+        "query_id string, state string, user string, query string, elapsed_ms double,"
+        " created timestamp, started timestamp, `end` timestamp",
+        lambda engine: engine.queries.table(),
+    ),
+    "system.metadata.catalogs": SystemTable(
+        "catalog_name string, connector_name string", _catalogs
+    ),
+    **{
+        f"system.metadata.{name}": SystemTable(
+            "catalog_name string, property_name string, type string,"
+            " default_value string, description string",
+            lambda engine, props=props: [("spark", *p) for p in props],
         )
-        for t, cols in sorted(tables.items())
-        for i, (c, dt) in enumerate(cols)
-    ]
-    spark.createDataFrame(pa.Table.from_pylist(trows, _TABLES)).createOrReplaceTempView(
-        "information_schema_tables"
-    )
-    spark.createDataFrame(pa.Table.from_pylist(crows, _COLUMNS)).createOrReplaceTempView(
-        "information_schema_columns"
-    )
+        for name, props in _PROPERTIES.items()
+    },
+    # MaterializedViewSystemTable.java: name/definition/freshness
+    "system.metadata.materialized_views": SystemTable(
+        "name string, definition string, freshness string",
+        lambda engine: [
+            (n, d, engine._mv_freshness(n)) for n, d in sorted(engine.materialized_views.items())
+        ],
+    ),
+    "system.metadata.table_comments": SystemTable(
+        "table_name string, comment string", _table_comments
+    ),
+    # the system.jdbc schema (JdbcSystemTables serving JDBC driver
+    # DatabaseMetaData), read off information_schema
+    "system.jdbc.tables": SystemTable(
+        "table_cat string, table_schem string, table_name string, table_type string",
+        lambda engine: [("spark", s, t, "TABLE") for _c, s, t, _t in _tables(engine)],
+    ),
+    "system.jdbc.schemas": SystemTable(
+        "table_schem string, table_catalog string",
+        lambda engine: sorted({(s, "spark") for _c, s, _t, _ty in _tables(engine)}),
+    ),
+    "system.jdbc.columns": SystemTable(
+        "table_cat string, table_schem string, table_name string, column_name string,"
+        " type_name string, ordinal_position int",
+        lambda engine: [
+            ("spark", s, t, c, dt, pos) for _cat, s, t, c, pos, dt in _columns(engine)
+        ],
+    ),
+    "system.jdbc.table_types": SystemTable(
+        "table_type string", lambda engine: [("TABLE",), ("VIEW",)]
+    ),
+    "system.jdbc.catalogs": SystemTable("table_cat string", lambda engine: [("spark",)]),
+    "system.jdbc.types": SystemTable(
+        "type_name string, data_type int", lambda engine: _JDBC_TYPES
+    ),
+}
+
+
+def _view(key: str) -> str:
+    return "_" + key.replace(".", "_")
+
+
+# the temp views `resolve` builds; access control lets any role read them
+VIEWS = frozenset(map(_view, TABLES))
+# a reference's name parts (unquoted, lower case) -> its TABLES key; the
+# flat `information_schema_columns` spelling resolves too
+_REFS = {tuple(k.split(".")): k for k in TABLES} | {(k.replace(".", "_"),): k for k in TABLES}
+# every name in _REFS contains one of these, in any case: a statement
+# without either is not tokenized here
+_GATE = re.compile("system|information_schema", re.IGNORECASE)
+
+
+def resolve(engine, sql: str) -> str:
+    """Point each relation reference to a TABLES entry (any case, quoted
+    parts unquoted, never text inside a literal or a comment) at a temp
+    view of its rows, built from the live engine now."""
+    if not _GATE.search(sql):
+        return sql
+    toks = tokenize(sql)
+    built: set[str] = set()
+    for ref in reversed(structure(toks).relations):
+        parts = tuple(t.text.strip('"').lower() for t in toks[ref.start : ref.end : 2])
+        key = _REFS.get(parts)
+        if key is None or not ref.read or ref.shadowed:
+            continue
+        if key not in built:
+            table = TABLES[key]
+            rows = rows_result(engine.spark, table.rows(engine), table.ddl)
+            rows.createOrReplaceTempView(_view(key))
+            built.add(key)
+        toks[ref.start : ref.end] = [Tok("WORD", _view(key))]
+    return render(toks)
 
 
 def rewrite_show(sql: str) -> str | None:
-    """SHOW TABLES / SHOW COLUMNS FROM t / SHOW SCHEMAS → SELECTs.
-    Returns None when `sql` is not a SHOW statement."""
+    """SHOW TABLES / SCHEMAS / CATALOGS [LIKE p] / COLUMNS FROM t and
+    DESCRIBE t → SELECTs over TABLES; None when `sql` is none of them. The
+    builders emit rows in listing order, so no ORDER BY is needed and the
+    SELECT plans as a LocalRelation (a Sort would run a Spark job)."""
     words = sql.strip().rstrip(";").split()
+    if len(words) == 2 and words[0].upper() == "DESCRIBE":
+        words = ["SHOW", "COLUMNS", "FROM", words[1]]
     if not words or words[0].upper() != "SHOW":
         return None
     kind = words[1].upper() if len(words) > 1 else ""
     if kind == "TABLES":
-        return "SELECT table_name FROM information_schema_tables ORDER BY table_name"
+        return "SELECT table_name FROM information_schema.tables"
     if kind == "SCHEMAS":
-        return "SELECT DISTINCT table_schema AS schema_name FROM information_schema_tables"
+        return "SELECT schema_name FROM information_schema.schemata"
+    if kind == "CATALOGS":
+        like = re.search(r"\bLIKE\s+('(?:[^']|'')*')", sql, re.IGNORECASE)
+        where = f" WHERE catalog_name LIKE {like.group(1)}" if like else ""
+        return f"SELECT catalog_name AS catalog FROM system.metadata.catalogs{where}"
     if kind == "COLUMNS" and len(words) >= 4 and words[2].upper() in ("FROM", "IN"):
         t = words[3].strip('"')
         return (
             "SELECT column_name, data_type, ordinal_position "
-            f"FROM information_schema_columns WHERE table_name = '{t}' "
-            "ORDER BY ordinal_position"
+            f"FROM information_schema.columns WHERE table_name = '{t}'"
         )
     return None
 
@@ -92,8 +282,7 @@ def show_stats(spark: SparkSession, table: str, cache: dict | None = None, popul
     never-analyzed table always computes fresh, so refreshed MVs or
     re-registered generator views cannot serve stale numbers."""
     if cache is not None and table in cache:
-        rows, schema = cache[table]
-        return spark.createDataFrame(rows, schema)
+        return rows_result(spark, *cache[table])
     from pyspark.sql import functions as F
     from pyspark.sql.types import NumericType, StringType
 
@@ -134,4 +323,4 @@ def show_stats(spark: SparkSession, table: str, cache: dict | None = None, popul
     )
     if cache is not None and populate:
         cache[table] = (out, schema)
-    return spark.createDataFrame(out, schema)
+    return rows_result(spark, out, schema)

@@ -88,8 +88,8 @@ def materialized(spark: SparkSession, df: DataFrame) -> DataFrame:
 
 def engine_for(spark: SparkSession, sf_dir: str):
     """One shared TrinoEngine per (session, sf_dir) — engine construction
-    registers testdata views + information_schema (~1 s), so query
-    builders that dispatch SQL text must not each build their own."""
+    registers the testdata views (~1 s), so query builders that dispatch
+    SQL text must not each build their own."""
     from trino_spark.dialect import TrinoEngine
 
     key = f"_shared_engine_{sf_dir}"
