@@ -6,9 +6,11 @@ operation.
 The DML lifecycle queries pin fixed scenarios; this fuzzer walks random
 paths through the same machinery — interleaved inserts into existing and
 new partitions, predicate updates that touch zero/some/all partitions,
-range deletes, column updates feeding later predicates — where
-copy-on-write bookkeeping bugs (stale carry, missed partition, double
-apply) would surface as a state divergence.
+range deletes, column updates feeding later predicates, a column default
+that later column-list inserts fill, RENAME TO and back — where
+copy-on-write or table-record bookkeeping bugs (stale carry, missed
+partition, double apply, lost default) would surface as a state
+divergence.
 
 Usage: python scripts/dml_fuzz.py [n_ops] [seed]
 """
@@ -27,13 +29,14 @@ _CATS = ["'red'", "'green'", "'blue'", "'gold'"]
 
 def gen_op(
     rng: random.Random, table: str, next_k: list[int], added: list[str]
-) -> tuple[str, list[str]]:
-    """One random DML/DDL statement → (engine_sql, duckdb_sqls).
+) -> tuple[list[str], list[str]]:
+    """One random DML/DDL op → (engine_sqls, duckdb_sqls).
 
-    Most ops share one text; MERGE is emulated on the DuckDB side with
-    UPDATE..FROM + anti-join INSERT (DuckDB 1.0 has no MERGE)."""
+    Most ops are one statement with one text; MERGE is emulated on the
+    DuckDB side with UPDATE..FROM + anti-join INSERT (DuckDB 1.0 has no
+    MERGE)."""
     choices = ["insert", "insert", "update_v", "update_cat", "delete", "merge",
-               "alter_add", "insert_cols"]
+               "alter_add", "insert_cols", "set_default", "rename"]
     if added:
         choices += ["alter_drop", "update_added"]
     kind = rng.choice(choices)
@@ -46,37 +49,48 @@ def gen_op(
             vals += [str(rng.randint(0, 9)) for _ in added]
             rows.append("(" + ", ".join(vals) + ")")
         stmt = f"INSERT INTO {table} VALUES " + ", ".join(rows)
-        return stmt, [stmt]
+        return [stmt], [stmt]
     if kind == "insert_cols":
-        # column-list INSERT: unmentioned columns (v + any added) get NULL
+        # column-list INSERT: unmentioned columns get their default (v, once
+        # set_default ran) or NULL
         k = next_k[0]
         next_k[0] += 1
         stmt = f"INSERT INTO {table} (k, cat) VALUES ({k}, {rng.choice(_CATS)})"
-        return stmt, [stmt]
+        return [stmt], [stmt]
     if kind == "update_v":
         m, r = rng.choice([(2, 0), (2, 1), (3, 0), (3, 2), (5, 1)])
         stmt = (
             f"UPDATE {table} SET v = v + {rng.randint(1, 9)} "
             f"WHERE k % {m} = {r}"
         )
-        return stmt, [stmt]
+        return [stmt], [stmt]
     if kind == "update_cat":
         a, b = rng.sample(_CATS, 2)
         stmt = f"UPDATE {table} SET cat = {a} WHERE cat = {b} AND v < {rng.randint(20, 90)}"
-        return stmt, [stmt]
+        return [stmt], [stmt]
     if kind == "update_added":
         col = rng.choice(added)
         stmt = f"UPDATE {table} SET {col} = k % {rng.randint(2, 7)} WHERE v > {rng.randint(10, 60)}"
-        return stmt, [stmt]
+        return [stmt], [stmt]
+    if kind == "set_default":
+        stmt = f"ALTER TABLE {table} ALTER COLUMN v SET DEFAULT {rng.randint(0, 99)}"
+        return [stmt], [stmt]
+    if kind == "rename":
+        # to a temporary name and back: everything of the table moves twice
+        stmts = [
+            f"ALTER TABLE {table} RENAME TO {table}_tmp",
+            f"ALTER TABLE {table}_tmp RENAME TO {table}",
+        ]
+        return stmts, stmts
     if kind == "alter_add":
         col = f"x{len(added)}_{rng.randint(0, 999)}"
         added.append(col)
         stmt = f"ALTER TABLE {table} ADD COLUMN {col} BIGINT"
-        return stmt, [stmt]
+        return [stmt], [stmt]
     if kind == "alter_drop":
         col = added.pop(rng.randrange(len(added)))
         stmt = f"ALTER TABLE {table} DROP COLUMN {col}"
-        return stmt, [stmt]
+        return [stmt], [stmt]
     if kind == "merge":
         src_rows = []
         used: set[int] = set()
@@ -106,10 +120,10 @@ def gen_op(
             f"FROM (VALUES {vals}) AS s(k, cat, v) "
             f"WHERE k NOT IN (SELECT k FROM {table})",
         ]
-        return engine_stmt, duck
+        return [engine_stmt], duck
     lo = rng.randint(0, next_k[0])
     stmt = f"DELETE FROM {table} WHERE k BETWEEN {lo} AND {lo + rng.randint(0, 6)}"
-    return stmt, [stmt]
+    return [stmt], [stmt]
 
 
 def fuzz_dml(
@@ -180,9 +194,11 @@ def fuzz_dml(
             txn_added_snapshot = list(added)
             eng.sql("START TRANSACTION")
             con.execute("BEGIN")
-        op, duck_ops = gen_op(rng, table, next_k, added)
+        eng_ops, duck_ops = gen_op(rng, table, next_k, added)
+        op = "; ".join(eng_ops)
         try:
-            eng.sql(op)
+            for stmt in eng_ops:
+                eng.sql(stmt)
         except Exception as exc:
             bad.append(f"op{i} ENGINE ERROR {op}: {str(exc).splitlines()[0][:160]}")
             break

@@ -43,11 +43,9 @@ class TestBranches:
         assert engine.sql(f"SELECT count(*) c FROM {table} FOR VERSION AS OF 1").collect()[0].c == 25
 
     def test_branch_fork_shares_inodes(self, engine, table, spark):
-        from trino_spark.dialect.dml import _managed
-
         engine.sql(f"CREATE BRANCH cheap IN TABLE {table}")
-        main_dir = _managed(engine)[table]
-        br_dir = _managed(engine)[f"{table}__branch_cheap"]
+        main_dir = engine.dml_tables[table].path
+        br_dir = engine.dml_tables[f"{table}__branch_cheap"].path
         main_inodes = {
             f: os.stat(os.path.join(main_dir, f)).st_ino
             for f in os.listdir(main_dir) if f.endswith(".parquet")
@@ -86,6 +84,22 @@ class TestBranches:
         engine.sql(f"CREATE BRANCH IF NOT EXISTS dup IN TABLE {table}")
         engine.sql(f"CREATE OR REPLACE BRANCH dup IN TABLE {table}")
 
+    def test_forks_are_not_tables(self, engine, table):
+        # a branch is read as t@b: its fork is not listed as a table, and
+        # DROP TABLE drops it with the table
+        fork = f"{table}__branch_dev"
+        engine.sql(f"CREATE BRANCH dev IN TABLE {table}")
+        listed = {r.table_name for r in engine.sql("SHOW TABLES").collect()}
+        assert table in listed and fork not in listed
+        listed = {
+            r.table_name for r in engine.sql("SELECT * FROM information_schema.tables").collect()
+        }
+        assert table in listed and fork not in listed
+        engine.sql(f"DROP TABLE {table}")
+        assert fork not in {r.table_name for r in engine.sql("SHOW TABLES").collect()}
+        with pytest.raises(Exception):
+            engine.sql(f"SELECT * FROM {fork}").collect()
+
     def test_branch_to_branch_fast_forward(self, engine, table):
         engine.sql(f"CREATE BRANCH a IN TABLE {table}")
         engine.sql(f"CREATE BRANCH b IN TABLE {table}")
@@ -97,11 +111,11 @@ class TestBranches:
 
 class TestTableProcedures:
     def test_optimize_compacts_to_single_file(self, engine, table):
-        from trino_spark.dialect.dml import _file_count, _managed
+        from trino_spark.dialect.dml import _file_count
 
         for i in (1, 2, 3):
             engine.sql(f"INSERT INTO {table} SELECT n_nationkey + {100 * i}, n_name, n_regionkey FROM nation")
-        before = _file_count(_managed(engine)[table])
+        before = _file_count(engine.dml_tables[table].path)
         assert before >= 4
         out = engine.sql(f"ALTER TABLE {table} EXECUTE optimize").collect()[0]
         assert out.files_before == before and out.files_after == 1
@@ -110,7 +124,7 @@ class TestTableProcedures:
         assert engine.sql(f"SELECT count(*) c FROM {table} FOR VERSION AS OF 4").collect()[0].c == 100
 
     def test_scoped_optimize_preserves_untouched_partitions(self, engine, spark):
-        from trino_spark.dialect.dml import _file_count, _managed
+        from trino_spark.dialect.dml import _file_count
 
         name = f"brtp_{os.getpid()}"
         engine.sql(f"DROP TABLE IF EXISTS {name}")
@@ -120,7 +134,7 @@ class TestTableProcedures:
         )
         for i in (1, 2):
             engine.sql(f"INSERT INTO {name} SELECT n_nationkey + {100 * i}, n_name, n_regionkey FROM nation")
-        path = _managed(engine)[name]
+        path = engine.dml_tables[name].path
         r4_inodes = {
             f: os.stat(os.path.join(path, "r=4", f)).st_ino
             for f in os.listdir(os.path.join(path, "r=4")) if f.endswith(".parquet")
@@ -202,11 +216,25 @@ class TestStatementSurface:
         engine.sql(f"CREATE TABLE {tbl} (k BIGINT, status VARCHAR)")
         engine.sql(f"ALTER TABLE {tbl} ALTER COLUMN status SET DEFAULT 'new'")
         engine.sql(f"INSERT INTO {tbl} (k) VALUES (CAST(1 AS BIGINT))")
+        # a branch of the table fills the same default
+        engine.sql(f"CREATE BRANCH dev IN TABLE {tbl}")
+        engine.sql(f"INSERT INTO {tbl}@dev (k) VALUES (CAST(3 AS BIGINT))")
+        rows = engine.sql(f"SELECT k, status FROM {tbl}@dev WHERE k = 3").collect()
+        assert [tuple(r) for r in rows] == [(3, "new")]
         engine.sql(f"ALTER TABLE {tbl} ALTER COLUMN status DROP DEFAULT")
         engine.sql(f"INSERT INTO {tbl} (k) VALUES (CAST(2 AS BIGINT))")
         rows = {r.k: r.status for r in engine.sql(f"SELECT k, status FROM {tbl}").collect()}
         assert rows == {1: "new", 2: None}
         engine.sql(f"ALTER TABLE {tbl} ALTER COLUMN status DROP NOT NULL")  # accepted no-op
+        # a default follows its column's rename and goes with the column
+        engine.sql(f"ALTER TABLE {tbl} ALTER COLUMN status SET DEFAULT 'again'")
+        engine.sql(f"ALTER TABLE {tbl} RENAME COLUMN status TO state")
+        engine.sql(f"INSERT INTO {tbl} (k) VALUES (CAST(4 AS BIGINT))")
+        assert engine.sql(f"SELECT state FROM {tbl} WHERE k = 4").collect()[0].state == "again"
+        engine.sql(f"ALTER TABLE {tbl} DROP COLUMN state")
+        engine.sql(f"ALTER TABLE {tbl} ADD COLUMN state VARCHAR")
+        engine.sql(f"INSERT INTO {tbl} (k) VALUES (CAST(5 AS BIGINT))")
+        assert engine.sql(f"SELECT state FROM {tbl} WHERE k = 5").collect()[0].state is None
         engine.sql(f"DROP TABLE {tbl}")
 
     def test_show_create_function_and_set_path(self, engine):

@@ -147,12 +147,18 @@ class TestTransactions:
 
     def test_rollback_restores_pre_txn_state(self, engine):
         engine.sql("DROP TABLE IF EXISTS txn_t")
-        engine.sql("CREATE TABLE txn_t AS SELECT n_nationkey AS k FROM nation")
+        engine.sql("CREATE TABLE txn_t AS SELECT n_nationkey AS k, n_regionkey AS r FROM nation")
         engine.sql("START TRANSACTION")
         engine.sql("DELETE FROM txn_t WHERE k < 20")
+        engine.sql("ALTER TABLE txn_t ALTER COLUMN r SET DEFAULT 9")
+        engine.sql("ALTER TABLE txn_t SET PROPERTIES owner_note = 'in-txn'")
         assert engine.sql("SELECT count(*) AS c FROM txn_t").collect()[0].c == 5
         engine.sql("ROLLBACK")
         assert engine.sql("SELECT count(*) AS c FROM txn_t").collect()[0].c == 25
+        # the default and the property set inside rewind with the data
+        assert engine.sql('SELECT * FROM "txn_t$properties"').collect() == []
+        engine.sql("INSERT INTO txn_t (k) VALUES (100)")
+        assert engine.sql("SELECT r FROM txn_t WHERE k = 100").collect()[0].r is None
         engine.sql("DROP TABLE txn_t")
 
     def test_commit_keeps_changes(self, engine):
@@ -166,12 +172,18 @@ class TestTransactions:
 
     def test_rollback_drops_tables_created_in_txn(self, engine):
         engine.sql("START TRANSACTION")
-        engine.sql("CREATE TABLE txn_new AS SELECT 1 AS x")
+        engine.sql("CREATE TABLE txn_new AS SELECT 1 AS x, 'a' AS s")
+        engine.sql("ALTER TABLE txn_new ALTER COLUMN s SET DEFAULT 'in-txn'")
         engine.sql("ROLLBACK")
         import pytest as _pytest
 
         with _pytest.raises(Exception):
             engine.sql("SELECT * FROM txn_new").collect()
+        # nothing of it is left for the next table of that name
+        engine.sql("CREATE TABLE txn_new AS SELECT 1 AS x, 'a' AS s")
+        engine.sql("INSERT INTO txn_new (x) VALUES (2)")
+        assert engine.sql("SELECT s FROM txn_new WHERE x = 2").collect()[0].s is None
+        engine.sql("DROP TABLE txn_new")
 
     def test_rollback_restores_dropped_table(self, engine):
         engine.sql("DROP TABLE IF EXISTS txn_d")
@@ -283,6 +295,49 @@ def test_system_runtime_nodes_and_infoschema_views(engine):
     engine.sql("DROP VIEW isv_demo")
 
 
+def test_infoschema_lists_views_as_views(engine):
+    # information_schema.tables and system.jdbc.tables type logical and
+    # materialized views as views (InformationSchemaPageSource, JDBC
+    # getTables), tables as tables
+    engine.sql("CREATE OR REPLACE VIEW itv_v AS SELECT 1 AS a")
+    engine.sql("CREATE OR REPLACE MATERIALIZED VIEW itv_mv AS SELECT 2 AS a")
+    engine.sql("CREATE TABLE itv_t AS SELECT 3 AS a")
+    try:
+        names = ("itv_v", "itv_mv", "itv_t", "nation")
+        types = {
+            r.table_name: r.table_type
+            for r in engine.sql("SELECT * FROM information_schema.tables").collect()
+            if r.table_name in names
+        }
+        assert types == {"itv_v": "VIEW", "itv_mv": "VIEW", "itv_t": "BASE TABLE", "nation": "BASE TABLE"}
+        jdbc = {
+            r.table_name: r.table_type
+            for r in engine.sql("SELECT * FROM system.jdbc.tables").collect()
+            if r.table_name in names
+        }
+        assert jdbc == {"itv_v": "VIEW", "itv_mv": "VIEW", "itv_t": "TABLE", "nation": "TABLE"}
+    finally:
+        engine.sql("DROP VIEW itv_v")
+        engine.sql("DROP MATERIALIZED VIEW itv_mv")
+        engine.sql("DROP TABLE itv_t")
+
+
+def test_view_over_system_table_keeps_its_text(engine):
+    # the stored definition is the statement's own text, not the internal
+    # name its rows were built under
+    engine.sql("CREATE OR REPLACE VIEW sysq_v AS SELECT query FROM system.runtime.queries")
+    try:
+        defs = {
+            r.table_name: r.view_definition
+            for r in engine.sql("SELECT * FROM information_schema.views").collect()
+        }
+        assert defs["sysq_v"] == "SELECT query FROM system.runtime.queries"
+        shown = engine.sql("SHOW CREATE VIEW sysq_v").collect()[0].create_view
+        assert shown == "CREATE VIEW sysq_v AS\nSELECT query FROM system.runtime.queries"
+    finally:
+        engine.sql("DROP VIEW sysq_v")
+
+
 def test_show_tables_reflects_ddl(engine):
     engine.sql("CREATE TABLE st_demo AS SELECT 1 AS x")
     names = {r.table_name for r in engine.sql("SHOW TABLES").collect()}
@@ -303,12 +358,12 @@ def test_ctas_with_partitioned_by(engine):
         "SELECT n_nationkey AS k, n_regionkey AS r FROM nation"
     ).collect()[0][0]
     assert n == 25
-    path = engine.dml_tables["part_t"]
+    path = engine.dml_tables["part_t"].path
     assert any(d.startswith("r=") for d in os.listdir(path))
     # mutations preserve the partitioned layout
     engine.sql("DELETE FROM part_t WHERE r = 4")
-    assert not any(d == "r=4" for d in os.listdir(engine.dml_tables["part_t"]))
-    assert any(d.startswith("r=") for d in os.listdir(engine.dml_tables["part_t"]))
+    assert not any(d == "r=4" for d in os.listdir(engine.dml_tables["part_t"].path))
+    assert any(d.startswith("r=") for d in os.listdir(engine.dml_tables["part_t"].path))
     assert engine.sql("SELECT count(*) AS c FROM part_t").collect()[0].c == 20
     engine.sql("DROP TABLE part_t")
 

@@ -41,7 +41,7 @@ def _fresh(engine, name, partitioned=True):
         f"CREATE TABLE {name} {with_clause}AS "
         "SELECT n_nationkey AS k, n_name AS name, n_regionkey AS r FROM nation"
     )
-    return engine.dml_tables[name]
+    return engine.dml_tables[name].path
 
 
 class TestPartitionScopedRewrite:
@@ -223,26 +223,67 @@ class TestLayoutHygiene:
         _fresh(engine, "lay_t")
         engine.sql("DROP TABLE lay_t")
         engine.sql("CREATE TABLE lay_t AS SELECT 1 AS a, 2 AS b")
-        path = engine.dml_tables["lay_t"]
+        path = engine.dml_tables["lay_t"].path
         assert not any(d.startswith("r=") for d in os.listdir(path))
+        engine.sql("DROP TABLE lay_t")
+        # nor its column defaults and properties, re-created from a column
+        # list or by CTAS
+        engine.sql("CREATE TABLE lay_t (a bigint, b varchar)")
+        for create in (
+            "CREATE TABLE lay_t (a bigint, b varchar)",
+            "CREATE TABLE lay_t AS SELECT CAST(5 AS BIGINT) AS a, 'x' AS b",
+        ):
+            engine.sql("ALTER TABLE lay_t ALTER COLUMN b SET DEFAULT 'old-default'")
+            engine.sql("ALTER TABLE lay_t SET PROPERTIES owner_note = 'old-prop'")
+            engine.sql("DROP TABLE lay_t")
+            engine.sql(create)
+            engine.sql("INSERT INTO lay_t (a) VALUES (6)")
+            assert engine.sql("SELECT b FROM lay_t WHERE a = 6").collect()[0].b is None
+            assert engine.sql('SELECT * FROM "lay_t$properties"').collect() == []
         engine.sql("DROP TABLE lay_t")
 
     def test_rename_moves_layout_and_versions(self, engine):
         path = _fresh(engine, "lay_r")
         engine.sql("DELETE FROM lay_r WHERE r = 0")  # v2
+        engine.sql("ALTER TABLE lay_r ALTER COLUMN name SET DEFAULT 'moved'")
+        engine.sql("ALTER TABLE lay_r SET PROPERTIES owner_note = 'moved'")
         engine.sql("ALTER TABLE lay_r RENAME TO lay_r2")
-        assert "lay_r" not in engine._dml_layouts and engine._dml_layouts["lay_r2"] == ["r"]
+        assert "lay_r" not in engine.dml_tables and engine.dml_tables["lay_r2"].partition_by == ["r"]
         assert engine.sql(
             "SELECT count(*) AS c FROM lay_r2 FOR VERSION AS OF 1"
         ).collect()[0].c == 25
+        # defaults and properties move with the table too
+        props = engine.sql('SELECT key, value FROM "lay_r2$properties"').collect()
+        assert [tuple(r) for r in props] == [("owner_note", "moved")]
+        engine.sql("INSERT INTO lay_r2 (k, r) VALUES (100, 0)")
+        assert engine.sql("SELECT name FROM lay_r2 WHERE k = 100").collect()[0].name == "moved"
         # partition-scoped path still applies after the rename
-        before = _inodes(engine.dml_tables["lay_r2"])
+        before = _inodes(engine.dml_tables["lay_r2"].path)
         engine.sql("DELETE FROM lay_r2 WHERE r = 2")
-        after = _inodes(engine.dml_tables["lay_r2"])
+        after = _inodes(engine.dml_tables["lay_r2"].path)
         assert {p: i for p, i in after.items() if "r=" in p and "r=2" not in p} == {
             p: i for p, i in before.items() if "r=" in p and "r=2" not in p
         }
         engine.sql("DROP TABLE lay_r2")
+
+    def test_ctas_over_table_another_engine_left(self, spark):
+        # An earlier process (here: another engine over the same warehouse)
+        # left lay_h undropped; a new table of that name starts its own log
+        # and branches instead of inheriting the ones it left.
+        earlier = TrinoEngine(spark)
+        _fresh(earlier, "lay_h")
+        earlier.sql("DELETE FROM lay_h WHERE r = 0")  # v2
+        earlier.sql("CREATE BRANCH dev IN TABLE lay_h")
+        fresh = TrinoEngine(spark)
+        fresh.sql("CREATE TABLE lay_h AS SELECT 7 AS k")
+        try:
+            snaps = fresh.sql('SELECT version, is_current FROM "lay_h$snapshots"').collect()
+            assert [tuple(r) for r in snaps] == [(1, True)]
+            old = fresh.sql("SELECT k FROM lay_h FOR VERSION AS OF 1").collect()
+            assert [r.k for r in old] == [7]
+            fresh.sql("CREATE BRANCH dev IN TABLE lay_h")  # not "already exists"
+        finally:
+            fresh.sql("DROP TABLE lay_h")
 
     def test_ctas_over_existing_raises(self, engine):
         _fresh(engine, "lay_e", partitioned=False)
@@ -291,9 +332,10 @@ def test_partition_scoped_scan_is_partition_pruned(engine):
     from pyspark.sql import functions as F
 
     _fresh(engine, "pp_plan")
-    df = dml_mod._read(engine, "pp_plan")
+    rec = engine.dml_tables["pp_plan"]
+    df = dml_mod._stored(engine, rec)
     pred = F.coalesce(F.expr("r = 2"), F.lit(False))
-    cond, untouched = dml_mod._affected_partitions(engine, "pp_plan", df, pred)
+    cond, untouched = dml_mod._affected_partitions(rec, df, pred)
     assert untouched and cond is not None
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -362,7 +404,7 @@ def test_partition_column_ddl_guards(engine):
     with pytest.raises(ValueError, match="partition column"):
         engine.sql("ALTER TABLE pc_ddl DROP COLUMN r")
     engine.sql("ALTER TABLE pc_ddl RENAME COLUMN r TO region_k")
-    assert engine._dml_layouts["pc_ddl"] == ["region_k"]
+    assert engine.dml_tables["pc_ddl"].partition_by == ["region_k"]
     engine.sql("DELETE FROM pc_ddl WHERE region_k = 0")  # layout still valid
     assert engine.sql("SELECT count(*) AS c FROM pc_ddl").collect()[0].c == 20
     engine.sql("DROP TABLE pc_ddl")

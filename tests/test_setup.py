@@ -92,7 +92,7 @@ def partitioned(fresh):
 
 
 def test_partitioned_dml_table_schema_from_footer(partitioned):
-    session, path = partitioned.spark, partitioned.dml_tables["setup_part"]
+    session, path = partitioned.spark, partitioned.dml_tables["setup_part"].path
     before = _jobs(session)
     df = read_parquet(session, path)
     assert _jobs(session) == before

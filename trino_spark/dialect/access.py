@@ -69,22 +69,6 @@ class AccessDenied(PermissionError):
     pass
 
 
-def _state(engine):
-    if not hasattr(engine, "_acl"):
-        engine._acl = {
-            "roles": {},  # role -> {(priv, table)}
-            "current": None,  # None = owner/allow-all
-            "table_comments": {},
-            "column_comments": {},  # (table, col) -> text
-            "row_filters": {},  # (role, table) -> predicate SQL
-            "column_masks": {},  # (role, table) -> {col: mask expr SQL}
-        }
-    # older engine instances may lack the security maps
-    engine._acl.setdefault("row_filters", {})
-    engine._acl.setdefault("column_masks", {})
-    return engine._acl
-
-
 def _effective_roles(st, role: str) -> set:
     """`role` plus every role transitively granted TO it (GRANT r1 TO
     ROLE r2 makes r2 inherit r1's privileges — the reference's role
@@ -102,7 +86,7 @@ def _effective_roles(st, role: str) -> set:
 
 
 def try_execute(engine, sql: str) -> DataFrame | None:
-    st = _state(engine)
+    st = engine._acl
     s = sql.strip().rstrip(";")
     up = s.upper().split()
     spark = engine.spark
@@ -247,7 +231,7 @@ def try_execute(engine, sql: str) -> DataFrame | None:
 
 
 def _grant_revoke(engine, s: str, revoke: bool) -> DataFrame:
-    st = _state(engine)
+    st = engine._acl
     kw = "REVOKE" if revoke else "GRANT"
     to_kw = "FROM" if revoke else "TO"
     m = re.match(
@@ -286,7 +270,7 @@ def enforce(engine, sql: str) -> None:
     reads (FROM lists at any depth, joins, parenthesised relations,
     `TABLE t`) → SELECT. A DML/DDL statement's target is its first
     relation reference (tokenizer.structure)."""
-    st = _state(engine)
+    st = engine._acl
     role = st["current"]
     if role is None:
         return
@@ -326,7 +310,7 @@ def enforce(engine, sql: str) -> None:
         # view name — a SELECT grant on t must satisfy reads of t's
         # snapshots (previously this always failed as 'SELECT on t__v1').
         tt = re.match(r"(.+?)__(?:v\d+|snapshots)$", name)
-        if tt and tt.group(1) in getattr(engine, "dml_tables", {}):
+        if tt and tt.group(1) in engine.dml_tables:
             name = tt.group(1)
         if name in infoschema.VIEWS:
             # information_schema / system tables stay readable under any
@@ -343,7 +327,7 @@ def enforce(engine, sql: str) -> None:
         if (
             not must_check
             and not engine.spark.catalog.tableExists(tbl)
-            and tbl not in getattr(engine, "dml_tables", {})
+            and tbl not in engine.dml_tables
         ):
             continue  # not a relation (alias, subquery result, etc.)
         # Derived names (time-travel views t__vN, branch forks t__branch_b)
@@ -351,7 +335,7 @@ def enforce(engine, sql: str) -> None:
         # its snapshots and branches (reference: branch refs share the
         # table's ConnectorAccessControl checks).
         base = re.match(r"(.+?)__(?:v\d+|snapshots|branch_\w+)$", tbl)
-        if base and base.group(1) in getattr(engine, "dml_tables", {}):
+        if base and base.group(1) in engine.dml_tables:
             tbl = base.group(1)
         denies = set().union(
             *(st.get("denies", {}).get(r, set()) for r in eff)
@@ -370,7 +354,7 @@ def enforce(engine, sql: str) -> None:
 def add_row_filter(engine, role: str, table: str, predicate_sql: str) -> None:
     """Attach a row-filter predicate for (role, table) —
     ConnectorAccessControl.getRowFilters ViewExpression analog."""
-    st = _state(engine)
+    st = engine._acl
     if st["current"] is not None:
         raise AccessDenied("Access Denied: only the owner session defines security rules")
     if role.lower() not in st["roles"]:
@@ -382,7 +366,7 @@ def add_column_mask(engine, role: str, table: str, column: str, mask_sql: str) -
     """Attach a masking expression for (role, table, column) —
     ConnectorAccessControl.getColumnMasks analog. The expression may
     reference the column itself (e.g. partial redaction)."""
-    st = _state(engine)
+    st = engine._acl
     if st["current"] is not None:
         raise AccessDenied("Access Denied: only the owner session defines security rules")
     if role.lower() not in st["roles"]:
@@ -397,7 +381,7 @@ def apply_security(engine, sql: str) -> str:
     Applies to every statement whose reads go through this dispatch —
     including the SELECT side of INSERT ... SELECT (the reference also
     filters the read half, not the written rows)."""
-    st = _state(engine)
+    st = engine._acl
     role = st["current"]
     if role is None:
         return sql
@@ -466,7 +450,7 @@ def dml_target_security(engine, table: str) -> tuple[str | None, dict[str, str]]
     during analysis regardless of statement kind), so a filtered role's DML
     must leave invisible rows untouched — dml.py ANDs this predicate into
     the statement predicate and routes fragments through `mask_fragment`."""
-    st = _state(engine)
+    st = engine._acl
     role = st["current"]
     if role is None:
         return None, {}
@@ -604,7 +588,7 @@ def try_execute_call(engine, sql: str) -> "DataFrame | None":
             "role: string, table_name: string, column_name: string",
         )
     if name == "drop_row_filter":
-        st = _state(engine)
+        st = engine._acl
         st["row_filters"].pop((str(_lit(args[0])).lower(), str(_lit(args[1])).lower()), None)
         return rows_result(spark, [(str(_lit(args[1])),)], "table_name: string")
     if name == "kill_query":
@@ -640,7 +624,7 @@ def try_execute_call(engine, sql: str) -> "DataFrame | None":
         _cancel_until_closed(sc, rec)
         return rows_result(spark, [(qid, msg)], "query_id: string, message: string")
     if name == "drop_column_mask":
-        st = _state(engine)
+        st = engine._acl
         masks = st["column_masks"].get((str(_lit(args[0])).lower(), str(_lit(args[1])).lower()))
         if masks:
             masks.pop(str(_lit(args[2])).lower(), None)

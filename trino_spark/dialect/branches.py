@@ -11,7 +11,10 @@ engine-managed FORK of the table:
 - ``CREATE BRANCH b IN TABLE t`` hardlink-copies the current table
   version into a branch directory (metadata cost only — the data files
   are shared inodes, exactly like the snapshot carry) and gives the
-  branch its OWN snapshot log.
+  branch its OWN snapshot log: the fork is a ``ManagedTable`` record
+  (dml.py) named ``<t>__branch_<b>`` whose ``base`` is t, and t's record
+  maps each branch to the version it was created from. A fork is not a
+  table: it is not listed, and DROP TABLE t drops it.
 - Reads and DML on ``t@b`` resolve to the branch fork and flow through
   the SAME partition-scoped copy-on-write machinery as the main table —
   branch commits never touch main's log, so a 100 TB staging write is
@@ -25,23 +28,23 @@ engine-managed FORK of the table:
 
 from __future__ import annotations
 
-import json
 import os
 import re
-import shutil
 
 from pyspark.sql import DataFrame
 
-from trino_spark.catalog import read_parquet
 from trino_spark.dialect.dml import (
+    ManagedTable,
+    _clear,
     _commit,
+    _discard,
     _link_tree,
-    _managed,
-    _read_log,
-    _snap_root,
-    _warehouse_dir,
+    _norm_name,
+    _stored,
+    fork_name,
     refresh_infoschema,
     rows_result,
+    txn_snapshot_if_needed,
 )
 
 _CREATE_RX = re.compile(
@@ -65,40 +68,20 @@ _SHOW_RX = re.compile(
 _AT_RX = re.compile(r"\b([A-Za-z_]\w*)\s*@\s*([A-Za-z_]\w*)\b")
 
 
-def _norm(name: str) -> str:
-    return name.strip('"').split(".")[-1].lower()
+def _table(engine, name: str) -> ManagedTable:
+    rec = engine.dml_tables.get(_norm_name(name))
+    if rec is None:
+        raise ValueError(f"branching requires a managed table, got: {_norm_name(name)}")
+    return rec
 
 
-def _internal(table: str, branch: str) -> str:
-    """The branch fork's engine-internal table name."""
-    return f"{table}__branch_{branch}"
-
-
-def _registry_path(table: str) -> str:
-    return os.path.join(_snap_root(table), "branches.json")
-
-
-def _registry(table: str) -> dict:
-    try:
-        return json.loads(open(_registry_path(table)).read())
-    except (OSError, ValueError):
-        return {}
-
-
-def _write_registry(table: str, reg: dict) -> None:
-    os.makedirs(_snap_root(table), exist_ok=True)
-    with open(_registry_path(table), "w") as fh:
-        json.dump(reg, fh, indent=0)
-
-
-def _resolve_source(engine, table: str, src: str) -> str:
-    """Path of a branch name ('main' = the table itself)."""
-    if src == "main":
-        return _managed(engine)[table]
-    internal = _internal(table, src)
-    if src not in _registry(table) or internal not in _managed(engine):
-        raise ValueError(f"Branch '{src}' does not exist")
-    return _managed(engine)[internal]
+def _branch(engine, table: ManagedTable, branch: str) -> ManagedTable:
+    """The record of a branch ('main' = the table itself)."""
+    if branch == "main":
+        return table
+    if branch not in table.branches:
+        raise ValueError(f"Branch '{branch}' does not exist")
+    return engine.dml_tables[fork_name(table.name, branch)]
 
 
 def try_execute(engine, stripped: str) -> DataFrame | None:
@@ -109,78 +92,53 @@ def try_execute(engine, stripped: str) -> DataFrame | None:
         m = _CREATE_RX.match(stripped)
         if not m:
             raise ValueError(f"cannot parse CREATE BRANCH: {stripped}")
-        table, branch = _norm(m.group("table")), m.group("branch").lower()
-        if table not in _managed(engine):
-            raise ValueError(f"branching requires a managed table, got: {table}")
-        reg = _registry(table)
+        table, branch = _table(engine, m.group("table")), m.group("branch").lower()
         replace = re.match(r"CREATE\s+OR\s+REPLACE", stripped, re.IGNORECASE)
-        if branch in reg:
+        if branch in table.branches:
             if m.group("ine"):
                 return rows_result(spark, [(branch,)], "branch: string")
             if not replace:
                 raise ValueError(f"branch already exists: {branch}")
             _drop_fork(engine, table, branch)
-        src_path = _resolve_source(engine, table, (m.group("from") or "main").lower())
-        internal = _internal(table, branch)
-        dst = os.path.join(_warehouse_dir(), internal)
-        shutil.rmtree(dst, ignore_errors=True)
-        os.makedirs(dst, exist_ok=True)
-        _link_tree(src_path, dst)  # shared inodes: fork cost = metadata
-        _managed(engine)[internal] = dst
-        layouts = getattr(engine, "_dml_layouts", None) or {}
-        if table in layouts:
-            layouts[internal] = list(layouts[table])
-        # The fork inherits the base table's DECLARED column order too —
-        # otherwise positional INSERT INTO t@branch and SELECT * would map
-        # against the partition-last physical layout (same class of bug
-        # the DML fuzzer caught on main tables).
-        logical = getattr(engine, "_dml_logical_cols", None) or {}
-        fork = read_parquet(spark, dst)
-        lcols = logical.get(table)
-        if lcols:
-            logical[internal] = list(lcols)
-            if lcols != fork.columns and set(lcols) == set(fork.columns):
-                fork = fork.select(*lcols)
-        fork.createOrReplaceTempView(internal)
-        refresh_infoschema(engine, changed=internal)
-        base_version = max((e["version"] for e in _read_log(table)), default=0)
-        reg[branch] = {"created_from_version": base_version}
-        _write_registry(table, reg)
+        src = _branch(engine, table, (m.group("from") or "main").lower())
+        # a fork starts with its source's declared columns, layout and
+        # defaults, and its data as shared inodes: fork cost = metadata
+        fork = _clear(
+            engine,
+            ManagedTable(
+                fork_name(table.name, branch), src.columns, src.partition_by,
+                dict(src.defaults), base=table.name,
+            ),
+        )
+        os.makedirs(fork.path)
+        _link_tree(src.path, fork.path)
+        engine.dml_tables[fork.name] = fork
+        _stored(engine, fork).createOrReplaceTempView(fork.name)
+        refresh_infoschema(engine, changed=fork.name)
+        txn_snapshot_if_needed(engine, table.name)
+        table.branches[branch] = table.version
         return rows_result(spark, [(branch,)], "branch: string")
     if up[:2] == ["DROP", "BRANCH"]:
         m = _DROP_RX.match(stripped)
         if not m:
             raise ValueError(f"cannot parse DROP BRANCH: {stripped}")
-        table, branch = _norm(m.group("table")), m.group("branch").lower()
-        reg = _registry(table)
-        if branch not in reg:
+        table, branch = _table(engine, m.group("table")), m.group("branch").lower()
+        if branch not in table.branches:
             if m.group("ie"):
                 return rows_result(spark, [(branch,)], "branch: string")
             raise ValueError(f"Branch '{branch}' does not exist")
         _drop_fork(engine, table, branch)
-        reg.pop(branch)
-        _write_registry(table, reg)
         return rows_result(spark, [(branch,)], "branch: string")
     if up[:2] == ["ALTER", "BRANCH"]:
         m = _FF_RX.match(stripped)
         if not m:
             raise ValueError(f"cannot parse ALTER BRANCH: {stripped}")
-        table = _norm(m.group("table"))
+        table = _table(engine, m.group("table"))
         src, tgt = m.group("src").lower(), m.group("tgt").lower()
-        tgt_path = _resolve_source(engine, table, tgt)
-        content = read_parquet(spark, tgt_path)
-        dest = table if src == "main" else _internal(table, src)
-        if src != "main" and src not in _registry(table):
-            raise ValueError(f"Branch '{src}' does not exist")
-        # Restore the destination's DECLARED column order before the
-        # commit — a raw read of a partitioned branch dir is partition-last
-        # and would otherwise corrupt the logical map + snapshot log.
-        lcols = getattr(engine, "_dml_logical_cols", {}).get(dest) or getattr(
-            engine, "_dml_logical_cols", {}
-        ).get(table)
-        if lcols and lcols != content.columns and set(lcols) == set(content.columns):
-            content = content.select(*lcols)
-        n = _commit(engine, dest, content, operation=f"fast_forward_from_{tgt}")
+        content = _stored(engine, _branch(engine, table, tgt))
+        n = _commit(
+            engine, _branch(engine, table, src), content, operation=f"fast_forward_from_{tgt}"
+        )
         return rows_result(
             spark, [(src, tgt, n)], "branch: string, from_branch: string, rows: bigint"
         )
@@ -188,51 +146,38 @@ def try_execute(engine, stripped: str) -> DataFrame | None:
         m = _SHOW_RX.match(stripped)
         if not m:
             raise ValueError(f"cannot parse SHOW BRANCHES: {stripped}")
-        table = _norm(m.group("table"))
-        if table not in _managed(engine):
-            raise ValueError(f"branching requires a managed table, got: {table}")
-        rows = [("main", max((e["version"] for e in _read_log(table)), default=0), None)]
-        for b, meta in sorted(_registry(table).items()):
-            head = max((e["version"] for e in _read_log(_internal(table, b))), default=0)
-            rows.append((b, head, meta.get("created_from_version")))
+        table = _table(engine, m.group("table"))
+        rows = [("main", table.version, None)] + [
+            (b, _branch(engine, table, b).version, created_from)
+            for b, created_from in sorted(table.branches.items())
+        ]
         return rows_result(
             spark, rows, "branch: string, current_version: bigint, created_from_version: bigint"
         )
     return None
 
 
-def _drop_fork(engine, table: str, branch: str) -> None:
-    internal = _internal(table, branch)
-    shutil.rmtree(os.path.join(_warehouse_dir(), internal), ignore_errors=True)
-    shutil.rmtree(_snap_root(internal), ignore_errors=True)
-    _managed(engine).pop(internal, None)
-    (getattr(engine, "_dml_layouts", None) or {}).pop(internal, None)
-    try:
-        engine.spark.catalog.dropTempView(internal)
-    except Exception:
-        pass
-    refresh_infoschema(engine, dropped=internal)
+def _drop_fork(engine, table: ManagedTable, branch: str) -> None:
+    name = fork_name(table.name, branch)
+    txn_snapshot_if_needed(engine, table.name)
+    txn_snapshot_if_needed(engine, name)
+    del table.branches[branch]
+    _discard(engine, name)
 
 
 def resolve(engine, sql: str) -> str:
     """Rewrite ``t@b`` references (reads AND DML targets) to the branch
-    fork's internal name. Unknown branches of managed tables raise the
+    fork's record name. Unknown branches of managed tables raise the
     reference's BRANCH_NOT_FOUND error; ``@`` inside string literals is
     never touched; ``t@main`` is the table itself."""
     if "@" not in sql:
         return sql
     from trino_spark.dialect.access import map_outside_literals
 
-    managed = _managed(engine)
-
     def _sub(m: re.Match) -> str:
-        table, branch = m.group(1).lower(), m.group(2).lower()
-        if table not in managed:
+        table = engine.dml_tables.get(m.group(1).lower())
+        if table is None:
             return m.group(0)
-        if branch == "main":
-            return table
-        if branch not in _registry(table):
-            raise ValueError(f"Branch '{branch}' does not exist")
-        return _internal(table, branch)
+        return _branch(engine, table, m.group(2).lower()).name
 
     return map_outside_literals(sql, lambda chunk: _AT_RX.sub(_sub, chunk))

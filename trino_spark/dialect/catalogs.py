@@ -76,12 +76,6 @@ def _parse_props(txt: str | None) -> dict[str, str]:
     return props
 
 
-def _mounts(engine) -> dict:
-    if not hasattr(engine, "catalogs"):
-        engine.catalogs = {}
-    return engine.catalogs
-
-
 def try_execute(engine, stripped: str) -> DataFrame | None:
     """Dispatch CREATE/DROP CATALOG; None when the statement is neither."""
     up = stripped.upper().split()
@@ -92,7 +86,7 @@ def try_execute(engine, stripped: str) -> DataFrame | None:
         _require_owner(engine, "CREATE CATALOG")
         name = m.group("name").strip('"').lower()
         conn = m.group("conn").lower()
-        mounts = _mounts(engine)
+        mounts = engine.catalogs
         if name in mounts or name == "spark":
             if m.group("ine"):
                 return _row(engine, name)
@@ -125,7 +119,7 @@ def try_execute(engine, stripped: str) -> DataFrame | None:
             raise ValueError(f"cannot parse DROP CATALOG: {stripped}")
         _require_owner(engine, "DROP CATALOG")
         name = m.group("name").strip('"').lower()
-        mounts = _mounts(engine)
+        mounts = engine.catalogs
         if name not in mounts:
             if m.group("ie"):
                 return _row(engine, name)
@@ -153,9 +147,7 @@ def _require_owner(engine, what: str) -> None:
     """Catalog mounts are system-level (reference: checkCanCreateCatalog
     of SystemAccessControl — admin-only by default): deny under any
     active restricted role."""
-    from trino_spark.dialect import access as _access
-
-    if _access._state(engine)["current"] is not None:
+    if engine._acl["current"] is not None:
         raise PermissionError(f"Access Denied: {what} requires an owner session")
 
 
@@ -176,7 +168,7 @@ def resolve(engine, sql: str) -> str:
     views for every NON-jdbc mount (jdbc mounts are real Spark catalogs —
     Spark resolves those natively, keeping remote pushdown). String
     literals are never touched."""
-    mounts = getattr(engine, "catalogs", None)
+    mounts = engine.catalogs
     if not mounts:
         return sql
     lowered = sql.lower()
@@ -203,7 +195,7 @@ def resolve(engine, sql: str) -> str:
 
 def _view_for(engine, m: re.Match) -> str | None:
     cat, schema, table = (g.lower() for g in m.groups())
-    mount = getattr(engine, "catalogs", {}).get(cat)
+    mount = engine.catalogs.get(cat)
     if mount is None or mount["connector"] == "jdbc":
         return None
     spark = engine.spark
@@ -293,7 +285,7 @@ def try_execute_dml(engine, stripped: str) -> DataFrame | None:
     if not m:
         return None
     cat, schema, table = (g.lower() for g in m.groups())
-    mount = getattr(engine, "catalogs", {}).get(cat)
+    mount = engine.catalogs.get(cat)
     if mount is None:
         return None
     conn = mount["connector"]

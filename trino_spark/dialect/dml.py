@@ -36,7 +36,8 @@ it writes only the incoming rows and links the entire previous version.
 At 100 TB a selective `DELETE WHERE day = ...` therefore rewrites one
 partition, not the table.
 
-Every commit is retained as a table VERSION (snapshot log under
+Every commit is retained as a table VERSION (an entry of the table's
+snapshot log on its ``ManagedTable`` record, the retired directory under
 ``.snapshots/<name>/``), read back via Trino's time-travel syntax
 ``FOR VERSION AS OF n`` / ``FOR TIMESTAMP AS OF t`` (grammar SqlBase.g4
 queryPeriod; behavior: plugin/trino-iceberg time travel). Old versions are
@@ -45,14 +46,16 @@ pruned beyond a retention window, like snapshot expiration.
 
 from __future__ import annotations
 
+import copy
+import dataclasses
 import datetime as _dt
-import json
 import os
 import re
 import shutil
 import uuid
 
 from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql.types import StructType
 
 from trino_spark.catalog import read_parquet
 from trino_spark.operators.merge import merge_into
@@ -103,22 +106,57 @@ def try_execute(engine, sql: str) -> DataFrame | None:
 # ---------------------------------------------------------------- storage
 
 
-def _managed(engine) -> dict[str, str]:
-    if not hasattr(engine, "dml_tables"):
-        engine.dml_tables = {}
-    return engine.dml_tables
+@dataclasses.dataclass
+class ManagedTable:
+    """One engine-managed table: what the reference keeps in a connector's
+    table metadata (for Iceberg, one metadata file with the schema,
+    partition spec, properties, snapshot log and branch refs). The data
+    lives at `path`; each retired version under `snap_root`/vNNNNN. A
+    branch fork is a record under its fork name whose `base` is the table
+    it forks. Records live in ``engine.dml_tables``, in memory only."""
+
+    name: str
+    columns: list[str]  # the declared order; a hive layout reads partition columns last
+    partition_by: list[str] | None = None
+    defaults: dict[str, str] = dataclasses.field(default_factory=dict)  # column -> SQL
+    properties: dict[str, str] = dataclasses.field(default_factory=dict)
+    # one entry per commit, oldest first: version, committed_at(_iso),
+    # operation, that version's declared columns, and `expired` once pruned
+    log: list[dict] = dataclasses.field(default_factory=list)
+    branches: dict[str, int] = dataclasses.field(default_factory=dict)  # -> created-from version
+    base: str | None = None
+
+    @property
+    def path(self) -> str:
+        return os.path.join(_warehouse_dir(), self.name)
+
+    @property
+    def snap_root(self) -> str:
+        return os.path.join(_warehouse_dir(), ".snapshots", self.name)
+
+    @property
+    def version(self) -> int:
+        return self.log[-1]["version"] if self.log else 0
+
+    def version_dir(self, version: int) -> str:
+        return os.path.join(self.snap_root, f"v{version:05d}")
 
 
-def _require_managed(engine, name: str) -> str:
-    tables = _managed(engine)
-    if name not in tables:
+def fork_name(table: str, branch: str) -> str:
+    """The record name of `table`'s branch fork."""
+    return f"{table}__branch_{branch}"
+
+
+def _require_managed(engine, name: str) -> ManagedTable:
+    rec = engine.dml_tables.get(name)
+    if rec is None:
         # The reference raises MODIFYING_ROWS_NOT_SUPPORTED for connectors
         # without a RowChangeParadigm; our testdata parquet is read-only.
         raise ValueError(
             f"table '{name}' is not a managed (engine-created) table: "
             "this source does not support updates"
         )
-    return tables[name]
+    return rec
 
 
 def _written_rows(path: str) -> int:
@@ -134,27 +172,68 @@ def _written_rows(path: str) -> int:
     return total
 
 
-def _snap_root(name: str) -> str:
-    return os.path.join(_warehouse_dir(), ".snapshots", name)
+def _stored(engine, rec: ManagedTable, version: int | None = None, schema=None) -> DataFrame:
+    """Version `version` of `rec` (default: the current one) read back in
+    its declared column order. `schema`, the version's schema when the
+    caller has it, spares reading a footer."""
+    path, columns = rec.path, rec.columns
+    if version is not None:
+        entry = next((e for e in rec.log if e["version"] == version), None)
+        if entry is None:
+            raise ValueError(f"table {rec.name}: version {version} does not exist")
+        if version != rec.version:
+            if entry.get("expired"):
+                raise ValueError(
+                    f"table {rec.name}: version {version} has been expired by snapshot retention"
+                )
+            path, columns = rec.version_dir(version), entry["columns"]
+    if schema is None:
+        df = read_parquet(engine.spark, path)
+    else:
+        part = rec.partition_by or []
+        df = engine.spark.read.schema(
+            StructType(
+                [f for f in schema.fields if f.name not in part]
+                + [f for f in schema.fields if f.name in part]
+            )
+        ).parquet(path)
+    return df if df.columns == columns else df.select(*columns)
 
 
-def _read_log(name: str) -> list[dict]:
-    logf = os.path.join(_snap_root(name), "log.json")
-    if not os.path.exists(logf):
-        return []
-    try:
-        return json.loads(open(logf).read())
-    except (OSError, ValueError):
-        return []
+def _clear(engine, rec: ManagedTable) -> ManagedTable:
+    """Put a table under a new name (CREATE TABLE, CTAS, CREATE BRANCH,
+    RENAME TO) on clean paths: whatever an earlier process left under that
+    name is not its data or history."""
+    txn_snapshot_if_needed(engine, rec.name)
+    shutil.rmtree(rec.path, ignore_errors=True)
+    shutil.rmtree(rec.snap_root, ignore_errors=True)
+    return rec
 
 
-def _write_log(name: str, entries: list[dict]) -> None:
-    root = _snap_root(name)
-    os.makedirs(root, exist_ok=True)
-    tmp = os.path.join(root, f".log-{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as fh:
-        json.dump(entries, fh, indent=0)
-    os.replace(tmp, os.path.join(root, "log.json"))
+def _discard(engine, name: str) -> None:
+    """DROP: the record, its data, its retired versions and its view."""
+    rec = engine.dml_tables.pop(name)
+    shutil.rmtree(rec.path, ignore_errors=True)
+    shutil.rmtree(rec.snap_root, ignore_errors=True)
+    engine.spark.catalog.dropTempView(name)
+    refresh_infoschema(engine, dropped=name)
+
+
+def _move(engine, old: str, new: str) -> ManagedTable:
+    """RENAME TO: the record, its data and its retired versions move."""
+    txn_snapshot_if_needed(engine, old)
+    rec = engine.dml_tables.pop(old)
+    src, src_snaps = rec.path, rec.snap_root
+    rec.name = new
+    _clear(engine, rec)
+    os.rename(src, rec.path)
+    if os.path.isdir(src_snaps):
+        os.rename(src_snaps, rec.snap_root)
+    engine.dml_tables[new] = rec
+    engine.spark.catalog.dropTempView(old)
+    _stored(engine, rec).createOrReplaceTempView(new)
+    refresh_infoschema(engine, changed=new, dropped=old)
+    return rec
 
 
 def _link_tree(src_root: str, dst_root: str, rel_dirs: list[str] | None = None) -> None:
@@ -198,9 +277,8 @@ def _leaf_partition_dirs(path: str) -> list[str]:
 
 def _commit(
     engine,
-    name: str,
+    rec: ManagedTable,
     df: DataFrame,
-    partition_by: list[str] | None = None,
     preserve_rel_dirs: list[str] | None = None,
     append_base: bool = False,
     operation: str = "write",
@@ -208,15 +286,17 @@ def _commit(
     """Copy-on-write commit: stage-write the post-change relation, swap the
     table directory, re-register the view. Returns rows in the new state.
 
-    `partition_by` produces a hive-style layout (downstream scans get
-    static partition pruning + DPP); mutations preserve the layout.
+    The record's `partition_by` produces a hive-style layout (downstream
+    scans get static partition pruning + DPP); mutations preserve it.
     `preserve_rel_dirs` carries the listed untouched partition dirs of the
     CURRENT version into the new one by hardlink (partition-scoped
     rewrite). `append_base` carries the ENTIRE current version and adds
     `df` on top (INSERT). The previous version's directory is retained as
-    a snapshot for time travel rather than deleted."""
-    txn_snapshot_if_needed(engine, name)
-    path = os.path.join(_warehouse_dir(), name)
+    a snapshot for time travel rather than deleted. `df` is in declared
+    column order (CTAS builds it, mutations derive from _stored), and the
+    new version keeps that order."""
+    txn_snapshot_if_needed(engine, rec.name)
+    path = rec.path
     # Janitor: a crashed earlier run can leave .staging-*/.old-* dirs for
     # this table; concurrent runners use per-process table names, so any
     # leftover here is garbage.
@@ -227,20 +307,7 @@ def _commit(
             if d.startswith((f"{base}.staging-", f"{base}.old-")):
                 shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
     staging = f"{path}.staging-{uuid.uuid4().hex[:8]}"
-    layouts = getattr(engine, "_dml_layouts", None)
-    if layouts is None:
-        layouts = engine._dml_layouts = {}
-    if partition_by is not None:
-        layouts[name] = partition_by
-    part_cols = layouts.get(name)
-    # Record the LOGICAL column order (hive-partitioned parquet reads put
-    # partition columns last; _read restores this order so positional
-    # INSERT and SELECT * keep the declared layout). Every commit's df is
-    # already logical: CTAS builds it, mutations derive from _read.
-    logical = getattr(engine, "_dml_logical_cols", None)
-    if logical is None:
-        logical = engine._dml_logical_cols = {}
-    logical[name] = list(df.columns)
+    part_cols = rec.partition_by
     w = df.write.mode("overwrite")
     if part_cols:
         w = w.partitionBy(*part_cols)
@@ -268,56 +335,29 @@ def _commit(
         df.limit(0).write.mode("overwrite").parquet(staging)
     # Version bookkeeping: retire the current directory into the snapshot
     # log (time travel reads it back); prune beyond retention.
-    log = _read_log(name)
-    cur_version = max((e["version"] for e in log), default=0)
     if os.path.exists(path):
-        os.rename(path, os.path.join(_ensure_dir(_snap_root(name)), f"v{cur_version:05d}"))
-    new_version = cur_version + 1
+        os.makedirs(rec.snap_root, exist_ok=True)
+        os.rename(path, rec.version_dir(rec.version))
     now = _dt.datetime.now(_dt.timezone.utc)
-    log.append(
+    rec.columns = list(df.columns)
+    rec.log.append(
         {
-            "version": new_version,
+            "version": rec.version + 1,
             "committed_at": now.timestamp(),
             "committed_at_iso": now.isoformat(),
             "operation": operation,
-            # Column order AS DECLARED at this version (time-travel reads
-            # restore it; the live _dml_logical_cols map only tracks the
-            # current schema, which later ALTERs may have changed).
-            "columns": list(df.columns),
+            "columns": rec.columns,
         }
     )
-    live = [e for e in log if not e.get("expired")]
+    live = [e for e in rec.log if not e.get("expired")]
     for e in live[:-(SNAPSHOT_RETENTION + 1)]:
-        shutil.rmtree(os.path.join(_snap_root(name), f"v{e['version']:05d}"), ignore_errors=True)
+        shutil.rmtree(rec.version_dir(e["version"]), ignore_errors=True)
         e["expired"] = True
-    _write_log(name, log)
     os.rename(staging, path)
-    _managed(engine)[name] = path
-    # Register the new version. The committed schema is known (partition
-    # columns read back LAST in a hive layout), so pass it explicitly —
-    # skipping the footer/partition-discovery inference job per commit.
-    reader = engine.spark.read
-    try:
-        fields = {f.name: f for f in df.schema.fields}
-        if part_cols and all(c in fields for c in part_cols):
-            ordered = [f for f in df.schema.fields if f.name not in part_cols] + [
-                fields[c] for c in part_cols
-            ]
-        else:
-            ordered = list(df.schema.fields)
-        from pyspark.sql.types import StructType
-
-        reader = reader.schema(StructType(ordered))
-    except Exception:
-        pass
-    stored = reader.parquet(path)
-    # The registered view presents the DECLARED column order, not the
-    # partition-last physical layout (SELECT * parity with the reference).
-    lcols = logical.get(name)
-    if lcols and lcols != stored.columns and set(lcols) == set(stored.columns):
-        stored = stored.select(*lcols)
-    stored.createOrReplaceTempView(name)
-    refresh_infoschema(engine, changed=name)
+    engine.dml_tables[rec.name] = rec
+    # The committed schema is known, so the view's read skips the footer.
+    _stored(engine, rec, schema=df.schema).createOrReplaceTempView(rec.name)
+    refresh_infoschema(engine, changed=rec.name)
     return _written_rows(path)
 
 
@@ -345,21 +385,6 @@ def rows_result(spark, rows, ddl: str = "rows: bigint") -> DataFrame:
     return spark.createDataFrame(rows, schema)
 
 
-def _ensure_dir(d: str) -> str:
-    os.makedirs(d, exist_ok=True)
-    return d
-
-
-def _read(engine, name: str) -> DataFrame:
-    df = read_parquet(engine.spark, _require_managed(engine, name))
-    # Restore the declared column order (partitioned layouts read the
-    # partition columns last).
-    logical = getattr(engine, "_dml_logical_cols", {}).get(name)
-    if logical and logical != df.columns and set(logical) == set(df.columns):
-        df = df.select(*logical)
-    return df
-
-
 def _translate_fragment(engine, text: str) -> str:
     """Run a predicate/expression fragment through the dialect translator
     (function renames, || handling, AT TIME ZONE, ...)."""
@@ -384,18 +409,14 @@ def _ctas(engine, sql: str) -> DataFrame:
         raise ValueError(f"cannot parse CTAS: {sql[:120]}")
     name = _norm_name(m.group(1))
     if_not_exists = re.search(r"IF\s+NOT\s+EXISTS", sql[: m.start(3)], re.IGNORECASE)
-    if name in _managed(engine):
+    if name in engine.dml_tables:
         if if_not_exists:
             return rows_result(engine.spark, 0)
         raise ValueError(f"table already exists: {name}")
-    # A fresh table must not inherit a stale layout from a same-named
-    # predecessor (layouts are popped at DROP, but be defensive).
-    getattr(engine, "_dml_layouts", {}).pop(name, None)
-    getattr(engine, "_dml_logical_cols", {}).pop(name, None)
     partition_by = _parse_with_props(m.group(2))
     df = engine.sql(m.group(3))
-    n = _commit(engine, name, df, partition_by=partition_by, operation="ctas")
-    return rows_result(engine.spark, n)
+    rec = _clear(engine, ManagedTable(name, df.columns, partition_by))
+    return rows_result(engine.spark, _commit(engine, rec, df, operation="ctas"))
 
 
 def _parse_with_props(with_txt: str | None) -> list[str] | None:
@@ -423,18 +444,14 @@ def _drop(engine, sql: str) -> DataFrame:
     parts = sql.split()
     idx = 4 if len(parts) > 4 and parts[2].upper() == "IF" else 2
     name = _norm_name(parts[idx])
-    if name in _managed(engine):
-        txn_snapshot_if_needed(engine, name)
-    path = _managed(engine).pop(name, None)
-    if path:
-        shutil.rmtree(path, ignore_errors=True)
-        shutil.rmtree(_snap_root(name), ignore_errors=True)
-        # A later CREATE TABLE with this name must not inherit the old
-        # partition layout (stale _dml_layouts entry).
-        getattr(engine, "_dml_layouts", {}).pop(name, None)
-        getattr(engine, "_dml_logical_cols", {}).pop(name, None)
-        engine.spark.catalog.dropTempView(name)
-        refresh_infoschema(engine, dropped=name)
+    rec = engine.dml_tables.get(name)
+    if rec is not None:
+        if rec.base is not None:
+            raise ValueError(f"{name} is a branch of {rec.base}: DROP BRANCH drops it")
+        # the table's branch forks go with it
+        for n in [name, *(fork_name(name, b) for b in rec.branches)]:
+            txn_snapshot_if_needed(engine, n)
+            _discard(engine, n)
     elif engine.spark.catalog.tableExists(name):
         # A saveAsTable-managed (e.g. bucketed-CTAS) catalog table.
         engine.spark.sql(f"DROP TABLE {name}")
@@ -444,9 +461,8 @@ def _drop(engine, sql: str) -> DataFrame:
 
 
 def _truncate(engine, sql: str) -> DataFrame:
-    name = _norm_name(sql.split()[2])
-    df = _read(engine, name)
-    _commit(engine, name, df.limit(0), operation="truncate")
+    rec = _require_managed(engine, _norm_name(sql.split()[2]))
+    _commit(engine, rec, _stored(engine, rec).limit(0), operation="truncate")
     return rows_result(engine.spark, 0)
 
 
@@ -458,18 +474,17 @@ def _insert(engine, sql: str) -> DataFrame:
     )
     if not m:
         raise ValueError(f"cannot parse INSERT: {sql[:120]}")
-    name = _norm_name(m.group(1))
-    current = _read(engine, name)
+    rec = _require_managed(engine, _norm_name(m.group(1)))
+    current = _stored(engine, rec)
     incoming = engine.sql(m.group(3))
     if m.group(2):
         cols = [_norm_name(c) for c in m.group(2).strip("()").split(",")]
         incoming = incoming.toDF(*cols)
         # Unmentioned columns get their declared DEFAULT, else NULL
         # (reference INSERT column-list rule + #setDefaultValue).
-        defaults = getattr(engine, "_column_defaults", {})
         for f_ in current.schema.fields:
             if f_.name not in cols:
-                dflt = defaults.get((name, f_.name))
+                dflt = rec.defaults.get(f_.name)
                 filler = (
                     F.expr(_translate_fragment(engine, dflt)) if dflt is not None else F.lit(None)
                 )
@@ -489,12 +504,12 @@ def _insert(engine, sql: str) -> DataFrame:
     # version's files are carried into the new version by hardlink (the
     # lakehouse "add files to snapshot" shape — an INSERT never rewrites
     # existing data). Inserted count from footer metadata (before/after).
-    before = _written_rows(_require_managed(engine, name))
-    total = _commit(engine, name, aligned, append_base=True, operation="insert")
+    before = _written_rows(rec.path)
+    total = _commit(engine, rec, aligned, append_base=True, operation="insert")
     return rows_result(engine.spark, total - before)
 
 
-def _affected_partitions(engine, name: str, df: DataFrame, pred):
+def _affected_partitions(rec: ManagedTable, df: DataFrame, pred):
     """Dynamically derive the partitions a predicate touches: one pruned
     scan collecting (file, partition values) of matching rows. Returns
     (affected_row_filter, untouched_rel_dirs) or None when the
@@ -507,8 +522,7 @@ def _affected_partitions(engine, name: str, df: DataFrame, pred):
     AFFECTED data files (metadata scale, not data scale)."""
     from urllib.parse import unquote, urlparse
 
-    part_cols = getattr(engine, "_dml_layouts", {}).get(name)
-    path = _require_managed(engine, name)
+    part_cols, path = rec.partition_by, rec.path
     if not part_cols:
         return None
     leafs = _leaf_partition_dirs(path)
@@ -557,7 +571,8 @@ def _delete(engine, sql: str) -> DataFrame:
     from trino_spark.dialect import access as _access
 
     rf_sql, masks = _access.dml_target_security(engine, name)
-    df = _read(engine, name)
+    rec = _require_managed(engine, name)
+    df = _stored(engine, rec)
     # Row filter on the DML target (ConnectorAccessControl.getRowFilters
     # binds to the target scan too): rows the role cannot see are
     # untouchable. Evaluated on REAL rows; the user's WHERE sees MASKED
@@ -569,8 +584,8 @@ def _delete(engine, sql: str) -> DataFrame:
     )
     if m.group(2) is None and visible is None and not masks:
         # Unconditional DELETE == TRUNCATE shape; count from footers.
-        before = _written_rows(_require_managed(engine, name))
-        _commit(engine, name, df.limit(0), operation="delete")
+        before = _written_rows(rec.path)
+        _commit(engine, rec, df.limit(0), operation="delete")
         return rows_result(engine.spark, before)
     # DELETE removes rows where pred is TRUE; NULL predicate keeps.
     where = m.group(2) if m.group(2) is not None else "true"
@@ -584,8 +599,8 @@ def _delete(engine, sql: str) -> DataFrame:
         pred = pred & visible
     # Deleted-row count = footer-metadata delta (before/after) — rows only
     # ever leave, so no counting scan or observation is needed.
-    before = _written_rows(_require_managed(engine, name))
-    scoped = _affected_partitions(engine, name, df, pred)
+    before = _written_rows(rec.path)
+    scoped = _affected_partitions(rec, df, pred)
     if scoped is not None:
         cond, untouched = scoped
         if cond is None:  # predicate matched nothing: no new version
@@ -593,11 +608,11 @@ def _delete(engine, sql: str) -> DataFrame:
         # Rewrite only the affected partitions (partition-pruned scan);
         # untouched partitions are hardlinked into the new version.
         after = _commit(
-            engine, name, df.filter(cond).filter(~pred),
+            engine, rec, df.filter(cond).filter(~pred),
             preserve_rel_dirs=untouched, operation="delete",
         )
     else:
-        after = _commit(engine, name, df.filter(~pred), operation="delete")
+        after = _commit(engine, rec, df.filter(~pred), operation="delete")
     return rows_result(engine.spark, before - after)
 
 
@@ -621,7 +636,8 @@ def _update(engine, sql: str) -> DataFrame:
         raise _access.AccessDenied(
             f"Access Denied: updating column-masked table {name} is not allowed"
         )
-    df = _read(engine, name)
+    rec = _require_managed(engine, name)
+    df = _stored(engine, rec)
     assigns = _split_top_level(m.group(2), ",")
     pred = F.expr(_translate_fragment(engine, m.group(3))) if m.group(3) else F.lit(True)
     pred = F.coalesce(pred, F.lit(False))
@@ -646,14 +662,14 @@ def _update(engine, sql: str) -> DataFrame:
             ]
         )
 
-    part_cols = getattr(engine, "_dml_layouts", {}).get(name) or []
+    part_cols = rec.partition_by or []
     # An UPDATE that reassigns a partition column can move rows into
     # partitions the predicate never touched — only the full rewrite is
     # correct there. (Moving INTO an untouched partition is fine in the
     # scoped path: the staged write and the hardlinked files merge into
     # the same partition dir.)
     scoped = (
-        _affected_partitions(engine, name, df, pred)
+        _affected_partitions(rec, df, pred)
         if not any(c in updated_cols for c in part_cols)
         else None
     )
@@ -664,10 +680,10 @@ def _update(engine, sql: str) -> DataFrame:
         if cond is None:
             return rows_result(engine.spark, 0)
         out = _project(df.filter(cond).observe(obs, n_expr))
-        _commit(engine, name, out, preserve_rel_dirs=untouched, operation="update")
+        _commit(engine, rec, out, preserve_rel_dirs=untouched, operation="update")
     else:
         out = _project(df.observe(obs, n_expr))
-        _commit(engine, name, out, operation="update")
+        _commit(engine, rec, out, operation="update")
     return rows_result(engine.spark, int(obs.get["n"] or 0))
 
 
@@ -735,7 +751,8 @@ def _merge(engine, sql: str) -> DataFrame:
         raise _access.AccessDenied(
             f"Access Denied: MERGE into column-masked table {tgt_name} is not allowed"
         )
-    target = _read(engine, tgt_name)
+    rec = _require_managed(engine, tgt_name)
+    target = _stored(engine, rec)
     hidden = None
     if rf_sql:
         # Row-filtered MERGE target: only visible rows participate in the
@@ -835,7 +852,7 @@ def _merge(engine, sql: str) -> DataFrame:
     )
     if hidden is not None:
         out = out.unionByName(hidden)
-    _commit(engine, tgt_name, out, operation="merge")
+    _commit(engine, rec, out, operation="merge")
     m_ = obs.get
     return rows_result(engine.spark, int((m_["touched"] or 0) + (m_["inserted"] or 0)))
 
@@ -858,24 +875,7 @@ _TT_RX = re.compile(
 def list_versions(engine, name: str) -> list[dict]:
     """The snapshot log for a managed table (system.metadata-style history
     surface; Iceberg's $snapshots metadata table analog)."""
-    _require_managed(engine, name)
-    return _read_log(name)
-
-
-def _version_dir(engine, name: str, version: int) -> str:
-    path = _require_managed(engine, name)
-    log = _read_log(name)
-    cur = max((e["version"] for e in log), default=0)
-    entry = next((e for e in log if e["version"] == version), None)
-    if entry is None:
-        raise ValueError(f"table {name}: version {version} does not exist")
-    if version == cur:
-        return path
-    if entry.get("expired"):
-        raise ValueError(
-            f"table {name}: version {version} has been expired by snapshot retention"
-        )
-    return os.path.join(_snap_root(name), f"v{version:05d}")
+    return _require_managed(engine, name).log
 
 
 _META_RX = re.compile(
@@ -921,21 +921,22 @@ def resolve_metadata_tables(engine, sql: str) -> str:
 
     def repl(m: re.Match) -> str:
         name = _norm_name(m.group(1))
-        if name not in _managed(engine):
+        rec = engine.dml_tables.get(name)
+        if rec is None:
             return m.group(0)
         kind = m.group(2).lower()
         if kind == "files":
             view = f"{name}__files"
             rows_result(
                 engine.spark,
-                _file_rows(_require_managed(engine, name)),
+                _file_rows(rec.path),
                 "file_path: string, file_format: string, partition: string, "
                 "record_count: bigint, file_size_in_bytes: bigint",
             ).createOrReplaceTempView(view)
             return view
         if kind == "partitions":
             agg: dict = {}
-            for _fp, _fmt, part, nrec, nbytes in _file_rows(_require_managed(engine, name)):
+            for _fp, _fmt, part, nrec, nbytes in _file_rows(rec.path):
                 c = agg.setdefault(part, [0, 0, 0])
                 c[0] += nrec
                 c[1] += 1
@@ -951,14 +952,9 @@ def resolve_metadata_tables(engine, sql: str) -> str:
         if kind == "refs":
             # Iceberg RefsTable analog: 'main' plus every branch, each with
             # the tip version of its own snapshot log.
-            from trino_spark.dialect import branches as _br
-
-            def _tip(log_name: str) -> int:
-                return max((e["version"] for e in _read_log(log_name)), default=0)
-
-            rows = [("main", "BRANCH", _tip(name))] + [
-                (b, "BRANCH", _tip(_br._internal(name, b)))
-                for b in sorted(_br._registry(name))
+            rows = [("main", "BRANCH", rec.version)] + [
+                (b, "BRANCH", engine.dml_tables[fork_name(name, b)].version)
+                for b in sorted(rec.branches)
             ]
             view = f"{name}__refs"
             rows_result(
@@ -967,23 +963,20 @@ def resolve_metadata_tables(engine, sql: str) -> str:
             return view
         if kind == "properties":
             # Iceberg PropertiesTable analog: SET PROPERTIES key/values.
-            props = getattr(engine, "_table_properties", {}).get(name, {})
             view = f"{name}__properties"
             rows_result(
-                engine.spark, sorted(props.items()), "key: string, value: string"
+                engine.spark, sorted(rec.properties.items()), "key: string, value: string"
             ).createOrReplaceTempView(view)
             return view
-        log = _read_log(name)
-        cur = max((e["version"] for e in log), default=0)
         rows = [
             (
                 e["version"],
                 e["committed_at_iso"],
-                e.get("operation", "write"),
-                e["version"] == cur,
+                e["operation"],
+                e["version"] == rec.version,
                 bool(e.get("expired")),
             )
-            for e in log
+            for e in rec.log
         ]
         view = f"{name}__snapshots"
         rows_result(
@@ -1003,10 +996,10 @@ def resolve_time_travel(engine, sql: str) -> str:
 
     def repl(m: re.Match) -> str:
         name = _norm_name(m.group(1))
-        if name not in _managed(engine):
+        rec = engine.dml_tables.get(name)
+        if rec is None:
             raise ValueError(f"time travel requires a managed table, got: {name}")
         kind, arg = m.group(2).upper(), m.group(3).strip()
-        log = _read_log(name)
         if kind == "VERSION":
             version = int(arg)
         else:
@@ -1015,23 +1008,14 @@ def resolve_time_travel(engine, sql: str) -> str:
             if ts.tzinfo is None:
                 ts = ts.replace(tzinfo=_dt.timezone.utc)
             epoch = ts.timestamp()
-            older = [e for e in log if e["committed_at"] <= epoch]
+            older = [e for e in rec.log if e["committed_at"] <= epoch]
             if not older:
                 raise ValueError(
                     f"table {name}: no version committed at or before {ts_txt}"
                 )
             version = max(e["version"] for e in older)
         view = f"{name}__v{version}"
-        snap = read_parquet(engine.spark, _version_dir(engine, name, version))
-        # Restore THAT version's declared column order (recorded in its
-        # log entry; fall back to the live map for pre-recording logs).
-        entry = next((e for e in log if e["version"] == version), {})
-        lcols = entry.get("columns") or getattr(
-            engine, "_dml_logical_cols", {}
-        ).get(name)
-        if lcols and lcols != snap.columns and set(lcols) == set(snap.columns):
-            snap = snap.select(*lcols)
-        snap.createOrReplaceTempView(view)
+        _stored(engine, rec, version).createOrReplaceTempView(view)
         return view
 
     return _TT_RX.sub(repl, sql)
@@ -1041,99 +1025,80 @@ def resolve_time_travel(engine, sql: str) -> str:
 #
 # Trino's transaction statements (grammar SqlBase.g4 START TRANSACTION /
 # COMMIT / ROLLBACK; io.trino.execution.StartTransactionTask). Engine DML is
-# copy-on-write, so a transaction is a SNAPSHOT of the managed tables'
-# directories: START records (and lazily preserves) the pre-transaction
-# state, ROLLBACK restores it, COMMIT discards the snapshots. This is the
-# filesystem analog of a lakehouse snapshot pin — at scale the "copy" is
-# the table-format metadata pointer, not data movement; here the directory
-# is copied aside once per (table, transaction) — the current directory must
-# stay readable because the mutating statement itself reads it lazily. A
-# lakehouse format would pin the old snapshot id instead of copying.
+# copy-on-write, so a transaction PINS each managed table it touches: before
+# the first change, a copy of the table's record and a hardlinked copy of
+# its current directory (metadata-only: the current directory must stay
+# readable because the mutating statement itself reads it lazily). ROLLBACK
+# puts both back, so data, snapshot log, layout, columns, defaults and
+# properties rewind together; COMMIT discards the pins. A lakehouse format
+# would pin the old snapshot id instead.
 
 
 def txn_begin(engine) -> None:
-    if getattr(engine, "_txn", None) is not None:
+    if engine._txn is not None:
         raise ValueError("transaction already in progress (no nested transactions)")
-    engine._txn = {"snapshots": {}, "created": set()}
+    engine._txn = {"pins": {}, "created": set()}
 
 
 def txn_snapshot_if_needed(engine, name: str) -> None:
-    """Before the first in-transaction mutation of `name`, move the current
-    directory aside as the rollback snapshot (the next _commit writes a
-    fresh directory)."""
-    txn = getattr(engine, "_txn", None)
-    if txn is None or name in txn["snapshots"] or name in txn["created"]:
+    """Before the first in-transaction change of `name`, pin its record and
+    directory (a table born inside the transaction is only noted: rollback
+    drops it)."""
+    txn = engine._txn
+    if txn is None or name in txn["pins"] or name in txn["created"]:
         return
-    path = _managed(engine).get(name)
-    if path is None:
-        txn["created"].add(name)  # table born inside the txn: rollback drops it
+    rec = engine.dml_tables.get(name)
+    if rec is None:
+        txn["created"].add(name)
         return
-    snap = f"{path}.txn-{uuid.uuid4().hex[:8]}"
-    shutil.copytree(path, snap, copy_function=os.link)  # hardlinks: metadata-only pin
-    txn["snapshots"][name] = snap
-    # Remember the version so rollback can rewind the snapshot log too.
-    txn.setdefault("versions", {})[name] = max(
-        (e["version"] for e in _read_log(name)), default=0
-    )
+    snap = f"{rec.path}.txn-{uuid.uuid4().hex[:8]}"
+    shutil.copytree(rec.path, snap, copy_function=os.link)  # hardlinks: metadata-only pin
+    txn["pins"][name] = (snap, rec, copy.deepcopy(rec))
+
+
+def _txn_end(engine) -> dict:
+    txn = engine._txn
+    if txn is None:
+        raise ValueError("no transaction in progress")
+    engine._txn = None
+    return txn
 
 
 def txn_commit(engine) -> None:
-    txn = getattr(engine, "_txn", None)
-    if txn is None:
-        raise ValueError("no transaction in progress")
-    for snap in txn["snapshots"].values():
+    for snap, _live, _pinned in _txn_end(engine)["pins"].values():
         shutil.rmtree(snap, ignore_errors=True)
-    engine._txn = None
 
 
 def txn_rollback(engine) -> None:
-    txn = getattr(engine, "_txn", None)
-    if txn is None:
-        raise ValueError("no transaction in progress")
-    for name, snap in txn["snapshots"].items():
-        path = os.path.join(_warehouse_dir(), name)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(snap, path)
-        # Rewind the snapshot log: versions committed inside the aborted
-        # transaction never happened.
-        pin = txn.get("versions", {}).get(name, 0)
-        log = _read_log(name)
-        for e in log:
-            # >= pin: the pinned version is live again, so its retired
-            # snapshot dir must go too or the next commit's rename onto
-            # .snapshots/v{pin} would collide.
-            if e["version"] >= pin:
-                shutil.rmtree(
-                    os.path.join(_snap_root(name), f"v{e['version']:05d}"), ignore_errors=True
-                )
-        _write_log(name, [e for e in log if e["version"] <= pin])
-        _managed(engine)[name] = path
-        rolled = read_parquet(engine.spark, path)
-        # The pinned version's recorded column order wins: an in-transaction
-        # ALTER updated the live logical map, and the rollback must rewind
-        # that bookkeeping along with the data.
-        pinned = next((e for e in log if e["version"] == pin), {})
-        lcols = pinned.get("columns") or getattr(
-            engine, "_dml_logical_cols", {}
-        ).get(name)
-        if lcols:
-            logical = getattr(engine, "_dml_logical_cols", None)
-            if logical is None:
-                logical = engine._dml_logical_cols = {}
-            logical[name] = list(lcols)
-        if lcols and lcols != rolled.columns and set(lcols) == set(rolled.columns):
-            rolled = rolled.select(*lcols)
-        rolled.createOrReplaceTempView(name)
+    txn = _txn_end(engine)
+    tables = engine.dml_tables
+    for name, (snap, live, pinned) in txn["pins"].items():
+        cur = tables.get(name)
+        if cur is not None and cur is not live:  # dropped or renamed away, then re-created
+            _discard(engine, name)
+        if tables.get(live.name) is live:
+            # The versions committed inside never happened; >= because the
+            # pinned version's retired directory must go too, or the next
+            # commit's retire onto it would collide. A table renamed inside
+            # takes its retired versions home.
+            for e in live.log:
+                if e["version"] >= pinned.version:
+                    shutil.rmtree(live.version_dir(e["version"]), ignore_errors=True)
+            if live.name != name and os.path.isdir(live.snap_root):
+                os.rename(live.snap_root, pinned.snap_root)
+        shutil.rmtree(pinned.path, ignore_errors=True)
+        os.rename(snap, pinned.path)
+        # versions whose directories went inside (retention, DROP) stay
+        # listed, as expired
+        for e in pinned.log[:-1]:
+            if not os.path.isdir(pinned.version_dir(e["version"])):
+                e["expired"] = True
+        tables[name] = pinned
+        _stored(engine, pinned).createOrReplaceTempView(name)
+        refresh_infoschema(engine, changed=name)
     for name in txn["created"]:
-        path = _managed(engine).pop(name, None)
-        if path:
-            shutil.rmtree(path, ignore_errors=True)
-            shutil.rmtree(_snap_root(name), ignore_errors=True)
-            getattr(engine, "_dml_layouts", {}).pop(name, None)
-            getattr(engine, "_dml_logical_cols", {}).pop(name, None)
-            engine.spark.catalog.dropTempView(name)
-    engine._txn = None
+        if name in tables:
+            _discard(engine, name)
 
 
 # ---------------------------------------------------------------- DDL
@@ -1156,7 +1121,7 @@ def try_execute_ddl(engine, sql: str) -> DataFrame | None:
         parts = stripped.split()
         idx = 4 if len(parts) > 4 and parts[2].upper() == "IF" else 2
         name = _norm_name(parts[idx])
-        existed = engine.views.pop(name, None) if hasattr(engine, "views") else None
+        existed = engine.views.pop(name, None)
         if existed is None and idx == 2:
             raise ValueError(f"view not found: {name}")
         if existed is not None:
@@ -1164,11 +1129,10 @@ def try_execute_ddl(engine, sql: str) -> DataFrame | None:
         return rows_result(engine.spark, [(name,)], "view: string")
     if up[:3] == ["SHOW", "CREATE", "VIEW"]:
         name = _norm_name(stripped.split()[3])
-        views = getattr(engine, "views", {})
-        if name not in views:
+        if name not in engine.views:
             raise ValueError(f"view not found: {name}")
         return rows_result(
-            engine.spark, [(f"CREATE VIEW {name} AS\n{views[name]}",)], "create_view: string"
+            engine.spark, [(f"CREATE VIEW {name} AS\n{engine.views[name]}",)], "create_view: string"
         )
     if up[:2] == ["CREATE", "TABLE"] and " AS " not in f" {stripped.upper()} ":
         return _create_empty_table(engine, stripped)
@@ -1176,7 +1140,7 @@ def try_execute_ddl(engine, sql: str) -> DataFrame | None:
         return _alter_table(engine, stripped)
     if up[:2] == ["ALTER", "VIEW"]:
         # #renameView / #refreshView (grammar SqlBase.g4:130-131).
-        views = getattr(engine, "views", {})
+        views = engine.views
         m = re.match(
             r"ALTER\s+VIEW\s+([\w.\"]+)\s+(?:RENAME\s+TO\s+([\w.\"]+)|(REFRESH))\s*$",
             stripped,
@@ -1228,19 +1192,13 @@ def try_execute_ddl(engine, sql: str) -> DataFrame | None:
     return None
 
 
-def _schemas(engine) -> dict:
+def _schema_ddl(engine, stripped: str, up: list[str]) -> DataFrame:
     """Schema registry (#createSchema/#dropSchema/#renameSchema;
     CreateSchemaTask.java). The engine's table namespace is flat (every
     qualified name resolves by last component, like a single-schema
     catalog), so schemas are a metadata surface: SHOW SCHEMAS lists them,
     properties are retained for SHOW CREATE SCHEMA."""
-    if not hasattr(engine, "schemas"):
-        engine.schemas = {"default": {}}
-    return engine.schemas
-
-
-def _schema_ddl(engine, stripped: str, up: list[str]) -> DataFrame:
-    reg = _schemas(engine)
+    reg = engine.schemas
     spark = engine.spark
     if up[:3] == ["SHOW", "CREATE", "SCHEMA"]:
         name = _norm_name(stripped.split()[3])
@@ -1309,8 +1267,6 @@ def _create_view(engine, sql: str) -> DataFrame:
     if not m:
         raise ValueError(f"cannot parse CREATE VIEW: {sql[:120]}")
     name, defn = _norm_name(m.group(1)), m.group(2).strip()
-    if not hasattr(engine, "views"):
-        engine.views = {}
     if name in engine.views and "OR REPLACE" not in sql.upper()[:40]:
         raise ValueError(f"view already exists: {name}")
     # Lazy logical view: the DataFrame plan re-reads sources at query time
@@ -1330,7 +1286,7 @@ def _create_empty_table(engine, sql: str) -> DataFrame:
     if not m:
         raise ValueError(f"cannot parse CREATE TABLE: {sql[:120]}")
     name = _norm_name(m.group(1))
-    if name in _managed(engine):
+    if name in engine.dml_tables:
         if re.search(r"IF\s+NOT\s+EXISTS", sql, re.IGNORECASE):
             return rows_result(engine.spark, 0)
         raise ValueError(f"table already exists: {name}")
@@ -1341,7 +1297,7 @@ def _create_empty_table(engine, sql: str) -> DataFrame:
             raise ValueError(f"cannot parse column definition: {piece}")
         cols.append(f"{_norm_name(parts[0])} {_trino_type_to_spark(parts[1])}")
     empty = rows_result(engine.spark, [], ", ".join(cols))
-    _commit(engine, name, empty)
+    _commit(engine, _clear(engine, ManagedTable(name, empty.columns)), empty)
     return rows_result(engine.spark, 0)
 
 
@@ -1370,16 +1326,14 @@ def _alter_table(engine, sql: str) -> DataFrame:
         raise ValueError(f"cannot parse ALTER TABLE: {sql[:120]}")
     name, action = _norm_name(m.group(1)), m.group(2).strip()
     au = action.upper()
+    rec = _require_managed(engine, name)
+    txn_snapshot_if_needed(engine, name)
     if au.startswith("EXECUTE"):
-        return _table_execute(engine, name, action)
+        return _table_execute(engine, rec, action)
     if au.startswith("SET PROPERTIES"):
         # #setTableProperties: recorded metadata (SHOW CREATE TABLE surfaces
         # format/location; arbitrary properties are retained here).
-        _require_managed(engine, name)
-        props = getattr(engine, "_table_properties", None)
-        if props is None:
-            props = engine._table_properties = {}
-        props.setdefault(name, {}).update(
+        rec.properties.update(
             (pm.group(1).lower(), pm.group(2))
             for pm in re.finditer(r"([\w.]+)\s*=\s*'([^']*)'", action)
         )
@@ -1394,17 +1348,13 @@ def _alter_table(engine, sql: str) -> DataFrame:
         # defaults fill unmentioned columns on INSERT (the reference's
         # column-default rule); NOT NULL is not enforced by this engine, so
         # dropping it is an accepted no-op.
-        _require_managed(engine, name)
         col, verb = _norm_name(dm.group(1)), dm.group(2).upper()
-        defaults = getattr(engine, "_column_defaults", None)
-        if defaults is None:
-            defaults = engine._column_defaults = {}
         if verb.startswith("SET DEFAULT"):
-            defaults[(name, col)] = dm.group(3).strip()
+            rec.defaults[col] = dm.group(3).strip()
         elif verb.startswith("DROP DEFAULT"):
-            defaults.pop((name, col), None)
+            rec.defaults.pop(col, None)
         return rows_result(engine.spark, 0)
-    df = _read(engine, name)
+    df = _stored(engine, rec)
     if au.startswith("ALTER COLUMN") and "SET DATA TYPE" in au:
         # #setColumnType (SetColumnTypeTask.java; Iceberg type evolution):
         # a projection-level cast commit — widened reads, one rewrite.
@@ -1417,7 +1367,7 @@ def _alter_table(engine, sql: str) -> DataFrame:
         out = df.select(
             *[F.col(c).cast(typ).alias(c) if c == col else F.col(c) for c in df.columns]
         )
-        _commit(engine, name, out)
+        _commit(engine, rec, out)
         return rows_result(engine.spark, 0)
     if au.startswith("ADD COLUMN"):
         am = re.match(r"ADD\s+COLUMN\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s+(.+)$", action, re.IGNORECASE)
@@ -1433,51 +1383,33 @@ def _alter_table(engine, sql: str) -> DataFrame:
             raise ValueError(f"column not found: {col}")
         if len(df.columns) == 1:
             raise ValueError("cannot drop the only column")
-        if col in (getattr(engine, "_dml_layouts", {}).get(name) or []):
+        if col in (rec.partition_by or []):
             # Trino table formats reject this too (the layout references it)
             raise ValueError(f"cannot drop partition column: {col}")
+        rec.defaults.pop(col, None)
         out = df.drop(col)
     elif au.startswith("RENAME COLUMN"):
         am = re.match(r"RENAME\s+COLUMN\s+(\w+)\s+TO\s+(\w+)", action, re.IGNORECASE)
         old, new = _norm_name(am.group(1)), _norm_name(am.group(2))
         if old not in df.columns:
             raise ValueError(f"column not found: {old}")
-        layout = getattr(engine, "_dml_layouts", {}).get(name)
-        if layout and old in layout:
+        if old in (rec.partition_by or []):
             # keep the hive layout pointing at the renamed column
-            engine._dml_layouts[name] = [new if c == old else c for c in layout]
+            rec.partition_by = [new if c == old else c for c in rec.partition_by]
+        if old in rec.defaults:
+            rec.defaults[new] = rec.defaults.pop(old)
         out = df.withColumnRenamed(old, new)
     elif au.startswith("RENAME TO"):
         new = _norm_name(action.split()[2])
-        path = _require_managed(engine, name)
-        newpath = os.path.join(_warehouse_dir(), new)
-        os.rename(path, newpath)
-        if os.path.isdir(_snap_root(name)):
-            os.makedirs(os.path.dirname(_snap_root(new)), exist_ok=True)
-            shutil.rmtree(_snap_root(new), ignore_errors=True)
-            os.rename(_snap_root(name), _snap_root(new))
-        tables = _managed(engine)
-        del tables[name]
-        tables[new] = newpath
-        # Move the partition layout with the table; a future CREATE TABLE
-        # under the old name must not inherit it.
-        layouts = getattr(engine, "_dml_layouts", {})
-        if name in layouts:
-            layouts[new] = layouts.pop(name)
-        logical = getattr(engine, "_dml_logical_cols", {})
-        if name in logical:
-            logical[new] = logical.pop(name)
-        engine.spark.catalog.dropTempView(name)
-        renamed = read_parquet(engine.spark, newpath)
-        lcols = logical.get(new)
-        if lcols and lcols != renamed.columns and set(lcols) == set(renamed.columns):
-            renamed = renamed.select(*lcols)
-        renamed.createOrReplaceTempView(new)
-        refresh_infoschema(engine, changed=new, dropped=name)
+        if new in engine.dml_tables:
+            raise ValueError(f"table already exists: {new}")
+        for b in rec.branches:
+            _move(engine, fork_name(name, b), fork_name(new, b)).base = new
+        _move(engine, name, new)
         return rows_result(engine.spark, 0)
     else:
         raise ValueError(f"unsupported ALTER TABLE action: {action[:60]}")
-    _commit(engine, name, out)
+    _commit(engine, rec, out)
     return rows_result(engine.spark, 0)
 
 
@@ -1504,7 +1436,7 @@ def _parse_duration_s(txt: str) -> float:
     return float(m.group(1)) * {"s": 1, "m": 60, "h": 3600, "d": 86400}[m.group(2).lower()]
 
 
-def _table_execute(engine, name: str, action: str) -> DataFrame:
+def _table_execute(engine, rec: ManagedTable, action: str) -> DataFrame:
     """ALTER TABLE t EXECUTE <proc>(args) [WHERE pred] — the connector
     table-procedure surface (grammar #tableExecute; Iceberg's
     OptimizeTableProcedure.java / ExpireSnapshotsTableProcedure.java /
@@ -1529,23 +1461,22 @@ def _table_execute(engine, name: str, action: str) -> DataFrame:
         a.group(1).lower(): a.group(2)
         for a in re.finditer(r"(\w+)\s*=>\s*'([^']*)'", argtxt)
     }
-    spark = engine.spark
-    path = _require_managed(engine, name)
+    spark, path = engine.spark, rec.path
     if proc == "optimize":
         threshold = _parse_size(args.get("file_size_threshold", "128MB"))
-        part_cols = getattr(engine, "_dml_layouts", {}).get(name)
-        df = _read(engine, name)
+        part_cols = rec.partition_by
+        df = _stored(engine, rec)
         before = _file_count(path)
         if where:
             pred = F.expr(_translate_fragment(engine, where))
-            scoped = _affected_partitions(engine, name, df, pred)
+            scoped = _affected_partitions(rec, df, pred)
             if scoped is not None:
                 cond, untouched = scoped
                 if cond is None:  # predicate matched nothing: no-op commit
                     return rows_result(spark, [(0, before, before)], _OPTIMIZED)
                 compacted = df.filter(cond).repartition(*[F.col(c) for c in part_cols])
                 n = _commit(
-                    engine, name, compacted,
+                    engine, rec, compacted,
                     preserve_rel_dirs=untouched, operation="optimize",
                 )
                 return rows_result(spark, [(n, before, _file_count(path))], _OPTIMIZED)
@@ -1561,29 +1492,23 @@ def _table_execute(engine, name: str, action: str) -> DataFrame:
             )
             target = max(1, -(-size // threshold))  # ceil
             compacted = df.repartition(int(target))
-        n = _commit(engine, name, compacted, operation="optimize")
+        n = _commit(engine, rec, compacted, operation="optimize")
         return rows_result(spark, [(n, before, _file_count(path))], _OPTIMIZED)
     if proc == "expire_snapshots":
         horizon = _parse_duration_s(args.get("retention_threshold", "7d"))
         cutoff = _dt.datetime.now(_dt.timezone.utc).timestamp() - horizon
-        log = _read_log(name)
-        current = max((e["version"] for e in log), default=0)
         expired = 0
-        for e in log:
-            if e.get("expired") or e["version"] == current:
+        for e in rec.log:
+            if e.get("expired") or e["version"] == rec.version:
                 continue
             if e["committed_at"] <= cutoff:
-                shutil.rmtree(
-                    os.path.join(_snap_root(name), f"v{e['version']:05d}"),
-                    ignore_errors=True,
-                )
+                shutil.rmtree(rec.version_dir(e["version"]), ignore_errors=True)
                 e["expired"] = True
                 expired += 1
-        _write_log(name, log)
         return rows_result(spark, [(expired,)], "expired_snapshots: bigint")
     if proc == "drop_extended_stats":
-        getattr(engine, "_stats_cache", {}).pop(name, None)
-        return rows_result(spark, [(name,)], "table: string")
+        engine._stats_cache.pop(rec.name, None)
+        return rows_result(spark, [(rec.name,)], "table: string")
     if proc == "remove_orphan_files":
         parent, base = os.path.dirname(path), os.path.basename(path)
         removed = 0
@@ -1601,6 +1526,5 @@ def refresh_infoschema(engine, changed: str | None = None, dropped: str | None =
     is built from the live catalog when a statement reads it
     (infoschema.resolve). A mutation invalidates the ANALYZE-collected
     statistics of the table it touched."""
-    stats = getattr(engine, "_stats_cache", {})
     for name in (changed, dropped):
-        stats.pop(name, None)
+        engine._stats_cache.pop(name, None)

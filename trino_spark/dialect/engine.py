@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from trino_spark import infoschema
 from trino_spark.catalog import ALL_TABLES, Catalog, read_parquet
+from trino_spark.dialect import dml as _dml
 from trino_spark.dialect import routines as _routines_mod
 from trino_spark.dialect.dml import rows_result
 from trino_spark.dialect.rewrites import translate
@@ -170,6 +171,33 @@ class TrinoEngine:
         # core/.../connector/system/MaterializedViewSystemTable.java):
         # source-table fingerprints captured at refresh time.
         self._mv_meta: dict[str, dict] = {}
+        # Engine-managed tables, one record each (dialect/dml.py), and the
+        # open transaction's pins (None outside START TRANSACTION).
+        self.dml_tables: dict[str, _dml.ManagedTable] = {}
+        self._txn: dict | None = None
+        # Logical views: name -> defining Trino SQL (CreateViewTask).
+        self.views: dict[str, str] = {}
+        # CREATE SCHEMA names -> properties; the table namespace is flat.
+        self.schemas: dict[str, dict] = {"default": {}}
+        # CREATE CATALOG mounts (dialect/catalogs.py).
+        self.catalogs: dict[str, dict] = {}
+        # CREATE FUNCTION text by upper-case name (SHOW CREATE FUNCTION).
+        self._function_sources: dict[str, str] = {}
+        # ANALYZE-collected statistics by table (infoschema.show_stats).
+        self._stats_cache: dict[str, tuple] = {}
+        # The session identity (SET SESSION AUTHORIZATION) and USE schema.
+        self.session_user = "trino"
+        self._current_schema = "default"
+        # Roles, grants, comments, row filters and column masks
+        # (dialect/access.py); no current role = the owner session.
+        self._acl: dict = {
+            "roles": {},  # role -> {(priv, table)}
+            "current": None,
+            "table_comments": {},
+            "column_comments": {},  # (table, col) -> text
+            "row_filters": {},  # (role, table) -> predicate SQL
+            "column_masks": {},  # (role, table) -> {col: mask expr SQL}
+        }
         if sf_dir:
             self.catalog.register_parquet_dir(sf_dir, ALL_TABLES)
         # Functions and PTFs are not registered here: translate() registers
@@ -190,7 +218,7 @@ class TrinoEngine:
             with self._cte_lock:
                 self._cte_active += 1
             if self.queries.bound() is None:
-                rec = self.queries.open(trino_sql, getattr(self, "session_user", "trino"))
+                rec = self.queries.open(trino_sql, self.session_user)
                 self.queries.start(rec)
                 self.queries.bind(rec)
         try:
@@ -250,7 +278,7 @@ class TrinoEngine:
     def _sql_inner(self, trino_sql: str) -> DataFrame:
         from trino_spark.dialect import prepared as _prep
 
-        if "@" in trino_sql and getattr(self, "dml_tables", None):
+        if "@" in trino_sql and self.dml_tables:
             # Branch refs t@b (grammar SqlBase.g4:80,221; Iceberg branch
             # semantics): resolve BEFORE time travel so `t@b FOR VERSION
             # AS OF n` pins a snapshot of the branch fork.
@@ -262,7 +290,7 @@ class TrinoEngine:
             # — substituted as a literal outside string literals.
             from trino_spark.dialect.access import map_outside_literals
 
-            _user = getattr(self, "session_user", "trino").replace("'", "''")
+            _user = self.session_user.replace("'", "''")
             trino_sql = map_outside_literals(
                 trino_sql,
                 lambda p: re.sub(r"\bCURRENT_USER\b", f"'{_user}'", p, flags=re.IGNORECASE),
@@ -285,7 +313,7 @@ class TrinoEngine:
             # raw spark.sql callers)
             from trino_spark.dialect.access import map_outside_literals
 
-            _sch = getattr(self, "_current_schema", "default")
+            _sch = self._current_schema
             trino_sql = map_outside_literals(
                 trino_sql,
                 lambda p: re.sub(
@@ -301,7 +329,7 @@ class TrinoEngine:
             # active role (empty for the unrestricted owner session).
             from trino_spark.dialect.access import map_outside_literals
 
-            _role = getattr(self, "_acl", {}).get("current")
+            _role = self._acl["current"]
             _lit = (
                 "array('" + _role.replace("'", "''") + "')"
                 if _role
@@ -321,10 +349,8 @@ class TrinoEngine:
         if re.search(r"\bFOR\s+(?:VERSION|TIMESTAMP)\s+AS\s+OF\b", trino_sql, re.IGNORECASE):
             # Time travel (grammar SqlBase.g4 queryPeriod; Iceberg/Delta
             # connector behavior): pin table refs to snapshot versions.
-            from trino_spark.dialect import dml as _dml
-
             trino_sql = _dml.resolve_time_travel(self, trino_sql)
-        if getattr(self, "catalogs", None):
+        if self.catalogs:
             # Dynamic catalog mounts (CREATE CATALOG; CatalogFactory.java):
             # cat.schema.table refs resolve to lazily-registered views
             # (jdbc mounts resolve natively through Spark's DSv2 catalog).
@@ -338,8 +364,6 @@ class TrinoEngine:
             # Iceberg-style metadata tables over the snapshot log / current
             # table directory (SnapshotsTable / HistoryTable / FilesTable /
             # PartitionsTable analogs).
-            from trino_spark.dialect import dml as _dml
-
             trino_sql = _dml.resolve_metadata_tables(self, trino_sql)
         wf = re.match(
             r"\s*WITH\s+(FUNCTION\s+.*?)\s+(SELECT|VALUES)\b(.*)$",
@@ -385,7 +409,7 @@ class TrinoEngine:
         if up0 == ["SHOW", "CREATE", "FUNCTION"]:
             # #showCreateFunction: render the stored definition text.
             fname = trino_sql.split()[3].strip('"').rstrip(";").lower()
-            src = getattr(self, "_function_sources", {}).get(fname.upper())
+            src = self._function_sources.get(fname.upper())
             if src is None:
                 raise ValueError(f"function not found: {fname}")
             return rows_result(self.spark, [(src,)], "create_function: string")
@@ -396,8 +420,6 @@ class TrinoEngine:
             return rows_result(self.spark, [(self.sql_path,)], "path: string")
         routine = _routines_mod.parse_create_function(trino_sql)
         if routine is not None:
-            if not hasattr(self, "_function_sources"):
-                self._function_sources = {}
             self._function_sources[routine.name.upper()] = trino_sql.strip().rstrip(";")
             if isinstance(routine, _routines_mod.PythonRoutine):
                 # Row-interpreted path (loops / LANGUAGE PYTHON): a real UDF.
@@ -414,11 +436,13 @@ class TrinoEngine:
         if dropped is not None:
             self.routines.pop(dropped, None)
             self.python_routines.pop(dropped, None)
-            getattr(self, "_function_sources", {}).pop(dropped.upper(), None)
+            self._function_sources.pop(dropped.upper(), None)
             return rows_result(self.spark, [(dropped.lower(),)], "function: string")
         # information_schema and system tables (infoschema.TABLES): built
-        # now from the live engine, for the relations this statement reads
-        trino_sql = infoschema.resolve(self, trino_sql)
+        # now from the live engine, for the relations this statement reads;
+        # a CREATE VIEW keeps its text (building the view resolves them)
+        if not re.match(r"\s*CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\b", trino_sql, re.IGNORECASE):
+            trino_sql = infoschema.resolve(self, trino_sql)
         stripped = trino_sql.strip().rstrip(";")
         up = stripped.upper().split()
         # Access control + comments (AccessControl SPI / CommentTask.java):
@@ -470,9 +494,7 @@ class TrinoEngine:
             # tables, logical views, column evolution. Catalog-qualified
             # targets route to the mounted connector's page-sink analog
             # (memory stores, blackhole swallows) first.
-            from trino_spark.dialect import dml as _dml
-
-            if getattr(self, "catalogs", None):
+            if self.catalogs:
                 from trino_spark.dialect import catalogs as _cats
 
                 cat_dml = _cats.try_execute_dml(self, stripped)
@@ -668,7 +690,7 @@ class TrinoEngine:
             # gate as CREATE/DROP CATALOG).
             from trino_spark.dialect import access as _access
 
-            if _access._state(self)["current"] is not None:
+            if self._acl["current"] is not None:
                 raise _access.AccessDenied(
                     "Access Denied: SET SESSION AUTHORIZATION requires an owner session"
                 )
@@ -698,13 +720,9 @@ class TrinoEngine:
             # copy-on-write, so the transaction pins per-table snapshots
             # (dialect/dml.py txn_*). Access modes are accepted and ignored
             # (single-session engine).
-            from trino_spark.dialect import dml as _dml
-
             _dml.txn_begin(self)
             return rows_result(self.spark, [("STARTED",)], "transaction: string")
         if up[:1] in (["COMMIT"], ["ROLLBACK"]):
-            from trino_spark.dialect import dml as _dml
-
             if up[0] == "COMMIT":
                 _dml.txn_commit(self)
             else:
@@ -718,16 +736,12 @@ class TrinoEngine:
                 for f in self.spark.table(name).schema.fields
             )
             src = self.catalog._sources.get(name)
-            dml_path = getattr(self, "dml_tables", {}).get(name)
-            extra = getattr(self, "_table_properties", {}).get(name, {})
-            extra_txt = "".join(f",\n   {k} = '{v}'" for k, v in sorted(extra.items()))
-            if dml_path:
-                with_props = f"\nWITH (\n   format = 'PARQUET',\n   location = '{dml_path}'{extra_txt}\n)"
+            rec = self.dml_tables.get(name)
+            if rec is not None:
+                extra = "".join(f",\n   {k} = '{v}'" for k, v in sorted(rec.properties.items()))
+                with_props = f"\nWITH (\n   format = 'PARQUET',\n   location = '{rec.path}'{extra}\n)"
             elif src is not None:
-                with_props = f"\nWITH (\n   format = '{src.format.upper()}',\n   location = '{src.path}'{extra_txt}\n)"
-            elif extra:
-                kv = ",\n   ".join(f"{k} = '{v}'" for k, v in sorted(extra.items()))
-                with_props = f"\nWITH (\n   {kv}\n)"
+                with_props = f"\nWITH (\n   format = '{src.format.upper()}',\n   location = '{src.path}'\n)"
             else:
                 with_props = ""
             ddl = f"CREATE TABLE {name} (\n   {cols}\n){with_props}"
@@ -752,19 +766,16 @@ class TrinoEngine:
             return infoschema.show_stats(
                 self.spark,
                 target.strip('"'),
-                cache=getattr(self, "_stats_cache", None),
+                cache=self._stats_cache,
             )
         if up[:1] == ["ANALYZE"] and len(up) >= 2:
             # ANALYZE <table> (grammar SqlBase.g4; AnalyzeTask.java +
             # connector collectStatistics): run the one-pass stats
             # aggregation now and persist it on the engine — subsequent
             # SHOW STATS serve the collected statistics without a scan.
-            cache = getattr(self, "_stats_cache", None)
-            if cache is None:
-                cache = self._stats_cache = {}
             tbl = stripped.split()[1].strip('"').split(".")[-1].lower()
-            cache.pop(tbl, None)
-            n = infoschema.show_stats(self.spark, tbl, cache=cache, populate=True).where(
+            self._stats_cache.pop(tbl, None)
+            n = infoschema.show_stats(self.spark, tbl, cache=self._stats_cache, populate=True).where(
                 "column_name IS NULL"
             ).collect()[0].row_count
             return rows_result(self.spark, [(tbl, int(n or 0))], "table_name: string, rows: bigint")
@@ -864,7 +875,7 @@ class TrinoEngine:
         df.write.mode("overwrite").parquet(path)
         stored = read_parquet(self.spark, path)
         stored.createOrReplaceTempView(name)
-        getattr(self, "_stats_cache", {}).pop(name, None)  # new data, stale stats
+        self._stats_cache.pop(name, None)  # new data, stale stats
         self._mv_meta[name] = {
             "sources": self._mv_source_fingerprints(self.materialized_views[name]),
             "last_fresh_time": datetime.datetime.now(datetime.timezone.utc).isoformat(),

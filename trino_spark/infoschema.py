@@ -30,17 +30,15 @@ class SystemTable(NamedTuple):
 
 def _schemata(engine) -> list[tuple]:
     # CREATE SCHEMA registers names only: the table namespace is flat
-    return [("spark", s) for s in sorted(set(getattr(engine, "schemas", ())) | {"default"})]
+    return [("spark", s) for s in sorted(engine.schemas)]
 
 
 def _tables(engine) -> list[tuple]:
-    names = (
-        set(engine.catalog._sources)
-        | set(getattr(engine, "dml_tables", ()))
-        | set(getattr(engine, "views", ()))
-        | set(engine.materialized_views)
-    )
-    return [("spark", "default", t, "BASE TABLE") for t in sorted(names)]
+    # branch forks are not tables: they are read as t@branch
+    types = dict.fromkeys(engine.catalog._sources, "BASE TABLE")
+    types.update((n, "BASE TABLE") for n, rec in engine.dml_tables.items() if rec.base is None)
+    types.update(dict.fromkeys([*engine.views, *engine.materialized_views], "VIEW"))
+    return [("spark", "default", t, ty) for t, ty in sorted(types.items())]
 
 
 def _columns(engine) -> list[tuple]:
@@ -59,7 +57,7 @@ def _columns(engine) -> list[tuple]:
 
 def _views(engine) -> list[tuple]:
     # the engine's logical views + MVs (InformationSchemaPageSource VIEWS)
-    return [(n, d, "VIEW") for n, d in sorted(getattr(engine, "views", {}).items())] + [
+    return [(n, d, "VIEW") for n, d in sorted(engine.views.items())] + [
         (n, d, "MATERIALIZED VIEW") for n, d in sorted(engine.materialized_views.items())
     ]
 
@@ -87,14 +85,12 @@ def _tasks(engine) -> list[tuple]:
 
 def _catalogs(engine) -> list[tuple]:
     # CatalogSystemTable.java: the session catalog + dynamic mounts
-    mounts = getattr(engine, "catalogs", {})
+    mounts = engine.catalogs
     return sorted([("spark", "spark")] + [(n, m["connector"]) for n, m in mounts.items()])
 
 
 def _table_comments(engine) -> list[tuple]:
-    from trino_spark.dialect.access import _state
-
-    return sorted(_state(engine)["table_comments"].items())
+    return sorted(engine._acl["table_comments"].items())
 
 
 # {Schema,Table,Column,Analyze,MaterializedView}PropertiesSystemTable.java:
@@ -179,7 +175,9 @@ TABLES: dict[str, SystemTable] = {
     # DatabaseMetaData), read off information_schema
     "system.jdbc.tables": SystemTable(
         "table_cat string, table_schem string, table_name string, table_type string",
-        lambda engine: [("spark", s, t, "TABLE") for _c, s, t, _t in _tables(engine)],
+        lambda engine: [
+            ("spark", s, t, "VIEW" if ty == "VIEW" else "TABLE") for _c, s, t, ty in _tables(engine)
+        ],
     ),
     "system.jdbc.schemas": SystemTable(
         "table_schem string, table_catalog string",

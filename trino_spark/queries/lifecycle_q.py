@@ -371,8 +371,6 @@ def dialect_table_optimize(spark: SparkSession, sf: str) -> DataFrame:
     the optimized r=0 partition."""
     import pyspark.sql.functions as F
 
-    from trino_spark.dialect.dml import _managed
-
     eng = engine_for(spark, sf)
     tbl = f"opt_{os.getpid()}"
     eng.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -383,7 +381,7 @@ def dialect_table_optimize(spark: SparkSession, sf: str) -> DataFrame:
     for _ in range(3):
         eng.sql(f"INSERT INTO {tbl} SELECT n_nationkey + 100, n_regionkey FROM nation")
     eng.sql(f"ALTER TABLE {tbl} EXECUTE optimize")
-    path = _managed(eng)[tbl]
+    path = eng.dml_tables[tbl].path
     r0 = sum(
         1 for f in os.listdir(os.path.join(path, "r=0")) if f.endswith(".parquet")
     )
