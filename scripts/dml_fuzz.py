@@ -10,7 +10,9 @@ range deletes, column updates feeding later predicates, a column default
 that later column-list inserts fill, RENAME TO and back — where
 copy-on-write or table-record bookkeeping bugs (stale carry, missed
 partition, double apply, lost default) would surface as a state
-divergence.
+divergence. A seeded share of the statements (transaction statements
+included) starts with a block or line comment, as BI tools send them;
+DuckDB runs the same text.
 
 Usage: python scripts/dml_fuzz.py [n_ops] [seed]
 """
@@ -182,6 +184,11 @@ def fuzz_dml(
     txn_rollback = False
     txn_added_snapshot: list[str] = []
     use_txns = n_ops >= 10  # small runs stay plain-op (regression speed)
+    # its own generator, so a seed's operations stay what they were
+    lead_rng = random.Random(-seed)
+
+    def lead() -> str:
+        return lead_rng.choice(("", "", "", "/* fuzz */ ", "-- fuzz\n"))
     for i in range(n_ops):
         # Randomly open a transaction spanning the next 1-3 ops, resolved
         # by COMMIT or ROLLBACK on both engines (engine: snapshot-pinned
@@ -192,9 +199,12 @@ def fuzz_dml(
             txn_until = i + span - 1
             txn_rollback = rng.random() < 0.5
             txn_added_snapshot = list(added)
-            eng.sql("START TRANSACTION")
-            con.execute("BEGIN")
+            c = lead()
+            eng.sql(c + "START TRANSACTION")
+            con.execute(c + "BEGIN")
         eng_ops, duck_ops = gen_op(rng, table, next_k, added)
+        c = lead()
+        eng_ops, duck_ops = [c + s for s in eng_ops], [c + s for s in duck_ops]
         op = "; ".join(eng_ops)
         try:
             for stmt in eng_ops:
@@ -206,13 +216,11 @@ def fuzz_dml(
             con.execute(d)
         in_txn = txn_until > i
         if txn_until == i:
+            end = lead() + ("ROLLBACK" if txn_rollback else "COMMIT")
+            eng.sql(end)
+            con.execute(end)
             if txn_rollback:
-                eng.sql("ROLLBACK")
-                con.execute("ROLLBACK")
                 added[:] = txn_added_snapshot  # full replay: drops too
-            else:
-                eng.sql("COMMIT")
-                con.execute("COMMIT")
         # State compare runs EVERY op — mid-transaction both sides see the
         # uncommitted state; after ROLLBACK both revert.
         a_cols, a, o_cols, o = states()

@@ -41,8 +41,20 @@ def test_grant_enforcement(engine):
     ):
         with pytest.raises(AccessDenied, match="lacks SELECT on region"):
             engine.sql(sql).collect()
+    # a leading comment or lower case does not take a write past the check
+    engine.sql("SET ROLE NONE")
+    engine.sql("DROP TABLE IF EXISTS acl_q")
+    engine.sql("CREATE TABLE acl_q AS SELECT 1 AS x")
+    engine.sql("GRANT SELECT ON acl_q TO ROLE reader")
+    engine.sql("SET ROLE reader")
+    for spell in (str, "/* c */ {}".format, "-- c\n{}".format, str.lower):
+        for stmt in ("INSERT INTO acl_q VALUES (2)", "DROP TABLE acl_q"):
+            with pytest.raises(AccessDenied, match="lacks INSERT on acl_q"):
+                engine.sql(spell(stmt))
+    assert engine.sql("SELECT count(*) AS c FROM acl_q").collect()[0].c == 1
     engine.sql("SET ROLE NONE")
     assert engine.sql("SELECT count(*) AS c FROM region").collect()[0].c == 5
+    engine.sql("DROP TABLE acl_q")
 
 
 def test_dml_privileges(engine):
@@ -84,6 +96,27 @@ def test_infoschema_readable_under_role(engine):
     engine.sql("SET ROLE limited")
     assert len(engine.sql("SHOW TABLES").collect()) > 0
     engine.sql("SET ROLE NONE")
+
+
+def test_drop_and_rename_take_a_managed_tables_comments(engine):
+    def comments():
+        rows = engine.sql("SELECT * FROM system.metadata.table_comments").collect()
+        return {(r.table_name, r.comment) for r in rows}, set(engine._acl["column_comments"])
+
+    engine.sql("CREATE TABLE pc1 AS SELECT 1 AS a")
+    engine.sql("COMMENT ON TABLE pc1 IS 'old comment'")
+    engine.sql("COMMENT ON COLUMN pc1.a IS 'old column'")
+    engine.sql("ALTER TABLE pc1 RENAME TO pc2")
+    assert comments() == ({("pc2", "old comment")}, {("pc2", "a")})
+    # a rolled-back DROP leaves them where they were
+    engine.sql("START TRANSACTION")
+    engine.sql("DROP TABLE pc2")
+    engine.sql("ROLLBACK")
+    assert comments() == ({("pc2", "old comment")}, {("pc2", "a")})
+    engine.sql("DROP TABLE pc2")
+    engine.sql("CREATE TABLE pc2 AS SELECT 2 AS a")
+    assert comments() == (set(), set())
+    engine.sql("DROP TABLE pc2")
 
 
 def test_comments(engine):

@@ -184,15 +184,22 @@ def test_session_header_applies_per_request(server):
         assert "query_max_run_time" not in rows
 
 
+# a statement's spellings: BI tools prepend a comment to each
+_SPELLINGS = (str, "/* c */ {}".format, "-- c\n{}".format, str.lower)
+
+
 def test_set_session_response_header_updates_client(server):
-    with dbapi.connect(server.url()) as c:
-        c.execute("SET SESSION join_distribution_type = 'BROADCAST'").fetchall()
-        assert c.session_properties.get("join_distribution_type") == "BROADCAST"
-        # the carried property now reaches later statements
-        rows = dict(c.execute("SHOW SESSION").fetchall())
-        assert rows.get("join_distribution_type") == "BROADCAST"
-        c.execute("RESET SESSION join_distribution_type").fetchall()
-        assert "join_distribution_type" not in c.session_properties
+    for spell in _SPELLINGS:
+        with dbapi.connect(server.url()) as c:
+            c.execute(spell("SET SESSION join_distribution_type = 'BROADCAST'")).fetchall()
+            want = "broadcast" if spell is str.lower else "BROADCAST"
+            assert c.session_properties.get("join_distribution_type") == want
+            # the carried property now reaches later statements
+            rows = dict(c.execute("SHOW SESSION").fetchall())
+            assert rows.get("join_distribution_type") == want
+            c.execute(spell("RESET SESSION join_distribution_type")).fetchall()
+            assert "join_distribution_type" not in c.session_properties
+        assert "join_distribution_type" not in server.engine.session_properties
 
 
 # ----------------------------------------------------- event listener SPI
@@ -281,9 +288,13 @@ def test_client_user_reaches_runtime_queries_and_events(server):
 
 
 def test_use_statement_updates_client_catalog_schema(server):
-    with dbapi.connect(server.url()) as c:
-        c.execute("USE default").fetchall()
-        assert c.schema == "default" and c.catalog is None
+    for spell in _SPELLINGS:
+        with dbapi.connect(server.url()) as c:
+            c.execute(spell("USE default")).fetchall()
+            assert c.schema == "default" and c.catalog is None
+            c.execute(spell("USE tpch.s1")).fetchall()
+            assert (c.catalog, c.schema) == ("tpch", "s1")
+            c.execute("USE default").fetchall()
 
 
 def test_prepared_statement_header_flow(server):
@@ -361,13 +372,14 @@ def test_session_value_with_comma_roundtrips(server):
 
 
 def test_set_session_does_not_leak_across_connections(server):
-    with dbapi.connect(server.url()) as a:
-        a.execute("SET SESSION leaky_prop = 'zzz'").fetchall()
-        # A's next request still sees it (carried by A's header)
-        assert dict(a.execute("SHOW SESSION").fetchall()).get("leaky_prop") == "zzz"
-    with dbapi.connect(server.url()) as b:  # stateless server: B must not
-        assert "leaky_prop" not in dict(b.execute("SHOW SESSION").fetchall())
-    assert "leaky_prop" not in server.engine.session_properties
+    for spell in _SPELLINGS:
+        with dbapi.connect(server.url()) as a:
+            a.execute(spell("SET SESSION leaky_prop = 'zzz'")).fetchall()
+            # A's next request still sees it (carried by A's header)
+            assert dict(a.execute("SHOW SESSION").fetchall()).get("leaky_prop") == "zzz"
+        with dbapi.connect(server.url()) as b:  # stateless server: B must not
+            assert "leaky_prop" not in dict(b.execute("SHOW SESSION").fetchall())
+        assert "leaky_prop" not in server.engine.session_properties
 
 
 def test_failed_session_overlay_releases_admission_slot(server):

@@ -1097,3 +1097,86 @@ class TestSystemTableReferences:
     )
     def test_names_resolve_in_any_case_and_quoted(self, fresh, name, rows):
         assert len(fresh.sql(f"SELECT * FROM {name}").collect()) == rows
+
+
+class TestStatementHead:
+    """A statement's kind is read from its tokens: a leading block or line
+    comment (as BI tools prepend to every statement) or lower case changes
+    neither where a statement goes nor what it does."""
+
+    SPELLINGS = (str, "/* c */ {}".format, "-- c\n{}".format, str.lower)
+    _Q = (
+        "DROP TABLE IF EXISTS hd_q",
+        "CREATE TABLE hd_q AS SELECT n_nationkey AS k, n_name AS n FROM nation",
+    )
+    # (setup, statement, probe): every spelling of the statement runs after
+    # the setup and must give the plain spelling's rows, and the probe the
+    # plain spelling's rows after it
+    KINDS = [
+        (("DROP TABLE IF EXISTS hd_t",), "CREATE TABLE hd_t (a bigint, b varchar)",
+         "SHOW COLUMNS FROM hd_t"),
+        (_Q, "INSERT INTO hd_q VALUES (100, 'x')",
+         "SELECT count(*) AS c FROM hd_q FOR VERSION AS OF 1"),
+        (_Q, "DELETE FROM hd_q WHERE k < 5", "SELECT count(*) AS c FROM hd_q"),
+        (_Q, "UPDATE hd_q SET n = 'y' WHERE k = 1", "SELECT n FROM hd_q WHERE k = 1"),
+        (_Q, "MERGE INTO hd_q t USING (SELECT 1 AS k) s ON t.k = s.k WHEN MATCHED THEN DELETE",
+         "SELECT count(*) AS c FROM hd_q"),
+        (_Q, "TRUNCATE TABLE hd_q", "SELECT count(*) AS c FROM hd_q"),
+        (_Q, "ALTER TABLE hd_q ADD COLUMN z bigint", "SHOW COLUMNS FROM hd_q"),
+        (_Q, "DROP TABLE hd_q",
+         "SELECT count(*) AS c FROM information_schema.tables WHERE table_name = 'hd_q'"),
+        (("DROP VIEW IF EXISTS hd_v",), "CREATE VIEW hd_v AS SELECT 1 AS one",
+         "SELECT * FROM hd_v"),
+        ((), "START TRANSACTION", "ROLLBACK"),
+        (("RESET SESSION hd_p",), "SET SESSION hd_p = 'v'", "SHOW SESSION"),
+        ((), "SHOW SESSION", None),
+        ((), "SHOW TABLES", None),
+        ((), "DESCRIBE nation", None),
+        ((), "SHOW CREATE TABLE nation", None),
+        ((), "EXPLAIN (TYPE VALIDATE) SELECT 1", None),
+        ((), "USE default", None),
+        (("CREATE OR REPLACE FUNCTION hd_f(x bigint) RETURNS bigint RETURN x + 1",),
+         "SHOW CREATE FUNCTION hd_f", None),
+        ((), "WITH FUNCTION g(x bigint) RETURNS bigint RETURN x * 2 SELECT g(4) AS v", None),
+        ((), "SET PATH hd_path", None),
+        (("PREPARE hd_p FROM SELECT ? + 1 AS v",), "DESCRIBE OUTPUT hd_p", None),
+        ((), "CREATE ROLE hd_r", "DROP ROLE hd_r"),
+        ((), "CALL system.drop_row_filter('nobody', 'nation')", None),
+    ]
+
+    @pytest.mark.parametrize("setup, stmt, probe", KINDS, ids=[k[1][:30] for k in KINDS])
+    def test_leading_comment_and_case_keep_the_statement(self, engine, setup, stmt, probe):
+        def run(spelling):
+            for s in setup:
+                engine.sql(s)
+            out = engine.sql(spelling(stmt)).collect()
+            return out, engine.sql(probe).collect() if probe else None
+
+        plain = run(str)
+        for spelling in self.SPELLINGS[1:]:
+            assert run(spelling) == plain, spelling(stmt)
+
+
+def test_dispatch_tokenizes_a_query_once(spark, sf_dir, monkeypatch):
+    """Dispatch reads a query's kind from one tokenization of its text;
+    the next reader is translate() (with no routines to inline)."""
+    import sys
+
+    from trino_spark.dialect import engine as engine_mod
+    from trino_spark.dialect import tokenizer
+
+    real, calls, at_translate = tokenizer.tokenize, [], []
+
+    def counting(sql):
+        calls.append(sql)
+        return real(sql)
+
+    for mod in list(sys.modules.values()):
+        if mod and mod.__name__.startswith("trino_spark") and getattr(mod, "tokenize", None) is real:
+            monkeypatch.setattr(mod, "tokenize", counting)
+    translate_ = engine_mod.translate
+    monkeypatch.setattr(
+        engine_mod, "translate", lambda s: (at_translate.append(len(calls)), translate_(s))[1]
+    )
+    TrinoEngine(spark, sf_dir).sql("SELECT n_name FROM nation WHERE n_nationkey = 1").collect()
+    assert at_translate == [1]

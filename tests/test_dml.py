@@ -149,10 +149,13 @@ class TestTransactions:
         engine.sql("DROP TABLE IF EXISTS txn_t")
         engine.sql("CREATE TABLE txn_t AS SELECT n_nationkey AS k, n_regionkey AS r FROM nation")
         engine.sql("START TRANSACTION")
+        # a leading comment leaves a write inside the transaction
+        engine.sql("/* app=x */ INSERT INTO txn_t VALUES (200, 1)")
+        engine.sql("-- c\nINSERT INTO txn_t VALUES (201, 1)")
         engine.sql("DELETE FROM txn_t WHERE k < 20")
         engine.sql("ALTER TABLE txn_t ALTER COLUMN r SET DEFAULT 9")
         engine.sql("ALTER TABLE txn_t SET PROPERTIES owner_note = 'in-txn'")
-        assert engine.sql("SELECT count(*) AS c FROM txn_t").collect()[0].c == 5
+        assert engine.sql("SELECT count(*) AS c FROM txn_t").collect()[0].c == 7
         engine.sql("ROLLBACK")
         assert engine.sql("SELECT count(*) AS c FROM txn_t").collect()[0].c == 25
         # the default and the property set inside rewind with the data
@@ -259,6 +262,16 @@ class TestDDL:
         row = engine.sql("SELECT * FROM ddl_e").collect()[0]
         assert row.id == 1 and row.name == "a" and row.price == 9.5
         engine.sql("DROP TABLE ddl_e")
+
+    def test_column_text_with_as_is_not_a_ctas(self, engine):
+        # CTAS is an AS outside the column list, not " as " in its text
+        for col in ("b varchar DEFAULT 'known as b'", "b varchar COMMENT 'known as b'"):
+            engine.sql("DROP TABLE IF EXISTS ddl_c")
+            engine.sql(f"CREATE TABLE ddl_c (a bigint, {col})")
+            engine.sql("INSERT INTO ddl_c (a) VALUES (1)")
+            row = engine.sql("SELECT * FROM ddl_c").collect()[0]
+            assert (row.a, row.b) == (1, "known as b" if "DEFAULT" in col else None)
+        engine.sql("DROP TABLE ddl_c")
 
     def test_alter_add_drop_rename_column(self, engine):
         engine.sql("DROP TABLE IF EXISTS ddl_a")

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 
 from trino_spark import infoschema
 from trino_spark.dialect.dml import rows_result
-from trino_spark.dialect.tokenizer import Tok, render, structure, tokenize
+from trino_spark.dialect.tokenizer import Tok, head, render, split_args, structure, tokenize
 
 _PRIVS = ("SELECT", "INSERT", "UPDATE", "DELETE")
 
@@ -85,155 +85,158 @@ def _effective_roles(st, role: str) -> set:
     return out
 
 
-def try_execute(engine, sql: str) -> DataFrame | None:
-    st = engine._acl
-    s = sql.strip().rstrip(";")
-    up = s.upper().split()
-    spark = engine.spark
+# The role, grant, comment and CALL statements: each runs one entry of
+# the engine's statement table, on the statement text from its first
+# keyword.
 
-    if up[:2] == ["CREATE", "ROLE"]:
-        name = s.split()[2].strip('"').lower()
-        if name in st["roles"]:
-            raise ValueError(f"role already exists: {name}")
-        st["roles"][name] = set()
-        return rows_result(spark, [(name,)], "role: string")
-    if up[:2] == ["DROP", "ROLE"]:
-        name = s.split()[2].strip('"').lower()
-        if name not in st["roles"]:
-            raise ValueError(f"role not found: {name}")
-        del st["roles"][name]
-        if st["current"] == name:
-            st["current"] = None
-        return rows_result(spark, [(name,)], "role: string")
-    if up[:2] == ["SET", "ROLE"]:
-        name = s.split()[2].strip('"').lower()
-        if name == "none":
-            st["current"] = None
-        else:
-            if name not in st["roles"]:
-                raise ValueError(f"role not found: {name}")
-            st["current"] = name
-        return rows_result(spark, [(name,)], "role: string")
-    if up[:3] == ["SHOW", "CURRENT", "ROLES"]:
-        # ShowRolesTask with CURRENT: the enabled roles of this session —
-        # the SET ROLE plus everything transitively granted to it
-        rows = sorted((r,) for r in _effective_roles(st, st["current"])) if st["current"] else []
-        return rows_result(spark, rows, "role: string")
-    if up[:3] == ["SHOW", "ROLE", "GRANTS"]:
-        # ShowRoleGrants: roles granted NON-recursively to the session
-        # identity (docs sql/show-role-grants.md)
-        cur = st["current"]
-        rows = sorted(
-            (g,) for g, grantee in st.get("role_grants", set()) if grantee == cur
-        ) if cur else []
-        return rows_result(spark, rows, "role: string")
-    if up[:2] == ["SHOW", "ROLES"]:
-        rows = [(r,) for r in sorted(st["roles"])]
-        return rows_result(spark, rows, "role: string")
-    if up[:2] == ["SHOW", "GRANTS"]:
-        m = re.match(r"SHOW\s+GRANTS\s+ON\s+(?:TABLE\s+)?([\w.\"]+)", s, re.IGNORECASE)
-        table = m.group(1).strip('"').split(".")[-1].lower() if m else None
-        rows = [
-            (role, priv, tbl)
-            for role, grants in sorted(st["roles"].items())
-            for priv, tbl in sorted(grants)
-            if table is None or tbl == table
-        ]
-        return rows_result(spark, rows, "grantee: string, privilege: string, table_name: string")
-    if up[:1] == ["GRANT"]:
-        # role-to-role grant (docs sql/grant-roles.md; GrantRolesTask):
-        # GRANT r1 [, r2 ...] TO ROLE r [WITH ADMIN OPTION]
-        rg = re.match(
-            r"GRANT\s+([\w\"]+(?:\s*,\s*[\w\"]+)*)\s+TO\s+ROLE\s+([\w\"]+)"
-            r"(?:\s+WITH\s+ADMIN\s+OPTION)?\s*$",
-            s,
-            re.IGNORECASE,
-        )
-        if rg and " ON " not in s.upper():
-            if st["current"] is not None:
-                raise AccessDenied("Access Denied: only the owner session grants roles")
-            grantee = rg.group(2).strip('"').lower()
-            if grantee not in st["roles"]:
-                raise ValueError(f"role not found: {grantee}")
-            granted = []
-            for r in rg.group(1).split(","):
-                r = r.strip().strip('"').lower()
-                if r not in st["roles"]:
-                    raise ValueError(f"role not found: {r}")
-                if r == grantee or grantee in _effective_roles(st, r):
-                    raise ValueError(f"circular role grant: {r} -> {grantee}")
-                st.setdefault("role_grants", set()).add((r, grantee))
-                granted.append(r)
-            return rows_result(
-                spark, [(g, grantee) for g in granted], "role: string, grantee: string"
-            )
+
+def _role_name(s: str) -> str:
+    return s.split()[2].strip('"').lower()
+
+
+def create_role(engine, s: str) -> DataFrame:
+    name = _role_name(s)
+    if name in engine._acl["roles"]:
+        raise ValueError(f"role already exists: {name}")
+    engine._acl["roles"][name] = set()
+    return rows_result(engine.spark, [(name,)], "role: string")
+
+
+def drop_role(engine, s: str) -> DataFrame:
+    st, name = engine._acl, _role_name(s)
+    if name not in st["roles"]:
+        raise ValueError(f"role not found: {name}")
+    del st["roles"][name]
+    if st["current"] == name:
+        st["current"] = None
+    return rows_result(engine.spark, [(name,)], "role: string")
+
+
+def set_role(engine, s: str) -> DataFrame:
+    st, name = engine._acl, _role_name(s)
+    if name != "none" and name not in st["roles"]:
+        raise ValueError(f"role not found: {name}")
+    st["current"] = None if name == "none" else name
+    return rows_result(engine.spark, [(name,)], "role: string")
+
+
+def show_current_roles(engine, s: str) -> DataFrame:
+    # ShowRolesTask with CURRENT: the enabled roles of this session — the
+    # SET ROLE plus everything transitively granted to it
+    cur = engine._acl["current"]
+    rows = sorted((r,) for r in _effective_roles(engine._acl, cur)) if cur else []
+    return rows_result(engine.spark, rows, "role: string")
+
+
+def show_role_grants(engine, s: str) -> DataFrame:
+    # ShowRoleGrants: roles granted NON-recursively to the session
+    # identity (docs sql/show-role-grants.md)
+    st = engine._acl
+    cur = st["current"]
+    rows = sorted((g,) for g, grantee in st.get("role_grants", set()) if grantee == cur) if cur else []
+    return rows_result(engine.spark, rows, "role: string")
+
+
+def show_roles(engine, s: str) -> DataFrame:
+    return rows_result(engine.spark, [(r,) for r in sorted(engine._acl["roles"])], "role: string")
+
+
+def show_grants(engine, s: str) -> DataFrame:
+    m = re.match(r"SHOW\s+GRANTS\s+ON\s+(?:TABLE\s+)?([\w.\"]+)", s, re.IGNORECASE)
+    table = m.group(1).strip('"').split(".")[-1].lower() if m else None
+    rows = [
+        (role, priv, tbl)
+        for role, grants in sorted(engine._acl["roles"].items())
+        for priv, tbl in sorted(grants)
+        if table is None or tbl == table
+    ]
+    return rows_result(engine.spark, rows, "grantee: string, privilege: string, table_name: string")
+
+
+def grant(engine, s: str) -> DataFrame:
+    st = engine._acl
+    # role-to-role grant (docs sql/grant-roles.md; GrantRolesTask):
+    # GRANT r1 [, r2 ...] TO ROLE r [WITH ADMIN OPTION]
+    rg = re.match(
+        r"GRANT\s+([\w\"]+(?:\s*,\s*[\w\"]+)*)\s+TO\s+ROLE\s+([\w\"]+)"
+        r"(?:\s+WITH\s+ADMIN\s+OPTION)?\s*$",
+        s,
+        re.IGNORECASE,
+    )
+    if not rg or " ON " in s.upper():
         return _grant_revoke(engine, s, revoke=False)
-    if up[:1] == ["REVOKE"]:
-        rr = re.match(
-            r"REVOKE\s+(?:ADMIN\s+OPTION\s+FOR\s+)?([\w\"]+(?:\s*,\s*[\w\"]+)*)"
-            r"\s+FROM\s+ROLE\s+([\w\"]+)\s*$",
-            s,
-            re.IGNORECASE,
-        )
-        if rr and " ON " not in s.upper():
-            if st["current"] is not None:
-                raise AccessDenied("Access Denied: only the owner session revokes roles")
-            grantee = rr.group(2).strip('"').lower()
-            for r in rr.group(1).split(","):
-                r = r.strip().strip('"').lower()
-                st.setdefault("role_grants", set()).discard((r, grantee))
-            return rows_result(spark, [(grantee,)], "grantee: string")
-        return _grant_revoke(engine, s, revoke=True)
-    if up[:1] == ["DENY"]:
-        # DENY privilege ON t TO role (grammar #deny; DenyTask.java):
-        # an explicit deny wins over any grant at enforcement time.
-        m = re.match(
-            r"DENY\s+(ALL(?:\s+PRIVILEGES)?|[\w,\s]+?)\s+ON\s+(?:TABLE\s+)?([\w.\"]+)\s+TO\s+(?:ROLE\s+)?([\w\"]+)",
-            s,
-            re.IGNORECASE,
-        )
-        if not m:
-            raise ValueError(f"cannot parse DENY: {s[:80]}")
-        privs_txt, table, role = m.group(1).upper(), m.group(2), m.group(3).strip('"').lower()
-        table = table.strip('"').split(".")[-1].lower()
-        privs = list(_PRIVS) if privs_txt.startswith("ALL") else [p.strip() for p in privs_txt.split(",")]
-        for p in privs:
-            if p not in _PRIVS:
-                raise ValueError(f"unknown privilege: {p}")
-        if role not in st["roles"]:
-            raise ValueError(f"role not found: {role}")
-        st.setdefault("denies", {}).setdefault(role, set()).update((p, table) for p in privs)
-        return rows_result(spark, [(role, table)], "role: string, table_name: string")
-    if up[:3] == ["COMMENT", "ON", "TABLE"]:
-        m = re.match(r"COMMENT\s+ON\s+TABLE\s+([\w.\"]+)\s+IS\s+(?:'((?:[^']|'')*)'|(NULL))", s, re.IGNORECASE)
-        if not m:
-            raise ValueError(f"cannot parse COMMENT ON TABLE: {s[:80]}")
-        tbl = m.group(1).strip('"').split(".")[-1].lower()
-        if m.group(3):
-            st["table_comments"].pop(tbl, None)
-        else:
-            st["table_comments"][tbl] = m.group(2).replace("''", "'")
-        return rows_result(spark, [(tbl,)], "table: string")
-    if up[:3] == ["COMMENT", "ON", "COLUMN"]:
-        m = re.match(
-            r"COMMENT\s+ON\s+COLUMN\s+([\w.\"]+)\.(\w+)\s+IS\s+(?:'((?:[^']|'')*)'|(NULL))", s, re.IGNORECASE
-        )
-        if not m:
-            raise ValueError(f"cannot parse COMMENT ON COLUMN: {s[:80]}")
-        tbl = m.group(1).strip('"').split(".")[-1].lower()
-        key = (tbl, m.group(2).lower())
-        if m.group(4):
-            st["column_comments"].pop(key, None)
-        else:
-            st["column_comments"][key] = m.group(3).replace("''", "'")
-        return rows_result(spark, [(f"{key[0]}.{key[1]}",)], "column: string")
-    return None
+    if st["current"] is not None:
+        raise AccessDenied("Access Denied: only the owner session grants roles")
+    grantee = rg.group(2).strip('"').lower()
+    if grantee not in st["roles"]:
+        raise ValueError(f"role not found: {grantee}")
+    granted = []
+    for r in rg.group(1).split(","):
+        r = r.strip().strip('"').lower()
+        if r not in st["roles"]:
+            raise ValueError(f"role not found: {r}")
+        if r == grantee or grantee in _effective_roles(st, r):
+            raise ValueError(f"circular role grant: {r} -> {grantee}")
+        st.setdefault("role_grants", set()).add((r, grantee))
+        granted.append(r)
+    return rows_result(engine.spark, [(g, grantee) for g in granted], "role: string, grantee: string")
 
 
-def _grant_revoke(engine, s: str, revoke: bool) -> DataFrame:
+def revoke(engine, s: str) -> DataFrame:
     st = engine._acl
-    kw = "REVOKE" if revoke else "GRANT"
-    to_kw = "FROM" if revoke else "TO"
+    rr = re.match(
+        r"REVOKE\s+(?:ADMIN\s+OPTION\s+FOR\s+)?([\w\"]+(?:\s*,\s*[\w\"]+)*)"
+        r"\s+FROM\s+ROLE\s+([\w\"]+)\s*$",
+        s,
+        re.IGNORECASE,
+    )
+    if not rr or " ON " in s.upper():
+        return _grant_revoke(engine, s, revoke=True)
+    if st["current"] is not None:
+        raise AccessDenied("Access Denied: only the owner session revokes roles")
+    grantee = rr.group(2).strip('"').lower()
+    for r in rr.group(1).split(","):
+        r = r.strip().strip('"').lower()
+        st.setdefault("role_grants", set()).discard((r, grantee))
+    return rows_result(engine.spark, [(grantee,)], "grantee: string")
+
+
+def deny(engine, s: str) -> DataFrame:
+    # DENY privilege ON t TO role (grammar #deny; DenyTask.java): an
+    # explicit deny wins over any grant at enforcement time.
+    privs, table, role = _privileges(engine, s, "DENY", "TO")
+    engine._acl.setdefault("denies", {}).setdefault(role, set()).update((p, table) for p in privs)
+    return rows_result(engine.spark, [(role, table)], "role: string, table_name: string")
+
+
+def comment_on_table(engine, s: str) -> DataFrame:
+    m = re.match(r"COMMENT\s+ON\s+TABLE\s+([\w.\"]+)\s+IS\s+(?:'((?:[^']|'')*)'|(NULL))", s, re.IGNORECASE)
+    if not m:
+        raise ValueError(f"cannot parse COMMENT ON TABLE: {s[:80]}")
+    tbl = m.group(1).strip('"').split(".")[-1].lower()
+    if m.group(3):
+        engine._acl["table_comments"].pop(tbl, None)
+    else:
+        engine._acl["table_comments"][tbl] = m.group(2).replace("''", "'")
+    return rows_result(engine.spark, [(tbl,)], "table: string")
+
+
+def comment_on_column(engine, s: str) -> DataFrame:
+    m = re.match(
+        r"COMMENT\s+ON\s+COLUMN\s+([\w.\"]+)\.(\w+)\s+IS\s+(?:'((?:[^']|'')*)'|(NULL))", s, re.IGNORECASE
+    )
+    if not m:
+        raise ValueError(f"cannot parse COMMENT ON COLUMN: {s[:80]}")
+    key = (m.group(1).strip('"').split(".")[-1].lower(), m.group(2).lower())
+    if m.group(4):
+        engine._acl["column_comments"].pop(key, None)
+    else:
+        engine._acl["column_comments"][key] = m.group(3).replace("''", "'")
+    return rows_result(engine.spark, [(f"{key[0]}.{key[1]}",)], "column: string")
+
+
+def _privileges(engine, s: str, kw: str, to_kw: str) -> tuple[list[str], str, str]:
+    """`<kw> privileges ON [TABLE] t <to_kw> [ROLE] r` -> (privileges, t, r)."""
     m = re.match(
         rf"{kw}\s+(ALL(?:\s+PRIVILEGES)?|[\w,\s]+?)\s+ON\s+(?:TABLE\s+)?([\w.\"]+)\s+{to_kw}\s+(?:ROLE\s+)?([\w\"]+)",
         s,
@@ -247,13 +250,16 @@ def _grant_revoke(engine, s: str, revoke: bool) -> DataFrame:
     for p in privs:
         if p not in _PRIVS:
             raise ValueError(f"unknown privilege: {p}")
-    if role not in st["roles"]:
+    if role not in engine._acl["roles"]:
         raise ValueError(f"role not found: {role}")
+    return privs, table, role
+
+
+def _grant_revoke(engine, s: str, revoke: bool) -> DataFrame:
+    privs, table, role = _privileges(engine, s, *(("REVOKE", "FROM") if revoke else ("GRANT", "TO")))
+    grants = engine._acl["roles"][role]
     for p in privs:
-        if revoke:
-            st["roles"][role].discard((p, table))
-        else:
-            st["roles"][role].add((p, table))
+        (grants.discard if revoke else grants.add)((p, table))
     return rows_result(engine.spark, [(role, table)], "role: string, table_name: string")
 
 
@@ -276,30 +282,31 @@ def enforce(engine, sql: str) -> None:
         return
     eff = _effective_roles(st, role)
     grants = set().union(*(st["roles"].get(r, set()) for r in eff))
-    s = sql.strip()
-    up = s.upper().split()
-    refs = structure(tokenize(s)).relations
+    toks = tokenize(sql)
+    words = head(toks)
+    kind = " ".join(words[:2])
+    refs = structure(toks).relations
     tgt = refs[0].name if refs else ""
     needed: list[tuple[str, str]] = []
     skip_select: set[str] = set()
-    if up[:2] == ["INSERT", "INTO"]:
+    if kind == "INSERT INTO":
         needed.append(("INSERT", tgt))
-    elif up[:2] == ["DELETE", "FROM"]:
+    elif kind == "DELETE FROM":
         needed.append(("DELETE", tgt))
         skip_select.add(tgt)
-    elif up[:1] == ["UPDATE"]:
+    elif words[:1] == ["UPDATE"]:
         needed.append(("UPDATE", tgt))
-    elif up[:2] == ["MERGE", "INTO"]:
+    elif kind == "MERGE INTO":
         needed += [("UPDATE", tgt), ("INSERT", tgt), ("DELETE", tgt)]
         skip_select.add(tgt)
-    elif up[:2] == ["TRUNCATE", "TABLE"]:
+    elif kind == "TRUNCATE TABLE":
         needed.append(("DELETE", tgt))
-    elif up[:2] in (["ALTER", "TABLE"], ["DROP", "TABLE"], ["CREATE", "TABLE"]):
+    elif kind in ("ALTER TABLE", "DROP TABLE", "CREATE TABLE"):
         # Ownership proxy: the role must hold every privilege on the name.
         # A CTAS target does not exist yet, so the not-a-relation skip
         # below must not exempt it.
         for p in _PRIVS:
-            needed.append((p, f"!{tgt}" if up[0] == "CREATE" else tgt))
+            needed.append((p, f"!{tgt}" if kind == "CREATE TABLE" else tgt))
     for ref in refs:
         name = ref.name
         if not ref.read or ref.shadowed or name.startswith("__"):
@@ -542,62 +549,56 @@ def map_outside_literals(sql: str, fn) -> str:
 # query-log maintenance.
 
 
-def try_execute_call(engine, sql: str) -> "DataFrame | None":
-    m = re.match(r"CALL\s+([\w.]+)\s*\((.*)\)\s*$", sql.strip().rstrip(";"), re.IGNORECASE | re.DOTALL)
+def call(engine, sql: str) -> DataFrame:
+    m = re.match(r"CALL\s+([\w.]+)\s*\((.*)\)\s*$", sql, re.IGNORECASE | re.DOTALL)
     if not m:
-        return None
+        raise ValueError(f"cannot parse CALL: {sql[:80]}")
     name = m.group(1).lower().split(".")[-1]
-    args = [a.strip() for a in _split_call_args(m.group(2))]
+    inner = tokenize(f"({m.group(2)})")
     spark = engine.spark
 
     def _lit(a: str):
         if a.startswith("'") and a.endswith("'"):
             return a[1:-1].replace("''", "'")
-        if "." in a:
-            return float(a)
-        return int(a)
+        return float(a) if "." in a else int(a)
+
+    lits = [_lit(render(inner[s:e]).strip()) for s, e in split_args(inner, 0, len(inner) - 1)]
+    args = [str(v) for v in lits]
 
     if name == "register_tpch":
         from trino_spark.sources import tpchgen
 
-        sf = float(_lit(args[0])) if args else 1.0
-        prefix = _lit(args[1]) if len(args) > 1 else "tpchgen_"
-        tpchgen.register_tpch_catalog(spark, sf, prefix=str(prefix))
+        sf = float(lits[0]) if lits else 1.0
+        prefix = args[1] if len(args) > 1 else "tpchgen_"
+        tpchgen.register_tpch_catalog(spark, sf, prefix=prefix)
         return rows_result(spark, [(f"{prefix}*", sf)], "tables: string, sf: double")
     if name == "register_faker":
         from trino_spark.sources import faker
 
-        view, schema, n = str(_lit(args[0])), str(_lit(args[1])), int(_lit(args[2]))
-        seed = int(_lit(args[3])) if len(args) > 3 else 0
+        view, schema, n = args[0], args[1], int(lits[2])
+        seed = int(lits[3]) if len(lits) > 3 else 0
         faker.gen(spark, schema, n, seed=seed).createOrReplaceTempView(view)
         return rows_result(spark, [(view, n)], "table: string, rows: bigint")
     if name == "flush_query_log":
         return rows_result(spark, [(engine.queries.flush(),)], "flushed: bigint")
     if name == "add_row_filter":
-        add_row_filter(engine, str(_lit(args[0])), str(_lit(args[1])), str(_lit(args[2])))
-        return rows_result(
-            spark, [(str(_lit(args[0])), str(_lit(args[1])))], "role: string, table_name: string"
-        )
+        add_row_filter(engine, *args[:3])
+        return rows_result(spark, [tuple(args[:2])], "role: string, table_name: string")
     if name == "add_column_mask":
-        add_column_mask(
-            engine, str(_lit(args[0])), str(_lit(args[1])), str(_lit(args[2])), str(_lit(args[3]))
-        )
+        add_column_mask(engine, *args[:4])
         return rows_result(
-            spark,
-            [(str(_lit(args[0])), str(_lit(args[1])), str(_lit(args[2])))],
-            "role: string, table_name: string, column_name: string",
+            spark, [tuple(args[:3])], "role: string, table_name: string, column_name: string"
         )
     if name == "drop_row_filter":
-        st = engine._acl
-        st["row_filters"].pop((str(_lit(args[0])).lower(), str(_lit(args[1])).lower()), None)
-        return rows_result(spark, [(str(_lit(args[1])),)], "table_name: string")
+        engine._acl["row_filters"].pop((args[0].lower(), args[1].lower()), None)
+        return rows_result(spark, [(args[1],)], "table_name: string")
     if name == "kill_query":
         # system.runtime.kill_query(query_id, message) — reference:
         # main/connector/system/KillQueryProcedure.java:62. Cancels the
         # Spark job group the HTTP server tagged with the query id; the
         # victim's collect fails and the protocol surfaces FAILED.
-        qid = str(_lit(args[0]))
-        msg = str(_lit(args[1])) if len(args) > 1 else "killed by operator"
+        qid = args[0]
+        msg = args[1] if len(args) > 1 else "killed by operator"
         rec = engine.queries.get(qid)
         if rec is None or rec.end is not None:
             raise ValueError(f"query not found or not running: {qid}")
@@ -624,29 +625,8 @@ def try_execute_call(engine, sql: str) -> "DataFrame | None":
         _cancel_until_closed(sc, rec)
         return rows_result(spark, [(qid, msg)], "query_id: string, message: string")
     if name == "drop_column_mask":
-        st = engine._acl
-        masks = st["column_masks"].get((str(_lit(args[0])).lower(), str(_lit(args[1])).lower()))
+        masks = engine._acl["column_masks"].get((args[0].lower(), args[1].lower()))
         if masks:
-            masks.pop(str(_lit(args[2])).lower(), None)
-        return rows_result(spark, [(str(_lit(args[1])),)], "table_name: string")
+            masks.pop(args[2].lower(), None)
+        return rows_result(spark, [(args[1],)], "table_name: string")
     raise ValueError(f"procedure not found: {name}")
-
-
-def _split_call_args(s: str) -> list[str]:
-    out, buf, depth, in_str = [], [], 0, False
-    for ch in s:
-        if ch == "'":
-            in_str = not in_str
-        if not in_str:
-            if ch in "([":
-                depth += 1
-            elif ch in ")]":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                out.append("".join(buf))
-                buf = []
-                continue
-        buf.append(ch)
-    if "".join(buf).strip():
-        out.append("".join(buf))
-    return out

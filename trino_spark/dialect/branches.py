@@ -84,77 +84,78 @@ def _branch(engine, table: ManagedTable, branch: str) -> ManagedTable:
     return engine.dml_tables[fork_name(table.name, branch)]
 
 
-def try_execute(engine, stripped: str) -> DataFrame | None:
-    """Dispatch the four branch statements; None when not one of them."""
-    spark = engine.spark
-    up = stripped.upper().split()
-    if up[:1] == ["CREATE"] and "BRANCH" in up[:4]:
-        m = _CREATE_RX.match(stripped)
-        if not m:
-            raise ValueError(f"cannot parse CREATE BRANCH: {stripped}")
-        table, branch = _table(engine, m.group("table")), m.group("branch").lower()
-        replace = re.match(r"CREATE\s+OR\s+REPLACE", stripped, re.IGNORECASE)
-        if branch in table.branches:
-            if m.group("ine"):
-                return rows_result(spark, [(branch,)], "branch: string")
-            if not replace:
-                raise ValueError(f"branch already exists: {branch}")
-            _drop_fork(engine, table, branch)
-        src = _branch(engine, table, (m.group("from") or "main").lower())
-        # a fork starts with its source's declared columns, layout and
-        # defaults, and its data as shared inodes: fork cost = metadata
-        fork = _clear(
-            engine,
-            ManagedTable(
-                fork_name(table.name, branch), src.columns, src.partition_by,
-                dict(src.defaults), base=table.name,
-            ),
-        )
-        os.makedirs(fork.path)
-        _link_tree(src.path, fork.path)
-        engine.dml_tables[fork.name] = fork
-        _stored(engine, fork).createOrReplaceTempView(fork.name)
-        refresh_infoschema(engine, changed=fork.name)
-        txn_snapshot_if_needed(engine, table.name)
-        table.branches[branch] = table.version
-        return rows_result(spark, [(branch,)], "branch: string")
-    if up[:2] == ["DROP", "BRANCH"]:
-        m = _DROP_RX.match(stripped)
-        if not m:
-            raise ValueError(f"cannot parse DROP BRANCH: {stripped}")
-        table, branch = _table(engine, m.group("table")), m.group("branch").lower()
-        if branch not in table.branches:
-            if m.group("ie"):
-                return rows_result(spark, [(branch,)], "branch: string")
-            raise ValueError(f"Branch '{branch}' does not exist")
+# The four branch statements (entries of the engine's statement table).
+
+
+def create_branch(engine, stripped: str) -> DataFrame:
+    m = _CREATE_RX.match(stripped)
+    if not m:
+        raise ValueError(f"cannot parse CREATE BRANCH: {stripped}")
+    table, branch = _table(engine, m.group("table")), m.group("branch").lower()
+    if branch in table.branches:
+        if m.group("ine"):
+            return rows_result(engine.spark, [(branch,)], "branch: string")
+        if not re.match(r"CREATE\s+OR\s+REPLACE", stripped, re.IGNORECASE):
+            raise ValueError(f"branch already exists: {branch}")
         _drop_fork(engine, table, branch)
-        return rows_result(spark, [(branch,)], "branch: string")
-    if up[:2] == ["ALTER", "BRANCH"]:
-        m = _FF_RX.match(stripped)
-        if not m:
-            raise ValueError(f"cannot parse ALTER BRANCH: {stripped}")
-        table = _table(engine, m.group("table"))
-        src, tgt = m.group("src").lower(), m.group("tgt").lower()
-        content = _stored(engine, _branch(engine, table, tgt))
-        n = _commit(
-            engine, _branch(engine, table, src), content, operation=f"fast_forward_from_{tgt}"
-        )
-        return rows_result(
-            spark, [(src, tgt, n)], "branch: string, from_branch: string, rows: bigint"
-        )
-    if up[:2] == ["SHOW", "BRANCHES"]:
-        m = _SHOW_RX.match(stripped)
-        if not m:
-            raise ValueError(f"cannot parse SHOW BRANCHES: {stripped}")
-        table = _table(engine, m.group("table"))
-        rows = [("main", table.version, None)] + [
-            (b, _branch(engine, table, b).version, created_from)
-            for b, created_from in sorted(table.branches.items())
-        ]
-        return rows_result(
-            spark, rows, "branch: string, current_version: bigint, created_from_version: bigint"
-        )
-    return None
+    src = _branch(engine, table, (m.group("from") or "main").lower())
+    # a fork starts with its source's declared columns, layout and
+    # defaults, and its data as shared inodes: fork cost = metadata
+    fork = _clear(
+        engine,
+        ManagedTable(
+            fork_name(table.name, branch), src.columns, src.partition_by,
+            dict(src.defaults), base=table.name,
+        ),
+    )
+    os.makedirs(fork.path)
+    _link_tree(src.path, fork.path)
+    engine.dml_tables[fork.name] = fork
+    _stored(engine, fork).createOrReplaceTempView(fork.name)
+    refresh_infoschema(engine, changed=fork.name)
+    txn_snapshot_if_needed(engine, table.name)
+    table.branches[branch] = table.version
+    return rows_result(engine.spark, [(branch,)], "branch: string")
+
+
+def drop_branch(engine, stripped: str) -> DataFrame:
+    m = _DROP_RX.match(stripped)
+    if not m:
+        raise ValueError(f"cannot parse DROP BRANCH: {stripped}")
+    table, branch = _table(engine, m.group("table")), m.group("branch").lower()
+    if branch not in table.branches:
+        if m.group("ie"):
+            return rows_result(engine.spark, [(branch,)], "branch: string")
+        raise ValueError(f"Branch '{branch}' does not exist")
+    _drop_fork(engine, table, branch)
+    return rows_result(engine.spark, [(branch,)], "branch: string")
+
+
+def fast_forward(engine, stripped: str) -> DataFrame:
+    m = _FF_RX.match(stripped)
+    if not m:
+        raise ValueError(f"cannot parse ALTER BRANCH: {stripped}")
+    table = _table(engine, m.group("table"))
+    src, tgt = m.group("src").lower(), m.group("tgt").lower()
+    content = _stored(engine, _branch(engine, table, tgt))
+    n = _commit(engine, _branch(engine, table, src), content, operation=f"fast_forward_from_{tgt}")
+    return rows_result(
+        engine.spark, [(src, tgt, n)], "branch: string, from_branch: string, rows: bigint"
+    )
+
+
+def show_branches(engine, stripped: str) -> DataFrame:
+    m = _SHOW_RX.match(stripped)
+    if not m:
+        raise ValueError(f"cannot parse SHOW BRANCHES: {stripped}")
+    table = _table(engine, m.group("table"))
+    rows = [("main", table.version, None)] + [
+        (b, _branch(engine, table, b).version, created_from)
+        for b, created_from in sorted(table.branches.items())
+    ]
+    return rows_result(
+        engine.spark, rows, "branch: string, current_version: bigint, created_from_version: bigint"
+    )
 
 
 def _drop_fork(engine, table: ManagedTable, branch: str) -> None:

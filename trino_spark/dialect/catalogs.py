@@ -32,6 +32,7 @@ import re
 from pyspark.sql import DataFrame
 
 from trino_spark.dialect.dml import rows_result
+from trino_spark.dialect.tokenizer import head, tokenize
 
 _CREATE_RX = re.compile(
     r"CREATE\s+CATALOG\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<name>\"[^\"]+\"|\w+)\s+"
@@ -76,71 +77,69 @@ def _parse_props(txt: str | None) -> dict[str, str]:
     return props
 
 
-def try_execute(engine, stripped: str) -> DataFrame | None:
-    """Dispatch CREATE/DROP CATALOG; None when the statement is neither."""
-    up = stripped.upper().split()
-    if up[:2] == ["CREATE", "CATALOG"]:
-        m = _CREATE_RX.match(stripped)
-        if not m:
-            raise ValueError(f"cannot parse CREATE CATALOG: {stripped}")
-        _require_owner(engine, "CREATE CATALOG")
-        name = m.group("name").strip('"').lower()
-        conn = m.group("conn").lower()
-        mounts = engine.catalogs
-        if name in mounts or name == "spark":
-            if m.group("ine"):
-                return _row(engine, name)
-            raise ValueError(f"catalog already exists: {name}")
-        if conn not in _CONNECTORS:
-            raise ValueError(
-                f"unknown connector: {conn} (supported: {', '.join(_CONNECTORS)})"
-            )
-        props = _parse_props(m.group("props"))
-        if conn in _FILE_CONNECTORS:
-            loc = props.get("location")
-            if not loc or not os.path.isdir(loc):
-                raise ValueError(f"connector {conn} needs location = '<existing dir>'")
-        if conn == "jdbc":
-            url = props.get("url")
-            if not url:
-                raise ValueError("connector jdbc needs url = '<jdbc url>'")
-            opts = {k: v for k, v in props.items() if k != "url"}
-            engine.catalog.register_jdbc_catalog(name, url, **opts)
-        mounts[name] = {
-            "connector": conn,
-            "properties": props,
-            "comment": m.group("comment") or "",
-            "views": set(),
-        }
-        return _row(engine, name)
-    if up[:2] == ["DROP", "CATALOG"]:
-        m = _DROP_RX.match(stripped)
-        if not m:
-            raise ValueError(f"cannot parse DROP CATALOG: {stripped}")
-        _require_owner(engine, "DROP CATALOG")
-        name = m.group("name").strip('"').lower()
-        mounts = engine.catalogs
-        if name not in mounts:
-            if m.group("ie"):
-                return _row(engine, name)
-            raise ValueError(f"catalog not found: {name}")
-        mount = mounts.pop(name)
-        for view in mount["views"]:
-            engine.spark.catalog.dropTempView(view)
-        if mount["connector"] == "jdbc":
-            conf = engine.spark.conf
-            for key in (
-                f"spark.sql.catalog.{name}",
-                f"spark.sql.catalog.{name}.url",
-                f"spark.sql.catalog.{name}.pushDownAggregate",
-                f"spark.sql.catalog.{name}.pushDownLimit",
-            ):
-                try:
-                    conf.unset(key)
-                except Exception:
-                    pass
-        return _row(engine, name)
-    return None
+def create_catalog(engine, stripped: str) -> DataFrame:
+    m = _CREATE_RX.match(stripped)
+    if not m:
+        raise ValueError(f"cannot parse CREATE CATALOG: {stripped}")
+    _require_owner(engine, "CREATE CATALOG")
+    name = m.group("name").strip('"').lower()
+    conn = m.group("conn").lower()
+    mounts = engine.catalogs
+    if name in mounts or name == "spark":
+        if m.group("ine"):
+            return _row(engine, name)
+        raise ValueError(f"catalog already exists: {name}")
+    if conn not in _CONNECTORS:
+        raise ValueError(
+            f"unknown connector: {conn} (supported: {', '.join(_CONNECTORS)})"
+        )
+    props = _parse_props(m.group("props"))
+    if conn in _FILE_CONNECTORS:
+        loc = props.get("location")
+        if not loc or not os.path.isdir(loc):
+            raise ValueError(f"connector {conn} needs location = '<existing dir>'")
+    if conn == "jdbc":
+        url = props.get("url")
+        if not url:
+            raise ValueError("connector jdbc needs url = '<jdbc url>'")
+        opts = {k: v for k, v in props.items() if k != "url"}
+        engine.catalog.register_jdbc_catalog(name, url, **opts)
+    mounts[name] = {
+        "connector": conn,
+        "properties": props,
+        "comment": m.group("comment") or "",
+        "views": set(),
+    }
+    return _row(engine, name)
+
+
+def drop_catalog(engine, stripped: str) -> DataFrame:
+    m = _DROP_RX.match(stripped)
+    if not m:
+        raise ValueError(f"cannot parse DROP CATALOG: {stripped}")
+    _require_owner(engine, "DROP CATALOG")
+    name = m.group("name").strip('"').lower()
+    mounts = engine.catalogs
+    if name not in mounts:
+        if m.group("ie"):
+            return _row(engine, name)
+        raise ValueError(f"catalog not found: {name}")
+    mount = mounts.pop(name)
+    for view in mount["views"]:
+        engine.spark.catalog.dropTempView(view)
+    if mount["connector"] == "jdbc":
+        conf = engine.spark.conf
+        for key in (
+            f"spark.sql.catalog.{name}",
+            f"spark.sql.catalog.{name}.url",
+            f"spark.sql.catalog.{name}.pushDownAggregate",
+            f"spark.sql.catalog.{name}.pushDownLimit",
+        ):
+            try:
+                conf.unset(key)
+            except Exception:
+                pass
+    return _row(engine, name)
 
 
 def _require_owner(engine, what: str) -> None:
@@ -294,7 +293,7 @@ def try_execute_dml(engine, stripped: str) -> DataFrame | None:
     if conn not in ("memory", "blackhole"):
         raise ValueError(f"catalog {cat} ({conn}) does not support writes")
     spark = engine.spark
-    up0 = stripped.upper().split()[0]
+    up0 = head(tokenize(m.group(0)))[0]
     tables = mount.setdefault("tables", {})
     view = f"__cat_{cat}_{schema}_{table}"
     if up0 == "DROP":
@@ -369,7 +368,7 @@ def _file_catalog_dml(engine, mount, stripped: str, m: re.Match) -> DataFrame:
     loc = mount["properties"]["location"]
     pdir = os.path.join(loc, schema, table)
     view = f"__cat_{cat}_{schema}_{table}"
-    up0 = stripped.upper().split()[0]
+    up0 = head(tokenize(m.group(0)))[0]
 
     def _read(path):
         reader = spark.read

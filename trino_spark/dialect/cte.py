@@ -125,7 +125,7 @@ def retire(engine) -> None:
     between its SQL rewrite and Catalyst analysis (the temp view name
     would fail to resolve) — callers must hold engine._cte_lock and
     check engine._cte_active; materialize_reused below does."""
-    for df, view in getattr(engine, "_cte_cached", []):
+    for df, view in engine._cte_cached:
         try:
             df.unpersist(blocking=False)
             engine.spark.catalog.dropTempView(view)
@@ -137,9 +137,9 @@ def retire(engine) -> None:
 def materialize_reused(engine, spark_sql: str):
     """Rewrite `spark_sql` so top-level CTEs referenced >= 2 times scan a
     once-computed cached view. Returns the (possibly unchanged) SQL."""
-    if getattr(engine, "session_properties", {}).get(
-        "cte_materialization", "true"
-    ).lower() in ("false", "0", "off"):
+    if engine.session_properties.get("cte_materialization", "true").lower() in (
+        "false", "0", "off",
+    ):
         return spark_sql
     s = spark_sql.lstrip()
     if not s[:4].upper() == "WITH":
@@ -158,12 +158,10 @@ def materialize_reused(engine, spark_sql: str):
     # rewritten its SQL to reference a cached view but not yet analyzed
     # it — the one window where dropping the view breaks it). Deferred
     # caches are retired by the next statement that runs alone.
-    import threading
-
-    lock = getattr(engine, "_cte_lock", None) or threading.RLock()
-    depth = getattr(getattr(engine, "_tls", None), "depth", 1)
+    lock = engine._cte_lock
+    # a direct caller (not engine.sql) has set no depth on its thread
     with lock:
-        if depth <= 1 and getattr(engine, "_cte_active", 1) <= 1:
+        if getattr(engine._tls, "depth", 1) <= 1 and engine._cte_active <= 1:
             retire(engine)
 
     # reference counts: WORD/QIDENT occurrences strictly after the CTE's
@@ -202,8 +200,6 @@ def materialize_reused(engine, spark_sql: str):
         df.count()  # eager: one execution, before any reference runs
         df.createOrReplaceTempView(view)
         with lock:
-            if not hasattr(engine, "_cte_cached"):
-                engine._cte_cached = []
             engine._cte_cached.append((df, view))
         final_bodies[ci] = f"SELECT * FROM {view}"
         materialized.append((name, view))

@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.sql.types import StructType
 
 from trino_spark.catalog import read_parquet
+from trino_spark.dialect.tokenizer import head, lead, render, tokenize
 from trino_spark.operators.merge import merge_into
 
 #: retained historical versions per table (current version excluded);
@@ -79,28 +80,29 @@ def _warehouse_dir() -> str:
 
 
 def try_execute(engine, sql: str) -> DataFrame | None:
-    """Execute `sql` if it is a DML statement; return None otherwise.
+    """Execute `sql` if it is a write (CTAS, DROP TABLE, TRUNCATE, INSERT,
+    DELETE, UPDATE, MERGE); return None otherwise.
 
     Returns a one-row ``rows: bigint`` DataFrame (the reference's
     TableFinishOperator rowcount result, TableFinishOperator.java:55).
     """
-    stripped = sql.strip().rstrip(";")
-    up = stripped.upper().split()
-    if up[:2] == ["CREATE", "TABLE"] and " AS " in f" {stripped.upper()} ":
-        return _ctas(engine, stripped)
-    if up[:2] == ["DROP", "TABLE"]:
-        return _drop(engine, stripped)
-    if up[:2] == ["TRUNCATE", "TABLE"]:
-        return _truncate(engine, stripped)
-    if up[:2] == ["INSERT", "INTO"]:
-        return _insert(engine, stripped)
-    if up[:2] == ["DELETE", "FROM"]:
-        return _delete(engine, stripped)
-    if up[:1] == ["UPDATE"] and "SET" in up:
-        return _update(engine, stripped)
-    if up[:2] == ["MERGE", "INTO"]:
-        return _merge(engine, stripped)
-    return None
+    toks = tokenize(sql)
+    words = head(toks)
+    run = _WRITES.get(" ".join(words[:2])) or _WRITES.get(" ".join(words[:1]))
+    if run is None or (run is _ctas and not _is_ctas(toks)):
+        return None
+    return run(engine, render(toks[lead(toks) :]).strip().rstrip(";"))
+
+
+def _is_ctas(toks: list) -> bool:
+    """CREATE TABLE name [WITH (...)] AS query: an AS outside parentheses
+    (column definitions and properties sit inside them)."""
+    depth = 0
+    for t in toks:
+        depth += t.is_sym("(") - t.is_sym(")")
+        if depth == 0 and t.is_word("AS"):
+            return True
+    return False
 
 
 # ---------------------------------------------------------------- storage
@@ -216,11 +218,26 @@ def _discard(engine, name: str) -> None:
     shutil.rmtree(rec.path, ignore_errors=True)
     shutil.rmtree(rec.snap_root, ignore_errors=True)
     engine.spark.catalog.dropTempView(name)
+    _move_comments(engine, name, None)
     refresh_infoschema(engine, dropped=name)
 
 
+def _move_comments(engine, old: str, new: str | None) -> None:
+    """A managed table's table and column comments go with DROP (`new`
+    None) and move with RENAME TO. They live in the access state, which
+    holds the comments of catalog sources too."""
+    tables, cols = engine._acl["table_comments"], engine._acl["column_comments"]
+    text = tables.pop(old, None)
+    moved = {(new, c): cols.pop((t, c)) for t, c in list(cols) if t == old}
+    if new is not None:
+        cols.update(moved)
+        if text is not None:
+            tables[new] = text
+
+
 def _move(engine, old: str, new: str) -> ManagedTable:
-    """RENAME TO: the record, its data and its retired versions move."""
+    """RENAME TO: the record, its data, its retired versions and its
+    comments move."""
     txn_snapshot_if_needed(engine, old)
     rec = engine.dml_tables.pop(old)
     src, src_snaps = rec.path, rec.snap_root
@@ -232,6 +249,7 @@ def _move(engine, old: str, new: str) -> ManagedTable:
     engine.dml_tables[new] = rec
     engine.spark.catalog.dropTempView(old)
     _stored(engine, rec).createOrReplaceTempView(new)
+    _move_comments(engine, old, new)
     refresh_infoschema(engine, changed=new, dropped=old)
     return rec
 
@@ -872,6 +890,11 @@ _TT_RX = re.compile(
 )
 
 
+# try_execute's statements by head (tokenizer.head); CREATE TABLE only as CTAS
+_WRITES = {"CREATE TABLE": _ctas, "DROP TABLE": _drop, "TRUNCATE TABLE": _truncate,
+           "INSERT INTO": _insert, "DELETE FROM": _delete, "UPDATE": _update, "MERGE INTO": _merge}
+
+
 def list_versions(engine, name: str) -> list[dict]:
     """The snapshot log for a managed table (system.metadata-style history
     surface; Iceberg's $snapshots metadata table analog)."""
@@ -1037,7 +1060,9 @@ def resolve_time_travel(engine, sql: str) -> str:
 def txn_begin(engine) -> None:
     if engine._txn is not None:
         raise ValueError("transaction already in progress (no nested transactions)")
-    engine._txn = {"pins": {}, "created": set()}
+    # comments live in the access state; DROP and RENAME TO change them
+    comments = copy.deepcopy({k: engine._acl[k] for k in ("table_comments", "column_comments")})
+    engine._txn = {"pins": {}, "created": set(), "comments": comments}
 
 
 def txn_snapshot_if_needed(engine, name: str) -> None:
@@ -1071,6 +1096,7 @@ def txn_commit(engine) -> None:
 
 def txn_rollback(engine) -> None:
     txn = _txn_end(engine)
+    engine._acl.update(txn["comments"])
     tables = engine.dml_tables
     for name, (snap, live, pinned) in txn["pins"].items():
         cur = tables.get(name)
@@ -1112,139 +1138,138 @@ def txn_rollback(engine) -> None:
 # a metastore.
 
 
-def try_execute_ddl(engine, sql: str) -> DataFrame | None:
-    stripped = sql.strip().rstrip(";")
-    up = stripped.upper().split()
-    if up[:2] == ["CREATE", "VIEW"] or up[:4] == ["CREATE", "OR", "REPLACE", "VIEW"]:
-        return _create_view(engine, stripped)
-    if up[:2] == ["DROP", "VIEW"]:
-        parts = stripped.split()
-        idx = 4 if len(parts) > 4 and parts[2].upper() == "IF" else 2
-        name = _norm_name(parts[idx])
-        existed = engine.views.pop(name, None)
-        if existed is None and idx == 2:
-            raise ValueError(f"view not found: {name}")
-        if existed is not None:
-            engine.spark.catalog.dropTempView(name)
+def drop_view(engine, stripped: str) -> DataFrame:
+    parts = stripped.split()
+    idx = 4 if len(parts) > 4 and parts[2].upper() == "IF" else 2
+    name = _norm_name(parts[idx])
+    existed = engine.views.pop(name, None)
+    if existed is None and idx == 2:
+        raise ValueError(f"view not found: {name}")
+    if existed is not None:
+        engine.spark.catalog.dropTempView(name)
+    return rows_result(engine.spark, [(name,)], "view: string")
+
+
+def show_create_view(engine, stripped: str) -> DataFrame:
+    name = _norm_name(stripped.split()[3])
+    if name not in engine.views:
+        raise ValueError(f"view not found: {name}")
+    return rows_result(
+        engine.spark, [(f"CREATE VIEW {name} AS\n{engine.views[name]}",)], "create_view: string"
+    )
+
+
+def alter_view(engine, stripped: str) -> DataFrame:
+    # #renameView / #refreshView (grammar SqlBase.g4:130-131).
+    views = engine.views
+    m = re.match(
+        r"ALTER\s+VIEW\s+([\w.\"]+)\s+(?:RENAME\s+TO\s+([\w.\"]+)|(REFRESH))\s*$",
+        stripped,
+        re.IGNORECASE,
+    )
+    if not m:
+        raise ValueError(f"cannot parse ALTER VIEW: {stripped[:80]}")
+    name = _norm_name(m.group(1))
+    if name not in views:
+        raise ValueError(f"view not found: {name}")
+    if m.group(3):  # REFRESH: re-resolve the definition against sources
+        engine.sql(views[name]).createOrReplaceTempView(name)
         return rows_result(engine.spark, [(name,)], "view: string")
-    if up[:3] == ["SHOW", "CREATE", "VIEW"]:
-        name = _norm_name(stripped.split()[3])
-        if name not in engine.views:
-            raise ValueError(f"view not found: {name}")
-        return rows_result(
-            engine.spark, [(f"CREATE VIEW {name} AS\n{engine.views[name]}",)], "create_view: string"
-        )
-    if up[:2] == ["CREATE", "TABLE"] and " AS " not in f" {stripped.upper()} ":
-        return _create_empty_table(engine, stripped)
-    if up[:2] == ["ALTER", "TABLE"]:
-        return _alter_table(engine, stripped)
-    if up[:2] == ["ALTER", "VIEW"]:
-        # #renameView / #refreshView (grammar SqlBase.g4:130-131).
-        views = engine.views
-        m = re.match(
-            r"ALTER\s+VIEW\s+([\w.\"]+)\s+(?:RENAME\s+TO\s+([\w.\"]+)|(REFRESH))\s*$",
-            stripped,
-            re.IGNORECASE,
-        )
-        if not m:
-            raise ValueError(f"cannot parse ALTER VIEW: {stripped[:80]}")
-        name = _norm_name(m.group(1))
-        if name not in views:
-            raise ValueError(f"view not found: {name}")
-        if m.group(3):  # REFRESH: re-resolve the definition against sources
-            engine.sql(views[name]).createOrReplaceTempView(name)
-            return rows_result(engine.spark, [(name,)], "view: string")
-        new = _norm_name(m.group(2))
-        views[new] = views.pop(name)
-        engine.spark.catalog.dropTempView(name)
-        engine.sql(views[new]).createOrReplaceTempView(new)
-        refresh_infoschema(engine, changed=new, dropped=name)
-        return rows_result(engine.spark, [(new,)], "view: string")
-    if up[:3] == ["ALTER", "MATERIALIZED", "VIEW"]:
-        # #renameMaterializedView: the stored data moves with the name.
-        m = re.match(
-            r"ALTER\s+MATERIALIZED\s+VIEW\s+(?:IF\s+EXISTS\s+)?([\w.\"]+)\s+RENAME\s+TO\s+([\w.\"]+)\s*$",
-            stripped,
-            re.IGNORECASE,
-        )
-        if not m:
-            raise ValueError(f"cannot parse ALTER MATERIALIZED VIEW: {stripped[:80]}")
-        name, new = _norm_name(m.group(1)), _norm_name(m.group(2))
-        if name not in engine.materialized_views:
-            if re.search(r"IF\s+EXISTS", stripped, re.IGNORECASE):
-                return rows_result(engine.spark, [(name,)], "materialized_view: string")
-            raise ValueError(f"materialized view not found: {name}")
-        engine.materialized_views[new] = engine.materialized_views.pop(name)
-        engine._mv_meta[new] = engine._mv_meta.pop(name, {})
-        # MVs materialize under spark-warehouse/mv (engine._mv_refresh),
-        # NOT the DML table dir.
-        mv_dir = os.path.join(os.path.dirname(_warehouse_dir()), "mv")
-        if os.path.isdir(os.path.join(mv_dir, name)):
-            shutil.rmtree(os.path.join(mv_dir, new), ignore_errors=True)
-            os.rename(os.path.join(mv_dir, name), os.path.join(mv_dir, new))
-            read_parquet(engine.spark, os.path.join(mv_dir, new)).createOrReplaceTempView(new)
-        engine.spark.catalog.dropTempView(name)
-        return rows_result(engine.spark, [(new,)], "materialized_view: string")
-    if up[:2] in (["CREATE", "SCHEMA"], ["DROP", "SCHEMA"], ["ALTER", "SCHEMA"]) or up[:3] == [
-        "SHOW", "CREATE", "SCHEMA",
-    ]:
-        return _schema_ddl(engine, stripped, up)
-    return None
+    new = _norm_name(m.group(2))
+    views[new] = views.pop(name)
+    engine.spark.catalog.dropTempView(name)
+    engine.sql(views[new]).createOrReplaceTempView(new)
+    refresh_infoschema(engine, changed=new, dropped=name)
+    return rows_result(engine.spark, [(new,)], "view: string")
 
 
-def _schema_ddl(engine, stripped: str, up: list[str]) -> DataFrame:
-    """Schema registry (#createSchema/#dropSchema/#renameSchema;
-    CreateSchemaTask.java). The engine's table namespace is flat (every
-    qualified name resolves by last component, like a single-schema
-    catalog), so schemas are a metadata surface: SHOW SCHEMAS lists them,
-    properties are retained for SHOW CREATE SCHEMA."""
+def alter_materialized_view(engine, stripped: str) -> DataFrame:
+    # #renameMaterializedView: the stored data moves with the name.
+    m = re.match(
+        r"ALTER\s+MATERIALIZED\s+VIEW\s+(?:IF\s+EXISTS\s+)?([\w.\"]+)\s+RENAME\s+TO\s+([\w.\"]+)\s*$",
+        stripped,
+        re.IGNORECASE,
+    )
+    if not m:
+        raise ValueError(f"cannot parse ALTER MATERIALIZED VIEW: {stripped[:80]}")
+    name, new = _norm_name(m.group(1)), _norm_name(m.group(2))
+    if name not in engine.materialized_views:
+        if re.search(r"IF\s+EXISTS", stripped, re.IGNORECASE):
+            return rows_result(engine.spark, [(name,)], "materialized_view: string")
+        raise ValueError(f"materialized view not found: {name}")
+    engine.materialized_views[new] = engine.materialized_views.pop(name)
+    engine._mv_meta[new] = engine._mv_meta.pop(name, {})
+    # MVs materialize under spark-warehouse/mv (engine._mv_refresh), NOT
+    # the DML table dir.
+    mv_dir = os.path.join(os.path.dirname(_warehouse_dir()), "mv")
+    if os.path.isdir(os.path.join(mv_dir, name)):
+        shutil.rmtree(os.path.join(mv_dir, new), ignore_errors=True)
+        os.rename(os.path.join(mv_dir, name), os.path.join(mv_dir, new))
+        read_parquet(engine.spark, os.path.join(mv_dir, new)).createOrReplaceTempView(new)
+    engine.spark.catalog.dropTempView(name)
+    return rows_result(engine.spark, [(new,)], "materialized_view: string")
+
+
+# Schema registry (#createSchema/#dropSchema/#renameSchema;
+# CreateSchemaTask.java). The engine's table namespace is flat (every
+# qualified name resolves by last component, like a single-schema
+# catalog), so schemas are a metadata surface: SHOW SCHEMAS lists them,
+# properties are retained for SHOW CREATE SCHEMA.
+
+
+def show_create_schema(engine, stripped: str) -> DataFrame:
     reg = engine.schemas
-    spark = engine.spark
-    if up[:3] == ["SHOW", "CREATE", "SCHEMA"]:
-        name = _norm_name(stripped.split()[3])
-        if name not in reg:
-            raise ValueError(f"schema not found: {name}")
-        props = ""
-        if reg[name]:
-            kv = ",\n   ".join(f"{k} = '{v}'" for k, v in sorted(reg[name].items()))
-            props = f"\nWITH (\n   {kv}\n)"
-        return rows_result(spark, [(f"CREATE SCHEMA {name}{props}",)], "create_schema: string")
-    if up[:2] == ["CREATE", "SCHEMA"]:
-        m = re.match(
-            r"CREATE\s+SCHEMA\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<name>[\w.\"]+)"
-            r"(?:\s+AUTHORIZATION\s+\S+)?(?:\s+WITH\s*\((?P<props>.*)\))?\s*$",
-            stripped,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m:
-            raise ValueError(f"cannot parse CREATE SCHEMA: {stripped[:80]}")
-        name = _norm_name(m.group("name"))
-        if name in reg:
-            if m.group("ine"):
-                return rows_result(spark, [(name,)], "schema: string")
-            raise ValueError(f"schema already exists: {name}")
-        reg[name] = {
-            pm.group(1).lower(): pm.group(2)
-            for pm in re.finditer(r"([\w.]+)\s*=\s*'([^']*)'", m.group("props") or "")
-        }
-        return rows_result(spark, [(name,)], "schema: string")
-    if up[:2] == ["DROP", "SCHEMA"]:
-        m = re.match(
-            r"DROP\s+SCHEMA\s+(?P<ie>IF\s+EXISTS\s+)?(?P<name>[\w.\"]+)(?:\s+(?:CASCADE|RESTRICT))?\s*$",
-            stripped,
-            re.IGNORECASE,
-        )
-        if not m:
-            raise ValueError(f"cannot parse DROP SCHEMA: {stripped[:80]}")
-        name = _norm_name(m.group("name"))
-        if name == "default":
-            raise ValueError("cannot drop the default schema")
-        if name not in reg:
-            if m.group("ie"):
-                return rows_result(spark, [(name,)], "schema: string")
-            raise ValueError(f"schema not found: {name}")
-        reg.pop(name)
-        return rows_result(spark, [(name,)], "schema: string")
+    name = _norm_name(stripped.split()[3])
+    if name not in reg:
+        raise ValueError(f"schema not found: {name}")
+    props = ""
+    if reg[name]:
+        kv = ",\n   ".join(f"{k} = '{v}'" for k, v in sorted(reg[name].items()))
+        props = f"\nWITH (\n   {kv}\n)"
+    return rows_result(engine.spark, [(f"CREATE SCHEMA {name}{props}",)], "create_schema: string")
+
+
+def create_schema(engine, stripped: str) -> DataFrame:
+    m = re.match(
+        r"CREATE\s+SCHEMA\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<name>[\w.\"]+)"
+        r"(?:\s+AUTHORIZATION\s+\S+)?(?:\s+WITH\s*\((?P<props>.*)\))?\s*$",
+        stripped,
+        re.IGNORECASE | re.DOTALL,
+    )
+    if not m:
+        raise ValueError(f"cannot parse CREATE SCHEMA: {stripped[:80]}")
+    name = _norm_name(m.group("name"))
+    if name in engine.schemas:
+        if m.group("ine"):
+            return rows_result(engine.spark, [(name,)], "schema: string")
+        raise ValueError(f"schema already exists: {name}")
+    engine.schemas[name] = {
+        pm.group(1).lower(): pm.group(2)
+        for pm in re.finditer(r"([\w.]+)\s*=\s*'([^']*)'", m.group("props") or "")
+    }
+    return rows_result(engine.spark, [(name,)], "schema: string")
+
+
+def drop_schema(engine, stripped: str) -> DataFrame:
+    m = re.match(
+        r"DROP\s+SCHEMA\s+(?P<ie>IF\s+EXISTS\s+)?(?P<name>[\w.\"]+)(?:\s+(?:CASCADE|RESTRICT))?\s*$",
+        stripped,
+        re.IGNORECASE,
+    )
+    if not m:
+        raise ValueError(f"cannot parse DROP SCHEMA: {stripped[:80]}")
+    name = _norm_name(m.group("name"))
+    if name == "default":
+        raise ValueError("cannot drop the default schema")
+    if name not in engine.schemas:
+        if m.group("ie"):
+            return rows_result(engine.spark, [(name,)], "schema: string")
+        raise ValueError(f"schema not found: {name}")
+    engine.schemas.pop(name)
+    return rows_result(engine.spark, [(name,)], "schema: string")
+
+
+def alter_schema(engine, stripped: str) -> DataFrame:
     # ALTER SCHEMA s RENAME TO s2
     m = re.match(
         r"ALTER\s+SCHEMA\s+([\w.\"]+)\s+RENAME\s+TO\s+([\w\"]+)\s*$", stripped, re.IGNORECASE
@@ -1252,13 +1277,13 @@ def _schema_ddl(engine, stripped: str, up: list[str]) -> DataFrame:
     if not m:
         raise ValueError(f"cannot parse ALTER SCHEMA: {stripped[:80]}")
     name, new = _norm_name(m.group(1)), _norm_name(m.group(2))
-    if name not in reg:
+    if name not in engine.schemas:
         raise ValueError(f"schema not found: {name}")
-    reg[new] = reg.pop(name)
-    return rows_result(spark, [(new,)], "schema: string")
+    engine.schemas[new] = engine.schemas.pop(name)
+    return rows_result(engine.spark, [(new,)], "schema: string")
 
 
-def _create_view(engine, sql: str) -> DataFrame:
+def create_view(engine, sql: str) -> DataFrame:
     m = re.match(
         rf"CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\s+({_IDENT}(?:\.{_IDENT})*)\s+AS\s+(.*)$",
         sql,
@@ -1277,7 +1302,7 @@ def _create_view(engine, sql: str) -> DataFrame:
     return rows_result(engine.spark, [(name,)], "view: string")
 
 
-def _create_empty_table(engine, sql: str) -> DataFrame:
+def create_empty_table(engine, sql: str) -> DataFrame:
     m = re.match(
         rf"CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?({_IDENT}(?:\.{_IDENT})*)\s*\((.*)\)\s*(?:WITH\s*\(.*\))?\s*$",
         sql,
@@ -1290,14 +1315,20 @@ def _create_empty_table(engine, sql: str) -> DataFrame:
         if re.search(r"IF\s+NOT\s+EXISTS", sql, re.IGNORECASE):
             return rows_result(engine.spark, 0)
         raise ValueError(f"table already exists: {name}")
-    cols = []
+    cols, defaults = [], {}
     for piece in _split_top_level(m.group(2), ","):
         parts = piece.split(None, 1)
         if len(parts) != 2:
             raise ValueError(f"cannot parse column definition: {piece}")
-        cols.append(f"{_norm_name(parts[0])} {_trino_type_to_spark(parts[1])}")
+        col, typ = _norm_name(parts[0]), parts[1]
+        # DEFAULT expr: what a column-list INSERT fills in (as ALTER
+        # COLUMN SET DEFAULT sets it), not part of the stored type
+        dm = re.search(r"\s+DEFAULT\s+('(?:[^']|'')*'|[^\s']+)", typ, re.IGNORECASE)
+        if dm:
+            defaults[col], typ = dm.group(1), typ[: dm.start()] + typ[dm.end() :]
+        cols.append(f"{col} {_trino_type_to_spark(typ)}")
     empty = rows_result(engine.spark, [], ", ".join(cols))
-    _commit(engine, _clear(engine, ManagedTable(name, empty.columns)), empty)
+    _commit(engine, _clear(engine, ManagedTable(name, empty.columns, defaults=defaults)), empty)
     return rows_result(engine.spark, 0)
 
 
@@ -1318,7 +1349,7 @@ def _trino_type_to_spark(t: str) -> str:
     return t
 
 
-def _alter_table(engine, sql: str) -> DataFrame:
+def alter_table(engine, sql: str) -> DataFrame:
     m = re.match(
         rf"ALTER\s+TABLE\s+({_IDENT}(?:\.{_IDENT})*)\s+(.*)$", sql, re.IGNORECASE | re.DOTALL
     )

@@ -11,22 +11,34 @@ from __future__ import annotations
 
 import dataclasses
 import datetime
+import json
+import os
 import re
 import threading
 import uuid
+from collections.abc import Callable
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from trino_spark import infoschema
 from trino_spark.catalog import ALL_TABLES, Catalog, read_parquet
+from trino_spark.dialect import access as _access
+from trino_spark.dialect import branches as _branches
+from trino_spark.dialect import catalogs as _cats
+from trino_spark.dialect import cte as _cte
 from trino_spark.dialect import dml as _dml
+from trino_spark.dialect import prepared as _prep
 from trino_spark.dialect import routines as _routines_mod
 from trino_spark.dialect.dml import rows_result
 from trino_spark.dialect.rewrites import translate
+from trino_spark.dialect.tokenizer import head, lead, structure, tokenize
 from trino_spark.functions import registry as _registry
 
 __all__ = ["QueryRecord", "QueryRegistry", "TrinoEngine", "translate"]
+
+# materialized view data: spark-warehouse/mv/<name>
+_MV_DIR = os.path.join(os.path.dirname(_dml._warehouse_dir()), "mv")
 
 _QUERIES = pa.schema(
     [(n, pa.string()) for n in ("query_id", "state", "user", "query")]
@@ -158,6 +170,8 @@ class TrinoEngine:
         self.python_routines: dict[str, _routines_mod.PythonRoutine] = {}
         # Prepared statements (PREPARE/EXECUTE/DEALLOCATE; PrepareTask.java).
         self.prepared: dict[str, str] = {}
+        # The SET PATH value (SetPathTask.java): recorded, not searched.
+        self.sql_path = ""
         # SET SESSION properties (SystemSessionProperties.java surface).
         self.session_properties: dict[str, str] = {}
         # Materialized views: name -> defining Trino SQL. Data lives as
@@ -260,38 +274,17 @@ class TrinoEngine:
             except Exception:
                 pass  # never let a listener break the query path
 
-    @staticmethod
-    def _first_keyword(sql: str) -> str:
-        """First WORD token of the statement, uppercased — skips leading
-        whitespace, comments, and parentheses, so statement-type dispatch
-        cannot be fooled by '(SELECT ...' or '/* c */ SELECT ...'."""
-        from trino_spark.dialect.tokenizer import tokenize
-
-        for t in tokenize(sql):
-            if t.kind == "WORD":
-                return t.text.upper()
-            if t.kind == "WS" or (t.kind == "SYM" and t.text == "("):
-                continue
-            break
-        return ""
-
     def _sql_inner(self, trino_sql: str) -> DataFrame:
-        from trino_spark.dialect import prepared as _prep
-
         if "@" in trino_sql and self.dml_tables:
             # Branch refs t@b (grammar SqlBase.g4:80,221; Iceberg branch
             # semantics): resolve BEFORE time travel so `t@b FOR VERSION
             # AS OF n` pins a snapshot of the branch fork.
-            from trino_spark.dialect import branches as _branches
-
             trino_sql = _branches.resolve(self, trino_sql)
         if re.search(r"\bCURRENT_USER\b", trino_sql, re.IGNORECASE):
             # CURRENT_USER (#currentUser) reflects SET SESSION AUTHORIZATION
             # — substituted as a literal outside string literals.
-            from trino_spark.dialect.access import map_outside_literals
-
             _user = self.session_user.replace("'", "''")
-            trino_sql = map_outside_literals(
+            trino_sql = _access.map_outside_literals(
                 trino_sql,
                 lambda p: re.sub(r"\bCURRENT_USER\b", f"'{_user}'", p, flags=re.IGNORECASE),
             )
@@ -299,9 +292,8 @@ class TrinoEngine:
             # version() (#version, ServerInfoResource analog): the engine
             # release string as a literal, like the reference's scalar.
             from trino_spark import __version__
-            from trino_spark.dialect.access import map_outside_literals
 
-            trino_sql = map_outside_literals(
+            trino_sql = _access.map_outside_literals(
                 trino_sql,
                 lambda p: re.sub(
                     r"\bversion\s*\(\s*\)", f"'{__version__}'", p, flags=re.IGNORECASE
@@ -311,10 +303,8 @@ class TrinoEngine:
             # current_schema niladic: the engine's own USE-tracked schema
             # (the translate() fallback maps it to current_database() for
             # raw spark.sql callers)
-            from trino_spark.dialect.access import map_outside_literals
-
             _sch = self._current_schema
-            trino_sql = map_outside_literals(
+            trino_sql = _access.map_outside_literals(
                 trino_sql,
                 lambda p: re.sub(
                     r"(?<!\.\s)(?<!\.)\bcurrent_schema\b(?!\s*[.(])",
@@ -327,15 +317,13 @@ class TrinoEngine:
             # current_groups() (#currentGroups): the identity's group set.
             # Our session identity model is roles, so the group list is the
             # active role (empty for the unrestricted owner session).
-            from trino_spark.dialect.access import map_outside_literals
-
             _role = self._acl["current"]
             _lit = (
                 "array('" + _role.replace("'", "''") + "')"
                 if _role
                 else "CAST(array() AS ARRAY<STRING>)"
             )
-            trino_sql = map_outside_literals(
+            trino_sql = _access.map_outside_literals(
                 trino_sql,
                 lambda p: re.sub(
                     # replacement via lambda: a role containing backslashes
@@ -354,8 +342,6 @@ class TrinoEngine:
             # Dynamic catalog mounts (CREATE CATALOG; CatalogFactory.java):
             # cat.schema.table refs resolve to lazily-registered views
             # (jdbc mounts resolve natively through Spark's DSv2 catalog).
-            from trino_spark.dialect import catalogs as _cats
-
             trino_sql = _cats.resolve(self, trino_sql)
         if any(
             k in trino_sql
@@ -365,454 +351,34 @@ class TrinoEngine:
             # table directory (SnapshotsTable / HistoryTable / FilesTable /
             # PartitionsTable analogs).
             trino_sql = _dml.resolve_metadata_tables(self, trino_sql)
-        wf = re.match(
-            r"\s*WITH\s+(FUNCTION\s+.*?)\s+(SELECT|VALUES)\b(.*)$",
-            trino_sql,
-            re.IGNORECASE | re.DOTALL,
-        ) if "FUNCTION" in trino_sql.upper()[:20] else None
-        if wf:
-            # Inline SQL routines (grammar SqlBase.g4 queryWith ->
-            # functionSpecification; docs udf/sql): expression-bodied
-            # functions scoped to this one query — parsed with the
-            # CREATE FUNCTION machinery, macro-inlined, then discarded.
-            inline: dict = {}
-            for spec_txt in re.split(r",\s*(?=FUNCTION\b)", wf.group(1), flags=re.IGNORECASE):
-                r = _routines_mod.parse_create_function("CREATE " + spec_txt.strip())
-                if r is None or isinstance(r, _routines_mod.PythonRoutine):
-                    raise ValueError(
-                        "WITH FUNCTION supports expression-bodied SQL routines only"
-                    )
-                inline[r.name] = r
-            query = f"{wf.group(2)}{wf.group(3)}"
-            expanded = _routines_mod.expand(query, {**self.routines, **inline})
-            return self.sql(expanded)
-        prep = _prep.parse_prepare(trino_sql)
-        if prep is not None:
-            name, body = prep
-            self.prepared[name] = body
-            return rows_result(self.spark, [(name.lower(),)], "prepared: string")
-        dealloc = _prep.parse_deallocate(trino_sql)
-        if dealloc is not None:
-            self.prepared.pop(dealloc, None)
-            return rows_result(self.spark, [(dealloc.lower(),)], "prepared: string")
-        imm = _prep.parse_execute_immediate(trino_sql)
-        if imm is not None:
-            stmt, args = imm
-            return self.sql(_prep.bind(stmt, args))
-        execed = _prep.parse_execute(trino_sql)
-        if execed is not None:
-            name, args = execed
-            if name not in self.prepared:
-                raise ValueError(f"prepared statement not found: {name}")
-            return self.sql(_prep.bind(self.prepared[name], args))
-        up0 = trino_sql.upper().split()[:3]
-        if up0 == ["SHOW", "CREATE", "FUNCTION"]:
-            # #showCreateFunction: render the stored definition text.
-            fname = trino_sql.split()[3].strip('"').rstrip(";").lower()
-            src = self._function_sources.get(fname.upper())
-            if src is None:
-                raise ValueError(f"function not found: {fname}")
-            return rows_result(self.spark, [(src,)], "create_function: string")
-        if up0[:2] == ["SET", "PATH"]:
-            # #setPath (SetPathTask.java): recorded; the engine's single
-            # function namespace makes it a session attribute only.
-            self.sql_path = trino_sql.split(None, 2)[2].strip().rstrip(";")
-            return rows_result(self.spark, [(self.sql_path,)], "path: string")
-        routine = _routines_mod.parse_create_function(trino_sql)
-        if routine is not None:
-            self._function_sources[routine.name.upper()] = trino_sql.strip().rstrip(";")
-            if isinstance(routine, _routines_mod.PythonRoutine):
-                # Row-interpreted path (loops / LANGUAGE PYTHON): a real UDF.
-                # Spark resolves the registered name during analysis, so no
-                # macro expansion is needed (or possible) for these.
-                self.python_routines[routine.name] = routine
-                self.spark.udf.register(routine.name.lower(), routine.fn, routine.returns)
-                # a routine keeps its name against the function bundle
-                _registry.settled(self.spark).add(routine.name.lower())
-            else:
-                self.routines[routine.name] = routine
-            return rows_result(self.spark, [(routine.name.lower(),)], "function: string")
-        dropped = _routines_mod.parse_drop_function(trino_sql)
-        if dropped is not None:
-            self.routines.pop(dropped, None)
-            self.python_routines.pop(dropped, None)
-            self._function_sources.pop(dropped.upper(), None)
-            return rows_result(self.spark, [(dropped.lower(),)], "function: string")
+        # The statement's kind, read once from its leading words (the role
+        # of SqlParser.createStatement): a head in _STATEMENTS picks its
+        # handler, any other statement is a query.
+        toks = tokenize(trino_sql)
+        words = head(toks)
+        start = sum(len(t.text) for t in toks[: lead(toks)])
+        run, checked = _statement(words)
+        if run is not None and not checked:
+            return run(self, trino_sql[start:].strip().rstrip(";"))
         # information_schema and system tables (infoschema.TABLES): built
         # now from the live engine, for the relations this statement reads;
-        # a CREATE VIEW keeps its text (building the view resolves them)
-        if not re.match(r"\s*CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\b", trino_sql, re.IGNORECASE):
+        # a CREATE VIEW keeps its text (building the view resolves them).
+        # The rewrite leaves the text before the first keyword as it was.
+        if run is not _dml.create_view:
             trino_sql = infoschema.resolve(self, trino_sql)
+        # Access control (AccessControl SPI): every statement from here on
+        # is checked against the active role's grants before it runs.
+        _access.enforce(self, trino_sql)
+        if run is not None:
+            return run(self, trino_sql[start:].strip().rstrip(";"))
         stripped = trino_sql.strip().rstrip(";")
-        up = stripped.upper().split()
-        # Access control + comments (AccessControl SPI / CommentTask.java):
-        # role statements handled here; every other statement is checked
-        # against the active role's grants before dispatch.
-        from trino_spark.dialect import access as _access
-
-        acl_out = _access.try_execute(self, stripped)
-        if acl_out is None and up[:1] == ["CALL"]:
-            acl_out = _access.try_execute_call(self, stripped)
-        if acl_out is not None:
-            return acl_out
-        _access.enforce(self, stripped)
-        if self._first_keyword(stripped) in ("SELECT", "WITH", "VALUES", "TABLE"):
+        if words[:1] in (["SELECT"], ["WITH"], ["VALUES"], ["TABLE"]):
             # Row filters / column masks (ConnectorAccessControl
             # getRowFilters/getColumnMasks): reads under an active role see
             # secured views. DML reads recurse through this dispatch, so
-            # their SELECT halves are covered too. Detection is token-based
-            # — a leading '(', comment, or whitespace must not let a read
-            # bypass the security rewrite.
+            # their SELECT halves are covered too.
             trino_sql = stripped = _access.apply_security(self, stripped)
-        if (up and up[0] in ("CREATE", "DROP", "ALTER") and "BRANCH" in up[:4]) or up[:2] == ["SHOW", "BRANCHES"]:
-            # Branch statements (grammar #createBranch/#dropBranch/
-            # #fastForwardBranch/#showBranches): write-audit-publish over
-            # the snapshot log.
-            from trino_spark.dialect import branches as _branches
-
-            br_out = _branches.try_execute(self, stripped)
-            if br_out is not None:
-                return br_out
-        if up[:1] in (["INSERT"], ["DELETE"], ["UPDATE"], ["MERGE"], ["TRUNCATE"], ["ALTER"]) or (
-            up[:2]
-            in (
-                ["CREATE", "TABLE"],
-                ["DROP", "TABLE"],
-                ["CREATE", "VIEW"],
-                ["DROP", "VIEW"],
-                ["CREATE", "SCHEMA"],
-                ["DROP", "SCHEMA"],
-            )
-            or up[:3]
-            in (
-                ["CREATE", "OR", "REPLACE"],
-                ["SHOW", "CREATE", "VIEW"],
-                ["SHOW", "CREATE", "SCHEMA"],
-            )
-        ):
-            # DML/DDL entry point (SURVEY §3.3): copy-on-write managed
-            # tables, logical views, column evolution. Catalog-qualified
-            # targets route to the mounted connector's page-sink analog
-            # (memory stores, blackhole swallows) first.
-            if self.catalogs:
-                from trino_spark.dialect import catalogs as _cats
-
-                cat_dml = _cats.try_execute_dml(self, stripped)
-                if cat_dml is not None:
-                    return cat_dml
-            dml_out = _dml.try_execute(self, stripped)
-            if dml_out is None:
-                dml_out = _dml.try_execute_ddl(self, stripped)
-            if dml_out is not None:
-                return dml_out
-        if up[:3] == ["CREATE", "MATERIALIZED", "VIEW"] or up[:5] == [
-            "CREATE", "OR", "REPLACE", "MATERIALIZED", "VIEW",
-        ]:
-            skip = 3 if up[1] == "MATERIALIZED" else 5
-            rest = stripped.split(None, skip)[skip]
-            name, _, defn = rest.partition(" AS ") if " AS " in rest else rest.partition(" as ")
-            name = name.strip().strip('"').split(".")[-1].lower()
-            if not defn.strip():
-                raise ValueError(f"CREATE MATERIALIZED VIEW {name}: missing AS <query>")
-            self.materialized_views[name] = defn.strip()
-            self._mv_refresh(name)
-            return rows_result(self.spark, [(name,)], "materialized_view: string")
-        if up[:3] == ["REFRESH", "MATERIALIZED", "VIEW"]:
-            name = stripped.split()[3].strip('"').split(".")[-1].lower()
-            if name not in self.materialized_views:
-                raise ValueError(f"materialized view not found: {name}")
-            n = self._mv_refresh(name)
-            return rows_result(self.spark, [(name, n)], "materialized_view: string, rows: bigint")
-        if up[:3] == ["DROP", "MATERIALIZED", "VIEW"]:
-            parts = stripped.split()
-            idx = 5 if len(parts) > 5 and parts[3].upper() == "IF" else 3
-            name = parts[idx].strip('"').split(".")[-1].lower()
-            self.materialized_views.pop(name, None)
-            self._mv_meta.pop(name, None)
-            self.spark.catalog.dropTempView(name)
-            return rows_result(self.spark, [(name,)], "materialized_view: string")
-        if up[:2] in (["CREATE", "CATALOG"], ["DROP", "CATALOG"]):
-            # Dynamic catalogs (grammar SqlBase.g4 #createCatalog /
-            # #dropCatalog; CreateCatalogTask.java via CatalogFactory).
-            from trino_spark.dialect import catalogs as _cats
-
-            cat_out = _cats.try_execute(self, stripped)
-            if cat_out is not None:
-                return cat_out
-        if up[:2] == ["SHOW", "SESSION"]:
-            # SET SESSION properties recorded on this engine
-            # (SystemSessionProperties.java surface).
-            rows = sorted(self.session_properties.items())
-            return rows_result(self.spark, rows, "name: string, value: string")
-        if up[:2] == ["SHOW", "FUNCTIONS"]:
-            # SHOW FUNCTIONS (ShowQueriesRewrite.java): the engine's
-            # function inventory — dialect-mapped Trino names, the whole
-            # function bundle (registered on this session yet or not),
-            # other session UDFs, and every user-registered routine.
-            # Spark-native passthrough names (shared spellings like
-            # abs/concat/sum) are not enumerated.
-            from trino_spark.dialect import rewrites as _rw
-
-            session_udfs = {
-                f.name
-                for f in self.spark.catalog.listFunctions()
-                # Spark marks builtins isTemporary too; they resolve to
-                # catalyst expression classes, while session-registered
-                # UDFs carry an UDFRegistration/UserDefined class or none.
-                if f.isTemporary
-                and "." not in f.name
-                and not (f.className or "").startswith(
-                    ("org.apache.spark.sql.catalyst.", "org.apache.spark.sql.execution.")
-                )
-            }
-            # dialect-internal registrations (e.g. the bounded
-            # __spatial_partitioning_sampled twins) are not part of the
-            # user-facing inventory
-            udfs = sorted(
-                n for n in session_udfs | set(_registry.bundle()) if not n.startswith("__")
-            )
-            rows = (
-                [(n, "scalar", "dialect-rename") for n in sorted(_rw._RENAME)]
-                + [(n, "scalar", "dialect-template") for n in sorted(_rw._TEMPLATE)]
-                + [(n, "scalar", "registered-udf") for n in udfs]
-                + [(n.lower(), "routine", "sql") for n in sorted(self.routines)]
-                + [(n.lower(), "routine", "python") for n in sorted(self.python_routines)]
-            )
-            return rows_result(
-                self.spark, rows, "function_name: string, kind: string, source: string"
-            )
-        if up[:3] == ["SHOW", "MATERIALIZED", "VIEWS"]:
-            # Freshness surface of system.metadata.materialized_views
-            # (MaterializedViewSystemTable.java): FRESH iff every source
-            # table's on-disk fingerprint still matches the one captured at
-            # refresh; UNKNOWN for non-filesystem sources (e.g. jdbc).
-            rows = [
-                (n, self._mv_freshness(n), self._mv_meta[n]["last_fresh_time"])
-                for n in sorted(self.materialized_views)
-            ]
-            return rows_result(
-                self.spark, rows, "name: string, freshness: string, last_fresh_time: string"
-            )
-        if up[:1] == ["EXPLAIN"]:
-            # EXPLAIN [ANALYZE] [(TYPE ...)] <stmt> (ExplainRewrite.java):
-            # returns the rendered plan as a one-column relation. TYPE maps
-            # onto Spark's explain modes: LOGICAL -> extended (analyzed +
-            # optimized logical), DISTRIBUTED -> formatted physical (stage/
-            # exchange structure), VALIDATE -> analysis only, IO -> scanned
-            # relations summary.
-            rest = stripped.split(None, 1)[1]
-            mode = "formatted"
-            fmt = "TEXT"
-            import re as _re2
-
-            tm = _re2.match(
-                r"\(\s*((?:(?:TYPE|FORMAT)\s+\w+\s*,?\s*)+)\)\s*(.*)$",
-                rest,
-                _re2.IGNORECASE | _re2.DOTALL,
-            )
-            if tm:
-                opts = {
-                    k.upper(): v.upper()
-                    for k, v in _re2.findall(
-                        r"(TYPE|FORMAT)\s+(\w+)", tm.group(1), _re2.IGNORECASE
-                    )
-                }
-                rest = tm.group(2)
-                fmt = opts.get("FORMAT", "TEXT")
-                if fmt not in ("TEXT", "JSON"):
-                    raise ValueError(f"EXPLAIN (FORMAT {fmt}) not supported")
-                ttype = opts.get("TYPE", "DISTRIBUTED")
-                mode = {
-                    "LOGICAL": "extended",
-                    "DISTRIBUTED": "formatted",
-                    "VALIDATE": "validate",
-                    "IO": "io",
-                }.get(ttype)
-                if mode is None:
-                    raise ValueError(f"EXPLAIN (TYPE {ttype}) not supported")
-                if fmt == "JSON" and mode in ("validate",):
-                    raise ValueError("EXPLAIN (FORMAT JSON) supports TYPE LOGICAL/DISTRIBUTED/IO")
-            if fmt == "JSON" and up[1:2] != ["ANALYZE"] and mode != "validate":
-                # ExplainRewrite's JSON rendering: emit Spark's own plan
-                # JSON (TreeNode.toJSON) for the requested plan level
-                df = self.sql(rest)
-                qe = df._jdf.queryExecution()
-                if mode == "extended":
-                    text = qe.optimizedPlan().toJSON()
-                elif mode == "io":
-                    import json as _json
-
-                    plan = qe.optimizedPlan().toString()
-                    rels = sorted(set(_re2.findall(r"FileScan \S+|Relation \[[^\]]*\] \w+", plan)))
-                    text = _json.dumps({"inputTableColumnInfos": rels})
-                else:
-                    text = qe.executedPlan().toJSON()
-                return rows_result(self.spark, [(text,)], "query_plan: string")
-            if up[1:2] == ["ANALYZE"]:
-                text = self.explain_analyze(rest.split(None, 1)[1])
-            elif mode == "validate":
-                self.sql(rest).schema  # analysis only; no execution
-                text = "VALID"
-            elif mode == "io":
-                df = self.sql(rest)
-                plan = df._jdf.queryExecution().optimizedPlan().toString()
-                import re as _re3
-
-                rels = sorted(set(_re3.findall(r"Relation \[[^\]]*\] \w+|FileScan \S+", plan))) or [
-                    ln.strip() for ln in plan.splitlines() if "Relation" in ln
-                ]
-                text = "\n".join(rels) if rels else plan
-            else:
-                text = self.explain(rest, mode=mode)
-            return rows_result(self.spark, [(text,)], "query_plan: string")
-        if up[:3] == ["SET", "TIME", "ZONE"]:
-            # SET TIME ZONE (grammar SqlBase.g4; SetTimeZoneTask.java):
-            # maps onto Spark's session timezone, which drives timestamp
-            # rendering and AT TIME ZONE defaults. LOCAL restores UTC
-            # (this engine's canonical zone, session.py).
-            arg = stripped.split(None, 3)[3].strip()
-            zone = "UTC" if arg.upper() == "LOCAL" else arg.strip("'")
-            self.spark.conf.set("spark.sql.session.timeZone", zone)
-            return rows_result(self.spark, [(zone,)], "time_zone: string")
-        if up[:1] == ["USE"] and len(up) == 2:
-            # USE catalog.schema (UseTask.java): single-catalog engine —
-            # record the default schema; unqualified names already resolve
-            # against the session catalog.
-            self._current_schema = stripped.split()[1].strip('"')
-            return rows_result(self.spark, [(self._current_schema,)], "schema: string")
-        if up[:3] == ["SET", "SESSION", "AUTHORIZATION"]:
-            # #setSessionAuthorization (SetSessionAuthorizationTask.java):
-            # switch the session identity; CURRENT_USER reflects it.
-            # Impersonation requires a privilege in the reference
-            # (checkCanSetUser) — a restricted role must not sidestep
-            # CURRENT_USER-based row filters/masks by switching identity,
-            # so deny under any active restricted role (the same owner
-            # gate as CREATE/DROP CATALOG).
-            from trino_spark.dialect import access as _access
-
-            if self._acl["current"] is not None:
-                raise _access.AccessDenied(
-                    "Access Denied: SET SESSION AUTHORIZATION requires an owner session"
-                )
-            user = stripped.split(None, 3)[3].strip().strip("'\"")
-            self.session_user = user
-            return rows_result(self.spark, [(user,)], "user: string")
-        if up[:3] == ["RESET", "SESSION", "AUTHORIZATION"]:
-            self.session_user = "trino"
-            return rows_result(self.spark, [("trino",)], "user: string")
-        if up[:2] == ["SET", "SESSION"]:
-            # SET SESSION k = v (SystemSessionProperties.java surface):
-            # recorded per-engine; spark.* keys pass through to the conf.
-            key, _, val = stripped.split(None, 2)[2].partition("=")
-            key, val = key.strip(), val.strip().strip("'")
-            self.session_properties[key] = val
-            if key.startswith("spark."):
-                self.spark.conf.set(key, val)
-            return rows_result(self.spark, [(key, val)], "name: string, value: string")
-        if up[:2] == ["RESET", "SESSION"]:
-            key = stripped.split()[2]
-            self.session_properties.pop(key, None)
-            if key.startswith("spark."):
-                self.spark.conf.unset(key)
-            return rows_result(self.spark, [(key,)], "name: string")
-        if up[:2] == ["START", "TRANSACTION"]:
-            # Transaction statements (StartTransactionTask.java): DML is
-            # copy-on-write, so the transaction pins per-table snapshots
-            # (dialect/dml.py txn_*). Access modes are accepted and ignored
-            # (single-session engine).
-            _dml.txn_begin(self)
-            return rows_result(self.spark, [("STARTED",)], "transaction: string")
-        if up[:1] in (["COMMIT"], ["ROLLBACK"]):
-            if up[0] == "COMMIT":
-                _dml.txn_commit(self)
-            else:
-                _dml.txn_rollback(self)
-            return rows_result(self.spark, [(up[0],)], "transaction: string")
-        if up[:3] == ["SHOW", "CREATE", "TABLE"]:
-            # SHOW CREATE TABLE (ShowQueriesRewrite.java): rendered DDL.
-            name = stripped.split()[3].strip('"').split(".")[-1].lower()
-            cols = ",\n   ".join(
-                f"{f.name} {f.dataType.simpleString()}"
-                for f in self.spark.table(name).schema.fields
-            )
-            src = self.catalog._sources.get(name)
-            rec = self.dml_tables.get(name)
-            if rec is not None:
-                extra = "".join(f",\n   {k} = '{v}'" for k, v in sorted(rec.properties.items()))
-                with_props = f"\nWITH (\n   format = 'PARQUET',\n   location = '{rec.path}'{extra}\n)"
-            elif src is not None:
-                with_props = f"\nWITH (\n   format = '{src.format.upper()}',\n   location = '{src.path}'\n)"
-            else:
-                with_props = ""
-            ddl = f"CREATE TABLE {name} (\n   {cols}\n){with_props}"
-            return rows_result(self.spark, [(ddl,)], "create_table: string")
-        if up[:3] == ["SHOW", "CREATE", "MATERIALIZED"]:
-            name = stripped.split()[4].strip('"').split(".")[-1].lower()
-            if name not in self.materialized_views:
-                raise ValueError(f"materialized view not found: {name}")
-            ddl = f"CREATE MATERIALIZED VIEW {name} AS\n{self.materialized_views[name]}"
-            return rows_result(self.spark, [(ddl,)], "create_materialized_view: string")
-        if up[:3] == ["SHOW", "STATS", "FOR"]:
-            target = stripped.split(None, 3)[3].strip()
-            if target.startswith("("):
-                # #showStatsForQuery (ShowStatsRewrite.java handles both
-                # forms): compute the stats shape over the query result.
-                inner = target.strip()[1:-1] if target.endswith(")") else target[1:]
-                import os as _os
-
-                view = f"_show_stats_q_{_os.getpid()}"
-                self.sql(inner).createOrReplaceTempView(view)
-                return infoschema.show_stats(self.spark, view)
-            return infoschema.show_stats(
-                self.spark,
-                target.strip('"'),
-                cache=self._stats_cache,
-            )
-        if up[:1] == ["ANALYZE"] and len(up) >= 2:
-            # ANALYZE <table> (grammar SqlBase.g4; AnalyzeTask.java +
-            # connector collectStatistics): run the one-pass stats
-            # aggregation now and persist it on the engine — subsequent
-            # SHOW STATS serve the collected statistics without a scan.
-            tbl = stripped.split()[1].strip('"').split(".")[-1].lower()
-            self._stats_cache.pop(tbl, None)
-            n = infoschema.show_stats(self.spark, tbl, cache=self._stats_cache, populate=True).where(
-                "column_name IS NULL"
-            ).collect()[0].row_count
-            return rows_result(self.spark, [(tbl, int(n or 0))], "table_name: string, rows: bigint")
-        if up[:2] == ["DESCRIBE", "OUTPUT"] and len(up) == 3:
-            name = up[2]
-            if name not in self.prepared:
-                raise ValueError(f"prepared statement not found: {name}")
-            from trino_spark.dialect import prepared as _p
-
-            toks = _p.tokenize(self.prepared[name])
-            n = sum(1 for t in toks if t.is_sym("?"))
-            bound = _p.bind(self.prepared[name], ["NULL"] * n)
-            schema = self.spark.sql(translate(bound)).schema
-            return rows_result(
-                self.spark,
-                [(f.name, f.dataType.simpleString()) for f in schema],
-                "column_name string, type string",
-            )
-        if up[:2] == ["DESCRIBE", "INPUT"] and len(up) == 3:
-            name = up[2]
-            if name not in self.prepared:
-                raise ValueError(f"prepared statement not found: {name}")
-            from trino_spark.dialect import prepared as _p
-
-            n = sum(1 for t in _p.tokenize(self.prepared[name]) if t.is_sym("?"))
-            return rows_result(
-                self.spark, [(i, "unknown") for i in range(n)], "position int, type string"
-            )
-        shown = infoschema.rewrite_show(trino_sql)
-        if shown is not None:
-            # SHOW TABLES/COLUMNS/... and DESCRIBE t: a SELECT over
-            # information_schema, dispatched like any other statement
-            # (ShowQueriesRewrite.java)
-            return self.sql(shown)
-        import re as _re
-
-        if _re.search(r"\bJSON_TABLE\s*\(", stripped, _re.IGNORECASE):
+        if re.search(r"\bJSON_TABLE\s*\(", stripped, re.IGNORECASE):
             # JSON_TABLE clause (grammar SqlBase.g4; operator
             # main/operator/table/json/): execute on the json_table
             # operator, substitute a temp view, re-dispatch.
@@ -821,7 +387,7 @@ class TrinoEngine:
             jt_out = _jtsql.try_rewrite(self, stripped)
             if jt_out is not None:
                 return jt_out
-        if _re.search(r"\bMATCH_RECOGNIZE\b", stripped, _re.IGNORECASE):
+        if re.search(r"\bMATCH_RECOGNIZE\b", stripped, re.IGNORECASE):
             # Row-pattern recognition (grammar SqlBase.g4:448): execute the
             # block on the NFA operator, substitute a temp view, re-dispatch.
             from trino_spark.dialect import match_recognize_sql as _mrsql
@@ -829,8 +395,8 @@ class TrinoEngine:
             out = _mrsql.try_rewrite(self, stripped)
             if out is not None:
                 return out
-        if _re.search(r"\bWINDOW\b", stripped, _re.IGNORECASE) and _re.search(
-            r"\bPATTERN\s*\(", stripped, _re.IGNORECASE
+        if re.search(r"\bWINDOW\b", stripped, re.IGNORECASE) and re.search(
+            r"\bPATTERN\s*\(", stripped, re.IGNORECASE
         ):
             # Row-pattern recognition in WINDOW (docs
             # pattern-recognition-in-window.md): per-row anchored match.
@@ -839,20 +405,388 @@ class TrinoEngine:
             out = _mrsql.try_rewrite_window(self, stripped)
             if out is not None:
                 return out
-        expanded = _routines_mod.expand(trino_sql, self.routines)
-        spark_sql = translate(expanded)
-        if spark_sql.lstrip()[:4].upper() == "WITH":
-            # Reused-CTE materialization (Trino CTE materialization / FTE
-            # exchange-spool analog): a WITH subplan referenced >= 2 times
-            # is computed once and cached instead of inlined N times.
-            from trino_spark.dialect import cte as _cte
-
-            spark_sql = _cte.materialize_reused(self, spark_sql)
-        df = self.spark.sql(spark_sql)
+        spark_sql = translate(_routines_mod.expand(trino_sql, self.routines))
+        # Reused-CTE materialization (Trino CTE materialization / FTE
+        # exchange-spool analog): a WITH subplan referenced >= 2 times is
+        # computed once and cached instead of inlined N times.
+        df = self.spark.sql(_cte.materialize_reused(self, spark_sql))
         # FETCH ... WITH TIES leaves a helper rank column; drop it here.
         if "__rk" in df.columns:
             df = df.drop("__rk")
         return df
+
+    # ---- statements: each runs one _STATEMENTS entry; `text` is the
+    # statement from its first keyword, without the trailing ';'
+
+    def _with_function(self, text: str) -> DataFrame:
+        # Inline SQL routines (grammar SqlBase.g4 queryWith ->
+        # functionSpecification; docs udf/sql): expression-bodied
+        # functions scoped to this one query — parsed with the CREATE
+        # FUNCTION machinery, macro-inlined, then discarded.
+        wf = re.match(
+            r"WITH\s+(FUNCTION\s+.*?)\s+(SELECT|VALUES)\b(.*)$", text, re.IGNORECASE | re.DOTALL
+        )
+        if not wf:
+            raise ValueError(f"cannot parse WITH FUNCTION: {text[:80]}")
+        inline: dict = {}
+        for spec_txt in re.split(r",\s*(?=FUNCTION\b)", wf.group(1), flags=re.IGNORECASE):
+            r = _routines_mod.parse_create_function("CREATE " + spec_txt.strip())
+            if r is None or isinstance(r, _routines_mod.PythonRoutine):
+                raise ValueError("WITH FUNCTION supports expression-bodied SQL routines only")
+            inline[r.name] = r
+        query = f"{wf.group(2)}{wf.group(3)}"
+        return self.sql(_routines_mod.expand(query, {**self.routines, **inline}))
+
+    def _prepare(self, text: str) -> DataFrame:
+        name, body = _prep.parse_prepare(text)
+        self.prepared[name] = body
+        return rows_result(self.spark, [(name.lower(),)], "prepared: string")
+
+    def _deallocate(self, text: str) -> DataFrame:
+        name = _prep.parse_deallocate(text)
+        self.prepared.pop(name, None)
+        return rows_result(self.spark, [(name.lower(),)], "prepared: string")
+
+    def _execute_immediate(self, text: str) -> DataFrame:
+        stmt, args = _prep.parse_execute_immediate(text)
+        return self.sql(_prep.bind(stmt, args))
+
+    def _execute(self, text: str) -> DataFrame:
+        name, args = _prep.parse_execute(text)
+        if name not in self.prepared:
+            raise ValueError(f"prepared statement not found: {name}")
+        return self.sql(_prep.bind(self.prepared[name], args))
+
+    def _show_create_function(self, text: str) -> DataFrame:
+        # #showCreateFunction: render the stored definition text.
+        fname = text.split()[3].strip('"').lower()
+        src = self._function_sources.get(fname.upper())
+        if src is None:
+            raise ValueError(f"function not found: {fname}")
+        return rows_result(self.spark, [(src,)], "create_function: string")
+
+    def _set_path(self, text: str) -> DataFrame:
+        # #setPath (SetPathTask.java): recorded; the engine's single
+        # function namespace makes it a session attribute only.
+        self.sql_path = text.split(None, 2)[2].strip()
+        return rows_result(self.spark, [(self.sql_path,)], "path: string")
+
+    def _create_function(self, text: str) -> DataFrame:
+        routine = _routines_mod.parse_create_function(text)
+        self._function_sources[routine.name.upper()] = text
+        if isinstance(routine, _routines_mod.PythonRoutine):
+            # Row-interpreted path (loops / LANGUAGE PYTHON): a real UDF.
+            # Spark resolves the registered name during analysis, so no
+            # macro expansion is needed (or possible) for these.
+            self.python_routines[routine.name] = routine
+            self.spark.udf.register(routine.name.lower(), routine.fn, routine.returns)
+            # a routine keeps its name against the function bundle
+            _registry.settled(self.spark).add(routine.name.lower())
+        else:
+            self.routines[routine.name] = routine
+        return rows_result(self.spark, [(routine.name.lower(),)], "function: string")
+
+    def _drop_function(self, text: str) -> DataFrame:
+        dropped = _routines_mod.parse_drop_function(text)
+        self.routines.pop(dropped, None)
+        self.python_routines.pop(dropped, None)
+        self._function_sources.pop(dropped.upper(), None)
+        return rows_result(self.spark, [(dropped.lower(),)], "function: string")
+
+    def _write(self, text: str) -> DataFrame | None:
+        # DML entry point (SURVEY §3.3): copy-on-write managed tables.
+        # Catalog-qualified targets route to the mounted connector's
+        # page-sink analog (memory stores, blackhole swallows) first.
+        out = _cats.try_execute_dml(self, text) if self.catalogs else None
+        return out if out is not None else _dml.try_execute(self, text)
+
+    def _create_table(self, text: str) -> DataFrame:
+        out = self._write(text)  # None: not a CTAS, a column list
+        return out if out is not None else _dml.create_empty_table(self, text)
+
+    def _create_mv(self, text: str) -> DataFrame:
+        m = re.match(
+            r"CREATE\s+(?:OR\s+REPLACE\s+)?MATERIALIZED\s+VIEW\s+([\w.\"]+)\s+AS\s+(.+)$",
+            text,
+            re.IGNORECASE | re.DOTALL,
+        )
+        if not m:
+            raise ValueError(f"CREATE MATERIALIZED VIEW: missing AS <query> in {text[:80]}")
+        name = m.group(1).strip('"').split(".")[-1].lower()
+        self.materialized_views[name] = m.group(2).strip()
+        self._mv_refresh(name)
+        return rows_result(self.spark, [(name,)], "materialized_view: string")
+
+    def _refresh_mv(self, text: str) -> DataFrame:
+        name = text.split()[3].strip('"').split(".")[-1].lower()
+        if name not in self.materialized_views:
+            raise ValueError(f"materialized view not found: {name}")
+        n = self._mv_refresh(name)
+        return rows_result(self.spark, [(name, n)], "materialized_view: string, rows: bigint")
+
+    def _drop_mv(self, text: str) -> DataFrame:
+        parts = text.split()
+        idx = 5 if len(parts) > 5 and parts[3].upper() == "IF" else 3
+        name = parts[idx].strip('"').split(".")[-1].lower()
+        self.materialized_views.pop(name, None)
+        self._mv_meta.pop(name, None)
+        self.spark.catalog.dropTempView(name)
+        return rows_result(self.spark, [(name,)], "materialized_view: string")
+
+    def _show_session(self, text: str) -> DataFrame:
+        # SET SESSION properties recorded on this engine
+        # (SystemSessionProperties.java surface).
+        rows = sorted(self.session_properties.items())
+        return rows_result(self.spark, rows, "name: string, value: string")
+
+    def _show_functions(self, text: str) -> DataFrame:
+        # SHOW FUNCTIONS (ShowQueriesRewrite.java): the engine's function
+        # inventory — dialect-mapped Trino names, the whole function bundle
+        # (registered on this session yet or not), other session UDFs, and
+        # every user-registered routine. Spark-native passthrough names
+        # (shared spellings like abs/concat/sum) are not enumerated.
+        from trino_spark.dialect import rewrites as _rw
+
+        session_udfs = {
+            f.name
+            for f in self.spark.catalog.listFunctions()
+            # Spark marks builtins isTemporary too; they resolve to
+            # catalyst expression classes, while session-registered UDFs
+            # carry an UDFRegistration/UserDefined class or none.
+            if f.isTemporary
+            and "." not in f.name
+            and not (f.className or "").startswith(
+                ("org.apache.spark.sql.catalyst.", "org.apache.spark.sql.execution.")
+            )
+        }
+        # dialect-internal registrations (e.g. the bounded
+        # __spatial_partitioning_sampled twins) are not part of the
+        # user-facing inventory
+        udfs = sorted(n for n in session_udfs | set(_registry.bundle()) if not n.startswith("__"))
+        rows = (
+            [(n, "scalar", "dialect-rename") for n in sorted(_rw._RENAME)]
+            + [(n, "scalar", "dialect-template") for n in sorted(_rw._TEMPLATE)]
+            + [(n, "scalar", "registered-udf") for n in udfs]
+            + [(n.lower(), "routine", "sql") for n in sorted(self.routines)]
+            + [(n.lower(), "routine", "python") for n in sorted(self.python_routines)]
+        )
+        return rows_result(self.spark, rows, "function_name: string, kind: string, source: string")
+
+    def _show_mvs(self, text: str) -> DataFrame:
+        # Freshness surface of system.metadata.materialized_views
+        # (MaterializedViewSystemTable.java): FRESH iff every source
+        # table's on-disk fingerprint still matches the one captured at
+        # refresh; UNKNOWN for non-filesystem sources (e.g. jdbc).
+        rows = [
+            (n, self._mv_freshness(n), self._mv_meta[n]["last_fresh_time"])
+            for n in sorted(self.materialized_views)
+        ]
+        return rows_result(
+            self.spark, rows, "name: string, freshness: string, last_fresh_time: string"
+        )
+
+    def _explain_statement(self, text: str) -> DataFrame:
+        # EXPLAIN [ANALYZE] [(TYPE ...)] <stmt> (ExplainRewrite.java):
+        # returns the rendered plan as a one-column relation. TYPE maps
+        # onto Spark's explain modes: LOGICAL -> extended (analyzed +
+        # optimized logical), DISTRIBUTED -> formatted physical (stage/
+        # exchange structure), VALIDATE -> analysis only, IO -> scanned
+        # relations summary.
+        rest = text.split(None, 1)[1]
+        analyze = re.match(r"ANALYZE\b", rest, re.IGNORECASE) is not None
+        mode, fmt = "formatted", "TEXT"
+        tm = re.match(
+            r"\(\s*((?:(?:TYPE|FORMAT)\s+\w+\s*,?\s*)+)\)\s*(.*)$", rest, re.IGNORECASE | re.DOTALL
+        )
+        if tm:
+            opts = {
+                k.upper(): v.upper()
+                for k, v in re.findall(r"(TYPE|FORMAT)\s+(\w+)", tm.group(1), re.IGNORECASE)
+            }
+            rest = tm.group(2)
+            fmt = opts.get("FORMAT", "TEXT")
+            if fmt not in ("TEXT", "JSON"):
+                raise ValueError(f"EXPLAIN (FORMAT {fmt}) not supported")
+            ttype = opts.get("TYPE", "DISTRIBUTED")
+            mode = {
+                "LOGICAL": "extended",
+                "DISTRIBUTED": "formatted",
+                "VALIDATE": "validate",
+                "IO": "io",
+            }.get(ttype)
+            if mode is None:
+                raise ValueError(f"EXPLAIN (TYPE {ttype}) not supported")
+            if fmt == "JSON" and mode == "validate":
+                raise ValueError("EXPLAIN (FORMAT JSON) supports TYPE LOGICAL/DISTRIBUTED/IO")
+        if analyze:
+            plan = self.explain_analyze(rest.split(None, 1)[1])
+        elif mode == "validate":
+            self.sql(rest).schema  # analysis only; no execution
+            plan = "VALID"
+        elif mode == "io":
+            logical = self.sql(rest)._jdf.queryExecution().optimizedPlan().toString()
+            rels = sorted(set(re.findall(r"FileScan \S+|Relation \[[^\]]*\] \w+", logical)))
+            if fmt == "JSON":
+                plan = json.dumps({"inputTableColumnInfos": rels})
+            else:
+                rels = rels or [ln.strip() for ln in logical.splitlines() if "Relation" in ln]
+                plan = "\n".join(rels) if rels else logical
+        elif fmt == "JSON":
+            # ExplainRewrite's JSON rendering: Spark's own plan JSON
+            # (TreeNode.toJSON) for the requested plan level
+            qe = self.sql(rest)._jdf.queryExecution()
+            plan = (qe.optimizedPlan() if mode == "extended" else qe.executedPlan()).toJSON()
+        else:
+            plan = self.explain(rest, mode=mode)
+        return rows_result(self.spark, [(plan,)], "query_plan: string")
+
+    def _set_time_zone(self, text: str) -> DataFrame:
+        # SET TIME ZONE (grammar SqlBase.g4; SetTimeZoneTask.java): maps
+        # onto Spark's session timezone, which drives timestamp rendering
+        # and AT TIME ZONE defaults. LOCAL restores UTC (this engine's
+        # canonical zone, session.py).
+        arg = text.split(None, 3)[3].strip()
+        zone = "UTC" if arg.upper() == "LOCAL" else arg.strip("'")
+        self.spark.conf.set("spark.sql.session.timeZone", zone)
+        return rows_result(self.spark, [(zone,)], "time_zone: string")
+
+    def _use(self, text: str) -> DataFrame:
+        # USE catalog.schema (UseTask.java): single-catalog engine —
+        # record the default schema; unqualified names already resolve
+        # against the session catalog.
+        m = re.fullmatch(r"USE\s+(\S+)\s*", text, re.IGNORECASE)
+        if not m:
+            raise ValueError(f"cannot parse USE: {text[:80]}")
+        self._current_schema = m.group(1).strip('"')
+        return rows_result(self.spark, [(self._current_schema,)], "schema: string")
+
+    def _set_authorization(self, text: str) -> DataFrame:
+        # #setSessionAuthorization (SetSessionAuthorizationTask.java):
+        # switch the session identity; CURRENT_USER reflects it.
+        # Impersonation requires a privilege in the reference
+        # (checkCanSetUser) — a restricted role must not sidestep
+        # CURRENT_USER-based row filters/masks by switching identity, so
+        # deny under any active restricted role (the same owner gate as
+        # CREATE/DROP CATALOG).
+        if self._acl["current"] is not None:
+            raise _access.AccessDenied(
+                "Access Denied: SET SESSION AUTHORIZATION requires an owner session"
+            )
+        self.session_user = text.split(None, 3)[3].strip().strip("'\"")
+        return rows_result(self.spark, [(self.session_user,)], "user: string")
+
+    def _reset_authorization(self, text: str) -> DataFrame:
+        self.session_user = "trino"
+        return rows_result(self.spark, [("trino",)], "user: string")
+
+    def _set_session(self, text: str) -> DataFrame:
+        # SET SESSION k = v (SystemSessionProperties.java surface):
+        # recorded per-engine; spark.* keys pass through to the conf.
+        key, val = session_assignment(text)
+        self.session_properties[key] = val
+        if key.startswith("spark."):
+            self.spark.conf.set(key, val)
+        return rows_result(self.spark, [(key, val)], "name: string, value: string")
+
+    def _reset_session(self, text: str) -> DataFrame:
+        key = text.split()[2]
+        self.session_properties.pop(key, None)
+        if key.startswith("spark."):
+            self.spark.conf.unset(key)
+        return rows_result(self.spark, [(key,)], "name: string")
+
+    def _start_transaction(self, text: str) -> DataFrame:
+        # Transaction statements (StartTransactionTask.java): DML is
+        # copy-on-write, so the transaction pins per-table snapshots
+        # (dialect/dml.py txn_*). Access modes are accepted and ignored
+        # (single-session engine).
+        _dml.txn_begin(self)
+        return rows_result(self.spark, [("STARTED",)], "transaction: string")
+
+    def _commit(self, text: str) -> DataFrame:
+        _dml.txn_commit(self)
+        return rows_result(self.spark, [("COMMIT",)], "transaction: string")
+
+    def _rollback(self, text: str) -> DataFrame:
+        _dml.txn_rollback(self)
+        return rows_result(self.spark, [("ROLLBACK",)], "transaction: string")
+
+    def _show_create_table(self, text: str) -> DataFrame:
+        # SHOW CREATE TABLE (ShowQueriesRewrite.java): rendered DDL.
+        name = text.split()[3].strip('"').split(".")[-1].lower()
+        cols = ",\n   ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in self.spark.table(name).schema.fields
+        )
+        src = self.catalog._sources.get(name)
+        rec = self.dml_tables.get(name)
+        if rec is not None:
+            extra = "".join(f",\n   {k} = '{v}'" for k, v in sorted(rec.properties.items()))
+            with_props = f"\nWITH (\n   format = 'PARQUET',\n   location = '{rec.path}'{extra}\n)"
+        elif src is not None:
+            with_props = f"\nWITH (\n   format = '{src.format.upper()}',\n   location = '{src.path}'\n)"
+        else:
+            with_props = ""
+        ddl = f"CREATE TABLE {name} (\n   {cols}\n){with_props}"
+        return rows_result(self.spark, [(ddl,)], "create_table: string")
+
+    def _show_create_mv(self, text: str) -> DataFrame:
+        name = text.split()[4].strip('"').split(".")[-1].lower()
+        if name not in self.materialized_views:
+            raise ValueError(f"materialized view not found: {name}")
+        ddl = f"CREATE MATERIALIZED VIEW {name} AS\n{self.materialized_views[name]}"
+        return rows_result(self.spark, [(ddl,)], "create_materialized_view: string")
+
+    def _show_stats(self, text: str) -> DataFrame:
+        target = text.split(None, 3)[3].strip()
+        if target.startswith("("):
+            # #showStatsForQuery (ShowStatsRewrite.java handles both
+            # forms): compute the stats shape over the query result.
+            inner = target[1:-1] if target.endswith(")") else target[1:]
+            view = f"_show_stats_q_{os.getpid()}"
+            self.sql(inner).createOrReplaceTempView(view)
+            return infoschema.show_stats(self.spark, view)
+        return infoschema.show_stats(self.spark, target.strip('"'), cache=self._stats_cache)
+
+    def _analyze(self, text: str) -> DataFrame:
+        # ANALYZE <table> (grammar SqlBase.g4; AnalyzeTask.java + connector
+        # collectStatistics): run the one-pass stats aggregation now and
+        # persist it on the engine — subsequent SHOW STATS serve the
+        # collected statistics without a scan.
+        tbl = text.split()[1].strip('"').split(".")[-1].lower()
+        self._stats_cache.pop(tbl, None)
+        n = infoschema.show_stats(self.spark, tbl, cache=self._stats_cache, populate=True).where(
+            "column_name IS NULL"
+        ).collect()[0].row_count
+        return rows_result(self.spark, [(tbl, int(n or 0))], "table_name: string, rows: bigint")
+
+    def _prepared_params(self, text: str) -> tuple[str, int]:
+        """DESCRIBE INPUT|OUTPUT name: the prepared statement and its
+        number of `?` parameters."""
+        name = text.split()[2].upper()
+        if name not in self.prepared:
+            raise ValueError(f"prepared statement not found: {name}")
+        stmt = self.prepared[name]
+        return stmt, sum(1 for t in tokenize(stmt) if t.is_sym("?"))
+
+    def _describe_output(self, text: str) -> DataFrame:
+        stmt, n = self._prepared_params(text)
+        schema = self.spark.sql(translate(_prep.bind(stmt, ["NULL"] * n))).schema
+        return rows_result(
+            self.spark,
+            [(f.name, f.dataType.simpleString()) for f in schema],
+            "column_name string, type string",
+        )
+
+    def _describe_input(self, text: str) -> DataFrame:
+        n = self._prepared_params(text)[1]
+        return rows_result(self.spark, [(i, "unknown") for i in range(n)], "position int, type string")
+
+    def _show(self, shown: str | None, text: str) -> DataFrame:
+        # SHOW TABLES/COLUMNS/... and DESCRIBE t: a SELECT over
+        # information_schema (infoschema.SHOWS), dispatched like any other
+        # statement (ShowQueriesRewrite.java); another DESCRIBE form is
+        # Spark's.
+        return self.sql(shown) if shown is not None else self.spark.sql(translate(text))
 
     def register_table_function(self, name: str, handler: type, return_type: str) -> None:
         """Register a custom PTF (Python UDTF) callable as TABLE(name(...))
@@ -866,11 +800,7 @@ class TrinoEngine:
         the name at the STORED data (RefreshMaterializedViewOperator).
         Captures a fingerprint of every referenced source table so
         freshness can be decided later without re-running the view."""
-        import datetime
-        import os
-
-        repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-        path = os.path.join(repo, "spark-warehouse", "mv", name)
+        path = os.path.join(_MV_DIR, name)
         df = self.sql(self.materialized_views[name])
         df.write.mode("overwrite").parquet(path)
         stored = read_parquet(self.spark, path)
@@ -878,7 +808,7 @@ class TrinoEngine:
         self._stats_cache.pop(name, None)  # new data, stale stats
         self._mv_meta[name] = {
             "sources": self._mv_source_fingerprints(self.materialized_views[name]),
-            "last_fresh_time": datetime.datetime.now(datetime.timezone.utc).isoformat(),
+            "last_fresh_time": _now().isoformat(),
         }
         return stored.count()
 
@@ -887,11 +817,6 @@ class TrinoEngine:
         reads (tokenizer.structure). None = a source whose snapshot we
         cannot observe (jdbc, temp views) -> freshness UNKNOWN rather
         than a false FRESH."""
-        import os
-
-        from trino_spark.dialect.tokenizer import structure, tokenize
-
-        repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
         out: dict[str, str | None] = {}
         for ref in structure(tokenize(defn)).relations:
             if not ref.read or ref.shadowed:
@@ -901,7 +826,7 @@ class TrinoEngine:
             if src is not None and src.format != "jdbc" and src.path:
                 out[name] = self._fs_fingerprint(src.path)
             elif name in self.materialized_views:
-                out[name] = self._fs_fingerprint(os.path.join(repo, "spark-warehouse", "mv", name))
+                out[name] = self._fs_fingerprint(os.path.join(_MV_DIR, name))
             else:
                 out[name] = None
         return out
@@ -911,7 +836,6 @@ class TrinoEngine:
         """Stable digest of (relative path, size, mtime_ns) for every file
         under `path` — the parquet-dir analog of a lakehouse snapshot id."""
         import hashlib
-        import os
 
         if not path or not os.path.exists(path):
             return None
@@ -1003,3 +927,100 @@ class TrinoEngine:
             # py4j tree-walk is best-effort; the executed plan string still
             # reflects the AQE-final shape
             return plan.toString()
+
+
+def session_assignment(text: str) -> tuple[str, str]:
+    """`SET SESSION k = v` -> (k, v): the value the engine records, which
+    the HTTP server also hands back to the client."""
+    key, _, val = text.split(None, 2)[2].partition("=")
+    return key.strip(), val.strip().strip("'")
+
+
+# Every statement kind that is not a query, by its head (tokenizer.head):
+# the function that runs it, and whether access.enforce checks it first.
+# The longest head a statement starts with wins. An unchecked statement
+# runs before infoschema.resolve and access.enforce: the prepared-statement
+# and routine statements, whose inner statements are dispatched (and
+# checked) on their own, and the role, grant, comment and CALL statements.
+_STATEMENTS: dict[str, tuple[Callable[[TrinoEngine, str], DataFrame], bool]] = {
+    "WITH FUNCTION": (TrinoEngine._with_function, False),
+    "PREPARE": (TrinoEngine._prepare, False),
+    "DEALLOCATE": (TrinoEngine._deallocate, False),
+    "EXECUTE": (TrinoEngine._execute, False),
+    "EXECUTE IMMEDIATE": (TrinoEngine._execute_immediate, False),
+    "CREATE FUNCTION": (TrinoEngine._create_function, False),
+    "CREATE OR REPLACE FUNCTION": (TrinoEngine._create_function, False),
+    "DROP FUNCTION": (TrinoEngine._drop_function, False),
+    "SHOW CREATE FUNCTION": (TrinoEngine._show_create_function, False),
+    "SET PATH": (TrinoEngine._set_path, False),
+    "CREATE ROLE": (_access.create_role, False),
+    "DROP ROLE": (_access.drop_role, False),
+    "SET ROLE": (_access.set_role, False),
+    "SHOW ROLES": (_access.show_roles, False),
+    "SHOW CURRENT ROLES": (_access.show_current_roles, False),
+    "SHOW ROLE GRANTS": (_access.show_role_grants, False),
+    "SHOW GRANTS": (_access.show_grants, False),
+    "GRANT": (_access.grant, False),
+    "REVOKE": (_access.revoke, False),
+    "DENY": (_access.deny, False),
+    "COMMENT ON TABLE": (_access.comment_on_table, False),
+    "COMMENT ON COLUMN": (_access.comment_on_column, False),
+    "CALL": (_access.call, False),
+    "CREATE BRANCH": (_branches.create_branch, True),
+    "CREATE OR REPLACE BRANCH": (_branches.create_branch, True),
+    "DROP BRANCH": (_branches.drop_branch, True),
+    "ALTER BRANCH": (_branches.fast_forward, True),
+    "SHOW BRANCHES": (_branches.show_branches, True),
+    **dict.fromkeys(
+        ("INSERT INTO", "DELETE FROM", "UPDATE", "MERGE INTO", "TRUNCATE TABLE", "DROP TABLE"),
+        (TrinoEngine._write, True),
+    ),
+    "CREATE TABLE": (TrinoEngine._create_table, True),
+    "ALTER TABLE": (_dml.alter_table, True),
+    "SHOW CREATE TABLE": (TrinoEngine._show_create_table, True),
+    "CREATE VIEW": (_dml.create_view, True),
+    "CREATE OR REPLACE VIEW": (_dml.create_view, True),
+    "DROP VIEW": (_dml.drop_view, True),
+    "ALTER VIEW": (_dml.alter_view, True),
+    "SHOW CREATE VIEW": (_dml.show_create_view, True),
+    "CREATE MATERIALIZED VIEW": (TrinoEngine._create_mv, True),
+    "CREATE OR REPLACE MATERIALIZED VIEW": (TrinoEngine._create_mv, True),
+    "REFRESH MATERIALIZED VIEW": (TrinoEngine._refresh_mv, True),
+    "DROP MATERIALIZED VIEW": (TrinoEngine._drop_mv, True),
+    "ALTER MATERIALIZED VIEW": (_dml.alter_materialized_view, True),
+    "SHOW MATERIALIZED VIEWS": (TrinoEngine._show_mvs, True),
+    "SHOW CREATE MATERIALIZED VIEW": (TrinoEngine._show_create_mv, True),
+    "CREATE SCHEMA": (_dml.create_schema, True),
+    "DROP SCHEMA": (_dml.drop_schema, True),
+    "ALTER SCHEMA": (_dml.alter_schema, True),
+    "SHOW CREATE SCHEMA": (_dml.show_create_schema, True),
+    "CREATE CATALOG": (_cats.create_catalog, True),
+    "DROP CATALOG": (_cats.drop_catalog, True),
+    "SHOW SESSION": (TrinoEngine._show_session, True),
+    "SET SESSION": (TrinoEngine._set_session, True),
+    "RESET SESSION": (TrinoEngine._reset_session, True),
+    "SET SESSION AUTHORIZATION": (TrinoEngine._set_authorization, True),
+    "RESET SESSION AUTHORIZATION": (TrinoEngine._reset_authorization, True),
+    "SET TIME ZONE": (TrinoEngine._set_time_zone, True),
+    "USE": (TrinoEngine._use, True),
+    "START TRANSACTION": (TrinoEngine._start_transaction, True),
+    "COMMIT": (TrinoEngine._commit, True),
+    "ROLLBACK": (TrinoEngine._rollback, True),
+    "SHOW FUNCTIONS": (TrinoEngine._show_functions, True),
+    "SHOW STATS FOR": (TrinoEngine._show_stats, True),
+    "ANALYZE": (TrinoEngine._analyze, True),
+    "EXPLAIN": (TrinoEngine._explain_statement, True),
+    "DESCRIBE OUTPUT": (TrinoEngine._describe_output, True),
+    "DESCRIBE INPUT": (TrinoEngine._describe_input, True),
+    **{h: (lambda e, s, f=f: e._show(f(s), s), True) for h, f in infoschema.SHOWS.items()},
+}
+
+
+def _statement(words: list[str]) -> tuple[Callable[[TrinoEngine, str], DataFrame] | None, bool]:
+    """The _STATEMENTS entry of the longest head `words` start with;
+    (None, True) for a query."""
+    for k in range(len(words), 0, -1):
+        entry = _STATEMENTS.get(" ".join(words[:k]))
+        if entry is not None:
+            return entry
+    return None, True

@@ -14,16 +14,15 @@ analyzing bound parameters as expressions.
 
 from __future__ import annotations
 
-from trino_spark.dialect.tokenizer import Tok, next_code, render, split_args, tokenize
+from trino_spark.dialect.tokenizer import Tok, head, lead, next_code, render, split_args, tokenize
 
 
 def parse_prepare(sql: str) -> tuple[str, str] | None:
     """PREPARE name FROM <statement> -> (NAME, statement_text), else None."""
     toks = tokenize(sql)
-    i = next_code(toks, 0)
-    if i >= len(toks) or not toks[i].is_word("PREPARE"):
+    if head(toks)[:1] != ["PREPARE"]:
         return None
-    i = next_code(toks, i + 1)
+    i = next_code(toks, lead(toks) + 1)
     name = toks[i].text.upper()
     i = next_code(toks, i + 1)
     if i >= len(toks) or not toks[i].is_word("FROM"):
@@ -37,13 +36,9 @@ def parse_prepare(sql: str) -> tuple[str, str] | None:
 def parse_execute_immediate(sql: str) -> tuple[str, list[str]] | None:
     """EXECUTE IMMEDIATE 'stmt' [USING ...] -> (stmt_text, args), else None."""
     toks = tokenize(sql)
-    i = next_code(toks, 0)
-    if i >= len(toks) or not toks[i].is_word("EXECUTE"):
+    if head(toks)[:2] != ["EXECUTE", "IMMEDIATE"]:
         return None
-    i = next_code(toks, i + 1)
-    if i >= len(toks) or not toks[i].is_word("IMMEDIATE"):
-        return None
-    i = next_code(toks, i + 1)
+    i = next_code(toks, next_code(toks, lead(toks) + 1) + 1)
     if i >= len(toks) or toks[i].kind != "STR":
         raise ValueError("EXECUTE IMMEDIATE: expected a string literal statement")
     stmt = toks[i].text[1:-1].replace("''", "'")
@@ -66,10 +61,9 @@ def _using_args(toks: list[Tok], using_i: int) -> list[str]:
 def parse_execute(sql: str) -> tuple[str, list[str]] | None:
     """EXECUTE name [USING expr, ...] -> (NAME, [expr_text, ...]), else None."""
     toks = tokenize(sql)
-    i = next_code(toks, 0)
-    if i >= len(toks) or not toks[i].is_word("EXECUTE"):
+    if head(toks)[:1] != ["EXECUTE"]:
         return None
-    i = next_code(toks, i + 1)
+    i = next_code(toks, lead(toks) + 1)
     name = toks[i].text.upper()
     i = next_code(toks, i + 1)
     if i >= len(toks) or not toks[i].is_word("USING"):
@@ -80,10 +74,9 @@ def parse_execute(sql: str) -> tuple[str, list[str]] | None:
 def parse_deallocate(sql: str) -> str | None:
     """DEALLOCATE PREPARE name -> NAME, else None."""
     toks = tokenize(sql)
-    i = next_code(toks, 0)
-    if i >= len(toks) or not toks[i].is_word("DEALLOCATE"):
+    if head(toks)[:1] != ["DEALLOCATE"]:
         return None
-    i = next_code(toks, i + 1)
+    i = next_code(toks, lead(toks) + 1)
     if i < len(toks) and toks[i].is_word("PREPARE"):
         i = next_code(toks, i + 1)
     return toks[i].text.upper()

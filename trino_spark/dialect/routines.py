@@ -25,7 +25,7 @@ import re as _re
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from trino_spark.dialect.tokenizer import Tok, match_paren, next_code, render, split_args, tokenize
+from trino_spark.dialect.tokenizer import Tok, head, lead, match_paren, next_code, render, split_args, tokenize
 
 _MAX_EXPANSION_DEPTH = 10
 
@@ -63,25 +63,10 @@ def parse_create_function(sql: str) -> Routine | PythonRoutine | None:
     routine_body.compile_to_expression) come back as macro `Routine`s;
     loop bodies and Python functions come back as `PythonRoutine`s."""
     toks = tokenize(sql)
-    i = next_code(toks, 0)
-    if i >= len(toks) or not toks[i].is_word("CREATE"):
+    words = head(toks)
+    if words[:2] != ["CREATE", "FUNCTION"] and words[:4] != ["CREATE", "OR", "REPLACE", "FUNCTION"]:
         return None
-    i = next_code(toks, i + 1)
-    if i < len(toks) and toks[i].is_word("OR"):
-        i = next_code(toks, i + 1)  # REPLACE
-        i = next_code(toks, i + 1)
-    if i >= len(toks) or not toks[i].is_word("FUNCTION"):
-        return None
-
-    # name: possibly catalog.schema.name — keep the last identifier.
-    i = next_code(toks, i + 1)
-    name = toks[i].text
-    j = next_code(toks, i + 1)
-    while j < len(toks) and toks[j].is_sym("."):
-        j = next_code(toks, j + 1)
-        name = toks[j].text
-        j = next_code(toks, j + 1)
-    name = name.upper()
+    name, j = _routine_name(toks, words.index("FUNCTION") + 1)
 
     if j >= len(toks) or not toks[j].is_sym("("):
         raise ValueError(f"CREATE FUNCTION {name}: expected parameter list")
@@ -154,15 +139,18 @@ def parse_create_function(sql: str) -> Routine | PythonRoutine | None:
 def parse_drop_function(sql: str) -> str | None:
     """DROP FUNCTION [IF EXISTS] name -> upper-cased name, else None."""
     toks = tokenize(sql)
-    i = next_code(toks, 0)
-    if i >= len(toks) or not toks[i].is_word("DROP"):
+    words = head(toks)
+    if words[:2] != ["DROP", "FUNCTION"]:
         return None
-    i = next_code(toks, i + 1)
-    if i >= len(toks) or not toks[i].is_word("FUNCTION"):
-        return None
-    i = next_code(toks, i + 1)
-    if i < len(toks) and toks[i].is_word("IF"):
-        i = next_code(toks, i + 1)  # EXISTS
+    return _routine_name(toks, 4 if words[2:4] == ["IF", "EXISTS"] else 2)[0]
+
+
+def _routine_name(toks: list[Tok], skip: int) -> tuple[str, int]:
+    """The upper-cased routine name after the statement's first `skip`
+    words (of catalog.schema.name, the last part), and the index of the
+    token after it."""
+    i = lead(toks)
+    for _ in range(skip):
         i = next_code(toks, i + 1)
     name = toks[i].text
     j = next_code(toks, i + 1)
@@ -170,7 +158,7 @@ def parse_drop_function(sql: str) -> str | None:
         j = next_code(toks, j + 1)
         name = toks[j].text
         j = next_code(toks, j + 1)
-    return name.upper()
+    return name.upper(), j
 
 
 def expand(sql: str, routines: dict[str, Routine]) -> str:

@@ -112,6 +112,25 @@ def prev_code(toks: list[Tok], i: int) -> int:
     return i
 
 
+def lead(toks: list[Tok]) -> int:
+    """Index of a statement's first keyword: past whitespace, comments and '('."""
+    i = next_code(toks, 0)
+    while i < len(toks) and toks[i].is_sym("("):
+        i = next_code(toks, i + 1)
+    return i
+
+
+def head(toks: list[Tok]) -> list[str]:
+    """A statement's leading words (at most six), upper-cased, from its first
+    keyword to the first token that is not a word: its kind, for dispatch."""
+    words: list[str] = []
+    i = lead(toks)
+    while i < len(toks) and toks[i].kind == "WORD" and len(words) < 6:
+        words.append(toks[i].text.upper())
+        i = next_code(toks, i + 1)
+    return words
+
+
 def match_paren(toks: list[Tok], open_i: int) -> int:
     """Given index of '(', return index of its matching ')'."""
     depth = 0

@@ -8,7 +8,7 @@ them before planning (core/trino-main/.../sql/rewrite/
 ShowQueriesRewrite.java). Same here: TABLES maps each dotted name to a
 schema and a row builder, `resolve` points every relation reference to
 one at a temp view built from the live engine when a statement names it,
-and `rewrite_show` turns SHOW into SELECTs over those names.
+and `SHOWS` turns SHOW into SELECTs over those names.
 """
 
 from __future__ import annotations
@@ -236,32 +236,36 @@ def resolve(engine, sql: str) -> str:
     return render(toks)
 
 
-def rewrite_show(sql: str) -> str | None:
-    """SHOW TABLES / SCHEMAS / CATALOGS [LIKE p] / COLUMNS FROM t and
-    DESCRIBE t → SELECTs over TABLES; None when `sql` is none of them. The
-    builders emit rows in listing order, so no ORDER BY is needed and the
-    SELECT plans as a LocalRelation (a Sort would run a Spark job)."""
-    words = sql.strip().rstrip(";").split()
-    if len(words) == 2 and words[0].upper() == "DESCRIBE":
-        words = ["SHOW", "COLUMNS", "FROM", words[1]]
-    if not words or words[0].upper() != "SHOW":
+def _show_columns(m: re.Match | None) -> str | None:
+    if m is None:
         return None
-    kind = words[1].upper() if len(words) > 1 else ""
-    if kind == "TABLES":
-        return "SELECT table_name FROM information_schema.tables"
-    if kind == "SCHEMAS":
-        return "SELECT schema_name FROM information_schema.schemata"
-    if kind == "CATALOGS":
-        like = re.search(r"\bLIKE\s+('(?:[^']|'')*')", sql, re.IGNORECASE)
-        where = f" WHERE catalog_name LIKE {like.group(1)}" if like else ""
-        return f"SELECT catalog_name AS catalog FROM system.metadata.catalogs{where}"
-    if kind == "COLUMNS" and len(words) >= 4 and words[2].upper() in ("FROM", "IN"):
-        t = words[3].strip('"')
-        return (
-            "SELECT column_name, data_type, ordinal_position "
-            f"FROM information_schema.columns WHERE table_name = '{t}'"
-        )
-    return None
+    t = m.group(1).strip('"')
+    return (
+        "SELECT column_name, data_type, ordinal_position "
+        f"FROM information_schema.columns WHERE table_name = '{t}'"
+    )
+
+
+def _catalogs(text: str) -> str:
+    like = re.search(r"\bLIKE\s+('(?:[^']|'')*')", text, re.IGNORECASE)
+    where = f" WHERE catalog_name LIKE {like.group(1)}" if like else ""
+    return f"SELECT catalog_name AS catalog FROM system.metadata.catalogs{where}"
+
+
+# SHOW TABLES / SCHEMAS / CATALOGS [LIKE p] / COLUMNS FROM t and DESCRIBE t
+# as SELECTs over TABLES, by statement head: each maps the statement text
+# to its SELECT, or None for a form it does not answer. The builders emit
+# rows in listing order, so no ORDER BY is needed and the SELECT plans as
+# a LocalRelation (a Sort would run a Spark job).
+SHOWS: dict[str, Callable[[str], str | None]] = {
+    "SHOW TABLES": lambda text: "SELECT table_name FROM information_schema.tables",
+    "SHOW SCHEMAS": lambda text: "SELECT schema_name FROM information_schema.schemata",
+    "SHOW CATALOGS": _catalogs,
+    "SHOW COLUMNS": lambda text: _show_columns(
+        re.match(r"SHOW\s+COLUMNS\s+(?:FROM|IN)\s+(\S+)", text, re.IGNORECASE)
+    ),
+    "DESCRIBE": lambda text: _show_columns(re.fullmatch(r"DESCRIBE\s+(\S+)", text, re.IGNORECASE)),
+}
 
 
 def show_stats(spark: SparkSession, table: str, cache: dict | None = None, populate: bool = False):

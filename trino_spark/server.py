@@ -183,21 +183,16 @@ class TrinoHttpServer:
         # properties / prepared statements / SET SESSION statements)
         # mutates shared engine state — see _submit.
         self._state_mutex = threading.RLock()
+        # Spooled segments served so far and segment counts, per query.
+        self._spool_served: dict[str, set] = {}
+        self._spool_counts: dict[str, int] = {}
         outer = self
 
         class Handler(BaseHTTPRequestHandler):
             def log_message(self, *a):  # silence request logging
                 pass
 
-            def _send(self, code: int, payload: dict):
-                body = json.dumps(payload).encode()
-                self.send_response(code)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-
-            def _send_h(self, code: int, payload: dict, headers: dict | None = None):
+            def _send(self, code: int, payload: dict, headers: dict | None = None):
                 body = json.dumps(payload).encode()
                 self.send_response(code)
                 self.send_header("Content-Type", "application/json")
@@ -218,15 +213,16 @@ class TrinoHttpServer:
                     sql,
                     spooled="spooled" in enc,
                     encoding=outer._negotiate_encoding(enc),
-                    session=outer._parse_session_header(
-                        self.headers.get("X-Trino-Session", "")
-                    ),
+                    session=outer._parse_header(self.headers.get("X-Trino-Session", "")),
                     user=self.headers.get("X-Trino-User", "trino"),
-                    prepared=outer._parse_prepared_header(
-                        self.headers.get("X-Trino-Prepared-Statement", "")
-                    ),
+                    prepared={
+                        k.upper(): v
+                        for k, v in outer._parse_header(
+                            self.headers.get("X-Trino-Prepared-Statement", "")
+                        ).items()
+                    },
                 )
-                self._send_h(200, resp, resp.pop("_http_headers", None))
+                self._send(200, resp, resp.pop("_http_headers", None))
 
             def do_GET(self):
                 parts = self.path.strip("/").split("/")
@@ -387,11 +383,8 @@ class TrinoHttpServer:
                 }
             )
         st.rows = []
-        if not hasattr(self, "_spool_served"):
-            self._spool_served: dict[str, set] = {}
-            self._spool_counts: dict[str, int] = {}
-        self._spool_served[qid_ := st.qid] = set()
-        self._spool_counts[qid_] = len(st.segments)
+        self._spool_served[st.qid] = set()
+        self._spool_counts[st.qid] = len(st.segments)
 
     def _segment(self, qid: str, seg: str) -> bytes | None:
         import os
@@ -402,7 +395,7 @@ class TrinoHttpServer:
                 body = fh.read()
         except (OSError, ValueError):
             return None
-        served = getattr(self, "_spool_served", {}).get(qid)
+        served = self._spool_served.get(qid)
         if served is not None:
             served.add(int(seg))
             if len(served) >= self._spool_counts.get(qid, 0):
@@ -437,87 +430,59 @@ class TrinoHttpServer:
 
     # -- session properties over headers ------------------------------------
     @staticmethod
-    def _parse_session_header(header: str) -> dict[str, str]:
-        """X-Trino-Session: k=urlencoded_v,k2=... (ProtocolHeaders
-        requestSession) — the client-side session state carried on every
-        request. Values are URL-encoded (as in the reference client) so a
-        value containing ',' or '=' survives the comma-joined header."""
-        import urllib.parse
-
-        props: dict[str, str] = {}
-        for part in header.split(","):
-            part = part.strip()
-            if part and "=" in part:
-                k, _, v = part.partition("=")
-                props[k.strip()] = urllib.parse.unquote_plus(v.strip())
-        return props
-
-    @staticmethod
-    def _parse_prepared_header(header: str) -> dict[str, str]:
-        """X-Trino-Prepared-Statement: name=urlencoded_sql,... — the
-        client-held prepared statements (ProtocolHeaders
-        requestPreparedStatement; the reference server is stateless, so
-        clients re-send definitions on every request)."""
+    def _parse_header(header: str) -> dict[str, str]:
+        """k=urlencoded_v,k2=... — the client-held state carried on every
+        request (ProtocolHeaders requestSession / requestPreparedStatement;
+        the reference server is stateless). Values are URL-encoded (as in
+        the reference client) so a value containing ',' or '=' survives the
+        comma-joined header."""
         import urllib.parse
 
         out: dict[str, str] = {}
         for part in header.split(","):
-            part = part.strip()
-            if part and "=" in part:
-                k, _, v = part.partition("=")
-                out[k.strip().upper()] = urllib.parse.unquote_plus(v.strip())
+            k, eq, v = part.strip().partition("=")
+            if eq:
+                out[k.strip()] = urllib.parse.unquote_plus(v.strip())
         return out
 
     def _session_response_headers(self, sql: str) -> dict:
         """SET/RESET SESSION statements answer with X-Trino-Set-Session /
         X-Trino-Clear-Session so the CLIENT carries the state forward
-        (QueryResource / ProtocolHeaders.responseSetSession semantics)."""
+        (QueryResource / ProtocolHeaders.responseSetSession semantics);
+        PREPARE, DEALLOCATE PREPARE and USE likewise. The statement's kind
+        is read from its head, as the engine reads it."""
         import urllib.parse
 
-        toks = sql.strip().split()
-        up = [t.upper() for t in toks[:3]]
-        if (
-            up[:2] == ["SET", "SESSION"]
-            and len(toks) >= 3
-            and up[2] != "AUTHORIZATION"
-            and "=" in " ".join(toks[2:])
-        ):
-            key, _, val = " ".join(toks[2:]).partition("=")
-            # mirror the engine's own value normalization (engine.py SET
-            # SESSION path) so the client re-sends EXACTLY the stored value;
-            # URL-encode so ',' / '=' in the value survive the header.
-            val = val.strip().strip("'")
-            return {
-                "X-Trino-Set-Session": f"{key.strip()}={urllib.parse.quote_plus(val)}"
-            }
-        if (
-            up[:2] == ["RESET", "SESSION"]
-            and len(toks) >= 3
-            and up[2] != "AUTHORIZATION"
-        ):
-            return {"X-Trino-Clear-Session": toks[2]}
-        if up[:1] == ["PREPARE"] and len(toks) >= 4:
+        from trino_spark.dialect import prepared as _prep
+        from trino_spark.dialect.engine import session_assignment
+        from trino_spark.dialect.tokenizer import head, lead, render, tokenize
+
+        toks = tokenize(sql)
+        words = head(toks)
+        text = render(toks[lead(toks) :]).strip().rstrip(";")
+        kind = " ".join(words[:2])
+        if kind == "SET SESSION" and words[2:3] != ["AUTHORIZATION"] and "=" in text:
+            # the engine's own key and value (engine.session_assignment),
+            # so the client re-sends EXACTLY the stored value; URL-encoded
+            # so ',' / '=' in the value survive the header.
+            key, val = session_assignment(text)
+            return {"X-Trino-Set-Session": f"{key}={urllib.parse.quote_plus(val)}"}
+        if kind == "RESET SESSION" and words[2:3] != ["AUTHORIZATION"] and len(text.split()) > 2:
+            return {"X-Trino-Clear-Session": text.split()[2]}
+        if words[:1] == ["PREPARE"]:
             # PREPARE name FROM stmt → X-Trino-Added-Prepare so the CLIENT
             # holds the definition (responseAddedPrepare).
-            import urllib.parse
-
-            from trino_spark.dialect import prepared as _prep
-
             try:
-                parsed = _prep.parse_prepare(sql)
-            except ValueError:
-                parsed = None
-            if parsed:
-                name, body = parsed
-                return {
-                    "X-Trino-Added-Prepare": f"{name.lower()}={urllib.parse.quote_plus(body)}"
-                }
-        if up[:2] == ["DEALLOCATE", "PREPARE"] and len(toks) == 3:
-            return {"X-Trino-Deallocated-Prepare": toks[2].lower()}
-        if up[:1] == ["USE"] and len(toks) == 2:
+                name, body = _prep.parse_prepare(text)
+            except (ValueError, IndexError):
+                return {}
+            return {"X-Trino-Added-Prepare": f"{name.lower()}={urllib.parse.quote_plus(body)}"}
+        if kind == "DEALLOCATE PREPARE" and len(text.split()) == 3:
+            return {"X-Trino-Deallocated-Prepare": text.split()[2].lower()}
+        if words[:1] == ["USE"] and len(text.split()) == 2:
             # USE [catalog.]schema answers X-Trino-Set-Catalog/Schema
             # (UseTask.java + ProtocolHeaders.responseSetCatalog/Schema).
-            target = toks[1].strip('"')
+            target = text.split()[1].strip('"')
             if "." in target:
                 cat, _, sch = target.partition(".")
                 return {"X-Trino-Set-Catalog": cat, "X-Trino-Set-Schema": sch}
