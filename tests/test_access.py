@@ -101,7 +101,10 @@ def test_infoschema_readable_under_role(engine):
 def test_drop_and_rename_take_a_managed_tables_comments(engine):
     def comments():
         rows = engine.sql("SELECT * FROM system.metadata.table_comments").collect()
-        return {(r.table_name, r.comment) for r in rows}, set(engine._acl["column_comments"])
+        names = {r.table_name for r in engine.sql("SHOW TABLES").collect()} & {"pc1", "pc2"}
+        return {(r.table_name, r.comment) for r in rows}, {
+            (t, r.Column) for t in names for r in engine.sql(f"DESCRIBE {t}").collect() if r.Comment
+        }
 
     engine.sql("CREATE TABLE pc1 AS SELECT 1 AS a")
     engine.sql("COMMENT ON TABLE pc1 IS 'old comment'")
@@ -129,6 +132,18 @@ def test_comments(engine):
     engine.sql("COMMENT ON TABLE nation IS NULL")
     rows = engine.sql("SELECT table_name FROM system.metadata.table_comments").collect()
     assert "nation" not in [r.table_name for r in rows]
+
+
+def test_comment_on_a_missing_target_is_refused(engine):
+    # CommentTask: TABLE_NOT_FOUND / COLUMN_NOT_FOUND, nothing stored
+    with pytest.raises(ValueError, match="table not found"):
+        engine.sql("COMMENT ON COLUMN nosuchtable.a IS 'ghost'")
+    with pytest.raises(ValueError, match="table not found"):
+        engine.sql("COMMENT ON TABLE nosuchtable IS 'ghost'")
+    with pytest.raises(ValueError, match="column not found"):
+        engine.sql("COMMENT ON COLUMN nation.nosuch IS 'ghost'")
+    rows = engine.sql("SELECT table_name FROM system.metadata.table_comments").collect()
+    assert "nosuchtable" not in [r.table_name for r in rows]
 
 
 class TestCallProcedures:

@@ -74,7 +74,7 @@ def test_show_tables_and_columns(spark, sf_dir):
     tables = [r.table_name for r in eng.sql("SHOW TABLES").collect()]
     assert "lineitem" in tables and "documents" in tables
     cols = eng.sql("SHOW COLUMNS FROM region").collect()
-    assert [c.column_name for c in cols] == ["r_regionkey", "r_name"]
+    assert [c.Column for c in cols] == ["r_regionkey", "r_name"]
     # information_schema is queryable directly too
     n = eng.sql(
         "SELECT count(*) AS c FROM information_schema_columns WHERE table_name = 'nation'"

@@ -308,6 +308,25 @@ class TestRoutineControlFlow:
         )
         assert eng.sql("SELECT rev('abc') AS r").collect()[0].r == "cba"
 
+    @pytest.mark.parametrize(
+        "returns, body, expected",
+        [
+            ("decimal(10,2)", "from decimal import Decimal\ndef f(x):\n    return Decimal('1.25')",
+             __import__("decimal").Decimal("1.25")),
+            ("timestamp", "import datetime\ndef f(x):\n    return datetime.datetime(2020, 1, 2, 3, 4, 5)",
+             __import__("datetime").datetime(2020, 1, 2, 3, 4, 5)),
+        ],
+        ids=["decimal", "timestamp"],
+    )
+    def test_language_python_return_type(self, spark, returns, body, expected):
+        # RETURNS is read as a Trino type: not a double for a decimal, not
+        # the text of a Java calendar for a timestamp
+        from trino_spark.dialect.engine import TrinoEngine
+
+        eng = TrinoEngine(spark)
+        eng.sql(f"CREATE FUNCTION pyret(x BIGINT) RETURNS {returns} LANGUAGE PYTHON AS $$\n{body}\n$$")
+        assert eng.sql("SELECT pyret(1) AS v").collect()[0].v == expected
+
     def test_drop_function_removes_python_routine(self, spark):
         from trino_spark.dialect.engine import TrinoEngine
 

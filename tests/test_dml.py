@@ -221,7 +221,7 @@ def test_show_create_materialized_view(engine):
 
 
 def test_describe_and_explain_types(engine):
-    cols = [r.column_name for r in engine.sql("DESCRIBE nation").collect()]
+    cols = [r.Column for r in engine.sql("DESCRIBE nation").collect()]
     assert cols == ["n_nationkey", "n_name", "n_regionkey"]
     assert "VALID" in engine.sql("EXPLAIN (TYPE VALIDATE) SELECT 1").collect()[0].query_plan
     logical = engine.sql("EXPLAIN (TYPE LOGICAL) SELECT count(*) FROM nation").collect()[0].query_plan
@@ -287,6 +287,58 @@ class TestDDL:
         assert engine.sql("SELECT x FROM ddl_b").collect()[0].x == 1
         engine.sql("DROP TABLE ddl_b")
 
+    def test_row_column_types(self, engine):
+        # a ROW column in CREATE TABLE and ADD COLUMN, shown in Trino's spelling
+        engine.sql("DROP TABLE IF EXISTS ddl_r")
+        engine.sql("CREATE TABLE ddl_r (k bigint, r row(x integer, y varchar))")
+        engine.sql("ALTER TABLE ddl_r ADD COLUMN s row(x integer, y varchar)")
+        engine.sql("INSERT INTO ddl_r (k, r) VALUES (1, ROW(2, 'b'))")
+        row = engine.sql("SELECT k, r.x AS x, r.y AS y, s FROM ddl_r").collect()[0]
+        assert (row.k, row.x, row.y, row.s) == (1, 2, "b", None)
+        described = [(r.Column, r.Type) for r in engine.sql("DESCRIBE ddl_r").collect()]
+        assert described == [
+            ("k", "bigint"), ("r", "row(x integer, y varchar)"), ("s", "row(x integer, y varchar)")
+        ]
+        engine.sql("DROP TABLE ddl_r")
+
+    def test_show_create_table_has_defaults_and_comments(self, engine):
+        engine.sql("DROP TABLE IF EXISTS ddl_sc")
+        engine.sql(
+            "CREATE TABLE ddl_sc (a bigint COMMENT 'the key', b varchar DEFAULT 'x')"
+            " COMMENT 'the table' WITH (format = 'PARQUET')"
+        )
+        ddl = engine.sql("SHOW CREATE TABLE ddl_sc").collect()[0].create_table
+        assert "a bigint COMMENT 'the key'" in ddl and "b varchar DEFAULT 'x'" in ddl
+        assert ")\nCOMMENT 'the table'\nWITH (" in ddl
+        engine.sql("DROP TABLE ddl_sc")
+
+    def test_column_comment_follows_rename_and_drop(self, engine):
+        engine.sql("DROP TABLE IF EXISTS ddl_cc")
+        engine.sql("CREATE TABLE ddl_cc AS SELECT 1 AS a, 2 AS b")
+        engine.sql("COMMENT ON COLUMN ddl_cc.a IS 'first'")
+        engine.sql("ALTER TABLE ddl_cc RENAME COLUMN a TO z")
+
+        def comments():
+            return {r.Column: r.Comment for r in engine.sql("DESCRIBE ddl_cc").collect()}
+
+        assert comments() == {"z": "first", "b": ""}
+        engine.sql("ALTER TABLE ddl_cc DROP COLUMN z")
+        engine.sql("ALTER TABLE ddl_cc ADD COLUMN z bigint")
+        assert comments() == {"b": "", "z": ""}
+        engine.sql("DROP TABLE ddl_cc")
+
+    def test_comment_in_a_rolled_back_transaction_is_gone(self, engine):
+        engine.sql("DROP TABLE IF EXISTS ddl_tc")
+        engine.sql("CREATE TABLE ddl_tc AS SELECT 1 AS a")
+        engine.sql("START TRANSACTION")
+        engine.sql("COMMENT ON COLUMN ddl_tc.a IS 'inside'")
+        engine.sql("COMMENT ON TABLE ddl_tc IS 'inside'")
+        engine.sql("ROLLBACK")
+        assert [r.Comment for r in engine.sql("DESCRIBE ddl_tc").collect()] == [""]
+        rows = engine.sql("SELECT table_name FROM system.metadata.table_comments").collect()
+        assert "ddl_tc" not in [r.table_name for r in rows]
+        engine.sql("DROP TABLE ddl_tc")
+
     def test_alter_guards(self, engine):
         engine.sql("DROP TABLE IF EXISTS ddl_g")
         engine.sql("CREATE TABLE ddl_g AS SELECT 1 AS only_col")
@@ -351,11 +403,26 @@ def test_view_over_system_table_keeps_its_text(engine):
         engine.sql("DROP VIEW sysq_v")
 
 
+def test_view_over_system_table_reads_live_rows(engine):
+    # the view re-resolves its definition on each read, as Trino does, and
+    # so does a view over it
+    engine.sql("CREATE OR REPLACE VIEW sysq_n AS SELECT count(*) AS n FROM system.runtime.queries")
+    engine.sql("CREATE OR REPLACE VIEW sysq_n2 AS SELECT n FROM sysq_n")
+    try:
+        for view in ("sysq_n", "sysq_n2"):
+            before = engine.sql(f"SELECT n FROM {view}").collect()[0].n
+            engine.sql("SELECT 1").collect()
+            assert engine.sql(f"SELECT n FROM {view}").collect()[0].n > before
+    finally:
+        engine.sql("DROP VIEW sysq_n2")
+        engine.sql("DROP VIEW sysq_n")
+
+
 def test_show_tables_reflects_ddl(engine):
     engine.sql("CREATE TABLE st_demo AS SELECT 1 AS x")
     names = {r.table_name for r in engine.sql("SHOW TABLES").collect()}
     assert "st_demo" in names and "nation" in names
-    cols = [r.column_name for r in engine.sql("SHOW COLUMNS FROM st_demo").collect()]
+    cols = [r.Column for r in engine.sql("SHOW COLUMNS FROM st_demo").collect()]
     assert cols == ["x"]
     engine.sql("DROP TABLE st_demo")
     names = {r.table_name for r in engine.sql("SHOW TABLES").collect()}

@@ -58,6 +58,19 @@ def test_loop_body_becomes_python_routine():
     assert r.fn(5) == 5 and r.fn(0) == 0
 
 
+def test_loop_body_decimal_result_has_the_declared_scale():
+    from decimal import Decimal
+
+    r = parse_create_function(
+        "CREATE FUNCTION f(n BIGINT) RETURNS DECIMAL(10,2) BEGIN "
+        "DECLARE i BIGINT DEFAULT 0; DECLARE s DOUBLE DEFAULT 0; "
+        "WHILE i < n DO SET i = i + 1; SET s = s + 1.125; END WHILE; RETURN s; END"
+    )
+    assert r.returns == "decimal(10,2)"
+    v = r.fn(3)
+    assert isinstance(v, Decimal) and str(v) == "3.38"
+
+
 def test_expand_nested_and_args():
     f = parse_create_function("CREATE FUNCTION area(w DOUBLE, h DOUBLE) RETURNS DOUBLE RETURN w * h")
     g = parse_create_function("CREATE FUNCTION twice(x DOUBLE) RETURNS DOUBLE RETURN area(x, 2.0)")

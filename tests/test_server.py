@@ -22,6 +22,14 @@ def test_submit_and_fetch(server):
     assert len(rows) == 5 and rows[0][0] == 0
 
 
+def test_column_types_in_trino_spelling(server):
+    cols, _rows = fetch_all(
+        server.url(),
+        "SELECT ARRAY['a'] AS a, CAST(ROW(1, 'a') AS row(x integer, y varchar)) AS r",
+    )
+    assert [c["type"] for c in cols] == ["array(varchar)", "row(x integer, y varchar)"]
+
+
 def test_trino_dialect_through_http(server):
     cols, rows = fetch_all(
         server.url(),

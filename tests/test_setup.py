@@ -165,11 +165,12 @@ def test_information_schema_read_after_insert_runs_no_job(fresh):
         assert _jobs(session) == before
         assert df.schema == StructType.fromDDL(
             "table_catalog string, table_schema string, table_name string,"
-            " column_name string, ordinal_position int, data_type string"
+            " column_name string, ordinal_position int, column_default string,"
+            " is_nullable string, data_type string"
         )
         assert rows == [
-            Row("spark", "default", "setup_info", "k", 1, "bigint"),
-            Row("spark", "default", "setup_info", "name", 2, "string"),
+            Row("spark", "default", "setup_info", "k", 1, None, "YES", "bigint"),
+            Row("spark", "default", "setup_info", "name", 2, None, "YES", "varchar"),
         ]
     finally:
         fresh.sql("DROP TABLE IF EXISTS setup_info")
@@ -196,7 +197,7 @@ def test_engine_set_up_like_the_server_has_information_schema(spark, sf_dir):
     eng.catalog.register_parquet_dir(sf_dir, ALL_TABLES)
     assert [r.table_name for r in eng.sql("SHOW TABLES").collect()] == sorted(ALL_TABLES)
     described = eng.sql("DESCRIBE nation").collect()
-    assert [r.column_name for r in described] == ["n_nationkey", "n_name", "n_regionkey"]
+    assert [r.Column for r in described] == ["n_nationkey", "n_name", "n_regionkey"]
     rows = eng.sql("SELECT table_name FROM information_schema.tables").collect()
     assert sorted(r.table_name for r in rows) == sorted(ALL_TABLES)
 
@@ -219,7 +220,7 @@ _PROPERTIES = (
 )
 _COLUMNS = (
     "table_catalog string, table_schema string, table_name string, column_name string,"
-    " ordinal_position int, data_type string"
+    " ordinal_position int, column_default string, is_nullable string, data_type string"
 )
 
 

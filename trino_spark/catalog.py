@@ -41,8 +41,20 @@ ALL_TABLES = TPCH_TABLES + EXTENSION_TABLES
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+@dataclass(kw_only=True)
+class Described:
+    """What a table's record says about it beyond its Spark schema, as the
+    reference's connector metadata holds it (ConnectorTableMetadata's
+    comment, each ColumnMetadata's default and comment). Readers get the
+    whole column record from infoschema.columns."""
+
+    comment: str | None = None
+    defaults: dict[str, str] = field(default_factory=dict)  # column -> SQL
+    comments: dict[str, str] = field(default_factory=dict)  # column -> text
+
+
 @dataclass
-class TableSource:
+class TableSource(Described):
     """One registered table: format + location + reader options."""
 
     name: str

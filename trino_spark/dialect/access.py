@@ -26,6 +26,7 @@ AccessDeniedException before execution).
 
 from __future__ import annotations
 
+import copy
 import re
 import threading
 import time
@@ -33,7 +34,7 @@ import time
 from pyspark.sql import DataFrame
 
 from trino_spark import infoschema
-from trino_spark.dialect.dml import rows_result
+from trino_spark.dialect.dml import _norm_name, _unquote, rows_result, txn_snapshot_if_needed
 from trino_spark.dialect.tokenizer import Tok, head, render, split_args, structure, tokenize
 
 _PRIVS = ("SELECT", "INSERT", "UPDATE", "DELETE")
@@ -209,15 +210,27 @@ def deny(engine, s: str) -> DataFrame:
     return rows_result(engine.spark, [(role, table)], "role: string, table_name: string")
 
 
+def _described(engine, table: str):
+    """The record that holds `table`'s comments (CommentTask.java: the
+    target must exist), pinned first inside a transaction so that
+    ROLLBACK puts it back."""
+    if table in engine.dml_tables:
+        txn_snapshot_if_needed(engine, table)
+        return engine.dml_tables[table]
+    src = engine.catalog._sources.get(table)
+    if src is None:
+        raise ValueError(f"table not found: {table}")
+    if engine._txn is not None:
+        engine._txn["sources"].setdefault(table, copy.deepcopy(src))
+    return src
+
+
 def comment_on_table(engine, s: str) -> DataFrame:
     m = re.match(r"COMMENT\s+ON\s+TABLE\s+([\w.\"]+)\s+IS\s+(?:'((?:[^']|'')*)'|(NULL))", s, re.IGNORECASE)
     if not m:
         raise ValueError(f"cannot parse COMMENT ON TABLE: {s[:80]}")
-    tbl = m.group(1).strip('"').split(".")[-1].lower()
-    if m.group(3):
-        engine._acl["table_comments"].pop(tbl, None)
-    else:
-        engine._acl["table_comments"][tbl] = m.group(2).replace("''", "'")
+    tbl = _norm_name(m.group(1))
+    _described(engine, tbl).comment = _unquote(m.group(2))
     return rows_result(engine.spark, [(tbl,)], "table: string")
 
 
@@ -227,12 +240,15 @@ def comment_on_column(engine, s: str) -> DataFrame:
     )
     if not m:
         raise ValueError(f"cannot parse COMMENT ON COLUMN: {s[:80]}")
-    key = (m.group(1).strip('"').split(".")[-1].lower(), m.group(2).lower())
+    tbl, col = _norm_name(m.group(1)), m.group(2).lower()
+    rec = _described(engine, tbl)
+    if col not in engine.spark.table(tbl).columns:
+        raise ValueError(f"column not found: {tbl}.{col}")
     if m.group(4):
-        engine._acl["column_comments"].pop(key, None)
+        rec.comments.pop(col, None)
     else:
-        engine._acl["column_comments"][key] = m.group(3).replace("''", "'")
-    return rows_result(engine.spark, [(f"{key[0]}.{key[1]}",)], "column: string")
+        rec.comments[col] = _unquote(m.group(3))
+    return rows_result(engine.spark, [(f"{tbl}.{col}",)], "column: string")
 
 
 def _privileges(engine, s: str, kw: str, to_kw: str) -> tuple[list[str], str, str]:

@@ -99,13 +99,13 @@ def create_branch(engine, stripped: str) -> DataFrame:
             raise ValueError(f"branch already exists: {branch}")
         _drop_fork(engine, table, branch)
     src = _branch(engine, table, (m.group("from") or "main").lower())
-    # a fork starts with its source's declared columns, layout and
-    # defaults, and its data as shared inodes: fork cost = metadata
+    # a fork starts with its source's declared columns, layout and column
+    # defaults and comments, and its data as shared inodes: fork cost = metadata
     fork = _clear(
         engine,
         ManagedTable(
-            fork_name(table.name, branch), src.columns, src.partition_by,
-            dict(src.defaults), base=table.name,
+            fork_name(table.name, branch), src.columns, src.partition_by, base=table.name,
+            defaults=dict(src.defaults), comments=dict(src.comments),
         ),
     )
     os.makedirs(fork.path)

@@ -57,8 +57,9 @@ import uuid
 from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.sql.types import StructType
 
-from trino_spark.catalog import read_parquet
-from trino_spark.dialect.tokenizer import head, lead, render, tokenize
+from trino_spark.catalog import Described, read_parquet
+from trino_spark.dialect.tokenizer import head, lead, render, split_commas, tokenize
+from trino_spark.dialect.types import spark_type
 from trino_spark.operators.merge import merge_into
 
 #: retained historical versions per table (current version excluded);
@@ -109,18 +110,18 @@ def _is_ctas(toks: list) -> bool:
 
 
 @dataclasses.dataclass
-class ManagedTable:
+class ManagedTable(Described):
     """One engine-managed table: what the reference keeps in a connector's
     table metadata (for Iceberg, one metadata file with the schema,
-    partition spec, properties, snapshot log and branch refs). The data
-    lives at `path`; each retired version under `snap_root`/vNNNNN. A
+    partition spec, properties, snapshot log and branch refs), plus the
+    comments and column defaults every table record has. The data lives
+    at `path`; each retired version under `snap_root`/vNNNNN. A
     branch fork is a record under its fork name whose `base` is the table
     it forks. Records live in ``engine.dml_tables``, in memory only."""
 
     name: str
     columns: list[str]  # the declared order; a hive layout reads partition columns last
     partition_by: list[str] | None = None
-    defaults: dict[str, str] = dataclasses.field(default_factory=dict)  # column -> SQL
     properties: dict[str, str] = dataclasses.field(default_factory=dict)
     # one entry per commit, oldest first: version, committed_at(_iso),
     # operation, that version's declared columns, and `expired` once pruned
@@ -218,26 +219,11 @@ def _discard(engine, name: str) -> None:
     shutil.rmtree(rec.path, ignore_errors=True)
     shutil.rmtree(rec.snap_root, ignore_errors=True)
     engine.spark.catalog.dropTempView(name)
-    _move_comments(engine, name, None)
     refresh_infoschema(engine, dropped=name)
 
 
-def _move_comments(engine, old: str, new: str | None) -> None:
-    """A managed table's table and column comments go with DROP (`new`
-    None) and move with RENAME TO. They live in the access state, which
-    holds the comments of catalog sources too."""
-    tables, cols = engine._acl["table_comments"], engine._acl["column_comments"]
-    text = tables.pop(old, None)
-    moved = {(new, c): cols.pop((t, c)) for t, c in list(cols) if t == old}
-    if new is not None:
-        cols.update(moved)
-        if text is not None:
-            tables[new] = text
-
-
 def _move(engine, old: str, new: str) -> ManagedTable:
-    """RENAME TO: the record, its data, its retired versions and its
-    comments move."""
+    """RENAME TO: the record, its data and its retired versions move."""
     txn_snapshot_if_needed(engine, old)
     rec = engine.dml_tables.pop(old)
     src, src_snaps = rec.path, rec.snap_root
@@ -249,7 +235,6 @@ def _move(engine, old: str, new: str) -> ManagedTable:
     engine.dml_tables[new] = rec
     engine.spark.catalog.dropTempView(old)
     _stored(engine, rec).createOrReplaceTempView(new)
-    _move_comments(engine, old, new)
     refresh_infoschema(engine, changed=new, dropped=old)
     return rec
 
@@ -656,7 +641,7 @@ def _update(engine, sql: str) -> DataFrame:
         )
     rec = _require_managed(engine, name)
     df = _stored(engine, rec)
-    assigns = _split_top_level(m.group(2), ",")
+    assigns = split_commas(m.group(2))
     pred = F.expr(_translate_fragment(engine, m.group(3))) if m.group(3) else F.lit(True)
     pred = F.coalesce(pred, F.lit(False))
     if rf_sql:
@@ -703,26 +688,6 @@ def _update(engine, sql: str) -> DataFrame:
         out = _project(df.observe(obs, n_expr))
         _commit(engine, rec, out, operation="update")
     return rows_result(engine.spark, int(obs.get["n"] or 0))
-
-
-def _split_top_level(text: str, sep: str) -> list[str]:
-    out, depth, cur, in_str = [], 0, [], False
-    for ch in text:
-        if ch == "'":
-            in_str = not in_str
-        if not in_str:
-            if ch in "([":
-                depth += 1
-            elif ch in ")]":
-                depth -= 1
-            elif ch == sep and depth == 0:
-                out.append("".join(cur).strip())
-                cur = []
-                continue
-        cur.append(ch)
-    if cur:
-        out.append("".join(cur).strip())
-    return [s for s in out if s]
 
 
 _MERGE_RE = re.compile(
@@ -820,7 +785,7 @@ def _merge(engine, sql: str) -> DataFrame:
         elif matched_kw == "MATCHED" and act_up.startswith("UPDATE"):
             update_cond = F.expr(sub(and_cond)) if and_cond else None
             update_set = {}
-            for a in _split_top_level(action.split(None, 2)[2], ","):
+            for a in split_commas(action.split(None, 2)[2]):
                 col, _, expr = a.partition("=")
                 update_set[_norm_name(col)] = F.expr(sub(expr))
         elif matched_kw == "NOT MATCHED" and act_up.startswith("INSERT"):
@@ -832,7 +797,7 @@ def _merge(engine, sql: str) -> DataFrame:
                 if im.group(1)
                 else [f.name for f in target.schema.fields]
             )
-            vals = _split_top_level(im.group(2), ",")
+            vals = split_commas(im.group(2))
             if len(cols) != len(vals):
                 raise ValueError("MERGE INSERT column/value count mismatch")
             insert_values = {c: F.expr(sub(v)) for c, v in zip(cols, vals)}
@@ -1052,17 +1017,16 @@ def resolve_time_travel(engine, sql: str) -> str:
 # the first change, a copy of the table's record and a hardlinked copy of
 # its current directory (metadata-only: the current directory must stay
 # readable because the mutating statement itself reads it lazily). ROLLBACK
-# puts both back, so data, snapshot log, layout, columns, defaults and
-# properties rewind together; COMMIT discards the pins. A lakehouse format
-# would pin the old snapshot id instead.
+# puts both back, so data, snapshot log, layout, columns, defaults,
+# comments and properties rewind together; COMMIT discards the pins. A
+# lakehouse format would pin the old snapshot id instead.
 
 
 def txn_begin(engine) -> None:
     if engine._txn is not None:
         raise ValueError("transaction already in progress (no nested transactions)")
-    # comments live in the access state; DROP and RENAME TO change them
-    comments = copy.deepcopy({k: engine._acl[k] for k in ("table_comments", "column_comments")})
-    engine._txn = {"pins": {}, "created": set(), "comments": comments}
+    # sources: each catalog source record a COMMENT changed, as it was before
+    engine._txn = {"pins": {}, "created": set(), "sources": {}}
 
 
 def txn_snapshot_if_needed(engine, name: str) -> None:
@@ -1096,7 +1060,7 @@ def txn_commit(engine) -> None:
 
 def txn_rollback(engine) -> None:
     txn = _txn_end(engine)
-    engine._acl.update(txn["comments"])
+    engine.catalog._sources.update(txn["sources"])
     tables = engine.dml_tables
     for name, (snap, live, pinned) in txn["pins"].items():
         cur = tables.get(name)
@@ -1304,7 +1268,8 @@ def create_view(engine, sql: str) -> DataFrame:
 
 def create_empty_table(engine, sql: str) -> DataFrame:
     m = re.match(
-        rf"CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?({_IDENT}(?:\.{_IDENT})*)\s*\((.*)\)\s*(?:WITH\s*\(.*\))?\s*$",
+        rf"CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?({_IDENT}(?:\.{_IDENT})*)\s*\((.*?)\)\s*"
+        r"(?:COMMENT\s+'((?:[^']|'')*)'\s*)?(?:WITH\s*\(.*\))?\s*$",
         sql,
         re.IGNORECASE | re.DOTALL,
     )
@@ -1315,38 +1280,39 @@ def create_empty_table(engine, sql: str) -> DataFrame:
         if re.search(r"IF\s+NOT\s+EXISTS", sql, re.IGNORECASE):
             return rows_result(engine.spark, 0)
         raise ValueError(f"table already exists: {name}")
-    cols, defaults = [], {}
-    for piece in _split_top_level(m.group(2), ","):
-        parts = piece.split(None, 1)
-        if len(parts) != 2:
-            raise ValueError(f"cannot parse column definition: {piece}")
-        col, typ = _norm_name(parts[0]), parts[1]
-        # DEFAULT expr: what a column-list INSERT fills in (as ALTER
-        # COLUMN SET DEFAULT sets it), not part of the stored type
-        dm = re.search(r"\s+DEFAULT\s+('(?:[^']|'')*'|[^\s']+)", typ, re.IGNORECASE)
-        if dm:
-            defaults[col], typ = dm.group(1), typ[: dm.start()] + typ[dm.end() :]
-        cols.append(f"{col} {_trino_type_to_spark(typ)}")
-    empty = rows_result(engine.spark, [], ", ".join(cols))
-    _commit(engine, _clear(engine, ManagedTable(name, empty.columns, defaults=defaults)), empty)
+    rec = ManagedTable(name, [], comment=_unquote(m.group(3)))
+    cols = [" ".join(_column_definition(rec, piece)) for piece in split_commas(m.group(2))]
+    _commit(engine, _clear(engine, rec), rows_result(engine.spark, [], ", ".join(cols)))
     return rows_result(engine.spark, 0)
 
 
-def _trino_type_to_spark(t: str) -> str:
-    t = t.strip().rstrip(",").lower()
-    t = re.sub(r"\bvarchar(\(\d+\))?", "string", t)
-    t = re.sub(r"\bchar\((\d+)\)", "string", t)
-    t = t.replace("varbinary", "binary").replace("real", "float")
-    t = re.sub(r"\binteger\b", "int", t)
-    # TIME WITH TIME ZONE: canonical-varchar carrier (functions/registry.py
-    # r5 batch); plain TIME emulated as nanos-of-day bigints.
-    t = re.sub(r"\btime(\(\d+\))?\s+with\s+time\s+zone\b", "string", t)
-    t = re.sub(r"\btime\b(\(\d+\))?", "bigint", t)
-    # timestamp precision: Spark timestamps are fixed µs — precisions > 6
-    # truncate (documented), the parenthesized form is not Spark DDL
-    t = re.sub(r"\btimestamp\(\d+\)(\s+with\s+time\s+zone)?", "timestamp", t)
-    t = re.sub(r"\btimestamp\s+with\s+time\s+zone\b", "timestamp", t)
-    return t
+# name type [DEFAULT expr] [NOT NULL] [COMMENT 'text'] [WITH (...)]
+# (grammar SqlBase.g4 columnDefinition); NOT NULL is accepted, not enforced
+_COLUMN_DEF = re.compile(
+    r"(\S+)\s+(.+?)(?:\s+DEFAULT\s+('(?:[^']|'')*'|[^\s']+))?(?:\s+NOT\s+NULL)?"
+    r"(?:\s+COMMENT\s+'((?:[^']|'')*)')?(?:\s+WITH\s*\(.*\))?\s*$",
+    re.IGNORECASE | re.DOTALL,
+)
+
+
+def _unquote(text: str | None) -> str | None:
+    """A SQL string literal's body ('' is one quote)."""
+    return None if text is None else text.replace("''", "'")
+
+
+def _column_definition(rec: ManagedTable, piece: str) -> tuple[str, str]:
+    """One column definition of CREATE TABLE or ADD COLUMN: its name and
+    Spark type. Its default (what a column-list INSERT fills in) and its
+    comment go on the table's record."""
+    m = _COLUMN_DEF.match(piece.strip())
+    if m is None:
+        raise ValueError(f"cannot parse column definition: {piece}")
+    col = _norm_name(m.group(1))
+    if m.group(3) is not None:
+        rec.defaults[col] = m.group(3)
+    if m.group(4) is not None:
+        rec.comments[col] = _unquote(m.group(4))
+    return col, spark_type(m.group(2))
 
 
 def alter_table(engine, sql: str) -> DataFrame:
@@ -1392,7 +1358,7 @@ def alter_table(engine, sql: str) -> DataFrame:
         am = re.match(
             r"ALTER\s+COLUMN\s+(\w+)\s+SET\s+DATA\s+TYPE\s+(.+)$", action, re.IGNORECASE
         )
-        col, typ = _norm_name(am.group(1)), _trino_type_to_spark(am.group(2))
+        col, typ = _norm_name(am.group(1)), spark_type(am.group(2))
         if col not in df.columns:
             raise ValueError(f"column not found: {col}")
         out = df.select(
@@ -1401,12 +1367,13 @@ def alter_table(engine, sql: str) -> DataFrame:
         _commit(engine, rec, out)
         return rows_result(engine.spark, 0)
     if au.startswith("ADD COLUMN"):
-        am = re.match(r"ADD\s+COLUMN\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s+(.+)$", action, re.IGNORECASE)
-        col, typ = _norm_name(am.group(1)), _trino_type_to_spark(am.group(2))
+        am = re.match(r"ADD\s+COLUMN\s+(IF\s+NOT\s+EXISTS\s+)?(.+)$", action, re.IGNORECASE | re.DOTALL)
+        col = _norm_name(am.group(2).split()[0])
         if col in df.columns:
-            if re.search(r"IF\s+NOT\s+EXISTS", action, re.IGNORECASE):
+            if am.group(1):
                 return rows_result(engine.spark, 0)
             raise ValueError(f"column already exists: {col}")
+        col, typ = _column_definition(rec, am.group(2))
         out = df.withColumn(col, F.lit(None).cast(typ))
     elif au.startswith("DROP COLUMN"):
         col = _norm_name(action.split()[2])
@@ -1417,7 +1384,8 @@ def alter_table(engine, sql: str) -> DataFrame:
         if col in (rec.partition_by or []):
             # Trino table formats reject this too (the layout references it)
             raise ValueError(f"cannot drop partition column: {col}")
-        rec.defaults.pop(col, None)
+        for facts in (rec.defaults, rec.comments):
+            facts.pop(col, None)
         out = df.drop(col)
     elif au.startswith("RENAME COLUMN"):
         am = re.match(r"RENAME\s+COLUMN\s+(\w+)\s+TO\s+(\w+)", action, re.IGNORECASE)
@@ -1427,8 +1395,9 @@ def alter_table(engine, sql: str) -> DataFrame:
         if old in (rec.partition_by or []):
             # keep the hive layout pointing at the renamed column
             rec.partition_by = [new if c == old else c for c in rec.partition_by]
-        if old in rec.defaults:
-            rec.defaults[new] = rec.defaults.pop(old)
+        for facts in (rec.defaults, rec.comments):
+            if old in facts:
+                facts[new] = facts.pop(old)
         out = df.withColumnRenamed(old, new)
     elif au.startswith("RENAME TO"):
         new = _norm_name(action.split()[2])

@@ -33,6 +33,7 @@ from trino_spark.dialect import routines as _routines_mod
 from trino_spark.dialect.dml import rows_result
 from trino_spark.dialect.rewrites import translate
 from trino_spark.dialect.tokenizer import head, lead, structure, tokenize
+from trino_spark.dialect.types import trino_type
 from trino_spark.functions import registry as _registry
 
 __all__ = ["QueryRecord", "QueryRegistry", "TrinoEngine", "translate"]
@@ -202,13 +203,11 @@ class TrinoEngine:
         # The session identity (SET SESSION AUTHORIZATION) and USE schema.
         self.session_user = "trino"
         self._current_schema = "default"
-        # Roles, grants, comments, row filters and column masks
-        # (dialect/access.py); no current role = the owner session.
+        # Roles, grants, row filters and column masks (dialect/access.py);
+        # no current role = the owner session.
         self._acl: dict = {
             "roles": {},  # role -> {(priv, table)}
             "current": None,
-            "table_comments": {},
-            "column_comments": {},  # (table, col) -> text
             "row_filters": {},  # (role, table) -> predicate SQL
             "column_masks": {},  # (role, table) -> {col: mask expr SQL}
         }
@@ -714,9 +713,7 @@ class TrinoEngine:
     def _show_create_table(self, text: str) -> DataFrame:
         # SHOW CREATE TABLE (ShowQueriesRewrite.java): rendered DDL.
         name = text.split()[3].strip('"').split(".")[-1].lower()
-        cols = ",\n   ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in self.spark.table(name).schema.fields
-        )
+        cols = ",\n   ".join(c.ddl for c in infoschema.columns(self, name))
         src = self.catalog._sources.get(name)
         rec = self.dml_tables.get(name)
         if rec is not None:
@@ -726,7 +723,10 @@ class TrinoEngine:
             with_props = f"\nWITH (\n   format = '{src.format.upper()}',\n   location = '{src.path}'\n)"
         else:
             with_props = ""
-        ddl = f"CREATE TABLE {name} (\n   {cols}\n){with_props}"
+        about, comment = rec or src, ""
+        if about is not None and about.comment is not None:
+            comment = f"\nCOMMENT {infoschema.quote(about.comment)}"
+        ddl = f"CREATE TABLE {name} (\n   {cols}\n){comment}{with_props}"
         return rows_result(self.spark, [(ddl,)], "create_table: string")
 
     def _show_create_mv(self, text: str) -> DataFrame:
@@ -773,20 +773,13 @@ class TrinoEngine:
         schema = self.spark.sql(translate(_prep.bind(stmt, ["NULL"] * n))).schema
         return rows_result(
             self.spark,
-            [(f.name, f.dataType.simpleString()) for f in schema],
+            [(f.name, trino_type(f.dataType)) for f in schema],
             "column_name string, type string",
         )
 
     def _describe_input(self, text: str) -> DataFrame:
         n = self._prepared_params(text)[1]
         return rows_result(self.spark, [(i, "unknown") for i in range(n)], "position int, type string")
-
-    def _show(self, shown: str | None, text: str) -> DataFrame:
-        # SHOW TABLES/COLUMNS/... and DESCRIBE t: a SELECT over
-        # information_schema (infoschema.SHOWS), dispatched like any other
-        # statement (ShowQueriesRewrite.java); another DESCRIBE form is
-        # Spark's.
-        return self.sql(shown) if shown is not None else self.spark.sql(translate(text))
 
     def register_table_function(self, name: str, handler: type, return_type: str) -> None:
         """Register a custom PTF (Python UDTF) callable as TABLE(name(...))
@@ -1012,7 +1005,11 @@ _STATEMENTS: dict[str, tuple[Callable[[TrinoEngine, str], DataFrame], bool]] = {
     "EXPLAIN": (TrinoEngine._explain_statement, True),
     "DESCRIBE OUTPUT": (TrinoEngine._describe_output, True),
     "DESCRIBE INPUT": (TrinoEngine._describe_input, True),
-    **{h: (lambda e, s, f=f: e._show(f(s), s), True) for h, f in infoschema.SHOWS.items()},
+    "DESCRIBE": (infoschema.describe, True),
+    "SHOW COLUMNS": (infoschema.describe, True),
+    # SHOW TABLES/SCHEMAS/CATALOGS: a SELECT over information_schema,
+    # dispatched like any other statement (ShowQueriesRewrite.java)
+    **{h: (lambda e, s, f=f: e.sql(f(s)), True) for h, f in infoschema.SHOWS.items()},
 }
 
 

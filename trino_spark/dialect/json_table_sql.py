@@ -21,6 +21,8 @@ import uuid
 
 from pyspark.sql import DataFrame
 
+from trino_spark.dialect.tokenizer import close_paren, split_commas
+from trino_spark.dialect.types import spark_type
 from trino_spark.operators.json_table import ColumnSpec, NestedSpec, json_table
 
 _JT_RX = re.compile(
@@ -31,50 +33,10 @@ _JT_RX = re.compile(
 )
 
 
-def _match_paren(s: str, open_idx: int) -> int:
-    depth, in_str = 0, False
-    for i in range(open_idx, len(s)):
-        ch = s[i]
-        if ch == "'":
-            in_str = not in_str
-        if in_str:
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-    raise ValueError("unbalanced parens in JSON_TABLE")
-
-
-def _split_top(s: str) -> list[str]:
-    out, buf, depth, in_str = [], [], 0, False
-    for ch in s:
-        if ch == "'":
-            in_str = not in_str
-        if not in_str:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                out.append("".join(buf).strip())
-                buf = []
-                continue
-        buf.append(ch)
-    if buf and "".join(buf).strip():
-        out.append("".join(buf).strip())
-    return out
-
-
-_TYPE_MAP = {"varchar": "string", "integer": "int", "varbinary": "binary", "real": "float"}
-
-
 def _parse_columns(block: str):
     """COLUMNS(...) body -> list[ColumnSpec | NestedSpec]."""
     cols = []
-    for piece in _split_top(block):
+    for piece in split_commas(block):
         up = piece.upper()
         if up.startswith("NESTED"):
             m = re.match(
@@ -83,7 +45,7 @@ def _parse_columns(block: str):
             if not m:
                 raise ValueError(f"cannot parse NESTED column: {piece[:60]}")
             open_i = piece.index("(", m.end() - 1)
-            close_i = _match_paren(piece, open_i)
+            close_i = close_paren(piece, open_i)
             cols.append(
                 NestedSpec(m.group(1), tuple(_parse_columns(piece[open_i + 1 : close_i])))
             )
@@ -99,14 +61,7 @@ def _parse_columns(block: str):
         )
         if not cm:
             raise ValueError(f"cannot parse JSON_TABLE column: {piece[:60]}")
-        name, typ, path = cm.group(1).lower(), cm.group(2).lower(), cm.group(3)
-        base = re.sub(r"\(.*\)", "", typ).strip()
-        dtype = _TYPE_MAP.get(base, typ if base not in _TYPE_MAP else base)
-        if base == "varchar" or base == "char":
-            dtype = "string"
-        if base == "decimal":
-            dtype = typ
-        cols.append(ColumnSpec(name, dtype, path=path))
+        cols.append(ColumnSpec(cm.group(1).lower(), spark_type(cm.group(2)), path=cm.group(3)))
     return cols
 
 
@@ -117,8 +72,8 @@ def try_rewrite(engine, sql: str) -> DataFrame | None:
         return None
     src_rel, src_alias = m.group(1), m.group(2)
     open_i = sql.index("(", m.end() - 1)
-    close_i = _match_paren(sql, open_i)
-    args = _split_top(sql[open_i + 1 : close_i])
+    close_i = close_paren(sql, open_i)
+    args = split_commas(sql[open_i + 1 : close_i])
     if len(args) != 2:
         raise ValueError("JSON_TABLE(col, 'path' COLUMNS(...)) expected")
     json_expr = args[0].strip()
@@ -130,7 +85,7 @@ def try_rewrite(engine, sql: str) -> DataFrame | None:
     row_path = pm.group(1)
     cbody = args[1]
     c_open = cbody.index("(", pm.end() - 1)
-    c_close = _match_paren(cbody, c_open)
+    c_close = close_paren(cbody, c_open)
     columns = _parse_columns(cbody[c_open + 1 : c_close])
 
     if src_rel.startswith("("):

@@ -40,6 +40,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from trino_spark.dialect.tokenizer import close_paren, split_commas
+
 _CLAUSE_RX = re.compile(r"\bMATCH_RECOGNIZE\s*\(", re.IGNORECASE)
 
 _SQL_KEYWORDS = {"AND", "OR", "NOT", "TRUE", "FALSE", "NULL", "IN", "BETWEEN", "IS"}
@@ -57,26 +59,6 @@ class MRSpec:
     subsets: dict[str, list[str]] = field(default_factory=dict)
 
 
-def _match_paren(s: str, open_idx: int) -> int:
-    depth = 0
-    in_str = False
-    for i in range(open_idx, len(s)):
-        ch = s[i]
-        if in_str:
-            if ch == "'":
-                in_str = False
-            continue
-        if ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-    raise ValueError("unbalanced parens in MATCH_RECOGNIZE")
-
-
 def find_block(sql: str) -> tuple[int, int, int] | None:
     """(keyword_start, open_paren, close_paren) of the first
     MATCH_RECOGNIZE block, or None."""
@@ -84,34 +66,7 @@ def find_block(sql: str) -> tuple[int, int, int] | None:
     if not m:
         return None
     op = sql.index("(", m.start())
-    return m.start(), op, _match_paren(sql, op)
-
-
-def _split_top(s: str, sep: str = ",") -> list[str]:
-    out, depth, cur, in_str = [], 0, [], False
-    for ch in s:
-        if in_str:
-            cur.append(ch)
-            if ch == "'":
-                in_str = False
-            continue
-        if ch == "'":
-            in_str = True
-            cur.append(ch)
-        elif ch == "(":
-            depth += 1
-            cur.append(ch)
-        elif ch == ")":
-            depth -= 1
-            cur.append(ch)
-        elif ch == sep and depth == 0:
-            out.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur).strip())
-    return [x for x in out if x]
+    return m.start(), op, close_paren(sql, op)
 
 
 def parse_spec(body: str) -> MRSpec:
@@ -129,7 +84,7 @@ def parse_spec(body: str) -> MRSpec:
     pat_m = re.search(r"\bPATTERN\s*\(", body, re.IGNORECASE)
     if not pat_m:
         raise ValueError("MATCH_RECOGNIZE requires PATTERN (...)")
-    pat_close = _match_paren(body, body.index("(", pat_m.start()))
+    pat_close = close_paren(body, body.index("(", pat_m.start()))
     pattern = body[body.index("(", pat_m.start()) + 1 : pat_close].strip()
     define_txt = clause(r"DEFINE", r"\Z")
 
@@ -156,7 +111,7 @@ def parse_spec(body: str) -> MRSpec:
 
     measures: list[tuple[str, str]] = []
     if meas:
-        for item in _split_top(meas):
+        for item in split_commas(meas):
             mm = re.match(r"(.*)\bAS\s+(\w+)\s*$", item, re.IGNORECASE | re.DOTALL)
             if not mm:
                 raise ValueError(f"MEASURES item needs AS name: {item}")
@@ -170,7 +125,7 @@ def parse_spec(body: str) -> MRSpec:
 
     define: dict[str, str] = {}
     if define_txt:
-        for item in _split_top(define_txt):
+        for item in split_commas(define_txt):
             dm = re.match(r"(\w+)\s+AS\s+(.*)$", item, re.IGNORECASE | re.DOTALL)
             if not dm:
                 raise ValueError(f"DEFINE item needs `label AS cond`: {item}")
@@ -181,7 +136,7 @@ def parse_spec(body: str) -> MRSpec:
     subsets: dict[str, list[str]] = {}
     subset_txt = clause(r"SUBSET", stops)
     if subset_txt:
-        for item in _split_top(subset_txt):
+        for item in split_commas(subset_txt):
             sm = re.match(r"(\w+)\s*=\s*\(([^)]*)\)\s*$", item, re.DOTALL)
             if not sm:
                 raise ValueError(f"SUBSET item needs `name = (labels)`: {item}")
@@ -189,14 +144,14 @@ def parse_spec(body: str) -> MRSpec:
 
     order_cols = []
     if order:
-        for c in _split_top(order):
+        for c in split_commas(order):
             cu = c.strip()
             if re.search(r"\bDESC\b", cu, re.IGNORECASE):
                 raise ValueError("ORDER BY DESC not supported in MATCH_RECOGNIZE subset")
             order_cols.append(re.sub(r"\bASC\b", "", cu, flags=re.IGNORECASE).strip())
 
     return MRSpec(
-        partition_by=_split_top(part) if part else [],
+        partition_by=split_commas(part) if part else [],
         order_by=order_cols,
         measures=measures,
         rows_per_match=rows_per_match,
@@ -240,7 +195,7 @@ def _pyify(expr: str, mode: str) -> str:
             out.append(s_lit.replace("''", "\\'"))
         elif fn is not None:
             f = fn.upper()
-            close = _match_paren(expr, i - 1)
+            close = close_paren(expr, i - 1)
             inner = expr[i:close].strip()
             i = close + 1
             if f == "CLASSIFIER":
@@ -266,7 +221,7 @@ def _pyify(expr: str, mode: str) -> str:
                         raise ValueError(f"COUNT supports * or label.*, got: {inner}")
                     out.append(f"_count_label('{lm.group(1)}')")
             else:
-                args = _split_top(inner)
+                args = split_commas(inner)
                 col = args[0].strip()
                 n = int(args[1]) if len(args) > 1 else 1
                 if not re.fullmatch(r"[A-Za-z_]\w*", col):
@@ -518,7 +473,7 @@ def try_rewrite_window(engine, sql: str) -> DataFrame | None:
     if m is None:
         return None
     op = sql.index("(", m.end() - 1)
-    cl = _match_paren(sql, op)
+    cl = close_paren(sql, op)
     body = sql[op + 1 : cl]
     if not re.search(r"\bPATTERN\s*\(", body, re.IGNORECASE):
         return None  # ordinary WINDOW clause

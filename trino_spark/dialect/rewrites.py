@@ -22,6 +22,7 @@ from trino_spark.dialect.tokenizer import (
     structure,
     tokenize,
 )
+from trino_spark.dialect.types import spark_type
 from trino_spark.functions.datetimes import mysql_to_java
 from trino_spark.functions.registry import register_functions
 
@@ -993,10 +994,8 @@ def _rewrite_array_literal(toks: list[Tok]) -> list[Tok]:
 
 # ------------------------------------------------------------------- types
 
-_TYPE_RENAME = {
-    "VARBINARY": "BINARY",
-    "REAL": "FLOAT",
-}
+# type words Spark spells otherwise in a CAST (dialect/types.py)
+_TYPE_RENAME = frozenset({"VARBINARY", "REAL"})
 
 
 def _rewrite_cast_char(toks: list[Tok]) -> list[Tok]:
@@ -1073,7 +1072,7 @@ def _rewrite_types(toks: list[Tok]) -> list[Tok]:
             prev = prev_code(toks, len(out) - 1)
             # only in CAST/type position: preceded by AS or followed by )
             if prev >= 0 and out[prev].is_word("AS"):
-                out.append(Tok("WORD", _TYPE_RENAME[t.text.upper()]))
+                out.append(Tok("WORD", spark_type(t.text)))
                 i += 1
                 continue
         out.append(t)
@@ -1170,21 +1169,10 @@ def _rewrite_decimal_literal(toks: list[Tok]) -> list[Tok]:
     return out
 
 
-_TYPED_LIT = {  # grammar SqlBase.g4 #typeConstructor: <type> 'literal'
-    "REAL": "FLOAT",
-    "DOUBLE": "DOUBLE",
-    "BIGINT": "BIGINT",
-    "INTEGER": "INT",
-    "INT": "INT",
-    "SMALLINT": "SMALLINT",
-    "TINYINT": "TINYINT",
-    "VARCHAR": "STRING",
-    "CHAR": "STRING",
-    "BOOLEAN": "BOOLEAN",
-    "JSON": "STRING",  # JSON carrier is varchar (json_parse/json_format)
-    "UUID": "STRING",
-    "IPADDRESS": "STRING",
-}
+# grammar SqlBase.g4 #typeConstructor: <type> 'literal', read as a CAST
+_TYPED_LIT = frozenset(
+    "REAL DOUBLE BIGINT INTEGER INT SMALLINT TINYINT VARCHAR CHAR BOOLEAN JSON UUID IPADDRESS".split()
+)
 
 
 _TIMETZ_LIT = re.compile(
@@ -1290,7 +1278,7 @@ def _rewrite_typed_literal(toks: list[Tok]) -> list[Tok]:
             and j < len(toks)
             and toks[j].kind == "STR"
         ):
-            out.extend(tokenize(f"CAST({toks[j].text} AS {_TYPED_LIT[t.text.upper()]})"))
+            out.extend(tokenize(f"CAST({toks[j].text} AS {spark_type(t.text)})"))
             i = j + 1
             continue
         if (
@@ -1418,52 +1406,6 @@ def _rewrite_niladic(toks: list[Tok]) -> list[Tok]:
     return out
 
 
-def _row_type_to_struct(text: str) -> str:
-    """ROW(name TYPE, ...) type syntax -> STRUCT<name: TYPE, ...>,
-    recursively, with Trino->Spark base-type spellings."""
-    m = re.search(r"\bROW\s*\(", text, re.IGNORECASE)
-    while m:
-        open_i = text.index("(", m.start())
-        depth, close_i = 0, open_i
-        for k in range(open_i, len(text)):
-            if text[k] == "(":
-                depth += 1
-            elif text[k] == ")":
-                depth -= 1
-                if depth == 0:
-                    close_i = k
-                    break
-        inner = text[open_i + 1 : close_i]
-        fields = []
-        buf, depth2 = [], 0
-        for ch in inner:
-            if ch in "(<":
-                depth2 += 1
-            elif ch in ")>":
-                depth2 -= 1
-            if ch == "," and depth2 == 0:
-                fields.append("".join(buf))
-                buf = []
-            else:
-                buf.append(ch)
-        if buf:
-            fields.append("".join(buf))
-        parts = []
-        for f_ in fields:
-            name, _, typ = f_.strip().partition(" ")
-            parts.append(f"{name}: {_spark_base_type(typ.strip())}")
-        text = text[: m.start()] + "STRUCT<" + ", ".join(parts) + ">" + text[close_i + 1 :]
-        m = re.search(r"\bROW\s*\(", text, re.IGNORECASE)
-    return text
-
-
-def _spark_base_type(t: str) -> str:
-    t = re.sub(r"\bVARCHAR(\(\d+\))?", "STRING", t, flags=re.IGNORECASE)
-    t = re.sub(r"\bVARBINARY\b", "BINARY", t, flags=re.IGNORECASE)
-    t = re.sub(r"\bREAL\b", "FLOAT", t, flags=re.IGNORECASE)
-    return _row_type_to_struct(t) if re.search(r"\bROW\s*\(", t, re.IGNORECASE) else t
-
-
 def _rewrite_row(toks: list[Tok]) -> list[Tok]:
     """ROW(...) in expression position -> struct(...); ROW(...) in type
     position (after AS inside CAST) -> STRUCT<name: TYPE, ...>."""
@@ -1478,7 +1420,7 @@ def _rewrite_row(toks: list[Tok]) -> list[Tok]:
                 in_type_pos = prev >= 0 and out[prev].is_word("AS")
                 close = match_paren(toks, j)
                 if in_type_pos:
-                    typed = _row_type_to_struct(render(toks[i : close + 1]))
+                    typed = spark_type(render(toks[i : close + 1]))
                     out.extend(tokenize(typed))
                     i = close + 1
                 else:

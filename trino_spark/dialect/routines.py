@@ -21,11 +21,14 @@ also yields a PythonRoutine, executing the user's handler.
 
 from __future__ import annotations
 
+import decimal
+import functools
 import re as _re
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from trino_spark.dialect.tokenizer import Tok, head, lead, match_paren, next_code, render, split_args, tokenize
+from trino_spark.dialect.types import spark_type
 
 _MAX_EXPANSION_DEPTH = 10
 
@@ -47,11 +50,11 @@ class PythonRoutine:
     returns: str  # Spark SQL type string, e.g. "bigint"
 
 
-_TYPE_MAP = {
-    "BIGINT": "bigint", "INTEGER": "int", "INT": "int", "SMALLINT": "smallint",
-    "TINYINT": "tinyint", "DOUBLE": "double", "REAL": "float", "DECIMAL": "double",
-    "VARCHAR": "string", "CHAR": "string", "BOOLEAN": "boolean", "DATE": "date",
-}
+def _decimal_result(fn: Callable, unit: decimal.Decimal, *args):
+    """The interpreter computes a DECIMAL as a float (routine_body._CAST):
+    round its result half up to the declared scale, as a cast does."""
+    v = fn(*args)
+    return None if v is None else decimal.Decimal(repr(v)).quantize(unit, decimal.ROUND_HALF_UP)
 
 
 def parse_create_function(sql: str) -> Routine | PythonRoutine | None:
@@ -80,7 +83,9 @@ def parse_create_function(sql: str) -> Routine | PythonRoutine | None:
     k = next_code(toks, close + 1)
     if k < len(toks) and toks[k].is_word("RETURNS"):
         k = next_code(toks, k + 1)
-        returns = _TYPE_MAP.get(toks[k].text.upper(), "string")
+        end = next_code(toks, k + 1)
+        end = match_paren(toks, end) + 1 if end < len(toks) and toks[end].is_sym("(") else k + 1
+        returns = spark_type(render(toks[k:end]))
     language_python = False
     while k < len(toks) and not toks[k].is_word("RETURN", "BEGIN", "AS"):
         if toks[k].is_word("LANGUAGE"):
@@ -122,6 +127,9 @@ def parse_create_function(sql: str) -> Routine | PythonRoutine | None:
         if expr is not None:
             return Routine(name=name, params=params, body=expr)
         fn = rb.compile_interpreter(stmts, params)
+        if returns.startswith("decimal"):
+            scale = int((_re.findall(r",\s*(\d+)", returns) or [0])[0])
+            fn = functools.partial(_decimal_result, fn, decimal.Decimal(1).scaleb(-scale))
         return PythonRoutine(name=name, params=params, fn=fn, returns=returns)
 
     if k >= len(toks) or not toks[k].is_word("RETURN"):

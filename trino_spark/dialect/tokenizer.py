@@ -164,6 +164,33 @@ def split_args(toks: list[Tok], open_i: int, close_i: int) -> list[tuple[int, in
     return spans
 
 
+def close_paren(text: str, open_i: int) -> int:
+    """The text-level match_paren: index of the ')' closing the '(' at
+    `open_i`, outside '...' literals."""
+    depth, in_str = 0, False
+    for i in range(open_i, len(text)):
+        in_str ^= text[i] == "'"
+        if not in_str and text[i] in "()":
+            depth += 1 if text[i] == "(" else -1
+            if depth == 0:
+                return i
+    raise ValueError("unbalanced parentheses")
+
+
+def split_commas(text: str) -> list[str]:
+    """The text-level split_args: the non-empty pieces of `text` between
+    commas outside parentheses, brackets and '...' literals, stripped."""
+    pieces, depth, in_str, start = [], 0, False, 0
+    for i, ch in enumerate(text):
+        in_str ^= ch == "'"
+        if not in_str:
+            depth += (ch in "([") - (ch in ")]")
+            if ch == "," and depth == 0:
+                pieces.append(text[start:i])
+                start = i + 1
+    return [p.strip() for p in [*pieces, text[start:]] if p.strip()]
+
+
 # ------------------------------------------------------------- structure
 #
 # One structural read of a token list: its query blocks, its WITH

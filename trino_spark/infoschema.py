@@ -19,13 +19,57 @@ from typing import Callable, NamedTuple
 from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
-from trino_spark.dialect.dml import rows_result
+from trino_spark.catalog import Described
+from trino_spark.dialect.dml import _norm_name, rows_result
+from trino_spark.dialect.rewrites import translate
 from trino_spark.dialect.tokenizer import Tok, render, structure, tokenize
+from trino_spark.dialect.types import trino_type
 
 
 class SystemTable(NamedTuple):
     ddl: str  # Spark DDL schema of the rows
     rows: Callable  # engine -> its rows for rows_result, in listing order
+
+
+class ColumnMetadata(NamedTuple):
+    """One column as the reference's connector reports it (spi
+    ColumnMetadata). Every reader of column facts renders these."""
+
+    name: str
+    type: str  # Trino's spelling
+    nullable: bool
+    default: str | None  # SQL
+    comment: str | None
+
+    @property
+    def ddl(self) -> str:
+        """The column's definition as SHOW CREATE TABLE writes it."""
+        default = "" if self.default is None else f" DEFAULT {self.default}"
+        comment = "" if self.comment is None else f" COMMENT {quote(self.comment)}"
+        return f"{self.name} {self.type}{default}{'' if self.nullable else ' NOT NULL'}{comment}"
+
+
+def quote(text: str) -> str:
+    return "'" + text.replace("'", "''") + "'"
+
+
+def described(engine, table: str) -> Described | None:
+    """`table`'s record: its ManagedTable, its catalog source, or None
+    (a view has none)."""
+    return engine.dml_tables.get(table) or engine.catalog._sources.get(table)
+
+
+def columns(engine, table: str) -> list[ColumnMetadata]:
+    """`table`'s columns, derived now from its Spark schema and its
+    record; nothing about them is stored elsewhere."""
+    rec = described(engine, table) or Described()
+    return [
+        ColumnMetadata(
+            f.name, trino_type(f.dataType), f.nullable,
+            rec.defaults.get(f.name), rec.comments.get(f.name),
+        )
+        for f in engine.spark.table(table).schema.fields
+    ]
 
 
 def _schemata(engine) -> list[tuple]:
@@ -45,12 +89,13 @@ def _columns(engine) -> list[tuple]:
     out = []
     for _cat, schema, table, _type in _tables(engine):
         try:
-            fields = engine.spark.table(table).schema.fields
+            cols = columns(engine, table)
         except AnalysisException:
             continue  # a name whose view is gone
         out += [
-            ("spark", schema, table, f.name, i + 1, f.dataType.simpleString())
-            for i, f in enumerate(fields)
+            ("spark", schema, table, c.name, i + 1, c.default, "YES" if c.nullable else "NO",
+             c.type)
+            for i, c in enumerate(cols)
         ]
     return out
 
@@ -90,7 +135,8 @@ def _catalogs(engine) -> list[tuple]:
 
 
 def _table_comments(engine) -> list[tuple]:
-    return sorted(engine._acl["table_comments"].items())
+    records = {**engine.catalog._sources, **engine.dml_tables}
+    return sorted((n, rec.comment) for n, rec in records.items() if rec.comment is not None)
 
 
 # {Schema,Table,Column,Analyze,MaterializedView}PropertiesSystemTable.java:
@@ -128,7 +174,8 @@ TABLES: dict[str, SystemTable] = {
     ),
     "information_schema.columns": SystemTable(
         "table_catalog string, table_schema string, table_name string,"
-        " column_name string, ordinal_position int, data_type string",
+        " column_name string, ordinal_position int, column_default string,"
+        " is_nullable string, data_type string",
         _columns,
     ),
     "information_schema.views": SystemTable(
@@ -187,7 +234,7 @@ TABLES: dict[str, SystemTable] = {
         "table_cat string, table_schem string, table_name string, column_name string,"
         " type_name string, ordinal_position int",
         lambda engine: [
-            ("spark", s, t, c, dt, pos) for _cat, s, t, c, pos, dt in _columns(engine)
+            ("spark", s, t, c, dt, pos) for _cat, s, t, c, pos, _d, _n, dt in _columns(engine)
         ],
     ),
     "system.jdbc.table_types": SystemTable(
@@ -214,18 +261,34 @@ _REFS = {tuple(k.split(".")): k for k in TABLES} | {(k.replace(".", "_"),): k fo
 _GATE = re.compile("system|information_schema", re.IGNORECASE)
 
 
+def _reads(sql: str, views: set[str]) -> bool:
+    """Whether `sql` may name a TABLES entry or one of `views`."""
+    named = (re.search(rf"\b{re.escape(v)}\b", sql, re.IGNORECASE) for v in views)
+    return bool(_GATE.search(sql)) or any(named)
+
+
 def resolve(engine, sql: str) -> str:
     """Point each relation reference to a TABLES entry (any case, quoted
     parts unquoted, never text inside a literal or a comment) at a temp
-    view of its rows, built from the live engine now."""
-    if not _GATE.search(sql):
+    view of its rows, built from the live engine now. A view over them
+    (or over such a view) is re-planned from its definition when read, as
+    the reference re-analyzes a view's text on each query."""
+    live: set[str] = set()
+    while new := {n for n, d in engine.views.items() if n not in live and _reads(d, live)}:
+        live |= new
+    if not _reads(sql, live):
         return sql
     toks = tokenize(sql)
     built: set[str] = set()
     for ref in reversed(structure(toks).relations):
         parts = tuple(t.text.strip('"').lower() for t in toks[ref.start : ref.end : 2])
         key = _REFS.get(parts)
-        if key is None or not ref.read or ref.shadowed:
+        if not ref.read or ref.shadowed:
+            continue
+        if key is None:
+            if parts[-1] in live and parts[-1] not in built:
+                engine.sql(engine.views[parts[-1]]).createOrReplaceTempView(parts[-1])
+                built.add(parts[-1])
             continue
         if key not in built:
             table = TABLES[key]
@@ -236,36 +299,38 @@ def resolve(engine, sql: str) -> str:
     return render(toks)
 
 
-def _show_columns(m: re.Match | None) -> str | None:
-    if m is None:
-        return None
-    t = m.group(1).strip('"')
-    return (
-        "SELECT column_name, data_type, ordinal_position "
-        f"FROM information_schema.columns WHERE table_name = '{t}'"
-    )
-
-
 def _catalogs(text: str) -> str:
     like = re.search(r"\bLIKE\s+('(?:[^']|'')*')", text, re.IGNORECASE)
     where = f" WHERE catalog_name LIKE {like.group(1)}" if like else ""
     return f"SELECT catalog_name AS catalog FROM system.metadata.catalogs{where}"
 
 
-# SHOW TABLES / SCHEMAS / CATALOGS [LIKE p] / COLUMNS FROM t and DESCRIBE t
-# as SELECTs over TABLES, by statement head: each maps the statement text
-# to its SELECT, or None for a form it does not answer. The builders emit
-# rows in listing order, so no ORDER BY is needed and the SELECT plans as
-# a LocalRelation (a Sort would run a Spark job).
-SHOWS: dict[str, Callable[[str], str | None]] = {
+# SHOW TABLES / SCHEMAS / CATALOGS [LIKE p] as SELECTs over TABLES, by
+# statement head: each maps the statement text to its SELECT. The builders
+# emit rows in listing order, so no ORDER BY is needed and the SELECT plans
+# as a LocalRelation (a Sort would run a Spark job).
+SHOWS: dict[str, Callable[[str], str]] = {
     "SHOW TABLES": lambda text: "SELECT table_name FROM information_schema.tables",
     "SHOW SCHEMAS": lambda text: "SELECT schema_name FROM information_schema.schemata",
     "SHOW CATALOGS": _catalogs,
-    "SHOW COLUMNS": lambda text: _show_columns(
-        re.match(r"SHOW\s+COLUMNS\s+(?:FROM|IN)\s+(\S+)", text, re.IGNORECASE)
-    ),
-    "DESCRIBE": lambda text: _show_columns(re.fullmatch(r"DESCRIBE\s+(\S+)", text, re.IGNORECASE)),
 }
+
+
+def describe(engine, text: str):
+    """DESCRIBE t and SHOW COLUMNS FROM t (ShowQueriesRewrite.java):
+    Trino's Column, Type, Extra and Comment, '' for a null, from the
+    column records of that one table. Another DESCRIBE form is Spark's."""
+    m = re.match(
+        r"DESCRIBE\s+(\S+)\s*$|SHOW\s+COLUMNS\s+(?:FROM|IN)\s+(\S+)", text, re.IGNORECASE
+    )
+    if m is None:
+        return engine.spark.sql(translate(text))
+    cols = columns(engine, _norm_name(m.group(1) or m.group(2)))
+    return rows_result(
+        engine.spark,
+        [(c.name, c.type, "", c.comment or "") for c in cols],
+        "`Column` string, `Type` string, `Extra` string, `Comment` string",
+    )
 
 
 def show_stats(spark: SparkSession, table: str, cache: dict | None = None, populate: bool = False):

@@ -35,33 +35,9 @@ import re
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from pyspark.sql import types as T
+from trino_spark.dialect.types import trino_type
 
 PAGE_ROWS = 1000
-
-_SPARK_TO_TRINO = {
-    "long": "bigint",
-    "int": "integer",
-    "short": "smallint",
-    "byte": "tinyint",
-    "string": "varchar",
-    "double": "double",
-    "float": "real",
-    "boolean": "boolean",
-    "date": "date",
-    "binary": "varbinary",
-}
-
-
-def _trino_type(dt: T.DataType) -> str:
-    s = dt.simpleString()
-    if s.startswith("decimal"):
-        return s
-    if s.startswith("timestamp"):
-        return "timestamp"
-    if s.startswith("array<") or s.startswith("map<") or s.startswith("struct<"):
-        return s.replace("struct<", "row(").replace(">", ")") if s.startswith("struct<") else s
-    return _SPARK_TO_TRINO.get(s, s)
 
 
 def _json_cell(v):
@@ -582,7 +558,7 @@ class TrinoHttpServer:
             _check_killed()
             df = self.engine.sql(sql)
             _check_killed()
-            columns = [{"name": f.name, "type": _trino_type(f.dataType)} for f in df.schema]
+            columns = [{"name": f.name, "type": trino_type(f.dataType)} for f in df.schema]
             rows = [[_json_cell(v) for v in row] for row in df.collect()]
             _check_killed()
             st = _QueryState(rec, columns, rows, spooled=spooled, encoding=encoding)
