@@ -701,3 +701,71 @@ class TestRoleHierarchy:
         eng.sql("SET ROLE rh_analyst")
         with pytest.raises(AccessDenied, match="denied"):
             eng.sql("SELECT count(*) FROM rh_t").collect()
+
+
+class TestDerivedNames:
+    """A branch, a version or a metadata table of t is checked and secured
+    as t: relation resolution records the table each derived name reads."""
+
+    @pytest.fixture()
+    def eng(self, engine):
+        import os
+
+        tbl = f"drv_{os.getpid()}"
+        engine.sql(f"DROP TABLE IF EXISTS {tbl}")
+        engine.sql(f"CREATE TABLE {tbl} AS SELECT n_nationkey AS k FROM nation")
+        engine.sql(f"CREATE BRANCH dev IN TABLE {tbl}")
+        engine.sql("CREATE ROLE drv_reader")
+        engine.sql("CREATE ROLE drv_none")
+        engine.sql(f"GRANT SELECT ON {tbl} TO ROLE drv_reader")
+        yield engine, tbl
+        engine.sql("SET ROLE NONE")
+        engine.sql(f"DROP TABLE {tbl}")
+
+    def test_row_filter_applies_to_a_branch(self, eng):
+        engine, tbl = eng
+        engine.sql(f"CALL system.add_row_filter('drv_reader', '{tbl}', 'k = 0')")
+        engine.sql("SET ROLE drv_reader")
+        assert engine.sql(f"SELECT count(*) AS c FROM {tbl}@dev").collect()[0].c == 1
+
+    def test_row_filter_applies_to_a_branch_write(self, eng):
+        # rows of the branch the role cannot see are untouchable, as on t
+        engine, tbl = eng
+        engine.sql(f"GRANT DELETE ON {tbl} TO ROLE drv_reader")
+        engine.sql(f"CALL system.add_row_filter('drv_reader', '{tbl}', 'k = 0')")
+        engine.sql("SET ROLE drv_reader")
+        engine.sql(f"DELETE FROM {tbl}@dev")
+        engine.sql("SET ROLE NONE")
+        assert engine.sql(f"SELECT count(*) AS c FROM {tbl}@dev").collect()[0].c == 24
+
+    def test_grant_on_table_covers_its_metadata_tables(self, eng):
+        engine, tbl = eng
+        engine.sql("SET ROLE drv_reader")
+        assert engine.sql(f'SELECT count(*) AS c FROM "{tbl}$files"').collect()[0].c >= 1
+
+    @pytest.mark.parametrize("ref", ['"{t}$files"', "{t}@dev", "{t} FOR VERSION AS OF 1"])
+    def test_denial_names_the_table(self, eng, ref):
+        engine, tbl = eng
+        engine.sql("SET ROLE drv_none")
+        with pytest.raises(AccessDenied, match=rf"lacks SELECT on {tbl}$"):
+            engine.sql(f"SELECT count(*) FROM {ref.format(t=tbl)}")
+
+
+class TestSessionNiladics:
+    """CURRENT_USER, version(), current_schema and current_groups() are
+    values of the session, read from the statement's words: a quoted
+    identifier or a comment that spells one keeps its text."""
+
+    def test_quoted_identifiers_keep_their_names(self, engine):
+        df = engine.sql('SELECT 1 AS "current_user", 2 AS "version()"')
+        assert df.columns == ["current_user", "version()"]
+
+    def test_values_follow_the_session(self, engine):
+        from trino_spark import __version__
+
+        engine.sql("USE other")
+        row = engine.sql(
+            "SELECT current_user AS u, VERSION ( ) AS v, current_schema AS s,"
+            " current_groups() AS g -- current_user"
+        ).collect()[0]
+        assert (row.u, row.v, row.s, row.g) == ("trino", __version__, "other", [])

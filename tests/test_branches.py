@@ -322,3 +322,38 @@ def test_rename_to_keeps_declared_order(engine):
         assert engine.sql(f"SELECT * FROM {name}_2").columns == ["k", "cat", "v"]
     finally:
         engine.sql(f"DROP TABLE IF EXISTS {name}_2")
+
+
+class TestBranchReferences:
+    """`t@b` is read from the statement's relation references once: text in
+    a comment or a quoted identifier is no reference, and a view over a
+    branch keeps the text it was written with."""
+
+    def test_comment_and_quoted_identifier_untouched(self, engine, table):
+        # the table has no branch 'dev': resolving either would raise
+        assert engine.sql(f"SELECT 1 AS x -- {table}@dev").collect()[0].x == 1
+        assert engine.sql(f'SELECT 1 AS "{table}@dev"').columns == [f"{table}@dev"]
+
+    def test_describe_and_stats_name_a_branch(self, engine, table):
+        engine.sql(f"CREATE BRANCH dev IN TABLE {table}")
+        cols = [r.Column for r in engine.sql(f"DESCRIBE {table}@dev").collect()]
+        assert cols == ["k", "name", "r"]
+        stats = engine.sql(f"SHOW STATS FOR {table}@dev").collect()
+        assert [r.row_count for r in stats if r.column_name is None] == [25.0]
+
+    def test_view_over_branch_keeps_its_text(self, engine, table):
+        engine.sql(f"CREATE BRANCH dev IN TABLE {table}")
+        engine.sql(f"DELETE FROM {table}@dev WHERE r = 0")
+        view = f"{table}_v"
+        engine.sql(f"CREATE OR REPLACE VIEW {view} AS SELECT k FROM {table}@dev")
+        try:
+            shown = engine.sql(f"SHOW CREATE VIEW {view}").collect()[0].create_view
+            assert shown == f"CREATE VIEW {view} AS\nSELECT k FROM {table}@dev"
+            defs = {
+                r.table_name: r.view_definition
+                for r in engine.sql("SELECT * FROM information_schema.views").collect()
+            }
+            assert defs[view] == f"SELECT k FROM {table}@dev"
+            assert engine.sql(f"SELECT count(*) AS c FROM {view}").collect()[0].c == 20
+        finally:
+            engine.sql(f"DROP VIEW {view}")

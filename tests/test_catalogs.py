@@ -267,3 +267,18 @@ def test_file_format_catalogs_csv_json_orc(engine, spark, tmp_path):
     assert n == 3
     for cat in ("fcsv", "fjson", "forc"):
         engine.sql(f"DROP CATALOG {cat}")
+
+
+def test_comments_never_resolve(engine):
+    # a mount name in a comment is not a relation: nothing is looked up
+    engine.sql("CREATE CATALOG cmt USING memory")
+    assert engine.sql("SELECT 1 AS x -- cmt.s.t").collect()[0].x == 1
+    assert engine.sql("SELECT 2 AS x /* cmt.s.t */").collect()[0].x == 2
+
+
+def test_describe_and_stats_name_a_mount_table(engine):
+    engine.sql("CREATE CATALOG dsc USING memory")
+    engine.sql("CREATE TABLE dsc.s.d AS SELECT 1 AS a")
+    assert [r.Column for r in engine.sql("DESCRIBE dsc.s.d").collect()] == ["a"]
+    stats = engine.sql("SHOW STATS FOR dsc.s.d").collect()
+    assert [r.row_count for r in stats if r.column_name is None] == [1.0]

@@ -470,3 +470,62 @@ def test_set_time_zone_and_use(engine):
         engine.sql("SET TIME ZONE LOCAL")
     assert engine.spark.conf.get("spark.sql.session.timeZone") == "UTC"
     assert engine.sql("USE memory.default").collect()[0].schema == "memory.default"
+
+
+def test_drop_table_on_a_catalog_source_is_refused(engine):
+    # a registered source is read-only, as Trino's tpch connector is: the
+    # table stays listed and readable, IF EXISTS or not
+    for stmt in ("DROP TABLE region", "DROP TABLE IF EXISTS region"):
+        with pytest.raises(ValueError, match="does not support dropping tables"):
+            engine.sql(stmt)
+    assert engine.sql("SELECT count(*) AS c FROM region").collect()[0].c == 5
+    listed = engine.sql(
+        "SELECT table_name FROM information_schema.tables WHERE table_name = 'region'"
+    ).collect()
+    assert len(listed) == 1
+
+
+class TestVersionReferences:
+    """`t FOR VERSION AS OF n` and `"t$kind"` are read from the statement's
+    relation references once: never from a literal, in any qualified or
+    commented spelling, and a view over one keeps its text."""
+
+    @pytest.fixture(scope="class")
+    def pt(self, engine):
+        engine.sql("DROP TABLE IF EXISTS tv_pt")
+        engine.sql("CREATE TABLE tv_pt AS SELECT n_nationkey AS k FROM nation")
+        engine.sql("INSERT INTO tv_pt VALUES (100)")
+        yield "tv_pt"
+        engine.sql("DROP TABLE tv_pt")
+
+    @pytest.mark.parametrize(
+        "text",
+        ["the tv_pt FOR VERSION AS OF 1 case", 'see "tv_pt$history"', "o FOR VERSION AS OF 1"],
+    )
+    def test_literals_untouched(self, engine, pt, text):
+        assert engine.sql(f"SELECT '{text}' AS s").collect()[0].s == text
+
+    @pytest.mark.parametrize(
+        "ref, rows",
+        [
+            ("default.tv_pt FOR VERSION AS OF 1", 25),
+            ("tv_pt /* c */ FOR VERSION AS OF 1", 25),
+            ('default."tv_pt$snapshots"', 2),
+        ],
+    )
+    def test_other_spellings_resolve(self, engine, pt, ref, rows):
+        assert engine.sql(f"SELECT count(*) AS c FROM {ref}").collect()[0].c == rows
+
+    def test_view_over_version_keeps_its_text(self, engine, pt):
+        engine.sql("CREATE OR REPLACE VIEW tv_v AS SELECT k FROM tv_pt FOR VERSION AS OF 1")
+        try:
+            shown = engine.sql("SHOW CREATE VIEW tv_v").collect()[0].create_view
+            assert shown == "CREATE VIEW tv_v AS\nSELECT k FROM tv_pt FOR VERSION AS OF 1"
+            defs = {
+                r.table_name: r.view_definition
+                for r in engine.sql("SELECT * FROM information_schema.views").collect()
+            }
+            assert defs["tv_v"] == "SELECT k FROM tv_pt FOR VERSION AS OF 1"
+            assert engine.sql("SELECT count(*) AS c FROM tv_v").collect()[0].c == 25
+        finally:
+            engine.sql("DROP VIEW tv_v")

@@ -302,7 +302,12 @@ def enforce(engine, sql: str) -> None:
     words = head(toks)
     kind = " ".join(words[:2])
     refs = structure(toks).relations
+    # a derived name (t@b, a version, "t$files") is checked as the table it
+    # reads: a privilege on t covers its branches, snapshots and metadata
+    # tables (reference: they share the table's ConnectorAccessControl checks)
+    derived = engine.derived
     tgt = refs[0].name if refs else ""
+    tgt = derived[tgt].base if tgt in derived else tgt
     needed: list[tuple[str, str]] = []
     skip_select: set[str] = set()
     if kind == "INSERT INTO":
@@ -324,17 +329,9 @@ def enforce(engine, sql: str) -> None:
         for p in _PRIVS:
             needed.append((p, f"!{tgt}" if kind == "CREATE TABLE" else tgt))
     for ref in refs:
-        name = ref.name
+        name = derived[ref.name].base if ref.name in derived else ref.name
         if not ref.read or ref.shadowed or name.startswith("__"):
             continue
-        # Time-travel / metadata temp views substituted BEFORE enforcement
-        # (dml.resolve_time_travel turns `t FOR VERSION AS OF 1` into
-        # `t__v1`): check the grant against the BASE table, not the derived
-        # view name — a SELECT grant on t must satisfy reads of t's
-        # snapshots (previously this always failed as 'SELECT on t__v1').
-        tt = re.match(r"(.+?)__(?:v\d+|snapshots)$", name)
-        if tt and tt.group(1) in engine.dml_tables:
-            name = tt.group(1)
         if name in infoschema.VIEWS:
             # information_schema / system tables stay readable under any
             # role (the reference's access control does the same).
@@ -353,13 +350,6 @@ def enforce(engine, sql: str) -> None:
             and tbl not in engine.dml_tables
         ):
             continue  # not a relation (alias, subquery result, etc.)
-        # Derived names (time-travel views t__vN, branch forks t__branch_b)
-        # check against the BASE table's grants — a privilege on t covers
-        # its snapshots and branches (reference: branch refs share the
-        # table's ConnectorAccessControl checks).
-        base = re.match(r"(.+?)__(?:v\d+|snapshots|branch_\w+)$", tbl)
-        if base and base.group(1) in engine.dml_tables:
-            tbl = base.group(1)
         denies = set().union(
             *(st.get("denies", {}).get(r, set()) for r in eff)
         ) if st.get("denies") else set()
@@ -403,66 +393,57 @@ def apply_security(engine, sql: str) -> str:
     exactly like the reference applies ViewExpressions during analysis.
     Applies to every statement whose reads go through this dispatch —
     including the SELECT side of INSERT ... SELECT (the reference also
-    filters the read half, not the written rows)."""
+    filters the read half, not the written rows) — and to a table's
+    branches and snapshots (engine.derived): an old snapshot of a filtered
+    table is still the filtered table.
+
+    Only names in relation positions (tokenizer.structure) are rewritten,
+    so columns, AS-aliases, and CTE names that happen to share a secured
+    table's name keep their own bindings. A WITH name shadows a same-named
+    table where it is in scope, as in the reference's analyzer; inside its
+    own body a non-recursive CTE's name still binds the real table, which
+    therefore stays secured."""
     st = engine._acl
     role = st["current"]
     if role is None:
         return sql
-    secured: dict[str, str] = {}
     tables = {t for (r, t) in st["row_filters"] if r == role} | {
         t for (r, t) in st["column_masks"] if r == role
     }
-    for tbl in tables:
-        # Secure the base table AND any of its time-travel snapshot views
-        # (dml.resolve_time_travel substitutes `tbl__vN` before this runs —
-        # an old snapshot of a filtered table is still the filtered table).
-        refs = {tbl} | {
-            m.group(0).lower()
-            for m in re.finditer(rf"\b{re.escape(tbl)}__v\d+\b", sql, re.IGNORECASE)
-        }
-        for ref in refs:
-            if not re.search(rf"\b{re.escape(ref)}\b", sql, re.IGNORECASE):
-                continue
-            from pyspark.sql import functions as F
-
-            from trino_spark.dialect.rewrites import translate
-
-            df = engine.spark.table(ref)
-            # Row filter FIRST, against the underlying data — the reference
-            # evaluates getRowFilters on real rows and only then masks the
-            # surviving rows' columns (a filter referencing a masked column
-            # must not see masked values).
-            pred = st["row_filters"].get((role, tbl))
-            if pred:
-                df = df.filter(F.expr(translate(pred)))
-            masks = st["column_masks"].get((role, tbl), {})
-            if masks:
-                df = df.select(
-                    *[
-                        F.expr(translate(masks[c.lower()])).alias(c) if c.lower() in masks else F.col(c)
-                        for c in df.columns
-                    ]
-                )
-            view = f"__sec_{role}_{ref}"
-            df.createOrReplaceTempView(view)
-            secured[ref] = view
-    if not secured:
-        return sql
-    return rewrite_table_refs(sql, secured)
-
-
-def rewrite_table_refs(sql: str, mapping: dict[str, str]) -> str:
-    """Replace table names with secured-view names ONLY in relation
-    positions (tokenizer.structure), so columns, AS-aliases, and CTE
-    names that happen to share a secured table's name keep their own
-    bindings. A WITH name shadows a same-named table where it is in
-    scope, as in the reference's analyzer; inside its own body a
-    non-recursive CTE's name still binds the real table, which therefore
-    stays secured."""
     toks = tokenize(sql)
-    for ref in reversed(structure(toks).relations):
-        if ref.name in mapping and not ref.shadowed:
-            toks[ref.start : ref.end] = [Tok("WORD", mapping[ref.name])]
+    refs = [ref for ref in structure(toks).relations if not ref.shadowed]
+    secured: dict[str, str] = {}
+    for ref in refs:
+        derived = engine.derived.get(ref.name)
+        tbl = derived.base if derived is not None and derived.rows else ref.name
+        if tbl not in tables or ref.name in secured:
+            continue
+        from pyspark.sql import functions as F
+
+        from trino_spark.dialect.rewrites import translate
+
+        df = engine.spark.table(ref.name)
+        # Row filter FIRST, against the underlying data — the reference
+        # evaluates getRowFilters on real rows and only then masks the
+        # surviving rows' columns (a filter referencing a masked column
+        # must not see masked values).
+        pred = st["row_filters"].get((role, tbl))
+        if pred:
+            df = df.filter(F.expr(translate(pred)))
+        masks = st["column_masks"].get((role, tbl), {})
+        if masks:
+            df = df.select(
+                *[
+                    F.expr(translate(masks[c.lower()])).alias(c) if c.lower() in masks else F.col(c)
+                    for c in df.columns
+                ]
+            )
+        view = f"__sec_{role}_{ref.name}"
+        df.createOrReplaceTempView(view)
+        secured[ref.name] = view
+    for ref in reversed(refs):
+        if ref.name in secured:
+            toks[ref.start : ref.end] = [Tok("WORD", secured[ref.name])]
     return render(toks)
 
 
@@ -478,6 +459,7 @@ def dml_target_security(engine, table: str) -> tuple[str | None, dict[str, str]]
     if role is None:
         return None, {}
     t = table.lower().split(".")[-1]
+    t = engine.derived[t].base if t in engine.derived else t  # t@b: t's rules
     return st["row_filters"].get((role, t)), dict(st["column_masks"].get((role, t), {}))
 
 
@@ -545,15 +527,8 @@ def mask_fragment(masks: dict[str, str], fragment: str, target: str | None = Non
                 )
         return chunk
 
-    return map_outside_literals(fragment, _sub)
-
-
-def map_outside_literals(sql: str, fn) -> str:
-    """Apply `fn` to every chunk of `sql` OUTSIDE single-quoted string
-    literals (shared by the engine's system-table substitution and the
-    security rewrite — one literal-skipping implementation)."""
-    parts = re.split(r"('(?:[^']|'')*')", sql)
-    return "".join(p if p.startswith("'") else fn(p) for p in parts)
+    parts = re.split(r"('(?:[^']|'')*')", fragment)  # string literals stay as written
+    return "".join(p if p.startswith("'") else _sub(p) for p in parts)
 
 
 # ---------------------------------------------------------------- CALL

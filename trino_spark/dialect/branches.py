@@ -65,7 +65,6 @@ _FF_RX = re.compile(
 _SHOW_RX = re.compile(
     r"SHOW\s+BRANCHES\s+(?:FROM|IN)\s+TABLE\s+(?P<table>[\w.\"]+)\s*$", re.IGNORECASE
 )
-_AT_RX = re.compile(r"\b([A-Za-z_]\w*)\s*@\s*([A-Za-z_]\w*)\b")
 
 
 def _table(engine, name: str) -> ManagedTable:
@@ -165,20 +164,3 @@ def _drop_fork(engine, table: ManagedTable, branch: str) -> None:
     del table.branches[branch]
     _discard(engine, name)
 
-
-def resolve(engine, sql: str) -> str:
-    """Rewrite ``t@b`` references (reads AND DML targets) to the branch
-    fork's record name. Unknown branches of managed tables raise the
-    reference's BRANCH_NOT_FOUND error; ``@`` inside string literals is
-    never touched; ``t@main`` is the table itself."""
-    if "@" not in sql:
-        return sql
-    from trino_spark.dialect.access import map_outside_literals
-
-    def _sub(m: re.Match) -> str:
-        table = engine.dml_tables.get(m.group(1).lower())
-        if table is None:
-            return m.group(0)
-        return _branch(engine, table, m.group(2).lower()).name
-
-    return map_outside_literals(sql, lambda chunk: _AT_RX.sub(_sub, chunk))

@@ -46,7 +46,6 @@ _DROP_RX = re.compile(
     r"(?:\s+(?:CASCADE|RESTRICT))?\s*$",
     re.IGNORECASE,
 )
-_REF_RX = re.compile(r"\b([A-Za-z_]\w*)\.([A-Za-z_]\w*)\.([A-Za-z_]\w*)\b")
 
 _CONNECTORS = (
     "parquet",
@@ -162,38 +161,11 @@ def _pages(spark, rows, schema) -> DataFrame:
     return spark.createDataFrame(rows, schema)
 
 
-def resolve(engine, sql: str) -> str:
-    """Rewrite ``cat.schema.table`` references to lazily-registered temp
-    views for every NON-jdbc mount (jdbc mounts are real Spark catalogs —
-    Spark resolves those natively, keeping remote pushdown). String
-    literals are never touched."""
-    mounts = engine.catalogs
-    if not mounts:
-        return sql
-    lowered = sql.lower()
-    if not any(f"{name}." in lowered for name in mounts):
-        return sql
-    from trino_spark.dialect.access import map_outside_literals
-
-    # A catalog-qualified DML TARGET must reach try_execute_dml verbatim
-    # (the connector's page-sink path decides what a write means there);
-    # only the statement's READ positions resolve to views.
-    placeholder, target_txt = "\x00CATTGT\x00", None
-    head = _DML_TARGET_RX.match(sql.lstrip())
-    if head and head.group(1).lower() in mounts:
-        off = len(sql) - len(sql.lstrip())
-        a, b = off + head.start(1), off + head.end(3)
-        target_txt, sql = sql[a:b], sql[:a] + placeholder + sql[b:]
-
-    def _chunk(chunk: str) -> str:
-        return _REF_RX.sub(lambda m: _view_for(engine, m) or m.group(0), chunk)
-
-    out = map_outside_literals(sql, _chunk)
-    return out.replace(placeholder, target_txt) if target_txt else out
-
-
-def _view_for(engine, m: re.Match) -> str | None:
-    cat, schema, table = (g.lower() for g in m.groups())
+def view_for(engine, cat: str, schema: str, table: str) -> str | None:
+    """The view a read of ``cat.schema.table`` resolves to (lower-case
+    parts), registered on first use; None for a name of no mount or of a
+    jdbc mount (a real Spark catalog: Spark resolves it natively, keeping
+    remote pushdown)."""
     mount = engine.catalogs.get(cat)
     if mount is None or mount["connector"] == "jdbc":
         return None

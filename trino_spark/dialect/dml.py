@@ -53,6 +53,7 @@ import os
 import re
 import shutil
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.sql.types import StructType
@@ -455,6 +456,10 @@ def _drop(engine, sql: str) -> DataFrame:
         for n in [name, *(fork_name(name, b) for b in rec.branches)]:
             txn_snapshot_if_needed(engine, n)
             _discard(engine, n)
+    elif name in engine.catalog._sources:
+        # a registered source is read-only, as the tpch connector is
+        # (ConnectorMetadata.dropTable's default): refused, IF EXISTS or not
+        raise ValueError(f"{name}: This connector does not support dropping tables")
     elif engine.spark.catalog.tableExists(name):
         # A saveAsTable-managed (e.g. bucketed-CTAS) catalog table.
         engine.spark.sql(f"DROP TABLE {name}")
@@ -845,14 +850,8 @@ def _merge(engine, sql: str) -> DataFrame:
 # Trino's queryPeriod grammar (SqlBase.g4: tableName FOR VERSION|TIMESTAMP
 # AS OF expr; behavior: plugin/trino-iceberg + plugin/trino-delta-lake time
 # travel). Every _commit retains the previous table directory as an
-# immutable snapshot; reads resolve the requested version to its directory
-# and substitute a temp view for the table reference.
-
-_TT_RX = re.compile(
-    rf"({_IDENT})\s+FOR\s+(VERSION|TIMESTAMP)\s+AS\s+OF\s+"
-    r"(TIMESTAMP\s+'[^']*'|'[^']*'|\d+)",
-    re.IGNORECASE,
-)
+# immutable snapshot; a reference pinned to a version reads it back
+# (dialect/relations.py substitutes a view over it).
 
 
 # try_execute's statements by head (tokenizer.head); CREATE TABLE only as CTAS
@@ -866,29 +865,38 @@ def list_versions(engine, name: str) -> list[dict]:
     return _require_managed(engine, name).log
 
 
-_META_RX = re.compile(
-    rf'"?({_IDENT})\$(snapshots|history|files|partitions|refs|properties)"?', re.IGNORECASE
-)
+def version_as_of(rec: ManagedTable, period: str, literal: str) -> int:
+    """The version `FOR VERSION|TIMESTAMP AS OF literal` pins: that version,
+    or the last one committed at or before the timestamp."""
+    if period == "VERSION":
+        return int(literal)
+    ts = _dt.datetime.fromisoformat(literal)
+    if ts.tzinfo is None:
+        ts = ts.replace(tzinfo=_dt.timezone.utc)
+    older = [e["version"] for e in rec.log if e["committed_at"] <= ts.timestamp()]
+    if not older:
+        raise ValueError(f"table {rec.name}: no version committed at or before {literal}")
+    return max(older)
 
 
-def _file_rows(path: str) -> list[tuple]:
+def _file_rows(engine, rec: ManagedTable) -> list[tuple]:
     """(file_path, file_format, partition, record_count, file_size_in_bytes)
-    per data file of a table directory — counts from parquet FOOTERS, no
-    data scan (exactly how FilesTable reads manifest entries, not files).
-    file_path is relative to the table root; partition is the relative
-    directory of a Hive-partitioned file (NULL for unpartitioned)."""
+    per data file of a table's current directory — counts from parquet
+    FOOTERS, no data scan (exactly how FilesTable reads manifest entries,
+    not files). file_path is relative to the table root; partition is the
+    relative directory of a Hive-partitioned file (NULL for unpartitioned)."""
     import pyarrow.parquet as pq
 
     rows = []
-    for root, _dirs, files in os.walk(path):
+    for root, _dirs, files in os.walk(rec.path):
         for f in sorted(files):
             if not f.endswith(".parquet"):
                 continue
             full = os.path.join(root, f)
-            rel_dir = os.path.relpath(root, path)
+            rel_dir = os.path.relpath(root, rec.path)
             rows.append(
                 (
-                    os.path.relpath(full, path),
+                    os.path.relpath(full, rec.path),
                     "PARQUET",
                     None if rel_dir == "." else rel_dir,
                     pq.ParquetFile(full).metadata.num_rows,
@@ -898,115 +906,59 @@ def _file_rows(path: str) -> list[tuple]:
     return rows
 
 
-def resolve_metadata_tables(engine, sql: str) -> str:
-    """Iceberg-style metadata tables over the snapshot log and the current
-    table directory: ``"t$snapshots"`` / ``"t$history"`` (SnapshotsTable /
-    HistoryTable), ``"t$files"`` (FilesTable.java: per-file path, format,
-    partition, record_count, file_size_in_bytes — straight from parquet
-    footers), and ``"t$partitions"`` (PartitionsTable.java: per-partition
-    row/file/byte totals). At scale these are metadata-only reads — the
-    file listing and footers, never the data pages."""
-
-    def repl(m: re.Match) -> str:
-        name = _norm_name(m.group(1))
-        rec = engine.dml_tables.get(name)
-        if rec is None:
-            return m.group(0)
-        kind = m.group(2).lower()
-        if kind == "files":
-            view = f"{name}__files"
-            rows_result(
-                engine.spark,
-                _file_rows(rec.path),
-                "file_path: string, file_format: string, partition: string, "
-                "record_count: bigint, file_size_in_bytes: bigint",
-            ).createOrReplaceTempView(view)
-            return view
-        if kind == "partitions":
-            agg: dict = {}
-            for _fp, _fmt, part, nrec, nbytes in _file_rows(rec.path):
-                c = agg.setdefault(part, [0, 0, 0])
-                c[0] += nrec
-                c[1] += 1
-                c[2] += nbytes
-            view = f"{name}__partitions"
-            rows_result(
-                engine.spark,
-                [(p, c[0], c[1], c[2]) for p, c in sorted(agg.items(), key=lambda kv: str(kv[0]))],
-                "partition: string, record_count: bigint, file_count: bigint, "
-                "total_size: bigint",
-            ).createOrReplaceTempView(view)
-            return view
-        if kind == "refs":
-            # Iceberg RefsTable analog: 'main' plus every branch, each with
-            # the tip version of its own snapshot log.
-            rows = [("main", "BRANCH", rec.version)] + [
-                (b, "BRANCH", engine.dml_tables[fork_name(name, b)].version)
-                for b in sorted(rec.branches)
-            ]
-            view = f"{name}__refs"
-            rows_result(
-                engine.spark, rows, "name: string, type: string, version: bigint"
-            ).createOrReplaceTempView(view)
-            return view
-        if kind == "properties":
-            # Iceberg PropertiesTable analog: SET PROPERTIES key/values.
-            view = f"{name}__properties"
-            rows_result(
-                engine.spark, sorted(rec.properties.items()), "key: string, value: string"
-            ).createOrReplaceTempView(view)
-            return view
-        rows = [
-            (
-                e["version"],
-                e["committed_at_iso"],
-                e["operation"],
-                e["version"] == rec.version,
-                bool(e.get("expired")),
-            )
-            for e in rec.log
-        ]
-        view = f"{name}__snapshots"
-        rows_result(
-            engine.spark,
-            rows,
-            "version: bigint, committed_at: string, operation: string, "
-            "is_current: boolean, expired: boolean",
-        ).createOrReplaceTempView(view)
-        return view
-
-    return _META_RX.sub(repl, sql)
+def _partition_rows(engine, rec: ManagedTable) -> list[tuple]:
+    agg: dict = {}
+    for _fp, _fmt, part, nrec, nbytes in _file_rows(engine, rec):
+        c = agg.setdefault(part, [0, 0, 0])
+        c[0] += nrec
+        c[1] += 1
+        c[2] += nbytes
+    return [(p, *c) for p, c in sorted(agg.items(), key=lambda kv: str(kv[0]))]
 
 
-def resolve_time_travel(engine, sql: str) -> str:
-    """Rewrite `tbl FOR VERSION AS OF n` / `tbl FOR TIMESTAMP AS OF t`
-    table references to temp views over the pinned snapshot directory."""
+def _snapshot_rows(engine, rec: ManagedTable) -> list[tuple]:
+    return [
+        (e["version"], e["committed_at_iso"], e["operation"], e["version"] == rec.version,
+         bool(e.get("expired")))
+        for e in rec.log
+    ]
 
-    def repl(m: re.Match) -> str:
-        name = _norm_name(m.group(1))
-        rec = engine.dml_tables.get(name)
-        if rec is None:
-            raise ValueError(f"time travel requires a managed table, got: {name}")
-        kind, arg = m.group(2).upper(), m.group(3).strip()
-        if kind == "VERSION":
-            version = int(arg)
-        else:
-            ts_txt = re.sub(r"^TIMESTAMP\s+", "", arg, flags=re.IGNORECASE).strip("'")
-            ts = _dt.datetime.fromisoformat(ts_txt)
-            if ts.tzinfo is None:
-                ts = ts.replace(tzinfo=_dt.timezone.utc)
-            epoch = ts.timestamp()
-            older = [e for e in rec.log if e["committed_at"] <= epoch]
-            if not older:
-                raise ValueError(
-                    f"table {name}: no version committed at or before {ts_txt}"
-                )
-            version = max(e["version"] for e in older)
-        view = f"{name}__v{version}"
-        _stored(engine, rec, version).createOrReplaceTempView(view)
-        return view
 
-    return _TT_RX.sub(repl, sql)
+_SNAPSHOTS = (
+    "version: bigint, committed_at: string, operation: string, is_current: boolean,"
+    " expired: boolean"
+)
+
+# Iceberg-style metadata tables "t$kind" over the snapshot log and the
+# current table directory (SnapshotsTable, HistoryTable, FilesTable,
+# PartitionsTable, RefsTable, PropertiesTable): kind -> (Spark DDL schema,
+# rows of a table's record). At scale these are metadata-only reads — the
+# file listing and footers, never the data pages.
+METADATA: dict[str, tuple[str, Callable]] = {
+    "snapshots": (_SNAPSHOTS, _snapshot_rows),
+    "history": (_SNAPSHOTS, _snapshot_rows),
+    "files": (
+        "file_path: string, file_format: string, partition: string, record_count: bigint,"
+        " file_size_in_bytes: bigint",
+        _file_rows,
+    ),
+    "partitions": (
+        "partition: string, record_count: bigint, file_count: bigint, total_size: bigint",
+        _partition_rows,
+    ),
+    # 'main' plus every branch, each with the tip of its own snapshot log
+    "refs": (
+        "name: string, type: string, version: bigint",
+        lambda engine, rec: [("main", "BRANCH", rec.version)] + [
+            (b, "BRANCH", engine.dml_tables[fork_name(rec.name, b)].version)
+            for b in sorted(rec.branches)
+        ],
+    ),
+    # the SET PROPERTIES key/values
+    "properties": (
+        "key: string, value: string", lambda engine, rec: sorted(rec.properties.items())
+    ),
+}
 
 
 # ---------------------------------------------------------------- transactions
@@ -1524,7 +1476,7 @@ def _table_execute(engine, rec: ManagedTable, action: str) -> DataFrame:
 def refresh_infoschema(engine, changed: str | None = None, dropped: str | None = None) -> None:
     """The metadata side of a commit. information_schema needs nothing: it
     is built from the live catalog when a statement reads it
-    (infoschema.resolve). A mutation invalidates the ANALYZE-collected
+    (dialect/relations.py). A mutation invalidates the ANALYZE-collected
     statistics of the table it touched."""
     for name in (changed, dropped):
         engine._stats_cache.pop(name, None)

@@ -29,10 +29,13 @@ from trino_spark.dialect import catalogs as _cats
 from trino_spark.dialect import cte as _cte
 from trino_spark.dialect import dml as _dml
 from trino_spark.dialect import prepared as _prep
+from trino_spark.dialect import relations as _relations
 from trino_spark.dialect import routines as _routines_mod
 from trino_spark.dialect.dml import rows_result
 from trino_spark.dialect.rewrites import translate
-from trino_spark.dialect.tokenizer import head, lead, structure, tokenize
+from trino_spark.dialect.tokenizer import (
+    Tok, head, lead, next_code, prev_code, render, structure, tokenize,
+)
 from trino_spark.dialect.types import trino_type
 from trino_spark.functions import registry as _registry
 
@@ -190,6 +193,10 @@ class TrinoEngine:
         # open transaction's pins (None outside START TRANSACTION).
         self.dml_tables: dict[str, _dml.ManagedTable] = {}
         self._txn: dict | None = None
+        # The names relation resolution substitutes for a managed table's
+        # branch, version or metadata table, with the table they read
+        # (dialect/relations.py): access control checks and secures it.
+        self.derived: dict[str, _relations.Derived] = {}
         # Logical views: name -> defining Trino SQL (CreateViewTask).
         self.views: dict[str, str] = {}
         # CREATE SCHEMA names -> properties; the table namespace is flat.
@@ -274,102 +281,23 @@ class TrinoEngine:
                 pass  # never let a listener break the query path
 
     def _sql_inner(self, trino_sql: str) -> DataFrame:
-        if "@" in trino_sql and self.dml_tables:
-            # Branch refs t@b (grammar SqlBase.g4:80,221; Iceberg branch
-            # semantics): resolve BEFORE time travel so `t@b FOR VERSION
-            # AS OF n` pins a snapshot of the branch fork.
-            trino_sql = _branches.resolve(self, trino_sql)
-        if re.search(r"\bCURRENT_USER\b", trino_sql, re.IGNORECASE):
-            # CURRENT_USER (#currentUser) reflects SET SESSION AUTHORIZATION
-            # — substituted as a literal outside string literals.
-            _user = self.session_user.replace("'", "''")
-            trino_sql = _access.map_outside_literals(
-                trino_sql,
-                lambda p: re.sub(r"\bCURRENT_USER\b", f"'{_user}'", p, flags=re.IGNORECASE),
-            )
-        if re.search(r"\bversion\s*\(\s*\)", trino_sql, re.IGNORECASE):
-            # version() (#version, ServerInfoResource analog): the engine
-            # release string as a literal, like the reference's scalar.
-            from trino_spark import __version__
-
-            trino_sql = _access.map_outside_literals(
-                trino_sql,
-                lambda p: re.sub(
-                    r"\bversion\s*\(\s*\)", f"'{__version__}'", p, flags=re.IGNORECASE
-                ),
-            )
-        if re.search(r"(?<!\.\s)(?<!\.)\bcurrent_schema\b(?!\s*[.(])", trino_sql, re.IGNORECASE):
-            # current_schema niladic: the engine's own USE-tracked schema
-            # (the translate() fallback maps it to current_database() for
-            # raw spark.sql callers)
-            _sch = self._current_schema
-            trino_sql = _access.map_outside_literals(
-                trino_sql,
-                lambda p: re.sub(
-                    r"(?<!\.\s)(?<!\.)\bcurrent_schema\b(?!\s*[.(])",
-                    lambda _m: "'" + _sch.replace("'", "''") + "'",
-                    p,
-                    flags=re.IGNORECASE,
-                ),
-            )
-        if re.search(r"\bcurrent_groups\s*\(\s*\)", trino_sql, re.IGNORECASE):
-            # current_groups() (#currentGroups): the identity's group set.
-            # Our session identity model is roles, so the group list is the
-            # active role (empty for the unrestricted owner session).
-            _role = self._acl["current"]
-            _lit = (
-                "array('" + _role.replace("'", "''") + "')"
-                if _role
-                else "CAST(array() AS ARRAY<STRING>)"
-            )
-            trino_sql = _access.map_outside_literals(
-                trino_sql,
-                lambda p: re.sub(
-                    # replacement via lambda: a role containing backslashes
-                    # must not be parsed for group references
-                    r"\bcurrent_groups\s*\(\s*\)",
-                    lambda _m: _lit,
-                    p,
-                    flags=re.IGNORECASE,
-                ),
-            )
-        if re.search(r"\bFOR\s+(?:VERSION|TIMESTAMP)\s+AS\s+OF\b", trino_sql, re.IGNORECASE):
-            # Time travel (grammar SqlBase.g4 queryPeriod; Iceberg/Delta
-            # connector behavior): pin table refs to snapshot versions.
-            trino_sql = _dml.resolve_time_travel(self, trino_sql)
-        if self.catalogs:
-            # Dynamic catalog mounts (CREATE CATALOG; CatalogFactory.java):
-            # cat.schema.table refs resolve to lazily-registered views
-            # (jdbc mounts resolve natively through Spark's DSv2 catalog).
-            trino_sql = _cats.resolve(self, trino_sql)
-        if any(
-            k in trino_sql
-            for k in ("$snapshots", "$history", "$files", "$partitions", "$refs", "$properties")
-        ):
-            # Iceberg-style metadata tables over the snapshot log / current
-            # table directory (SnapshotsTable / HistoryTable / FilesTable /
-            # PartitionsTable analogs).
-            trino_sql = _dml.resolve_metadata_tables(self, trino_sql)
-        # The statement's kind, read once from its leading words (the role
-        # of SqlParser.createStatement): a head in _STATEMENTS picks its
-        # handler, any other statement is a query.
-        toks = tokenize(trino_sql)
+        # The statement's tokens, read once: the session niladics become
+        # literals, and the leading words pick its handler (the role of
+        # SqlParser.createStatement): a head in _STATEMENTS, else a query.
+        toks = _niladics(self, tokenize(trino_sql))
         words = head(toks)
-        start = sum(len(t.text) for t in toks[: lead(toks)])
         run, checked = _statement(words)
         if run is not None and not checked:
-            return run(self, trino_sql[start:].strip().rstrip(";"))
-        # information_schema and system tables (infoschema.TABLES): built
-        # now from the live engine, for the relations this statement reads;
-        # a CREATE VIEW keeps its text (building the view resolves them).
-        # The rewrite leaves the text before the first keyword as it was.
-        if run is not _dml.create_view:
-            trino_sql = infoschema.resolve(self, trino_sql)
+            return run(self, _text(toks))
+        # Every relation name (branch, version, metadata table, catalog
+        # mount, information_schema or system table) resolves here, once.
+        _relations.resolve(self, toks)
         # Access control (AccessControl SPI): every statement from here on
         # is checked against the active role's grants before it runs.
+        trino_sql = render(toks)
         _access.enforce(self, trino_sql)
         if run is not None:
-            return run(self, trino_sql[start:].strip().rstrip(";"))
+            return run(self, _text(toks))
         stripped = trino_sql.strip().rstrip(";")
         if words[:1] in (["SELECT"], ["WITH"], ["VALUES"], ["TABLE"]):
             # Row filters / column masks (ConnectorAccessControl
@@ -922,6 +850,50 @@ class TrinoEngine:
             return plan.toString()
 
 
+def _text(toks: list[Tok]) -> str:
+    """A statement's text from its first keyword, without the trailing ';'."""
+    return render(toks[lead(toks) :]).strip().rstrip(";")
+
+
+def _niladics(engine: TrinoEngine, toks: list[Tok]) -> list[Tok]:
+    """Replace, in place, the session niladics among the WORD tokens (never
+    text in a literal, a comment or a quoted identifier) with their values:
+    CURRENT_USER (#currentUser) reflects SET SESSION AUTHORIZATION;
+    version() (#version) is the engine release; current_schema, neither
+    qualified nor qualifying, is the USE-tracked schema (translate() maps
+    it to current_database() for raw spark.sql callers); current_groups()
+    (#currentGroups) is the active role, our identity model being roles
+    (empty for the owner session)."""
+    for i in range(len(toks) - 1, -1, -1):  # right to left: earlier indices stay put
+        u = toks[i].text.upper() if toks[i].kind == "WORD" else ""
+        if u not in _NILADICS:
+            continue
+        k = next_code(toks, i + 1)
+        p = prev_code(toks, i - 1)
+        qualified = p >= 0 and toks[p].is_sym(".")
+        after = toks[k].text if k < len(toks) and toks[k].kind == "SYM" else ""
+        end = next_code(toks, k + 1) if after == "(" else len(toks)
+        call = end < len(toks) and toks[end].is_sym(")")
+        if u == "CURRENT_USER":
+            value, end = infoschema.quote(engine.session_user), i
+        elif u == "CURRENT_SCHEMA" and after not in (".", "(") and not qualified:
+            value, end = infoschema.quote(engine._current_schema), i
+        elif u == "VERSION" and call:
+            from trino_spark import __version__
+
+            value = infoschema.quote(__version__)
+        elif u == "CURRENT_GROUPS" and call:
+            role = engine._acl["current"]
+            value = f"array({infoschema.quote(role)})" if role else "CAST(array() AS ARRAY<STRING>)"
+        else:
+            continue
+        toks[i : end + 1] = tokenize(value)
+    return toks
+
+
+_NILADICS = frozenset({"CURRENT_USER", "CURRENT_SCHEMA", "VERSION", "CURRENT_GROUPS"})
+
+
 def session_assignment(text: str) -> tuple[str, str]:
     """`SET SESSION k = v` -> (k, v): the value the engine records, which
     the HTTP server also hands back to the client."""
@@ -932,9 +904,10 @@ def session_assignment(text: str) -> tuple[str, str]:
 # Every statement kind that is not a query, by its head (tokenizer.head):
 # the function that runs it, and whether access.enforce checks it first.
 # The longest head a statement starts with wins. An unchecked statement
-# runs before infoschema.resolve and access.enforce: the prepared-statement
-# and routine statements, whose inner statements are dispatched (and
-# checked) on their own, and the role, grant, comment and CALL statements.
+# runs before relation resolution and access.enforce, on its text as
+# written: the prepared-statement, routine and CREATE VIEW statements,
+# whose inner statements are dispatched (and checked) on their own, and
+# the role, grant, comment and CALL statements.
 _STATEMENTS: dict[str, tuple[Callable[[TrinoEngine, str], DataFrame], bool]] = {
     "WITH FUNCTION": (TrinoEngine._with_function, False),
     "PREPARE": (TrinoEngine._prepare, False),
@@ -971,8 +944,8 @@ _STATEMENTS: dict[str, tuple[Callable[[TrinoEngine, str], DataFrame], bool]] = {
     "CREATE TABLE": (TrinoEngine._create_table, True),
     "ALTER TABLE": (_dml.alter_table, True),
     "SHOW CREATE TABLE": (TrinoEngine._show_create_table, True),
-    "CREATE VIEW": (_dml.create_view, True),
-    "CREATE OR REPLACE VIEW": (_dml.create_view, True),
+    "CREATE VIEW": (_dml.create_view, False),
+    "CREATE OR REPLACE VIEW": (_dml.create_view, False),
     "DROP VIEW": (_dml.drop_view, True),
     "ALTER VIEW": (_dml.alter_view, True),
     "SHOW CREATE VIEW": (_dml.show_create_view, True),

@@ -265,11 +265,13 @@ class RelRef:
     end: int
     name: str  # last part of the chain, unquoted, lower case
     alias: str | None  # unquoted, lower case
-    kw: str  # the FROM/JOIN/INTO/UPDATE/TABLE/USING that placed it
+    kw: str  # the FROM/JOIN/INTO/UPDATE/TABLE/USING/DESCRIBE/ANALYZE/FOR that placed it
     shadowed: bool  # an unqualified name an in-scope WITH definition binds
     # read by the statement: a FROM or JOIN relation, MERGE's USING source,
-    # or `TABLE t` as a query or table argument; not a write target or a
-    # DDL name (INTO t, UPDATE t, CREATE/ALTER/DROP/TRUNCATE TABLE t, ...)
+    # `TABLE t` as a query or table argument, or the table DESCRIBE,
+    # ANALYZE or SHOW STATS FOR names; not a write target or a
+    # DDL name (INTO t, UPDATE t, DELETE FROM t, CREATE/ALTER/DROP/TRUNCATE
+    # TABLE t, ...)
     read: bool
 
 
@@ -380,6 +382,7 @@ def structure(toks: list[Tok]) -> Structure:
         return any(d.name.lower() == name and a < i < z for d, a, z in scopes)
 
     relations: list[RelRef] = []
+    first = lead(toks)
     kw = None  # the keyword that opened a relation position, if one is open
     reads = False  # that position reads its relation
     via_paren = False  # the position was carried into a '('
@@ -408,14 +411,20 @@ def structure(toks: list[Tok]) -> Structure:
             kw = None
         elif u == "FROM":
             # every FROM clause at any depth, FROM-first queries included;
-            # not EXTRACT(x FROM y) or IS DISTINCT FROM
+            # not EXTRACT(x FROM y) or IS DISTINCT FROM. DELETE FROM t
+            # names a write target.
             if not arg_from[-1] and not distinct_from(i):
-                kw, reads, via_paren = "FROM", True, False
+                p = prev_code(toks, i - 1)
+                kw, via_paren = "FROM", False
+                reads = not (p >= 0 and toks[p].is_word("DELETE"))
                 lists.add(len(arg_from) - 1)
-        elif u in _REL_KW:
+        elif u in _REL_KW or (i == first and u in ("DESCRIBE", "ANALYZE")) or (
+            u == "FOR" and (p := prev_code(toks, i - 1)) >= 0 and toks[p].is_word("STATS")
+        ):
+            # DESCRIBE t, ANALYZE t and SHOW STATS FOR t read t
             p = prev_code(toks, i - 1)
             kw, via_paren = u, False
-            reads = u in ("JOIN", "USING") or (
+            reads = u in ("JOIN", "USING", "DESCRIBE", "ANALYZE", "FOR") or (
                 u == "TABLE" and not (p >= 0 and toks[p].is_word(*_TABLE_TARGET))
             )
         elif u in _LIST_END:

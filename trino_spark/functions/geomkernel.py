@@ -206,17 +206,6 @@ def to_ewkb(g, srid: int = 0) -> bytes:
     return wkb[:1] + struct.pack("<II", code, srid) + wkb[5:]
 
 
-def ewkb_srid(b: bytes) -> int:
-    b = bytes(b)
-    if len(b) < 9:
-        return 0
-    fmt = "<" if b[0] == 1 else ">"
-    code = struct.unpack_from(fmt + "I", b, 1)[0]
-    if code & _EWKB_SRID_FLAG:
-        return struct.unpack_from(fmt + "I", b, 5)[0]
-    return 0
-
-
 def from_wkb(b: bytes):
     def read(buf, off):
         little = buf[off] == 1

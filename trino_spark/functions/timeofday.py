@@ -64,10 +64,6 @@ def time_minute(nanos: Column | str) -> Column:
     return (F.floor(_c(nanos) / NANOS_PER_MINUTE) % 60).cast("long")
 
 
-def time_second(nanos: Column | str) -> Column:
-    return (F.floor(_c(nanos) / NANOS_PER_SECOND) % 60).cast("long")
-
-
 def time_millisecond(nanos: Column | str) -> Column:
     return (F.floor(_c(nanos) / 1_000_000) % 1000).cast("long")
 

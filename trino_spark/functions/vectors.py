@@ -45,11 +45,6 @@ def cosine_distance(a: Column | str, b: Column | str) -> Column:
     return F.lit(1.0) - cosine_similarity(a, b)
 
 
-def l2_distance(a: Column | str, b: Column | str) -> Column:
-    diff = F.zip_with(_d(a), _d(b), lambda x, y: (x - y) * (x - y))
-    return F.sqrt(F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x))
-
-
 def vector_normalize(a: Column | str) -> Column:
     """Unit-normalize an embedding (pre-normalizing lets downstream cosine
     top-k reduce to dot products — one multiply-add per dim per pair)."""

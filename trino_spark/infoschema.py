@@ -6,9 +6,9 @@ the system connector (main/connector/system/) are relations the analyzer
 resolves like any other table, and SHOW statements become SELECTs over
 them before planning (core/trino-main/.../sql/rewrite/
 ShowQueriesRewrite.java). Same here: TABLES maps each dotted name to a
-schema and a row builder, `resolve` points every relation reference to
-one at a temp view built from the live engine when a statement names it,
-and `SHOWS` turns SHOW into SELECTs over those names.
+schema and a row builder, `view_for` builds the temp view a relation
+reference to one resolves to (dialect/relations.py) when a statement
+names it, and `SHOWS` turns SHOW into SELECTs over those names.
 """
 
 from __future__ import annotations
@@ -22,7 +22,6 @@ from pyspark.sql import SparkSession
 from trino_spark.catalog import Described
 from trino_spark.dialect.dml import _norm_name, rows_result
 from trino_spark.dialect.rewrites import translate
-from trino_spark.dialect.tokenizer import Tok, render, structure, tokenize
 from trino_spark.dialect.types import trino_type
 
 
@@ -251,13 +250,13 @@ def _view(key: str) -> str:
     return "_" + key.replace(".", "_")
 
 
-# the temp views `resolve` builds; access control lets any role read them
+# the temp views `view_for` builds; access control lets any role read them
 VIEWS = frozenset(map(_view, TABLES))
 # a reference's name parts (unquoted, lower case) -> its TABLES key; the
 # flat `information_schema_columns` spelling resolves too
 _REFS = {tuple(k.split(".")): k for k in TABLES} | {(k.replace(".", "_"),): k for k in TABLES}
-# every name in _REFS contains one of these, in any case: a statement
-# without either is not tokenized here
+# every name in _REFS contains one of these, in any case: a view
+# definition without either reads no TABLES entry directly
 _GATE = re.compile("system|information_schema", re.IGNORECASE)
 
 
@@ -267,36 +266,26 @@ def _reads(sql: str, views: set[str]) -> bool:
     return bool(_GATE.search(sql)) or any(named)
 
 
-def resolve(engine, sql: str) -> str:
-    """Point each relation reference to a TABLES entry (any case, quoted
-    parts unquoted, never text inside a literal or a comment) at a temp
-    view of its rows, built from the live engine now. A view over them
-    (or over such a view) is re-planned from its definition when read, as
-    the reference re-analyzes a view's text on each query."""
+def live_views(engine) -> set[str]:
+    """The views that read a TABLES entry, directly or through another such
+    view: each read re-plans one from its definition, as the reference
+    re-analyzes a view's text on each query."""
     live: set[str] = set()
     while new := {n for n, d in engine.views.items() if n not in live and _reads(d, live)}:
         live |= new
-    if not _reads(sql, live):
-        return sql
-    toks = tokenize(sql)
-    built: set[str] = set()
-    for ref in reversed(structure(toks).relations):
-        parts = tuple(t.text.strip('"').lower() for t in toks[ref.start : ref.end : 2])
-        key = _REFS.get(parts)
-        if not ref.read or ref.shadowed:
-            continue
-        if key is None:
-            if parts[-1] in live and parts[-1] not in built:
-                engine.sql(engine.views[parts[-1]]).createOrReplaceTempView(parts[-1])
-                built.add(parts[-1])
-            continue
-        if key not in built:
-            table = TABLES[key]
-            rows = rows_result(engine.spark, table.rows(engine), table.ddl)
-            rows.createOrReplaceTempView(_view(key))
-            built.add(key)
-        toks[ref.start : ref.end] = [Tok("WORD", _view(key))]
-    return render(toks)
+    return live
+
+
+def view_for(engine, parts: tuple[str, ...]) -> str | None:
+    """The temp view of the TABLES entry a reference's name parts
+    (unquoted, lower case) spell, its rows built now from the live engine;
+    None for any other name."""
+    key = _REFS.get(parts)
+    if key is None:
+        return None
+    table = TABLES[key]
+    rows_result(engine.spark, table.rows(engine), table.ddl).createOrReplaceTempView(_view(key))
+    return _view(key)
 
 
 def _catalogs(text: str) -> str:

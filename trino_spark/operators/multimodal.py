@@ -189,12 +189,6 @@ def decode_images(df: DataFrame, impl: str = "stub") -> DataFrame:
     return df.mapInPandas(run, schema=IMAGE_FEATURE_SCHEMA)
 
 
-def frame_sample(df: DataFrame, every_nth: int = 10, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic 1-in-N 'frame' sampler (modulo on id) — the video
-    frame-sampling shape without a video decoder."""
-    return df.filter(F.col(id_col) % every_nth == 0)
-
-
 RESIZE_SCHEMA = "doc_id bigint, width int, height int, data binary"
 
 

@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from trino_spark.functions.vectors import cosine_similarity, dot_product, vector_normalize
+from trino_spark.functions.vectors import cosine_similarity, dot_product
 from trino_spark.operators.util import fan_out
 
 
@@ -219,12 +219,6 @@ def embedding_neardup_pairs(
         .filter(F.col("cos_sim") >= threshold)
         .select("id_a", "id_b", "cos_sim")
     )
-
-
-def normalize_corpus(corpus: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Pre-normalize embeddings so cosine reduces to dot product (do this
-    once at ingest on a real deployment)."""
-    return corpus.withColumn(vec_col, vector_normalize(F.col(vec_col)))
 
 
 def _train_centroids_sample(

@@ -144,8 +144,3 @@ def most_frequent_string(sketch: Column | str, n: int) -> Column:
         ),
         ",",
     )
-
-
-def error_bound(sketch: Column | str) -> Column:
-    """Upper bound on the undercount of any value (0 = sketch is exact)."""
-    return _c(sketch)["err"]

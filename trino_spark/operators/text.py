@@ -44,17 +44,6 @@ def bpe_ish_token_count(text: Column | str) -> Column:
     )
 
 
-def quality_score(text: Column | str) -> Column:
-    """Scalar [0,1] quality score combining the feature family — monotone in
-    'looks like prose'. Deterministic, documented weights."""
-    c = F.col(text) if isinstance(text, str) else text
-    n_tok = token_count(c)
-    mean_wl = F.when(n_tok > 0, F.length(F.regexp_replace(c, r"\s+", "")) / n_tok).otherwise(F.lit(0.0))
-    len_ok = F.when((n_tok >= 10) & (n_tok <= 100000), 1.0).otherwise(0.3)
-    wl_ok = F.when((mean_wl >= 2.0) & (mean_wl <= 12.0), 1.0).otherwise(0.4)
-    return F.round(len_ok * 0.6 + wl_ok * 0.4, 6)
-
-
 def lang_scores(text: Column | str) -> Column:
     """map<string,double> of per-language marker-hit ratios."""
     toks = tokens(normalize_text(F.col(text) if isinstance(text, str) else text))
