@@ -12,7 +12,12 @@ copy-on-write or table-record bookkeeping bugs (stale carry, missed
 partition, double apply, lost default) would surface as a state
 divergence. A seeded share of the statements (transaction statements
 included) starts with a block or line comment, as BI tools send them;
-DuckDB runs the same text.
+DuckDB runs the same text. Another seeded share takes the shapes a
+write's clause reader must get right: a CASE WHEN in an UPDATE or MERGE
+UPDATE SET, a string literal spelling WHERE/WHEN or an alias in a SET
+value, and a `default.`-qualified target (the engine's text only: DuckDB
+has no `default` schema). Both shares draw from generators of their own,
+so a seed's operations stay what they were.
 
 Usage: python scripts/dml_fuzz.py [n_ops] [seed]
 """
@@ -27,16 +32,21 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 _CATS = ["'red'", "'green'", "'blue'", "'gold'"]
+# SET values whose text spells a clause keyword or a MERGE alias
+_WORDY = ["'see WHERE clause'", "'WHEN red THEN'", "'s.cat WHEN t.k'"]
 
 
 def gen_op(
-    rng: random.Random, table: str, next_k: list[int], added: list[str]
+    rng: random.Random, table: str, next_k: list[int], added: list[str],
+    shape: random.Random | None = None,
 ) -> tuple[list[str], list[str]]:
     """One random DML/DDL op → (engine_sqls, duckdb_sqls).
 
     Most ops are one statement with one text; MERGE is emulated on the
     DuckDB side with UPDATE..FROM + anti-join INSERT (DuckDB 1.0 has no
-    MERGE)."""
+    MERGE). `shape`, when given, picks the clause shapes (CASE WHEN and
+    keyword-spelling literals in SET values) without drawing from `rng`."""
+    shape = shape or random.Random(0)
     choices = ["insert", "insert", "update_v", "update_cat", "delete", "merge",
                "alter_add", "insert_cols", "set_default", "rename"]
     if added:
@@ -61,13 +71,15 @@ def gen_op(
         return [stmt], [stmt]
     if kind == "update_v":
         m, r = rng.choice([(2, 0), (2, 1), (3, 0), (3, 2), (5, 1)])
-        stmt = (
-            f"UPDATE {table} SET v = v + {rng.randint(1, 9)} "
-            f"WHERE k % {m} = {r}"
-        )
+        d = rng.randint(1, 9)
+        value = f"v + {d}"
+        if shape.random() < 0.35:
+            value = f"CASE WHEN v > {shape.randint(10, 90)} THEN v - {d} ELSE v + {d} END"
+        stmt = f"UPDATE {table} SET v = {value} WHERE k % {m} = {r}"
         return [stmt], [stmt]
     if kind == "update_cat":
         a, b = rng.sample(_CATS, 2)
+        a = shape.choice(_WORDY) if shape.random() < 0.3 else a
         stmt = f"UPDATE {table} SET cat = {a} WHERE cat = {b} AND v < {rng.randint(20, 90)}"
         return [stmt], [stmt]
     if kind == "update_added":
@@ -110,13 +122,21 @@ def gen_op(
         vals = ", ".join(src_rows)
         src_rel = f"(SELECT * FROM (VALUES {vals}) AS z(k, cat, v)) s"
         ins_cols = "(k, cat, v)"
+        # the target's columns as MERGE (t.) and DuckDB's UPDATE..FROM spell them
+        sets = ["v = s.v + 1"] * 2
+        if shape.random() < 0.5:
+            x = shape.randint(10, 90)
+            sets = [f"v = CASE WHEN s.v > {x} THEN s.v ELSE {q}.v + 1 END" for q in ("t", table)]
+        if shape.random() < 0.3:
+            wordy = shape.choice(_WORDY)
+            sets = [f"{s}, cat = {wordy}" for s in sets]
         engine_stmt = (
             f"MERGE INTO {table} t USING {src_rel} ON t.k = s.k "
-            f"WHEN MATCHED THEN UPDATE SET v = s.v + 1 "
+            f"WHEN MATCHED THEN UPDATE SET {sets[0]} "
             f"WHEN NOT MATCHED THEN INSERT {ins_cols} VALUES (s.k, s.cat, s.v)"
         )
         duck = [
-            f"UPDATE {table} SET v = s.v + 1 FROM (VALUES {vals}) AS s(k, cat, v) "
+            f"UPDATE {table} SET {sets[1]} FROM (VALUES {vals}) AS s(k, cat, v) "
             f"WHERE {table}.k = s.k",
             f"INSERT INTO {table} {ins_cols} SELECT k, cat, v "
             f"FROM (VALUES {vals}) AS s(k, cat, v) "
@@ -126,6 +146,13 @@ def gen_op(
     lo = rng.randint(0, next_k[0])
     stmt = f"DELETE FROM {table} WHERE k BETWEEN {lo} AND {lo + rng.randint(0, 6)}"
     return [stmt], [stmt]
+
+
+def qualify(stmt: str, table: str) -> str:
+    """`stmt` with its target `table` spelled `default.<table>`."""
+    for kw in ("INSERT INTO", "DELETE FROM", "UPDATE", "MERGE INTO", "ALTER TABLE"):
+        stmt = stmt.replace(f"{kw} {table} ", f"{kw} default.{table} ", 1)
+    return stmt
 
 
 def fuzz_dml(
@@ -184,8 +211,9 @@ def fuzz_dml(
     txn_rollback = False
     txn_added_snapshot: list[str] = []
     use_txns = n_ops >= 10  # small runs stay plain-op (regression speed)
-    # its own generator, so a seed's operations stay what they were
+    # their own generators, so a seed's operations stay what they were
     lead_rng = random.Random(-seed)
+    shape_rng = random.Random(f"shape-{seed}")
 
     def lead() -> str:
         return lead_rng.choice(("", "", "", "/* fuzz */ ", "-- fuzz\n"))
@@ -202,7 +230,9 @@ def fuzz_dml(
             c = lead()
             eng.sql(c + "START TRANSACTION")
             con.execute(c + "BEGIN")
-        eng_ops, duck_ops = gen_op(rng, table, next_k, added)
+        eng_ops, duck_ops = gen_op(rng, table, next_k, added, shape_rng)
+        if shape_rng.random() < 0.3:
+            eng_ops = [qualify(s, table) for s in eng_ops]
         c = lead()
         eng_ops, duck_ops = [c + s for s in eng_ops], [c + s for s in duck_ops]
         op = "; ".join(eng_ops)

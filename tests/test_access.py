@@ -247,6 +247,59 @@ class TestEnforcementBreadth:
             eng.sql("CREATE TABLE acl_new AS SELECT 1 AS x")
 
 
+class TestQualifiedWriteTargets:
+    """A write's privilege is checked on the table its sink writes: the
+    target `default.t` is the managed table t, and MERGE's USING table
+    still needs SELECT."""
+
+    @pytest.fixture()
+    def eng(self, engine):
+        engine.sql("DROP TABLE IF EXISTS acl_q")
+        engine.sql("CREATE TABLE acl_q AS SELECT 1 AS x, 'a' AS s")
+        engine.sql("CREATE ROLE writer")
+        yield engine
+        engine.sql("SET ROLE NONE")
+        engine.sql("DROP TABLE IF EXISTS acl_q")
+
+    @pytest.mark.parametrize(
+        "priv, stmt, after",
+        [
+            ("INSERT", "INSERT INTO default.acl_q VALUES (2, 'b')", 2),
+            ("UPDATE", "UPDATE default.acl_q SET s = 'u' WHERE x = 1", 1),
+            ("DELETE", "DELETE FROM default.acl_q WHERE x = 1", 0),
+        ],
+    )
+    def test_privilege_on_the_written_table(self, eng, priv, stmt, after):
+        eng.sql("SET ROLE writer")
+        with pytest.raises(AccessDenied, match=f"lacks {priv} on acl_q"):
+            eng.sql(stmt)
+        eng.sql("SET ROLE NONE")
+        eng.sql(f"GRANT {priv} ON acl_q TO ROLE writer")
+        eng.sql("SET ROLE writer")
+        assert eng.sql(stmt).collect()[0].rows == 1
+        eng.sql("SET ROLE NONE")
+        assert eng.sql("SELECT count(*) AS c FROM acl_q").collect()[0].c == after
+
+    def test_qualified_merge_checks_target_and_source(self, eng):
+        eng.sql("DROP TABLE IF EXISTS acl_src")
+        eng.sql("CREATE TABLE acl_src AS SELECT 1 AS x, 'merged' AS name")
+        merge = (
+            "MERGE INTO default.acl_q t USING default.acl_src s ON t.x = s.x "
+            "WHEN MATCHED THEN UPDATE SET s = s.name"
+        )
+        eng.sql("GRANT UPDATE, INSERT, DELETE ON acl_q TO ROLE writer")
+        eng.sql("SET ROLE writer")
+        with pytest.raises(AccessDenied, match="lacks SELECT on acl_src"):
+            eng.sql(merge)
+        eng.sql("SET ROLE NONE")
+        eng.sql("GRANT SELECT ON acl_src TO ROLE writer")
+        eng.sql("SET ROLE writer")
+        assert eng.sql(merge).collect()[0].rows == 1
+        eng.sql("SET ROLE NONE")
+        assert eng.sql("SELECT s FROM acl_q").collect()[0].s == "merged"
+        eng.sql("DROP TABLE acl_src")
+
+
 class TestRowFiltersAndMasks:
     """ConnectorAccessControl.getRowFilters / getColumnMasks: per-role
     predicates and masking expressions applied to reads."""

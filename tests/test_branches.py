@@ -357,3 +357,20 @@ class TestBranchReferences:
             assert engine.sql(f"SELECT count(*) AS c FROM {view}").collect()[0].c == 20
         finally:
             engine.sql(f"DROP VIEW {view}")
+
+
+def test_new_branch_log_starts_at_its_source_version(engine, table):
+    # Iceberg's branch ref points at the snapshot it was created from:
+    # the fork lists that version, and time travel to it reads the
+    # fork's first state
+    engine.sql(f"INSERT INTO {table} VALUES (100, 'X', 9)")
+    engine.sql(f"CREATE BRANCH dev IN TABLE {table}")
+    refs = {r.name: r.version for r in engine.sql(f'SELECT * FROM "{table}$refs"').collect()}
+    assert refs == {"main": 2, "dev": 2}
+    at = f"SELECT count(*) AS c FROM {table}@dev FOR VERSION AS OF 2"
+    assert engine.sql(at).collect()[0].c == 26
+    engine.sql(f"DELETE FROM {table}@dev WHERE k = 100")
+    assert engine.sql(f"SELECT count(*) AS c FROM {table}@dev").collect()[0].c == 25
+    assert engine.sql(at).collect()[0].c == 26
+    branches = {r.branch: r.current_version for r in engine.sql(f"SHOW BRANCHES IN TABLE {table}").collect()}
+    assert branches == {"main": 2, "dev": 3}

@@ -4,6 +4,8 @@ CATALOGS, and 3-part name resolution across connector kinds.
 Reference: grammar SqlBase.g4 #createCatalog/#dropCatalog;
 CreateCatalogTask.java / CatalogFactory.java."""
 
+import re
+
 import pytest
 
 from trino_spark.dialect.engine import TrinoEngine
@@ -282,3 +284,40 @@ def test_describe_and_stats_name_a_mount_table(engine):
     assert [r.Column for r in engine.sql("DESCRIBE dsc.s.d").collect()] == ["a"]
     stats = engine.sql("SHOW STATS FOR dsc.s.d").collect()
     assert [r.row_count for r in stats if r.column_name is None] == [1.0]
+
+
+def test_mount_writes_read_their_clauses(engine, tmp_path):
+    # a column-list INSERT and a CTAS with WITH properties, on a memory
+    # and on a parquet mount: the sink reads the write's clauses, it
+    # does not hand the text after the name to the engine
+    engine.sql("CREATE CATALOG wmem USING memory")
+    engine.sql(f"CREATE CATALOG wpq USING parquet WITH (location = '{tmp_path}')")
+    for cat in ("wmem", "wpq"):
+        engine.sql(f"CREATE TABLE {cat}.s.m AS SELECT 1 AS a, 2 AS b")
+        assert engine.sql(f"INSERT INTO {cat}.s.m (b, a) VALUES (4, 3)").collect()[0].rows == 1
+        rows = engine.sql(f"SELECT a, b FROM {cat}.s.m ORDER BY a").collect()
+        assert [(r.a, r.b) for r in rows] == [(1, 2), (3, 4)]
+        n = engine.sql(f"CREATE TABLE {cat}.s.w WITH (format = 'PARQUET') AS SELECT 1 AS a")
+        assert n.collect()[0].rows == 1
+        assert engine.sql(f"SELECT a FROM {cat}.s.w").collect()[0].a == 1
+    engine.sql("DROP CATALOG wmem")
+    engine.sql("DROP CATALOG wpq")
+
+
+@pytest.mark.parametrize(
+    "stmt, form",
+    [
+        ("DELETE FROM {c}.s.m WHERE a = 1", "DELETE ... WHERE"),
+        ("UPDATE {c}.s.m SET a = 2", "UPDATE"),
+        ("MERGE INTO {c}.s.m t USING (SELECT 1 AS a) s ON t.a = s.a WHEN MATCHED THEN DELETE", "MERGE"),
+        ("CREATE TABLE {c}.s.e (a integer)", "CREATE TABLE without AS"),
+        ("CREATE TABLE {c}.s.p WITH (partitioned_by = ARRAY['a']) AS SELECT 1 AS a", "table property partitioned_by"),
+    ],
+)
+def test_mount_write_refuses_a_form_by_name(engine, stmt, form):
+    engine.sql("CREATE CATALOG rmem USING memory")
+    engine.sql("CREATE TABLE rmem.s.m AS SELECT 1 AS a")
+    with pytest.raises(ValueError, match=f"connector memory does not support {re.escape(form)}"):
+        engine.sql(stmt.format(c="rmem"))
+    assert engine.sql("SELECT count(*) AS c FROM rmem.s.m").collect()[0].c == 1
+    engine.sql("DROP CATALOG rmem")

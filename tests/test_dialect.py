@@ -804,6 +804,16 @@ class TestRound6RewritePasses:
         # unqualified niladic still substitutes
         assert "current_database()" in translate("SELECT current_schema")
 
+    def test_quoted_alias_spelling_a_niladic_is_a_name(self, spark):
+        """A quoted identifier that spells a niladic ("current_schema")
+        is a name: the niladic pass runs before quoted identifiers are
+        unquoted."""
+        from trino_spark.dialect.rewrites import translate
+
+        out = translate('SELECT 3 AS "current_schema", "current_catalog" FROM t')
+        assert "current_database" not in out and "'spark'" not in out
+        assert spark.sql(translate('SELECT 3 AS "current_schema"')).columns == ["current_schema"]
+
     def test_sketch_twophase_amf_capacity_partial(self):
         from trino_spark.dialect.rewrites import translate
 

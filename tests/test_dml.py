@@ -6,6 +6,8 @@ TableFinishOperator rowcount result (TableWriterOperator.java:69),
 MergeWriterOperator row routing (MergeWriterOperator.java:48), and the
 "connector does not support updates" guard for read-only sources."""
 
+import os
+
 import pytest
 
 from trino_spark.dialect import TrinoEngine
@@ -529,3 +531,95 @@ class TestVersionReferences:
             assert engine.sql("SELECT count(*) AS c FROM tv_v").collect()[0].c == 25
         finally:
             engine.sql("DROP VIEW tv_v")
+
+
+class TestWriteClauses:
+    """A write's target and clauses are read once from its tokens
+    (dialect/writes.py): a clause keyword inside a literal, a subquery or
+    CASE ... END ends no clause, an alias inside a literal is not
+    rebound, and a schema-qualified target names the managed table."""
+
+    @pytest.fixture()
+    def wt(self, engine):
+        engine.sql("DROP TABLE IF EXISTS wc_t")
+        engine.sql("CREATE TABLE wc_t AS SELECT * FROM (VALUES (1, 'a'), (2, 'b'), (3, 'c'), (4, 'd')) AS v(k, s)")
+        yield "wc_t"
+        engine.sql("DROP TABLE IF EXISTS wc_t")
+
+    def _s(self, engine, k):
+        return engine.sql(f"SELECT s FROM wc_t WHERE k = {k}").collect()[0].s
+
+    def test_merge_update_set_with_case_when(self, engine, wt):
+        n = _rows(engine.sql(
+            "MERGE INTO wc_t t USING (SELECT 1 AS k UNION ALL SELECT 2) s ON t.k = s.k "
+            "WHEN MATCHED THEN UPDATE SET s = CASE WHEN s.k > 1 THEN 'pos' ELSE 'neg' END "
+            "WHEN NOT MATCHED THEN INSERT (k, s) VALUES (s.k, 'new')"
+        ))
+        assert n == 2
+        assert (self._s(engine, 1), self._s(engine, 2), self._s(engine, 3)) == ("neg", "pos", "c")
+
+    def test_merge_alias_inside_a_literal_is_kept(self, engine, wt):
+        engine.sql(
+            "MERGE INTO wc_t t USING (SELECT 1 AS k) s ON t.k = s.k "
+            "WHEN MATCHED THEN UPDATE SET s = 's.k WHEN t.s'"
+        )
+        assert self._s(engine, 1) == "s.k WHEN t.s"
+
+    def test_update_literal_with_where(self, engine, wt):
+        assert _rows(engine.sql("UPDATE wc_t SET s = 'see WHERE clause' WHERE k = 2")) == 1
+        assert self._s(engine, 2) == "see WHERE clause"
+        assert self._s(engine, 1) == "a"
+
+    def test_update_subquery_with_where(self, engine, wt):
+        n = _rows(engine.sql("UPDATE wc_t SET s = (SELECT max(s) FROM wc_t WHERE k = 4) WHERE k = 3"))
+        assert n == 1
+        assert self._s(engine, 3) == "d"
+        assert self._s(engine, 1) == "a"
+
+    def test_schema_qualified_targets(self, engine, wt):
+        assert _rows(engine.sql("INSERT INTO default.wc_t VALUES (5, 'e')")) == 1
+        assert _rows(engine.sql("DELETE FROM default.wc_t WHERE k = 1")) == 1
+        assert _rows(engine.sql("UPDATE default.wc_t SET s = 'B' WHERE k = 2")) == 1
+        engine.sql(
+            "MERGE INTO default.wc_t t USING (SELECT 3 AS k) s ON t.k = s.k "
+            "WHEN MATCHED THEN UPDATE SET s = 'C'"
+        )
+        got = {r.k: r.s for r in engine.sql("SELECT k, s FROM wc_t").collect()}
+        assert got == {2: "B", 3: "C", 4: "d", 5: "e"}
+        engine.sql("ALTER TABLE default.wc_t ADD COLUMN z bigint")
+        assert engine.sql("SELECT * FROM wc_t").columns == ["k", "s", "z"]
+        engine.sql("DROP TABLE IF EXISTS wc_u")
+        engine.sql("DROP TABLE IF EXISTS wc_e")
+        try:
+            assert _rows(engine.sql("CREATE TABLE default.wc_u AS SELECT k FROM wc_t")) == 4
+            engine.sql("CREATE TABLE default.wc_e (a integer)")
+            assert "wc_u" in engine.dml_tables and "wc_e" in engine.dml_tables
+            engine.sql("CREATE VIEW default.wc_v AS SELECT count(*) AS c FROM wc_u")
+            assert engine.sql("SELECT c FROM wc_v").collect()[0].c == 4
+        finally:
+            engine.sql("DROP VIEW IF EXISTS wc_v")
+            engine.sql("DROP TABLE IF EXISTS default.wc_u")
+            engine.sql("DROP TABLE IF EXISTS wc_e")
+
+    def test_column_definitions_take_ctas_properties(self, engine):
+        engine.sql("DROP TABLE IF EXISTS wc_p")
+        engine.sql(
+            "CREATE TABLE wc_p (a integer, p varchar) WITH (partitioned_by = ARRAY['p'], format = 'PARQUET')"
+        )
+        try:
+            assert engine.dml_tables["wc_p"].partition_by == ["p"]
+            engine.sql("INSERT INTO wc_p VALUES (1, 'x'), (2, 'y')")
+            parts = [d for d in os.listdir(engine.dml_tables["wc_p"].path) if d.startswith("p=")]
+            assert sorted(parts) == ["p=x", "p=y"]
+            assert engine.sql("SELECT * FROM wc_p ORDER BY a").columns == ["a", "p"]
+        finally:
+            engine.sql("DROP TABLE IF EXISTS wc_p")
+        with pytest.raises(ValueError, match="parquet only"):
+            engine.sql("CREATE TABLE wc_o (a integer, p varchar) WITH (partitioned_by = ARRAY['p'], format = 'ORC')")
+        assert "wc_o" not in engine.dml_tables
+
+    def test_insert_column_list_arity(self, engine, wt):
+        with pytest.raises(ValueError, match="arity mismatch"):
+            engine.sql("INSERT INTO wc_t (k) VALUES (9, 'z')")
+        with pytest.raises(ValueError, match="column not found"):
+            engine.sql("INSERT INTO wc_t (k, nope) VALUES (9, 'z')")

@@ -38,6 +38,13 @@ from trino_spark.dialect.dml import _norm_name, _unquote, rows_result, txn_snaps
 from trino_spark.dialect.tokenizer import Tok, head, render, split_args, structure, tokenize
 
 _PRIVS = ("SELECT", "INSERT", "UPDATE", "DELETE")
+# the privileges a statement needs on its target, by its head; ALTER, DROP
+# and CREATE TABLE need ownership, proxied as every privilege on the name
+_TARGET_PRIVS = {
+    "INSERT INTO": ("INSERT",), "DELETE FROM": ("DELETE",), "UPDATE": ("UPDATE",),
+    "MERGE INTO": ("UPDATE", "INSERT", "DELETE"), "TRUNCATE TABLE": ("DELETE",),
+    **dict.fromkeys(("ALTER TABLE", "DROP TABLE", "CREATE TABLE"), _PRIVS),
+}
 
 # How often a killed query's job group is cancelled again while its
 # query record is still live.
@@ -300,7 +307,7 @@ def enforce(engine, sql: str) -> None:
     grants = set().union(*(st["roles"].get(r, set()) for r in eff))
     toks = tokenize(sql)
     words = head(toks)
-    kind = " ".join(words[:2])
+    kind = "UPDATE" if words[:1] == ["UPDATE"] else " ".join(words[:2])
     refs = structure(toks).relations
     # a derived name (t@b, a version, "t$files") is checked as the table it
     # reads: a privilege on t covers its branches, snapshots and metadata
@@ -308,26 +315,10 @@ def enforce(engine, sql: str) -> None:
     derived = engine.derived
     tgt = refs[0].name if refs else ""
     tgt = derived[tgt].base if tgt in derived else tgt
-    needed: list[tuple[str, str]] = []
-    skip_select: set[str] = set()
-    if kind == "INSERT INTO":
-        needed.append(("INSERT", tgt))
-    elif kind == "DELETE FROM":
-        needed.append(("DELETE", tgt))
-        skip_select.add(tgt)
-    elif words[:1] == ["UPDATE"]:
-        needed.append(("UPDATE", tgt))
-    elif kind == "MERGE INTO":
-        needed += [("UPDATE", tgt), ("INSERT", tgt), ("DELETE", tgt)]
-        skip_select.add(tgt)
-    elif kind == "TRUNCATE TABLE":
-        needed.append(("DELETE", tgt))
-    elif kind in ("ALTER TABLE", "DROP TABLE", "CREATE TABLE"):
-        # Ownership proxy: the role must hold every privilege on the name.
-        # A CTAS target does not exist yet, so the not-a-relation skip
-        # below must not exempt it.
-        for p in _PRIVS:
-            needed.append((p, f"!{tgt}" if kind == "CREATE TABLE" else tgt))
+    # A CTAS target does not exist yet, so the not-a-relation skip below
+    # must not exempt it.
+    needed = [(p, f"!{tgt}" if kind == "CREATE TABLE" else tgt) for p in _TARGET_PRIVS.get(kind, ())]
+    skip_select = {tgt} if kind in ("DELETE FROM", "MERGE INTO") else set()
     for ref in refs:
         name = derived[ref.name].base if ref.name in derived else ref.name
         if not ref.read or ref.shadowed or name.startswith("__"):

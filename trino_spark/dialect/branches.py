@@ -29,7 +29,6 @@ engine-managed FORK of the table:
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame
 
@@ -39,38 +38,23 @@ from trino_spark.dialect.dml import (
     _commit,
     _discard,
     _link_tree,
-    _norm_name,
     _stored,
     fork_name,
     refresh_infoschema,
     rows_result,
     txn_snapshot_if_needed,
 )
+from trino_spark.dialect.writes import named
 
-_CREATE_RX = re.compile(
-    r"CREATE\s+(?:OR\s+REPLACE\s+)?BRANCH\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<branch>\w+)\s+"
-    r"(?:WITH\s*\([^)]*\)\s+)?IN\s+TABLE\s+(?P<table>[\w.\"]+)"
-    r"(?:\s+FROM\s+(?P<from>\w+))?\s*$",
-    re.IGNORECASE,
-)
-_DROP_RX = re.compile(
-    r"DROP\s+BRANCH\s+(?P<ie>IF\s+EXISTS\s+)?(?P<branch>\w+)\s+IN\s+TABLE\s+(?P<table>[\w.\"]+)\s*$",
-    re.IGNORECASE,
-)
-_FF_RX = re.compile(
-    r"ALTER\s+BRANCH\s+(?P<src>\w+)\s+IN\s+TABLE\s+(?P<table>[\w.\"]+)\s+"
-    r"FAST\s+FORWARD\s+TO\s+(?P<tgt>\w+)\s*$",
-    re.IGNORECASE,
-)
-_SHOW_RX = re.compile(
-    r"SHOW\s+BRANCHES\s+(?:FROM|IN)\s+TABLE\s+(?P<table>[\w.\"]+)\s*$", re.IGNORECASE
-)
+def _tail(rest: list) -> list[str]:
+    """The words after a branch statement's table name, in lower case."""
+    return [t.text.lower() for t in rest if t.kind != "WS"]
 
 
 def _table(engine, name: str) -> ManagedTable:
-    rec = engine.dml_tables.get(_norm_name(name))
+    rec = engine.dml_tables.get(name)
     if rec is None:
-        raise ValueError(f"branching requires a managed table, got: {_norm_name(name)}")
+        raise ValueError(f"branching requires a managed table, got: {name}")
     return rec
 
 
@@ -87,24 +71,28 @@ def _branch(engine, table: ManagedTable, branch: str) -> ManagedTable:
 
 
 def create_branch(engine, stripped: str) -> DataFrame:
-    m = _CREATE_RX.match(stripped)
-    if not m:
+    # CREATE [OR REPLACE] BRANCH [IF NOT EXISTS] b [WITH (...)] IN TABLE t [FROM src]
+    branch, if_exists, _ = named(stripped, "BRANCH")
+    name, _, rest = named(stripped, "TABLE")
+    table, tail = _table(engine, name), _tail(rest)
+    if tail and (len(tail) != 2 or tail[0] != "from"):
         raise ValueError(f"cannot parse CREATE BRANCH: {stripped}")
-    table, branch = _table(engine, m.group("table")), m.group("branch").lower()
     if branch in table.branches:
-        if m.group("ine"):
+        if if_exists:
             return rows_result(engine.spark, [(branch,)], "branch: string")
-        if not re.match(r"CREATE\s+OR\s+REPLACE", stripped, re.IGNORECASE):
+        if stripped.split()[1].upper() != "OR":
             raise ValueError(f"branch already exists: {branch}")
         _drop_fork(engine, table, branch)
-    src = _branch(engine, table, (m.group("from") or "main").lower())
+    src = _branch(engine, table, tail[1] if tail else "main")
     # a fork starts with its source's declared columns, layout and column
-    # defaults and comments, and its data as shared inodes: fork cost = metadata
+    # defaults and comments, its data as shared inodes (fork cost =
+    # metadata), and its log at the version it forks: Iceberg's branch ref
+    # points at the snapshot it was created from
     fork = _clear(
         engine,
         ManagedTable(
             fork_name(table.name, branch), src.columns, src.partition_by, base=table.name,
-            defaults=dict(src.defaults), comments=dict(src.comments),
+            defaults=dict(src.defaults), comments=dict(src.comments), log=[dict(src.log[-1])],
         ),
     )
     os.makedirs(fork.path)
@@ -118,12 +106,10 @@ def create_branch(engine, stripped: str) -> DataFrame:
 
 
 def drop_branch(engine, stripped: str) -> DataFrame:
-    m = _DROP_RX.match(stripped)
-    if not m:
-        raise ValueError(f"cannot parse DROP BRANCH: {stripped}")
-    table, branch = _table(engine, m.group("table")), m.group("branch").lower()
+    branch, if_exists, _ = named(stripped, "BRANCH")
+    table = _table(engine, named(stripped, "TABLE")[0])
     if branch not in table.branches:
-        if m.group("ie"):
+        if if_exists:
             return rows_result(engine.spark, [(branch,)], "branch: string")
         raise ValueError(f"Branch '{branch}' does not exist")
     _drop_fork(engine, table, branch)
@@ -131,11 +117,12 @@ def drop_branch(engine, stripped: str) -> DataFrame:
 
 
 def fast_forward(engine, stripped: str) -> DataFrame:
-    m = _FF_RX.match(stripped)
-    if not m:
+    # ALTER BRANCH src IN TABLE t FAST FORWARD TO tgt
+    name, _, rest = named(stripped, "TABLE")
+    table, tail, src = _table(engine, name), _tail(rest), named(stripped, "BRANCH")[0]
+    if tail[:3] != ["fast", "forward", "to"] or len(tail) != 4:
         raise ValueError(f"cannot parse ALTER BRANCH: {stripped}")
-    table = _table(engine, m.group("table"))
-    src, tgt = m.group("src").lower(), m.group("tgt").lower()
+    tgt = tail[3].strip('"')
     content = _stored(engine, _branch(engine, table, tgt))
     n = _commit(engine, _branch(engine, table, src), content, operation=f"fast_forward_from_{tgt}")
     return rows_result(
@@ -144,10 +131,7 @@ def fast_forward(engine, stripped: str) -> DataFrame:
 
 
 def show_branches(engine, stripped: str) -> DataFrame:
-    m = _SHOW_RX.match(stripped)
-    if not m:
-        raise ValueError(f"cannot parse SHOW BRANCHES: {stripped}")
-    table = _table(engine, m.group("table"))
+    table = _table(engine, named(stripped, "TABLE")[0])
     rows = [("main", table.version, None)] + [
         (b, _branch(engine, table, b).version, created_from)
         for b, created_from in sorted(table.branches.items())

@@ -26,26 +26,16 @@ keep full pushdown/pruning because they ARE plain parquet scans.
 
 from __future__ import annotations
 
+import json
 import os
-import re
+import shutil
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql.types import StructType
 
-from trino_spark.dialect.dml import rows_result
-from trino_spark.dialect.tokenizer import head, tokenize
-
-_CREATE_RX = re.compile(
-    r"CREATE\s+CATALOG\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<name>\"[^\"]+\"|\w+)\s+"
-    r"USING\s+(?P<conn>\w+)"
-    r"(?:\s+COMMENT\s+'(?P<comment>[^']*)')?"
-    r"(?:\s+WITH\s*\((?P<props>.*)\))?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_DROP_RX = re.compile(
-    r"DROP\s+CATALOG\s+(?P<ie>IF\s+EXISTS\s+)?(?P<name>\"[^\"]+\"|\w+)"
-    r"(?:\s+(?:CASCADE|RESTRICT))?\s*$",
-    re.IGNORECASE,
-)
+from trino_spark.dialect.dml import align_insert, rows_result
+from trino_spark.dialect.tokenizer import next_code
+from trino_spark.dialect.writes import named, properties, unquote
 
 _CONNECTORS = (
     "parquet",
@@ -67,32 +57,25 @@ _CONNECTORS = (
 _FILE_CONNECTORS = ("parquet", "hive", "csv", "json", "orc", "text")
 
 
-def _parse_props(txt: str | None) -> dict[str, str]:
-    """``k = 'v', k2 = 'v2'`` catalog properties (reference: the
-    catalog-properties map of CreateCatalogTask)."""
-    props: dict[str, str] = {}
-    for m in re.finditer(r"([\w.]+)\s*=\s*(?:'([^']*)'|(\w+))", txt or ""):
-        props[m.group(1).lower()] = m.group(2) if m.group(2) is not None else m.group(3)
-    return props
-
-
 def create_catalog(engine, stripped: str) -> DataFrame:
-    m = _CREATE_RX.match(stripped)
-    if not m:
+    # CREATE CATALOG [IF NOT EXISTS] name USING connector [COMMENT '...'] [WITH (...)]
+    name, if_exists, rest = named(stripped, "CATALOG")
+    code = [t for t in rest if t.kind != "WS"]
+    if len(code) < 2 or not code[0].is_word("USING"):
         raise ValueError(f"cannot parse CREATE CATALOG: {stripped}")
     _require_owner(engine, "CREATE CATALOG")
-    name = m.group("name").strip('"').lower()
-    conn = m.group("conn").lower()
+    conn = code[1].text.lower()
     mounts = engine.catalogs
     if name in mounts or name == "spark":
-        if m.group("ine"):
+        if if_exists:
             return _row(engine, name)
         raise ValueError(f"catalog already exists: {name}")
     if conn not in _CONNECTORS:
         raise ValueError(
             f"unknown connector: {conn} (supported: {', '.join(_CONNECTORS)})"
         )
-    props = _parse_props(m.group("props"))
+    k = next((i for i, t in enumerate(rest) if t.is_word("WITH")), None)
+    props = {} if k is None else properties(rest, next_code(rest, k + 1))
     if conn in _FILE_CONNECTORS:
         loc = props.get("location")
         if not loc or not os.path.isdir(loc):
@@ -106,21 +89,18 @@ def create_catalog(engine, stripped: str) -> DataFrame:
     mounts[name] = {
         "connector": conn,
         "properties": props,
-        "comment": m.group("comment") or "",
+        "comment": unquote(code[3]) if len(code) > 3 and code[2].is_word("COMMENT") else "",
         "views": set(),
     }
     return _row(engine, name)
 
 
 def drop_catalog(engine, stripped: str) -> DataFrame:
-    m = _DROP_RX.match(stripped)
-    if not m:
-        raise ValueError(f"cannot parse DROP CATALOG: {stripped}")
+    name, if_exists, _ = named(stripped, "CATALOG")  # CASCADE | RESTRICT alike
     _require_owner(engine, "DROP CATALOG")
-    name = m.group("name").strip('"').lower()
     mounts = engine.catalogs
     if name not in mounts:
-        if m.group("ie"):
+        if if_exists:
             return _row(engine, name)
         raise ValueError(f"catalog not found: {name}")
     mount = mounts.pop(name)
@@ -174,10 +154,9 @@ def view_for(engine, cat: str, schema: str, table: str) -> str | None:
     if view in mount["views"]:
         return view
     conn = mount["connector"]
-    if conn in ("parquet", "hive", "csv", "json", "orc", "text"):
-        fmt = "parquet" if conn == "hive" else conn
-        ext = {"parquet": ".parquet", "csv": ".csv", "json": ".json",
-               "orc": ".orc", "text": ".txt"}[fmt]
+    if conn in _FILE_CONNECTORS:
+        ext = {"parquet": ".parquet", "hive": ".parquet", "csv": ".csv", "json": ".json",
+               "orc": ".orc", "text": ".txt"}[conn]
         loc = mount["properties"]["location"]
         path = os.path.join(loc, schema, table)
         if not os.path.exists(path):
@@ -186,17 +165,7 @@ def view_for(engine, cat: str, schema: str, table: str) -> str | None:
             path += ext
         if not os.path.exists(path):
             raise ValueError(f"table not found: {cat}.{schema}.{table}")
-        reader = spark.read
-        if fmt == "csv":
-            # HiveStorageFormat CSV defaults; catalog properties override
-            # (header / delimiter / inferschema as 'true'/'false' strings)
-            p = mount["properties"]
-            reader = reader.options(
-                header=p.get("header", "true"),
-                sep=p.get("delimiter", ","),
-                inferSchema=p.get("inferschema", "true"),
-            )
-        reader.format(fmt).load(path).createOrReplaceTempView(view)
+        _read_files(spark, mount, path).createOrReplaceTempView(view)
     elif conn == "tpch":
         from trino_spark.sources import tpchgen
 
@@ -211,7 +180,7 @@ def view_for(engine, cat: str, schema: str, table: str) -> str | None:
         return f"{tpcdsgen.PREFIX}{table}"
     elif conn == "memory":
         # plugin/trino-memory MemoryPagesStore.java: tables exist only if
-        # written (CTAS/INSERT via try_execute_dml registers the view).
+        # written (CTAS/INSERT via write registers the view).
         if (schema, table) not in mount.setdefault("tables", {}):
             raise ValueError(f"table not found: {cat}.{schema}.{table}")
         return view
@@ -239,206 +208,121 @@ def view_for(engine, cat: str, schema: str, table: str) -> str | None:
     return view
 
 
-_DML_TARGET_RX = re.compile(
-    r"(?:INSERT\s+INTO|CREATE\s+TABLE(?:\s+IF\s+NOT\s+EXISTS)?|DROP\s+TABLE(?:\s+IF\s+EXISTS)?|DELETE\s+FROM|TRUNCATE\s+TABLE)\s+"
-    r"([A-Za-z_]\w*)\.([A-Za-z_]\w*)\.([A-Za-z_]\w*)",
-    re.IGNORECASE,
-)
-
-
-def try_execute_dml(engine, stripped: str) -> DataFrame | None:
-    """DML whose target is a mounted memory/blackhole table (reference:
-    the connector page-sink path — MemoryPageSinkProvider stores pages,
-    BlackHolePageSink discards them and keeps only counts). Returns None
-    for targets that are not catalog-qualified mounts, letting the
-    engine-managed DML layer handle them."""
-    m = _DML_TARGET_RX.match(stripped)
-    if not m:
-        return None
-    cat, schema, table = (g.lower() for g in m.groups())
-    mount = engine.catalogs.get(cat)
-    if mount is None:
-        return None
-    conn = mount["connector"]
-    if conn in ("parquet", "hive", "csv", "json", "orc"):
-        return _file_catalog_dml(engine, mount, stripped, m)
-    if conn not in ("memory", "blackhole"):
-        raise ValueError(f"catalog {cat} ({conn}) does not support writes")
-    spark = engine.spark
-    up0 = head(tokenize(m.group(0)))[0]
-    tables = mount.setdefault("tables", {})
-    view = f"__cat_{cat}_{schema}_{table}"
-    if up0 == "DROP":
-        if (schema, table) in tables:
-            tables.pop((schema, table))
-            spark.catalog.dropTempView(view)
-        elif "IF EXISTS" not in stripped.upper():
-            raise ValueError(f"table not found: {cat}.{schema}.{table}")
-        return rows_result(spark, 0)
-    if up0 in ("DELETE", "TRUNCATE"):
-        # memory connector supports whole-table delete only (the
-        # reference's MemoryMetadata has no row-level delete either).
-        if re.search(r"\bWHERE\b", stripped, re.IGNORECASE):
-            raise ValueError(f"connector {conn} supports only whole-table DELETE")
-        if (schema, table) not in tables:
-            raise ValueError(f"table not found: {cat}.{schema}.{table}")
-        if conn == "memory":
-            empty = _pages(spark, [], tables[(schema, table)])
-            empty.createOrReplaceTempView(view)
-        return rows_result(spark, 0)
-    # INSERT INTO / CTAS: evaluate the source query through the engine so
-    # dialect SQL, routines, and security rewrites all apply.
-    rest = stripped[m.end():].lstrip()
-    if up0 == "CREATE":
-        rest = re.sub(r"^AS\s+", "", rest, flags=re.IGNORECASE)
-        if (schema, table) in tables and "IF NOT EXISTS" not in stripped.upper():
-            raise ValueError(f"table already exists: {cat}.{schema}.{table}")
-    src = engine.sql(rest)
-    if conn == "blackhole":
-        n = src.count()  # swallow: count is the only thing retained
-        tables[(schema, table)] = src.schema
-        return rows_result(spark, n)
-    if up0 == "INSERT" and (schema, table) in tables:
-        # Positional alignment to the table layout (the reference's
-        # INSERT column rule), like dml._insert does for managed tables.
-        tgt = tables[(schema, table)]
-        if len(src.columns) != len(tgt.fields):
-            raise ValueError(
-                f"INSERT arity mismatch: {len(src.columns)} values for {len(tgt.fields)} columns"
-            )
-        from pyspark.sql import functions as F
-
-        src = src.toDF(*[f.name for f in tgt.fields]).select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in tgt.fields]
-        )
-    new_rows = src.collect()  # memory connector IS driver-resident, like
-    # the reference's MemoryPagesStore (worker-memory tables) — small
-    # dimension/staging data only, not a 100 TB path.
-    if up0 == "INSERT" and (schema, table) in tables:
-        all_rows = spark.table(view).collect() + new_rows
-    else:
-        all_rows = new_rows
-    _pages(spark, all_rows, src.schema).createOrReplaceTempView(view)
-    tables[(schema, table)] = src.schema
-    mount["views"].add(view)
-    return rows_result(spark, len(new_rows))
-
-
-def _file_catalog_dml(engine, mount, stripped: str, m: re.Match) -> DataFrame:
-    """Write path of the parquet/hive file catalogs (reference: the hive
-    connector's HivePageSinkProvider — CTAS creates
-    <location>/<schema>/<table>/, INSERT appends files, DROP removes the
-    directory, TRUNCATE rewrites it empty). All writes are distributed
-    Spark writes (no driver materialization — unlike the memory
-    connector this IS a 100 TB path)."""
-    import shutil
-
-    spark = engine.spark
-    cat, schema, table = (g.lower() for g in m.groups())
+def _read_files(spark, mount, path: str):
+    """A file mount's table at `path` (reference: HiveStorageFormat's
+    readers; the catalog's csv options override the defaults)."""
     conn = mount["connector"]
     fmt = "parquet" if conn == "hive" else conn
-    loc = mount["properties"]["location"]
-    pdir = os.path.join(loc, schema, table)
-    view = f"__cat_{cat}_{schema}_{table}"
-    up0 = head(tokenize(m.group(0)))[0]
-
-    def _read(path):
-        reader = spark.read
-        if fmt == "csv":
-            p = mount["properties"]
-            reader = reader.options(
-                header=p.get("header", "true"),
-                sep=p.get("delimiter", ","),
-                inferSchema=p.get("inferschema", "true"),
-            )
-        # TRUNCATE leaves csv/json directories with zero data rows —
-        # schema inference would fail, so the truncate writes a sidecar
-        # (underscore-prefixed: invisible to Spark's file listing) and
-        # reads apply it explicitly.
-        sidecar = os.path.join(path, "_ts_schema.json")
-        if fmt in ("csv", "json") and os.path.isfile(sidecar):
-            import json as _json
-
-            from pyspark.sql.types import StructType
-
-            with open(sidecar) as fh:
-                reader = reader.schema(StructType.fromJson(_json.load(fh)))
-            if fmt == "csv":
-                reader = reader.option("inferSchema", "false")
-        return reader.format(fmt).load(path)
-
-    def _writer(df):
-        w = df.write
-        if fmt == "csv":
-            w = w.option("header", mount["properties"].get("header", "true"))
-        return w.format(fmt)
-
-    def _invalidate() -> None:
-        if view in mount["views"]:
-            spark.catalog.dropTempView(view)
-            mount["views"].discard(view)
-
-    if up0 == "DROP":
-        if os.path.isdir(pdir):
-            shutil.rmtree(pdir)
-        elif "IF EXISTS" not in stripped.upper():
-            raise ValueError(f"table not found: {cat}.{schema}.{table}")
-        _invalidate()
-        return rows_result(spark, 0)
-    if up0 in ("DELETE", "TRUNCATE"):
-        if re.search(r"\bWHERE\b", stripped, re.IGNORECASE):
-            raise ValueError(
-                "file catalogs support whole-table DELETE only (row-level "
-                "DML lives in the engine-managed snapshot tables)"
-            )
-        if not os.path.isdir(pdir):
-            raise ValueError(f"table not found: {cat}.{schema}.{table}")
-        # capture the schema, then write a source-independent empty frame
-        # (overwriting a path the plan still reads from is undefined)
-        tgt_schema = _read(pdir).schema
-        empty = _pages(spark, [], tgt_schema)
-        _writer(empty).mode("overwrite").save(pdir)
-        if fmt in ("csv", "json"):
-            # zero-row csv/json cannot be schema-inferred on re-read —
-            # persist the captured schema for _read to apply
-            import json as _json
-
-            with open(os.path.join(pdir, "_ts_schema.json"), "w") as fh:
-                _json.dump(tgt_schema.jsonValue(), fh)
-        _invalidate()
-        return rows_result(spark, 0)
-    rest = stripped[m.end():].lstrip()
-    if up0 == "CREATE":
-        rest = re.sub(r"^AS\s+", "", rest, flags=re.IGNORECASE)
-        if os.path.isdir(pdir):
-            if "IF NOT EXISTS" in stripped.upper():
-                return rows_result(spark, 0)
-            raise ValueError(f"table already exists: {cat}.{schema}.{table}")
-    elif not os.path.isdir(pdir):
-        raise ValueError(f"table not found: {cat}.{schema}.{table}")
-    # evaluate the source through the engine so dialect SQL, routines and
-    # security rewrites all apply; count rides the write via Observation
-    # (no second evaluation of the source plan)
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    src = engine.sql(rest)
-    if up0 == "INSERT":
-        tgt = _read(pdir).schema
-        if len(src.columns) != len(tgt.fields):
-            raise ValueError(
-                f"INSERT arity mismatch: {len(src.columns)} values for "
-                f"{len(tgt.fields)} columns"
-            )
-        src = src.toDF(*[f.name for f in tgt.fields]).select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in tgt.fields]
+    reader = spark.read
+    if fmt == "csv":
+        # HiveStorageFormat CSV defaults; catalog properties override
+        # (header / delimiter / inferschema as 'true'/'false' strings)
+        p = mount["properties"]
+        reader = reader.options(
+            header=p.get("header", "true"),
+            sep=p.get("delimiter", ","),
+            inferSchema=p.get("inferschema", "true"),
         )
+    # an emptied csv/json table has no row to infer a schema from: its
+    # sidecar (underscore-prefixed, so Spark's listing skips it) holds it
+    sidecar = os.path.join(path, _SIDECAR)
+    if fmt in ("csv", "json") and os.path.isfile(sidecar):
+        with open(sidecar) as fh:
+            reader = reader.schema(StructType.fromJson(json.load(fh)))
+        if fmt == "csv":
+            reader = reader.option("inferSchema", "false")
+    return reader.format(fmt).load(path)
+
+
+_SIDECAR = "_ts_schema.json"
+# the connectors whose tables take writes: the page stores, and the file
+# formats with a general page-sink mapping (text has a single column)
+_WRITABLE = ("memory", "blackhole", "parquet", "hive", "csv", "json", "orc")
+
+
+def write(engine, w) -> DataFrame:
+    """A write (dialect/writes.py) to a table of a mounted catalog: the
+    connector page-sink path. memory keeps the pages on the driver
+    (MemoryPageSinkProvider), blackhole only the table's schema
+    (BlackHolePageSink); a file catalog writes <location>/<schema>/<table>/
+    with distributed Spark writes (HivePageSinkProvider: CTAS creates it,
+    INSERT appends, DELETE/TRUNCATE empty it, DROP removes it), a 100 TB
+    path. Row-level DML lives in the managed tables; a form a sink lacks
+    is refused by name."""
+    cat, schema, table = w.target
+    mount = engine.catalogs[cat]
+    conn = mount["connector"]
+    if conn not in _WRITABLE:
+        raise ValueError(f"catalog {cat} ({conn}) does not support writes")
+    files = conn not in ("memory", "blackhole")
+    fmt = ("parquet" if conn == "hive" else conn) if files else None
+    form = (
+        w.kind if w.kind in ("UPDATE", "MERGE")
+        else "DELETE ... WHERE (whole-table DELETE only)" if w.kind == "DELETE" and w.where
+        else "CREATE TABLE without AS" if w.kind == "CREATE" and w.query is None
+        else next((f"table property {k}" for k, v in w.props.items()
+                   if k != "format" or (files and str(v).lower() != fmt)), None)
+    )
+    if form:
+        raise ValueError(f"connector {conn} does not support {form}")
+    spark = engine.spark
+    tables = mount.setdefault("tables", {})
+    path = os.path.join(mount["properties"]["location"], schema, table) if files else ""
+    exists = os.path.isdir(path) if files else (schema, table) in tables
+    view = f"__cat_{cat}_{schema}_{table}"
+    if w.kind == "CREATE" and exists:
+        if w.if_exists:
+            return rows_result(spark, 0)
+        raise ValueError(f"table already exists: {cat}.{schema}.{table}")
+    # memory and blackhole INSERT into a table they do not hold yet
+    if not exists and w.kind != "CREATE" and (files or w.kind != "INSERT"):
+        if w.kind == "DROP" and w.if_exists:
+            return rows_result(spark, 0)
+        raise ValueError(f"table not found: {cat}.{schema}.{table}")
+    if w.kind == "DROP":
+        if files:
+            shutil.rmtree(path)
+        else:
+            del tables[(schema, table)]
+        spark.catalog.dropTempView(view)
+        mount["views"].discard(view)
+        return rows_result(spark, 0)
+    emptied = w.kind in ("DELETE", "TRUNCATE")
+    held = None  # the schema of the table a DELETE, TRUNCATE or INSERT writes
+    if exists and w.kind != "CREATE":
+        held = _read_files(spark, mount, path).schema if files else tables[(schema, table)]
+    # the source query runs through the engine, so dialect SQL, routines
+    # and security rewrites all apply
+    new = _pages(spark, [], held) if emptied else engine.sql(w.query)
+    if w.kind == "INSERT" and held is not None:
+        new = align_insert(engine, new, held, w.columns, {})
+    if conn == "blackhole":
+        tables[(schema, table)] = new.schema
+        return rows_result(spark, 0 if emptied else new.count())  # the count is all it keeps
+    if conn == "memory":
+        # the memory connector IS driver-resident, like the reference's
+        # MemoryPagesStore (worker-memory tables) — small dimension/staging
+        # data only, not a 100 TB path
+        rows = [] if emptied else new.collect()
+        old = spark.table(view).collect() if w.kind == "INSERT" and exists else []
+        _pages(spark, old + rows, new.schema).createOrReplaceTempView(view)
+        tables[(schema, table)] = new.schema
+        mount["views"].add(view)
+        return rows_result(spark, len(rows))
+    # the written-row count rides the write (no second evaluation)
     obs = Observation()
-    src = src.observe(obs, F.count(F.lit(1)).alias("n"))
-    _writer(src).mode("append" if up0 == "INSERT" else "overwrite").save(pdir)
-    _invalidate()
-    n = int(obs.get["n"])
-    return rows_result(spark, n)
+    writer = new.observe(obs, F.count(F.lit(1)).alias("n")).write
+    if fmt == "csv":
+        writer = writer.option("header", mount["properties"].get("header", "true"))
+    writer.format(fmt).mode("append" if w.kind == "INSERT" else "overwrite").save(path)
+    if fmt in ("csv", "json") and emptied:
+        # zero-row csv/json cannot be schema-inferred on re-read
+        with open(os.path.join(path, _SIDECAR), "w") as fh:
+            json.dump(new.schema.jsonValue(), fh)
+    # the table's next read lists what the write left
+    spark.catalog.dropTempView(view)
+    mount["views"].discard(view)
+    return rows_result(spark, int(obs.get["n"]))
 
 
 def _schema_sf(schema: str) -> float:

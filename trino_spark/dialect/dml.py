@@ -59,7 +59,8 @@ from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.sql.types import StructType
 
 from trino_spark.catalog import Described, read_parquet
-from trino_spark.dialect.tokenizer import head, lead, render, split_commas, tokenize
+from trino_spark.dialect import writes
+from trino_spark.dialect.tokenizer import next_code, render, tokenize
 from trino_spark.dialect.types import spark_type
 from trino_spark.operators.merge import merge_into
 
@@ -67,7 +68,6 @@ from trino_spark.operators.merge import merge_into
 #: older snapshot dirs are removed — lakehouse snapshot expiration.
 SNAPSHOT_RETENTION = 8
 
-_IDENT = r'[A-Za-z_][\w$]*|"[^"]+"'
 # the result of ALTER TABLE ... EXECUTE optimize
 _OPTIMIZED = "rows: bigint, files_before: int, files_after: int"
 
@@ -82,29 +82,23 @@ def _warehouse_dir() -> str:
 
 
 def try_execute(engine, sql: str) -> DataFrame | None:
-    """Execute `sql` if it is a write (CTAS, DROP TABLE, TRUNCATE, INSERT,
-    DELETE, UPDATE, MERGE); return None otherwise.
+    """Execute `sql` if it is a table write (CREATE TABLE, DROP TABLE,
+    TRUNCATE, INSERT, DELETE, UPDATE, MERGE); return None otherwise.
 
-    Returns a one-row ``rows: bigint`` DataFrame (the reference's
-    TableFinishOperator rowcount result, TableFinishOperator.java:55).
+    The write is read once (writes.read); a target `catalog.schema.table`
+    of a mounted catalog goes to that catalog's sink (catalogs.write),
+    any other to the managed table. Returns a one-row ``rows: bigint``
+    DataFrame (the reference's TableFinishOperator rowcount result,
+    TableFinishOperator.java:55).
     """
-    toks = tokenize(sql)
-    words = head(toks)
-    run = _WRITES.get(" ".join(words[:2])) or _WRITES.get(" ".join(words[:1]))
-    if run is None or (run is _ctas and not _is_ctas(toks)):
+    w = writes.read(tokenize(sql))
+    if w is None:
         return None
-    return run(engine, render(toks[lead(toks) :]).strip().rstrip(";"))
+    if len(w.target) == 3 and w.target[0] in engine.catalogs:
+        from trino_spark.dialect import catalogs as _cats
 
-
-def _is_ctas(toks: list) -> bool:
-    """CREATE TABLE name [WITH (...)] AS query: an AS outside parentheses
-    (column definitions and properties sit inside them)."""
-    depth = 0
-    for t in toks:
-        depth += t.is_sym("(") - t.is_sym(")")
-        if depth == 0 and t.is_word("AS"):
-            return True
-    return False
+        return _cats.write(engine, w)
+    return _SINKS[w.kind](engine, w)
 
 
 # ---------------------------------------------------------------- storage
@@ -400,54 +394,42 @@ def _translate_fragment(engine, text: str) -> str:
 
 
 # ---------------------------------------------------------------- statements
+# The managed-table sink: one function per kind of write (writes.Write).
 
 
-def _ctas(engine, sql: str) -> DataFrame:
-    m = re.match(
-        rf"CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?({_IDENT}(?:\.{_IDENT})*)\s*"
-        rf"(WITH\s*\(.*?\)\s*)?AS\s+(.*)$",
-        sql,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if not m:
-        raise ValueError(f"cannot parse CTAS: {sql[:120]}")
-    name = _norm_name(m.group(1))
-    if_not_exists = re.search(r"IF\s+NOT\s+EXISTS", sql[: m.start(3)], re.IGNORECASE)
+def _create(engine, w: writes.Write) -> DataFrame:
+    """CREATE TABLE [IF NOT EXISTS] t (column definitions) | AS query
+    [COMMENT '...'] [WITH (...)] (CreateTableTask / CreateTableAsSelect)."""
+    name = w.target[-1]
     if name in engine.dml_tables:
-        if if_not_exists:
+        if w.if_exists:
             return rows_result(engine.spark, 0)
         raise ValueError(f"table already exists: {name}")
-    partition_by = _parse_with_props(m.group(2))
-    df = engine.sql(m.group(3))
-    rec = _clear(engine, ManagedTable(name, df.columns, partition_by))
-    return rows_result(engine.spark, _commit(engine, rec, df, operation="ctas"))
+    rec = ManagedTable(name, [], _layout(w.props), comment=w.comment)
+    if w.query is None:
+        ddl = ", ".join(" ".join(_column_definition(rec, c)) for c in w.columns)
+        _commit(engine, _clear(engine, rec), rows_result(engine.spark, [], ddl))
+        return rows_result(engine.spark, 0)
+    df = engine.sql(w.query)
+    return rows_result(engine.spark, _commit(engine, _clear(engine, rec), df, operation="ctas"))
 
 
-def _parse_with_props(with_txt: str | None) -> list[str] | None:
-    """CTAS WITH (...) table properties (reference: HiveTableProperties /
-    connector table property metadata): `partitioned_by = ARRAY['c', ...]`
-    produces a hive-layout partitioned write; `format = 'PARQUET'` is
-    accepted (parquet is the only storage here — any other format raises
-    rather than silently writing parquet)."""
-    if not with_txt:
-        return None
-    fm = re.search(r"format\s*=\s*'(\w+)'", with_txt, re.IGNORECASE)
-    if fm and fm.group(1).upper() != "PARQUET":
-        raise ValueError(f"CTAS WITH format = '{fm.group(1)}' not supported (parquet only)")
-    pm = re.search(r"partitioned_by\s*=\s*ARRAY\s*\[([^\]]*)\]", with_txt, re.IGNORECASE)
-    if pm:
-        cols = [c.strip().strip("'\"") for c in pm.group(1).split(",") if c.strip()]
-        return cols or None
-    known = re.sub(r"(format|partitioned_by)\s*=", "", with_txt, flags=re.IGNORECASE)
-    if "=" in known:
-        raise ValueError(f"unsupported CTAS table property in: {with_txt.strip()[:60]}")
-    return None
+def _layout(props: dict) -> list[str] | None:
+    """CREATE TABLE's WITH properties (reference: HiveTableProperties):
+    `partitioned_by = ARRAY['c', ...]` gives a hive layout; `format =
+    'PARQUET'` is accepted, any other format raises (parquet is the only
+    storage here) rather than silently writing parquet."""
+    for key, value in props.items():
+        if key == "format" and str(value).upper() != "PARQUET":
+            raise ValueError(f"CTAS WITH format = '{value}' not supported (parquet only)")
+        if key not in ("format", "partitioned_by"):
+            raise ValueError(f"unsupported CTAS table property: {key}")
+    cols = props.get("partitioned_by") or None
+    return [cols] if isinstance(cols, str) else cols
 
 
-def _drop(engine, sql: str) -> DataFrame:
-    parts = sql.split()
-    idx = 4 if len(parts) > 4 and parts[2].upper() == "IF" else 2
-    name = _norm_name(parts[idx])
+def _drop(engine, w: writes.Write) -> DataFrame:
+    name = w.target[-1]
     rec = engine.dml_tables.get(name)
     if rec is not None:
         if rec.base is not None:
@@ -463,51 +445,46 @@ def _drop(engine, sql: str) -> DataFrame:
     elif engine.spark.catalog.tableExists(name):
         # A saveAsTable-managed (e.g. bucketed-CTAS) catalog table.
         engine.spark.sql(f"DROP TABLE {name}")
-    elif idx == 2:
+    elif not w.if_exists:
         raise ValueError(f"table not found: {name}")
     return rows_result(engine.spark, 0)
 
 
-def _truncate(engine, sql: str) -> DataFrame:
-    rec = _require_managed(engine, _norm_name(sql.split()[2]))
+def _truncate(engine, w: writes.Write) -> DataFrame:
+    rec = _require_managed(engine, w.target[-1])
     _commit(engine, rec, _stored(engine, rec).limit(0), operation="truncate")
     return rows_result(engine.spark, 0)
 
 
-def _insert(engine, sql: str) -> DataFrame:
-    m = re.match(
-        rf"INSERT\s+INTO\s+({_IDENT}(?:\.{_IDENT})*)\s*(\([^)]*\))?\s*(.*)$",
-        sql,
-        re.IGNORECASE | re.DOTALL,
+def align_insert(engine, incoming: DataFrame, schema: StructType, columns: list[str],
+                 defaults: dict[str, str]) -> DataFrame:
+    """The INSERT column rule (StatementAnalyzer's insert analysis) of every
+    table an INSERT writes: the values fill the listed `columns`, else every
+    column in table order; an unlisted column gets its declared DEFAULT
+    (#setDefaultValue), else NULL; each value is cast to its column type."""
+    names = columns or schema.names
+    listed = {c.lower() for c in names}
+    if len(incoming.columns) != len(names):
+        raise ValueError(f"INSERT arity mismatch: {len(incoming.columns)} values for {len(names)} columns")
+    unknown = listed - {c.lower() for c in schema.names}
+    if unknown:
+        raise ValueError(f"INSERT column not found: {min(unknown)}")
+    return incoming.toDF(*names).select(
+        *[
+            (
+                F.col(f.name) if f.name.lower() in listed
+                else F.expr(_translate_fragment(engine, defaults[f.name])) if f.name in defaults
+                else F.lit(None)
+            ).cast(f.dataType).alias(f.name)
+            for f in schema.fields
+        ]
     )
-    if not m:
-        raise ValueError(f"cannot parse INSERT: {sql[:120]}")
-    rec = _require_managed(engine, _norm_name(m.group(1)))
+
+
+def _insert(engine, w: writes.Write) -> DataFrame:
+    rec = _require_managed(engine, w.target[-1])
     current = _stored(engine, rec)
-    incoming = engine.sql(m.group(3))
-    if m.group(2):
-        cols = [_norm_name(c) for c in m.group(2).strip("()").split(",")]
-        incoming = incoming.toDF(*cols)
-        # Unmentioned columns get their declared DEFAULT, else NULL
-        # (reference INSERT column-list rule + #setDefaultValue).
-        for f_ in current.schema.fields:
-            if f_.name not in cols:
-                dflt = rec.defaults.get(f_.name)
-                filler = (
-                    F.expr(_translate_fragment(engine, dflt)) if dflt is not None else F.lit(None)
-                )
-                incoming = incoming.withColumn(f_.name, filler.cast(f_.dataType))
-    else:
-        # No column list: positional match against the table layout.
-        if len(incoming.columns) != len(current.columns):
-            raise ValueError(
-                f"INSERT arity mismatch: {len(incoming.columns)} values for "
-                f"{len(current.columns)} columns"
-            )
-        incoming = incoming.toDF(*[f_.name for f_ in current.schema.fields])
-    aligned = incoming.select(
-        *[F.col(f_.name).cast(f_.dataType).alias(f_.name) for f_ in current.schema.fields]
-    )
+    aligned = align_insert(engine, engine.sql(w.query), current.schema, w.columns, rec.defaults)
     # Append-only commit: write ONLY the incoming rows; the previous
     # version's files are carried into the new version by hardlink (the
     # lakehouse "add files to snapshot" shape — an INSERT never rewrites
@@ -567,15 +544,8 @@ def _affected_partitions(rec: ManagedTable, df: DataFrame, pred):
     return (cond, untouched)
 
 
-def _delete(engine, sql: str) -> DataFrame:
-    m = re.match(
-        rf"DELETE\s+FROM\s+({_IDENT}(?:\.{_IDENT})*)\s*(?:WHERE\s+(.*))?$",
-        sql,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if not m:
-        raise ValueError(f"cannot parse DELETE: {sql[:120]}")
-    name = _norm_name(m.group(1))
+def _delete(engine, w: writes.Write) -> DataFrame:
+    name = w.target[-1]
     from trino_spark.dialect import access as _access
 
     rf_sql, masks = _access.dml_target_security(engine, name)
@@ -590,13 +560,13 @@ def _delete(engine, sql: str) -> DataFrame:
         if rf_sql
         else None
     )
-    if m.group(2) is None and visible is None and not masks:
+    if w.where is None and visible is None and not masks:
         # Unconditional DELETE == TRUNCATE shape; count from footers.
         before = _written_rows(rec.path)
         _commit(engine, rec, df.limit(0), operation="delete")
         return rows_result(engine.spark, before)
     # DELETE removes rows where pred is TRUE; NULL predicate keeps.
-    where = m.group(2) if m.group(2) is not None else "true"
+    where = render(w.where) if w.where is not None else "true"
     pred = F.coalesce(
         F.expr(
             _translate_fragment(engine, _access.mask_fragment(masks, where, target=name))
@@ -608,31 +578,28 @@ def _delete(engine, sql: str) -> DataFrame:
     # Deleted-row count = footer-metadata delta (before/after) — rows only
     # ever leave, so no counting scan or observation is needed.
     before = _written_rows(rec.path)
-    scoped = _affected_partitions(rec, df, pred)
-    if scoped is not None:
-        cond, untouched = scoped
-        if cond is None:  # predicate matched nothing: no new version
-            return rows_result(engine.spark, 0)
-        # Rewrite only the affected partitions (partition-pruned scan);
-        # untouched partitions are hardlinked into the new version.
-        after = _commit(
-            engine, rec, df.filter(cond).filter(~pred),
-            preserve_rel_dirs=untouched, operation="delete",
-        )
-    else:
-        after = _commit(engine, rec, df.filter(~pred), operation="delete")
-    return rows_result(engine.spark, before - after)
+    after = _rewrite(engine, rec, df, pred, lambda rows: rows.filter(~pred), "delete")
+    return rows_result(engine.spark, 0 if after is None else before - after)
 
 
-def _update(engine, sql: str) -> DataFrame:
-    m = re.match(
-        rf"UPDATE\s+({_IDENT}(?:\.{_IDENT})*)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?$",
-        sql,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if not m:
-        raise ValueError(f"cannot parse UPDATE: {sql[:120]}")
-    name = _norm_name(m.group(1))
+def _rewrite(engine, rec: ManagedTable, df: DataFrame, pred, build, operation: str,
+             scoped: bool = True) -> int | None:
+    """Commit `build(rows)` as the table's next version, `df` its current
+    rows. On a partitioned table (and `scoped`) only the partitions
+    `pred` touches are rewritten (a partition-pruned scan); the untouched
+    ones are hardlinked into the new version. Returns the new version's
+    row count; None, committing nothing, when `pred` matched no row."""
+    touched = _affected_partitions(rec, df, pred) if scoped else None
+    if touched is None:
+        return _commit(engine, rec, build(df), operation=operation)
+    cond, untouched = touched
+    if cond is None:
+        return None
+    return _commit(engine, rec, build(df.filter(cond)), preserve_rel_dirs=untouched, operation=operation)
+
+
+def _update(engine, w: writes.Write) -> DataFrame:
+    name = w.target[-1]
     from trino_spark.dialect import access as _access
 
     rf_sql, masks = _access.dml_target_security(engine, name)
@@ -646,17 +613,13 @@ def _update(engine, sql: str) -> DataFrame:
         )
     rec = _require_managed(engine, name)
     df = _stored(engine, rec)
-    assigns = split_commas(m.group(2))
-    pred = F.expr(_translate_fragment(engine, m.group(3))) if m.group(3) else F.lit(True)
+    pred = F.expr(_translate_fragment(engine, render(w.where))) if w.where else F.lit(True)
     pred = F.coalesce(pred, F.lit(False))
     if rf_sql:
         # Target row filter (getRowFilters binds to the UPDATE scan too):
         # rows the role cannot see are untouchable.
         pred = pred & F.coalesce(F.expr(_translate_fragment(engine, rf_sql)), F.lit(False))
-    updated_cols = {}
-    for a in assigns:
-        col, _, expr = a.partition("=")
-        updated_cols[_norm_name(col)] = F.expr(_translate_fragment(engine, expr))
+    updated_cols = {c: F.expr(_translate_fragment(engine, render(e))) for c, e in w.sets}
 
     def _project(src: DataFrame) -> DataFrame:
         return src.select(
@@ -670,47 +633,21 @@ def _update(engine, sql: str) -> DataFrame:
             ]
         )
 
-    part_cols = rec.partition_by or []
+    obs = Observation()
+    n_expr = F.sum(pred.cast("long")).alias("n")
     # An UPDATE that reassigns a partition column can move rows into
     # partitions the predicate never touched — only the full rewrite is
     # correct there. (Moving INTO an untouched partition is fine in the
     # scoped path: the staged write and the hardlinked files merge into
     # the same partition dir.)
-    scoped = (
-        _affected_partitions(rec, df, pred)
-        if not any(c in updated_cols for c in part_cols)
-        else None
+    done = _rewrite(
+        engine, rec, df, pred, lambda rows: _project(rows.observe(obs, n_expr)), "update",
+        scoped=not any(c in updated_cols for c in rec.partition_by or []),
     )
-    obs = Observation()
-    n_expr = F.sum(pred.cast("long")).alias("n")
-    if scoped is not None:
-        cond, untouched = scoped
-        if cond is None:
-            return rows_result(engine.spark, 0)
-        out = _project(df.filter(cond).observe(obs, n_expr))
-        _commit(engine, rec, out, preserve_rel_dirs=untouched, operation="update")
-    else:
-        out = _project(df.observe(obs, n_expr))
-        _commit(engine, rec, out, operation="update")
-    return rows_result(engine.spark, int(obs.get["n"] or 0))
+    return rows_result(engine.spark, 0 if done is None else int(obs.get["n"] or 0))
 
 
-_MERGE_RE = re.compile(
-    rf"MERGE\s+INTO\s+({_IDENT}(?:\.{_IDENT})*)\s*(?:AS\s+)?({_IDENT})?\s+"
-    rf"USING\s+(\(.*?\)|{_IDENT}(?:\.{_IDENT})*)\s*(?:AS\s+)?({_IDENT})?\s+"
-    rf"ON\s+(.*?)\s+(WHEN\s+.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-
-_WHEN_RE = re.compile(
-    r"WHEN\s+(NOT\s+MATCHED|MATCHED)\s*(?:AND\s+(.*?))?\s*THEN\s+"
-    r"(DELETE|UPDATE\s+SET\s+.*?|INSERT\s*(?:\([^)]*\))?\s*VALUES\s*\(.*?\))\s*"
-    r"(?=WHEN\s|$)",
-    re.IGNORECASE | re.DOTALL,
-)
-
-
-def _merge(engine, sql: str) -> DataFrame:
+def _merge(engine, w: writes.Write) -> DataFrame:
     """MERGE INTO via the full-outer-join rewrite (operators/merge.py).
 
     Supported clause shapes (the reference applies clauses first-match-wins,
@@ -722,13 +659,9 @@ def _merge(engine, sql: str) -> DataFrame:
     an unconditional DELETE is rejected (priority would differ from the
     join rewrite's delete-then-update routing).
     """
-    m = _MERGE_RE.match(sql)
-    if not m:
-        raise ValueError(f"cannot parse MERGE: {sql[:160]}")
-    tgt_name = _norm_name(m.group(1))
-    t_alias = (m.group(2) or tgt_name).strip('"')
-    src_rel, s_alias = m.group(3), (m.group(4) or "src").strip('"')
-    on_cond = m.group(5)
+    tgt_name = w.target[-1]
+    t_alias = w.alias or tgt_name
+    s_alias = w.using_alias or (w.using[-1] if w.using else "src")
     from trino_spark.dialect import access as _access
 
     rf_sql, masks = _access.dml_target_security(engine, tgt_name)
@@ -750,64 +683,47 @@ def _merge(engine, sql: str) -> DataFrame:
         vis = F.coalesce(F.expr(_translate_fragment(engine, rf_sql)), F.lit(False))
         hidden = target.filter(~vis)
         target = target.filter(vis)
-    if src_rel.startswith("("):
-        source = engine.sql(src_rel[1:-1])
-    else:
-        source = engine.catalog.table(_norm_name(src_rel))
+    source = engine.sql(w.using_query) if w.using_query else engine.catalog.table(w.using[-1])
 
-    def sub(expr: str) -> str:
-        """Map t.col -> col, s.col -> s_col (merge_into's naming contract)."""
-        expr = re.sub(rf"\b{re.escape(s_alias)}\.(\w+)", r"s_\1", expr, flags=re.IGNORECASE)
-        expr = re.sub(rf"\b{re.escape(t_alias)}\.(\w+)", r"\1", expr, flags=re.IGNORECASE)
-        return _translate_fragment(engine, expr)
+    def sub(expr: writes.Clause) -> F.Column:
+        """t.col -> col, s.col -> s_col (merge_into's naming contract)."""
+        return F.expr(_translate_fragment(engine, writes.rebind(expr, {t_alias: "", s_alias: "s_"})))
 
-    # Equi-key extraction from the ON conjunction.
+    # Equi-keys: each ON conjunct is `a.k = b.k`, a and b the two aliases.
     keys = []
-    for piece in re.split(r"\bAND\b", on_cond, flags=re.IGNORECASE):
-        em = re.match(
-            rf"\s*(?:{re.escape(t_alias)}|{re.escape(s_alias)})\.(\w+)\s*=\s*"
-            rf"(?:{re.escape(t_alias)}|{re.escape(s_alias)})\.(\w+)\s*$",
-            piece,
-            re.IGNORECASE,
-        )
-        if not em or em.group(1).lower() != em.group(2).lower():
-            raise ValueError(f"MERGE ON must be a conjunction of t.k = s.k equalities, got: {piece.strip()}")
-        keys.append(em.group(1).lower())
+    for piece in w.on:
+        code = [t.text.strip('"').lower() for t in piece if t.kind != "WS"]
+        if not (
+            len(code) == 7 and code[1::4] == [".", "."] and code[3] == "="
+            and {code[0], code[4]} <= {t_alias, s_alias} and code[2] == code[6]
+        ):
+            raise ValueError(
+                f"MERGE ON must be a conjunction of t.k = s.k equalities, got: {render(piece)}"
+            )
+        keys.append(code[2])
 
     update_set: dict | None = None
     update_cond = delete_cond = None
     insert_values: dict | None = None
-    for wm in _WHEN_RE.finditer(m.group(6)):
-        matched_kw, and_cond, action = wm.group(1).upper(), wm.group(2), wm.group(3)
-        act_up = action.upper()
-        if matched_kw == "MATCHED" and act_up == "DELETE":
+    for when in w.whens:
+        if when.matched and when.action == "DELETE":
             if update_set is not None:
                 # The reference routes rows first-match-wins
                 # (MergeProcessorOperator); the join rewrite applies DELETE
                 # before UPDATE, so only that clause order is equivalent.
                 raise ValueError("MERGE: place WHEN MATCHED ... DELETE before UPDATE")
-            delete_cond = F.expr(sub(and_cond)) if and_cond else F.lit(True)
-        elif matched_kw == "MATCHED" and act_up.startswith("UPDATE"):
-            update_cond = F.expr(sub(and_cond)) if and_cond else None
-            update_set = {}
-            for a in split_commas(action.split(None, 2)[2]):
-                col, _, expr = a.partition("=")
-                update_set[_norm_name(col)] = F.expr(sub(expr))
-        elif matched_kw == "NOT MATCHED" and act_up.startswith("INSERT"):
-            im = re.match(r"INSERT\s*(\([^)]*\))?\s*VALUES\s*\((.*)\)\s*$", action, re.IGNORECASE | re.DOTALL)
-            if not im:
-                raise ValueError(f"cannot parse MERGE INSERT action: {action[:80]}")
-            cols = (
-                [_norm_name(c) for c in im.group(1).strip("()").split(",")]
-                if im.group(1)
-                else [f.name for f in target.schema.fields]
-            )
-            vals = split_commas(im.group(2))
-            if len(cols) != len(vals):
+            delete_cond = sub(when.cond) if when.cond else F.lit(True)
+        elif when.matched and when.action == "UPDATE":
+            update_cond = sub(when.cond) if when.cond else None
+            update_set = {c: sub(e) for c, e in when.sets}
+        elif not when.matched and when.action == "INSERT":
+            cols = when.columns or [f.name for f in target.schema.fields]
+            if len(cols) != len(when.values):
                 raise ValueError("MERGE INSERT column/value count mismatch")
-            insert_values = {c: F.expr(sub(v)) for c, v in zip(cols, vals)}
+            insert_values = {c: sub(v) for c, v in zip(cols, when.values)}
         else:
-            raise ValueError(f"unsupported MERGE clause: WHEN {matched_kw} ... THEN {action[:40]}")
+            matched = "MATCHED" if when.matched else "NOT MATCHED"
+            raise ValueError(f"unsupported MERGE clause: WHEN {matched} ... THEN {when.action}")
 
     update_touch = update_cond if update_set is not None else None
     if update_set is not None and update_cond is not None:
@@ -829,20 +745,21 @@ def _merge(engine, sql: str) -> DataFrame:
     # separate counting joins.
     obs = Observation()
     out = merge_into(
-        target,
-        source,
-        keys=keys,
-        update_set=update_set,
-        delete_condition=delete_cond,
-        insert_values=insert_values,
-        count_into=obs,
-        update_touch_condition=update_touch,
+        target, source, keys=keys, update_set=update_set, delete_condition=delete_cond,
+        insert_values=insert_values, count_into=obs, update_touch_condition=update_touch,
     )
     if hidden is not None:
         out = out.unionByName(hidden)
     _commit(engine, rec, out, operation="merge")
     m_ = obs.get
     return rows_result(engine.spark, int((m_["touched"] or 0) + (m_["inserted"] or 0)))
+
+
+# the managed-table sink of each kind of write (try_execute)
+_SINKS: dict[str, Callable[..., DataFrame]] = {
+    "CREATE": _create, "DROP": _drop, "TRUNCATE": _truncate, "INSERT": _insert,
+    "DELETE": _delete, "UPDATE": _update, "MERGE": _merge,
+}
 
 
 # ---------------------------------------------------------------- time travel
@@ -852,11 +769,6 @@ def _merge(engine, sql: str) -> DataFrame:
 # travel). Every _commit retains the previous table directory as an
 # immutable snapshot; a reference pinned to a version reads it back
 # (dialect/relations.py substitutes a view over it).
-
-
-# try_execute's statements by head (tokenizer.head); CREATE TABLE only as CTAS
-_WRITES = {"CREATE TABLE": _ctas, "DROP TABLE": _drop, "TRUNCATE TABLE": _truncate,
-           "INSERT INTO": _insert, "DELETE FROM": _delete, "UPDATE": _update, "MERGE INTO": _merge}
 
 
 def list_versions(engine, name: str) -> list[dict]:
@@ -1055,14 +967,11 @@ def txn_rollback(engine) -> None:
 
 
 def drop_view(engine, stripped: str) -> DataFrame:
-    parts = stripped.split()
-    idx = 4 if len(parts) > 4 and parts[2].upper() == "IF" else 2
-    name = _norm_name(parts[idx])
-    existed = engine.views.pop(name, None)
-    if existed is None and idx == 2:
-        raise ValueError(f"view not found: {name}")
-    if existed is not None:
+    name, if_exists, _ = writes.named(stripped, "VIEW")
+    if engine.views.pop(name, None) is not None:
         engine.spark.catalog.dropTempView(name)
+    elif not if_exists:
+        raise ValueError(f"view not found: {name}")
     return rows_result(engine.spark, [(name,)], "view: string")
 
 
@@ -1078,20 +987,15 @@ def show_create_view(engine, stripped: str) -> DataFrame:
 def alter_view(engine, stripped: str) -> DataFrame:
     # #renameView / #refreshView (grammar SqlBase.g4:130-131).
     views = engine.views
-    m = re.match(
-        r"ALTER\s+VIEW\s+([\w.\"]+)\s+(?:RENAME\s+TO\s+([\w.\"]+)|(REFRESH))\s*$",
-        stripped,
-        re.IGNORECASE,
-    )
-    if not m:
+    name, _, rest = writes.named(stripped, "VIEW")
+    new, refresh = writes.renamed(rest), render(rest).strip().upper() == "REFRESH"
+    if new is None and not refresh:
         raise ValueError(f"cannot parse ALTER VIEW: {stripped[:80]}")
-    name = _norm_name(m.group(1))
     if name not in views:
         raise ValueError(f"view not found: {name}")
-    if m.group(3):  # REFRESH: re-resolve the definition against sources
+    if refresh:  # re-resolve the definition against sources
         engine.sql(views[name]).createOrReplaceTempView(name)
         return rows_result(engine.spark, [(name,)], "view: string")
-    new = _norm_name(m.group(2))
     views[new] = views.pop(name)
     engine.spark.catalog.dropTempView(name)
     engine.sql(views[new]).createOrReplaceTempView(new)
@@ -1101,16 +1005,12 @@ def alter_view(engine, stripped: str) -> DataFrame:
 
 def alter_materialized_view(engine, stripped: str) -> DataFrame:
     # #renameMaterializedView: the stored data moves with the name.
-    m = re.match(
-        r"ALTER\s+MATERIALIZED\s+VIEW\s+(?:IF\s+EXISTS\s+)?([\w.\"]+)\s+RENAME\s+TO\s+([\w.\"]+)\s*$",
-        stripped,
-        re.IGNORECASE,
-    )
-    if not m:
+    name, if_exists, rest = writes.named(stripped, "VIEW")
+    new = writes.renamed(rest)
+    if new is None:
         raise ValueError(f"cannot parse ALTER MATERIALIZED VIEW: {stripped[:80]}")
-    name, new = _norm_name(m.group(1)), _norm_name(m.group(2))
     if name not in engine.materialized_views:
-        if re.search(r"IF\s+EXISTS", stripped, re.IGNORECASE):
+        if if_exists:
             return rows_result(engine.spark, [(name,)], "materialized_view: string")
         raise ValueError(f"materialized view not found: {name}")
     engine.materialized_views[new] = engine.materialized_views.pop(name)
@@ -1146,53 +1046,30 @@ def show_create_schema(engine, stripped: str) -> DataFrame:
 
 
 def create_schema(engine, stripped: str) -> DataFrame:
-    m = re.match(
-        r"CREATE\s+SCHEMA\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<name>[\w.\"]+)"
-        r"(?:\s+AUTHORIZATION\s+\S+)?(?:\s+WITH\s*\((?P<props>.*)\))?\s*$",
-        stripped,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if not m:
-        raise ValueError(f"cannot parse CREATE SCHEMA: {stripped[:80]}")
-    name = _norm_name(m.group("name"))
+    name, if_exists, rest = writes.named(stripped, "SCHEMA")
     if name in engine.schemas:
-        if m.group("ine"):
+        if if_exists:
             return rows_result(engine.spark, [(name,)], "schema: string")
         raise ValueError(f"schema already exists: {name}")
-    engine.schemas[name] = {
-        pm.group(1).lower(): pm.group(2)
-        for pm in re.finditer(r"([\w.]+)\s*=\s*'([^']*)'", m.group("props") or "")
-    }
+    k = next((i for i, t in enumerate(rest) if t.is_word("WITH")), None)  # past AUTHORIZATION
+    engine.schemas[name] = {} if k is None else writes.properties(rest, next_code(rest, k + 1))
     return rows_result(engine.spark, [(name,)], "schema: string")
 
 
 def drop_schema(engine, stripped: str) -> DataFrame:
-    m = re.match(
-        r"DROP\s+SCHEMA\s+(?P<ie>IF\s+EXISTS\s+)?(?P<name>[\w.\"]+)(?:\s+(?:CASCADE|RESTRICT))?\s*$",
-        stripped,
-        re.IGNORECASE,
-    )
-    if not m:
-        raise ValueError(f"cannot parse DROP SCHEMA: {stripped[:80]}")
-    name = _norm_name(m.group("name"))
+    name, if_exists, _ = writes.named(stripped, "SCHEMA")  # CASCADE | RESTRICT alike
     if name == "default":
         raise ValueError("cannot drop the default schema")
-    if name not in engine.schemas:
-        if m.group("ie"):
-            return rows_result(engine.spark, [(name,)], "schema: string")
+    if engine.schemas.pop(name, None) is None and not if_exists:
         raise ValueError(f"schema not found: {name}")
-    engine.schemas.pop(name)
     return rows_result(engine.spark, [(name,)], "schema: string")
 
 
 def alter_schema(engine, stripped: str) -> DataFrame:
-    # ALTER SCHEMA s RENAME TO s2
-    m = re.match(
-        r"ALTER\s+SCHEMA\s+([\w.\"]+)\s+RENAME\s+TO\s+([\w\"]+)\s*$", stripped, re.IGNORECASE
-    )
-    if not m:
+    name, _, rest = writes.named(stripped, "SCHEMA")
+    new = writes.renamed(rest)
+    if new is None:
         raise ValueError(f"cannot parse ALTER SCHEMA: {stripped[:80]}")
-    name, new = _norm_name(m.group(1)), _norm_name(m.group(2))
     if name not in engine.schemas:
         raise ValueError(f"schema not found: {name}")
     engine.schemas[new] = engine.schemas.pop(name)
@@ -1200,15 +1077,8 @@ def alter_schema(engine, stripped: str) -> DataFrame:
 
 
 def create_view(engine, sql: str) -> DataFrame:
-    m = re.match(
-        rf"CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\s+({_IDENT}(?:\.{_IDENT})*)\s+AS\s+(.*)$",
-        sql,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if not m:
-        raise ValueError(f"cannot parse CREATE VIEW: {sql[:120]}")
-    name, defn = _norm_name(m.group(1)), m.group(2).strip()
-    if name in engine.views and "OR REPLACE" not in sql.upper()[:40]:
+    name, defn = writes.definition(sql)
+    if name in engine.views and sql.split()[1].upper() != "OR":
         raise ValueError(f"view already exists: {name}")
     # Lazy logical view: the DataFrame plan re-reads sources at query time
     # (CreateViewTask semantics — definition resolved, data not stored).
@@ -1216,26 +1086,6 @@ def create_view(engine, sql: str) -> DataFrame:
     engine.views[name] = defn
     refresh_infoschema(engine, changed=name)
     return rows_result(engine.spark, [(name,)], "view: string")
-
-
-def create_empty_table(engine, sql: str) -> DataFrame:
-    m = re.match(
-        rf"CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?({_IDENT}(?:\.{_IDENT})*)\s*\((.*?)\)\s*"
-        r"(?:COMMENT\s+'((?:[^']|'')*)'\s*)?(?:WITH\s*\(.*\))?\s*$",
-        sql,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if not m:
-        raise ValueError(f"cannot parse CREATE TABLE: {sql[:120]}")
-    name = _norm_name(m.group(1))
-    if name in engine.dml_tables:
-        if re.search(r"IF\s+NOT\s+EXISTS", sql, re.IGNORECASE):
-            return rows_result(engine.spark, 0)
-        raise ValueError(f"table already exists: {name}")
-    rec = ManagedTable(name, [], comment=_unquote(m.group(3)))
-    cols = [" ".join(_column_definition(rec, piece)) for piece in split_commas(m.group(2))]
-    _commit(engine, _clear(engine, rec), rows_result(engine.spark, [], ", ".join(cols)))
-    return rows_result(engine.spark, 0)
 
 
 # name type [DEFAULT expr] [NOT NULL] [COMMENT 'text'] [WITH (...)]
@@ -1268,12 +1118,8 @@ def _column_definition(rec: ManagedTable, piece: str) -> tuple[str, str]:
 
 
 def alter_table(engine, sql: str) -> DataFrame:
-    m = re.match(
-        rf"ALTER\s+TABLE\s+({_IDENT}(?:\.{_IDENT})*)\s+(.*)$", sql, re.IGNORECASE | re.DOTALL
-    )
-    if not m:
-        raise ValueError(f"cannot parse ALTER TABLE: {sql[:120]}")
-    name, action = _norm_name(m.group(1)), m.group(2).strip()
+    name, _, rest = writes.named(sql, "TABLE")
+    action = render(rest).strip()
     au = action.upper()
     rec = _require_managed(engine, name)
     txn_snapshot_if_needed(engine, name)
@@ -1282,10 +1128,8 @@ def alter_table(engine, sql: str) -> DataFrame:
     if au.startswith("SET PROPERTIES"):
         # #setTableProperties: recorded metadata (SHOW CREATE TABLE surfaces
         # format/location; arbitrary properties are retained here).
-        rec.properties.update(
-            (pm.group(1).lower(), pm.group(2))
-            for pm in re.finditer(r"([\w.]+)\s*=\s*'([^']*)'", action)
-        )
+        props = writes.properties(tokenize(f"({action.split(None, 2)[2]})"), 0)
+        rec.properties.update((k, v if isinstance(v, str) else ", ".join(v)) for k, v in props.items())
         return rows_result(engine.spark, 0)
     dm = re.match(
         r"ALTER\s+COLUMN\s+(\w+)\s+(SET\s+DEFAULT\s+(.+)|DROP\s+DEFAULT|DROP\s+NOT\s+NULL)\s*$",
@@ -1419,22 +1263,8 @@ def _table_execute(engine, rec: ManagedTable, action: str) -> DataFrame:
         part_cols = rec.partition_by
         df = _stored(engine, rec)
         before = _file_count(path)
-        if where:
-            pred = F.expr(_translate_fragment(engine, where))
-            scoped = _affected_partitions(rec, df, pred)
-            if scoped is not None:
-                cond, untouched = scoped
-                if cond is None:  # predicate matched nothing: no-op commit
-                    return rows_result(spark, [(0, before, before)], _OPTIMIZED)
-                compacted = df.filter(cond).repartition(*[F.col(c) for c in part_cols])
-                n = _commit(
-                    engine, rec, compacted,
-                    preserve_rel_dirs=untouched, operation="optimize",
-                )
-                return rows_result(spark, [(n, before, _file_count(path))], _OPTIMIZED)
-            # unpartitioned (or flat): WHERE cannot scope — full rewrite
         if part_cols:
-            compacted = df.repartition(*[F.col(c) for c in part_cols])
+            layout = [F.col(c) for c in part_cols]
         else:
             size = sum(
                 os.path.getsize(os.path.join(r, f))
@@ -1442,9 +1272,14 @@ def _table_execute(engine, rec: ManagedTable, action: str) -> DataFrame:
                 for f in fs
                 if f.endswith(".parquet")
             )
-            target = max(1, -(-size // threshold))  # ceil
-            compacted = df.repartition(int(target))
-        n = _commit(engine, rec, compacted, operation="optimize")
+            layout = [int(max(1, -(-size // threshold)))]  # ceil
+        # a WHERE scopes the rewrite to the partitions it touches; an
+        # unpartitioned (or flat) table is rewritten whole
+        pred = F.expr(_translate_fragment(engine, where)) if where else None
+        n = _rewrite(engine, rec, df, pred, lambda rows: rows.repartition(*layout), "optimize",
+                     scoped=where is not None)
+        if n is None:  # predicate matched nothing: no new version
+            return rows_result(spark, [(0, before, before)], _OPTIMIZED)
         return rows_result(spark, [(n, before, _file_count(path))], _OPTIMIZED)
     if proc == "expire_snapshots":
         horizon = _parse_duration_s(args.get("retention_threshold", "7d"))

@@ -31,6 +31,7 @@ from trino_spark.dialect import dml as _dml
 from trino_spark.dialect import prepared as _prep
 from trino_spark.dialect import relations as _relations
 from trino_spark.dialect import routines as _routines_mod
+from trino_spark.dialect import writes as _writes
 from trino_spark.dialect.dml import rows_result
 from trino_spark.dialect.rewrites import translate
 from trino_spark.dialect.tokenizer import (
@@ -420,41 +421,21 @@ class TrinoEngine:
         self._function_sources.pop(dropped.upper(), None)
         return rows_result(self.spark, [(dropped.lower(),)], "function: string")
 
-    def _write(self, text: str) -> DataFrame | None:
-        # DML entry point (SURVEY §3.3): copy-on-write managed tables.
-        # Catalog-qualified targets route to the mounted connector's
-        # page-sink analog (memory stores, blackhole swallows) first.
-        out = _cats.try_execute_dml(self, text) if self.catalogs else None
-        return out if out is not None else _dml.try_execute(self, text)
-
-    def _create_table(self, text: str) -> DataFrame:
-        out = self._write(text)  # None: not a CTAS, a column list
-        return out if out is not None else _dml.create_empty_table(self, text)
-
     def _create_mv(self, text: str) -> DataFrame:
-        m = re.match(
-            r"CREATE\s+(?:OR\s+REPLACE\s+)?MATERIALIZED\s+VIEW\s+([\w.\"]+)\s+AS\s+(.+)$",
-            text,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m:
-            raise ValueError(f"CREATE MATERIALIZED VIEW: missing AS <query> in {text[:80]}")
-        name = m.group(1).strip('"').split(".")[-1].lower()
-        self.materialized_views[name] = m.group(2).strip()
+        name, query = _writes.definition(text)
+        self.materialized_views[name] = query
         self._mv_refresh(name)
         return rows_result(self.spark, [(name,)], "materialized_view: string")
 
     def _refresh_mv(self, text: str) -> DataFrame:
-        name = text.split()[3].strip('"').split(".")[-1].lower()
+        name = _writes.named(text, "VIEW")[0]
         if name not in self.materialized_views:
             raise ValueError(f"materialized view not found: {name}")
         n = self._mv_refresh(name)
         return rows_result(self.spark, [(name, n)], "materialized_view: string, rows: bigint")
 
     def _drop_mv(self, text: str) -> DataFrame:
-        parts = text.split()
-        idx = 5 if len(parts) > 5 and parts[3].upper() == "IF" else 3
-        name = parts[idx].strip('"').split(".")[-1].lower()
+        name = _writes.named(text, "VIEW")[0]
         self.materialized_views.pop(name, None)
         self._mv_meta.pop(name, None)
         self.spark.catalog.dropTempView(name)
@@ -937,11 +918,14 @@ _STATEMENTS: dict[str, tuple[Callable[[TrinoEngine, str], DataFrame], bool]] = {
     "DROP BRANCH": (_branches.drop_branch, True),
     "ALTER BRANCH": (_branches.fast_forward, True),
     "SHOW BRANCHES": (_branches.show_branches, True),
+    # every table write (SURVEY §3.3): read once, then written by the
+    # managed table or a mounted catalog (dml.try_execute, looked up at
+    # call time)
     **dict.fromkeys(
-        ("INSERT INTO", "DELETE FROM", "UPDATE", "MERGE INTO", "TRUNCATE TABLE", "DROP TABLE"),
-        (TrinoEngine._write, True),
+        ("CREATE TABLE", "INSERT INTO", "DELETE FROM", "UPDATE", "MERGE INTO", "TRUNCATE TABLE",
+         "DROP TABLE"),
+        (lambda engine, text: _dml.try_execute(engine, text), True),
     ),
-    "CREATE TABLE": (TrinoEngine._create_table, True),
     "ALTER TABLE": (_dml.alter_table, True),
     "SHOW CREATE TABLE": (TrinoEngine._show_create_table, True),
     "CREATE VIEW": (_dml.create_view, False),

@@ -14,8 +14,8 @@ Spark knows its rows by:
   (dml._stored), of the branch fork when both are given;
 - ``"t$kind"``: a view over a metadata table's rows (dml.METADATA);
 - ``cat.schema.t`` of a non-jdbc mount, read: its view
-  (catalogs.view_for); a write target stays as written, for
-  catalogs.try_execute_dml;
+  (catalogs.view_for); a write target stays as written, for the
+  mount's write sink (catalogs.write);
 - an information_schema or system table, read: a view of its rows built
   now (infoschema.view_for); a view that reads one is re-planned.
 

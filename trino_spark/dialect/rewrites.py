@@ -2010,7 +2010,9 @@ def translate(sql: str) -> str:
     # Spark only accepts VALUES as a FROM-clause relation.
     if re.match(r"\s*VALUES\b", sql, re.IGNORECASE):
         sql = "SELECT * FROM " + sql.strip()
-    toks = tokenize(sql)
+    # the niladics first: a quoted identifier that spells one
+    # ("current_schema") is a name, and _rewrite_qident unquotes it
+    toks = _rewrite_niladic(tokenize(sql))
     toks = _rewrite_qident(toks)
     toks = _rewrite_spatial_sample(toks)
     toks = _rewrite_spatial_private(toks)
@@ -2023,7 +2025,6 @@ def translate(sql: str) -> str:
     toks = _rewrite_typed_literal(toks)
     toks = _rewrite_row(toks)
     toks = _rewrite_quantified(toks)
-    toks = _rewrite_niladic(toks)
     toks, ties = _rewrite_fetch(toks)
     toks = _rewrite_offset_limit(toks)
     toks = _rewrite_functions(toks)
