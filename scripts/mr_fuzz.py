@@ -7,7 +7,9 @@ Equivalence basis: with ONE ROW PER MATCH + AFTER MATCH SKIP PAST LAST
 ROW and greedy quantifiers, SQL row-pattern matching over a partition is
 exactly leftmost non-overlapping greedy regex matching over the
 partition's symbol string — so `re` (a mature, unrelated implementation)
-is a true oracle for match spans, counts, and per-match row totals.
+is a true oracle for match spans, counts, and per-match row totals. Each
+statement is also spelled in a random shape (gen_shape) that the oracle
+is blind to: source form, keyword case, literals in DEFINE.
 
 Usage: python scripts/mr_fuzz.py [n_patterns] [seed]
 """
@@ -38,6 +40,30 @@ def gen_pattern(rng: random.Random) -> str:
                 parts.append(rng.choice(_SYMS) + rng.choice(["", "", "+", "*", "?"]))
         if any(not p.endswith(("*", "?")) for p in parts):
             return " ".join(parts)
+
+
+def gen_shape(rng: random.Random, table: str):
+    """A spelling that changes no matching semantics, drawn from its own
+    generator so a seed's patterns stay the same: the source (bare,
+    aliased, quoted or a subquery), the clause keywords' case, and a
+    conjunct every DEFINE gets (none, a literal spelling a clause keyword,
+    an empty-string literal, or a parenthesised OR or NOT operand).
+    Returns (source, keyword speller, conjunct)."""
+    source = rng.choice(
+        [table, f"{table} AS e", f"{table} e", f'"{table}"', f"(SELECT * FROM {table})"]
+    )
+    case = str.lower if rng.random() < 0.5 else str.upper
+    extra = rng.choice(
+        [
+            "",
+            " AND 'x ALL ROWS PER MATCH' <> 'y'",
+            " AND 'PATTERN (' <> ''",
+            " AND sym <> ''",
+            " AND (sym <> '' OR sym = '')",
+            " AND NOT ('a' = 'b')",
+        ]
+    )
+    return source, case, extra
 
 
 def reference_matches(seq: str, pattern: str) -> list[tuple[int, int]]:
@@ -77,18 +103,20 @@ def fuzz_mr(n_patterns: int = 15, seed: int = 42, n_users: int = 12, seq_len: in
     ).createOrReplaceTempView("mr_fuzz_events")
 
     bad: list[str] = []
+    shapes = random.Random(seed * 31 + 5)
     for p in range(n_patterns):
         pattern = gen_pattern(rng)
+        src, k, extra = gen_shape(shapes, "mr_fuzz_events")
         sql = f"""
         SELECT user_id, s0, s1, n_rows
-        FROM mr_fuzz_events MATCH_RECOGNIZE (
-          PARTITION BY user_id
-          ORDER BY seq
-          MEASURES FIRST(seq) AS s0, LAST(seq) AS s1, COUNT(*) AS n_rows
-          ONE ROW PER MATCH
-          AFTER MATCH SKIP PAST LAST ROW
-          PATTERN ({pattern})
-          DEFINE A AS sym = 'a', B AS sym = 'b', C AS sym = 'c'
+        FROM {src} {k("MATCH_RECOGNIZE")} (
+          {k("PARTITION BY")} user_id
+          {k("ORDER BY")} seq
+          {k("MEASURES")} FIRST(seq) AS s0, LAST(seq) AS s1, COUNT(*) AS n_rows
+          {k("ONE ROW PER MATCH")}
+          {k("AFTER MATCH SKIP PAST LAST ROW")}
+          {k("PATTERN")} ({pattern})
+          {k("DEFINE")} A AS sym = 'a'{extra}, B AS sym = 'b'{extra}, C AS sym = 'c'{extra}
         )
         """
         try:
@@ -96,7 +124,8 @@ def fuzz_mr(n_patterns: int = 15, seed: int = 42, n_users: int = 12, seq_len: in
                 (r.user_id, r.s0, r.s1, r.n_rows) for r in eng.sql(sql).collect()
             )
         except Exception as exc:
-            bad.append(f"PATTERN ({pattern}) ENGINE ERROR: {str(exc).splitlines()[0][:160]}")
+            err = str(exc).splitlines()[0][:160]
+            bad.append(f"PATTERN ({pattern}) [{src}{extra}] ENGINE ERROR: {err}")
             continue
         want = sorted(
             (u, a, b - 1, b - a)
@@ -107,7 +136,7 @@ def fuzz_mr(n_patterns: int = 15, seed: int = 42, n_users: int = 12, seq_len: in
             only_g = [x for x in got if x not in want][:3]
             only_w = [x for x in want if x not in got][:3]
             bad.append(
-                f"PATTERN ({pattern}) DIVERGED: engine-only={only_g} "
+                f"PATTERN ({pattern}) [{src}{extra}] DIVERGED: engine-only={only_g} "
                 f"ref-only={only_w} (counts {len(got)} vs {len(want)})"
             )
     return bad
@@ -135,27 +164,30 @@ def fuzz_pattern_window(n_patterns: int = 10, seed: int = 42, n_users: int = 8, 
     ).createOrReplaceTempView("pw_fuzz_events")
 
     bad: list[str] = []
+    shapes = random.Random(seed * 31 + 6)
     for p in range(n_patterns):
         pattern = gen_pattern(rng)
+        src, k, extra = gen_shape(shapes, "pw_fuzz_events")
         # alternate INITIAL / SEEK (round 7): SEEK's reference is the
         # first re.match at offset >= the current row
         mode = "SEEK" if p % 2 else ""
         sql = f"""
         SELECT user_id, seq, rl OVER w AS rl
-        FROM pw_fuzz_events
-        WINDOW w AS (
-          PARTITION BY user_id ORDER BY seq
-          MEASURES COUNT(*) AS rl
-          ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING
-          {mode}
-          PATTERN ({pattern})
-          DEFINE A AS sym = 'a', B AS sym = 'b', C AS sym = 'c'
+        FROM {src}
+        {k("WINDOW")} w AS (
+          {k("PARTITION BY")} user_id {k("ORDER BY")} seq
+          {k("MEASURES")} COUNT(*) AS rl
+          {k("ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING")}
+          {k(mode)}
+          {k("PATTERN")} ({pattern})
+          {k("DEFINE")} A AS sym = 'a'{extra}, B AS sym = 'b'{extra}, C AS sym = 'c'{extra}
         )
         """
         try:
             got = sorted((r.user_id, r.seq, r.rl) for r in eng.sql(sql).collect())
         except Exception as exc:
-            bad.append(f"[window] PATTERN ({pattern}) ENGINE ERROR: {str(exc).splitlines()[0][:160]}")
+            err = str(exc).splitlines()[0][:160]
+            bad.append(f"[window] PATTERN ({pattern}) [{src}{extra}] ENGINE ERROR: {err}")
             continue
         body = pattern.replace(" ", "")
         for sym, ch in _CHARS.items():
@@ -172,7 +204,9 @@ def fuzz_pattern_window(n_patterns: int = 10, seed: int = 42, n_users: int = 8, 
         want.sort()
         if got != want:
             diff = [(g, w) for g, w in zip(got, want) if g != w][:4]
-            bad.append(f"[window {mode or 'INITIAL'}] PATTERN ({pattern}) DIVERGED: {diff}")
+            bad.append(
+                f"[window {mode or 'INITIAL'}] PATTERN ({pattern}) [{src}{extra}] DIVERGED: {diff}"
+            )
     return bad
 
 

@@ -18,7 +18,7 @@ Writes parquet to <repo>/bench_sf1/ (gitignored) and prints a markdown
 ratio table for PERF.md.
 
 --tpch-duel runs ALL 22 TPC-H queries at sf1 on BOTH engines with the
-same protocol (warm + min-of-3, 32 threads): Spark via the registry
+same protocol (warm + min-of-3, one thread per Spark core): Spark via the registry
 builders (noop sink), DuckDB via the same oracle SQL on the identical
 parquet. This measures whether the fixed per-query Spark job floor
 (~0.3-0.5 s, which dominates sf0.1 totals) amortizes once per-query
@@ -75,7 +75,7 @@ def build_sf1(spark) -> None:
             "source",
             "n_chars",
         )
-        .repartition(32)
+        .repartition(spark.sparkContext.defaultParallelism)
         .write.mode("overwrite")
         .parquet(f"{SF1}/documents.parquet")
     )
@@ -104,7 +104,7 @@ def build_sf1(spark) -> None:
             "value",
             "props",
         )
-        .repartition(32)
+        .repartition(spark.sparkContext.defaultParallelism)
         .write.mode("overwrite")
         .parquet(f"{SF1}/events.parquet")
     )
@@ -144,7 +144,7 @@ def tpch_duel(spark) -> None:
 
     specs = tpch.REG.specs()
     con = duckdb_connection(SF1)
-    con.execute("SET threads TO 32")
+    con.execute(f"SET threads TO {spark.sparkContext.defaultParallelism}")
     rows = []
     for name, spec in specs.items():
         s = _time(spec, spark, SF1)
@@ -248,7 +248,7 @@ def residue_scan(spark) -> None:
     for name in ("lineitem", "orders"):
         spark.read.parquet(str(Path(SF1, f"{name}.parquet"))).createOrReplaceTempView(name)
     con = duckdb_connection(SF1)
-    con.execute("SET threads TO 32")
+    con.execute(f"SET threads TO {spark.sparkContext.defaultParallelism}")
     print("| scan case | spark sf1 | duckdb sf1 | ratio |")
     print("|---|---|---|---|")
     for name, sql in _SCAN_CASES:

@@ -36,6 +36,16 @@ def test_ctas_if_not_exists_noop(engine):
     assert engine.sql("SELECT count(*) AS c FROM dml_t").collect()[0].c == 25
 
 
+def test_ctas_column_list_names_the_columns(engine):
+    """CREATE TABLE t (a, b) AS query: the list names the query's columns
+    (Trino's CreateTableAsSelect column aliases)."""
+    assert _rows(engine.sql("CREATE TABLE dml_ctas_cols (a, b) AS SELECT 1, 'x' AS s")) == 1
+    assert engine.sql("SELECT a, b FROM dml_ctas_cols").collect()[0].asDict() == {"a": 1, "b": "x"}
+    with pytest.raises(ValueError, match="MISMATCHED_COLUMN_ALIASES"):
+        engine.sql("CREATE TABLE dml_ctas_bad (a) AS SELECT 1, 2")
+    engine.sql("DROP TABLE dml_ctas_cols")
+
+
 def test_insert_select(engine):
     n = _rows(engine.sql("INSERT INTO dml_t SELECT n_nationkey + 100, upper(n_name), n_regionkey FROM nation WHERE n_regionkey = 0"))
     assert n == 5

@@ -67,3 +67,45 @@ def test_default_path_from_name(engine):
 def test_parse_error_messages(engine):
     with pytest.raises(ValueError, match="COLUMNS"):
         engine.sql("SELECT * FROM jt_orders o, JSON_TABLE(o.items_json, 'lax $[*]')")
+
+
+@pytest.mark.parametrize("col", ["path VARCHAR", "path VARCHAR PATH '$.path'"])
+def test_column_named_path(engine, col):
+    rows = engine.sql(
+        f"""SELECT path FROM (SELECT '[{{"path": "p1"}}]' AS doc) src,
+        JSON_TABLE(src.doc, 'lax $[*]' COLUMNS ({col}))"""
+    ).collect()
+    assert [r.path for r in rows] == ["p1"]
+
+
+_SKUS = "JSON_TABLE(o.items_json, 'lax $[*]' COLUMNS (sku VARCHAR PATH '$.sku'))"
+
+
+@pytest.mark.parametrize(
+    "from_",
+    [
+        f"jt_orders o CROSS JOIN {_SKUS}",
+        f"(SELECT * FROM region WHERE r_regionkey = 0) r, jt_orders o, {_SKUS}",
+        f"jt_orders o, (SELECT * FROM region WHERE r_regionkey = 0) r, {_SKUS} AS j",
+    ],
+)
+def test_json_table_after_any_from_item(engine, from_):
+    rows = engine.sql(f"SELECT o.order_id, sku FROM {from_} ORDER BY sku").collect()
+    assert [tuple(r) for r in rows] == [(1, "a"), (1, "b"), (2, "c")]
+
+
+def test_row_filter_applies_to_the_source(spark, sf_dir, engine):
+    """Under a role with a row filter, the flattened FROM item (read
+    through a nested engine.sql) holds only the filtered rows."""
+    from trino_spark.dialect import access
+
+    eng = TrinoEngine(spark, sf_dir=sf_dir)
+    eng.sql("CREATE ROLE jt_reader")
+    eng.sql("GRANT SELECT ON jt_orders TO ROLE jt_reader")
+    access.add_row_filter(eng, "jt_reader", "jt_orders", "order_id = 2")
+    eng.sql("SET ROLE jt_reader")
+    try:
+        rows = eng.sql(f"SELECT order_id, sku FROM jt_orders o, {_SKUS}").collect()
+        assert [tuple(r) for r in rows] == [(2, "c")]
+    finally:
+        eng.sql("SET ROLE NONE")

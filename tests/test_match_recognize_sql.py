@@ -5,11 +5,12 @@ import pytest
 
 from trino_spark.dialect.engine import TrinoEngine
 from trino_spark.dialect.match_recognize_sql import parse_spec
+from trino_spark.dialect.tokenizer import tokenize
 
 
 class TestParse:
     def test_full_clause(self):
-        spec = parse_spec(
+        spec = parse_spec(tokenize(
             """
             PARTITION BY user_id
             ORDER BY ts
@@ -20,7 +21,7 @@ class TestParse:
             PATTERN (W+ U)
             DEFINE W AS price > PREV(price), U AS price < PREV(price)
             """
-        )
+        ))
         assert spec.partition_by == ["user_id"] and spec.order_by == ["ts"]
         assert [n for _, n in spec.measures] == ["p0", "p1", "n", "lbl"]
         assert spec.rows_per_match == "all"
@@ -30,7 +31,7 @@ class TestParse:
 
     def test_desc_rejected(self):
         with pytest.raises(ValueError, match="DESC"):
-            parse_spec("ORDER BY ts DESC PATTERN (A) DEFINE A AS TRUE")
+            parse_spec(tokenize("ORDER BY ts DESC PATTERN (A) DEFINE A AS TRUE"))
 
 
 @pytest.fixture(scope="module")
@@ -342,3 +343,131 @@ class TestPatternWindow:
         assert [(r.seq, r.s, r.c) for r in rows] == [
             (1, 270.0, 3), (2, 170.0, 2), (3, 80.0, 1), (4, 120.0, 1),
         ]
+
+
+_TICKS = (
+    "SELECT * FROM VALUES (1, 1, 10.0), (1, 2, 8.0), (1, 3, 6.0), "
+    "(1, 4, 9.0), (1, 5, 12.0), (1, 6, 7.0) AS t(k, seq, price)"
+)
+_ONE_RUN = (
+    "MATCH_RECOGNIZE (PARTITION BY k ORDER BY seq MEASURES COUNT(*) AS n"
+    " PATTERN (A+) DEFINE A AS {})"
+)
+_RUNS = (
+    "WINDOW w AS (PARTITION BY k ORDER BY seq MEASURES count(*) AS n"
+    " ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING"
+    " PATTERN (A B*) DEFINE B AS price < PREV(price))"
+)
+
+
+@pytest.fixture()
+def ticks(spark, engine):
+    spark.sql(_TICKS).createOrReplaceTempView("mr_ticks")
+    return engine
+
+
+class TestClauseFromTokens:
+    """The clause and its input are read from the statement's tokens: any
+    FROM item in front of MATCH_RECOGNIZE, and never text in a literal or
+    a comment."""
+
+    @pytest.mark.parametrize(
+        "source",
+        ["mr_ticks AS t", "mr_ticks t", '"mr_ticks"', "(SELECT * FROM mr_ticks)",
+         "(SELECT * FROM mr_ticks WHERE seq > 0) AS s"],
+    )
+    def test_source_forms(self, ticks, source):
+        rows = ticks.sql(f"SELECT n FROM {source} {_ONE_RUN.format('true')}").collect()
+        assert [r.n for r in rows] == [6]
+
+    def test_literal_spelling_a_clause_is_a_literal(self, ticks):
+        sql = "SELECT * FROM mr_ticks " + _ONE_RUN.format("'x ALL ROWS PER MATCH' <> 'y'")
+        assert [(r.k, r.n) for r in ticks.sql(sql).collect()] == [(1, 6)]
+
+    def test_empty_string_literal(self, ticks):
+        rows = ticks.sql("SELECT n FROM mr_ticks " + _ONE_RUN.format("'x' <> ''")).collect()
+        assert [r.n for r in rows] == [6]
+
+    def test_python_operator_rejected(self, ticks):
+        with pytest.raises(ValueError, match="cannot parse"):
+            ticks.sql("SELECT n FROM mr_ticks " + _ONE_RUN.format("price ** 2 > 50"))
+
+    @pytest.mark.parametrize(
+        "cond, runs",
+        [
+            ("price > 7 AND (price < 9 OR price > 11)", [1, 1]),
+            ("NOT (price < PREV(price))", [2]),
+        ],
+    )
+    def test_parenthesised_boolean_operand(self, ticks, cond, runs):
+        rows = ticks.sql("SELECT n FROM mr_ticks " + _ONE_RUN.format(cond)).collect()
+        assert [r.n for r in rows] == runs
+
+    def test_lower_case_keywords(self, ticks):
+        rows = ticks.sql(
+            "select n from mr_ticks match_recognize (partition by k order by seq"
+            " measures count(*) as n pattern (A+) define A as price > 0)"
+        ).collect()
+        assert [r.n for r in rows] == [6]
+
+    @pytest.mark.parametrize(
+        "sql",
+        [
+            "SELECT 'see MATCH_RECOGNIZE (x)' AS s FROM region",
+            "SELECT 1 AS s /* MATCH_RECOGNIZE ( */ FROM region",
+            "SELECT 'a WINDOW w AS (' AS s, 'PATTERN (' AS p FROM region",
+            "SELECT 'FROM x, JSON_TABLE(' AS s FROM region",
+        ],
+    )
+    def test_clause_words_in_literals_and_comments(self, engine, sql):
+        assert engine.sql(sql).count() == 5
+
+    def test_pattern_window_leaves_literals(self, ticks):
+        rows = ticks.sql(
+            f"SELECT seq, n OVER w AS n, 'n OVER w' AS lit FROM mr_ticks {_RUNS} ORDER BY seq"
+        ).collect()
+        assert [r.n for r in rows] == [3, 2, 1, 1, 2, 1]
+        assert {r.lit for r in rows} == {"n OVER w"}
+
+
+def test_row_filter_applies_to_the_input(spark, sf_dir):
+    """Under a role with a row filter, the clause's input (read through a
+    nested engine.sql) sees only the filtered rows, in both forms."""
+    from trino_spark.dialect import access
+
+    spark.sql(_TICKS).createOrReplaceTempView("mr_ticks")
+    eng = TrinoEngine(spark, sf_dir)
+    eng.sql("CREATE ROLE mr_reader")
+    eng.sql("GRANT SELECT ON mr_ticks TO ROLE mr_reader")
+    access.add_row_filter(eng, "mr_reader", "mr_ticks", "seq <= 3")
+    eng.sql("SET ROLE mr_reader")
+    try:
+        rows = eng.sql("SELECT n FROM mr_ticks " + _ONE_RUN.format("true")).collect()
+        assert [r.n for r in rows] == [3]
+        rows = eng.sql(f"SELECT seq, n OVER w AS n FROM mr_ticks {_RUNS} ORDER BY seq").collect()
+        assert [(r.seq, r.n) for r in rows] == [(1, 3), (2, 2), (3, 1)]
+    finally:
+        eng.sql("SET ROLE NONE")
+
+
+def test_result_view_is_dropped(spark, sf_dir, monkeypatch):
+    """The temp view that holds a clause's result lives only while its
+    statement is built: it is not left in the session, and a later role
+    with no grants cannot read it."""
+    import uuid
+
+    from trino_spark.dialect import relations
+
+    spark.sql(_TICKS).createOrReplaceTempView("mr_ticks")
+    eng = TrinoEngine(spark, sf_dir)
+    monkeypatch.setattr(relations.uuid, "uuid4", lambda: uuid.UUID(int=0))
+    rows = eng.sql("SELECT n FROM mr_ticks " + _ONE_RUN.format("true")).collect()
+    assert [r.n for r in rows] == [6]
+    assert not [t.name for t in spark.catalog.listTables() if t.name.startswith("__rel_")]
+    eng.sql("CREATE ROLE mr_nobody")
+    eng.sql("SET ROLE mr_nobody")
+    try:
+        with pytest.raises(Exception, match="__rel_00000000"):
+            eng.sql("SELECT * FROM __rel_00000000").collect()
+    finally:
+        eng.sql("SET ROLE NONE")

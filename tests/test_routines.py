@@ -144,3 +144,24 @@ class TestWithFunction:
     def test_plain_with_cte_untouched(self, spark, sf_dir):
         eng = TrinoEngine(spark, sf_dir=sf_dir)
         assert eng.sql("WITH c AS (SELECT 1 AS x) SELECT x FROM c").collect()[0].x == 1
+
+
+class TestWithFunctionTokens:
+    """WITH FUNCTION's specifications and its query are split at the
+    statement's top level, never at text inside a literal."""
+
+    def test_keyword_in_a_literal_body(self, spark, sf_dir):
+        eng = TrinoEngine(spark, sf_dir=sf_dir)
+        out = eng.sql(
+            "WITH FUNCTION hello(x varchar) RETURNS varchar"
+            " RETURN concat('please select ', x) SELECT hello('a') AS v"
+        ).collect()
+        assert [r.v for r in out] == ["please select a"]
+
+    def test_comma_and_function_in_a_literal_body(self, spark, sf_dir):
+        eng = TrinoEngine(spark, sf_dir=sf_dir)
+        out = eng.sql(
+            "WITH FUNCTION hello(x varchar) RETURNS varchar"
+            " RETURN concat('a, FUNCTION b', x) SELECT hello('a') AS v"
+        ).collect()
+        assert [r.v for r in out] == ["a, FUNCTION ba"]

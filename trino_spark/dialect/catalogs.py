@@ -33,7 +33,7 @@ import shutil
 from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.sql.types import StructType
 
-from trino_spark.dialect.dml import align_insert, rows_result
+from trino_spark.dialect.dml import align_insert, query_of, rows_result
 from trino_spark.dialect.tokenizer import next_code
 from trino_spark.dialect.writes import named, properties, unquote
 
@@ -293,7 +293,7 @@ def write(engine, w) -> DataFrame:
         held = _read_files(spark, mount, path).schema if files else tables[(schema, table)]
     # the source query runs through the engine, so dialect SQL, routines
     # and security rewrites all apply
-    new = _pages(spark, [], held) if emptied else engine.sql(w.query)
+    new = _pages(spark, [], held) if emptied else query_of(engine, w)
     if w.kind == "INSERT" and held is not None:
         new = align_insert(engine, new, held, w.columns, {})
     if conn == "blackhole":

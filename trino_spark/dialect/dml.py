@@ -410,8 +410,23 @@ def _create(engine, w: writes.Write) -> DataFrame:
         ddl = ", ".join(" ".join(_column_definition(rec, c)) for c in w.columns)
         _commit(engine, _clear(engine, rec), rows_result(engine.spark, [], ddl))
         return rows_result(engine.spark, 0)
-    df = engine.sql(w.query)
+    df = query_of(engine, w)
     return rows_result(engine.spark, _commit(engine, _clear(engine, rec), df, operation="ctas"))
+
+
+def query_of(engine, w: writes.Write) -> DataFrame:
+    """A CTAS's or INSERT's source query, run through the engine; a CTAS's
+    column list names the query's columns (CreateTableAsSelect's column
+    aliases), one name per column."""
+    df = engine.sql(w.query)
+    if w.kind != "CREATE" or not w.columns:
+        return df
+    if len(w.columns) != len(df.columns):
+        raise ValueError(
+            f"MISMATCHED_COLUMN_ALIASES: the column list names {len(w.columns)} columns,"
+            f" the query returns {len(df.columns)}"
+        )
+    return df.toDF(*w.columns)
 
 
 def _layout(props: dict) -> list[str] | None:

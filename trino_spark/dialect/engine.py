@@ -35,7 +35,7 @@ from trino_spark.dialect import writes as _writes
 from trino_spark.dialect.dml import rows_result
 from trino_spark.dialect.rewrites import translate
 from trino_spark.dialect.tokenizer import (
-    Tok, head, lead, next_code, prev_code, render, structure, tokenize,
+    Reader, Tok, head, lead, next_code, prev_code, render, structure, tokenize,
 )
 from trino_spark.dialect.types import trino_type
 from trino_spark.functions import registry as _registry
@@ -290,6 +290,10 @@ class TrinoEngine:
         run, checked = _statement(words)
         if run is not None and not checked:
             return run(self, _text(toks))
+        # A MATCH_RECOGNIZE, JSON_TABLE or pattern WINDOW clause runs on its
+        # operator, and the query re-dispatches with the result in its place.
+        if run is None and (out := _relations.clause(self, toks)) is not None:
+            return out
         # Every relation name (branch, version, metadata table, catalog
         # mount, information_schema or system table) resolves here, once.
         _relations.resolve(self, toks)
@@ -306,33 +310,6 @@ class TrinoEngine:
             # secured views. DML reads recurse through this dispatch, so
             # their SELECT halves are covered too.
             trino_sql = stripped = _access.apply_security(self, stripped)
-        if re.search(r"\bJSON_TABLE\s*\(", stripped, re.IGNORECASE):
-            # JSON_TABLE clause (grammar SqlBase.g4; operator
-            # main/operator/table/json/): execute on the json_table
-            # operator, substitute a temp view, re-dispatch.
-            from trino_spark.dialect import json_table_sql as _jtsql
-
-            jt_out = _jtsql.try_rewrite(self, stripped)
-            if jt_out is not None:
-                return jt_out
-        if re.search(r"\bMATCH_RECOGNIZE\b", stripped, re.IGNORECASE):
-            # Row-pattern recognition (grammar SqlBase.g4:448): execute the
-            # block on the NFA operator, substitute a temp view, re-dispatch.
-            from trino_spark.dialect import match_recognize_sql as _mrsql
-
-            out = _mrsql.try_rewrite(self, stripped)
-            if out is not None:
-                return out
-        if re.search(r"\bWINDOW\b", stripped, re.IGNORECASE) and re.search(
-            r"\bPATTERN\s*\(", stripped, re.IGNORECASE
-        ):
-            # Row-pattern recognition in WINDOW (docs
-            # pattern-recognition-in-window.md): per-row anchored match.
-            from trino_spark.dialect import match_recognize_sql as _mrsql
-
-            out = _mrsql.try_rewrite_window(self, stripped)
-            if out is not None:
-                return out
         spark_sql = translate(_routines_mod.expand(trino_sql, self.routines))
         # Reused-CTE materialization (Trino CTE materialization / FTE
         # exchange-spool analog): a WITH subplan referenced >= 2 times is
@@ -351,19 +328,21 @@ class TrinoEngine:
         # functionSpecification; docs udf/sql): expression-bodied
         # functions scoped to this one query — parsed with the CREATE
         # FUNCTION machinery, macro-inlined, then discarded.
-        wf = re.match(
-            r"WITH\s+(FUNCTION\s+.*?)\s+(SELECT|VALUES)\b(.*)$", text, re.IGNORECASE | re.DOTALL
-        )
-        if not wf:
+        toks = tokenize(text)
+        r = Reader(toks)
+        first = r.find("FUNCTION", 0)
+        query = min(r.find(kw, first) for kw in ("SELECT", "VALUES", "WITH", "TABLE"))
+        if query >= r.n:
             raise ValueError(f"cannot parse WITH FUNCTION: {text[:80]}")
         inline: dict = {}
-        for spec_txt in re.split(r",\s*(?=FUNCTION\b)", wf.group(1), flags=re.IGNORECASE):
-            r = _routines_mod.parse_create_function("CREATE " + spec_txt.strip())
-            if r is None or isinstance(r, _routines_mod.PythonRoutine):
+        for a, b in r.split(",", first, query):
+            if not r.is_(r.next(a), "FUNCTION"):
+                raise ValueError(f"cannot parse WITH FUNCTION: {text[:80]}")
+            routine = _routines_mod.parse_create_function("CREATE " + render(toks[a:b]).strip())
+            if routine is None or isinstance(routine, _routines_mod.PythonRoutine):
                 raise ValueError("WITH FUNCTION supports expression-bodied SQL routines only")
-            inline[r.name] = r
-        query = f"{wf.group(2)}{wf.group(3)}"
-        return self.sql(_routines_mod.expand(query, {**self.routines, **inline}))
+            inline[routine.name] = routine
+        return self.sql(_routines_mod.expand(render(toks[query:]), {**self.routines, **inline}))
 
     def _prepare(self, text: str) -> DataFrame:
         name, body = _prep.parse_prepare(text)

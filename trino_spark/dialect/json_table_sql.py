@@ -1,111 +1,110 @@
-"""JSON_TABLE SQL surface: parse the clause out of a Trino statement,
-execute it on operators/json_table.py, substitute a temp view, re-dispatch.
+"""JSON_TABLE SQL surface: read the clause from a statement's tokens and
+execute it on operators/json_table.py over the FROM item it flattens;
+relations.substitute puts the result in place of both and re-dispatches.
 
 Reference: grammar SqlBase.g4 JSON_TABLE clause + main/operator/table/json/
-(JsonTable PTF planning). Same integration pattern as the MATCH_RECOGNIZE
-surface (dialect/match_recognize_sql.py): the block executes on the
-operator, the enclosing query sees a plain relation.
+(JsonTable PTF planning). Same integration as the MATCH_RECOGNIZE surface
+(dialect/match_recognize_sql.py): the block executes on the operator, the
+enclosing query sees a plain relation.
 
 Supported subset:
-  FROM <table | (subquery)> [AS] [alias] , JSON_TABLE(<col>, '<row path>'
+  FROM ... <item> ... {, | CROSS JOIN} JSON_TABLE(<[item.]col>, '<row path>'
       COLUMNS ( name FOR ORDINALITY
               | name <type> [PATH '<path>']
-              | NESTED [PATH] '<path>' COLUMNS (...) , ... )) [AS] [alias]
-One NESTED spec per level (operator restriction), lax paths.
+              | NESTED [PATH] '<path>' COLUMNS (...) , ... )) [[AS] alias]
+where <item> is a table name or a parenthesised subquery, with or without
+an alias, anywhere in the same FROM list: the column's qualifier names
+it (an unqualified column reads the item just before the comma or CROSS
+JOIN). The item keeps its name, so the outer query reads both its columns
+and the JSON_TABLE columns through it. One NESTED spec per level
+(operator restriction), lax paths.
 """
 
 from __future__ import annotations
 
-import re
-import uuid
-
-from pyspark.sql import DataFrame
-
-from trino_spark.dialect.tokenizer import close_paren, split_commas
+from trino_spark.dialect.tokenizer import (
+    Tok, alias_at, item, match_paren, next_code, prev_code, render, split_args, structure,
+)
 from trino_spark.dialect.types import spark_type
+from trino_spark.dialect.writes import unquote
 from trino_spark.operators.json_table import ColumnSpec, NestedSpec, json_table
 
-_JT_RX = re.compile(
-    r"FROM\s+("
-    r"\((?:[^()]|\([^()]*\))*\)|[\w.\"]+"  # (subquery) or table name
-    r")\s*(?:AS\s+)?(\w+)?\s*,\s*JSON_TABLE\s*\(",
-    re.IGNORECASE | re.DOTALL,
-)
 
-
-def _parse_columns(block: str):
-    """COLUMNS(...) body -> list[ColumnSpec | NestedSpec]."""
+def _columns(toks: list[Tok], o: int) -> list:
+    """The COLUMNS ( ... ) at token o -> list[ColumnSpec | NestedSpec]."""
     cols = []
-    for piece in split_commas(block):
-        up = piece.upper()
-        if up.startswith("NESTED"):
-            m = re.match(
-                r"NESTED\s+(?:PATH\s+)?'([^']*)'\s+COLUMNS\s*\(", piece, re.IGNORECASE
-            )
-            if not m:
-                raise ValueError(f"cannot parse NESTED column: {piece[:60]}")
-            open_i = piece.index("(", m.end() - 1)
-            close_i = close_paren(piece, open_i)
-            cols.append(
-                NestedSpec(m.group(1), tuple(_parse_columns(piece[open_i + 1 : close_i])))
-            )
+    for a, b in split_args(toks, o, match_paren(toks, o)):
+        k = [j for j in range(a, b) if toks[j].kind != "WS"]
+        words = [toks[j].text.upper() for j in k]
+        if words[0] == "NESTED":
+            x = 2 if words[1:2] == ["PATH"] else 1
+            if not (words[x + 1 : x + 3] == ["COLUMNS", "("] and toks[k[x]].kind == "STR"
+                    and match_paren(toks, k[x + 2]) == k[-1]):
+                raise ValueError(f"cannot parse NESTED column: {render(toks[a:b]).strip()[:60]}")
+            cols.append(NestedSpec(unquote(toks[k[x]]), tuple(_columns(toks, k[x + 2]))))
             continue
-        om = re.match(r"(\w+)\s+FOR\s+ORDINALITY\s*$", piece, re.IGNORECASE)
-        if om:
-            cols.append(ColumnSpec(om.group(1).lower(), ordinality=True))
+        name = toks[k[0]].text.strip('"').lower()
+        if words[1:] == ["FOR", "ORDINALITY"]:
+            cols.append(ColumnSpec(name, ordinality=True))
             continue
-        cm = re.match(
-            r"(\w+)\s+([A-Za-z]+(?:\s*\(\s*\d+(?:\s*,\s*\d+)?\s*\))?)\s*(?:PATH\s+'([^']*)')?\s*$",
-            piece,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not cm:
-            raise ValueError(f"cannot parse JSON_TABLE column: {piece[:60]}")
-        cols.append(ColumnSpec(cm.group(1).lower(), spark_type(cm.group(2)), path=cm.group(3)))
+        # `PATH '<path>'` closes the column; the column may be named path
+        p = len(k) - 2 if len(k) > 3 and words[-2] == "PATH" else len(k)
+        if p < 2 or words[-1] == "PATH" or (p < len(k) and toks[k[-1]].kind != "STR"):
+            raise ValueError(f"cannot parse JSON_TABLE column: {render(toks[a:b]).strip()[:60]}")
+        path = unquote(toks[k[p + 1]]) if p < len(k) else None
+        cols.append(ColumnSpec(name, spark_type(render(toks[k[1] : k[p - 1] + 1])), path=path))
     return cols
 
 
-def try_rewrite(engine, sql: str) -> DataFrame | None:
-    """Execute the JSON_TABLE block; substitute a temp view; re-dispatch."""
-    m = _JT_RX.search(sql)
-    if not m:
+def read(engine, toks: list[Tok], i: int):
+    """JSON_TABLE at token i: the FROM item its JSON argument names, run
+    through the operator; the result and the edits that put it in place of
+    that item and remove the clause (relations.substitute). None for a word
+    that opens no clause."""
+    o = next_code(toks, i + 1)
+    if o >= len(toks) or not toks[o].is_sym("("):
         return None
-    src_rel, src_alias = m.group(1), m.group(2)
-    open_i = sql.index("(", m.end() - 1)
-    close_i = close_paren(sql, open_i)
-    args = split_commas(sql[open_i + 1 : close_i])
+    close = match_paren(toks, o)
+    args = [[j for j in range(a, b) if toks[j].kind != "WS"] for a, b in split_args(toks, o, close)]
     if len(args) != 2:
         raise ValueError("JSON_TABLE(col, 'path' COLUMNS(...)) expected")
-    json_expr = args[0].strip()
-    # second argument: '<row path>' COLUMNS ( ... )  (space-separated per
-    # the grammar, SqlBase.g4 jsonTable)
-    pm = re.match(r"\s*'([^']*)'\s*COLUMNS\s*\(", args[1], re.IGNORECASE | re.DOTALL)
-    if not pm:
+    # the second argument: '<row path>' COLUMNS ( ... ), space-separated
+    # per the grammar (SqlBase.g4 jsonTable)
+    path = args[1][:3]
+    if not (len(path) == 3 and toks[path[0]].kind == "STR" and toks[path[1]].is_word("COLUMNS")
+            and toks[path[2]].is_sym("(") and match_paren(toks, path[2]) == args[1][-1]):
         raise ValueError("JSON_TABLE second argument must be '<path>' COLUMNS(...)")
-    row_path = pm.group(1)
-    cbody = args[1]
-    c_open = cbody.index("(", pm.end() - 1)
-    c_close = close_paren(cbody, c_open)
-    columns = _parse_columns(cbody[c_open + 1 : c_close])
+    chain = [toks[j] for j in args[0]]
+    if len(chain) % 2 == 0 or any(t.kind not in ("WORD", "QIDENT") for t in chain[::2]) or any(
+        not t.is_sym(".") for t in chain[1::2]
+    ):
+        raise ValueError("JSON_TABLE's first argument must be a column")
+    qualifier = chain[-3].text.strip('"').lower() if len(chain) > 1 else None
 
-    if src_rel.startswith("("):
-        df = engine.sql(src_rel[1:-1])
-    else:
-        df = engine.catalog.table(src_rel.strip('"').split(".")[-1])
-    json_col = json_expr.split(".")[-1].strip('"')
-    flat = json_table(df, json_col, row_path, columns, outer=False)
-
-    view = f"__jt_{uuid.uuid4().hex[:8]}"
-    flat.createOrReplaceTempView(view)
-    # Consume an optional trailing alias after JSON_TABLE(...)
-    rest = sql[close_i + 1 :]
-    am = re.match(r"\s*(?:AS\s+)?(\w+)?", rest)
-    consumed = am.end() if am and am.group(1) and am.group(1).upper() not in (
-        "WHERE", "GROUP", "ORDER", "LIMIT", "HAVING", "UNION", "JOIN", "ON",
-    ) else 0
-    # Keep the source alias on the substituted view so qualified outer
-    # references (alias.col) still resolve — the view carries the base
-    # relation's columns alongside the JSON_TABLE projections.
-    alias_txt = f" AS {src_alias}" if src_alias else ""
-    new_sql = sql[: m.start()] + f"FROM {view}{alias_txt}" + rest[consumed:]
-    return engine.sql(new_sql)
+    # the FROM item: named by the column's qualifier, else just before the
+    # comma or CROSS JOIN that joins JSON_TABLE to the list
+    sep = prev_code(toks, i - 1)
+    if sep > 0 and toks[sep].is_word("JOIN") and toks[prev_code(toks, sep - 1)].is_word("CROSS"):
+        sep = prev_code(toks, sep - 1)
+    elif sep < 0 or not toks[sep].is_sym(","):
+        raise ValueError("JSON_TABLE must follow a FROM item after a comma or CROSS JOIN")
+    st = structure(toks)
+    block = st.block_of(i)
+    ends = [prev_code(toks, sep - 1)] if qualifier is None else [
+        p for p in range(sep - 1, block.from_ if block else -1, -1)
+        if st.depth[p] == st.depth[i] and toks[p].kind in ("WORD", "QIDENT")
+        and toks[p].text.strip('"').lower() == qualifier
+    ]
+    p, src = -1, None
+    for p in ends:
+        if src := item(toks, st, p):
+            break
+    if src is None:
+        raise ValueError(f"JSON_TABLE: no FROM item {qualifier or ''} before it")
+    df = engine.sql("SELECT * FROM " + render(toks[src[0] : src[1]]))
+    flat = json_table(
+        df, chain[-1].text.strip('"'), unquote(toks[path[0]]), _columns(toks, path[2]), outer=False
+    )
+    alias = "" if toks[p].is_sym(")") else f" AS {toks[p].text}"
+    end = max(alias_at(toks, next_code(toks, close + 1)), close) + 1  # JSON_TABLE's own alias
+    return flat, [(src[0], p + 1, "{view}" + alias), (sep, end, "")]

@@ -1,18 +1,23 @@
-"""MATCH_RECOGNIZE SQL clause → operators/match_recognize bridge.
+"""MATCH_RECOGNIZE and WINDOW ... PATTERN clauses → operators/match_recognize.
 
 Reference: grammar SqlBase.g4:448 (patternRecognition) and the row-pattern
-analyzer under core/trino-main/.../sql/analyzer/ — this module parses the
-SQL surface and compiles it onto the existing NFA operator, so
-`engine.sql` accepts real MATCH_RECOGNIZE statements instead of only the
-Python API.
+analyzer under core/trino-main/.../sql/analyzer/. A clause is read from the
+statement's tokens (relations.clause finds it), its input relation runs
+through a nested engine.sql (so resolution, access checks and row filters
+apply to it), and the result replaces the clause and its input
+(relations.substitute).
 
 Supported subset (documented; the operator itself supports more via the
 Python API):
+- the input: a table name (qualified, quoted, aliased) or a parenthesised
+  subquery in front of MATCH_RECOGNIZE; a pattern window reads its
+  block's FROM ... WINDOW span
 - PARTITION BY cols, ORDER BY cols (ASC only)
-- MEASURES <expr> AS name: exprs over FIRST(col), LAST(col), bare col
-  (= LAST at match end), COUNT(*), COUNT(L.*), CLASSIFIER(), literals and
+- MEASURES [RUNNING|FINAL] <expr> AS name: exprs over FIRST(col),
+  LAST(col), bare col (= LAST at match end), COUNT(*), COUNT(L.*),
+  SUM/AVG/MIN/MAX(col | L.col), CLASSIFIER(), literals and
   arithmetic/comparison combinations thereof
-- ONE ROW PER MATCH | ALL ROWS PER MATCH
+- ONE ROW PER MATCH | ALL ROWS PER MATCH [WITH UNMATCHED ROWS]
 - AFTER MATCH SKIP PAST LAST ROW | TO NEXT ROW | TO [FIRST|LAST] <label>
 - PATTERN (...) — whatever the operator's parser takes (concat/alt/
   quantifiers/PERMUTE)
@@ -22,549 +27,503 @@ Python API):
   PREV(col[, n]), NEXT(col[, n]), FIRST(col) (match start), literals,
   comparison/arithmetic/AND/OR/NOT. Label-qualified references (A.price)
   are not supported — use PREV/FIRST formulations.
+- in a WINDOW: the frame ROWS BETWEEN CURRENT ROW AND UNBOUNDED
+  FOLLOWING, INITIAL or SEEK, and `measure OVER w` or
+  COUNT/SUM/AVG/MIN/MAX(...) OVER w in the select list
 
-DEFINE/MEASURES compile to small Python closures via a token-level
-rewrite into Python expressions evaluated against the group's pandas
-slice. Start-independent `col <cmp> literal` conditions additionally
-compile to VECTORIZED chunk masks, which lets the operator take its
-compiled-regex fast path — the sf0.1 funnel via SQL dropped 2.8 s ->
-1.6 s when every label vectorizes.
+DEFINE/MEASURES compile to small Python closures: each token maps to one
+Python fragment over the group's pandas slice, and any symbol outside
+SQL's operators raises ValueError. Start-independent `col <cmp> literal`
+conditions additionally compile to VECTORIZED chunk masks, which lets the
+operator take its compiled-regex fast path — the sf0.1 funnel via SQL
+dropped 2.8 s -> 1.6 s when every label vectorizes.
 """
 
 from __future__ import annotations
 
-import re
-import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from trino_spark.dialect.tokenizer import close_paren, split_commas
+from trino_spark.dialect.tokenizer import (
+    Reader, Tok, item, match_paren, next_code, open_paren, prev_code, render, split_args,
+    structure,
+)
+from trino_spark.dialect.writes import unquote
 
-_CLAUSE_RX = re.compile(r"\bMATCH_RECOGNIZE\s*\(", re.IGNORECASE)
-
-_SQL_KEYWORDS = {"AND", "OR", "NOT", "TRUE", "FALSE", "NULL", "IN", "BETWEEN", "IS"}
+# an expression's code tokens (no whitespace)
+Expr = list[Tok]
 
 
 @dataclass
 class MRSpec:
     partition_by: list[str]
     order_by: list[str]
-    measures: list[tuple[str, str]]  # (expr, name)
+    measures: list[tuple[Expr, str]]  # (expression, name)
     rows_per_match: str
-    after_match: str
+    after_match: str  # a SUBSET target of SKIP TO spelled as its labels, A|B
     pattern: str
-    define: dict[str, str] = field(default_factory=dict)
+    define: dict[str, Expr] = field(default_factory=dict)
     subsets: dict[str, list[str]] = field(default_factory=dict)
+    seek: bool = False  # a pattern window's SEEK (else INITIAL)
 
 
-def find_block(sql: str) -> tuple[int, int, int] | None:
-    """(keyword_start, open_paren, close_paren) of the first
-    MATCH_RECOGNIZE block, or None."""
-    m = _CLAUSE_RX.search(sql)
-    if not m:
-        return None
-    op = sql.index("(", m.start())
-    return m.start(), op, close_paren(sql, op)
+# each clause's leading words -> its name, in the grammar's order; DEFINE,
+# the last, runs to the end
+_CLAUSES = {
+    ("PARTITION", "BY"): "partition",
+    ("ORDER", "BY"): "order",
+    ("MEASURES",): "measures",
+    ("ONE", "ROW", "PER", "MATCH"): "rows",
+    ("ALL", "ROWS", "PER", "MATCH"): "rows",
+    ("AFTER", "MATCH"): "after",
+    ("ROWS", "BETWEEN"): "frame",
+    ("INITIAL", "PATTERN"): "pattern",
+    ("SEEK", "PATTERN"): "seek",
+    ("PATTERN",): "pattern",
+    ("SUBSET",): "subset",
+    ("DEFINE",): "define",
+}
+_ALL = "ALL ROWS PER MATCH"
+_ROWS = {
+    "ONE ROW PER MATCH": "one",
+    _ALL: "all",
+    f"{_ALL} SHOW EMPTY MATCHES": "all",
+    f"{_ALL} OMIT EMPTY MATCHES": "all",
+    f"{_ALL} WITH UNMATCHED ROWS": "all_with_unmatched",
+}
+_AFTER = {
+    "AFTER MATCH SKIP PAST LAST ROW": "past_last",
+    "AFTER MATCH SKIP TO NEXT ROW": "next_row",
+}
+_FRAME = "ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING"
 
 
-def parse_spec(body: str) -> MRSpec:
-    """Parse the text inside MATCH_RECOGNIZE( ... )."""
+def parse_spec(toks: list[Tok], window: bool = False) -> MRSpec:
+    """Read the tokens inside MATCH_RECOGNIZE ( ... ), or inside a pattern
+    window's ( ... ) when `window`."""
+    r = Reader(toks)
+    words = [toks[j].text.upper() for j in r.top]
+    starts: list[tuple[str, int, int]] = []  # (clause, its first word, past its keywords)
+    x = 0
+    while x < len(words) and not (starts and starts[-1][0] == "define"):
+        key = next((k for k in _CLAUSES if tuple(words[x : x + len(k)]) == k), None)
+        if key is None and not starts:
+            raise r.error("MATCH_RECOGNIZE")
+        if key is not None:
+            starts.append((_CLAUSES[key], r.top[x], r.top[x + len(key) - 1] + 1))
+        x += len(key) if key else 1
+    ends = [s[1] for s in starts[1:]] + [r.n]
+    span = {name: (a, b, z) for (name, a, b), z in zip(starts, ends)}
 
-    def clause(name: str, stop: str) -> str | None:
-        m = re.search(rf"\b{name}\b(.*?)(?={stop}|$)", body, re.IGNORECASE | re.DOTALL)
-        return m.group(1).strip() if m else None
+    def code(name: str) -> Expr:  # the clause's code tokens, its keywords included
+        return [t for t in toks[span[name][0] : span[name][2]] if t.kind != "WS"]
 
-    stops = r"\bPARTITION\s+BY\b|\bORDER\s+BY\b|\bMEASURES\b|\bONE\s+ROW\b|\bALL\s+ROWS\b|\bAFTER\s+MATCH\b|\bPATTERN\b|\bSUBSET\b|\bDEFINE\b"
-    part = clause(r"PARTITION\s+BY", stops)
-    order = clause(r"ORDER\s+BY", stops)
-    meas = clause(r"MEASURES", stops)
-    after = clause(r"AFTER\s+MATCH", stops)
-    pat_m = re.search(r"\bPATTERN\s*\(", body, re.IGNORECASE)
-    if not pat_m:
+    def said(name: str) -> str:
+        return " ".join(t.text.upper() for t in code(name))
+
+    def items(name: str) -> list[Expr]:  # the clause's comma-separated items
+        if name not in span:
+            return []
+        return [[t for t in toks[a:z] if t.kind != "WS"] for a, z in r.split(",", *span[name][1:])]
+
+    def column(c: Expr) -> str:
+        if len(c) != 1 or c[0].kind not in ("WORD", "QIDENT"):
+            raise ValueError(f"MATCH_RECOGNIZE partitions and orders by columns: {render(c)}")
+        return _name(c[0])
+
+    if not window and {"frame", "seek"} & span.keys():
+        raise ValueError("MATCH_RECOGNIZE takes no window frame or SEEK")
+    if "frame" in span and said("frame") != _FRAME:
+        raise ValueError(f"pattern window frame must be {_FRAME} (the reference's requirement)")
+    pat = "seek" if "seek" in span else "pattern"
+    o = r.next(span[pat][1]) if pat in span else r.n
+    if not r.is_(o, "("):
         raise ValueError("MATCH_RECOGNIZE requires PATTERN (...)")
-    pat_close = close_paren(body, body.index("(", pat_m.start()))
-    pattern = body[body.index("(", pat_m.start()) + 1 : pat_close].strip()
-    define_txt = clause(r"DEFINE", r"\Z")
+    if r.next(match_paren(toks, o) + 1) < span[pat][2]:
+        raise r.error("PATTERN")
 
-    if re.search(r"\bALL\s+ROWS\s+PER\s+MATCH\s+WITH\s+UNMATCHED\s+ROWS\b", body, re.IGNORECASE):
-        rows_per_match = "all_with_unmatched"
-    elif re.search(r"\bALL\s+ROWS\s+PER\s+MATCH\b", body, re.IGNORECASE):
-        rows_per_match = "all"
-    else:
-        rows_per_match = "one"
-
-    after_match = "past_last"
-    if after:
-        a = re.sub(r"\s+", " ", after).strip().upper()
-        if a.startswith("SKIP TO NEXT ROW"):
-            after_match = "next_row"
-        elif a.startswith("SKIP PAST LAST ROW"):
-            after_match = "past_last"
-        else:
-            m = re.match(r"SKIP TO (FIRST|LAST)\s+(\w+)", a)
-            if m:
-                after_match = f"to_{m.group(1).lower()}:{m.group(2)}"
-            else:
-                raise ValueError(f"unsupported AFTER MATCH clause: {after}")
-
-    measures: list[tuple[str, str]] = []
-    if meas:
-        for item in split_commas(meas):
-            mm = re.match(r"(.*)\bAS\s+(\w+)\s*$", item, re.IGNORECASE | re.DOTALL)
-            if not mm:
-                raise ValueError(f"MEASURES item needs AS name: {item}")
-            # RUNNING/FINAL semantics prefixes: measures here evaluate at
-            # the match's LAST row (ONE ROW PER MATCH / window form), where
-            # RUNNING and FINAL coincide — strip the keyword.
-            expr = re.sub(
-                r"^\s*(?:RUNNING|FINAL)\b", "", mm.group(1).strip(), flags=re.IGNORECASE
-            ).strip()
-            measures.append((expr, mm.group(2)))
-
-    define: dict[str, str] = {}
-    if define_txt:
-        for item in split_commas(define_txt):
-            dm = re.match(r"(\w+)\s+AS\s+(.*)$", item, re.IGNORECASE | re.DOTALL)
-            if not dm:
-                raise ValueError(f"DEFINE item needs `label AS cond`: {item}")
-            define[dm.group(1)] = dm.group(2).strip()
-
+    measures = []
+    for m in items("measures"):
+        if len(m) < 3 or not m[-2].is_word("AS") or m[-1].kind not in ("WORD", "QIDENT"):
+            raise ValueError(f"MEASURES item needs AS name: {render(m)}")
+        # RUNNING/FINAL: measures evaluate at the match's LAST row (ONE ROW
+        # PER MATCH / window form), where the two coincide
+        expr = m[1:-2] if m[0].is_word("RUNNING", "FINAL") else m[:-2]
+        measures.append((expr, _name(m[-1])))
+    define = {}
+    for d in items("define"):
+        if len(d) < 3 or d[0].kind != "WORD" or not d[1].is_word("AS"):
+            raise ValueError(f"DEFINE item needs `label AS cond`: {render(d)}")
+        define[d[0].text] = d[2:]
     # SUBSET S = (A, B), T = (C, D): union pattern variables (grammar
     # SqlBase.g4 subsetDefinition) usable in COUNT(S.*) and SKIP TO S.
-    subsets: dict[str, list[str]] = {}
-    subset_txt = clause(r"SUBSET", stops)
-    if subset_txt:
-        for item in split_commas(subset_txt):
-            sm = re.match(r"(\w+)\s*=\s*\(([^)]*)\)\s*$", item, re.DOTALL)
-            if not sm:
-                raise ValueError(f"SUBSET item needs `name = (labels)`: {item}")
-            subsets[sm.group(1)] = [x.strip() for x in sm.group(2).split(",") if x.strip()]
-
-    order_cols = []
-    if order:
-        for c in split_commas(order):
-            cu = c.strip()
-            if re.search(r"\bDESC\b", cu, re.IGNORECASE):
-                raise ValueError("ORDER BY DESC not supported in MATCH_RECOGNIZE subset")
-            order_cols.append(re.sub(r"\bASC\b", "", cu, flags=re.IGNORECASE).strip())
-
+    subsets = {}
+    for s in items("subset"):
+        if len(s) < 4 or s[0].kind != "WORD" or not s[1].is_sym("=") or not s[-1].is_sym(")"):
+            raise ValueError(f"SUBSET item needs `name = (labels)`: {render(s)}")
+        subsets[s[0].text] = [t.text for t in s[3:-1] if t.kind == "WORD"]
+    rows = _ROWS.get(said("rows")) if "rows" in span else "one"
+    after = _AFTER.get(said("after")) if "after" in span else "past_last"
+    words = said("after").split() if "after" in span else []
+    if words[2:4] == ["SKIP", "TO"] and len(words) == 6 and words[4] in ("FIRST", "LAST"):
+        # SKIP TO [FIRST|LAST] label, a SUBSET name standing for its labels
+        label = code("after")[-1].text
+        after = f"to_{words[4].lower()}:" + "|".join(subsets.get(label, [label]))
+    if rows is None or after is None:
+        raise ValueError(f"unsupported clause: {said('rows' if rows is None else 'after')}")
+    order_by = []
+    for c in items("order"):
+        if c and c[-1].is_word("DESC"):
+            raise ValueError("ORDER BY DESC not supported in MATCH_RECOGNIZE subset")
+        order_by.append(column(c[:-1] if c and c[-1].is_word("ASC") else c))
     return MRSpec(
-        partition_by=split_commas(part) if part else [],
-        order_by=order_cols,
+        partition_by=[column(c) for c in items("partition")],
+        order_by=order_by,
         measures=measures,
-        rows_per_match=rows_per_match,
-        after_match=after_match,
-        pattern=pattern,
+        rows_per_match=rows,
+        after_match=after,
+        pattern=render(toks[o + 1 : match_paren(toks, o)]).strip(),
         define=define,
         subsets=subsets,
+        seek=pat == "seek",
     )
 
 
 # ------------------------------------------------------- expression compiler
 
-_TOKEN_RX = re.compile(
-    r"""('(?:[^']|'')*')          # string literal
-      | (\bPREV|\bNEXT|\bFIRST|\bLAST|\bCOUNT|\bCLASSIFIER|\bSUM|\bAVG|\bMIN|\bMAX)\s*\(  # functions
-      | ([A-Za-z_]\w*(?:\.\w+|\.\*)?)  # identifier / qualified / L.*
-      | (<>|<=|>=|=|<|>)          # comparison
-      | (\S)                      # everything else
-    """,
-    re.IGNORECASE | re.VERBOSE,
-)
+# SQL's operators and their Python spelling; any other symbol is refused
+_OPS = {
+    "=": "==",
+    "<>": "!=",
+    "!=": "!=",
+    "<": "<",
+    ">": ">",
+    "<=": "<=",
+    ">=": ">=",
+    "+": "+",
+    "-": "-",
+    "*": "*",
+    "/": "/",
+    "%": "%",
+    "(": "(",
+    ")": ")",
+}
+_WORDS = {
+    "AND": "and",
+    "OR": "or",
+    "NOT": "not",
+    "TRUE": "True",
+    "FALSE": "False",
+    "NULL": "None",
+}
 
 
-def _pyify(expr: str, mode: str) -> str:
-    """SQL fragment -> Python expression over the _env helpers.
+def _pyify(expr: Expr, measure: bool) -> str:
+    """SQL tokens -> a Python expression over the closures' helpers, one
+    fragment per token, joined by spaces (so `**` stays two operators).
 
-    mode="define": bare col = current row; PREV/NEXT/FIRST available.
-    mode="measure": bare col = last matched row; FIRST/LAST/COUNT/
-    CLASSIFIER available."""
+    DEFINE (not `measure`): bare col = current row; PREV/NEXT/FIRST.
+    MEASURES: bare col = last matched row; FIRST/LAST/COUNT/CLASSIFIER and
+    SUM/AVG/MIN/MAX."""
     out: list[str] = []
     i = 0
     while i < len(expr):
-        m = _TOKEN_RX.match(expr, i)
-        if not m:
-            out.append(expr[i])
-            i += 1
-            continue
-        s_lit, fn, ident, cmp_op, other = m.groups()
-        i = m.end()
-        if s_lit is not None:
-            out.append(s_lit.replace("''", "\\'"))
-        elif fn is not None:
-            f = fn.upper()
-            close = close_paren(expr, i - 1)
-            inner = expr[i:close].strip()
-            i = close + 1
-            if f == "CLASSIFIER":
-                out.append("_classifier()")
-            elif f in ("SUM", "AVG", "MIN", "MAX"):
-                # Aggregate measures over the match's rows, optionally
-                # label-qualified: SUM(x) / SUM(A.x) (reference: row-pattern
-                # aggregations, MeasureComputation.java; grammar
-                # patternRecognition aggregations). MEASURES only.
-                if mode != "measure":
-                    raise ValueError(f"{f}() is not supported in DEFINE — MEASURES only")
-                am = re.match(r"(?:(\w+)\.)?(\w+)$", inner.strip())
-                if not am:
-                    raise ValueError(f"{f} expects col or label.col, got: {inner}")
-                label = f"'{am.group(1)}'" if am.group(1) else "None"
-                out.append(f"_agg('{f.lower()}', {label}, '{am.group(2)}')")
-            elif f == "COUNT":
-                if inner in ("*", ""):
-                    out.append("_count()")
-                else:
-                    lm = re.match(r"(\w+)\.\*$", inner)
-                    if not lm:
-                        raise ValueError(f"COUNT supports * or label.*, got: {inner}")
-                    out.append(f"_count_label('{lm.group(1)}')")
-            else:
-                args = split_commas(inner)
-                col = args[0].strip()
-                n = int(args[1]) if len(args) > 1 else 1
-                if not re.fullmatch(r"[A-Za-z_]\w*", col):
-                    raise ValueError(f"{f} expects a bare column, got: {col}")
-                out.append(f"_{f.lower()}('{col}', {n})")
-        elif ident is not None:
-            up = ident.upper()
-            if up in ("AND", "OR", "NOT"):
-                out.append(f" {up.lower()} ")
-            elif up == "TRUE":
-                out.append("True")
-            elif up == "FALSE":
-                out.append("False")
-            elif up == "NULL":
-                out.append("None")
-            elif "." in ident:
-                raise ValueError(
-                    f"label-qualified reference not supported: {ident} "
-                    "(use PREV/FIRST/LAST formulations)"
-                )
-            else:
-                out.append(f"_bare('{ident}')")
-        elif cmp_op is not None:
-            out.append({"=": "==", "<>": "!="}.get(cmp_op, cmp_op))
+        t, nxt = expr[i], expr[i + 1] if i + 1 < len(expr) else Tok("WS", "")
+        up = t.text.upper()
+        if t.kind == "WORD" and up not in _WORDS and nxt.is_sym("("):
+            close = match_paren(expr, i + 1)
+            out.append(_call(up, [expr[a:b] for a, b in split_args(expr, i + 1, close)], measure))
+            i = close
+        elif t.kind in ("WORD", "QIDENT") and nxt.is_sym("."):
+            raise ValueError(
+                f"label-qualified reference not supported: {render(expr[i : i + 3])} "
+                "(use PREV/FIRST/LAST formulations)"
+            )
+        elif t.kind == "STR" and t.text.startswith("'"):
+            out.append(repr(unquote(t)))
+        elif t.kind == "NUM":
+            out.append(t.text)
+        elif t.kind == "WORD" and up in _WORDS:
+            out.append(_WORDS[up])
+        elif t.kind in ("WORD", "QIDENT"):
+            out.append(f"_bare({_name(t)!r})")
+        elif t.kind == "SYM" and t.text in _OPS:
+            out.append(_OPS[t.text])
         else:
-            out.append(other)
-    return "".join(out)
+            raise ValueError(f"unsupported symbol in a row pattern expression: {t.text}")
+        i += 1
+    return " ".join(out)
 
 
-def compile_define(cond: str):
-    code = compile(_pyify(cond, "define"), "<define>", "eval")
+def _call(f: str, args: list[Expr], measure: bool) -> str:
+    """One function call of a DEFINE or MEASURES expression."""
+    arg = args[0] if len(args) == 1 else []
+    col = _name(arg[-1]) if arg else ""
+    label = arg[0].text if len(arg) == 3 and arg[1].is_sym(".") else None
+    if f == "CLASSIFIER":
+        return "_classifier()"
+    if f == "COUNT":
+        if not args or (len(arg) == 1 and arg[0].is_sym("*")):
+            return "_count()"
+        if label is None or col != "*":
+            raise ValueError(f"COUNT supports * or label.*, got: {render(sum(args, []))}")
+        return f"_count_label({label!r})"
+    if f in ("SUM", "AVG", "MIN", "MAX"):
+        # Aggregate measures over the match's rows, optionally
+        # label-qualified: SUM(x) / SUM(A.x) (reference: row-pattern
+        # aggregations, MeasureComputation.java). MEASURES only.
+        if not measure:
+            raise ValueError(f"{f}() is not supported in DEFINE — MEASURES only")
+        if not (len(arg) == 1 or label):
+            raise ValueError(f"{f} expects col or label.col, got: {render(sum(args, []))}")
+        return f"_agg({f.lower()!r}, {label!r}, {col!r})"
+    if f in ("PREV", "NEXT", "FIRST", "LAST"):
+        if not args or len(args[0]) != 1 or args[0][0].kind not in ("WORD", "QIDENT"):
+            raise ValueError(f"{f} expects a bare column, got: {render(sum(args, []))}")
+        n = int(args[1][0].text) if len(args) > 1 and len(args[1]) == 1 else 1
+        return f"_{f.lower()}({_name(args[0][0])!r}, {n})"
+    raise ValueError(f"unsupported function in a row pattern expression: {f}")
+
+
+def _name(t: Tok) -> str:
+    return t.text.strip('"')
+
+
+def _compile(expr: Expr, measure: bool):
+    try:
+        return compile(_pyify(expr, measure), "<measure>" if measure else "<define>", "eval")
+    except SyntaxError as exc:
+        text = " ".join(t.text for t in expr)
+        raise ValueError(f"cannot parse row pattern expression: {text}") from exc
+
+
+def compile_define(cond: Expr):
+    code = _compile(cond, measure=False)
 
     def fn(g, i: int, start: int) -> bool:
-        def _bare(c):
-            return g[c].iloc[i]
-
-        def _prev(c, n=1):
-            return g[c].iloc[i - n] if i - n >= 0 else None
-
-        def _next(c, n=1):
-            return g[c].iloc[i + n] if i + n < len(g) else None
-
-        def _first(c, n=1):
-            return g[c].iloc[start]
-
-        def _last(c, n=1):
-            return g[c].iloc[i]
+        def at(c, k):  # column c of row k of the partition, NULL outside it
+            return g[c].iloc[k] if 0 <= k < len(g) else None
 
         env = {
-            "_bare": _bare, "_prev": _prev, "_next": _next,
-            "_first": _first, "_last": _last,
+            "_bare": lambda c: at(c, i),
+            "_prev": lambda c, n=1: at(c, i - n),
+            "_next": lambda c, n=1: at(c, i + n),
+            "_first": lambda c, n=1: at(c, start),
+            "_last": lambda c, n=1: at(c, i),
         }
         try:
-            v = eval(code, {"__builtins__": {}}, env)
+            return bool(eval(code, {"__builtins__": {}}, env))
         except TypeError:  # comparison against a missing PREV/NEXT (None)
             return False
-        return bool(v)
 
     return fn
 
 
-def _run_agg(sl, labels, subsets, kind: str, label: str | None, col: str):
-    """SUM/AVG/MIN/MAX over the match's rows (label-filtered when
-    qualified; SUBSET union variables expand). NULL-skipping like SQL
-    aggregates; empty input -> NULL."""
-    vals = list(sl[col])
-    if label is not None:
-        members = set((subsets or {}).get(label, [label]))
-        vals = [v for v, lb in zip(vals, labels) if lb in members]
-    vals = [v for v in vals if v is not None and v == v]
-    if not vals:
-        return None
-    if kind == "sum":
-        return sum(vals)
-    if kind == "min":
-        return min(vals)
-    if kind == "max":
-        return max(vals)
-    return sum(vals) / len(vals)
+_AGGS = {"sum": sum, "min": min, "max": max, "avg": lambda v: sum(v) / len(v)}
 
 
-def compile_measure(expr: str, subsets: dict[str, list[str]] | None = None):
-    code = compile(_pyify(expr, "measure"), "<measure>", "eval")
+def compile_measure(expr: Expr, subsets: dict[str, list[str]] | None = None):
+    code = _compile(expr, measure=True)
+    subsets = subsets or {}
+
+    def agg(sl, labels, kind: str, label: str | None, col: str):
+        """SUM/AVG/MIN/MAX over the match's rows (label-filtered when
+        qualified; SUBSET union variables expand). NULL-skipping like SQL
+        aggregates; empty input -> NULL."""
+        members = subsets.get(label, [label])
+        vals = [
+            v for v, lb in zip(sl[col], labels)
+            if (label is None or lb in members) and v is not None and v == v
+        ]
+        return _AGGS[kind](vals) if vals else None
 
     def fn(sl, labels):
-        def _bare(c):
-            return sl[c].iloc[-1]
-
-        def _first(c, n=1):
-            return sl[c].iloc[0]
-
-        def _last(c, n=1):
-            return sl[c].iloc[-1]
-
         env = {
-            "_bare": _bare, "_first": _first, "_last": _last,
+            "_bare": lambda c: sl[c].iloc[-1],
+            "_first": lambda c, n=1: sl[c].iloc[0],
+            "_last": lambda c, n=1: sl[c].iloc[-1],
             "_prev": lambda c, n=1: sl[c].iloc[-1 - n] if len(sl) > n else None,
             "_next": lambda c, n=1: None,
             "_count": lambda: len(labels),
-            "_count_label": lambda l: sum(
-                1 for x in labels if x == l or ((subsets or {}).get(l) and x in subsets[l])
-            ),
+            "_count_label": lambda l: sum(x in subsets.get(l, [l]) for x in labels),
             "_classifier": lambda: labels[-1],
-            "_agg": lambda kind, label, col: _run_agg(sl, labels, subsets, kind, label, col),
+            "_agg": lambda kind, label, col: agg(sl, labels, kind, label, col),
         }
         return eval(code, {"__builtins__": {}}, env)
 
     return fn
 
 
-def _measure_type(expr: str, schema: T.StructType) -> T.DataType:
+def _measure_type(expr: Expr, schema: T.StructType) -> T.DataType:
     """Heuristic output typing for the supported measure grammar."""
-    up = expr.upper()
-    if "CLASSIFIER" in up:
+    words = [t.text.upper() if t.kind == "WORD" else "" for t in expr]
+    names = schema.fieldNames()
+    if "CLASSIFIER" in words:
         return T.StringType()
-    if re.search(r"\bCOUNT\b", up):
+    if "COUNT" in words:
         return T.LongType()
-    if re.search(r"\bAVG\s*\(", up):
+    if "AVG" in words:
         return T.DoubleType()
-    am = re.search(r"\b(?:SUM|MIN|MAX)\s*\(\s*(?:\w+\.)?(\w+)", expr, re.IGNORECASE)
-    if am and am.group(1) in schema.fieldNames():
-        dt = schema[am.group(1)].dataType
-        # SUM widens integral inputs (SQL aggregate typing).
-        if re.search(r"\bSUM\b", up) and isinstance(dt, (T.IntegerType, T.ShortType, T.ByteType)):
-            return T.LongType()
-        return dt
-    if re.search(r"[+\-*/]", expr.replace("COUNT(*)", "")):
-        # arithmetic over columns: use first referenced column's type if
-        # numeric, else double
-        pass
-    m = re.search(r"\b(?:FIRST|LAST)\s*\(\s*(\w+)", expr, re.IGNORECASE)
-    if not m:
-        m = re.match(r"\s*([A-Za-z_]\w*)\s*$", expr)
-    if m and m.group(1) in schema.fieldNames():
-        return schema[m.group(1)].dataType
+
+    def column(x: int) -> str | None:  # the column of the call f(col) or f(label.col) at x
+        a = [_name(t) for t in expr[x + 2 : x + 5]]
+        c = a[2] if a[1:2] == ["."] and len(a) > 2 else a[0] if a else None
+        return c if c in names else None
+
+    for fns in (("SUM", "MIN", "MAX"), ("FIRST", "LAST")):
+        col = next((c for x, w in enumerate(words) if w in fns and (c := column(x))), None)
+        if col is not None:
+            dt = schema[col].dataType
+            # SUM widens integral inputs (SQL aggregate typing).
+            if "SUM" in words and isinstance(dt, (T.IntegerType, T.ShortType, T.ByteType)):
+                return T.LongType()
+            return dt
+    if len(expr) == 1 and _name(expr[0]) in names:
+        return schema[_name(expr[0])].dataType
     return T.DoubleType()
 
 
-_SIMPLE_COND_RX = re.compile(
-    r"^\s*(\w+)\s*(=|<>|<=|>=|<|>)\s*('(?:[^']|'')*'|-?\d+(?:\.\d+)?)\s*$"
-)
-
-
-def compile_define_vectorized(cond: str):
+def compile_define_vectorized(cond: Expr):
     """Start-independent conditions of the form `col <cmp> literal`
     vectorize to one pandas comparison per Arrow chunk — this is what lets
     the operator take its compiled-regex fast path (no per-row Python).
-    Returns None when the condition is not of that shape."""
-    m = _SIMPLE_COND_RX.match(cond)
-    if not m:
+    The condition's own compiled code runs with its column bound to the
+    chunk's Series. Returns None when the condition is not of that shape."""
+    neg = len(cond) == 4 and cond[2].is_sym("-")
+    parts = cond[:2] + cond[3:] if neg else cond
+    if not (
+        len(parts) == 3
+        and parts[0].kind == "WORD"
+        and parts[0].text.upper() not in _WORDS
+        and parts[1].text in ("=", "<>", "!=", "<", ">", "<=", ">=")
+        and (parts[2].kind == "NUM" or (parts[2].kind == "STR" and not neg))
+    ):
         return None
-    col, op, lit = m.groups()
-    value = lit[1:-1].replace("''", "'") if lit.startswith("'") else float(lit) if "." in lit else int(lit)
-    ops = {
-        "=": lambda s, v: s == v,
-        "<>": lambda s, v: s != v,
-        "<": lambda s, v: s < v,
-        ">": lambda s, v: s > v,
-        "<=": lambda s, v: s <= v,
-        ">=": lambda s, v: s >= v,
-    }
-    fn = ops[op]
-    return lambda pdf, _c=col, _v=value, _f=fn: _f(pdf[_c], _v)
+    code = _compile(cond, measure=False)
+    return lambda pdf: eval(code, {"__builtins__": {}}, {"_bare": lambda c: pdf[c]})
+
+
+def _compiled(spec: MRSpec, schema: T.StructType) -> tuple[dict, dict, list[T.StructField]]:
+    """The operator's DEFINE and MEASURES closures and the measures' fields."""
+    return (
+        {l: compile_define(c) for l, c in spec.define.items()},
+        {name: compile_measure(expr, spec.subsets) for expr, name in spec.measures},
+        [T.StructField(name, _measure_type(expr, schema)) for expr, name in spec.measures],
+    )
 
 
 def execute(df: DataFrame, spec: MRSpec) -> DataFrame:
     from trino_spark.operators.match_recognize import match_recognize
 
-    key_fields = [df.schema[c] for c in spec.partition_by]
-    measure_fields = [
-        T.StructField(name, _measure_type(expr, df.schema))
-        for expr, name in spec.measures
-    ]
-    out_schema = T.StructType(
-        key_fields + [T.StructField("match_no", T.LongType())] + measure_fields
-    )
-    after = spec.after_match
-    if after.startswith(("to_first:", "to_last:")):
-        mode, _, target = after.partition(":")
-        if target in spec.subsets:
-            after = f"{mode}:" + "|".join(spec.subsets[target])
-    vec = {}
-    for l, c in spec.define.items():
-        v = compile_define_vectorized(c)
-        if v is not None:
-            vec[l] = v
+    define, measures, fields = _compiled(spec, df.schema)
+    keys = [df.schema[c] for c in spec.partition_by]
+    vec = {l: v for l, c in spec.define.items() if (v := compile_define_vectorized(c)) is not None}
     return match_recognize(
         df,
         partition_by=spec.partition_by,
         order_by=spec.order_by,
         pattern=spec.pattern,
-        define={l: compile_define(c) for l, c in spec.define.items()},
-        measures={name: compile_measure(expr, spec.subsets) for expr, name in spec.measures},
-        output_schema=out_schema,
+        define=define,
+        measures=measures,
+        output_schema=T.StructType([*keys, T.StructField("match_no", T.LongType()), *fields]),
         define_vectorized=vec or None,
         rows_per_match=spec.rows_per_match,
-        after_match=after,
+        after_match=spec.after_match,
     )
 
 
-def try_rewrite(engine, sql: str) -> DataFrame | None:
-    """If `sql` contains `<table> MATCH_RECOGNIZE (...)`, execute the block
-    against the named relation, register the result as a temp view, and
-    re-run the statement with the block replaced by that view."""
-    blk = find_block(sql)
-    if blk is None:
+def read(engine, toks: list[Tok], i: int):
+    """MATCH_RECOGNIZE at token i: its input, the FROM item in front of it,
+    run through the operator; the result and the edit that puts it in
+    place of both (relations.substitute). None for a word that opens no
+    clause."""
+    o = next_code(toks, i + 1)
+    if o >= len(toks) or not toks[o].is_sym("("):
         return None
-    kw, op, cl = blk
-    # source relation: last identifier before the keyword
-    src_m = re.search(r"([A-Za-z_][\w.]*)\s*$", sql[:kw])
-    if not src_m:
+    close = match_paren(toks, o)
+    p = prev_code(toks, i - 1)
+    src = item(toks, structure(toks), p) if p >= 0 else None
+    if src is None:
         raise ValueError("MATCH_RECOGNIZE: could not find source relation")
-    src = src_m.group(1)
-    spec = parse_spec(sql[op + 1 : cl])
-    out = execute(engine.spark.table(src), spec)
-    view = f"_mr_{uuid.uuid4().hex[:8]}"
-    out.createOrReplaceTempView(view)
-    new_sql = sql[: src_m.start(1)] + view + sql[cl + 1 :]
-    return engine.sql(new_sql)
+    df = engine.sql("SELECT * FROM " + render(toks[src[0] : src[1]]))
+    return execute(df, parse_spec(toks[o + 1 : close])), [(src[0], close + 1, "{view}")]
 
 
 # -------------------------------------------- pattern recognition in WINDOW
 
-_WINDOW_RX = re.compile(r"\bWINDOW\s+(\w+)\s+AS\s*\(", re.IGNORECASE)
-_FRAME_RX = re.compile(
-    r"\bROWS\s+BETWEEN\s+CURRENT\s+ROW\s+AND\s+UNBOUNDED\s+FOLLOWING\b",
-    re.IGNORECASE,
-)
 
-
-def try_rewrite_window(engine, sql: str) -> DataFrame | None:
-    """Row-pattern recognition in a WINDOW clause (docs
+def read_window(engine, toks: list[Tok], i: int):
+    """Row-pattern recognition in the WINDOW clause at token i (docs
     pattern-recognition-in-window.md; grammar windowSpecification with
-    MEASURES/PATTERN):
-
-        SELECT m OVER w FROM t WINDOW w AS (
-          PARTITION BY ... ORDER BY ...
-          MEASURES ... AS m
-          ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING
-          PATTERN (...) DEFINE ...)
-
-    Executes the pattern anchored per row on operators/match_recognize
-    .pattern_window, registers the measure-augmented relation as a view,
-    and re-dispatches the statement with `m OVER w` references replaced
-    by the computed columns. Both INITIAL (default) and SEEK modes are
-    supported (docs pattern-recognition-in-window.md); plain window
-    clauses without PATTERN stay Spark-native."""
-    m = _WINDOW_RX.search(sql)
-    if m is None:
+    MEASURES/PATTERN), `SELECT m OVER w FROM t WINDOW w AS (PARTITION BY
+    ... ORDER BY ... MEASURES ... AS m ROWS BETWEEN CURRENT ROW AND
+    UNBOUNDED FOLLOWING PATTERN (...) DEFINE ...)`: the pattern runs
+    anchored per row (INITIAL, or SEEK) on operators/match_recognize
+    .pattern_window over the block's FROM ... WINDOW span. Returns the
+    result with the edits that put it in place of that span and each
+    `m OVER w` by its column; a window function call over the window,
+    `sum(x) OVER w`, computes over the row's match as a synthesized
+    measure. None for an ordinary window."""
+    k = next_code(toks, i + 1)
+    a = next_code(toks, k + 1)
+    o = next_code(toks, a + 1)
+    if o >= len(toks) or not (toks[a].is_word("AS") and toks[o].is_sym("(")):
         return None
-    op = sql.index("(", m.end() - 1)
-    cl = close_paren(sql, op)
-    body = sql[op + 1 : cl]
-    if not re.search(r"\bPATTERN\s*\(", body, re.IGNORECASE):
-        return None  # ordinary WINDOW clause
-    wname = m.group(1)
-    after = sql[cl + 1 :].lstrip()
-    if after.startswith(","):
+    close = match_paren(toks, o)
+    body = toks[o + 1 : close]
+    if Reader(body).find("PATTERN", 0) >= len(body):
+        return None  # an ordinary WINDOW clause
+    after = next_code(toks, close + 1)
+    if after < len(toks) and toks[after].is_sym(","):
         raise ValueError("only one pattern window per statement is supported")
-    if re.search(r"\bROWS\s+BETWEEN\b", body, re.IGNORECASE) and not _FRAME_RX.search(body):
-        raise ValueError(
-            "pattern window frame must be ROWS BETWEEN CURRENT ROW AND"
-            " UNBOUNDED FOLLOWING (the reference's requirement)"
-        )
-    body2 = _FRAME_RX.sub(" ", body)
-    mode = "initial"
-    if re.search(r"\bSEEK\b", body2, re.IGNORECASE):
-        mode = "seek"
-        body2 = re.sub(r"\bSEEK\b", " ", body2, flags=re.IGNORECASE)
-    body2 = re.sub(r"\bINITIAL\b", " ", body2, flags=re.IGNORECASE)
-    spec = parse_spec(body2)
-    # window FUNCTION calls over the pattern window — `sum(x) OVER w` —
-    # compute over the row's match (docs pattern-recognition-in-window
-    # "window function call over the window"): synthesize a measure per
-    # distinct call and reference it like a declared measure
-    synth: dict[str, str] = {}
-    for fm in re.finditer(
-        rf"\b(COUNT|SUM|AVG|MIN|MAX)\s*\(([^()]*)\)\s+OVER\s+{re.escape(wname)}\b",
-        sql,
-        re.IGNORECASE,
-    ):
-        call = f"{fm.group(1)}({fm.group(2).strip()})"
-        if call.upper() not in synth:
-            synth[call.upper()] = call
-    for i, call in enumerate(synth.values()):
-        spec.measures.append((call, f"__pwagg_{i}"))
+    spec = parse_spec(body, window=True)
+    st = structure(toks)
+    b = st.block_of(i)
+    if b is None or b.from_ < 0:
+        raise ValueError("pattern window: could not locate FROM clause")
+    wname = _name(toks[k]).upper()
+    declared = {name.upper(): name for _, name in spec.measures}
+    calls: dict[str, str] = {}  # a call over the window, spelled upper-case -> its measure
+    edits = []
+    for j in [*range(b.select, b.from_), *range(close + 1, b.tail_end)]:
+        w = next_code(toks, j + 1)
+        if not (toks[j].is_word("OVER") and w < len(toks) and _name(toks[w]).upper() == wname):
+            continue
+        p = prev_code(toks, j - 1)
+        f = prev_code(toks, open_paren(st.depth, p) - 1) if toks[p].is_sym(")") else p
+        if f == p and _name(toks[p]).upper() in declared:
+            edits.append((p, w + 1, declared[_name(toks[p]).upper()]))
+        elif f != p and toks[f].is_word("COUNT", "SUM", "AVG", "MIN", "MAX"):
+            call = [t for t in toks[f : p + 1] if t.kind != "WS"]
+            key = "".join(t.text.upper() for t in call)
+            if key not in calls:
+                calls[key] = f"__pwagg_{len(calls)}"
+                spec.measures.append((call, calls[key]))
+            edits.append((f, w + 1, calls[key]))
+        else:
+            raise ValueError(
+                "pattern window references must be declared measures or"
+                " COUNT/SUM/AVG/MIN/MAX calls over the window"
+            )
     if not spec.measures:
         raise ValueError("pattern window requires MEASURES")
 
-    # input relation: everything between FROM and the WINDOW keyword
-    # (WHERE included), evaluated through the engine so dialect SQL works
-    seg = re.search(
-        r"\bFROM\b(.*?)(?=\bWINDOW\b)", sql, re.IGNORECASE | re.DOTALL
-    )
-    if not seg:
-        raise ValueError("pattern window: could not locate FROM clause")
-    base = engine.sql("SELECT * FROM" + seg.group(1))
-
-    from pyspark.sql import types as T
-
     from trino_spark.operators.match_recognize import pattern_window
 
-    measure_fields = [
-        T.StructField(name, _measure_type(expr, base.schema))
-        for expr, name in spec.measures
-    ]
+    # the input: the block's FROM ... WINDOW span (WHERE included), through
+    # the engine so dialect SQL, resolution and security apply
+    base = engine.sql("SELECT * FROM " + render(toks[b.from_ + 1 : i]))
+    define, measures, fields = _compiled(spec, base.schema)
     out = pattern_window(
         base,
         partition_by=spec.partition_by,
         order_by=spec.order_by,
         pattern=spec.pattern,
-        define={l: compile_define(c) for l, c in spec.define.items()},
-        measures={
-            name: compile_measure(expr, spec.subsets)
-            for expr, name in spec.measures
-        },
-        measure_fields=measure_fields,
-        mode=mode,
+        define=define,
+        measures=measures,
+        measure_fields=fields,
+        mode="seek" if spec.seek else "initial",
     )
-    view = f"_pw_{uuid.uuid4().hex[:8]}"
-    out.createOrReplaceTempView(view)
-    new_sql = (
-        sql[: seg.start()] + f"FROM {view} " + sql[cl + 1 :]
-    )
-    for _expr, name in spec.measures:
-        if name.startswith("__pwagg_"):
-            continue
-        new_sql = re.sub(
-            rf"\b{re.escape(name)}\s+OVER\s+{re.escape(wname)}\b",
-            name,
-            new_sql,
-            flags=re.IGNORECASE,
-        )
-    for i, call in enumerate(synth.values()):
-        fname, args = call.split("(", 1)
-        pat = (
-            rf"\b{fname}\s*\(\s*{re.escape(args[:-1].strip())}\s*\)"
-            rf"\s+OVER\s+{re.escape(wname)}\b"
-        )
-        new_sql = re.sub(pat, f"__pwagg_{i}", new_sql, flags=re.IGNORECASE)
-    if re.search(rf"\bOVER\s+{re.escape(wname)}\b", new_sql, re.IGNORECASE):
-        raise ValueError(
-            "pattern window references must be declared measures or"
-            " COUNT/SUM/AVG/MIN/MAX calls over the window"
-        )
-    return engine.sql(new_sql)
+    return out, [*edits, (b.from_ + 1, close + 1, "{view}")]

@@ -22,17 +22,24 @@ Spark knows its rows by:
 Text in a literal, a comment or a quoted identifier is never a relation.
 A derived name is recorded in ``engine.derived`` with the managed table it
 reads: access control checks and secures that table.
+
+A relation clause that an operator runs instead of Spark (MATCH_RECOGNIZE,
+JSON_TABLE, a WINDOW with a PATTERN) is found by `clause` and replaced by
+the operator's result through `substitute`, one clause a pass.
 """
 
 from __future__ import annotations
 
+import uuid
 from typing import NamedTuple
+
+from pyspark.sql import DataFrame
 
 from trino_spark import infoschema
 from trino_spark.dialect import branches as _branches
 from trino_spark.dialect import catalogs as _cats
 from trino_spark.dialect import dml as _dml
-from trino_spark.dialect.tokenizer import Tok, next_code, structure
+from trino_spark.dialect.tokenizer import Tok, next_code, render, structure, tokenize
 
 
 class Derived(NamedTuple):
@@ -122,3 +129,46 @@ def _period(toks: list[Tok], k: int) -> tuple[str, str, int] | None:
     if t[lit].kind not in ("NUM", "STR"):
         return None
     return t[1].text.upper(), t[lit].text.strip("'"), at[lit] + 1
+
+
+# the words that open a relation clause an operator runs
+_CLAUSE_WORDS = frozenset({"MATCH_RECOGNIZE", "JSON_TABLE", "WINDOW"})
+
+
+def clause(engine, toks: list[Tok]) -> DataFrame | None:
+    """Run the query's first MATCH_RECOGNIZE, JSON_TABLE or pattern WINDOW
+    clause (grammar SqlBase.g4:448 patternRecognition, jsonTable,
+    windowSpecification) on its operator and re-dispatch the statement
+    with the result in its place; None when the query has none. Each
+    reader reads its clause's input through a nested engine.sql, so that
+    input's names resolve and its access checks and row filters apply."""
+    for i, t in enumerate(toks):
+        if t.kind == "WORD" and t.text.upper() in _CLAUSE_WORDS:
+            from trino_spark.dialect import json_table_sql as _jt
+            from trino_spark.dialect import match_recognize_sql as _mr
+
+            read = {"MATCH_RECOGNIZE": _mr.read, "JSON_TABLE": _jt.read, "WINDOW": _mr.read_window}
+            got = read[t.text.upper()](engine, toks, i)
+            if got is not None:
+                return substitute(engine, toks, *got)
+    return None
+
+
+def substitute(
+    engine, toks: list[Tok], df: DataFrame, edits: list[tuple[int, int, str]]
+) -> DataFrame:
+    """Register `df` as a temp view and re-dispatch the statement with each
+    span toks[a:b] of `edits` (a, b, text) replaced by its text, in which
+    `{view}` stands for the view's name. The name starts with '__', so
+    access control, which checked the reads that built `df`, passes it.
+    The view is dropped once the statement's DataFrame is built (Spark
+    analyses it eagerly, so it keeps the view's plan): a later statement,
+    under any role, cannot read it."""
+    view = f"__rel_{uuid.uuid4().hex[:8]}"
+    df.createOrReplaceTempView(view)
+    for a, b, text in sorted(edits, reverse=True):
+        toks[a:b] = tokenize(f" {text.replace('{view}', view)} ")
+    try:
+        return engine.sql(render(toks))
+    finally:
+        engine.spark.catalog.dropTempView(view)

@@ -7,6 +7,7 @@ QIDENT ("..".. quoted identifiers), SYM (operators/punctuation), WS
 
 from __future__ import annotations
 
+from bisect import bisect_left
 from dataclasses import dataclass
 
 
@@ -164,31 +165,73 @@ def split_args(toks: list[Tok], open_i: int, close_i: int) -> list[tuple[int, in
     return spans
 
 
-def close_paren(text: str, open_i: int) -> int:
-    """The text-level match_paren: index of the ')' closing the '(' at
-    `open_i`, outside '...' literals."""
-    depth, in_str = 0, False
-    for i in range(open_i, len(text)):
-        in_str ^= text[i] == "'"
-        if not in_str and text[i] in "()":
-            depth += 1 if text[i] == "(" else -1
-            if depth == 0:
-                return i
-    raise ValueError("unbalanced parentheses")
+def open_paren(depth: list[int], close_i: int) -> int:
+    """The '(' that the ')' at close_i closes, read from the tokens' paren
+    depths (structure(...).depth)."""
+    j = close_i - 1
+    while depth[j] > depth[close_i]:
+        j -= 1
+    return j
 
 
-def split_commas(text: str) -> list[str]:
-    """The text-level split_args: the non-empty pieces of `text` between
-    commas outside parentheses, brackets and '...' literals, stripped."""
-    pieces, depth, in_str, start = [], 0, False, 0
-    for i, ch in enumerate(text):
-        in_str ^= ch == "'"
-        if not in_str:
-            depth += (ch in "([") - (ch in ")]")
-            if ch == "," and depth == 0:
-                pieces.append(text[start:i])
-                start = i + 1
-    return [p.strip() for p in [*pieces, text[start:]] if p.strip()]
+class Reader:
+    """A token list's top level: the code tokens from `first` on at its
+    own parenthesis depth, outside [...] and CASE ... END, where a clause
+    keyword or a separating comma sits. The clause readers (a write, a
+    row-pattern or WITH FUNCTION clause) find their keywords here, never
+    in a literal, a comment or a nested group."""
+
+    def __init__(self, toks: list[Tok], first: int = 0):
+        self.toks, self.n, self.top = toks, len(toks), []
+        depth = brackets = cases = 0
+        for j in range(first, self.n):
+            t = toks[j]
+            depth -= t.is_sym(")")
+            if t.kind != "WS" and not depth:
+                if t.is_sym("[") or t.is_sym("]"):
+                    brackets += 1 if t.text == "[" else -1
+                elif t.is_word("CASE") or (t.is_word("END") and cases):
+                    cases += 1 if t.is_word("CASE") else -1
+                elif not (brackets or cases):
+                    self.top.append(j)
+            depth += t.is_sym("(")
+
+    def error(self, kind: str) -> ValueError:
+        return ValueError(f"cannot parse {kind}: {render(self.toks)[:160].strip()}")
+
+    def at(self, j: int) -> Tok:
+        return self.toks[j] if j < self.n else Tok("WS", "")
+
+    def is_(self, j: int, text: str) -> bool:
+        """Token j is the word or symbol `text`."""
+        return self.at(j).kind in ("WORD", "SYM") and self.toks[j].text.upper() == text
+
+    def next(self, j: int) -> int:
+        return next_code(self.toks, j)
+
+    def find(self, text: str, a: int, b: int | None = None) -> int:
+        """The first top-level `text` in [a, b); b (default: the end) if none."""
+        b = self.n if b is None else b
+        hits = (j for j in self.top[bisect_left(self.top, a) :] if j >= b or self.is_(j, text))
+        return min(b, next(hits, b))
+
+    def split(self, text: str, a: int, b: int) -> list[tuple[int, int]]:
+        """[a, b) cut at each top-level `text`."""
+        spans = []
+        while (k := self.find(text, a, b)) < b:
+            spans.append((a, k))
+            a = k + 1
+        return [*spans, (a, b)]
+
+    def clause(self, a: int, b: int) -> list[Tok]:
+        """toks[a:b] without the whitespace at its edges."""
+        a = min(self.next(a), b)
+        return self.toks[a : max(prev_code(self.toks, b - 1) + 1, a)]
+
+    def items(self, j: int) -> tuple[list[list[Tok]], int]:
+        """The comma-separated clauses in the parentheses at j; the index past."""
+        close = match_paren(self.toks, j)
+        return [self.clause(a, b) for a, b in split_args(self.toks, j, close)], self.next(close + 1)
 
 
 # ------------------------------------------------------------- structure
@@ -443,16 +486,38 @@ def structure(toks: list[Tok]) -> Structure:
             if not (at(k).is_sym("(") and (via_paren or kw in ("FROM", "JOIN"))):
                 if via_paren and at(k).is_sym(")") and toks[prev_code(toks, i - 1)].is_sym("("):
                     k = next_code(toks, k + 1)  # `(name) alias`
-                if at(k).is_word("AS"):
-                    k = next_code(toks, k + 1)
-                a = at(k)
-                alias = a.kind == "QIDENT" or (a.kind == "WORD" and a.text.upper() not in _NOT_ALIAS)
+                a = alias_at(toks, k)
                 name = toks[j].text.strip('"').lower()
                 relations.append(
-                    RelRef(i, j + 1, name, a.text.strip('"').lower() if alias else None, kw,
+                    RelRef(i, j + 1, name, toks[a].text.strip('"').lower() if a >= 0 else None, kw,
                            j == i and shadowed(name, i), reads)
                 )
             kw = None
             i = j
         i += 1
     return Structure(blocks, withs, relations, depth)
+
+
+def alias_at(toks: list[Tok], k: int) -> int:
+    """The index of the `[AS] alias` that starts at code token k; -1 if none."""
+    if k < len(toks) and toks[k].is_word("AS"):
+        k = next_code(toks, k + 1)
+    a = toks[k] if k < len(toks) else Tok("WS", "")
+    alias = a.kind == "QIDENT" or (a.kind == "WORD" and a.text.upper() not in _NOT_ALIAS)
+    return k if alias else -1
+
+
+def item(toks: list[Tok], st: Structure, p: int) -> tuple[int, int] | None:
+    """The FROM item whose last code token, its alias included, is p: a
+    name chain (a relation reference of `st`) or a parenthesised group.
+    Returns (its first token, the end of its name chain or group); None
+    when no item ends at p."""
+    for ref in st.relations:
+        a = alias_at(toks, next_code(toks, ref.end))
+        if p == (a if a >= 0 else ref.end - 1):
+            return ref.start, ref.end
+    q = p if toks[p].is_sym(")") else prev_code(toks, p - 1)
+    q = prev_code(toks, q - 1) if q >= 0 and toks[q].is_word("AS") else q
+    if q < 0 or not toks[q].is_sym(")") or (q != p and alias_at(toks, next_code(toks, q + 1)) != p):
+        return None
+    return open_paren(st.depth, q), q + 1

@@ -16,7 +16,7 @@ import re
 
 from pyspark.sql import types as T
 
-from trino_spark.dialect.tokenizer import split_commas
+from trino_spark.dialect.tokenizer import render, split_args, tokenize
 
 # Spark simpleString -> Trino, where they differ
 _TRINO = {
@@ -49,7 +49,9 @@ def spark_type(text: str) -> str:
     if m is None:
         low = t.lower()
         return next((s for rx, s in _SCALARS if rx.fullmatch(low)), _SPARK.get(low, low))
-    kind, args = m.group(1).lower(), split_commas(m.group(2))
+    toks = tokenize(f"({m.group(2)})")
+    pieces = (render(toks[a:b]).strip() for a, b in split_args(toks, 0, len(toks) - 1))
+    kind, args = m.group(1).lower(), [p for p in pieces if p]
     if kind == "array":
         return f"array<{spark_type(args[0])}>"
     if kind == "map":

@@ -15,9 +15,8 @@ tables' (dml.try_execute).
 from __future__ import annotations
 
 import dataclasses
-from bisect import bisect_left
 
-from trino_spark.dialect.tokenizer import Tok, lead, match_paren, next_code, prev_code, render
+from trino_spark.dialect.tokenizer import Reader, Tok, lead, match_paren, next_code, render
 from trino_spark.dialect.tokenizer import split_args, structure, tokenize
 
 # an expression, condition or name: its tokens without edge whitespace
@@ -49,7 +48,8 @@ class Write:
     kind: str  # CREATE, INSERT, UPDATE, DELETE, MERGE, TRUNCATE or DROP
     target: tuple[str, ...]  # the name chain, unquoted, lower case
     if_exists: bool = False  # CREATE's IF NOT EXISTS, DROP's IF EXISTS
-    # INSERT's column names; CREATE TABLE's column definitions, as texts
+    # INSERT's column names; CREATE TABLE's column definitions, as texts,
+    # or the column names a CTAS gives its query's columns
     columns: list[str] = dataclasses.field(default_factory=list)
     comment: str | None = None  # CREATE TABLE ... COMMENT 'text'
     props: dict = dataclasses.field(default_factory=dict)  # WITH (k = v, ...)
@@ -79,22 +79,24 @@ def read(toks: list[Tok]) -> Write | None:
     want = _KINDS[kind]
     if words[: len(want)] != want:
         return None
-    r = _Reader(toks, st.depth, i)
+    r = _Reader(toks, i)
     if ref is None or words[len(want) :] not in ([], _IF.get(kind)):
         raise r.error(kind)
     target, end = name_at(toks, ref.start)
     w = Write(kind, target, if_exists=len(words) > len(want))
     j = r.next(end)
     if kind == "CREATE":
-        if r.is_(j, "("):
-            cols, j = r.items(j)
-            w.columns = [render(c) for c in cols]
+        cols, j = r.items(j) if r.is_(j, "(") else ([], j)
         if r.is_(j, "COMMENT") and r.at(r.next(j + 1)).kind == "STR":
             w.comment, j = unquote(toks[r.next(j + 1)]), r.next(r.next(j + 1) + 1)
         if r.is_(j, "WITH") and r.is_(r.next(j + 1), "("):
             w.props, j = properties(toks, r.next(j + 1)), r.next(match_paren(toks, r.next(j + 1)) + 1)
-        if r.is_(j, "AS") and not w.columns:  # CTAS
+        # CTAS, whose column list (if any) names the query's columns
+        if r.is_(j, "AS") and all(len(c) == 1 for c in cols):
             w.query, j = render(r.clause(j + 1, r.n)), r.n
+            w.columns = [_name(c) for c in cols]
+        else:
+            w.columns = [render(c) for c in cols]
     elif kind == "INSERT":
         first = r.at(r.next(j + 1))  # a column list opens with a name, a query with a keyword
         if r.is_(j, "(") and first.kind in ("WORD", "QIDENT") and not first.is_word("SELECT", "WITH", "VALUES", "TABLE"):
@@ -114,60 +116,8 @@ def read(toks: list[Tok]) -> Write | None:
     return w
 
 
-class _Reader:
-    """A statement's tokens and its top level: the code tokens at its own
-    parenthesis depth, outside [...] and CASE ... END, where a clause
-    keyword or a separating comma sits."""
-
-    def __init__(self, toks: list[Tok], depth: list[int], first: int):
-        self.toks, self.n, self.top = toks, len(toks), []
-        brackets = cases = 0
-        for j in range(first, self.n):
-            t = toks[j]
-            if t.kind == "WS" or depth[j] != depth[first]:
-                continue
-            if t.is_sym("[") or t.is_sym("]"):
-                brackets += 1 if t.text == "[" else -1
-            elif t.is_word("CASE") or (t.is_word("END") and cases):
-                cases += 1 if t.is_word("CASE") else -1
-            elif not (brackets or cases):
-                self.top.append(j)
-
-    def error(self, kind: str) -> ValueError:
-        return ValueError(f"cannot parse {kind}: {render(self.toks)[:160].strip()}")
-
-    def at(self, j: int) -> Tok:
-        return self.toks[j] if j < self.n else Tok("WS", "")
-
-    def is_(self, j: int, text: str) -> bool:
-        """Token j is the word or symbol `text`."""
-        return self.at(j).kind in ("WORD", "SYM") and self.toks[j].text.upper() == text
-
-    def next(self, j: int) -> int:
-        return next_code(self.toks, j)
-
-    def find(self, text: str, a: int, b: int | None = None) -> int:
-        """The first top-level `text` in [a, b); b (default: the end) if none."""
-        b = self.n if b is None else b
-        hits = (j for j in self.top[bisect_left(self.top, a) :] if j >= b or self.is_(j, text))
-        return min(b, next(hits, b))
-
-    def split(self, text: str, a: int, b: int) -> list[tuple[int, int]]:
-        """[a, b) cut at each top-level `text`."""
-        spans = []
-        while (k := self.find(text, a, b)) < b:
-            spans.append((a, k))
-            a = k + 1
-        return [*spans, (a, b)]
-
-    def clause(self, a: int, b: int) -> Clause:
-        a = min(self.next(a), b)
-        return self.toks[a : max(prev_code(self.toks, b - 1) + 1, a)]
-
-    def items(self, j: int) -> tuple[list[Clause], int]:
-        """The comma-separated clauses in the parentheses at j; the index past."""
-        close = match_paren(self.toks, j)
-        return [self.clause(a, b) for a, b in split_args(self.toks, j, close)], self.next(close + 1)
+class _Reader(Reader):
+    """A write's top level (tokenizer.Reader) and its clause readers."""
 
     def assignments(self, a: int, b: int) -> list[tuple[str, Clause]]:
         """`column = expression, ...` in [a, b)."""
